@@ -41,23 +41,38 @@ object Bench {
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt
     // SPARK_GRAFT_ONLY=q1,q2: restrict to named queries (local profiling)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // A gate that throws is a FAILURE, never a time: its elapsed time
+    // until the throw would read as a speed-up. Failed gates are listed
+    // under "failed", left out of the per-query map and the total, and
+    // make the run exit non-zero.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-      val times = (1 to repeat).map { _ =>
+      .flatMap { case (name, fn) =>
+      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var ok = true
+      while (ok && times.length < repeat) {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case e: Throwable =>
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          times += (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          ok = false
         }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      // median: middle element (odd n) or mean of the two middles (even n)
-      val med =
-        if (times.length % 2 == 1) times(times.length / 2)
-        else (times(times.length / 2 - 1) + times(times.length / 2)) / 2.0
-      name -> med
+      }
+      if (!ok) { failed += name; None }
+      else {
+        val sorted = times.sorted
+        // median: middle element (odd n) or mean of the two middles (even n)
+        Some(name -> (
+          if (sorted.length % 2 == 1) sorted(sorted.length / 2)
+          else (sorted(sorted.length / 2 - 1) + sorted(sorted.length / 2)) / 2.0))
+      }
     }
+    val failedJson =
+      if (failed.isEmpty) ""
+      else failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
     // Locale.ROOT: the f-interpolator honors the default locale, and a
     // comma decimal separator would corrupt the driver-parsed JSON line
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -176,7 +191,7 @@ object Bench {
     // the total must never share a line with the (ever-growing) per-query
     // map — round 8's single combined line outgrew the captured tail and
     // left BENCH_r08.json unparseable ("parsed": null).
-    println(s"""{"metric":"queries","queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"queries","queries":$qs,"sf":"$sfDir"$failedJson}""")
     // DRIVER-PARSED per-query subset (round 19): the driver's artifact
     // stores (and parses) only the LAST ~2000 chars of stdout — rounds
     // 2-7's combined line parsed WITH its queries map (1881 chars at r7),
@@ -188,7 +203,7 @@ object Bench {
     // under a strict length budget (the full map is line 1 above and
     // BENCH_QUERIES_RUN.json, both unchanged) — heaviest-first is the
     // subset that carries the perf signal. Timing methodology untouched.
-    val base = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir"$ratioJson$isoJson$isolationMeta"""
+    val base = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir"$failedJson$ratioJson$isoJson$isolationMeta"""
     val lineBudget = 1800 - base.length - ""","queries":{}}""".length
     val top = scala.collection.mutable.ArrayBuffer.empty[String]
     var used = 0
@@ -215,7 +230,7 @@ object Bench {
     // (SPARK_GRAFT_ONLY) profiling runs write neither.
     if (only.isEmpty) {
       val line =
-        s"""{"metric":"queries","queries":$qs,"sf":"$sfDir","total_sec":${fmt(total)}$ratioJson$isoJson$isolationMeta}
+        s"""{"metric":"queries","queries":$qs,"sf":"$sfDir","total_sec":${fmt(total)}$failedJson$ratioJson$isoJson$isolationMeta}
 """.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_QUERIES_RUN.json"), line)
@@ -225,6 +240,10 @@ object Bench {
           java.nio.file.Paths.get("BENCH_QUERIES.json"), line)
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} gate(s) failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }
 

@@ -263,9 +263,7 @@ object Snapshot {
   private def memberSnapshot(m: graft.sources.CollectionStore,
                              collection: String, path: String,
                              i: Int): Unit = m match {
-    case w: graft.sources.RestCollectionStore =>
-      w.snapshotStorage(collection, path)
-    case w: graft.sources.GrpcCollectionStore =>
+    case w: graft.sources.WireCollectionClient =>
       w.snapshotStorage(collection, path)
     case p: graft.sources.ParquetCollectionStore =>
       createStorageOf(p, collection, path)
@@ -296,15 +294,12 @@ object Snapshot {
                                       ivfNprobe: Int, ivfCandidateK: Int,
                                       hnswEf: Int,
                                       hnswCandidateK: Int): Unit = {
-    import graft.sources.{AliasedCollectionStore, GrpcCollectionStore,
-      ReplicatedCollectionStore, RestCollectionStore, ShardedCollectionStore}
+    import graft.sources.{AliasedCollectionStore, ReplicatedCollectionStore,
+      ShardedCollectionStore, WireCollectionClient}
     val collection = collection0
     def memberRecover(m: graft.sources.CollectionStore, p: String,
                       d: String, i: Int): Unit = m match {
-      case w: RestCollectionStore =>
-        w.recoverStorageSnapshot(collection, p, d, ivfNprobe,
-          ivfCandidateK, hnswEf, hnswCandidateK)
-      case w: GrpcCollectionStore =>
+      case w: WireCollectionClient =>
         w.recoverStorageSnapshot(collection, p, d, ivfNprobe,
           ivfCandidateK, hnswEf, hnswCandidateK)
       case other => throw new IllegalArgumentException(
@@ -359,13 +354,11 @@ object Snapshot {
   private def verifyStorageClusterOf(store: graft.sources.CollectionStore,
                                      collection: String,
                                      paths: Seq[String]): Seq[String] = {
-    import graft.sources.{AliasedCollectionStore, GrpcCollectionStore,
-      ParquetCollectionStore, ReplicatedCollectionStore,
-      RestCollectionStore, ShardedCollectionStore}
+    import graft.sources.{AliasedCollectionStore, ParquetCollectionStore,
+      ReplicatedCollectionStore, ShardedCollectionStore, WireCollectionClient}
     def memberVerify(m: graft.sources.CollectionStore, p: String,
                      i: Int): Seq[String] = m match {
-      case w: RestCollectionStore => w.verifyStorageSnapshot(collection, p)
-      case w: GrpcCollectionStore => w.verifyStorageSnapshot(collection, p)
+      case w: WireCollectionClient => w.verifyStorageSnapshot(collection, p)
       case _: ParquetCollectionStore => verifyStorage(p)
       case other => throw new IllegalArgumentException(
         s"member $i cannot verify node-side: " + other.getClass.getName)

@@ -588,21 +588,28 @@ object Dedup {
     if (idIsLong && reliableCheckpointEvery == 0 && nEdges <= driverMaxEdges) {
       val rows = sym.collect()
       sym.unpersist(blocking = false)
-      val m = rows.length
-      // index the edge nodes (every node appears as src by symmetry)
-      val idx = new java.util.HashMap[Long, Int](m * 2)
+      // index the edge nodes (every node appears as src by symmetry). An
+      // edge with a null end is skipped, as the loop's joins drop it (a
+      // null key never matches); both its directions go, so symmetry holds
+      val src = new Array[Long](rows.length)
+      val dst = new Array[Long](rows.length)
+      var m = 0
+      val idx = new java.util.HashMap[Long, Int](rows.length * 2)
       val ids = new scala.collection.mutable.ArrayBuffer[Long]()
       var r = 0
-      while (r < m) {
-        val s = rows(r).getLong(0)
-        if (!idx.containsKey(s)) { idx.put(s, ids.length); ids += s }
+      while (r < rows.length) {
+        if (!rows(r).isNullAt(0) && !rows(r).isNullAt(1)) {
+          val s = rows(r).getLong(0)
+          src(m) = s; dst(m) = rows(r).getLong(1); m += 1
+          if (!idx.containsKey(s)) { idx.put(s, ids.length); ids += s }
+        }
         r += 1
       }
       val n = ids.length
       // CSR adjacency over in-neighbors (symmetric, so = neighbors)
       val deg = new Array[Int](n)
       r = 0
-      while (r < m) { deg(idx.get(rows(r).getLong(1))) += 1; r += 1 }
+      while (r < m) { deg(idx.get(dst(r))) += 1; r += 1 }
       val off = new Array[Int](n + 1)
       var v = 0
       while (v < n) { off(v + 1) = off(v) + deg(v); v += 1 }
@@ -610,8 +617,8 @@ object Dedup {
       val nbr = new Array[Int](m)
       r = 0
       while (r < m) {
-        val d = idx.get(rows(r).getLong(1))
-        nbr(fill(d)) = idx.get(rows(r).getLong(0))
+        val d = idx.get(dst(r))
+        nbr(fill(d)) = idx.get(src(r))
         fill(d) += 1; r += 1
       }
       var labels = ids.toArray

@@ -175,28 +175,35 @@ object Graph {
       var mEdges = 0L
       od.foreach(r => mEdges += r.getLong(1))
       if (mEdges <= driverMaxEdges) {
-        val nn = od.length
+        // a NULL src is a node of its own in the loop (it counts in n and
+        // ranks `base`: no edge joins into or out of a null key), so it
+        // is kept out of the arrays and emitted as that row at the end
+        val nullNode = od.exists(_.isNullAt(0))
+        val nn = od.length - (if (nullNode) 1 else 0)
         val ids = new Array[Long](nn)
         val deg = new Array[Long](nn)
         val idx = new java.util.HashMap[Long, Int](nn * 2)
         var k = 0
-        while (k < nn) {
-          ids(k) = od(k).getLong(0); deg(k) = od(k).getLong(1)
+        od.filterNot(_.isNullAt(0)).foreach { r =>
+          ids(k) = r.getLong(0); deg(k) = r.getLong(1)
           idx.put(ids(k), k); k += 1
         }
         val sp0 = e.sparkSession
         import sp0.implicits._
-        // tuple encoder, not Row collect: the deserializer is codegen'd
-        // and the transient footprint stays near the raw 16 B/edge
-        val es = e.select(col("src"), col("dst")).as[(Long, Long)].collect()
+        // tuple encoder, not Row collect: the deserializer is codegen'd;
+        // boxed ends, so a null id survives the collect
+        val es = e.select(col("src"), col("dst"))
+          .as[(java.lang.Long, java.lang.Long)].collect()
         val srcI = new Array[Int](es.length)
         val dstI = new Array[Int](es.length)
         k = 0
         while (k < es.length) {
-          srcI(k) = idx.get(es(k)._1) // src set == outdeg key set
-          // a dst outside the src set contributes to no ranked node —
-          // the loop's left join drops it the same way
-          dstI(k) = idx.getOrDefault(es(k)._2, -1)
+          // an end that is null or outside the outdeg key set (a
+          // caller-built model) contributes to no ranked node — the
+          // loop's joins drop such an edge the same way
+          val (s, d) = es(k)
+          srcI(k) = if (s == null) -1 else idx.getOrDefault(s, -1)
+          dstI(k) = if (d == null) -1 else idx.getOrDefault(d, -1)
           k += 1
         }
         var rank = Array.fill(nn)(Scale / n)
@@ -207,8 +214,7 @@ object Graph {
           val mass = new Array[Long](nn)
           k = 0
           while (k < es.length) {
-            val d = dstI(k)
-            if (d >= 0) mass(d) += contrib(srcI(k))
+            if (srcI(k) >= 0 && dstI(k) >= 0) mass(dstI(k)) += contrib(srcI(k))
             k += 1
           }
           val next = new Array[Long](nn)
@@ -216,8 +222,10 @@ object Graph {
           while (k < nn) { next(k) = base + mass(k) * dampNum / 100; k += 1 }
           rank = next
         }
-        return sp0.createDataset(ids.indices.map(k => (ids(k), rank(k))))
+        val ranked = sp0.createDataset(ids.indices.map(k => (ids(k), rank(k))))
           .toDF("id", "rank_scaled")
+        return if (!nullNode) ranked
+          else ranked.union(Seq((Option.empty[Long], base)).toDF("id", "rank_scaled"))
       }
     }
     // The rank state CARRIES outdeg (static per node, node set ==

@@ -1225,15 +1225,17 @@ trait CollectionStore extends Serializable {
       s"${getClass.getName} keeps no change log; streaming reads unsupported")
 }
 
-/** The mutation surface a REMOTE transport client exposes to the
-  * connector's write path: the SERVICE owns the read-modify-write (the
-  * client ships batches over the wire, commit atomicity lives on the
-  * other side), so the connector's store-update fold passes the client
-  * through unchanged. Both wire transports implement this —
-  * [[RestCollectionStore]] (HTTP/JSON) and [[GrpcCollectionStore]]
-  * (framed protobuf) — and the write path dispatches on the TRAIT:
-  * transports are interchangeable above this seam, exactly the property
-  * a transport variant must prove.
+/** The mutation surface a REMOTE client exposes to the connector's
+  * write path: the SERVICE owns the read-modify-write (the client ships
+  * batches over the wire, commit atomicity lives on the other side), so
+  * the connector's store-update fold passes the client through
+  * unchanged. Both wire transports implement it through ONE base,
+  * [[WireCollectionClient]], which maps every store method to a
+  * [[StoreVerb]]; [[RestCollectionStore]] (JSON) and
+  * [[GrpcCollectionStore]] (framed protobuf) only add their codec, and
+  * both servers run verbs through [[StoreDispatch]]. The sharded and
+  * replicated wrappers implement it too, so the write path dispatches on
+  * the TRAIT: backends are interchangeable above this seam.
   */
 trait RemoteCollectionClient extends CollectionStore {
   def upsertPoints(collection: String, pts: Seq[Point]): Unit
@@ -1270,8 +1272,9 @@ trait RemoteCollectionClient extends CollectionStore {
       s"${getClass.getName} exposes no snapshot verb")
 }
 
-/** The one server-side optimize dispatch BOTH wire transports share:
-  * rebuild whatever the fronted store is — parquet reseals its sidecars
+/** The one optimize rebuild: [[StoreDispatch]] runs it for the wire's
+  * optimize verb, the replicated wrapper per live replica. It rebuilds
+  * whatever the fronted store is — parquet reseals its sidecars
   * at its log head (COW swap), a sharded wrapper closes the loop
   * cluster-wide (delegating to ITS wire members in turn), a further
   * wire client forwards the verb, and the in-memory store (no sidecars)

@@ -1,23 +1,25 @@
 package graft.sources
 
-import java.net.{InetAddress, InetSocketAddress, ServerSocket, Socket}
+import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.collections.{CollectionDescriptor, DenseField, MultiField, SparseField}
 
-/** Binary protobuf wire forms for the collection protocol — the
-  * TRANSPORT VARIANT of [[CollectionWire]]'s HTTP/JSON surface, modeled
-  * on the public Qdrant gRPC API the reference's client actually speaks
+/** Binary protobuf codec for the collection protocol — the TRANSPORT
+  * VARIANT of [[CollectionWire]]'s HTTP/JSON surface, modeled on the
+  * public Qdrant gRPC API the reference's client actually speaks
   * (/root/reference/src/table.rs:133,301-302 via the `qdrant-client`
   * crate: `UpsertPointsBuilder`, `QueryPointsBuilder`, scroll/count —
-  * same operations, same semantics). Messages are hand-sealed with
-  * [[PbWriter]]/[[PbReader]] (the runtime classpath has no
-  * protobuf-java or grpc-java; the wire FORMAT is a public spec), and
-  * frames are length-delimited over a plain socket — gRPC's message
-  * framing without the HTTP/2 envelope, which adds flow control, not
-  * semantics. The message field layout is this protocol's own (a
-  * faithful subset shaped after qdrant's `PointStruct` / named-vectors
-  * model, not a claim of binary compatibility with qdrant.proto).
+  * same operations, same semantics). Each [[StoreVerb]] is one method
+  * name plus one request message, answered by one response message.
+  * Messages are hand-sealed with [[PbWriter]]/[[PbFields]] (the runtime
+  * classpath has no protobuf-java or grpc-java; the wire FORMAT is a
+  * public spec), and frames are length-delimited over a plain socket —
+  * gRPC's message framing without the HTTP/2 envelope, which adds flow
+  * control, not semantics. The message field layout is this protocol's
+  * own (a faithful subset shaped after qdrant's `PointStruct` /
+  * named-vectors model, not a claim of binary compatibility with
+  * qdrant.proto).
   *
   * Payload fidelity rule carried over from the JSON wire: payload
   * crosses as the RAW JSON TEXT bytes — no re-parse, no re-serialize,
@@ -25,6 +27,7 @@ import graft.collections.{CollectionDescriptor, DenseField, MultiField, SparseFi
   * transport.
   */
 private[sources] object GrpcWire {
+  import StoreVerb._
 
   // ------------------------------------------------------------ frames --
 
@@ -76,6 +79,7 @@ private[sources] object GrpcWire {
     w
   }
 
+  /** The hot decode (every fetched point): a direct tag loop. */
   def decodePoint(r: PbReader): Point = {
     var id = ""
     var payload: Option[String] = None
@@ -144,20 +148,11 @@ private[sources] object GrpcWire {
     w
   }
 
-  def decodeFilter(r: PbReader): PayloadFilter = {
-    var must: Seq[PayloadCondition] = Nil
-    var mustNot: Seq[PayloadCondition] = Nil
-    var minCount = 0
-    var minConds: Seq[PayloadCondition] = Nil
-    while (r.hasNext) r.readTag() match {
-      case (1, _) => must = PayloadCondition.parseList(r.readString())
-      case (2, _) => mustNot = PayloadCondition.parseList(r.readString())
-      case (3, _) => minCount = r.readRawVarint().toInt
-      case (4, _) => minConds = PayloadCondition.parseList(r.readString())
-      case (_, w) => r.skip(w)
-    }
-    PayloadFilter(must, mustNot,
-      if (minConds.nonEmpty) Some((minCount, minConds)) else None)
+  def decodeFilter(f: PbFields): PayloadFilter = {
+    def conds(n: Int) = if (f.has(n)) PayloadCondition.parseList(f.str(n)) else Nil
+    val minConds = conds(4)
+    PayloadFilter(conds(1), conds(2),
+      if (minConds.nonEmpty) Some((f.int(3), minConds)) else None)
   }
 
   // -------------------------------------------------------------- spec --
@@ -184,43 +179,12 @@ private[sources] object GrpcWire {
     w
   }
 
-  def decodeSpec(r: PbReader): SearchSpec = {
-    var field = ""
-    var query: Array[Double] = Array.empty
-    var metric = "cosine"
-    var k = 1
-    var offset = 0
-    var threshold: Option[Double] = None
-    var hasThreshold = false
-    var thresholdV = 0.0
-    var sparse: Option[Array[Int]] = None
-    var hasSparse = false
-    var sparseV: Array[Int] = Array.empty
-    val multiRows = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) => field = r.readString()
-      case (2, _) => query = r.readPackedDoubles()
-      case (3, _) => metric = r.readString()
-      case (4, _) => k = r.readRawVarint().toInt
-      case (5, _) => offset = r.readRawVarint().toInt
-      case (6, _) => thresholdV = r.readDouble()
-      case (7, _) => hasThreshold = r.readRawVarint() != 0L
-      case (8, _) => sparseV = r.readPackedInts()
-      case (9, _) => hasSparse = r.readRawVarint() != 0L
-      case (10, _) =>
-        val sub = r.readMessage()
-        var row: Array[Double] = Array.empty
-        while (sub.hasNext) sub.readTag() match {
-          case (1, _) => row = sub.readPackedDoubles()
-          case (_, w) => sub.skip(w)
-        }
-        multiRows += row
-      case (_, w) => r.skip(w)
-    }
-    if (hasThreshold) threshold = Some(thresholdV)
-    if (hasSparse) sparse = Some(sparseV)
-    SearchSpec(field, query, metric, k, offset, threshold, sparse,
-      if (multiRows.isEmpty) None else Some(multiRows.toArray))
+  def decodeSpec(f: PbFields): SearchSpec = {
+    val rows = f.fields(10).map(_.slice(1).doubles()).toArray
+    SearchSpec(f.str(1), f.slice(2).doubles(), f.str(3, "cosine"), f.int(4, 1),
+      f.int(5), if (f.bool(7)) Some(f.double(6)) else None,
+      if (f.bool(9)) Some(f.slice(8).ints()) else None,
+      if (rows.isEmpty) None else Some(rows))
   }
 
   // -------------------------------------------------------- descriptor --
@@ -236,7 +200,7 @@ private[sources] object GrpcWire {
       f match {
         case DenseField(_, dim, metric) =>
           m.int(2, 0L).int(3, dim.toLong).string(4, metric)
-        case SparseField(_) => m.int(2, 1L)
+        case _: SparseField => m.int(2, 1L)
         case MultiField(_, dim) => m.int(2, 2L).int(3, dim.toLong)
       }
       w.message(2, m)
@@ -245,589 +209,303 @@ private[sources] object GrpcWire {
     w
   }
 
-  def decodeDescriptor(r: PbReader): CollectionDescriptor = {
-    var name = ""
-    var named = false
-    val fields = Seq.newBuilder[graft.collections.VectorFieldSpec]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) => name = r.readString()
-      case (3, _) => named = r.readRawVarint() != 0L
-      case (2, _) =>
-        val m = r.readMessage()
-        var fn = ""
-        var kind = 0
-        var dim = 0
-        var metric = "cosine"
-        while (m.hasNext) m.readTag() match {
-          case (1, _) => fn = m.readString()
-          case (2, _) => kind = m.readRawVarint().toInt
-          case (3, _) => dim = m.readRawVarint().toInt
-          case (4, _) => metric = m.readString()
-          case (_, w) => m.skip(w)
-        }
-        fields += (kind match {
-          case 0 => DenseField(fn, dim, metric)
-          case 1 => SparseField(fn)
-          case 2 => MultiField(fn, dim)
-          case other =>
-            throw new IllegalArgumentException(s"unknown field kind $other")
-        })
-      case (_, w) => r.skip(w)
+  def decodeDescriptor(f: PbFields): CollectionDescriptor =
+    CollectionDescriptor(f.str(1), f.fields(2).map { m =>
+      m.int(2) match {
+        case 0 => DenseField(m.str(1), m.int(3), m.str(4, "cosine"))
+        case 1 => SparseField(m.str(1))
+        case 2 => MultiField(m.str(1), m.int(3))
+        case other => throw new IllegalArgumentException(s"unknown field kind $other")
+      }
+    }, f.bool(3))
+
+  // ---------------------------------------------------------- requests --
+
+  /** Id-filter arguments: the id set at field `at` (`at + 1` marks its
+    * presence, so an empty set survives) and the keyset lower bound at
+    * `at + 2` (`at + 3` marks presence).
+    */
+  private def idArgs(w: PbWriter, ids: Option[Set[String]], lower: Option[String],
+                     at: Int): PbWriter = {
+    ids.foreach { s => w.bool(at + 1, b = true); s.toSeq.sorted.foreach(w.string(at, _)) }
+    lower.foreach { b => w.bool(at + 3, b = true); w.string(at + 2, b) }
+    w
+  }
+
+  private def idsOf(f: PbFields, at: Int): (Option[Set[String]], Option[String]) =
+    (if (f.bool(at + 1)) Some(f.strs(at).toSet) else None,
+      if (f.bool(at + 3)) Some(f.str(at + 2)) else None)
+
+  private def filterArg(w: PbWriter, at: Int, pf: PayloadFilter): PbWriter =
+    if (pf.nonEmpty) w.message(at, encodeFilter(pf)) else w
+
+  private def textArgs(c: String, key: String, terms: Seq[String]): PbWriter = {
+    val w = new PbWriter().string(1, c).string(2, key)
+    terms.foreach(w.string(3, _))
+    w
+  }
+
+  private def on(c: String): PbWriter = new PbWriter().string(1, c)
+
+  /** verb -> (method name, request message). Field layouts per method:
+    * `c` is field 1 wherever a collection is named; see each arm.
+    */
+  def request(v: StoreVerb[_]): (String, PbWriter) = v match {
+    case Names() => ("names", new PbWriter)
+    case Info(c) => ("info", on(c))
+    case Count(c) => ("count", on(c))
+    case CountFiltered(c, ids, lower, pf) =>
+      ("count_filtered", filterArg(idArgs(on(c), ids, lower, 2), 6, pf))
+    // 2/3 = window, 4 = with payload, 5 = vector fields, 8-11 = id
+    // filter, 12 = payload filter, 13 = remaining limit
+    case Scroll(c, from, until, wp, vf, limit, ids, lower, pf) =>
+      val w = on(c).int(2, from).int(3, until).bool(4, wp)
+      vf.foreach(w.string(5, _))
+      filterArg(idArgs(w, ids, lower, 8), 12, pf)
+      limit.foreach(n => w.int(13, n.toLong))
+      ("scroll", w)
+    case Search(c, spec, wp, vf, pf) =>
+      val w = on(c).message(2, encodeSpec(spec)).bool(3, wp)
+      vf.foreach(w.string(4, _))
+      ("search", filterArg(w, 5, pf))
+    case SearchBatch(c, specs, wp, vf) =>
+      val w = on(c).bool(3, wp)
+      specs.foreach(sp => w.message(2, encodeSpec(sp)))
+      vf.foreach(w.string(4, _))
+      ("search_batch", w)
+    case Facet(c, key, limit, pf) =>
+      ("facet", filterArg(on(c).string(2, key).int(3, limit.toLong), 4, pf))
+    case FacetFor(c, key, values, pf) =>
+      val w = on(c).string(2, key)
+      values.toSeq.sorted.foreach(w.string(3, _))
+      ("facet_for", filterArg(w, 4, pf))
+    case TextRanked(c, key, terms, k, k1, b) =>
+      ("textrank", textArgs(c, key, terms).int(4, k.toLong).double(5, k1).double(6, b))
+    case TextPartials(c, key, terms) => ("textpartials", textArgs(c, key, terms))
+    case TextStats(c, key, terms) => ("textstats", textArgs(c, key, terms))
+    case TextTopK(c, key, terms, k, g, k1, b) =>
+      val w = textArgs(c, key, terms).int(4, k.toLong).double(5, k1).double(6, b)
+        .int(7, g.n).int(8, g.totalLen)
+      g.dfs.foreach(w.int(9, _))
+      ("texttopk", w)
+    case Upsert(c, pts) =>
+      val w = on(c)
+      pts.foreach(p => w.message(2, encodePoint(p)))
+      ("upsert", w)
+    case Delete(c, ids) =>
+      val w = on(c)
+      ids.toSeq.sorted.foreach(w.string(2, _))
+      ("delete", w)
+    case Truncate(c) => ("truncate", on(c).bool(3, b = true))
+    case Compact(c, upTo) => ("compact", on(c).int(2, upTo))
+    case Optimize(ivfMaxIter) => ("optimize", new PbWriter().int(2, ivfMaxIter.toLong))
+    case CreateSnapshot(c, path, storage) =>
+      val w = on(c).string(2, path)
+      ("snapshot", if (storage) w.string(3, "storage") else w)
+    case RecoverSnapshot(c, path, dir, nprobe, candK, ef, hnswK) =>
+      ("snapshot_recover", on(c).string(2, path).string(3, dir)
+        .int(4, nprobe.toLong).int(5, candK.toLong).int(6, ef.toLong).int(7, hnswK.toLong))
+    case VerifySnapshot(c, path) => ("snapshot_verify", on(c).string(2, path))
+    case LogStart(c) => ("log_start", on(c))
+    case LogSize(c) => ("log_size", on(c))
+    case LogEntries(c, from, until) => ("log_entries", on(c).int(2, from).int(3, until))
+    case other => throw new UnsupportedOperationException(
+      s"the binary wire carries no ${other.getClass.getSimpleName} verb")
+  }
+
+  /** Service side: (method name, request message) -> verb. */
+  def decodeRequest(method: String, f: PbFields): StoreVerb[_] = {
+    def c = f.str(1)
+    def filter(at: Int) = decodeFilter(new PbFields(f.slice(at)))
+    method match {
+      case "names" => Names()
+      case "info" => Info(c)
+      case "count" => Count(c)
+      case "count_filtered" =>
+        val (ids, lower) = idsOf(f, 2)
+        CountFiltered(c, ids, lower, filter(6))
+      case "scroll" =>
+        val (ids, lower) = idsOf(f, 8)
+        Scroll(c, f.long(2), f.long(3), f.bool(4), f.strs(5),
+          if (f.has(13)) Some(f.int(13)) else None, ids, lower, filter(12))
+      case "search" =>
+        require(f.has(2), "search requires a spec")
+        Search(c, decodeSpec(new PbFields(f.slice(2))), f.bool(3), f.strs(4), filter(5))
+      case "search_batch" =>
+        SearchBatch(c, f.fields(2).map(decodeSpec), f.bool(3), f.strs(4))
+      case "facet" => Facet(c, f.str(2), f.int(3, 10), filter(4))
+      case "facet_for" => FacetFor(c, f.str(2), f.strs(3).toSet, filter(4))
+      case "textrank" =>
+        TextRanked(c, f.str(2), f.strs(3), f.int(4, 10), f.double(5, 1.2), f.double(6, 0.75))
+      case "textpartials" => TextPartials(c, f.str(2), f.strs(3))
+      case "textstats" => TextStats(c, f.str(2), f.strs(3))
+      case "texttopk" =>
+        TextTopK(c, f.str(2), f.strs(3), f.int(4, 10),
+          TextRankStats(f.long(7), f.long(8), f.longs(9).toArray),
+          f.double(5, 1.2), f.double(6, 0.75))
+      case "upsert" => Upsert(c, f.msgs(2).map(decodePoint))
+      case "delete" => Delete(c, f.strs(2).toSet)
+      case "truncate" => Truncate(c)
+      case "compact" => Compact(c, f.long(2))
+      case "optimize" => Optimize(f.int(2))
+      case "snapshot" => CreateSnapshot(c, f.str(2), f.str(3) == "storage")
+      case "snapshot_recover" =>
+        RecoverSnapshot(c, f.str(2), f.str(3), f.int(4), f.int(5), f.int(6), f.int(7))
+      case "snapshot_verify" => VerifySnapshot(c, f.str(2))
+      case "log_start" => LogStart(c)
+      case "log_size" => LogSize(c)
+      case "log_entries" => LogEntries(c, f.long(2), f.long(3))
+      case other => throw new IllegalArgumentException(s"unknown method '$other'")
     }
-    CollectionDescriptor(name, fields.result(), named)
+  }
+
+  // --------------------------------------------------------- responses --
+
+  private def decodeScored(f: PbFields): Seq[(Point, Double)] =
+    f.fields(1).map(m => (decodePoint(m.slice(1)), m.double(2)))
+
+  /** Service side: the response message of `v`'s result. Mutations
+    * answer with the empty message.
+    */
+  def encodeResult[R](v: StoreVerb[R]): R => PbWriter = {
+    val w = new PbWriter
+    def each[T](xs: Iterable[T])(put: T => Any): PbWriter = { xs.foreach(put); w }
+    def hits[T](hs: Iterable[(String, T)])(put: (PbWriter, T) => PbWriter): PbWriter =
+      each(hs) { case (k, x) => w.message(1, put(new PbWriter().string(1, k), x)) }
+    def scored(page: Seq[(Point, Double)]): PbWriter = {
+      val pw = new PbWriter
+      page.foreach { case (p, s) => pw.message(1, new PbWriter()
+        .message(1, encodePoint(p)).double(2, s)) }
+      pw
+    }
+    v match {
+      case Names() => names => each(names)(w.string(1, _))
+      case _: VerifySnapshot => findings => each(findings)(w.string(1, _))
+      case _: Info => encodeDescriptor(_)
+      case _: Count => w.int(1, _)
+      case _: CountFiltered => w.int(1, _)
+      case _: LogStart => w.int(1, _)
+      case _: LogSize => w.int(1, _)
+      case _: Scroll => pts => each(pts)(p => w.message(1, encodePoint(p)))
+      case _: Search => scored(_)
+      case _: SearchBatch => pages => each(pages)(p => w.message(1, scored(p)))
+      case _: Facet => hits(_)(_.int(2, _))
+      case _: FacetFor => counts => hits(counts.toSeq.sortBy(_._1))(_.int(2, _))
+      case _: TextRanked => hits(_)(_.double(2, _))
+      case _: TextTopK => hits(_)(_.double(2, _))
+      case _: TextPartials => p =>
+        w.int(1, p.n).int(2, p.totalLen)
+        p.dfs.foreach(w.int(3, _))
+        each(p.docs) { case (id, tfs, dl) =>
+          val dw = new PbWriter().string(1, id)
+          tfs.foreach(dw.int(2, _))
+          w.message(4, dw.int(3, dl))
+        }
+      case _: TextStats => st =>
+        w.int(1, st.n).int(2, st.totalLen)
+        each(st.dfs)(w.int(3, _))
+      case _: LogEntries => entries => each(entries) { e =>
+        val m = new PbWriter().string(1, e.op).message(2, encodePoint(e.point))
+        w.message(1, if (e.seq >= 0) m.int(3, e.seq) else m)
+      }
+      case _ => _ => w
+    }
+  }
+
+  /** Client side: `v`'s result from its response message. */
+  def decodeResult[R](v: StoreVerb[R], bytes: Array[Byte]): R = {
+    val f = new PbFields(bytes)
+    v match {
+      case Names() => f.strs(1)
+      case _: VerifySnapshot => f.strs(1)
+      case _: Info => decodeDescriptor(f)
+      case _: Count => f.long(1)
+      case _: CountFiltered => f.long(1)
+      case _: LogStart => f.long(1)
+      case _: LogSize => f.long(1)
+      case _: Scroll => f.msgs(1).map(decodePoint)
+      case _: Search => decodeScored(f)
+      case _: SearchBatch => f.fields(1).map(decodeScored)
+      case _: Facet => f.fields(1).map(m => (m.str(1), m.long(2)))
+      case _: FacetFor => f.fields(1).map(m => (m.str(1), m.long(2))).toMap
+      case _: TextRanked => f.fields(1).map(m => (m.str(1), m.double(2)))
+      case _: TextTopK => f.fields(1).map(m => (m.str(1), m.double(2)))
+      case _: TextPartials =>
+        TextRankPartials(f.long(1), f.long(2), f.longs(3).toArray,
+          f.fields(4).map(d => (d.str(1), d.longs(2).toArray, d.long(3))))
+      case _: TextStats => TextRankStats(f.long(1), f.long(2), f.longs(3).toArray)
+      case _: LogEntries =>
+        f.fields(1).map(m => LogEntry(m.str(1), decodePoint(m.slice(2)), m.long(3, -1L)))
+      case _: Mutation => ().asInstanceOf[R]
+      case other => throw new UnsupportedOperationException(
+        s"the binary wire carries no ${other.getClass.getSimpleName} verb")
+    }
   }
 }
 
-/** The binary-protobuf collection CLIENT — a [[CollectionStore]] whose
-  * every method is one (or one-per-page) framed request to a
-  * [[CollectionGrpcServer]]. The transport twin of
-  * [[RestCollectionStore]]: same store contract above the seam, same
-  * server-side filter/search evaluation, same per-writer mutation
-  * batches; only the encoding differs (protobuf messages vs JSON
-  * resources). Serializable by construction — executors deserialize
-  * `(host, port)` and open their own connections.
+/** The binary-protobuf collection CLIENT — a [[WireCollectionClient]]
+  * whose every verb is one framed request to a [[CollectionGrpcServer]].
+  * The transport twin of [[RestCollectionStore]]: same store contract
+  * above the seam, same server-side filter/search evaluation, same
+  * per-writer mutation batches; only the encoding differs (protobuf
+  * messages vs JSON resources). Executors deserialize `(host, port)` and
+  * open their own connections.
   */
 final class GrpcCollectionStore(host: String, port: Int,
                                 pageSize: Int = 4096,
                                 timeoutMs: Int = 30000,
                                 apiKey: Option[String] = None)
-    extends CollectionStore with RemoteCollectionClient {
-  require(pageSize > 0, s"pageSize must be positive, got $pageSize")
+    extends WireCollectionClient(pageSize) {
   require(timeoutMs > 0, s"timeoutMs must be positive, got $timeoutMs")
 
-  @transient private lazy val descCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CollectionDescriptor]()
-
-  /** One request = one framed round trip on a fresh loopback socket
+  /** One verb = one framed round trip on a fresh loopback socket
     * (connection setup is microseconds against loopback; per-call
     * sockets keep the client state-free and trivially thread-safe).
-    * Status 0 = ok; other statuses rethrow the store contract's
-    * exception kinds so callers above the seam observe identical
-    * failures whichever backend is registered.
+    * Status 0 = ok; other statuses rethrow through [[WireError]].
     */
-  private def call(method: String, body: PbWriter): Array[Byte] = {
+  private[sources] def call[R](verb: StoreVerb[R]): R = {
+    val (method, body) = GrpcWire.request(verb)
     // bounded failure: a wedged or half-closed server must surface a
     // store-contract exception, never pin an executor thread (the REST
     // twin bounds failures with retries; here connect + read timeouts)
     val sock = new Socket()
-    try {
-      sock.connect(new java.net.InetSocketAddress(host, port), timeoutMs)
-      sock.setSoTimeout(timeoutMs)
-      val out = new java.io.BufferedOutputStream(sock.getOutputStream)
-      GrpcWire.writeDelimited(out, method.getBytes(UTF_8))
-      GrpcWire.writeDelimited(out, body.toBytes)
-      // keyed clients append the shared secret as a TRAILING frame (the
-      // framed-wire analog of qdrant's `api-key` gRPC metadata); a keyed
-      // server reads it before routing, an unkeyed server never looks
-      apiKey.foreach(k => GrpcWire.writeDelimited(out, k.getBytes(UTF_8)))
-      out.flush()
-      sock.shutdownOutput()
-      val in = new java.io.BufferedInputStream(sock.getInputStream)
-      val status = in.read()
-      require(status >= 0, "connection closed before response")
-      val payload = GrpcWire.readDelimited(in)
-      status match {
-        case 0 => payload
-        case 1 => throw new IllegalArgumentException(new String(payload, UTF_8))
-        case 2 => throw new IllegalStateException(new String(payload, UTF_8))
-        case 3 =>
-          throw new UnsupportedOperationException(new String(payload, UTF_8))
-        case 5 => throw new SecurityException(new String(payload, UTF_8))
-        case s => throw new RuntimeException(
-          s"collection grpc service status $s: ${new String(payload, UTF_8)}")
-      }
-    } catch {
-      case e: java.net.SocketTimeoutException =>
-        throw new IllegalStateException(
-          s"collection grpc '$method' to $host:$port timed out " +
-            s"after ${timeoutMs}ms", e)
-    } finally sock.close()
-  }
-
-  override def collectionInfo(collection: String): CollectionDescriptor =
-    GrpcWire.decodeDescriptor(new PbReader(
-      call("info", new PbWriter().string(1, collection))))
-
-  private def descriptor(collection: String): CollectionDescriptor =
-    descCache.computeIfAbsent(collection, c => collectionInfo(c))
-
-  override def collectionNames: Seq[String] = {
-    val r = new PbReader(call("names", new PbWriter))
-    val out = Seq.newBuilder[String]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) => out += r.readString()
-      case (_, w) => r.skip(w)
-    }
-    out.result()
-  }
-
-  override def pointCount(collection: String): Long = {
-    val r = new PbReader(call("count", new PbWriter().string(1, collection)))
-    var n = 0L
-    while (r.hasNext) r.readTag() match {
-      case (1, _) => n = r.readRawVarint()
-      case (_, w) => r.skip(w)
-    }
-    n
-  }
-
-  private def idArgs(w: PbWriter, idFilter: Option[Set[String]],
-                     idLower: Option[String],
-                     idsField: Int, hasIdsField: Int,
-                     lowerField: Int, hasLowerField: Int): PbWriter = {
-    idFilter.foreach { ids =>
-      w.bool(hasIdsField, b = true)
-      ids.toSeq.sorted.foreach(w.string(idsField, _))
-    }
-    idLower.foreach { b => w.bool(hasLowerField, b = true); w.string(lowerField, b) }
-    w
-  }
-
-  /** Filtered count in ONE round trip (the service's exact count). */
-  override def countMatching(collection: String,
-                             idFilter: Option[Set[String]] = None,
-                             idLower: Option[String] = None): Long =
-    countMatchingFiltered(collection, idFilter, idLower, PayloadFilter.Empty)
-
-  override def countMatchingFiltered(collection: String,
-                                     idFilter: Option[Set[String]],
-                                     idLower: Option[String],
-                                     pfilter: PayloadFilter): Long = {
-    descriptor(collection): Unit // 404 for unknown collections, like REST
-    val w = new PbWriter().string(1, collection)
-    idArgs(w, idFilter, idLower, 2, 3, 4, 5)
-    if (pfilter.nonEmpty) w.message(6, GrpcWire.encodeFilter(pfilter))
-    val r = new PbReader(call("count_filtered", w))
-    var n = 0L
-    while (r.hasNext) r.readTag() match {
-      case (1, _) => n = r.readRawVarint()
-      case (_, w2) => r.skip(w2)
-    }
-    n
-  }
-
-  override def queryPoints(collection: String, from: Long, until: Long,
-                           withPayload: Boolean, vectorFields: Seq[String],
-                           limit: Option[Int],
-                           idFilter: Option[Set[String]] = None,
-                           idLower: Option[String] = None): Iterator[Point] =
-    queryPointsFiltered(collection, from, until, withPayload, vectorFields,
-      limit, idFilter, idLower, PayloadFilter.Empty)
-
-  /** Server-side filter evaluation: conditions ship in the scroll frame
-    * and only matching points cross the wire, paged by enumeration
-    * window so no page materializes the collection on either side.
-    *
-    * PAGED ID-FILTER: a full-window fetch WITH an id set pages over the
-    * ID SET instead of the enumeration window — one request per
-    * `pageSize` ids (id-sorted chunks), never the positional loop that
-    * would re-serialize the whole set with every window page. A reshard
-    * migrating a 65k-id batch through a wire member ships
-    * ceil(65k/pageSize) bounded requests; a small routed lookup ships
-    * ONE. Results come back in UTF-8 id order (identical to the
-    * enumeration order of the id-sealed backends; set semantics for
-    * callers over unsealed ones — the migration/routed-fetch contract).
-    */
-  override def queryPointsFiltered(collection: String, from: Long, until: Long,
-                                   withPayload: Boolean,
-                                   vectorFields: Seq[String],
-                                   limit: Option[Int],
-                                   idFilter: Option[Set[String]] = None,
-                                   idLower: Option[String] = None,
-                                   pfilter: PayloadFilter = PayloadFilter.Empty): Iterator[Point] = {
-    descriptor(collection): Unit
-    val pc = pointCount(collection)
-    val hi = math.min(until, pc)
-    def page(start: Long, end: Long,
-             ids: Option[Set[String]]): Seq[Point] = {
-      val w = new PbWriter().string(1, collection)
-        .int(2, start).int(3, end)
-        .bool(4, withPayload)
-      vectorFields.foreach(w.string(5, _))
-      idArgs(w, ids, idLower, 8, 9, 10, 11)
-      if (pfilter.nonEmpty) w.message(12, GrpcWire.encodeFilter(pfilter))
-      val r = new PbReader(call("scroll", w))
-      val out = Seq.newBuilder[Point]
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => out += GrpcWire.decodePoint(r.readMessage())
-        case (_, w2) => r.skip(w2)
-      }
-      out.result()
-    }
-    val pages = idFilter match {
-      case Some(ids) if from == 0L && until >= pc =>
-        ids.toSeq.sortWith(SparkStringOrder.lt).grouped(pageSize)
-          .flatMap(chunk => page(0L, hi, Some(chunk.toSet)))
-      case _ =>
-        Iterator.range(from, hi, pageSize.toLong)
-          .flatMap(start => page(start,
-            math.min(start + pageSize, hi), idFilter))
-    }
-    limit.fold(pages)(n => pages.take(n))
-  }
-
-  /** Pushed top-k over the wire: the service scores and ranks, k scored
-    * points come back — the reference's `QueryPoints` architecture
-    * end-to-end, network included (table.rs:279-302).
-    */
-  override def searchPoints(collection: String, spec: SearchSpec,
-                            withPayload: Boolean,
-                            vectorFields: Seq[String]): Seq[(Point, Double)] =
-    searchPointsFiltered(collection, spec, withPayload, vectorFields,
-      PayloadFilter.Empty)
-
-  override def searchPointsFiltered(collection: String, spec: SearchSpec,
-                                    withPayload: Boolean,
-                                    vectorFields: Seq[String],
-                                    pfilter: PayloadFilter): Seq[(Point, Double)] = {
-    descriptor(collection): Unit
-    val w = new PbWriter().string(1, collection)
-      .message(2, GrpcWire.encodeSpec(spec)).bool(3, withPayload)
-    vectorFields.foreach(w.string(4, _))
-    if (pfilter.nonEmpty) w.message(5, GrpcWire.encodeFilter(pfilter))
-    val r = new PbReader(call("search", w))
-    val out = Seq.newBuilder[(Point, Double)]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) =>
-        val m = r.readMessage()
-        var p: Point = null
-        var s = 0.0
-        while (m.hasNext) m.readTag() match {
-          case (1, _) => p = GrpcWire.decodePoint(m.readMessage())
-          case (2, _) => s = m.readDouble()
-          case (_, w2) => m.skip(w2)
+    val payload =
+      try {
+        sock.connect(new java.net.InetSocketAddress(host, port), timeoutMs)
+        sock.setSoTimeout(timeoutMs)
+        val out = new java.io.BufferedOutputStream(sock.getOutputStream)
+        GrpcWire.writeDelimited(out, method.getBytes(UTF_8))
+        GrpcWire.writeDelimited(out, body.toBytes)
+        // keyed clients append the shared secret as a TRAILING frame (the
+        // framed-wire analog of qdrant's `api-key` gRPC metadata); a keyed
+        // server reads it before routing, an unkeyed server never looks
+        apiKey.foreach(k => GrpcWire.writeDelimited(out, k.getBytes(UTF_8)))
+        out.flush()
+        sock.shutdownOutput()
+        val in = new java.io.BufferedInputStream(sock.getInputStream)
+        val status = in.read()
+        require(status >= 0, "connection closed before response")
+        val bytes = GrpcWire.readDelimited(in)
+        if (status != 0) {
+          val msg = new String(bytes, UTF_8)
+          throw WireError.byGrpc(status).map(_.raise(msg)).getOrElse(
+            new RuntimeException(s"collection grpc service status $status: $msg"))
         }
-        out += ((p, s))
-      case (_, w2) => r.skip(w2)
-    }
-    out.result()
-  }
-
-  /** BATCHED queries in ONE round trip (the backend's query/batch):
-    * repeated spec frames out, per-spec ranked pages back — same
-    * contract as [[RestCollectionStore.searchPointsBatch]].
-    */
-  def searchPointsBatch(collection: String, specs: Seq[SearchSpec],
-                        withPayload: Boolean,
-                        vectorFields: Seq[String]): Seq[Seq[(Point, Double)]] = {
-    descriptor(collection): Unit
-    val w = new PbWriter().string(1, collection).bool(3, withPayload)
-    specs.foreach(sp => w.message(2, GrpcWire.encodeSpec(sp)))
-    vectorFields.foreach(w.string(4, _))
-    val r = new PbReader(call("search_batch", w))
-    val out = Seq.newBuilder[Seq[(Point, Double)]]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) =>
-        val b = r.readMessage()
-        val page = Seq.newBuilder[(Point, Double)]
-        while (b.hasNext) b.readTag() match {
-          case (1, _) =>
-            val m = b.readMessage()
-            var p: Point = null
-            var s = 0.0
-            while (m.hasNext) m.readTag() match {
-              case (1, _) => p = GrpcWire.decodePoint(m.readMessage())
-              case (2, _) => s = m.readDouble()
-              case (_, w2) => m.skip(w2)
-            }
-            page += ((p, s))
-          case (_, w2) => b.skip(w2)
-        }
-        out += page.result()
-      case (_, w2) => r.skip(w2)
-    }
-    out.result()
-  }
-
-  /** Ranked full-text in ONE framed round trip — the default would
-    * scroll every payload over the wire; the service reads its own
-    * postings and ships the k hits.
-    */
-  override def searchTextRanked(collection: String, key: String,
-                                terms: Seq[String], k: Int,
-                                k1: Double = 1.2,
-                                b: Double = 0.75): Seq[(String, Double)] = {
-    TextRank.validate(terms, k)
-    val w = new PbWriter().string(1, collection).string(2, key)
-    terms.foreach(w.string(3, _))
-    w.int(4, k.toLong).double(5, k1).double(6, b)
-    val r = new PbReader(call("textrank", w))
-    val out = Seq.newBuilder[(String, Double)]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) =>
-        val m = r.readMessage()
-        var id = ""
-        var s = 0.0
-        while (m.hasNext) m.readTag() match {
-          case (1, _) => id = m.readString()
-          case (2, _) => s = m.readDouble()
-          case (_, w2) => m.skip(w2)
-        }
-        out += ((id, s))
-      case (_, w2) => r.skip(w2)
-    }
-    out.result()
-  }
-
-  /** Mergeable BM25 partials in one framed round trip (the sharded
-    * wrapper's per-member call).
-    */
-  override def textRankPartials(collection: String, key: String,
-                                terms: Seq[String]): TextRankPartials = {
-    val req = new PbWriter().string(1, collection).string(2, key)
-    terms.foreach(req.string(3, _))
-    val r = new PbReader(call("textpartials", req))
-    var n = 0L
-    var total = 0L
-    val dfs = Seq.newBuilder[Long]
-    val docs = Seq.newBuilder[(String, Array[Long], Long)]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) => n = r.readRawVarint()
-      case (2, _) => total = r.readRawVarint()
-      case (3, _) => dfs += r.readRawVarint()
-      case (4, _) =>
-        val m = r.readMessage()
-        var id = ""
-        var dl = 0L
-        val tfs = Seq.newBuilder[Long]
-        while (m.hasNext) m.readTag() match {
-          case (1, _) => id = m.readString()
-          case (2, _) => tfs += m.readRawVarint()
-          case (3, _) => dl = m.readRawVarint()
-          case (_, w2) => m.skip(w2)
-        }
-        docs += ((id, tfs.result().toArray, dl))
-      case (_, w2) => r.skip(w2)
-    }
-    TextRankPartials(n, total, dfs.result().toArray, docs.result())
-  }
-
-  /** Phase 1 of the two-phase distributed rank: a few dozen bytes
-    * cross the wire — never candidate rows.
-    */
-  override def textRankStats(collection: String, key: String,
-                             terms: Seq[String]): TextRankStats = {
-    val req = new PbWriter().string(1, collection).string(2, key)
-    terms.foreach(req.string(3, _))
-    val r = new PbReader(call("textstats", req))
-    var n = 0L
-    var total = 0L
-    val dfs = Seq.newBuilder[Long]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) => n = r.readRawVarint()
-      case (2, _) => total = r.readRawVarint()
-      case (3, _) => dfs += r.readRawVarint()
-      case (_, w2) => r.skip(w2)
-    }
-    TextRankStats(n, total, dfs.result().toArray)
-  }
-
-  /** Phase 2: the service ranks ITS candidates with the caller's
-    * GLOBAL stats and only the k scored hits cross the wire — the
-    * merge-point ship volume is bounded by k however common the terms.
-    */
-  override def textRankTopK(collection: String, key: String,
-                            terms: Seq[String], k: Int,
-                            global: TextRankStats, k1: Double = 1.2,
-                            b: Double = 0.75): Seq[(String, Double)] = {
-    TextRank.validate(terms, k)
-    val w = new PbWriter().string(1, collection).string(2, key)
-    terms.foreach(w.string(3, _))
-    w.int(4, k.toLong).double(5, k1).double(6, b)
-      .int(7, global.n).int(8, global.totalLen)
-    global.dfs.foreach(w.int(9, _))
-    val r = new PbReader(call("texttopk", w))
-    val out = Seq.newBuilder[(String, Double)]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) =>
-        val m = r.readMessage()
-        var id = ""
-        var s = 0.0
-        while (m.hasNext) m.readTag() match {
-          case (1, _) => id = m.readString()
-          case (2, _) => s = m.readDouble()
-          case (_, w2) => m.skip(w2)
-        }
-        out += ((id, s))
-      case (_, w2) => r.skip(w2)
-    }
-    out.result()
-  }
-
-  override def facetCounts(collection: String, key: String, limit: Int,
-                           pfilter: PayloadFilter = PayloadFilter.Empty): Seq[(String, Long)] = {
-    val req = new PbWriter().string(1, collection)
-      .string(2, key).int(3, limit.toLong)
-    if (pfilter.nonEmpty) req.message(4, GrpcWire.encodeFilter(pfilter))
-    val r = new PbReader(call("facet", req))
-    val out = Seq.newBuilder[(String, Long)]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) =>
-        val m = r.readMessage()
-        var v = ""
-        var n = 0L
-        while (m.hasNext) m.readTag() match {
-          case (1, _) => v = m.readString()
-          case (2, _) => n = m.readRawVarint()
-          case (_, w2) => m.skip(w2)
-        }
-        out += ((v, n))
-      case (_, w2) => r.skip(w2)
-    }
-    out.result()
-  }
-
-  /** Targeted exact facet counts (the distributed threshold merge's
-    * second pass): only the asked values' (value, count) rows cross.
-    */
-  override def facetCountsFor(collection: String, key: String,
-                              values: Set[String],
-                              pfilter: PayloadFilter = PayloadFilter.Empty): Map[String, Long] = {
-    if (values.isEmpty) return Map.empty
-    val w = new PbWriter().string(1, collection).string(2, key)
-    values.toSeq.sorted.foreach(w.string(3, _))
-    if (pfilter.nonEmpty) w.message(4, GrpcWire.encodeFilter(pfilter))
-    val r = new PbReader(call("facet_for", w))
-    val out = Map.newBuilder[String, Long]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) =>
-        val m = r.readMessage()
-        var v = ""
-        var n = 0L
-        while (m.hasNext) m.readTag() match {
-          case (1, _) => v = m.readString()
-          case (2, _) => n = m.readRawVarint()
-          case (_, w2) => m.skip(w2)
-        }
-        out += ((v, n))
-      case (_, w2) => r.skip(w2)
-    }
-    out.result()
-  }
-
-  // ------------------------------------------------------- mutations --
-  // Never auto-retried (the wire contract shared with the JSON client):
-  // the caller owns replay semantics.
-
-  def upsertPoints(collection: String, pts: Seq[Point]): Unit = {
-    val w = new PbWriter().string(1, collection)
-    pts.foreach(p => w.message(2, GrpcWire.encodePoint(p)))
-    call("upsert", w): Unit
-  }
-
-  def deletePoints(collection: String, ids: Set[String]): Unit = {
-    val w = new PbWriter().string(1, collection)
-    ids.toSeq.sorted.foreach(w.string(2, _))
-    call("delete", w): Unit
-  }
-
-  def truncate(collection: String): Unit =
-    call("truncate", new PbWriter().string(1, collection).bool(3, b = true)): Unit
-
-  def compact(collection: String, upTo: Long): Unit =
-    call("compact",
-      new PbWriter().string(1, collection).int(2, upTo)): Unit
-
-  /** Trigger the SERVICE's optimizer: the remote store rebuilds its
-    * index sidecars at its own log head (zero data crosses the wire —
-    * one verb frame out, one ack back). Never auto-retried: rebuild
-    * idempotence is the service's, not the transport's.
-    */
-  override def optimize(ivfMaxIter: Int = 0): Unit =
-    call("optimize", new PbWriter().int(2, ivfMaxIter)): Unit
-
-  /** Service-side snapshot: the remote store exports `collection` as a
-    * portable snapshot (parquet dataset + manifest) at `path` ON ITS
-    * side — the backend's create-snapshot API; only the verb crosses.
-    */
-  override def snapshot(collection: String, path: String): Unit =
-    call("snapshot",
-      new PbWriter().string(1, collection).string(2, path)): Unit
-
-  /** Service-side STORAGE snapshot over the binary wire (field 3 =
-    * kind): the whole store tree — index sidecars included — archives
-    * at a SERVICE-side path; only the verb crosses (the REST twin's
-    * contract, the backend's per-node snapshot form).
-    */
-  def snapshotStorage(collection: String, path: String): Unit =
-    call("snapshot",
-      new PbWriter().string(1, collection).string(2, path)
-        .string(3, "storage")): Unit
-
-  /** Recover-from-snapshot over the binary wire: the service restores
-    * the storage archive under `dir` and swaps its backing store —
-    * serving dials as the original (the REST twin's contract).
-    */
-  def recoverStorageSnapshot(collection: String, path: String, dir: String,
-                             ivfNprobe: Int = 0, ivfCandidateK: Int = 0,
-                             hnswEf: Int = 0, hnswCandidateK: Int = 0): Unit =
-    call("snapshot_recover",
-      new PbWriter().string(1, collection).string(2, path).string(3, dir)
-        .int(4, ivfNprobe).int(5, ivfCandidateK)
-        .int(6, hnswEf).int(7, hnswCandidateK)): Unit
-
-  /** The DR drill over the binary wire: the service verifies a
-    * SERVICE-side archive and ships back only the finding strings
-    * (EMPTY = sound) — the REST twin's contract.
-    */
-  def verifyStorageSnapshot(collection: String, path: String): Seq[String] = {
-    val r = new PbReader(call("snapshot_verify",
-      new PbWriter().string(1, collection).string(2, path)))
-    val out = Seq.newBuilder[String]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) => out += r.readString()
-      case (_, w) => r.skip(w)
-    }
-    out.result()
-  }
-
-  // ------------------------------------------------------- change log --
-
-  override def logStart(collection: String): Long = logPos("log_start", collection)
-
-  override def logSize(collection: String): Long = logPos("log_size", collection)
-
-  private def logPos(method: String, collection: String): Long = {
-    val r = new PbReader(call(method, new PbWriter().string(1, collection)))
-    var n = 0L
-    while (r.hasNext) r.readTag() match {
-      case (1, _) => n = r.readRawVarint()
-      case (_, w) => r.skip(w)
-    }
-    n
-  }
-
-  override def logEntries(collection: String, from: Long,
-                          until: Long): Iterator[LogEntry] = {
-    val r = new PbReader(call("log_entries", new PbWriter()
-      .string(1, collection).int(2, from).int(3, until)))
-    val out = Seq.newBuilder[LogEntry]
-    while (r.hasNext) r.readTag() match {
-      case (1, _) =>
-        val m = r.readMessage()
-        var op = ""
-        var p: Point = null
-        var seq = -1L
-        while (m.hasNext) m.readTag() match {
-          case (1, _) => op = m.readString()
-          case (2, _) => p = GrpcWire.decodePoint(m.readMessage())
-          case (3, _) => seq = m.readRawVarint()
-          case (_, w2) => m.skip(w2)
-        }
-        out += LogEntry(op, p, seq)
-      case (_, w2) => r.skip(w2)
-    }
-    out.result().iterator
+        bytes
+      } catch {
+        case e: java.net.SocketTimeoutException =>
+          throw new IllegalStateException(
+            s"collection grpc '$method' to $host:$port timed out " +
+              s"after ${timeoutMs}ms", e)
+      } finally sock.close()
+    GrpcWire.decodeResult(verb, payload)
   }
 }
 
 /** The framed-protobuf collection SERVICE: a loopback [[ServerSocket]]
-  * dispatching [[GrpcWire]] frames onto the registered store (resolved
-  * by NAME per request, so store swaps are immediately visible — the
-  * same discipline as [[CollectionHttpServer]]). One request per
-  * connection; handler threads are daemons so the server never pins the
-  * JVM. Mutations land as one atomic RMW on the fronted store — the
-  * service owns commit atomicity, the client ships batches.
+  * decoding [[GrpcWire]] frames into verbs for [[StoreDispatch]]. One
+  * request per connection; handler threads are daemons so the server
+  * never pins the JVM.
   */
 final class CollectionGrpcServer(storeName: String, poolSize: Int = 8,
                                  apiKey: Option[String] = None) {
@@ -868,7 +546,8 @@ final class CollectionGrpcServer(storeName: String, poolSize: Int = 8,
   val bytesIn = new java.util.concurrent.atomic.AtomicLong(0L)
   val bytesOut = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def store: CollectionStore = CollectionStores.get(storeName)
+  private def serve[R](v: StoreVerb[R]): Array[Byte] =
+    GrpcWire.encodeResult(v)(StoreDispatch(storeName, v)).toBytes
 
   private def handle(sock: Socket): Unit = {
     try {
@@ -888,25 +567,16 @@ final class CollectionGrpcServer(storeName: String, poolSize: Int = 8,
               try GrpcWire.readDelimited(in)
               catch {
                 case _: IllegalArgumentException =>
-                  throw new SecurityException(
-                    "unauthorized: missing api-key frame")
+                  throw new SecurityException("unauthorized: missing api-key frame")
               }
             if (!java.security.MessageDigest.isEqual(sent, k.getBytes(UTF_8)))
               throw new SecurityException("unauthorized: invalid api-key")
           }
-          (0, route(method, new PbReader(body)).toBytes)
+          (0, serve(GrpcWire.decodeRequest(method, new PbFields(body))))
         } catch {
-          case e: SecurityException =>
-            (5, Option(e.getMessage).getOrElse("unauthorized").getBytes(UTF_8))
-          case e: IllegalArgumentException =>
-            (1, Option(e.getMessage).getOrElse("not found").getBytes(UTF_8))
-          case e: IllegalStateException =>
-            (2, Option(e.getMessage).getOrElse("conflict").getBytes(UTF_8))
-          case e: UnsupportedOperationException =>
-            (3, Option(e.getMessage).getOrElse("unsupported").getBytes(UTF_8))
           case e: Throwable =>
-            (4, s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
-              .getBytes(UTF_8))
+            val (_, status, msg) = WireError.of(e)
+            (status, msg.getBytes(UTF_8))
         }
       bytesOut.addAndGet(1L + payload.length.toLong): Unit
       out.write(status)
@@ -915,495 +585,5 @@ final class CollectionGrpcServer(storeName: String, poolSize: Int = 8,
     } catch {
       case _: java.io.IOException => // client went away; nothing to answer
     } finally sock.close()
-  }
-
-  // ---- request decode helpers (field layouts documented at the client) --
-
-  private case class ScrollReq(collection: String, from: Long, until: Long,
-                               withPayload: Boolean,
-                               vectorFields: Seq[String],
-                               idFilter: Option[Set[String]],
-                               idLower: Option[String],
-                               pfilter: PayloadFilter)
-
-  private def decodeScroll(r: PbReader): ScrollReq = {
-    var c = ""
-    var from = 0L
-    var until = 0L
-    var withPayload = false
-    val vf = Seq.newBuilder[String]
-    val ids = Set.newBuilder[String]
-    var hasIds = false
-    var lower = ""
-    var hasLower = false
-    var pf = PayloadFilter.Empty
-    while (r.hasNext) r.readTag() match {
-      case (1, _) => c = r.readString()
-      case (2, _) => from = r.readRawVarint()
-      case (3, _) => until = r.readRawVarint()
-      case (4, _) => withPayload = r.readRawVarint() != 0L
-      case (5, _) => vf += r.readString()
-      case (8, _) => ids += r.readString()
-      case (9, _) => hasIds = r.readRawVarint() != 0L
-      case (10, _) => lower = r.readString()
-      case (11, _) => hasLower = r.readRawVarint() != 0L
-      case (12, _) => pf = GrpcWire.decodeFilter(r.readMessage())
-      case (_, w) => r.skip(w)
-    }
-    ScrollReq(c, from, until, withPayload, vf.result(),
-      if (hasIds) Some(ids.result()) else None,
-      if (hasLower) Some(lower) else None, pf)
-  }
-
-  private def route(method: String, r: PbReader): PbWriter = method match {
-    case "info" =>
-      var c = ""
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (_, w) => r.skip(w)
-      }
-      GrpcWire.encodeDescriptor(store.collectionInfo(c))
-
-    case "names" =>
-      val w = new PbWriter
-      store.collectionNames.foreach(w.string(1, _))
-      w
-
-    case "count" =>
-      var c = ""
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (_, w) => r.skip(w)
-      }
-      store.collectionInfo(c): Unit // unknown collection -> not-found status
-      new PbWriter().int(1, store.pointCount(c))
-
-    case "count_filtered" =>
-      var c = ""
-      val ids = Set.newBuilder[String]
-      var hasIds = false
-      var lower = ""
-      var hasLower = false
-      var pf = PayloadFilter.Empty
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => ids += r.readString()
-        case (3, _) => hasIds = r.readRawVarint() != 0L
-        case (4, _) => lower = r.readString()
-        case (5, _) => hasLower = r.readRawVarint() != 0L
-        case (6, _) => pf = GrpcWire.decodeFilter(r.readMessage())
-        case (_, w) => r.skip(w)
-      }
-      new PbWriter().int(1, store.countMatchingFiltered(c,
-        if (hasIds) Some(ids.result()) else None,
-        if (hasLower) Some(lower) else None, pf))
-
-    case "scroll" =>
-      val q = decodeScroll(r)
-      val w = new PbWriter
-      store.queryPointsFiltered(q.collection, q.from, q.until, q.withPayload,
-          q.vectorFields, None, q.idFilter, q.idLower, q.pfilter)
-        .foreach(p => w.message(1, GrpcWire.encodePoint(p)))
-      w
-
-    case "search" =>
-      var c = ""
-      var spec: SearchSpec = null
-      var withPayload = false
-      val vf = Seq.newBuilder[String]
-      var pf = PayloadFilter.Empty
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => spec = GrpcWire.decodeSpec(r.readMessage())
-        case (3, _) => withPayload = r.readRawVarint() != 0L
-        case (4, _) => vf += r.readString()
-        case (5, _) => pf = GrpcWire.decodeFilter(r.readMessage())
-        case (_, w) => r.skip(w)
-      }
-      require(spec != null, "search requires a spec")
-      val w = new PbWriter
-      store.searchPointsFiltered(c, spec, withPayload, vf.result(), pf)
-        .foreach { case (p, s) =>
-          w.message(1, new PbWriter()
-            .message(1, GrpcWire.encodePoint(p)).double(2, s))
-        }
-      w
-
-    case "search_batch" =>
-      var c = ""
-      val specs = Seq.newBuilder[SearchSpec]
-      var withPayload = false
-      val vf = Seq.newBuilder[String]
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => specs += GrpcWire.decodeSpec(r.readMessage())
-        case (3, _) => withPayload = r.readRawVarint() != 0L
-        case (4, _) => vf += r.readString()
-        case (_, w) => r.skip(w)
-      }
-      val fields = vf.result()
-      val w = new PbWriter
-      specs.result().foreach { sp =>
-        val page = new PbWriter
-        store.searchPoints(c, sp, withPayload, fields).foreach {
-          case (p, s) => page.message(1, new PbWriter()
-            .message(1, GrpcWire.encodePoint(p)).double(2, s))
-        }
-        w.message(1, page)
-      }
-      w
-
-    case "facet" =>
-      var c = ""
-      var key = ""
-      var limit = 10
-      var pf = PayloadFilter.Empty
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => key = r.readString()
-        case (3, _) => limit = r.readRawVarint().toInt
-        case (4, _) => pf = GrpcWire.decodeFilter(r.readMessage())
-        case (_, w) => r.skip(w)
-      }
-      val w = new PbWriter
-      store.facetCounts(c, key, limit, pf).foreach { case (v, n) =>
-        w.message(1, new PbWriter().string(1, v).int(2, n))
-      }
-      w
-
-    // targeted exact facet counts — the threshold merge's second pass
-    case "facet_for" =>
-      var c = ""
-      var key = ""
-      val values = Set.newBuilder[String]
-      var pf = PayloadFilter.Empty
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => key = r.readString()
-        case (3, _) => values += r.readString()
-        case (4, _) => pf = GrpcWire.decodeFilter(r.readMessage())
-        case (_, w) => r.skip(w)
-      }
-      val w = new PbWriter
-      store.facetCountsFor(c, key, values.result(), pf)
-        .toSeq.sortBy(_._1).foreach { case (v, n) =>
-          w.message(1, new PbWriter().string(1, v).int(2, n))
-        }
-      w
-
-    // BM25-ranked full-text top-k — one framed round trip, the service
-    // reads its postings, only the k scored hits cross the wire
-    case "textrank" =>
-      var c = ""
-      var key = ""
-      var k = 10
-      var k1 = 1.2
-      var b = 0.75
-      val terms = Seq.newBuilder[String]
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => key = r.readString()
-        case (3, _) => terms += r.readString()
-        case (4, _) => k = r.readRawVarint().toInt
-        case (5, _) => k1 = r.readDouble()
-        case (6, _) => b = r.readDouble()
-        case (_, w) => r.skip(w)
-      }
-      val w = new PbWriter
-      store.searchTextRanked(c, key, terms.result(), k, k1, b)
-        .foreach { case (id, s) =>
-          w.message(1, new PbWriter().string(1, id).double(2, s))
-        }
-      w
-
-    // mergeable BM25 partials — the distributed-rank seam (a sharded
-    // wrapper sums these across members); candidate rows + stats only
-    case "textpartials" =>
-      var c = ""
-      var key = ""
-      val terms = Seq.newBuilder[String]
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => key = r.readString()
-        case (3, _) => terms += r.readString()
-        case (_, w) => r.skip(w)
-      }
-      val p = store.textRankPartials(c, key, terms.result())
-      val w = new PbWriter().int(1, p.n).int(2, p.totalLen)
-      p.dfs.foreach(w.int(3, _))
-      p.docs.foreach { case (id, tfs, dl) =>
-        val dw = new PbWriter().string(1, id)
-        tfs.foreach(dw.int(2, _))
-        dw.int(3, dl)
-        w.message(4, dw)
-      }
-      w
-
-    // phase 1 of the two-phase distributed rank: corpus stats only —
-    // a few dozen bytes cross, never candidate rows
-    case "textstats" =>
-      var c = ""
-      var key = ""
-      val terms = Seq.newBuilder[String]
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => key = r.readString()
-        case (3, _) => terms += r.readString()
-        case (_, w) => r.skip(w)
-      }
-      val st = store.textRankStats(c, key, terms.result())
-      val w = new PbWriter().int(1, st.n).int(2, st.totalLen)
-      st.dfs.foreach(w.int(3, _))
-      w
-
-    // phase 2: rank local candidates with the caller's GLOBAL stats,
-    // ship only the k winners
-    case "texttopk" =>
-      var c = ""
-      var key = ""
-      var k = 10
-      var k1 = 1.2
-      var b = 0.75
-      var n = 0L
-      var totalLen = 0L
-      val terms = Seq.newBuilder[String]
-      val dfs = Seq.newBuilder[Long]
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => key = r.readString()
-        case (3, _) => terms += r.readString()
-        case (4, _) => k = r.readRawVarint().toInt
-        case (5, _) => k1 = r.readDouble()
-        case (6, _) => b = r.readDouble()
-        case (7, _) => n = r.readRawVarint()
-        case (8, _) => totalLen = r.readRawVarint()
-        case (9, _) => dfs += r.readRawVarint()
-        case (_, w) => r.skip(w)
-      }
-      val w = new PbWriter
-      store.textRankTopK(c, key, terms.result(), k,
-          TextRankStats(n, totalLen, dfs.result().toArray), k1, b)
-        .foreach { case (id, s) =>
-          w.message(1, new PbWriter().string(1, id).double(2, s))
-        }
-      w
-
-    case "upsert" =>
-      var c = ""
-      val pts = Seq.newBuilder[Point]
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => pts += GrpcWire.decodePoint(r.readMessage())
-        case (_, w) => r.skip(w)
-      }
-      store.collectionInfo(c): Unit // 404 for unknown collections
-      val batch = pts.result()
-      CollectionStores.update(storeName) { s0 =>
-        val coll = AliasedCollectionStore.resolve(s0, c)
-        AliasedCollectionStore.mapInner(s0) {
-          case mem: InMemoryCollectionStore =>
-            mem.appended(coll, batch.sortBy(_.id).toIndexedSeq)
-          // the remote LAKEHOUSE write: the service owns the COW batch
-          // (file-granular rewrite + one log segment), the wire client
-          // only ships points — a writable cold-storage node
-          case pq: ParquetCollectionStore =>
-            pq.appended(coll, batch.sortBy(_.id).toIndexedSeq)
-          // a SHARDED (or chained-client) backend routes the batch on —
-          // the full production topology: wire -> scatter-gather -> nodes
-          case rc: RemoteCollectionClient =>
-            rc.upsertPoints(coll, batch.sortBy(_.id)); rc
-          case other => throw new UnsupportedOperationException(
-            s"store ${other.getClass.getName} does not accept upserts")
-        }
-      }
-      new PbWriter
-
-    case "delete" =>
-      var c = ""
-      val ids = Set.newBuilder[String]
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => ids += r.readString()
-        case (_, w) => r.skip(w)
-      }
-      store.collectionInfo(c): Unit
-      val idSet = ids.result()
-      CollectionStores.update(storeName) { s0 =>
-        val coll = AliasedCollectionStore.resolve(s0, c)
-        AliasedCollectionStore.mapInner(s0) {
-          case mem: InMemoryCollectionStore => mem.removed(coll, idSet)
-          case pq: ParquetCollectionStore => pq.removed(coll, idSet)
-          case rc: RemoteCollectionClient => rc.deletePoints(coll, idSet); rc
-          case other => throw new UnsupportedOperationException(
-            s"store ${other.getClass.getName} does not accept deletes")
-        }
-      }
-      new PbWriter
-
-    case "truncate" =>
-      var c = ""
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (_, w) => r.skip(w)
-      }
-      store.collectionInfo(c): Unit
-      CollectionStores.update(storeName) { s0 =>
-        val coll = AliasedCollectionStore.resolve(s0, c)
-        AliasedCollectionStore.mapInner(s0) {
-          case mem: InMemoryCollectionStore => mem.truncated(coll)
-          case pq: ParquetCollectionStore => pq.truncated(coll)
-          case rc: RemoteCollectionClient => rc.truncate(coll); rc
-          case other => throw new UnsupportedOperationException(
-            s"store ${other.getClass.getName} does not accept truncation")
-        }
-      }
-      new PbWriter
-
-    // log-lifecycle: compact the fronted store's change log up to a
-    // position — COW swap on the registry, retained positions untouched
-    case "compact" =>
-      var c = ""
-      var upTo = 0L
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => upTo = r.readRawVarint()
-        case (_, w) => r.skip(w)
-      }
-      store.collectionInfo(c): Unit
-      val upToFinal = upTo
-      CollectionStores.update(storeName) { s0 =>
-        val coll = AliasedCollectionStore.resolve(s0, c)
-        AliasedCollectionStore.mapInner(s0) {
-          case mem: InMemoryCollectionStore => mem.compacted(coll, upToFinal)
-          case pq: ParquetCollectionStore => pq.compacted(coll, upToFinal)
-          case rc: RemoteCollectionClient => rc.compact(coll, upToFinal); rc
-          case other => throw new UnsupportedOperationException(
-            s"store ${other.getClass.getName} cannot compact its log")
-        }
-      }
-      new PbWriter
-
-    // lifecycle: rebuild the fronted store's index sidecars at its log
-    // head — zero data crosses the wire; the registry swap makes the
-    // optimized store visible to the next request
-    case "optimize" =>
-      var ivfMaxIter = 0
-      while (r.hasNext) r.readTag() match {
-        case (2, _) => ivfMaxIter = r.readRawVarint().toInt
-        case (_, w) => r.skip(w)
-      }
-      val sp = StoreOptimize.serviceSpark
-      val maxIterFinal = ivfMaxIter
-      CollectionStores.update(storeName)(s0 =>
-        StoreOptimize(s0, sp, maxIterFinal))
-      new PbWriter
-
-    // lifecycle: export `collection` as a portable snapshot (parquet
-    // dataset + manifest) at a SERVICE-side path — the backend's
-    // create-snapshot API; the artifact never crosses the wire
-    case "snapshot" =>
-      var c = ""
-      var path = ""
-      var kind = ""
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => path = r.readString()
-        case (3, _) => kind = r.readString()
-        case (_, w) => r.skip(w)
-      }
-      store.collectionInfo(c): Unit
-      require(path.nonEmpty, "snapshot requires a destination path")
-      // kind=storage = the whole store tree (the operational per-node
-      // form); default = the portable points + manifest export
-      if (kind == "storage")
-        graft.collections.Snapshot.createStorage(storeName, c, path)
-      else
-        graft.collections.Snapshot.create(
-          StoreOptimize.serviceSpark, storeName, c, path)
-      new PbWriter
-
-    // recover-from-snapshot: restore a STORAGE archive under a fresh
-    // service-side dir and SWAP the backing store (registry publish —
-    // the optimize route's discipline)
-    case "snapshot_recover" =>
-      var c = ""
-      var path = ""
-      var dirTo = ""
-      var ivfNprobe = 0
-      var ivfCandidateK = 0
-      var hnswEf = 0
-      var hnswCandidateK = 0
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => path = r.readString()
-        case (3, _) => dirTo = r.readString()
-        case (4, _) => ivfNprobe = r.readRawVarint().toInt
-        case (5, _) => ivfCandidateK = r.readRawVarint().toInt
-        case (6, _) => hnswEf = r.readRawVarint().toInt
-        case (7, _) => hnswCandidateK = r.readRawVarint().toInt
-        case (_, w) => r.skip(w)
-      }
-      require(path.nonEmpty && dirTo.nonEmpty,
-        "recover requires an archive path and a restore dir")
-      graft.collections.Snapshot.restoreStorage(
-        StoreOptimize.serviceSpark, path, storeName, c, dirTo,
-        ivfNprobe, ivfCandidateK, hnswEf, hnswCandidateK): Unit
-      new PbWriter
-
-    // the DR drill over the binary wire: verify a SERVICE-side storage
-    // archive without restoring — response = repeated finding strings
-    // (field 1), EMPTY = sound
-    case "snapshot_verify" =>
-      var c = ""
-      var path = ""
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => path = r.readString()
-        case (_, w) => r.skip(w)
-      }
-      store.collectionInfo(c): Unit
-      require(path.nonEmpty, "verify requires an archive path")
-      val w = new PbWriter
-      graft.collections.Snapshot.verifyStorage(path)
-        .foreach(f => w.string(1, f))
-      w
-
-    case "log_start" =>
-      var c = ""
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (_, w) => r.skip(w)
-      }
-      new PbWriter().int(1, store.logStart(c))
-
-    case "log_size" =>
-      var c = ""
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (_, w) => r.skip(w)
-      }
-      new PbWriter().int(1, store.logSize(c))
-
-    case "log_entries" =>
-      var c = ""
-      var from = 0L
-      var until = 0L
-      while (r.hasNext) r.readTag() match {
-        case (1, _) => c = r.readString()
-        case (2, _) => from = r.readRawVarint()
-        case (3, _) => until = r.readRawVarint()
-        case (_, w) => r.skip(w)
-      }
-      val w = new PbWriter
-      store.logEntries(c, from, until).foreach { e =>
-        val m = new PbWriter().string(1, e.op)
-          .message(2, GrpcWire.encodePoint(e.point))
-        if (e.seq >= 0) m.int(3, e.seq)
-        w.message(1, m)
-      }
-      w
-
-    case other =>
-      throw new IllegalArgumentException(s"unknown method '$other'")
   }
 }

@@ -164,39 +164,47 @@ final class PbReader(buf: Array[Byte], from: Int, until: Int) {
     new PbReader(buf, s, e)
   }
 
-  def readPackedFloats(): Array[Float] = {
-    val (s, e) = readLenBounds()
-    require((e - s) % 4 == 0, "packed float run not 4-aligned")
-    val out = new Array[Float]((e - s) / 4)
+  def readPackedFloats(): Array[Float] = readMessage().floats()
+
+  def readPackedDoubles(): Array[Double] = readMessage().doubles()
+
+  def readPackedInts(): Array[Int] = readMessage().ints()
+
+  // ---- whole-slice reads: a nested reader's remaining bytes as one
+  // value; they never move the cursor, so a slice reads the same twice
+
+  def text(): String = new String(buf, pos, until - pos, UTF_8)
+
+  def floats(): Array[Float] = {
+    require((until - pos) % 4 == 0, "packed float run not 4-aligned")
+    val out = new Array[Float]((until - pos) / 4)
     var i = 0
     while (i < out.length) {
       var bits = 0
       var j = 3
-      while (j >= 0) { bits = (bits << 8) | (buf(s + i * 4 + j) & 0xff); j -= 1 }
+      while (j >= 0) { bits = (bits << 8) | (buf(pos + i * 4 + j) & 0xff); j -= 1 }
       out(i) = java.lang.Float.intBitsToFloat(bits)
       i += 1
     }
     out
   }
 
-  def readPackedDoubles(): Array[Double] = {
-    val (s, e) = readLenBounds()
-    require((e - s) % 8 == 0, "packed double run not 8-aligned")
-    val out = new Array[Double]((e - s) / 8)
+  def doubles(): Array[Double] = {
+    require((until - pos) % 8 == 0, "packed double run not 8-aligned")
+    val out = new Array[Double]((until - pos) / 8)
     var i = 0
     while (i < out.length) {
       var bits = 0L
       var j = 7
-      while (j >= 0) { bits = (bits << 8) | (buf(s + i * 8 + j) & 0xffL); j -= 1 }
+      while (j >= 0) { bits = (bits << 8) | (buf(pos + i * 8 + j) & 0xffL); j -= 1 }
       out(i) = java.lang.Double.longBitsToDouble(bits)
       i += 1
     }
     out
   }
 
-  def readPackedInts(): Array[Int] = {
-    val (s, e) = readLenBounds()
-    val sub = new PbReader(buf, s, e)
+  def ints(): Array[Int] = {
+    val sub = new PbReader(buf, pos, until)
     val out = scala.collection.mutable.ArrayBuffer.empty[Int]
     while (sub.hasNext) out += sub.readRawVarint().toInt
     out.toArray
@@ -212,4 +220,43 @@ final class PbReader(buf: Array[Byte], from: Int, until: Int) {
       require(pos + 4 <= until, "truncated fixed32"); pos += 4
     case w => throw new IllegalArgumentException(s"unsupported wire type $w")
   }
+}
+
+/** One message decoded into its fields by number, each field's values in
+  * arrival order — varints as Long, fixed64 as Double, length-delimited
+  * values as slice readers (strings, packed runs and nested messages all
+  * decode from the slice). A scalar read takes the LAST value, as
+  * protobuf does; absent fields read as their default; fixed32 fields,
+  * which no message here uses, are skipped.
+  */
+final class PbFields(r: PbReader) {
+  def this(bytes: Array[Byte]) = this(new PbReader(bytes))
+
+  private val byNumber = scala.collection.mutable.HashMap.empty[Int, Vector[Any]]
+  while (r.hasNext) {
+    val (f, w) = r.readTag()
+    val v: Any = w match {
+      case 0 => r.readRawVarint()
+      case 1 => r.readDouble()
+      case 2 => r.readMessage()
+      case _ => r.skip(w); null
+    }
+    if (v != null) byNumber(f) = byNumber.getOrElse(f, Vector.empty) :+ v
+  }
+
+  private def all[T](f: Int): Seq[T] = byNumber.getOrElse(f, Vector.empty).asInstanceOf[Seq[T]]
+
+  def has(f: Int): Boolean = byNumber.contains(f)
+  def long(f: Int, default: Long = 0L): Long = all[Long](f).lastOption.getOrElse(default)
+  def int(f: Int, default: Int = 0): Int = long(f, default.toLong).toInt
+  def bool(f: Int): Boolean = long(f) != 0L
+  def double(f: Int, default: Double = 0.0): Double =
+    all[Double](f).lastOption.getOrElse(default)
+  def longs(f: Int): Seq[Long] = all[Long](f)
+  def msgs(f: Int): Seq[PbReader] = all[PbReader](f)
+  /** The last value of a length-delimited field (an empty slice if absent). */
+  def slice(f: Int): PbReader = msgs(f).lastOption.getOrElse(new PbReader(Array.emptyByteArray))
+  def fields(f: Int): Seq[PbFields] = msgs(f).map(new PbFields(_))
+  def strs(f: Int): Seq[String] = msgs(f).map(_.text())
+  def str(f: Int, default: String = ""): String = if (has(f)) slice(f).text() else default
 }

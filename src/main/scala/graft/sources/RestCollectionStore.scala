@@ -252,55 +252,11 @@ private[sources] object CollectionWire {
       case other => throw new IllegalArgumentException(s"bad log op: $other")
     }, parsePoint(desc, v \ "point"), long(v \ "seq"))
 
-  /** A wire query: dense value array | sparse {indices, values} object
-    * | MULTI array-of-arrays (qdrant's multivector query — the MaxSim
-    * comparator). For multi, `values` carries the MEAN-POOLED rows (the
-    * candidate-stage key — [[SearchSpec.poolRows]], identical to what a
-    * client-side pool would produce) and `multi` the rows themselves.
-    */
-  final case class WireQuery(values: Array[Double],
-                             sparseIdx: Option[Array[Int]],
-                             multi: Option[Array[Array[Double]]])
-
-  def parseQueryVec(j: JValue): WireQuery = {
-    def nums(xs: List[JValue]): Array[Double] = xs.map {
-      case JDouble(d) => d
-      case JInt(i) => i.toDouble
-      case JLong(l) => l.toDouble
-      case JDecimal(d) => d.toDouble
-      case other => throw new IllegalArgumentException(s"bad query component: $other")
-    }.toArray
-    j match {
-      case JArray(xs) if xs.nonEmpty && xs.forall(_.isInstanceOf[JArray]) =>
-        val rows = xs.map { case JArray(r) => nums(r); case _ => Array.empty[Double] }
-          .toArray
-        WireQuery(SearchSpec.poolRows(rows), None, Some(rows))
-      case JArray(xs) => WireQuery(nums(xs), None, None)
-      case o: JObject =>
-        val idx = o \ "indices" match {
-          case JArray(is) => is.map {
-            case JInt(i) => i.toInt
-            case JLong(l) => l.toInt
-            case other => throw new IllegalArgumentException(s"bad sparse index: $other")
-          }.toArray
-          case other => throw new IllegalArgumentException(s"missing sparse indices: $other")
-        }
-        val vals = o \ "values" match {
-          case JArray(vs) => nums(vs)
-          case other => throw new IllegalArgumentException(s"missing sparse values: $other")
-        }
-        WireQuery(vals, Some(idx), None)
-      case other => throw new IllegalArgumentException(s"missing query vector: $other")
-    }
-  }
-
   def optLong(v: JValue): Option[Long] =
     v match { case JNothing | JNull => None; case x => Some(long(x)) }
 
   def optStr(v: JValue): Option[String] =
     v match { case JString(s) => Some(s); case _ => None }
-
-  def longOf(v: JValue): Long = long(v)
 
   /** The payload filter object on the wire — `must` / `must_not` lists
     * plus `min_should` `{min_count, conditions}`, one `{key, op, value}`
@@ -322,17 +278,10 @@ private[sources] object CollectionWire {
       }
 
   private def parseCondList(v: JValue, clause: String): Seq[PayloadCondition] =
-    v match {
-      case JArray(cs) => cs.map { c =>
-        PayloadCondition(
-          optStr(c \ "key").getOrElse(
-            throw new IllegalArgumentException(s"$clause condition missing key: $c")),
-          optStr(c \ "op").getOrElse(
-            throw new IllegalArgumentException(s"$clause condition missing op: $c")),
-          optStr(c \ "value").getOrElse(
-            throw new IllegalArgumentException(s"$clause condition missing value: $c")))
-      }
-      case _ => Nil
+    arr(v).map { c =>
+      def part(k: String) = optStr(c \ k).getOrElse(
+        throw new IllegalArgumentException(s"$clause condition missing $k: $c"))
+      PayloadCondition(part("key"), part("op"), part("value"))
     }
 
   def parseFilter(filter: JValue): PayloadFilter =
@@ -347,6 +296,351 @@ private[sources] object CollectionWire {
             .toInt,
           parseCondList(ms \ "conditions", "min_should")))
       })
+
+  // ---- verb codec ---------------------------------------------------------
+
+  import StoreVerb._
+
+  private def arr(v: JValue): List[JValue] = v match { case JArray(xs) => xs; case _ => Nil }
+  private def strs(v: JValue): List[String] = arr(v).flatMap(optStr)
+  private def jStrs(xs: Iterable[String]): JValue = JArray(xs.toList.map(JString(_)))
+  private def idSet(xs: Set[String]): JValue = jStrs(xs.toList.sorted)
+  private def jLongs(xs: Iterable[Long]): JValue = JArray(xs.toList.map(JLong(_)))
+  private def longs(v: JValue): Array[Long] = arr(v).flatMap(optLong).toArray
+  private def nums(v: JValue): Array[Double] = v match {
+    case JArray(xs) => xs.map(num).toArray
+    case other => throw new IllegalArgumentException(s"expected number array, got $other")
+  }
+  private def optNum(v: JValue): Option[Double] = v match {
+    case JDouble(_) | JInt(_) | JLong(_) | JDecimal(_) => Some(num(v))
+    case _ => None
+  }
+  private def required[T](b: JValue, k: String)(get: JValue => Option[T]): T =
+    get(b \ k).getOrElse(throw new IllegalArgumentException(s"request requires '$k'"))
+  private def reqStr(b: JValue, k: String): String = required(b, k)(optStr)
+  private def reqStrs(b: JValue, k: String): List[String] =
+    required(b, k) { case JArray(xs) => Some(xs.flatMap(optStr)); case _ => None }
+  private def intOr(b: JValue, k: String, d: Int): Int = optLong(b \ k).fold(d)(_.toInt)
+  private def status(s: String): JValue = JObject("status" -> JString(s))
+
+  /** The `filter` object: the id vocabulary (`has_id`, keyset `id_gt`)
+    * plus the payload conditions — absent when empty.
+    */
+  private def filterField(ids: Option[Set[String]], lower: Option[String],
+                          pf: PayloadFilter): List[JField] = {
+    val f = ids.toList.map(s => "has_id" -> idSet(s)) ++
+      lower.toList.map(b => "id_gt" -> (JString(b): JValue)) ++ filterJson(pf)
+    if (f.isEmpty) Nil else List("filter" -> JObject(f))
+  }
+
+  /** A query spec's head fields (query, using, limit, params) and tail
+    * fields (offset, score_threshold). A SPARSE query ships qdrant's
+    * {indices, values} object, a MULTI query the row set (the service
+    * re-pools the candidate key), dense the plain value array.
+    */
+  private def specHead(sp: SearchSpec): List[JField] = List(
+    "query" -> (sp.multiQuery match {
+      case Some(qm) => JArray(qm.toList.map(r => JArray(r.toList.map(JDouble(_)))))
+      case None => sp.sparseIndices match {
+        case Some(qi) => JObject(
+          "indices" -> JArray(qi.toList.map(i => JInt(BigInt(i)))),
+          "values" -> JArray(sp.query.toList.map(JDouble(_))))
+        case None => JArray(sp.query.toList.map(JDouble(_)))
+      }
+    }),
+    "using" -> JString(sp.field),
+    "limit" -> JInt(sp.k),
+    "params" -> JObject("metric" -> JString(sp.metric)))
+
+  private def specTail(sp: SearchSpec): List[JField] =
+    (if (sp.offset > 0) List("offset" -> (JInt(sp.offset): JValue)) else Nil) ++
+      sp.scoreThreshold.map(t => "score_threshold" -> (JDouble(t): JValue)).toList
+
+  /** Parse a query spec; a sparse or multi query defaults to `dot`. */
+  private def parseSpec(b: JValue): SearchSpec = {
+    val (values, sparse, multi) = b \ "query" match {
+      case JArray(xs) if xs.nonEmpty && xs.forall(_.isInstanceOf[JArray]) =>
+        val rows = xs.map(nums).toArray
+        (SearchSpec.poolRows(rows), None, Some(rows))
+      case q @ JArray(_) => (nums(q), None, None)
+      case o: JObject =>
+        (nums(o \ "values"), Some(nums(o \ "indices").map(_.toInt)), None)
+      case other => throw new IllegalArgumentException(s"missing query vector: $other")
+    }
+    val metric = optStr(b \ "params" \ "metric")
+      .getOrElse(if (sparse.isDefined || multi.isDefined) "dot" else "cosine")
+    SearchSpec(reqStr(b, "using"), values, metric, intOr(b, "limit", 10),
+      intOr(b, "offset", 0), optNum(b \ "score_threshold"), sparse, multi)
+  }
+
+  private def selection(wp: Boolean, vf: Seq[String]): List[JField] =
+    List("with_payload" -> JBool(wp), "with_vector" -> jStrs(vf))
+
+  private def textArgs(key: String, terms: Seq[String]): List[JField] =
+    List("key" -> JString(key), "terms" -> jStrs(terms))
+
+  private def rankDials(k: Int, k1: Double, b: Double): List[JField] =
+    List("k" -> JInt(k), "k1" -> JDouble(k1), "b" -> JDouble(b))
+
+  private def pointsOf(b: JValue, desc: CollectionDescriptor): List[Point] =
+    required(b, "points") { case JArray(ps) => Some(ps.map(parsePoint(desc, _))); case _ => None }
+
+  /** Client side: verb -> (HTTP method, path, body) — the Qdrant-shaped
+    * resource each verb lives at.
+    */
+  def request(v: StoreVerb[_]): (String, String, JValue) = {
+    def col(c: String) = s"/collections/$c"
+    def pts(c: String) = s"/collections/$c/points"
+    v match {
+      case Names() => ("GET", "/collections", JNothing)
+      case Info(c) => ("GET", col(c), JNothing)
+      case Count(c) => ("POST", pts(c) + "/count", JObject())
+      case CountFiltered(c, ids, lower, pf) =>
+        ("POST", pts(c) + "/count", JObject(filterField(ids, lower, pf)))
+      case Scroll(c, lo, hi, wp, vf, limit, ids, lower, pf) =>
+        ("POST", pts(c) + "/scroll", JObject(
+          ("range" -> JArray(List(JLong(lo), JLong(hi)))) :: selection(wp, vf) ++
+            limit.map(n => "limit" -> JInt(n)) ++ filterField(ids, lower, pf)))
+      case Search(c, spec, wp, vf, pf) =>
+        ("POST", pts(c) + "/query", JObject(specHead(spec) ++ selection(wp, vf) ++
+          filterField(None, None, pf) ++ specTail(spec)))
+      case SearchBatch(c, specs, wp, vf) =>
+        ("POST", pts(c) + "/query/batch", JObject(("searches" -> JArray(specs.toList
+          .map(sp => JObject(specHead(sp) ++ specTail(sp))))) :: selection(wp, vf)))
+      case Facet(c, key, limit, pf) =>
+        ("POST", pts(c) + "/facet", JObject(List[JField]("key" -> JString(key),
+          "limit" -> JInt(limit)) ++ filterField(None, None, pf)))
+      case FacetFor(c, key, values, pf) =>
+        ("POST", pts(c) + "/facet/values", JObject(List[JField]("key" -> JString(key),
+          "values" -> idSet(values)) ++ filterField(None, None, pf)))
+      case TextRanked(c, key, terms, k, k1, b) =>
+        ("POST", pts(c) + "/textrank", JObject(textArgs(key, terms) ++ rankDials(k, k1, b)))
+      case TextPartials(c, key, terms) =>
+        ("POST", pts(c) + "/textrank/partials", JObject(textArgs(key, terms)))
+      case TextStats(c, key, terms) =>
+        ("POST", pts(c) + "/textrank/stats", JObject(textArgs(key, terms)))
+      case TextTopK(c, key, terms, k, g, k1, b) =>
+        ("POST", pts(c) + "/textrank/topk", JObject(textArgs(key, terms) ++
+          rankDials(k, k1, b) ++ List("n" -> JLong(g.n), "total" -> JLong(g.totalLen),
+            "dfs" -> jLongs(g.dfs))))
+      case Upsert(c, ps) => ("PUT", pts(c), JObject("points" -> JArray(ps.toList.map(pointJson(_)))))
+      case Delete(c, ids) => ("POST", pts(c) + "/delete", JObject("points" -> idSet(ids)))
+      case Truncate(c) => ("POST", pts(c) + "/delete", JObject("all" -> JBool(true)))
+      case Compact(c, upTo) => ("POST", col(c) + "/log/compact", JObject("up_to" -> JLong(upTo)))
+      case Optimize(it) => ("POST", "/optimize", JObject("ivf_max_iter" -> JInt(it)))
+      case CreateSnapshot(c, path, storage) =>
+        ("POST", col(c) + "/snapshot", JObject(("path" -> JString(path)) ::
+          (if (storage) List("kind" -> JString("storage")) else Nil)))
+      case RecoverSnapshot(c, path, dir, nprobe, candK, ef, hnswK) =>
+        ("POST", col(c) + "/snapshot/recover", JObject("path" -> JString(path),
+          "dir" -> JString(dir), "ivf_nprobe" -> JInt(nprobe),
+          "ivf_candidate_k" -> JInt(candK), "hnsw_ef" -> JInt(ef),
+          "hnsw_candidate_k" -> JInt(hnswK)))
+      case VerifySnapshot(c, path) =>
+        ("POST", col(c) + "/snapshot/verify", JObject("path" -> JString(path)))
+      case LogStart(c) => ("GET", col(c) + "/log/info", JNothing)
+      case LogSize(c) => ("GET", col(c) + "/log/info", JNothing)
+      case LogEntries(c, from, until) =>
+        ("GET", col(c) + s"/log?from=$from&until=$until", JNothing)
+      case CreateCollection(desc) =>
+        ("PUT", col(desc.name), descriptorJson(desc, 0L) \ "config" \ "params")
+      case DropCollection(c) => ("DELETE", col(c), JObject())
+      case UpdateAliases(actions) =>
+        ("POST", "/collections/aliases", JObject("actions" -> JArray(actions.toList.map {
+          case AliasedCollectionStore.CreateAlias(a, c) => JObject("create_alias" ->
+            JObject("alias_name" -> JString(a), "collection_name" -> JString(c)))
+          case AliasedCollectionStore.DeleteAlias(a) =>
+            JObject("delete_alias" -> JObject("alias_name" -> JString(a)))
+        })))
+      case ListAliases(None) => ("GET", "/aliases", JNothing)
+      case ListAliases(Some(c)) => ("GET", col(c) + "/aliases", JNothing)
+      case SetPayload(c, ids, patch) => ("POST", pts(c) + "/payload",
+        JObject("payload" -> JsonMethods.parse(patch), "points" -> idSet(ids)))
+      case DeletePayload(c, ids, keys) => ("POST", pts(c) + "/payload/delete",
+        JObject("keys" -> idSet(keys), "points" -> idSet(ids)))
+      case ClearPayload(c, ids) =>
+        ("POST", pts(c) + "/payload/clear", JObject("points" -> idSet(ids)))
+      case UpdateVectors(c, ups) => ("PUT", pts(c) + "/vectors",
+        JObject("points" -> JArray(ups.toList.map(pointJson(_)))))
+      case DeleteVectors(c, ids, fields) => ("POST", pts(c) + "/vectors/delete",
+        JObject("vectors" -> idSet(fields), "points" -> idSet(ids)))
+    }
+  }
+
+  /** Service side: (HTTP method, path segments, body, query) -> verb.
+    * `store` supplies the descriptor a point body parses against and the
+    * default scroll window.
+    */
+  def decodeRequest(method: String, segs: List[String], b: JValue,
+                    query: Map[String, String], store: CollectionStore): StoreVerb[_] = {
+    def noRoute = new IllegalArgumentException(s"no route $method /${segs.mkString("/")}")
+    def param(k: String) =
+      query.getOrElse(k, throw new IllegalArgumentException(s"log requires $k=")).toLong
+    def filter = parseFilter(b \ "filter")
+    def idFilter = (b \ "filter" \ "has_id" match {
+      case JArray(vs) => Some(vs.flatMap(optStr).toSet)
+      case _ => None
+    }, optStr(b \ "filter" \ "id_gt"))
+    def wp = b \ "with_payload" == JBool(true)
+    def vf = strs(b \ "with_vector")
+    (method, segs) match {
+      case ("GET", "collections" :: Nil) => Names()
+      case ("GET", "aliases" :: Nil) => ListAliases(None)
+      case ("POST", "collections" :: "aliases" :: Nil) =>
+        UpdateAliases(required(b, "actions") { case JArray(as) => Some(as); case _ => None }
+          .map { a =>
+            (a \ "create_alias", a \ "delete_alias") match {
+              case (o: JObject, _) =>
+                AliasedCollectionStore.CreateAlias(reqStr(o, "alias_name"),
+                  reqStr(o, "collection_name"))
+              case (_, o: JObject) => AliasedCollectionStore.DeleteAlias(reqStr(o, "alias_name"))
+              case _ => throw new IllegalArgumentException(s"bad alias action: $a")
+            }
+          })
+      case ("POST", "optimize" :: Nil) => Optimize(intOr(b, "ivf_max_iter", 0))
+      case (m, "collections" :: c :: rest) => (m, rest) match {
+        case ("GET", Nil) => Info(c)
+        case ("PUT", Nil) =>
+          CreateCollection(parseDescriptor(c, JObject("config" -> JObject("params" -> b))))
+        case ("DELETE", Nil) => DropCollection(c)
+        case ("GET", "aliases" :: Nil) => ListAliases(Some(c))
+        case ("GET", "log" :: "info" :: Nil) => LogStart(c)
+        case ("GET", "log" :: Nil) => LogEntries(c, param("from"), param("until"))
+        case ("POST", "log" :: "compact" :: Nil) => Compact(c, required(b, "up_to")(optLong))
+        case ("POST", "snapshot" :: Nil) =>
+          CreateSnapshot(c, reqStr(b, "path"), optStr(b \ "kind").contains("storage"))
+        case ("POST", "snapshot" :: "recover" :: Nil) =>
+          RecoverSnapshot(c, reqStr(b, "path"), reqStr(b, "dir"),
+            intOr(b, "ivf_nprobe", 0), intOr(b, "ivf_candidate_k", 0),
+            intOr(b, "hnsw_ef", 0), intOr(b, "hnsw_candidate_k", 0))
+        case ("POST", "snapshot" :: "verify" :: Nil) => VerifySnapshot(c, reqStr(b, "path"))
+        case ("PUT", "points" :: Nil) => Upsert(c, pointsOf(b, store.collectionInfo(c)))
+        case ("PUT", "points" :: "vectors" :: Nil) =>
+          UpdateVectors(c, pointsOf(b, store.collectionInfo(c)))
+        // no filter = the metadata-hit count; with one = the backend
+        // count API's exact filtered form
+        case ("POST", "points" :: "count" :: Nil) =>
+          val (ids, lower) = idFilter
+          if (ids.isEmpty && lower.isEmpty && filter.isEmpty) Count(c)
+          else CountFiltered(c, ids, lower, filter)
+        case ("POST", "points" :: "scroll" :: Nil) =>
+          val (ids, lower) = idFilter
+          val (from, until) = b \ "range" match {
+            case JArray(lo :: hi :: Nil) => (long(lo), long(hi))
+            case _ => (0L, store.pointCount(c))
+          }
+          Scroll(c, from, until, wp, vf, optLong(b \ "limit").map(_.toInt), ids, lower, filter)
+        case ("POST", "points" :: "query" :: Nil) => Search(c, parseSpec(b), wp, vf, filter)
+        case ("POST", "points" :: "query" :: "batch" :: Nil) =>
+          SearchBatch(c, required(b, "searches") { case JArray(ss) => Some(ss); case _ => None }
+            .map(parseSpec), wp, vf)
+        case ("POST", "points" :: "facet" :: Nil) =>
+          Facet(c, reqStr(b, "key"), intOr(b, "limit", 10), filter)
+        case ("POST", "points" :: "facet" :: "values" :: Nil) =>
+          FacetFor(c, reqStr(b, "key"), reqStrs(b, "values").toSet, filter)
+        case ("POST", "points" :: "textrank" :: tail) =>
+          val (key, terms) = (reqStr(b, "key"), reqStrs(b, "terms"))
+          def dial(k: String, d: Double) = optNum(b \ k).getOrElse(d)
+          tail match {
+            case Nil => TextRanked(c, key, terms, intOr(b, "k", 10), dial("k1", 1.2), dial("b", 0.75))
+            case "partials" :: Nil => TextPartials(c, key, terms)
+            case "stats" :: Nil => TextStats(c, key, terms)
+            case "topk" :: Nil => TextTopK(c, key, terms, intOr(b, "k", 10),
+              TextRankStats(optLong(b \ "n").getOrElse(0L), optLong(b \ "total").getOrElse(0L),
+                longs(b \ "dfs")), dial("k1", 1.2), dial("b", 0.75))
+            case _ => throw noRoute
+          }
+        case ("POST", "points" :: "delete" :: Nil) =>
+          if (b \ "all" == JBool(true)) Truncate(c) else Delete(c, reqStrs(b, "points").toSet)
+        case ("POST", "points" :: "payload" :: Nil) => SetPayload(c,
+          reqStrs(b, "points").toSet, JsonMethods.compact(JsonMethods.render(b \ "payload")))
+        case ("POST", "points" :: "payload" :: "delete" :: Nil) =>
+          DeletePayload(c, reqStrs(b, "points").toSet, reqStrs(b, "keys").toSet)
+        case ("POST", "points" :: "payload" :: "clear" :: Nil) =>
+          ClearPayload(c, reqStrs(b, "points").toSet)
+        case ("POST", "points" :: "vectors" :: "delete" :: Nil) =>
+          DeleteVectors(c, reqStrs(b, "points").toSet, reqStrs(b, "vectors").toSet)
+        case _ => throw noRoute
+      }
+      case _ => throw noRoute
+    }
+  }
+
+  private def scoredJson(r: Seq[(Point, Double)]): JValue =
+    JObject("points" -> JArray(r.toList.map { case (p, s) => pointJson(p, Some(s)) }))
+
+  private def hitsJson[T](hs: Seq[(String, T)], k: String, n: String)(v: T => JValue): JValue =
+    JObject("hits" -> JArray(hs.toList.map { case (a, x) => JObject(k -> JString(a), n -> v(x)) }))
+
+  /** Service side: `v`'s result as its resource body. `more` runs a
+    * companion count the resource also carries (collection info holds the
+    * point count, log info both log bounds).
+    */
+  def encodeResult[R](v: StoreVerb[R], more: StoreVerb[Long] => Long): R => JValue = v match {
+    case Names() => names => JObject("collections" -> JArray(names.toList.map(n =>
+      JObject("name" -> JString(n)))))
+    case Info(c) => descriptorJson(_, more(Count(c)))
+    case _: Count => n => JObject("count" -> JLong(n))
+    case _: CountFiltered => n => JObject("count" -> JLong(n))
+    case LogStart(c) => n => JObject("start" -> JLong(n), "size" -> JLong(more(LogSize(c))))
+    case LogSize(c) => n => JObject("start" -> JLong(more(LogStart(c))), "size" -> JLong(n))
+    case _: Scroll => pts => JObject("points" -> JArray(pts.toList.map(pointJson(_))))
+    case _: Search => scoredJson(_)
+    case _: SearchBatch => pages => JArray(pages.toList.map(scoredJson))
+    case _: Facet => hitsJson(_, "value", "count")(JLong(_))
+    case _: FacetFor => counts => hitsJson(counts.toSeq.sortBy(_._1), "value", "count")(JLong(_))
+    case _: TextRanked => hitsJson(_, "id", "score")(JDouble(_))
+    case _: TextTopK => hitsJson(_, "id", "score")(JDouble(_))
+    case _: TextPartials => p =>
+      JObject("n" -> JLong(p.n), "total" -> JLong(p.totalLen), "dfs" -> jLongs(p.dfs),
+        "docs" -> JArray(p.docs.toList.map { case (id, tfs, dl) =>
+          JObject("id" -> JString(id), "tfs" -> jLongs(tfs), "dl" -> JLong(dl))
+        }))
+    case _: TextStats => st =>
+      JObject("n" -> JLong(st.n), "total" -> JLong(st.totalLen), "dfs" -> jLongs(st.dfs))
+    case _: VerifySnapshot => findings => JObject("findings" -> jStrs(findings))
+    case _: LogEntries => es => JObject("entries" -> JArray(es.toList.map(logEntryJson)))
+    case _: ListAliases => as => JObject("aliases" -> JArray(as.toList.map { case (a, c) =>
+      JObject("alias_name" -> JString(a), "collection_name" -> JString(c))
+    }))
+    case _: RecoverSnapshot => _ => status("recovered")
+    case _ => _ => status("completed")
+  }
+
+  /** Client side: `v`'s result from its resource body. */
+  def decodeResult[R](v: StoreVerb[R], res: JValue,
+                      desc: String => CollectionDescriptor): R = {
+    def hits[T](k: String, n: String)(get: JValue => Option[T]): List[(String, T)] =
+      arr(res \ "hits").map(h => (reqStr(h, k), required(h, n)(get)))
+    v match {
+      case Names() => arr(res \ "collections").flatMap(c => optStr(c \ "name"))
+      case Info(c) => parseDescriptor(c, res)
+      case _: Count => long(res \ "count")
+      case _: CountFiltered => long(res \ "count")
+      case _: LogStart => long(res \ "start")
+      case _: LogSize => long(res \ "size")
+      case Scroll(c, _, _, _, _, _, _, _, _) => arr(res \ "points").map(parsePoint(desc(c), _))
+      case Search(c, _, _, _, _) => arr(res \ "points").map(parseScored(desc(c), _))
+      case SearchBatch(c, _, _, _) =>
+        arr(res).map(r => arr(r \ "points").map(parseScored(desc(c), _)))
+      case _: Facet => hits("value", "count")(optLong)
+      case _: FacetFor => hits("value", "count")(optLong).toMap
+      case _: TextRanked => hits("id", "score")(optNum)
+      case _: TextTopK => hits("id", "score")(optNum)
+      case _: TextPartials =>
+        TextRankPartials(optLong(res \ "n").getOrElse(0L), optLong(res \ "total").getOrElse(0L),
+          longs(res \ "dfs"), arr(res \ "docs").map(d =>
+            (reqStr(d, "id"), longs(d \ "tfs"), optLong(d \ "dl").getOrElse(0L))))
+      case _: TextStats =>
+        TextRankStats(optLong(res \ "n").getOrElse(0L), optLong(res \ "total").getOrElse(0L),
+          longs(res \ "dfs"))
+      case _: VerifySnapshot => strs(res \ "findings")
+      case LogEntries(c, _, _) => arr(res \ "entries").map(parseLogEntry(desc(c), _))
+      case _: ListAliases => arr(res \ "aliases").flatMap(a =>
+        for (n <- optStr(a \ "alias_name"); c <- optStr(a \ "collection_name")) yield n -> c)
+      case _: Mutation => ().asInstanceOf[R]
+    }
+  }
 }
 
 /** The THIRD [[CollectionStore]] implementation: a serializable HTTP/JSON
@@ -355,77 +649,45 @@ private[sources] object CollectionWire {
   * handle dialed from a URL (/root/reference/src/table.rs:48,84). The
   * instance carries only the base URL (+ page size): executors
   * deserialize it and open their own connections, nothing tunnels
-  * through the driver.
+  * through the driver. Every verb is one request to its Qdrant-shaped
+  * resource ([[CollectionWire.request]]); the store contract above the
+  * seam is [[WireCollectionClient]]'s, shared with the binary transport.
   *
-  * Surface: scans (windowed, narrowed, id-filtered, keyset-bounded),
-  * pushed top-k search (served server-side — the scan IS the scored
-  * query, the reference's architecture), collection catalog, and the CDC
-  * log (so connector STREAMING reads run unchanged over the wire).
-  * Writes/DML are not part of the wire protocol here — the reference's
-  * own `insert_into` is `todo!()` (/root/reference/src/table.rs:186-193);
-  * the connector fails loudly, its standing contract for stores that
-  * don't accept local mutation.
-  *
-  * Scale shape: one HTTP request per `pageSize` window of the partition's
-  * row range, so a partition never buffers more than a page of JSON —
-  * the paging analog of the reference's per-partition gRPC query stream.
-  * Filters/limits ship IN the request (the server honors them before
-  * paging), so a keyset page costs O(page) transferred points at any
-  * scroll depth, same contract the in-memory seek asserts.
+  * Beyond the shared verbs this transport speaks the REST-only ones:
+  * collection DDL, aliases, and vector and payload patches.
   */
 final class RestCollectionStore(val baseUrl: String, pageSize: Int = 4096,
                                 maxRetries: Int = 3,
                                 retryBackoffMs: Long = 50L,
                                 apiKey: Option[String] = None)
-    extends CollectionStore with RemoteCollectionClient {
-  require(pageSize > 0, s"pageSize must be positive, got $pageSize")
+    extends WireCollectionClient(pageSize) {
+  import StoreVerb._
   require(maxRetries >= 0, s"maxRetries must be >= 0, got $maxRetries")
 
   @transient private lazy val http: HttpClient = HttpClient.newHttpClient()
-  // descriptor cache: parse dispatch is descriptor-keyed; one info call
-  // per (client instance, collection), not one per page
-  @transient private lazy val descCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CollectionDescriptor]()
 
   /** Every request carries the shared-secret `api-key` header when the
-    * client is keyed — qdrant's standard REST auth scheme (the
-    * reference's client authenticates the same way,
-    * /root/reference/src/test_utils.rs:119-128).
+    * client is keyed — qdrant's standard REST auth scheme, the one the
+    * reference's client uses. Reads (GETs and the read-only POSTs) retry
+    * transient failures; [[Mutation]]s never do.
     */
-  private def keyed(b: HttpRequest.Builder): HttpRequest.Builder =
-    apiKey.fold(b)(k => b.header("api-key", k))
-
-  private def get(path: String): String =
-    send(keyed(HttpRequest.newBuilder(URI.create(baseUrl + path)).GET()).build(),
-      retries = maxRetries)
-
-  /** Read-only POSTs (scroll/query/count) are idempotent — safe to retry
-    * like GETs.
-    */
-  private def post(path: String, body: JValue): String =
-    send(keyed(HttpRequest.newBuilder(URI.create(baseUrl + path))
-      .header("Content-Type", "application/json")
-      .POST(HttpRequest.BodyPublishers.ofString(JsonMethods.compact(body), UTF_8)))
-      .build(), retries = maxRetries)
-
-  /** Mutations are NEVER auto-retried: an upsert replay is id-idempotent
-    * for the sealed state but appends duplicate CDC log entries, and a
-    * delete replay double-logs tombstones — the caller (the connector's
-    * commit path) owns retry/replay semantics, exactly as it does with
-    * the local store.
-    */
-  private def mutate(method: String, path: String, body: JValue): String = {
-    val bytes = HttpRequest.BodyPublishers.ofString(JsonMethods.compact(body), UTF_8)
-    send(keyed(HttpRequest.newBuilder(URI.create(baseUrl + path))
-      .header("Content-Type", "application/json")
-      .method(method, bytes)).build(), retries = 0)
+  private[sources] def call[R](verb: StoreVerb[R]): R = {
+    val (method, path, body) = CollectionWire.request(verb)
+    val b = HttpRequest.newBuilder(URI.create(baseUrl + path))
+    apiKey.foreach(k => b.header("api-key", k))
+    if (method == "GET") b.GET()
+    else b.header("Content-Type", "application/json")
+      .method(method, HttpRequest.BodyPublishers.ofString(JsonMethods.compact(body), UTF_8))
+    val retries = verb match { case _: Mutation => 0; case _ => maxRetries }
+    CollectionWire.decodeResult(verb,
+      CollectionWire.result(send(b.build(), retries)), descriptor)
   }
 
   /** Bounded transient-failure retry: connect/transport errors and
     * gateway-style statuses (502/503/504) back off and retry up to
-    * `retries` times; every other status maps immediately. 500 stays
-    * fail-fast — this server uses it for deterministic handler errors
-    * (e.g. compacted-log replay), where a retry can only waste time.
+    * `retries` times; every other status maps immediately through
+    * [[WireError]]. 500 stays fail-fast — this server uses it for
+    * deterministic handler errors, where a retry can only waste time.
     */
   private def send(req: HttpRequest, retries: Int): String = {
     var attempt = 0
@@ -439,637 +701,79 @@ final class RestCollectionStore(val baseUrl: String, pageSize: Int = 4096,
             None
         }
       resp match {
-        case None =>
+        case Some(r) if r.statusCode() == 200 => out = r.body()
+        case Some(r) if !Set(502, 503, 504)(r.statusCode()) || attempt >= retries =>
+          val msg = CollectionWire.errorOf(r.body())
+          throw WireError.byHttp(r.statusCode()).map(_.raise(msg)).getOrElse(
+            new RuntimeException(s"collection service ${r.statusCode()} at ${req.uri()}: $msg"))
+        case _ =>
           attempt += 1
           Thread.sleep(retryBackoffMs * attempt)
-        case Some(r) => r.statusCode() match {
-          case 200 => out = r.body()
-          case 502 | 503 | 504 if attempt < retries =>
-            attempt += 1
-            Thread.sleep(retryBackoffMs * attempt)
-          // mirror the store contract's exception kinds so callers above
-          // the seam observe identical failures whichever backend is
-          // registered
-          case 401 => throw new SecurityException(CollectionWire.errorOf(r.body()))
-          case 404 => throw new IllegalArgumentException(CollectionWire.errorOf(r.body()))
-          case 409 => throw new IllegalStateException(CollectionWire.errorOf(r.body()))
-          case 501 => throw new UnsupportedOperationException(CollectionWire.errorOf(r.body()))
-          case code => throw new RuntimeException(
-            s"collection service $code at ${req.uri()}: ${CollectionWire.errorOf(r.body())}")
-        }
       }
     }
     out
   }
 
-  private def descriptor(collection: String): CollectionDescriptor =
-    descCache.computeIfAbsent(collection, c => collectionInfo(c))
-
-  override def collectionInfo(collection: String): CollectionDescriptor =
-    CollectionWire.parseDescriptor(collection,
-      CollectionWire.result(get(s"/collections/$collection")))
-
-  override def collectionNames: Seq[String] =
-    CollectionWire.result(get("/collections")) \ "collections" match {
-      case JArray(cs) => cs.flatMap(c => CollectionWire.optStr(c \ "name"))
-      case _ => Seq.empty
-    }
-
-  override def pointCount(collection: String): Long =
-    CollectionWire.longOf(
-      CollectionWire.result(post(s"/collections/$collection/points/count",
-        JObject())) \ "count")
-
-  /** Filtered count in ONE round trip (the backend's `points/count` with
-    * a filter, exact=true) — the default would scroll the narrowed slice
-    * page by page over the wire; the service answers with a single
-    * number instead.
-    */
-  override def countMatching(collection: String,
-                             idFilter: Option[Set[String]] = None,
-                             idLower: Option[String] = None): Long =
-    countMatchingFiltered(collection, idFilter, idLower, PayloadFilter.Empty)
-
-  /** Full-filter count in ONE round trip: payload `must` conditions ship
-    * in the same filter object as the id vocabulary and the SERVICE
-    * evaluates them — the count never pages points over the wire.
-    */
-  override def countMatchingFiltered(collection: String,
-                                     idFilter: Option[Set[String]] = None,
-                                     idLower: Option[String] = None,
-                                     pfilter: PayloadFilter = PayloadFilter.Empty): Long = {
-    val filter = JObject(
-      idFilter.toList.map(ids =>
-        "has_id" -> (JArray(ids.toList.sorted.map(JString(_))): JValue)) ++
-        idLower.toList.map(b => "id_gt" -> (JString(b): JValue)) ++
-        CollectionWire.filterJson(pfilter))
-    val body =
-      if (filter.obj.isEmpty) JObject()
-      else JObject(List("filter" -> (filter: JValue)))
-    CollectionWire.longOf(
-      CollectionWire.result(post(s"/collections/$collection/points/count",
-        body)) \ "count")
-  }
-
-  override def queryPoints(collection: String, from: Long, until: Long,
-                           withPayload: Boolean, vectorFields: Seq[String],
-                           limit: Option[Int],
-                           idFilter: Option[Set[String]] = None,
-                           idLower: Option[String] = None): Iterator[Point] =
-    queryPointsFiltered(collection, from, until, withPayload, vectorFields,
-      limit, idFilter, idLower, PayloadFilter.Empty)
-
-  /** Filtered scroll over the wire: payload `must` conditions ride the
-    * same per-page filter object, the SERVICE evaluates them, and only
-    * matching points cross the network — the whole reason the filter
-    * DSL exists at the protocol layer.
-    */
-  override def queryPointsFiltered(collection: String, from: Long, until: Long,
-                                   withPayload: Boolean, vectorFields: Seq[String],
-                                   limit: Option[Int],
-                                   idFilter: Option[Set[String]] = None,
-                                   idLower: Option[String] = None,
-                                   pfilter: PayloadFilter = PayloadFilter.Empty): Iterator[Point] = {
-    val desc = descriptor(collection)
-    var remaining = limit
-    def fetch(lo: Long, hi: Long, ids: Option[Set[String]]): Iterator[Point] =
-      if (remaining.exists(_ <= 0)) Iterator.empty
-      else {
-        val filter = JObject(
-          ids.toList.map(s =>
-            "has_id" -> (JArray(s.toList.sorted.map(JString(_))): JValue)) ++
-            idLower.toList.map(b => "id_gt" -> (JString(b): JValue)) ++
-            CollectionWire.filterJson(pfilter))
-        val body = JObject(List(
-          "range" -> (JArray(List(JLong(lo), JLong(hi))): JValue),
-          "with_payload" -> (JBool(withPayload): JValue),
-          "with_vector" -> (JArray(vectorFields.toList.map(JString(_))): JValue)) ++
-          remaining.map(n => "limit" -> (JInt(n): JValue)) ++
-          (if (filter.obj.isEmpty) Nil else List("filter" -> (filter: JValue))))
-        val pts = CollectionWire.result(
-          post(s"/collections/$collection/points/scroll", body)) \ "points" match {
-          case JArray(ps) => ps.map(CollectionWire.parsePoint(desc, _))
-          case _ => Nil
-        }
-        remaining = remaining.map(_ - pts.length)
-        pts.iterator
-      }
-    idFilter match {
-      // PAGED ID-FILTER (the gRPC client's twin): a full-window fetch
-      // with an id set pages over the ID SET — one request per
-      // `pageSize` ids in UTF-8 id order — never the positional loop
-      // that re-serializes the whole set each window page. Bounded
-      // requests for a reshard over a wire member; ONE request for a
-      // routed point lookup.
-      case Some(ids) if from == 0L && until >= pointCount(collection) =>
-        ids.toSeq.sortWith(SparkStringOrder.lt).grouped(pageSize)
-          .flatMap(chunk => fetch(0L, until, Some(chunk.toSet)))
-      case _ =>
-        Iterator.iterate(from)(_ + pageSize).takeWhile(_ < until)
-          .flatMap(lo => fetch(lo, math.min(lo + pageSize, until), idFilter))
-    }
-  }
-
-  override def searchPoints(collection: String, spec: SearchSpec,
-                            withPayload: Boolean,
-                            vectorFields: Seq[String]): Seq[(Point, Double)] =
-    searchPointsFiltered(collection, spec, withPayload, vectorFields,
-      PayloadFilter.Empty)
-
-  /** FILTERED search over the wire — the backend's `query_points` with
-    * both `query` and `filter`: the service restricts candidates BEFORE
-    * ranking, so k matching points come back (never a post-filtered
-    * short page) and non-matching points never cross the network.
-    */
-  override def searchPointsFiltered(collection: String, spec: SearchSpec,
-                                    withPayload: Boolean,
-                                    vectorFields: Seq[String],
-                                    pfilter: PayloadFilter): Seq[(Point, Double)] = {
-    val desc = descriptor(collection)
-    // a SPARSE spec ships qdrant's two-array query object
-    // ({indices, values}); a MULTI spec ships the row set (the service
-    // re-pools the candidate key — the MaxSim rows are the payload);
-    // dense ships the plain value array
-    val queryJson: JValue = spec.multiQuery match {
-      case Some(qm) => JArray(qm.toList.map(r =>
-        JArray(r.toList.map(JDouble(_))): JValue))
-      case None => spec.sparseIndices match {
-        case Some(qi) => JObject(
-          "indices" -> JArray(qi.toList.map(i => JInt(BigInt(i)))),
-          "values" -> JArray(spec.query.toList.map(JDouble(_))))
-        case None => JArray(spec.query.toList.map(JDouble(_)))
-      }
-    }
-    val body = JObject(List(
-      "query" -> queryJson,
-      "using" -> JString(spec.field),
-      "limit" -> JInt(spec.k),
-      "params" -> JObject("metric" -> JString(spec.metric)),
-      "with_payload" -> JBool(withPayload),
-      "with_vector" -> JArray(vectorFields.toList.map(JString(_)))) ++
-      (if (pfilter.isEmpty) Nil
-       else List("filter" -> (JObject(CollectionWire.filterJson(pfilter)): JValue))) ++
-      (if (spec.offset > 0) List("offset" -> (JInt(spec.offset): JValue)) else Nil) ++
-      spec.scoreThreshold.map(t => "score_threshold" -> (JDouble(t): JValue)).toList)
-    CollectionWire.result(
-      post(s"/collections/$collection/points/query", body)) \ "points" match {
-      case JArray(ps) => ps.map(CollectionWire.parseScored(desc, _))
-      case _ => Seq.empty
-    }
-  }
-
-  /** CREATE a collection remotely (Qdrant's `PUT /collections/{name}`):
-    * ships the descriptor's vectors/sparse config in the same wire shape
-    * [[collectionInfo]] reads back, so DDL round-trips exactly. The
-    * SERVICE owns the existence check (an existing name raises
-    * IllegalStateException — the already-exists contract the catalog
-    * maps to its SQL exception). A mutation — never auto-retried.
+  /** CREATE a collection remotely (Qdrant's `PUT /collections/{name}`),
+    * in the config shape [[collectionInfo]] reads back. The SERVICE owns
+    * the existence check (IllegalStateException = already exists).
     */
   def createCollection(desc: CollectionDescriptor): Unit = {
-    val cfg = CollectionWire.descriptorJson(desc, 0L) \ "config" \ "params"
-    CollectionWire.result(mutate("PUT", s"/collections/${desc.name}", cfg))
-    descCache.remove(desc.name)
-    ()
+    call(CreateCollection(desc))
+    forget(desc.name)
   }
 
-  /** DROP a collection remotely (Qdrant's `DELETE /collections/{name}`):
-    * returns false when the name did not exist (the catalog's dropTable
-    * contract), true when the service removed it.
-    */
+  /** DROP a collection remotely: false when the name did not exist. */
   def deleteCollection(name: String): Boolean = {
-    descCache.remove(name)
-    try {
-      CollectionWire.result(mutate("DELETE", s"/collections/$name", JObject()))
-      true
-    } catch { case _: IllegalArgumentException => false } // 404 = absent
+    forget(name)
+    try { call(DropCollection(name)); true }
+    catch { case _: IllegalArgumentException => false }
   }
 
-  /** Alias update over the wire (Qdrant's `update_aliases` surface): the
-    * batch lands atomically server-side. A mutation — never auto-retried
-    * (same contract as every write on this client).
-    */
-  def updateAliases(actions: Seq[AliasedCollectionStore.AliasAction]): Unit = {
-    val body = JObject("actions" -> JArray(actions.toList.map {
-      case AliasedCollectionStore.CreateAlias(a, c) =>
-        JObject("create_alias" -> JObject(
-          "alias_name" -> JString(a), "collection_name" -> JString(c))): JValue
-      case AliasedCollectionStore.DeleteAlias(a) =>
-        JObject("delete_alias" -> JObject("alias_name" -> JString(a))): JValue
-    }))
-    CollectionWire.result(mutate("POST", "/collections/aliases", body))
-    ()
-  }
+  /** Alias update (Qdrant's `update_aliases`): the batch lands atomically. */
+  def updateAliases(actions: Seq[AliasedCollectionStore.AliasAction]): Unit =
+    call(UpdateAliases(actions))
 
-  /** The service's alias map (alias -> collection), idempotent read. */
-  def listAliases(): Map[String, String] =
-    CollectionWire.result(get("/aliases")) \ "aliases" match {
-      case JArray(as) => as.flatMap { a =>
-        for {
-          n <- CollectionWire.optStr(a \ "alias_name")
-          c <- CollectionWire.optStr(a \ "collection_name")
-        } yield n -> c
-      }.toMap
-      case _ => Map.empty
-    }
+  /** The service's alias map (alias -> collection). */
+  def listAliases(): Map[String, String] = call(ListAliases(None)).toMap
 
-  /** Aliases pointing at ONE collection (Qdrant's per-collection alias
-    * listing), idempotent read.
-    */
+  /** Aliases pointing at ONE collection. */
   def listCollectionAliases(collection: String): Seq[String] =
-    CollectionWire.result(
-      get(s"/collections/$collection/aliases")) \ "aliases" match {
-      case JArray(as) => as.flatMap(a => CollectionWire.optStr(a \ "alias_name"))
-      case _ => Seq.empty
-    }
+    call(ListAliases(Some(collection))).map(_._1)
 
-  /** FACET over the wire (Qdrant's `points/facet` surface): the service
-    * owns the payload pass (or serves from its index) — only the
-    * (value, count) hit list crosses back, in the seam's ranking order.
+  /** The backend's set_payload: merge `patch`'s fields into the selected
+    * points' payloads server-side (only the patch and the ids cross).
     */
-  override def facetCounts(collection: String, key: String, limit: Int,
-                           pfilter: PayloadFilter = PayloadFilter.Empty): Seq[(String, Long)] = {
-    require(limit > 0, s"facet limit must be positive, got $limit")
-    val body = JObject(List("key" -> (JString(key): JValue),
-      "limit" -> (JInt(limit): JValue)) ++
-      (if (pfilter.nonEmpty)
-         List("filter" ->
-           (JObject(CollectionWire.filterJson(pfilter)): JValue)) else Nil))
-    CollectionWire.result(post(s"/collections/$collection/points/facet",
-      body)) \ "hits" match {
-      case JArray(hs) => hs.map { h =>
-        val v = CollectionWire.optStr(h \ "value").getOrElse(
-          throw new IllegalArgumentException(s"facet hit without value: $h"))
-        val n = CollectionWire.optLong(h \ "count").getOrElse(
-          throw new IllegalArgumentException(s"facet hit without count: $h"))
-        (v, n)
-      }
-      case _ => Seq.empty
-    }
-  }
+  def setPayload(collection: String, ids: Set[String], patch: String): Unit =
+    call(SetPayload(collection, ids, patch))
 
-  /** Targeted exact facet counts (the distributed threshold merge's
-    * second pass): only the asked values' (value, count) rows cross.
+  /** The backend's update_vectors: each point carries only the vector
+    * fields to replace; other fields and the payload survive.
     */
-  override def facetCountsFor(collection: String, key: String,
-                              values: Set[String],
-                              pfilter: PayloadFilter = PayloadFilter.Empty): Map[String, Long] = {
-    if (values.isEmpty) return Map.empty
-    val body = JObject(List("key" -> (JString(key): JValue),
-      "values" -> (JArray(values.toList.sorted.map(JString(_))): JValue)) ++
-      (if (pfilter.nonEmpty)
-         List("filter" ->
-           (JObject(CollectionWire.filterJson(pfilter)): JValue)) else Nil))
-    CollectionWire.result(post(s"/collections/$collection/points/facet/values",
-      body)) \ "hits" match {
-      case JArray(hs) => hs.map { h =>
-        val v = CollectionWire.optStr(h \ "value").getOrElse(
-          throw new IllegalArgumentException(s"facet hit without value: $h"))
-        val n = CollectionWire.optLong(h \ "count").getOrElse(
-          throw new IllegalArgumentException(s"facet hit without count: $h"))
-        (v, n)
-      }.toMap
-      case _ => Map.empty
-    }
-  }
+  def updateVectors(collection: String, updates: Seq[Point]): Unit =
+    call(UpdateVectors(collection, updates))
 
-  /** Ranked full-text in ONE round trip — the default would scroll the
-    * whole collection's payloads over the wire; the service reads its
-    * own postings and ships the k hits.
-    */
-  override def searchTextRanked(collection: String, key: String,
-                                terms: Seq[String], k: Int,
-                                k1: Double = 1.2,
-                                b: Double = 0.75): Seq[(String, Double)] = {
-    TextRank.validate(terms, k)
-    CollectionWire.result(post(s"/collections/$collection/points/textrank",
-      JObject("key" -> JString(key),
-        "terms" -> JArray(terms.map(JString(_)).toList),
-        "k" -> JInt(k), "k1" -> JDouble(k1), "b" -> JDouble(b)))) \ "hits" match {
-      case JArray(hs) => hs.map { h =>
-        val id = CollectionWire.optStr(h \ "id").getOrElse(
-          throw new IllegalArgumentException(s"textrank hit without id: $h"))
-        val s = h \ "score" match {
-          case JDouble(d) => d
-          case JInt(i) => i.toDouble
-          case JLong(l) => l.toDouble
-          case JDecimal(d) => d.toDouble
-          case other => throw new IllegalArgumentException(
-            s"textrank hit without score: $other")
-        }
-        (id, s)
-      }
-      case _ => Seq.empty
-    }
-  }
+  /** The backend's delete_vectors: drop named vector fields. */
+  def deleteVectors(collection: String, ids: Set[String], fields: Set[String]): Unit =
+    call(DeleteVectors(collection, ids, fields))
 
-  /** Mergeable BM25 partials in one round trip — the seam a sharded
-    * wrapper calls per member: candidate rows + stats cross, the wire
-    * service reads its own postings.
-    */
-  override def textRankPartials(collection: String, key: String,
-                                terms: Seq[String]): TextRankPartials = {
-    val r = CollectionWire.result(
-      post(s"/collections/$collection/points/textrank/partials",
-        JObject("key" -> JString(key),
-          "terms" -> JArray(terms.map(JString(_)).toList))))
-    def longsOf(v: JValue): Array[Long] = v match {
-      case JArray(xs) => xs.flatMap(CollectionWire.optLong).toArray
-      case _ => Array.empty
-    }
-    val docs = r \ "docs" match {
-      case JArray(ds) => ds.map { d =>
-        (CollectionWire.optStr(d \ "id").getOrElse(
-          throw new IllegalArgumentException(s"partial doc without id: $d")),
-          longsOf(d \ "tfs"),
-          CollectionWire.optLong(d \ "dl").getOrElse(0L))
-      }
-      case _ => Seq.empty
-    }
-    TextRankPartials(
-      CollectionWire.optLong(r \ "n").getOrElse(0L),
-      CollectionWire.optLong(r \ "total").getOrElse(0L),
-      longsOf(r \ "dfs"), docs)
-  }
+  /** The backend's delete_payload: drop named payload fields. */
+  def deletePayload(collection: String, ids: Set[String], keys: Set[String]): Unit =
+    call(DeletePayload(collection, ids, keys))
 
-  /** Phase 1 of the two-phase distributed rank: corpus stats only — a
-    * few dozen bytes cross, never candidate rows.
-    */
-  override def textRankStats(collection: String, key: String,
-                             terms: Seq[String]): TextRankStats = {
-    val r = CollectionWire.result(
-      post(s"/collections/$collection/points/textrank/stats",
-        JObject("key" -> JString(key),
-          "terms" -> JArray(terms.map(JString(_)).toList))))
-    val dfs = r \ "dfs" match {
-      case JArray(xs) => xs.flatMap(CollectionWire.optLong).toArray
-      case _ => Array.empty[Long]
-    }
-    TextRankStats(
-      CollectionWire.optLong(r \ "n").getOrElse(0L),
-      CollectionWire.optLong(r \ "total").getOrElse(0L), dfs)
-  }
-
-  /** Phase 2: the service ranks ITS candidates with the caller's GLOBAL
-    * stats — only the k scored hits cross back.
-    */
-  override def textRankTopK(collection: String, key: String,
-                            terms: Seq[String], k: Int,
-                            global: TextRankStats, k1: Double = 1.2,
-                            b: Double = 0.75): Seq[(String, Double)] = {
-    TextRank.validate(terms, k)
-    CollectionWire.result(
-      post(s"/collections/$collection/points/textrank/topk",
-        JObject("key" -> JString(key),
-          "terms" -> JArray(terms.map(JString(_)).toList),
-          "k" -> JInt(k), "k1" -> JDouble(k1), "b" -> JDouble(b),
-          "n" -> JInt(BigInt(global.n)),
-          "total" -> JInt(BigInt(global.totalLen)),
-          "dfs" -> JArray(global.dfs.toList.map(d => JInt(BigInt(d))))))) \ "hits" match {
-      case JArray(hs) => hs.map { h =>
-        val id = CollectionWire.optStr(h \ "id").getOrElse(
-          throw new IllegalArgumentException(s"texttopk hit without id: $h"))
-        val s = h \ "score" match {
-          case JDouble(d) => d
-          case JInt(i) => i.toDouble
-          case JLong(l) => l.toDouble
-          case JDecimal(d) => d.toDouble
-          case other => throw new IllegalArgumentException(
-            s"texttopk hit without score: $other")
-        }
-        (id, s)
-      }
-      case _ => Seq.empty
-    }
-  }
-
-  /** BATCHED scored queries (Qdrant's `points/query/batch` surface): N
-    * query specs answered in ONE round trip — at N queries per trip the
-    * per-request latency amortizes across the batch, the wire analog of
-    * [[graft.ops.Search.batchTopK]]'s one-pass cost shape. Results come
-    * back per spec, in spec order, each with the same ranking contract
-    * as [[searchPoints]].
-    */
-  def searchPointsBatch(collection: String, specs: Seq[SearchSpec],
-                        withPayload: Boolean,
-                        vectorFields: Seq[String]): Seq[Seq[(Point, Double)]] = {
-    val desc = descriptor(collection)
-    val body = JObject(
-      "searches" -> JArray(specs.toList.map(sp => JObject(List(
-        "query" -> (sp.sparseIndices match {
-          case Some(qi) => JObject(
-            "indices" -> JArray(qi.toList.map(i => JInt(BigInt(i)))),
-            "values" -> JArray(sp.query.toList.map(JDouble(_)))): JValue
-          case None => JArray(sp.query.toList.map(JDouble(_))): JValue
-        }),
-        "using" -> JString(sp.field),
-        "limit" -> JInt(sp.k),
-        "params" -> JObject("metric" -> JString(sp.metric))) ++
-        (if (sp.offset > 0) List("offset" -> (JInt(sp.offset): JValue)) else Nil) ++
-        sp.scoreThreshold.map(t => "score_threshold" -> (JDouble(t): JValue)).toList): JValue)),
-      "with_payload" -> JBool(withPayload),
-      "with_vector" -> JArray(vectorFields.toList.map(JString(_))))
-    CollectionWire.result(
-      post(s"/collections/$collection/points/query/batch", body)) match {
-      case JArray(results) => results.map(r => r \ "points" match {
-        case JArray(ps) => ps.map(CollectionWire.parseScored(desc, _))
-        case _ => Seq.empty[(Point, Double)]
-      })
-      case _ => Seq.empty
-    }
-  }
-
-  /** Upsert a batch of points (Qdrant's `PUT /collections/{c}/points`
-    * shape): point-id semantics server-side — an incoming id replaces the
-    * stored point, the batch lands atomically in the collection AND its
-    * change log. Called by the connector's write-commit path; each wire
-    * batch is one atomic server-side commit.
-    */
-  def upsertPoints(collection: String, pts: Seq[Point]): Unit = {
-    mutate("PUT", s"/collections/$collection/points", JObject("points" ->
-      JArray(pts.toList.map(p => CollectionWire.pointJson(p)))))
-    ()
-  }
-
-  /** Delete by point ids (Qdrant's points/delete shape); absent ids are
-    * no-ops, present ids tombstone into the change log.
-    */
-  def deletePoints(collection: String, ids: Set[String]): Unit = {
-    mutate("POST", s"/collections/$collection/points/delete", JObject("points" ->
-      JArray(ids.toList.sorted.map(JString(_)))))
-    ()
-  }
-
-  /** The backend's set_payload over the wire: merge `patch`'s fields into
-    * the selected points' payloads server-side (the service owns the RMW;
-    * only the patch and the id list cross the wire).
-    */
-  def setPayload(collection: String, ids: Set[String], patch: String): Unit = {
-    mutate("POST", s"/collections/$collection/points/payload", JObject(
-      "payload" -> JsonMethods.parse(patch),
-      "points" -> JArray(ids.toList.sorted.map(JString(_)))))
-    ()
-  }
-
-  /** The backend's update_vectors over the wire: each update point
-    * carries only the vector fields to replace; other fields and the
-    * payload survive server-side.
-    */
-  def updateVectors(collection: String, updates: Seq[Point]): Unit = {
-    mutate("PUT", s"/collections/$collection/points/vectors", JObject("points" ->
-      JArray(updates.toList.map(p => CollectionWire.pointJson(p)))))
-    ()
-  }
-
-  /** The backend's delete_vectors over the wire: drop the named vector
-    * fields from the selected points.
-    */
-  def deleteVectors(collection: String, ids: Set[String],
-                    fields: Set[String]): Unit = {
-    mutate("POST", s"/collections/$collection/points/vectors/delete", JObject(
-      "vectors" -> JArray(fields.toList.sorted.map(JString(_))),
-      "points" -> JArray(ids.toList.sorted.map(JString(_)))))
-    ()
-  }
-
-  /** The backend's delete_payload over the wire: drop the named fields
-    * from the selected points' payloads server-side.
-    */
-  def deletePayload(collection: String, ids: Set[String],
-                    keys: Set[String]): Unit = {
-    mutate("POST", s"/collections/$collection/points/payload/delete", JObject(
-      "keys" -> JArray(keys.toList.sorted.map(JString(_))),
-      "points" -> JArray(ids.toList.sorted.map(JString(_)))))
-    ()
-  }
-
-  /** The backend's clear_payload over the wire: remove the selected
-    * points' payloads entirely.
-    */
-  def clearPayload(collection: String, ids: Set[String]): Unit = {
-    mutate("POST", s"/collections/$collection/points/payload/clear", JObject(
-      "points" -> JArray(ids.toList.sorted.map(JString(_)))))
-    ()
-  }
-
-  /** Empty the collection (`DELETE FROM t` with no WHERE): the server
-    * enumerates and tombstones its own ids — they never page through the
-    * client.
-    */
-  def truncate(collection: String): Unit = {
-    mutate("POST", s"/collections/$collection/points/delete",
-      JObject("all" -> JBool(true)))
-    ()
-  }
-
-  /** Log-lifecycle over the wire: the service compacts the fronted
-    * store's change log up to `upTo` (COW swap on its registry).
-    */
-  def compact(collection: String, upTo: Long): Unit = {
-    mutate("POST", s"/collections/$collection/log/compact",
-      JObject("up_to" -> JInt(BigInt(upTo))))
-    ()
-  }
-
-  /** Trigger the SERVICE's optimizer (index sidecars resealed at the
-    * remote log head) — one verb request, zero data crosses. Not
-    * auto-retried: rebuild idempotence is the service's concern.
-    */
-  override def optimize(ivfMaxIter: Int = 0): Unit = {
-    mutate("POST", "/optimize",
-      JObject("ivf_max_iter" -> JInt(BigInt(ivfMaxIter))))
-    ()
-  }
-
-  /** Service-side snapshot of `collection` to a SERVICE-side `path`
-    * (parquet dataset + manifest) — the backend's create-snapshot API.
-    */
-  override def snapshot(collection: String, path: String): Unit = {
-    mutate("POST", s"/collections/$collection/snapshot",
-      JObject("path" -> JString(path)))
-    ()
-  }
-
-  /** Service-side STORAGE snapshot (the whole store tree — primaries,
-    * changelog, every index sidecar) at a SERVICE-side `path` — the
-    * backend's per-node snapshot form: the archive never crosses the
-    * wire, which is the point (at 100 TB it is a node-local whole-file
-    * copy; the transfer, if any, is object-store-to-object-store).
-    */
-  def snapshotStorage(collection: String, path: String): Unit = {
-    mutate("POST", s"/collections/$collection/snapshot",
-      JObject("path" -> JString(path), "kind" -> JString("storage")))
-    ()
-  }
-
-  /** Recover the service's collection from a STORAGE snapshot: the
-    * service restores the archive under `dir` and SWAPS its backing
-    * store — the backend's recover-from-snapshot API
-    * (/root/reference/tests/bin/config.yaml:198 snapshot
-    * recovery-transfer method). The restored sidecars are serve-ready:
-    * the next remote search is index-served, no rebuild. Pass the
-    * serving dials the original store used.
-    */
-  def recoverStorageSnapshot(collection: String, path: String, dir: String,
-                             ivfNprobe: Int = 0, ivfCandidateK: Int = 0,
-                             hnswEf: Int = 0, hnswCandidateK: Int = 0): Unit = {
-    mutate("POST", s"/collections/$collection/snapshot/recover",
-      JObject("path" -> JString(path), "dir" -> JString(dir),
-        "ivf_nprobe" -> JInt(BigInt(ivfNprobe)),
-        "ivf_candidate_k" -> JInt(BigInt(ivfCandidateK)),
-        "hnsw_ef" -> JInt(BigInt(hnswEf)),
-        "hnsw_candidate_k" -> JInt(BigInt(hnswCandidateK))))
-    ()
-  }
-
-  /** The DR drill over the wire: the service runs
-    * [[graft.collections.Snapshot.verifyStorage]] against a
-    * SERVICE-side archive path and ships back only the findings
-    * (EMPTY = sound) — an operator drills every node's backups without
-    * any archive leaving its node.
-    */
-  def verifyStorageSnapshot(collection: String, path: String): Seq[String] = {
-    val body = mutate("POST", s"/collections/$collection/snapshot/verify",
-      JObject("path" -> JString(path)))
-    CollectionWire.result(body) \ "findings" match {
-      case JArray(xs) => xs.collect { case JString(f) => f }
-      case _ => Nil
-    }
-  }
-
-  override def logStart(collection: String): Long =
-    CollectionWire.longOf(
-      CollectionWire.result(get(s"/collections/$collection/log/info")) \ "start")
-
-  override def logSize(collection: String): Long =
-    CollectionWire.longOf(
-      CollectionWire.result(get(s"/collections/$collection/log/info")) \ "size")
-
-  override def logEntries(collection: String, from: Long, until: Long): Iterator[LogEntry] = {
-    val desc = descriptor(collection)
-    // page like queryPoints: an epoch's entry range never buffers more
-    // than a page of JSON client-side
-    Iterator.iterate(from)(_ + pageSize).takeWhile(_ < until).flatMap { lo =>
-      val hi = math.min(lo + pageSize, until)
-      CollectionWire.result(
-        get(s"/collections/$collection/log?from=$lo&until=$hi")) \ "entries" match {
-        case JArray(es) => es.map(CollectionWire.parseLogEntry(desc, _)).iterator
-        case _ => Iterator.empty
-      }
-    }
-  }
+  /** The backend's clear_payload: remove the payloads entirely. */
+  def clearPayload(collection: String, ids: Set[String]): Unit =
+    call(ClearPayload(collection, ids))
 }
 
 /** In-process HTTP server fronting a registered [[CollectionStore]] —
   * the service side of the wire protocol (the stand-in for a live Qdrant
   * node in this offline sandbox; the CLIENT above is what a production
-  * deployment keeps). Resolves the store from [[CollectionStores]] BY
-  * NAME on every request, so catalog DDL and write commits that swap the
-  * registered store are visible to remote readers immediately.
-  *
-  * The narrowing contract is enforced server-side: the inner store's
-  * `queryPoints`/`searchPoints` already strip un-requested payload and
-  * vector fields, so un-asked-for bytes never reach the wire (asserted
-  * over raw HTTP in RestCollectionStoreSpec, not just narrated).
+  * deployment keeps). It decodes each request into a [[StoreVerb]] and
+  * hands it to [[StoreDispatch]], which resolves the store BY NAME on
+  * every request. The narrowing contract holds server-side: un-asked-for
+  * bytes never reach the wire (asserted over raw HTTP in
+  * RestCollectionStoreSpec, not just narrated).
   */
 final class CollectionHttpServer(storeName: String, poolSize: Int = 8,
                                  apiKey: Option[String] = None) {
@@ -1100,8 +804,6 @@ final class CollectionHttpServer(storeName: String, poolSize: Int = 8,
   def port: Int = server.getAddress.getPort
   def baseUrl: String = s"http://127.0.0.1:$port"
 
-  private def store: CollectionStore = CollectionStores.get(storeName)
-
   /** Shared-secret check on EVERY request when the server is keyed —
     * qdrant's `api-key` header scheme. Constant-time compare
     * (MessageDigest.isEqual), so the key is not timing-probeable.
@@ -1118,27 +820,30 @@ final class CollectionHttpServer(storeName: String, poolSize: Int = 8,
   val requestsServed = new java.util.concurrent.atomic.AtomicLong(0L)
   val bytesOut = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  private def serve[R](v: StoreVerb[R]): JValue =
+    CollectionWire.encodeResult(v, StoreDispatch(storeName, _: StoreVerb[Long]))(
+      StoreDispatch(storeName, v))
+
   private def handle(ex: HttpExchange): Unit = {
     requestsServed.incrementAndGet(): Unit
     val (code, body) =
       try {
         if (!authorized(ex))
-          (401, CollectionWire.errEnvelope(
-            "unauthorized: missing or invalid api-key header"))
-        else {
-          val segs = ex.getRequestURI.getPath.split("/").filter(_.nonEmpty).toList
-          (200, route(ex.getRequestMethod, segs, ex))
-        }
+          throw new SecurityException("unauthorized: missing or invalid api-key header")
+        val segs = ex.getRequestURI.getPath.split("/").filter(_.nonEmpty).toList
+        val raw = new String(ex.getRequestBody.readAllBytes(), UTF_8)
+        val query = Option(ex.getRequestURI.getQuery).getOrElse("").split("&")
+          .filter(_.contains("=")).map { kv =>
+            val i = kv.indexOf('=')
+            kv.substring(0, i) -> java.net.URLDecoder.decode(kv.substring(i + 1), UTF_8)
+          }.toMap
+        (200, CollectionWire.okEnvelope(serve(CollectionWire.decodeRequest(
+          ex.getRequestMethod, segs, if (raw.isEmpty) JObject() else JsonMethods.parse(raw),
+          query, CollectionStores.get(storeName)))))
       } catch {
-        case e: IllegalArgumentException =>
-          (404, CollectionWire.errEnvelope(Option(e.getMessage).getOrElse("not found")))
-        case e: IllegalStateException =>
-          (409, CollectionWire.errEnvelope(Option(e.getMessage).getOrElse("conflict")))
-        case e: UnsupportedOperationException =>
-          (501, CollectionWire.errEnvelope(Option(e.getMessage).getOrElse("unsupported")))
         case e: Throwable =>
-          (500, CollectionWire.errEnvelope(
-            s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"))
+          val (status, _, msg) = WireError.of(e)
+          (status, CollectionWire.errEnvelope(msg))
       }
     val bytes = body.getBytes(UTF_8)
     bytesOut.addAndGet(bytes.length.toLong): Unit
@@ -1147,615 +852,4 @@ final class CollectionHttpServer(storeName: String, poolSize: Int = 8,
     val os = ex.getResponseBody
     try os.write(bytes) finally os.close()
   }
-
-  private def readBody(ex: HttpExchange): JValue = {
-    val raw = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-    if (raw.isEmpty) JObject() else JsonMethods.parse(raw)
-  }
-
-  private def queryParams(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getQuery).getOrElse("").split("&")
-      .filter(_.contains("=")).map { kv =>
-        val i = kv.indexOf('=')
-        kv.substring(0, i) -> java.net.URLDecoder.decode(kv.substring(i + 1), UTF_8)
-      }.toMap
-
-  private def route(method: String, segs: List[String], ex: HttpExchange): String =
-    (method, segs) match {
-      case ("GET", "collections" :: Nil) =>
-        CollectionWire.okEnvelope(JObject("collections" -> JArray(
-          store.collectionNames.toList.map(n => JObject("name" -> JString(n))))))
-
-      // alias surface (the backend's zero-downtime swap API): one atomic
-      // batch of create/delete actions lands as one wrapper swap on the
-      // fronted store — remote readers see wholly-old or wholly-new
-      case ("POST", "collections" :: "aliases" :: Nil) =>
-        val b = readBody(ex)
-        val actions = b \ "actions" match {
-          case JArray(as) => as.map { a =>
-            (a \ "create_alias", a \ "delete_alias") match {
-              case (JObject(_), _) =>
-                AliasedCollectionStore.CreateAlias(
-                  CollectionWire.optStr(a \ "create_alias" \ "alias_name")
-                    .getOrElse(throw new IllegalArgumentException(
-                      s"create_alias requires alias_name: $a")),
-                  CollectionWire.optStr(a \ "create_alias" \ "collection_name")
-                    .getOrElse(throw new IllegalArgumentException(
-                      s"create_alias requires collection_name: $a")))
-              case (_, JObject(_)) =>
-                AliasedCollectionStore.DeleteAlias(
-                  CollectionWire.optStr(a \ "delete_alias" \ "alias_name")
-                    .getOrElse(throw new IllegalArgumentException(
-                      s"delete_alias requires alias_name: $a")))
-              case _ => throw new IllegalArgumentException(s"bad alias action: $a")
-            }
-          }
-          case other => throw new IllegalArgumentException(s"missing actions: $other")
-        }
-        AliasedCollectionStore.updateAliases(storeName, actions)
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      case ("GET", "collections" :: c :: "aliases" :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections
-        CollectionWire.okEnvelope(JObject("aliases" -> JArray(
-          AliasedCollectionStore.listAliases(storeName).toList
-            .filter(_._2 == c).sortBy(_._1)
-            .map { case (a, t) =>
-              JObject("alias_name" -> JString(a),
-                "collection_name" -> JString(t)): JValue
-            })))
-
-      case ("GET", "aliases" :: Nil) =>
-        CollectionWire.okEnvelope(JObject("aliases" -> JArray(
-          AliasedCollectionStore.listAliases(storeName).toList.sortBy(_._1)
-            .map { case (a, c) =>
-              JObject("alias_name" -> JString(a),
-                "collection_name" -> JString(c)): JValue
-            })))
-
-      // remote DDL (the backend's create/delete collection surface): the
-      // SERVICE owns the existence check inside the atomic registry
-      // update, so two concurrent remote CREATEs of one name cannot both
-      // win; the body is the same config shape collection info reads back
-      case ("PUT", "collections" :: c :: Nil) =>
-        val desc = CollectionWire.parseDescriptor(c,
-          JObject("config" -> JObject("params" -> readBody(ex))))
-        CollectionStores.update(storeName) { s0 =>
-          // DDL addresses CONCRETE names: an alias name conflicts
-          if (AliasedCollectionStore.isAlias(s0, c))
-            throw new IllegalStateException(s"'$c' is an alias")
-          AliasedCollectionStore.mapInner(s0) {
-            case mem: InMemoryCollectionStore =>
-              if (mem.collectionNames.contains(c))
-                throw new IllegalStateException(s"collection '$c' already exists")
-              mem.withCollection(c, desc)
-            case other => throw new UnsupportedOperationException(
-              s"store ${other.getClass.getName} does not accept DDL")
-          }
-        }
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      case ("DELETE", "collections" :: c :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections
-        CollectionStores.update(storeName) { s0 =>
-          // dropping VIA an alias is rejected: delete the alias, or
-          // address the concrete collection (the backend's rule)
-          if (AliasedCollectionStore.isAlias(s0, c))
-            throw new IllegalStateException(
-              s"'$c' is an alias; delete the alias or address its target")
-          AliasedCollectionStore.mapInner(s0) {
-            case mem: InMemoryCollectionStore => mem.withoutCollection(c)
-            case other => throw new UnsupportedOperationException(
-              s"store ${other.getClass.getName} does not accept DDL")
-          }
-        }
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      case ("GET", "collections" :: c :: Nil) =>
-        CollectionWire.okEnvelope(
-          CollectionWire.descriptorJson(store.collectionInfo(c), store.pointCount(c)))
-
-      case ("POST", "collections" :: c :: "points" :: "count" :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections, not a raw key error
-        val b = readBody(ex)
-        // same filter vocabulary as scroll: has_id set + keyset lower.
-        // No filter = the metadata-hit count; with one = the backend
-        // count API's exact filtered form (countMatching)
-        val ids = b \ "filter" \ "has_id" match {
-          case JArray(vs) => Some(vs.flatMap(i => CollectionWire.optStr(i)).toSet)
-          case _ => None
-        }
-        val lower = CollectionWire.optStr(b \ "filter" \ "id_gt")
-        val pf = CollectionWire.parseFilter(b \ "filter")
-        val n =
-          if (ids.isEmpty && lower.isEmpty && pf.isEmpty) store.pointCount(c)
-          else store.countMatchingFiltered(c, ids, lower, pf)
-        CollectionWire.okEnvelope(JObject("count" -> JLong(n)))
-
-      case ("POST", "collections" :: c :: "points" :: "facet" :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections
-        val b = readBody(ex)
-        val key = CollectionWire.optStr(b \ "key").getOrElse(
-          throw new IllegalArgumentException("facet requires 'key'"))
-        val limit = CollectionWire.optLong(b \ "limit").map(_.toInt).getOrElse(10)
-        val fpf = CollectionWire.parseFilter(b \ "filter")
-        CollectionWire.okEnvelope(JObject("hits" -> JArray(
-          store.facetCounts(c, key, limit, fpf).map { case (v, n) =>
-            JObject("value" -> JString(v), "count" -> JLong(n)): JValue
-          }.toList)))
-
-      // targeted exact facet counts — the threshold merge's second pass
-      case ("POST", "collections" :: c :: "points" :: "facet" :: "values" :: Nil) =>
-        store.collectionInfo(c)
-        val b = readBody(ex)
-        val key = CollectionWire.optStr(b \ "key").getOrElse(
-          throw new IllegalArgumentException("facet values require 'key'"))
-        val values = b \ "values" match {
-          case JArray(vs) => vs.flatMap(CollectionWire.optStr).toSet
-          case _ => throw new IllegalArgumentException(
-            "facet values require 'values' (array of strings)")
-        }
-        CollectionWire.okEnvelope(JObject("hits" -> JArray(
-          store.facetCountsFor(c, key, values,
-              CollectionWire.parseFilter(b \ "filter")).toSeq.sortBy(_._1)
-            .map { case (v, n) =>
-              JObject("value" -> JString(v), "count" -> JLong(n)): JValue
-            }.toList)))
-
-      // BM25-ranked full-text top-k (the ranked face of the text index):
-      // one round trip, the SERVICE reads its postings — only the k
-      // scored hits cross the wire
-      case ("POST", "collections" :: c :: "points" :: "textrank" :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections
-        val b = readBody(ex)
-        val key = CollectionWire.optStr(b \ "key").getOrElse(
-          throw new IllegalArgumentException("textrank requires 'key'"))
-        val terms = b \ "terms" match {
-          case JArray(ts) => ts.flatMap(CollectionWire.optStr)
-          case _ => throw new IllegalArgumentException(
-            "textrank requires 'terms' (array of strings)")
-        }
-        val k = CollectionWire.optLong(b \ "k").map(_.toInt).getOrElse(10)
-        def dial(v: JValue, dflt: Double): Double = v match {
-          case JDouble(d) => d
-          case JInt(i) => i.toDouble
-          case JLong(l) => l.toDouble
-          case JDecimal(d) => d.toDouble
-          case _ => dflt
-        }
-        CollectionWire.okEnvelope(JObject("hits" -> JArray(
-          store.searchTextRanked(c, key, terms, k,
-            dial(b \ "k1", 1.2), dial(b \ "b", 0.75)).map { case (id, s) =>
-            JObject("id" -> JString(id), "score" -> JDouble(s)): JValue
-          }.toList)))
-
-      // mergeable BM25 partials — the distributed-rank seam: a sharded
-      // wrapper sums these across members; only candidate rows + stats
-      // cross the wire, postings read service-side
-      case ("POST", "collections" :: c :: "points" :: "textrank" :: "partials" :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections
-        val b = readBody(ex)
-        val key = CollectionWire.optStr(b \ "key").getOrElse(
-          throw new IllegalArgumentException("textrank partials require 'key'"))
-        val terms = b \ "terms" match {
-          case JArray(ts) => ts.flatMap(CollectionWire.optStr)
-          case _ => throw new IllegalArgumentException(
-            "textrank partials require 'terms' (array of strings)")
-        }
-        val p = store.textRankPartials(c, key, terms)
-        CollectionWire.okEnvelope(JObject(
-          "n" -> JLong(p.n), "total" -> JLong(p.totalLen),
-          "dfs" -> JArray(p.dfs.map(d => JLong(d): JValue).toList),
-          "docs" -> JArray(p.docs.map { case (id, tfs, dl) =>
-            JObject("id" -> JString(id),
-              "tfs" -> JArray(tfs.map(t => JLong(t): JValue).toList),
-              "dl" -> JLong(dl)): JValue
-          }.toList)))
-
-      // phase 1 of the two-phase distributed rank: corpus stats only —
-      // a few dozen bytes cross, never candidate rows
-      case ("POST", "collections" :: c :: "points" :: "textrank" :: "stats" :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections
-        val b = readBody(ex)
-        val key = CollectionWire.optStr(b \ "key").getOrElse(
-          throw new IllegalArgumentException("textrank stats require 'key'"))
-        val terms = b \ "terms" match {
-          case JArray(ts) => ts.flatMap(CollectionWire.optStr)
-          case _ => throw new IllegalArgumentException(
-            "textrank stats require 'terms' (array of strings)")
-        }
-        val st = store.textRankStats(c, key, terms)
-        CollectionWire.okEnvelope(JObject(
-          "n" -> JLong(st.n), "total" -> JLong(st.totalLen),
-          "dfs" -> JArray(st.dfs.map(d => JLong(d): JValue).toList)))
-
-      // phase 2: rank local candidates with the caller's GLOBAL stats,
-      // ship only the k winners
-      case ("POST", "collections" :: c :: "points" :: "textrank" :: "topk" :: Nil) =>
-        store.collectionInfo(c)
-        val b = readBody(ex)
-        val key = CollectionWire.optStr(b \ "key").getOrElse(
-          throw new IllegalArgumentException("textrank topk requires 'key'"))
-        val terms = b \ "terms" match {
-          case JArray(ts) => ts.flatMap(CollectionWire.optStr)
-          case _ => throw new IllegalArgumentException(
-            "textrank topk requires 'terms' (array of strings)")
-        }
-        val k2 = CollectionWire.optLong(b \ "k").map(_.toInt).getOrElse(10)
-        def dial2(v: JValue, dflt: Double): Double = v match {
-          case JDouble(d) => d
-          case JInt(i) => i.toDouble
-          case JLong(l) => l.toDouble
-          case JDecimal(d) => d.toDouble
-          case _ => dflt
-        }
-        val dfs = b \ "dfs" match {
-          case JArray(xs) => xs.flatMap(CollectionWire.optLong).toArray
-          case _ => Array.empty[Long]
-        }
-        val global = TextRankStats(
-          CollectionWire.optLong(b \ "n").getOrElse(0L),
-          CollectionWire.optLong(b \ "total").getOrElse(0L), dfs)
-        CollectionWire.okEnvelope(JObject("hits" -> JArray(
-          store.textRankTopK(c, key, terms, k2, global,
-            dial2(b \ "k1", 1.2), dial2(b \ "b", 0.75)).map { case (id, s) =>
-            JObject("id" -> JString(id), "score" -> JDouble(s)): JValue
-          }.toList)))
-
-      case ("POST", "collections" :: c :: "points" :: "scroll" :: Nil) =>
-        val b = readBody(ex)
-        val (from, until) = b \ "range" match {
-          case JArray(lo :: hi :: Nil) =>
-            (CollectionWire.longOf(lo), CollectionWire.longOf(hi))
-          case _ => (0L, store.pointCount(c))
-        }
-        val fields = b \ "with_vector" match {
-          case JArray(fs) => fs.flatMap(f => CollectionWire.optStr(f))
-          case _ => Seq.empty
-        }
-        val idFilter = b \ "filter" \ "has_id" match {
-          case JArray(ids) => Some(ids.flatMap(i => CollectionWire.optStr(i)).toSet)
-          case _ => None
-        }
-        // payload `must` conditions evaluate HERE, server-side: the page
-        // that goes back over the wire holds matching points only
-        val pts = store.queryPointsFiltered(c, from, until,
-          b \ "with_payload" == JBool(true), fields,
-          CollectionWire.optLong(b \ "limit").map(_.toInt),
-          idFilter, CollectionWire.optStr(b \ "filter" \ "id_gt"),
-          CollectionWire.parseFilter(b \ "filter"))
-        CollectionWire.okEnvelope(JObject("points" ->
-          JArray(pts.map(p => CollectionWire.pointJson(p)).toList)))
-
-      case ("POST", "collections" :: c :: "points" :: "query" :: Nil) =>
-        val b = readBody(ex)
-        val wq = CollectionWire.parseQueryVec(b \ "query")
-        val using = CollectionWire.optStr(b \ "using").getOrElse(
-          throw new IllegalArgumentException("missing 'using' (vector field name)"))
-        val metric = CollectionWire.optStr(b \ "params" \ "metric")
-          .getOrElse(
-            if (wq.sparseIdx.isDefined || wq.multi.isDefined) "dot"
-            else "cosine")
-        val k = CollectionWire.optLong(b \ "limit").map(_.toInt).getOrElse(10)
-        val off = CollectionWire.optLong(b \ "offset").map(_.toInt).getOrElse(0)
-        val thr = b \ "score_threshold" match {
-          case JDouble(t) => Some(t)
-          case JInt(t) => Some(t.toDouble)
-          case JDecimal(t) => Some(t.toDouble)
-          case _ => None
-        }
-        val fields = b \ "with_vector" match {
-          case JArray(fs) => fs.flatMap(f => CollectionWire.optStr(f))
-          case _ => Seq.empty
-        }
-        val scored = store.searchPointsFiltered(c,
-          SearchSpec(using, wq.values, metric, k, off, thr, wq.sparseIdx,
-            wq.multi),
-          b \ "with_payload" == JBool(true), fields,
-          CollectionWire.parseFilter(b \ "filter"))
-        CollectionWire.okEnvelope(JObject("points" -> JArray(
-          scored.map { case (p, s) => CollectionWire.pointJson(p, Some(s)) }.toList)))
-
-      case ("POST", "collections" :: c :: "points" :: "query" :: "batch" :: Nil) =>
-        val b = readBody(ex)
-        val withPayload = b \ "with_payload" == JBool(true)
-        val fields = b \ "with_vector" match {
-          case JArray(fs) => fs.flatMap(f => CollectionWire.optStr(f))
-          case _ => Seq.empty
-        }
-        val searches = b \ "searches" match {
-          case JArray(ss) => ss
-          case other => throw new IllegalArgumentException(s"missing searches: $other")
-        }
-        val results = searches.map { sb =>
-          val wq = CollectionWire.parseQueryVec(sb \ "query")
-          val using = CollectionWire.optStr(sb \ "using").getOrElse(
-            throw new IllegalArgumentException("missing 'using' in batch entry"))
-          val metric = CollectionWire.optStr(sb \ "params" \ "metric")
-            .getOrElse(
-              if (wq.sparseIdx.isDefined || wq.multi.isDefined) "dot"
-              else "cosine")
-          val k = CollectionWire.optLong(sb \ "limit").map(_.toInt).getOrElse(10)
-          val off = CollectionWire.optLong(sb \ "offset").map(_.toInt).getOrElse(0)
-          val thr = sb \ "score_threshold" match {
-            case JDouble(t) => Some(t)
-            case JInt(t) => Some(t.toDouble)
-            case JDecimal(t) => Some(t.toDouble)
-            case _ => None
-          }
-          val scored = store.searchPoints(c,
-            SearchSpec(using, wq.values, metric, k, off, thr, wq.sparseIdx,
-              wq.multi),
-            withPayload, fields)
-          JObject("points" -> JArray(
-            scored.map { case (p, s) => CollectionWire.pointJson(p, Some(s)) }.toList)): JValue
-        }
-        CollectionWire.okEnvelope(JArray(results))
-
-      case ("PUT", "collections" :: c :: "points" :: Nil) =>
-        val desc = store.collectionInfo(c) // resolves through aliases
-        val pts = readBody(ex) \ "points" match {
-          case JArray(ps) => ps.map(CollectionWire.parsePoint(desc, _))
-          case other => throw new IllegalArgumentException(s"missing points: $other")
-        }
-        // one atomic RMW on the fronted store (mutation happens HERE —
-        // the client ships batches, the service owns commit atomicity);
-        // writes through an alias land on the resolved target
-        CollectionStores.update(storeName) { s0 =>
-          val coll = AliasedCollectionStore.resolve(s0, c)
-          AliasedCollectionStore.mapInner(s0) {
-            case mem: InMemoryCollectionStore =>
-              mem.appended(coll, pts.sortBy(_.id).toIndexedSeq)
-            // the remote LAKEHOUSE write (transport parity with the
-            // binary server): service-side COW batch + log segment
-            case pq: ParquetCollectionStore =>
-              pq.appended(coll, pts.sortBy(_.id).toIndexedSeq)
-            // a SHARDED (or chained-client) backend routes the batch on
-            case rc: RemoteCollectionClient =>
-              rc.upsertPoints(coll, pts.sortBy(_.id)); rc
-            case other => throw new UnsupportedOperationException(
-              s"store ${other.getClass.getName} does not accept upserts")
-          }
-        }
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      case ("PUT", "collections" :: c :: "points" :: "vectors" :: Nil) =>
-        val desc = store.collectionInfo(c)
-        val ups = readBody(ex) \ "points" match {
-          case JArray(ps) => ps.map(CollectionWire.parsePoint(desc, _))
-          case other => throw new IllegalArgumentException(
-            s"update_vectors needs a points list, got $other")
-        }
-        CollectionStores.update(storeName) { s0 =>
-          val coll = AliasedCollectionStore.resolve(s0, c)
-          AliasedCollectionStore.mapInner(s0) {
-            case mem: InMemoryCollectionStore => mem.vectorsUpdated(coll, ups)
-            case other => throw new UnsupportedOperationException(
-              s"store ${other.getClass.getName} does not accept vector updates")
-          }
-        }
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      case ("POST", "collections" :: c :: "points" :: "vectors" :: "delete" :: Nil) =>
-        store.collectionInfo(c)
-        val b = readBody(ex)
-        val fields = b \ "vectors" match {
-          case JArray(vs) => vs.flatMap(CollectionWire.optStr).toSet
-          case other => throw new IllegalArgumentException(
-            s"delete_vectors needs a vectors name list, got $other")
-        }
-        val ids = b \ "points" match {
-          case JArray(vs) => vs.flatMap(CollectionWire.optStr).toSet
-          case other => throw new IllegalArgumentException(
-            s"delete_vectors needs a points id list, got $other")
-        }
-        CollectionStores.update(storeName) { s0 =>
-          val coll = AliasedCollectionStore.resolve(s0, c)
-          AliasedCollectionStore.mapInner(s0) {
-            case mem: InMemoryCollectionStore =>
-              mem.vectorsDeleted(coll, ids, fields)
-            case other => throw new UnsupportedOperationException(
-              s"store ${other.getClass.getName} does not accept vector updates")
-          }
-        }
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      case ("POST", "collections" :: c :: "points" :: "payload" :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections
-        val b = readBody(ex)
-        val patch = JsonMethods.compact(JsonMethods.render(b \ "payload"))
-        val ids = b \ "points" match {
-          case JArray(vs) => vs.flatMap(CollectionWire.optStr).toSet
-          case other => throw new IllegalArgumentException(
-            s"set_payload needs a points id list, got $other")
-        }
-        CollectionStores.update(storeName) { s0 =>
-          val coll = AliasedCollectionStore.resolve(s0, c)
-          AliasedCollectionStore.mapInner(s0) {
-            case mem: InMemoryCollectionStore =>
-              mem.payloadPatched(coll, ids, patch)
-            case other => throw new UnsupportedOperationException(
-              s"store ${other.getClass.getName} does not accept payload patches")
-          }
-        }
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      case ("POST", "collections" :: c :: "points" :: "payload" :: "delete" :: Nil) =>
-        store.collectionInfo(c)
-        val b = readBody(ex)
-        val keys = b \ "keys" match {
-          case JArray(vs) => vs.flatMap(CollectionWire.optStr).toSet
-          case other => throw new IllegalArgumentException(
-            s"delete_payload needs a keys list, got $other")
-        }
-        val ids = b \ "points" match {
-          case JArray(vs) => vs.flatMap(CollectionWire.optStr).toSet
-          case other => throw new IllegalArgumentException(
-            s"delete_payload needs a points id list, got $other")
-        }
-        CollectionStores.update(storeName) { s0 =>
-          val coll = AliasedCollectionStore.resolve(s0, c)
-          AliasedCollectionStore.mapInner(s0) {
-            case mem: InMemoryCollectionStore =>
-              mem.payloadKeysDeleted(coll, ids, keys)
-            case other => throw new UnsupportedOperationException(
-              s"store ${other.getClass.getName} does not accept payload patches")
-          }
-        }
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      case ("POST", "collections" :: c :: "points" :: "payload" :: "clear" :: Nil) =>
-        store.collectionInfo(c)
-        val ids = readBody(ex) \ "points" match {
-          case JArray(vs) => vs.flatMap(CollectionWire.optStr).toSet
-          case other => throw new IllegalArgumentException(
-            s"clear_payload needs a points id list, got $other")
-        }
-        CollectionStores.update(storeName) { s0 =>
-          val coll = AliasedCollectionStore.resolve(s0, c)
-          AliasedCollectionStore.mapInner(s0) {
-            case mem: InMemoryCollectionStore => mem.payloadCleared(coll, ids)
-            case other => throw new UnsupportedOperationException(
-              s"store ${other.getClass.getName} does not accept payload patches")
-          }
-        }
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      case ("POST", "collections" :: c :: "points" :: "delete" :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections
-        val b = readBody(ex)
-        CollectionStores.update(storeName) { s0 =>
-          val coll = AliasedCollectionStore.resolve(s0, c)
-          AliasedCollectionStore.mapInner(s0) {
-            case mem: InMemoryCollectionStore =>
-              if (b \ "all" == JBool(true)) mem.truncated(coll)
-              else b \ "points" match {
-                case JArray(ids) =>
-                  mem.removed(coll, ids.flatMap(i => CollectionWire.optStr(i)).toSet)
-                case other => throw new IllegalArgumentException(
-                  s"points/delete requires points ids or all=true: $other")
-              }
-            case pq: ParquetCollectionStore =>
-              if (b \ "all" == JBool(true)) pq.truncated(coll)
-              else b \ "points" match {
-                case JArray(ids) =>
-                  pq.removed(coll, ids.flatMap(i => CollectionWire.optStr(i)).toSet)
-                case other => throw new IllegalArgumentException(
-                  s"points/delete requires points ids or all=true: $other")
-              }
-            case rc: RemoteCollectionClient =>
-              if (b \ "all" == JBool(true)) rc.truncate(coll)
-              else b \ "points" match {
-                case JArray(ids) =>
-                  rc.deletePoints(coll,
-                    ids.flatMap(i => CollectionWire.optStr(i)).toSet)
-                case other => throw new IllegalArgumentException(
-                  s"points/delete requires points ids or all=true: $other")
-              }
-              rc
-            case other => throw new UnsupportedOperationException(
-              s"store ${other.getClass.getName} does not accept deletes")
-          }
-        }
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      case ("GET", "collections" :: c :: "log" :: "info" :: Nil) =>
-        CollectionWire.okEnvelope(JObject(
-          "start" -> JLong(store.logStart(c)), "size" -> JLong(store.logSize(c))))
-
-      // log-lifecycle: compact the fronted store's change log up to a
-      // position — COW swap on the registry, retained positions untouched
-      case ("POST", "collections" :: c :: "log" :: "compact" :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections
-        val b = readBody(ex)
-        val upTo = CollectionWire.optLong(b \ "up_to").getOrElse(
-          throw new IllegalArgumentException("log compact requires 'up_to'"))
-        CollectionStores.update(storeName) { s0 =>
-          val coll = AliasedCollectionStore.resolve(s0, c)
-          AliasedCollectionStore.mapInner(s0) {
-            case mem: InMemoryCollectionStore => mem.compacted(coll, upTo)
-            case pq: ParquetCollectionStore => pq.compacted(coll, upTo)
-            case rc: RemoteCollectionClient => rc.compact(coll, upTo); rc
-            case other => throw new UnsupportedOperationException(
-              s"store ${other.getClass.getName} cannot compact its log")
-          }
-        }
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      // lifecycle: rebuild the fronted store's index sidecars at its
-      // log head — zero data crosses; the registry swap publishes the
-      // optimized store to the next request
-      case ("POST", "optimize" :: Nil) =>
-        val b = readBody(ex)
-        val ivfMaxIter =
-          CollectionWire.optLong(b \ "ivf_max_iter").map(_.toInt).getOrElse(0)
-        val sp = StoreOptimize.serviceSpark
-        CollectionStores.update(storeName)(s0 =>
-          StoreOptimize(s0, sp, ivfMaxIter))
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      // lifecycle: export the collection as a portable snapshot (parquet
-      // dataset + manifest) at a SERVICE-side path — the backend's
-      // create-snapshot API; the artifact never crosses the wire
-      case ("POST", "collections" :: c :: "snapshot" :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections
-        val b = readBody(ex)
-        val path = CollectionWire.optStr(b \ "path").getOrElse(
-          throw new IllegalArgumentException("snapshot requires 'path'"))
-        // kind=storage = the whole store tree (index included, the
-        // per-node operational form); default = the portable points +
-        // manifest export. Either way the artifact stays SERVICE-side.
-        CollectionWire.optStr(b \ "kind") match {
-          case Some("storage") =>
-            graft.collections.Snapshot.createStorage(storeName, c, path)
-          case _ =>
-            graft.collections.Snapshot.create(
-              StoreOptimize.serviceSpark, storeName, c, path)
-        }
-        CollectionWire.okEnvelope(JObject("status" -> JString("completed")))
-
-      // recover-from-snapshot: restore a STORAGE archive under a fresh
-      // service-side dir and SWAP the backing store — the registry
-      // publish makes the recovered (serve-ready) store visible to the
-      // next request, the optimize route's discipline
-      case ("POST", "collections" :: c :: "snapshot" :: "recover" :: Nil) =>
-        val b = readBody(ex)
-        val path = CollectionWire.optStr(b \ "path").getOrElse(
-          throw new IllegalArgumentException("recover requires 'path'"))
-        val dirTo = CollectionWire.optStr(b \ "dir").getOrElse(
-          throw new IllegalArgumentException("recover requires 'dir'"))
-        def dial(k: String): Int =
-          CollectionWire.optLong(b \ k).map(_.toInt).getOrElse(0)
-        graft.collections.Snapshot.restoreStorage(
-          StoreOptimize.serviceSpark, path, storeName, c, dirTo,
-          ivfNprobe = dial("ivf_nprobe"),
-          ivfCandidateK = dial("ivf_candidate_k"),
-          hnswEf = dial("hnsw_ef"),
-          hnswCandidateK = dial("hnsw_candidate_k")): Unit
-        CollectionWire.okEnvelope(JObject("status" -> JString("recovered")))
-
-      // the DR drill over the wire: verify a SERVICE-side storage
-      // archive without restoring it — only the verb and the findings
-      // cross (metadata-only on the node, KBs at any scale)
-      case ("POST", "collections" :: c :: "snapshot" :: "verify" :: Nil) =>
-        store.collectionInfo(c) // 404 for unknown collections
-        val b = readBody(ex)
-        val path = CollectionWire.optStr(b \ "path").getOrElse(
-          throw new IllegalArgumentException("verify requires 'path'"))
-        CollectionWire.okEnvelope(JObject("findings" -> JArray(
-          graft.collections.Snapshot.verifyStorage(path)
-            .map(f => JString(f): JValue).toList)))
-
-      case ("GET", "collections" :: c :: "log" :: Nil) =>
-        val qp = queryParams(ex)
-        val from = qp.getOrElse("from",
-          throw new IllegalArgumentException("log requires from=")).toLong
-        val until = qp.getOrElse("until",
-          throw new IllegalArgumentException("log requires until=")).toLong
-        CollectionWire.okEnvelope(JObject("entries" -> JArray(
-          store.logEntries(c, from, until).map(CollectionWire.logEntryJson).toList)))
-
-      case (m, p) =>
-        throw new IllegalArgumentException(s"no route $m /${p.mkString("/")}")
-    }
 }

@@ -355,6 +355,24 @@ class DedupSpec extends AnyFunSuite {
       s"round recurrence diverged: driver $driverRounds vs loop $loopRounds")
   }
 
+  test("connectedComponents driver arm equals the distributed loop on edges with a null id") {
+    import spark.implicits._
+    val nodes = Seq[java.lang.Long](1L, 2L, 3L, 4L, 5L, 6L, null).toDF("id")
+    // the loop's joins drop an edge with a null end; so must the driver arm
+    val edges = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, 3L), (null, 4L), (5L, null), (6L, 4L), (null, null)).toDF("a", "b")
+    def run(): Set[(Option[Long], Option[Long])] =
+      Dedup.connectedComponents(nodes, "id", edges, "a", "b").collect()
+        .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+          Option(r.get(1)).map(_.asInstanceOf[Long]))).toSet
+    val viaDriver = run()
+    spark.conf.set("graft.cc.driverMaxEdges", "0") // force the loop
+    val viaLoop = try run() finally spark.conf.unset("graft.cc.driverMaxEdges")
+    assert(viaDriver === viaLoop)
+    assert(viaDriver.collect { case (Some(i), Some(c)) => i -> c }.toMap ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 4L))
+  }
+
   test("connectedComponents with reliable checkpointing matches the local-checkpoint result") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString

@@ -64,6 +64,17 @@ class GraphSpec extends AnyFunSuite {
     assert(viaDriver == viaLoop)
   }
 
+  test("driver arm equals the distributed loop on an edge list with a null id") {
+    // a null src is its own (un-joinable) node; a null end carries no rank
+    val m = Graph.materialize(Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (null, 1L), (3L, null)).toDF("src", "dst"))
+    def run(): Seq[(Option[Long], Long)] = Graph.pageRank(m, iterations = 4).collect()
+      .map(x => (Option(x.get(0)).map(_.asInstanceOf[Long]), x.getLong(1))).toSeq.sortBy(_._1)
+    val viaDriver = run()
+    assert(viaDriver === withLoopArm(run()))
+    assert(viaDriver.map(_._1) === Seq(None, Some(1L), Some(2L), Some(3L)))
+  }
+
   test("shuffle-join arm (above the broadcast cap) is bit-identical to the broadcast arm") {
     val m = Graph.materialize(edges)
     withLoopArm {

@@ -142,6 +142,27 @@ class GrpcCollectionStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fgot === fwant)
       assert(fgot.map(_._1) === Seq("08", "09", "10", "11"))
     } finally srv.stop()
+    // the limit ships IN the scroll frame: a limit-2 scroll over the
+    // 20-point collection pulls at most 2 points out of the fronted store,
+    // so the server sends at most 2 (never a full page cut client-side)
+    val pulled = new java.util.concurrent.atomic.AtomicLong(0L)
+    CollectionStores.register("grpc_limit_spec", new CollectionStore {
+      def collectionInfo(c: String): CollectionDescriptor = inner.collectionInfo(c)
+      def pointCount(c: String): Long = inner.pointCount(c)
+      def queryPoints(c: String, from: Long, until: Long, withPayload: Boolean,
+                      vectorFields: Seq[String], limit: Option[Int],
+                      idFilter: Option[Set[String]], idLower: Option[String]): Iterator[Point] =
+        inner.queryPoints(c, from, until, withPayload, vectorFields, limit,
+          idFilter, idLower).map { p => pulled.incrementAndGet(); p }
+    })
+    val lsrv = new CollectionGrpcServer("grpc_limit_spec").start()
+    try {
+      val lcl = new GrpcCollectionStore(lsrv.host, lsrv.port)
+      assert(lcl.queryPoints("c", 0, 20, withPayload = true, allFields, Some(2))
+        .map(_.id).toSeq === Seq("000", "001"))
+      assert(pulled.get() <= 2L,
+        s"a limit-2 scroll made the server send ${pulled.get()} points")
+    } finally lsrv.stop()
   }
 
   test("paging is an enumeration-window loop: a tiny page size returns the same rows") {

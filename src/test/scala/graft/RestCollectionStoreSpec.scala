@@ -40,8 +40,9 @@ class RestCollectionStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     new CollectionHttpServer("rest_inner_spec").start()
   }
   private lazy val client = new RestCollectionStore(server.baseUrl)
+  private lazy val grpcServer = new CollectionGrpcServer("rest_inner_spec").start()
 
-  override def afterAll(): Unit = server.stop()
+  override def afterAll(): Unit = { server.stop(); grpcServer.stop() }
 
   /** Structural point form (arrays compare by reference otherwise). */
   private def key(p: Point) = (p.id, p.payload,
@@ -454,6 +455,15 @@ class RestCollectionStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       val c = new RestCollectionStore(srv.baseUrl)
       intercept[UnsupportedOperationException](c.logSize("c"))
     } finally srv.stop()
+    // the binary transport carries both error kinds the same way
+    assert(intercept[IllegalArgumentException](
+      new GrpcCollectionStore(grpcServer.host, grpcServer.port).pointCount("nope"))
+      .getMessage.contains("nope"))
+    val gsrv = new CollectionGrpcServer("rest_nolog_spec").start()
+    try {
+      intercept[UnsupportedOperationException](
+        new GrpcCollectionStore(gsrv.host, gsrv.port).logSize("c"))
+    } finally gsrv.stop()
   }
 
   test("connector scan and pushed top-k run unchanged over the REST store") {
