@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.MinHashSignature
+import graft.functions.HashKernel
 
 /** Generates DuckDB SQL that mirrors the native hash kernels
   * (ShingleKernel / MinHashSignature / SimHash64, see
@@ -1622,7 +1622,7 @@ object DuckMirror {
   private def minhashCandCtes(numHashes: Int, bands: Int, seed: Long): String = {
     require(numHashes % bands == 0)
     val r = numHashes / bands
-    val (as, bs) = MinHashSignature.coefficients(numHashes, seed)
+    val (as, bs) = HashKernel.coefficients(numHashes, seed)
     val g2 = (Golden * Golden) % M64
     val c3 = (Sh0 * Golden % M64 * Golden % M64 * Golden) % M64
     val hs = 0 until numHashes
@@ -1741,7 +1741,7 @@ object DuckMirror {
                               finalSelect: String): String = {
     require(numHashes % bands == 0)
     val r = numHashes / bands
-    val (cas, cbs) = MinHashSignature.coefficients(numHashes, seed)
+    val (cas, cbs) = HashKernel.coefficients(numHashes, seed)
     val k1 = (Sh0 * Golden) % M64
     val g2 = (Golden * Golden) % M64
     val c3 = (Sh0 * Golden % M64 * Golden % M64 * Golden) % M64

@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{
   LengthOfJsonArray, LessThan, Literal, Lower, Multiply, Pow, Sin, Size,
   Sqrt, StringSplit, Subtract, UnaryMinus}
 import org.apache.spark.sql.catalyst.expressions.variant.{ParseJson, VariantGet}
-import org.apache.spark.sql.types.{StringType, VariantType}
-import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType}
+import org.apache.spark.sql.types.{
+  BooleanType, DataType, DoubleType, LongType, StringType, StructType, VariantType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The SQL function surface as (name -> Catalyst builder) pairs — one
@@ -19,6 +19,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`spark.sql.extensions=graft.GraftExtensions`, the canonical library
   * deployment). Builders produce raw Catalyst nodes: a Column expression
   * tree cannot be re-embedded unresolved into a SQL plan.
+  *
+  * Every composed function is built HERE, once: its Column form in the
+  * `functions` package passes `Bridge.expression` of its arguments (Scala
+  * scalars as `Literal`s) to the same `private[graft]` builder, so both
+  * surfaces compute identical bits and raise the same AnalysisException.
   *
   * Mirrors the reference surface: the V_* corpus functions
   * (/root/reference/tests/bin/tests.sql) and the JSON scalar pack it
@@ -49,12 +54,13 @@ private[graft] object SqlBuilders {
       case other => other.toString
     }
 
-  private def metricOf(e: Expression, fn: String): String =
-    litString(e, fn, "metric").toLowerCase
-
-  private def distanceExpr(a: Expression, b: Expression, metric: String,
-                           fn: String): Expression =
-    metric match {
+  /** V_DISTANCE(a, b, 'metric') — 'cosine' is the cosine DISTANCE
+    * (1 - similarity), 'dot' the negated dot product. The metric must be a
+    * foldable string literal, as in the reference corpus.
+    */
+  private[graft] def distance(a: Expression, b: Expression, metric: Expression,
+                              fn: String = "v_distance"): Expression =
+    litString(metric, fn, "metric").toLowerCase match {
       case "cosine" => Subtract(Literal(1.0), CosineSimilarity(a, b))
       case "dot"    => UnaryMinus(DotProduct(a, b))
       case "euclid" | "euclidean" | "l2" => EuclideanDistance(a, b)
@@ -63,19 +69,38 @@ private[graft] object SqlBuilders {
         Map("errorMessage" -> s"$fn: unknown metric '$m' (cosine|dot|euclid|manhattan)"))
     }
 
-  // V_DISTANCE(a, b, 'metric') / V_WITHIN(a, b, r[, 'metric']): the metric
-  // must be a foldable string literal, as in the reference corpus.
+  /** V_WITHIN(a, b, r[, 'metric']): distance < r, euclid by default. */
+  private[graft] def within(a: Expression, b: Expression, r: Expression,
+                            metric: Option[Expression]): Expression =
+    LessThan(
+      metric.fold[Expression](EuclideanDistance(a, b))(distance(a, b, _, "v_within")),
+      Literal(litString(r, "v_within", "radius").toDouble))
+
+  /** Gaussian decay exp(-ln2 * (dist/scale)^2), = 0.5 at dist = scale
+    * (V_GAUSS_DECAY, tests.sql:294-300). The decay family shares the
+    * midpoint-0.5 convention: decay(scale) = 0.5, decay(0) = 1.
+    */
+  private[graft] def gaussDecay(dist: Expression, scale: Expression): Expression =
+    Exp(Multiply(Literal(-math.log(2.0)), Pow(Divide(dist, scale), Two)))
+
+  /** Exponential decay exp(-ln2 * |x| / scale), the product first — the
+    * same left-to-right order as the DuckDB oracle's formula.
+    */
+  private[graft] def expDecay(dist: Expression, scale: Expression): Expression =
+    Exp(Divide(Multiply(Literal(-math.log(2.0)), Abs(dist)), scale))
+
+  /** Linear decay max(0, 1 - |x| / (2*scale)), exactly 0 from 2*scale on. */
+  private[graft] def linDecay(dist: Expression, scale: Expression): Expression =
+    Greatest(Seq(Literal(0.0), Subtract(Literal(1.0), Divide(Abs(dist), Multiply(Two, scale)))))
+
   private def pathOf(keys: Seq[Expression], fn: String): Expression =
-    Literal(UTF8String.fromString(
-      "$." + keys.map(k => litString(k, fn, "JSON key")).mkString(".")))
+    Literal("$." + keys.map(k => litString(k, fn, "JSON key")).mkString("."))
 
   private val Deg2Rad = Literal(math.Pi / 180.0)
   private val Two = Literal(2.0)
 
-  /** Haversine meters; term-for-term the same float ops as the Scala-side
-    * `functions.v_geo_distance` so both paths produce identical bits.
-    */
-  private def geoDistance(es: Seq[Expression]): Expression = {
+  /** Haversine meters between (lat1, lon1) and (lat2, lon2) in degrees. */
+  private[graft] def geoDistance(es: Seq[Expression]): Expression = {
     val (lat1, lon1, lat2, lon2) = (es(0), es(1), es(2), es(3))
     val dLat = Multiply(Subtract(lat2, lat1), Deg2Rad)
     val dLon = Multiply(Subtract(lon2, lon1), Deg2Rad)
@@ -98,11 +123,11 @@ private[graft] object SqlBuilders {
         Map("errorMessage" ->
           "v_geo_distance: cannot type its point argument; use the 4-scalar form"))
     e.dataType match {
-      case _: org.apache.spark.sql.types.StructType => Seq(
+      case _: StructType => Seq(
         GetStructField(e, 0, Some("lat")), GetStructField(e, 1, Some("lon")))
       case StringType => Seq(
-        Cast(GetJsonObject(e, Literal(UTF8String.fromString("$.lat"))), DoubleType),
-        Cast(GetJsonObject(e, Literal(UTF8String.fromString("$.lon"))), DoubleType))
+        Cast(GetJsonObject(e, Literal("$.lat")), DoubleType),
+        Cast(GetJsonObject(e, Literal("$.lon")), DoubleType))
       case other => throw new AnalysisException("USER_RAISED_EXCEPTION",
         Map("errorMessage" ->
           ("v_geo_distance expects POINT structs, JSON location objects, or " +
@@ -110,10 +135,10 @@ private[graft] object SqlBuilders {
     }
   }
 
-  /** MATCH_TEXT(text, 'query'): fraction of distinct query terms present —
-    * same tokenization as Scala-side `functions.match_text`.
+  /** MATCH_TEXT(text, 'query'): fraction of distinct query terms present
+    * in the text (lowercase whitespace tokens; tests.sql:210-214).
     */
-  private def matchText(text: Expression, query: Expression): Expression = {
+  private[graft] def matchText(text: Expression, query: Expression): Expression = {
     val terms = litString(query, "match_text", "query")
       .toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.toIndexedSeq
     if (terms.isEmpty)
@@ -121,10 +146,32 @@ private[graft] object SqlBuilders {
         Map("errorMessage" ->
           "match_text expects a query with at least one term, got an empty/whitespace-only literal"))
     val toks = ArrayDistinct(StringSplit(Lower(text), Literal("\\s+"), Literal(-1)))
-    val hits = Size(ArrayIntersect(toks,
-      CreateArray(terms.map(t => Literal(UTF8String.fromString(t), org.apache.spark.sql.types.StringType)))))
+    val hits = Size(ArrayIntersect(toks, CreateArray(terms.map(t => Literal(t)))))
     Divide(Cast(hits, DoubleType), Literal(terms.length.toDouble))
   }
+
+  /** json_get and its typed aliases: the value at the key path as text. */
+  private[graft] def jsonGet(json: Expression, keys: Seq[Expression], fn: String): Expression =
+    GetJsonObject(json, pathOf(keys, fn))
+
+  /** The typed json_get aliases: the text cast to `dt`. */
+  private[graft] def jsonGetAs(json: Expression, keys: Seq[Expression], dt: DataType,
+                               fn: String): Expression =
+    Cast(jsonGet(json, keys, fn), dt)
+
+  /** Array element count OR object key count at the key path (the
+    * reference json pack's dual semantics, registered in its src/udfs.rs:13-16:
+    * LengthOfJsonArray is NULL on an object, Size(JsonObjectKeys) is NULL
+    * on an array); scalars stay NULL under each. No keys = whole document.
+    */
+  private[graft] def jsonLength(json: Expression, keys: Seq[Expression]): Expression = {
+    val j = if (keys.nonEmpty) jsonGet(json, keys, "json_length") else json
+    Coalesce(Seq(LengthOfJsonArray(j), new Size(JsonObjectKeys(j))))
+  }
+
+  /** HAS_FIELD(payload, 'key'): key existence (tests.sql:203-207). */
+  private[graft] def hasField(json: Expression, keys: Seq[Expression]): Expression =
+    IsNotNull(jsonGet(json, keys, "has_field"))
 
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "v_dot" -> (es => DotProduct(es(0), es(1))),
@@ -138,22 +185,11 @@ private[graft] object SqlBuilders {
     "char_entropy" -> (es => CharEntropy(es(0))),
     "nfc_normalize" -> (es => NfcNormalize(es(0))),
     "strip_accents" -> (es => StripAccents(es(0))),
-    "v_distance" -> (es =>
-      distanceExpr(es(0), es(1), metricOf(es(2), "v_distance"), "v_distance")),
-    "v_within" -> (es => LessThan(
-      distanceExpr(es(0), es(1),
-        if (es.length > 3) metricOf(es(3), "v_within") else "euclid", "v_within"),
-      Literal(litString(es(2), "v_within", "radius").toDouble))),
-    "v_gauss_decay" -> (es =>
-      Exp(Multiply(Literal(-math.log(2.0)), Pow(Divide(es(0), es(1)), Two)))),
-    // the other two decay kernels of the backend's formula-query family
-    // (gauss_decay / exp_decay / lin_decay share the midpoint-0.5
-    // convention: decay(scale) = 0.5, decay(0) = 1)
-    "v_exp_decay" -> (es =>
-      Exp(Multiply(Literal(-math.log(2.0)), Divide(Abs(es(0)), es(1))))),
-    "v_lin_decay" -> (es =>
-      Greatest(Seq(Literal(0.0),
-        Subtract(Literal(1.0), Divide(Abs(es(0)), Multiply(Two, es(1))))))),
+    "v_distance" -> (es => distance(es(0), es(1), es(2))),
+    "v_within" -> (es => within(es(0), es(1), es(2), es.lift(3))),
+    "v_gauss_decay" -> (es => gaussDecay(es(0), es(1))),
+    "v_exp_decay" -> (es => expDecay(es(0), es(1))),
+    "v_lin_decay" -> (es => linDecay(es(0), es(1))),
     // 4-scalar form, or the corpus's two-point form (tests.sql:295-299)
     // where each point is a POINT(...) struct OR a JSON location object
     // (payload->'geo'->'location' = {"lat":..,"lon":..})
@@ -161,27 +197,15 @@ private[graft] object SqlBuilders {
       if (es.length >= 4) geoDistance(es)
       else geoDistance(latLonOf(es(0)) ++ latLonOf(es(1)))),
     // POINT(lat, lon) constructor literal (tests.sql:298)
-    "point" -> (es => CreateNamedStruct(Seq(
-      Literal(UTF8String.fromString("lat"), org.apache.spark.sql.types.StringType), es(0),
-      Literal(UTF8String.fromString("lon"), org.apache.spark.sql.types.StringType), es(1)))),
+    "point" -> (es => CreateNamedStruct(Seq(Literal("lat"), es(0), Literal("lon"), es(1)))),
     "match_text" -> (es => matchText(es(0), es(1))),
     // JSON pack aliases (SURVEY §2.D): json_get(j,'k'), typed gets, has_field
-    "json_get" -> (es => GetJsonObject(es.head, pathOf(es.tail, "json_get"))),
-    "json_get_str" -> (es => GetJsonObject(es.head, pathOf(es.tail, "json_get_str"))),
-    "json_get_int" -> (es => Cast(GetJsonObject(es.head, pathOf(es.tail, "json_get_int")), LongType)),
-    "json_get_float" -> (es => Cast(GetJsonObject(es.head, pathOf(es.tail, "json_get_float")), DoubleType)),
-    "json_get_bool" -> (es => Cast(GetJsonObject(es.head, pathOf(es.tail, "json_get_bool")), BooleanType)),
-    // the reference's json pack counts BOTH array elements and object keys
-    // (datafusion-functions-json json_length, registered wholesale at
-    // /root/reference/src/udfs.rs:13-16): LengthOfJsonArray is NULL on an
-    // object, Size(JsonObjectKeys) is NULL on an array — the coalesce
-    // covers both forms; scalars stay NULL under each, as in the pack
-    "json_length" -> (es => {
-      val j =
-        if (es.length > 1) GetJsonObject(es.head, pathOf(es.tail, "json_length"))
-        else es.head
-      Coalesce(Seq(LengthOfJsonArray(j), new Size(JsonObjectKeys(j))))
-    }),
+    "json_get" -> (es => jsonGet(es.head, es.tail, "json_get")),
+    "json_get_str" -> (es => jsonGet(es.head, es.tail, "json_get_str")),
+    "json_get_int" -> (es => jsonGetAs(es.head, es.tail, LongType, "json_get_int")),
+    "json_get_float" -> (es => jsonGetAs(es.head, es.tail, DoubleType, "json_get_float")),
+    "json_get_bool" -> (es => jsonGetAs(es.head, es.tail, BooleanType, "json_get_bool")),
+    "json_length" -> (es => jsonLength(es.head, es.tail)),
     "json_object_keys" -> (es => JsonObjectKeys(es.head)),
     // remaining json-pack aliases (udfs.rs:13-16 registers them wholesale):
     // json_get_json keeps JSON quoting/typing (variant round-trip — a
@@ -192,15 +216,14 @@ private[graft] object SqlBuilders {
       org.apache.spark.sql.catalyst.expressions.StructsToJson(Map.empty,
         VariantGet(ParseJson(es.head, failOnError = false),
           pathOf(es.tail, "json_get_json"), VariantType, failOnError = false, None))),
-    "json_as_text" -> (es => GetJsonObject(es.head, pathOf(es.tail, "json_as_text"))),
+    "json_as_text" -> (es => jsonGet(es.head, es.tail, "json_as_text")),
     "json_contains" -> (es => {
       val keys = es.tail
       val parent =
         if (keys.length <= 1) es.head
         else GetJsonObject(es.head, pathOf(keys.init, "json_contains"))
-      val last = Literal(UTF8String.fromString(
-        litString(keys.last, "json_contains", "JSON key")), StringType)
+      val last = Literal(litString(keys.last, "json_contains", "JSON key"))
       Coalesce(Seq(ArrayContains(JsonObjectKeys(parent), last), Literal(false)))
     }),
-    "has_field" -> (es => IsNotNull(GetJsonObject(es.head, pathOf(es.tail, "has_field")))))
+    "has_field" -> (es => hasField(es.head, es.tail)))
 }

@@ -33,13 +33,10 @@ case class VectorAvg(
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "v_avg"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"v_avg expects array<float>/array<double>, got ${dt.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VecExprUtil.checkVecs(Seq(child), prettyName)
 
-  @transient private lazy val get = VecExprUtil.getter(child.dataType)
+  @transient private lazy val isFloat = VecExprUtil.isFloatVec(child.dataType)
 
   override def createAggregationBuffer(): VectorAvg.Buffer = new VectorAvg.Buffer()
 
@@ -50,7 +47,7 @@ case class VectorAvg(
       val n = arr.numElements()
       buf.ensure(n)
       var i = 0
-      while (i < n) { buf.sums(i) += get(arr, i); i += 1 }
+      while (i < n) { buf.sums(i) += VecKernel.at(arr, i, isFloat); i += 1 }
       buf.count += 1
     }
     buf

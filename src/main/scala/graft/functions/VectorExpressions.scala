@@ -1,10 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the dense/sparse/multi-vector kernels.
   *
@@ -15,9 +17,18 @@ import org.apache.spark.sql.types._
   * kernels as codegen-capable expressions so they stay inside whole-stage
   * codegen (no UDF boxing) — the difference between viable and not at 100 TB.
   *
-  * All kernels accumulate in `double` regardless of input element width, and
-  * accept `array<float>` or `array<double>` children without an up-front cast
-  * (the accessor is specialized at codegen time).
+  * One shape for every kernel: the algorithm lives in ONE static method of
+  * a standalone `*Kernel` object (standalone, because Scala emits the static
+  * forwarders generated Java calls only for objects without a companion
+  * class); the expression is a type check, a one-line `nullSafeEval` and a
+  * one-line `doGenCode`, both calling that method, with constants passed as
+  * Java literals or `ctx.addReferenceObj` references. Interpreted and
+  * compiled evaluation therefore cannot drift (pinned by KernelParitySpec).
+  *
+  * All vector kernels accumulate in `double` regardless of input element
+  * width, and accept `array<float>` or `array<double>` children without an
+  * up-front cast: the element width travels to the kernel as one `isFloat`
+  * flag per side, so the two sides of one call may differ.
   */
 private[graft] object VecExprUtil {
   def isVec(dt: DataType): Boolean = dt match {
@@ -32,345 +43,191 @@ private[graft] object VecExprUtil {
     case ArrayType(IntegerType | LongType, _) => true
     case _ => false
   }
-  /** Java source for reading element `i` of ArrayData `arr` as double. */
-  def accessor(dt: DataType, arr: String, i: String): String =
-    dt.asInstanceOf[ArrayType].elementType match {
-      case FloatType   => s"(double) $arr.getFloat($i)"
-      case DoubleType  => s"$arr.getDouble($i)"
-      case IntegerType => s"(long) $arr.getInt($i)"
-      case LongType    => s"$arr.getLong($i)"
-      case other => throw new IllegalStateException(s"unsupported element $other")
-    }
-  /** Interpreted-mode accessor. */
-  def getter(dt: DataType): (ArrayData, Int) => Double =
-    dt.asInstanceOf[ArrayType].elementType match {
-      case FloatType  => (a, i) => a.getFloat(i).toDouble
-      case DoubleType => (a, i) => a.getDouble(i)
-      case other => throw new IllegalStateException(s"unsupported element $other")
-    }
-  def longGetter(dt: DataType): (ArrayData, Int) => Long =
-    dt.asInstanceOf[ArrayType].elementType match {
-      case IntegerType => (a, i) => a.getInt(i).toLong
-      case LongType    => (a, i) => a.getLong(i)
-      case other => throw new IllegalStateException(s"unsupported element $other")
-    }
+  def isArrayOf(dt: DataType, elt: DataType): Boolean = dt match {
+    case ArrayType(e, _) => e == elt
+    case _ => false
+  }
+  def elementOf(dt: DataType): DataType = dt.asInstanceOf[ArrayType].elementType
+  /** The kernels' element-width flags: array<float> / array<bigint>. */
+  def isFloatVec(dt: DataType): Boolean = elementOf(dt) == FloatType
+  def isLongVec(dt: DataType): Boolean = elementOf(dt) == LongType
+
+  /** The position type of an array<struct<pos int|long, v>> whose value
+    * field passes `value`; None for any other shape.
+    */
+  def posTypeOf(dt: DataType, value: DataType => Boolean): Option[DataType] = dt match {
+    case ArrayType(st: StructType, _) if st.fields.length == 2 &&
+      (st.fields(0).dataType == IntegerType || st.fields(0).dataType == LongType) &&
+      value(st.fields(1).dataType) => Some(st.fields(0).dataType)
+    case _ => None
+  }
+
+  // ---- type checks: every kernel's failure goes through these ------------
+
+  def check(ok: Boolean, failure: => String): TypeCheckResult =
+    if (ok) TypeCheckResult.TypeCheckSuccess else TypeCheckResult.TypeCheckFailure(failure)
+  /** "<name> expects <what>, got <the types of `got`>" unless `ok`. */
+  def expect(ok: Boolean, name: String, what: String, got: Expression*): TypeCheckResult =
+    check(ok, s"$name expects $what, got ${got.map(_.dataType.catalogString).mkString(", ")}")
+  /** `first`, or `next` once `first` passed. */
+  def andThen(first: TypeCheckResult, next: => TypeCheckResult): TypeCheckResult =
+    if (first.isFailure) first else next
   def checkVecs(exprs: Seq[Expression], name: String): TypeCheckResult = {
-    val bad = exprs.find(e => !isVec(e.dataType))
-    if (bad.isEmpty) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$name expects array<float>/array<double>, got ${bad.get.dataType.catalogString}")
+    val bad = exprs.filterNot(e => isVec(e.dataType)).take(1)
+    expect(bad.isEmpty, name, "array<float>/array<double>", bad: _*)
   }
 }
 
 import VecExprUtil._
 
-/** dot(a, b) over the common prefix of the two arrays -> double. */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+/** A kernel over two array<float|double> vectors -> double. */
+private[graft] trait DenseBinary extends BinaryExpression {
   override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = checkVecs(Seq(left, right), "v_dot")
-  override def prettyName: String = "v_dot"
+  override def checkInputDataTypes(): TypeCheckResult = checkVecs(Seq(left, right), prettyName)
+  @transient protected lazy val lF: Boolean = isFloatVec(left.dataType)
+  @transient protected lazy val rF: Boolean = isFloatVec(right.dataType)
+}
 
-  @transient private lazy val getL = getter(left.dataType)
-  @transient private lazy val getR = getter(right.dataType)
+/** A kernel over one array<float|double> vector. */
+private[graft] trait VecInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = checkVecs(Seq(child), prettyName)
+  @transient protected lazy val isFloat: Boolean = isFloatVec(child.dataType)
+}
 
-  protected override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
+/** A kernel over one string. */
+private[graft] trait StringInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    expect(child.dataType == StringType, prettyName, "string", child)
+}
+
+/** A kernel over one array<bigint>. */
+private[graft] trait LongsInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    expect(isArrayOf(child.dataType, LongType), prettyName, "array<bigint>", child)
+}
+
+/** The dense, sparse and multi-vector arithmetic. Element widths arrive as
+  * flags (`*F`: array<float>, else array<double>; `*L`: array<bigint>,
+  * else array<int>); every fold runs over the common prefix in ascending
+  * index order and accumulates in double.
+  */
+object VecKernel {
+  def at(a: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+
+  def dot(a: ArrayData, aF: Boolean, b: ArrayData, bF: Boolean): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var i = 0; var s = 0.0
-    while (i < n) { s += getL(a, i) * getR(b, i); i += 1 }
+    while (i < n) { s += at(a, i, aF) * at(b, i, bF); i += 1 }
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += (${accessor(left.dataType, a, i)}) * (${accessor(right.dataType, b, i)});
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
-    copy(left = l, right = r)
-}
-
-/** cosine(a, b) -> double in [-1, 1]; NULL when either norm is 0. */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = checkVecs(Seq(left, right), "v_cosine")
-  override def prettyName: String = "v_cosine"
-
-  @transient private lazy val getL = getter(left.dataType)
-  @transient private lazy val getR = getter(right.dataType)
-
-  protected override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
+  /** Cosine similarity, or null when either norm is 0. */
+  def cosine(a: ArrayData, aF: Boolean, b: ArrayData, bF: Boolean): java.lang.Double = {
     val n = math.min(a.numElements(), b.numElements())
     var i = 0; var dot = 0.0; var na = 0.0; var nb = 0.0
     while (i < n) {
-      val x = getL(a, i); val y = getR(b, i)
+      val x = at(a, i, aF); val y = at(b, i, bF)
       dot += x * y; na += x * x; nb += y * y; i += 1
     }
     val denom = math.sqrt(na) * math.sqrt(nb)
     if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y"); val denom = ctx.freshName("denom")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = ${accessor(left.dataType, a, i)};
-         |  double $y = ${accessor(right.dataType, b, i)};
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |if ($denom == 0.0) { ${ev.isNull} = true; } else { ${ev.value} = $dot / $denom; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimilarity =
-    copy(left = l, right = r)
-}
-
-/** euclidean distance ||a - b||_2 -> double. */
-case class EuclideanDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = checkVecs(Seq(left, right), "v_euclid")
-  override def prettyName: String = "v_euclid"
-
-  @transient private lazy val getL = getter(left.dataType)
-  @transient private lazy val getR = getter(right.dataType)
-
-  protected override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
+  def euclid(a: ArrayData, aF: Boolean, b: ArrayData, bF: Boolean): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var i = 0; var s = 0.0
-    while (i < n) { val d = getL(a, i) - getR(b, i); s += d * d; i += 1 }
+    while (i < n) { val d = at(a, i, aF) - at(b, i, bF); s += d * d; i += 1 }
     math.sqrt(s)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val s = ctx.freshName("s"); val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (${accessor(left.dataType, a, i)}) - (${accessor(right.dataType, b, i)});
-         |  $s += $d * $d;
-         |}
-         |${ev.value} = java.lang.Math.sqrt($s);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): EuclideanDistance =
-    copy(left = l, right = r)
-}
-
-/** Manhattan (L1) distance sum(|a_i - b_i|) -> double — the fourth
-  * variant of the backend's `Distance` enum (the reference's collections
-  * are declared with `Distance::Cosine/Dot/Euclid` in
-  * /root/reference/tests/e2e.rs:66,135,139; Manhattan is the remaining
-  * public variant of the same enum). Same codegen shape as
-  * [[EuclideanDistance]]: one fused loop, no allocation.
-  */
-case class ManhattanDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = checkVecs(Seq(left, right), "v_manhattan")
-  override def prettyName: String = "v_manhattan"
-
-  @transient private lazy val getL = getter(left.dataType)
-  @transient private lazy val getR = getter(right.dataType)
-
-  protected override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
+  def manhattan(a: ArrayData, aF: Boolean, b: ArrayData, bF: Boolean): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var i = 0; var s = 0.0
-    while (i < n) { s += math.abs(getL(a, i) - getR(b, i)); i += 1 }
+    while (i < n) { s += math.abs(at(a, i, aF) - at(b, i, bF)); i += 1 }
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += java.lang.Math.abs((${accessor(left.dataType, a, i)}) - (${accessor(right.dataType, b, i)}));
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ManhattanDistance =
-    copy(left = l, right = r)
-}
-
-/** Sparse dot product over two (indices, values) pairs with ascending,
-  * de-duplicated indices (the two-column sparse convention of
-  * /root/reference/src/arrow/schema.rs:91-107). Sorted-merge, O(n1+n2).
-  */
-case class SparseDotProduct(
-    first: Expression, second: Expression, third: Expression, fourth: Expression)
-    extends QuaternaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "v_sparse_dot"
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!isIndexVec(first.dataType) || !isIndexVec(third.dataType))
-      TypeCheckResult.TypeCheckFailure("v_sparse_dot indices must be array<int>/array<bigint>")
-    else checkVecs(Seq(second, fourth), "v_sparse_dot")
-  }
-
-  @transient private lazy val getI1 = longGetter(first.dataType)
-  @transient private lazy val getV1 = getter(second.dataType)
-  @transient private lazy val getI2 = longGetter(third.dataType)
-  @transient private lazy val getV2 = getter(fourth.dataType)
-
-  protected override def nullSafeEval(i1a: Any, v1a: Any, i2a: Any, v2a: Any): Any = {
-    val i1 = i1a.asInstanceOf[ArrayData]; val v1 = v1a.asInstanceOf[ArrayData]
-    val i2 = i2a.asInstanceOf[ArrayData]; val v2 = v2a.asInstanceOf[ArrayData]
+  /** Sorted-merge dot of two (indices, values) pairs. */
+  def sparseDot(i1: ArrayData, i1L: Boolean, v1: ArrayData, v1F: Boolean,
+                i2: ArrayData, i2L: Boolean, v2: ArrayData, v2F: Boolean): Double = {
     val n1 = math.min(i1.numElements(), v1.numElements())
     val n2 = math.min(i2.numElements(), v2.numElements())
     var p = 0; var q = 0; var s = 0.0
     while (p < n1 && q < n2) {
-      val a = getI1(i1, p); val b = getI2(i2, q)
-      if (a == b) { s += getV1(v1, p) * getV2(v2, q); p += 1; q += 1 }
+      val a = if (i1L) i1.getLong(p) else i1.getInt(p).toLong
+      val b = if (i2L) i2.getLong(q) else i2.getInt(q).toLong
+      if (a == b) { s += at(v1, p, v1F) * at(v2, q, v2F); p += 1; q += 1 }
       else if (a < b) p += 1
       else q += 1
     }
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (i1, v1, i2, v2) => {
-      val p = ctx.freshName("p"); val q = ctx.freshName("q"); val s = ctx.freshName("s")
-      val n1 = ctx.freshName("n1"); val n2 = ctx.freshName("n2")
-      val a = ctx.freshName("a"); val b = ctx.freshName("b")
-      s"""
-         |int $n1 = java.lang.Math.min($i1.numElements(), $v1.numElements());
-         |int $n2 = java.lang.Math.min($i2.numElements(), $v2.numElements());
-         |int $p = 0; int $q = 0; double $s = 0.0;
-         |while ($p < $n1 && $q < $n2) {
-         |  long $a = ${accessor(first.dataType, i1, p)};
-         |  long $b = ${accessor(third.dataType, i2, q)};
-         |  if ($a == $b) {
-         |    $s += (${accessor(second.dataType, v1, p)}) * (${accessor(fourth.dataType, v2, q)});
-         |    $p++; $q++;
-         |  } else if ($a < $b) { $p++; } else { $q++; }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): SparseDotProduct =
-    copy(first = f, second = s, third = t, fourth = q)
-}
-
-/** ColBERT-style late-interaction MaxSim between two multi-vectors:
-  * sum over query vectors of (max over doc vectors of dot(q_i, d_j)).
-  * Mirrors the MaxSim comparator of /root/reference/tests/e2e.rs:142-147 and
-  * the V_COLBERT spec at /root/reference/tests/bin/tests.sql:156-168.
-  * `left` = document multi-vector, `right` = query multi-vector; both
-  * array<array<float|double>>. Empty doc or query -> 0.0.
-  */
-case class MaxSim(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "v_maxsim"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isMultiVec(left.dataType) && isMultiVec(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"v_maxsim expects array<array<float|double>>, got " +
-        s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
-
-  private def inner(dt: DataType): DataType = dt.asInstanceOf[ArrayType].elementType
-  @transient private lazy val getD = getter(inner(left.dataType))
-  @transient private lazy val getQ = getter(inner(right.dataType))
-
-  protected override def nullSafeEval(l: Any, r: Any): Any = {
-    val doc = l.asInstanceOf[ArrayData]; val qry = r.asInstanceOf[ArrayData]
+  /** Sum over query vectors of the max dot against the document's
+    * vectors. NULL vectors are skipped: a NULL query vector adds nothing,
+    * a NULL document vector is no candidate for the max — so an empty or
+    * all-NULL side scores 0.0.
+    */
+  def maxSim(doc: ArrayData, docF: Boolean, qry: ArrayData, qryF: Boolean): Double = {
     val nq = qry.numElements(); val nd = doc.numElements()
     var qi = 0; var total = 0.0
     while (qi < nq) {
-      val qv = qry.getArray(qi)
-      var best = Double.NegativeInfinity
-      var di = 0
-      while (di < nd) {
-        val dv = doc.getArray(di)
-        val n = math.min(qv.numElements(), dv.numElements())
-        var k = 0; var dot = 0.0
-        while (k < n) { dot += getQ(qv, k) * getD(dv, k); k += 1 }
-        if (dot > best) best = dot
-        di += 1
+      if (!qry.isNullAt(qi)) {
+        val qv = qry.getArray(qi)
+        var best = Double.NegativeInfinity
+        var found = false
+        var di = 0
+        while (di < nd) {
+          if (!doc.isNullAt(di)) {
+            val d = dot(qv, qryF, doc.getArray(di), docF)
+            if (d > best) best = d
+            found = true
+          }
+          di += 1
+        }
+        if (found) total += best
       }
-      if (nd > 0) total += best
       qi += 1
     }
     total
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (doc, qry) => {
-      val qi = ctx.freshName("qi"); val di = ctx.freshName("di"); val k = ctx.freshName("k")
-      val nq = ctx.freshName("nq"); val nd = ctx.freshName("nd"); val n = ctx.freshName("n")
-      val qv = ctx.freshName("qv"); val dv = ctx.freshName("dv")
-      val dot = ctx.freshName("dot"); val best = ctx.freshName("best"); val total = ctx.freshName("total")
-      val qAcc = accessor(inner(right.dataType), qv, k)
-      val dAcc = accessor(inner(left.dataType), dv, k)
-      s"""
-         |int $nq = $qry.numElements(); int $nd = $doc.numElements();
-         |double $total = 0.0;
-         |for (int $qi = 0; $qi < $nq; $qi++) {
-         |  org.apache.spark.sql.catalyst.util.ArrayData $qv = $qry.getArray($qi);
-         |  double $best = java.lang.Double.NEGATIVE_INFINITY;
-         |  for (int $di = 0; $di < $nd; $di++) {
-         |    org.apache.spark.sql.catalyst.util.ArrayData $dv = $doc.getArray($di);
-         |    int $n = java.lang.Math.min($qv.numElements(), $dv.numElements());
-         |    double $dot = 0.0;
-         |    for (int $k = 0; $k < $n; $k++) { $dot += ($qAcc) * ($dAcc); }
-         |    if ($dot > $best) $best = $dot;
-         |  }
-         |  if ($nd > 0) $total += $best;
-         |}
-         |${ev.value} = $total;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MaxSim =
-    copy(left = l, right = r)
-}
-
-/** 64-bit SimHash over an array of 64-bit token hashes: bit j of the result
-  * is 1 iff sum over tokens of (+1 if token bit j set else -1) > 0.
-  * Input: array<bigint> (e.g. murmur3-64 of tokens via xxhash64). -> bigint.
-  */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"simhash64 expects array<bigint>, got ${dt.catalogString}")
+  /** Exact int8 dot: integer sum, one widening at the end. */
+  def dotI8(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var i = 0; var s = 0L
+    while (i < n) { s += a.getByte(i).toLong * b.getByte(i).toLong; i += 1 }
+    s.toDouble
   }
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  /** All `nbits` hyperplane sign bits in one pass; `planes` is row-major
+    * [i * dim + j] (plane i, dimension j).
+    */
+  def lshSignature(a: ArrayData, isFloat: Boolean, planes: Array[Double],
+                   dim: Int, nbits: Int): Long = {
+    val n = math.min(a.numElements(), dim)
+    val acc = new Array[Double](nbits)
+    var j = 0
+    while (j < n) {
+      val x = at(a, j, isFloat)
+      var i = 0
+      while (i < nbits) { acc(i) += x * planes(i * dim + j); i += 1 }
+      j += 1
+    }
+    var bucket = 0L
+    var i = 0
+    while (i < nbits) { if (acc(i) >= 0) bucket |= (1L << i); i += 1 }
+    bucket
+  }
+}
+
+/** The hashing and set-overlap kernels. */
+object HashKernel {
+  /** Bit j of the result is 1 iff sum over tokens of (+1 if token bit j
+    * set else -1) > 0.
+    */
+  def simHash64(arr: ArrayData): Long = {
     val counts = new Array[Int](64)
     val n = arr.numElements()
     var i = 0
@@ -389,25 +246,186 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     out
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j"); val n = ctx.freshName("n")
-      val h = ctx.freshName("h"); val counts = ctx.freshName("counts"); val out = ctx.freshName("out")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $counts = new int[64];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $j = 0; $j < 64; $j++) {
-         |    if ((($h >>> $j) & 1L) == 1L) $counts[$j]++; else $counts[$j]--;
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $j = 0; $j < 64; $j++) { if ($counts[$j] > 0) $out |= (1L << $j); }
-         |${ev.value} = $out;
-       """.stripMargin
-    })
+  /** Polynomial rolling hash (base 31) over the UTF-8 bytes. */
+  def rolling64(s: UTF8String): Long = {
+    val bytes = s.getBytes
+    var h = 1125899906842597L
+    var i = 0
+    while (i < bytes.length) { h = 31L * h + bytes(i); i += 1 }
+    h
+  }
 
+  /** Odd multipliers + offsets from a seeded SplittableRandom: a_i*x + b_i
+    * followed by an avalanche mix (murmur3 finalizer) decorrelates the H
+    * hash functions.
+    */
+  private[graft] def coefficients(numHashes: Int, seed: Long): (Array[Long], Array[Long]) = {
+    val rnd = new java.util.SplittableRandom(seed)
+    val as = Array.fill(numHashes)(rnd.nextLong() | 1L) // odd multipliers
+    val bs = Array.fill(numHashes)(rnd.nextLong())
+    (as, bs)
+  }
+
+  /** out[i] = min over elements x of mix(as(i) * x + bs(i)). */
+  def minHash(arr: ArrayData, as: Array[Long], bs: Array[Long]): ArrayData = {
+    val n = arr.numElements()
+    val mins = Array.fill(as.length)(Long.MaxValue)
+    var j = 0
+    while (j < n) {
+      val x = arr.getLong(j)
+      var i = 0
+      while (i < as.length) {
+        var v = as(i) * x + bs(i)
+        v ^= (v >>> 33); v *= 0xff51afd7ed558ccdL; v ^= (v >>> 33)
+        if (v < mins(i)) mins(i) = v
+        i += 1
+      }
+      j += 1
+    }
+    new GenericArrayData(mins)
+  }
+
+  /** Common elements of two sorted, distinct bigint (`isLong`) or string
+    * arrays, in one merge pass.
+    */
+  def sortedIntersectCount(a: ArrayData, b: ArrayData, isLong: Boolean): Int = {
+    val na = a.numElements(); val nb = b.numElements()
+    var i = 0; var j = 0; var n = 0
+    while (i < na && j < nb) {
+      val c =
+        if (isLong) java.lang.Long.compare(a.getLong(i), b.getLong(j))
+        else a.getUTF8String(i).compareTo(b.getUTF8String(j))
+      if (c == 0) { n += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    n
+  }
+}
+
+/** dot(a, b) over the common prefix of the two arrays -> double. */
+case class DotProduct(left: Expression, right: Expression) extends DenseBinary {
+  override def prettyName: String = "v_dot"
+  protected override def nullSafeEval(l: Any, r: Any): Any =
+    VecKernel.dot(l.asInstanceOf[ArrayData], lF, r.asInstanceOf[ArrayData], rF)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.VecKernel.dot($a, $lF, $b, $rF);")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
+    copy(left = l, right = r)
+}
+
+/** cosine(a, b) -> double in [-1, 1]; NULL when either norm is 0. */
+case class CosineSimilarity(left: Expression, right: Expression) extends DenseBinary {
+  override def nullable: Boolean = true
+  override def prettyName: String = "v_cosine"
+  protected override def nullSafeEval(l: Any, r: Any): Any =
+    VecKernel.cosine(l.asInstanceOf[ArrayData], lF, r.asInstanceOf[ArrayData], rF)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val c = ctx.freshName("cos")
+      s"java.lang.Double $c = graft.functions.VecKernel.cosine($a, $lF, $b, $rF);\n" +
+        s"if ($c == null) { ${ev.isNull} = true; } else { ${ev.value} = $c; }"
+    })
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimilarity =
+    copy(left = l, right = r)
+}
+
+/** euclidean distance ||a - b||_2 -> double. */
+case class EuclideanDistance(left: Expression, right: Expression) extends DenseBinary {
+  override def prettyName: String = "v_euclid"
+  protected override def nullSafeEval(l: Any, r: Any): Any =
+    VecKernel.euclid(l.asInstanceOf[ArrayData], lF, r.asInstanceOf[ArrayData], rF)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.VecKernel.euclid($a, $lF, $b, $rF);")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): EuclideanDistance =
+    copy(left = l, right = r)
+}
+
+/** Manhattan (L1) distance sum(|a_i - b_i|) -> double — the fourth
+  * variant of the backend's `Distance` enum (the reference's collections
+  * are declared with `Distance::Cosine/Dot/Euclid` in
+  * /root/reference/tests/e2e.rs:66,135,139; Manhattan is the remaining
+  * public variant of the same enum).
+  */
+case class ManhattanDistance(left: Expression, right: Expression) extends DenseBinary {
+  override def prettyName: String = "v_manhattan"
+  protected override def nullSafeEval(l: Any, r: Any): Any =
+    VecKernel.manhattan(l.asInstanceOf[ArrayData], lF, r.asInstanceOf[ArrayData], rF)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.VecKernel.manhattan($a, $lF, $b, $rF);")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): ManhattanDistance =
+    copy(left = l, right = r)
+}
+
+/** Sparse dot product over two (indices, values) pairs with ascending,
+  * de-duplicated indices (the two-column sparse convention of
+  * /root/reference/src/arrow/schema.rs:91-107). Sorted-merge, O(n1+n2).
+  */
+case class SparseDotProduct(
+    first: Expression, second: Expression, third: Expression, fourth: Expression)
+    extends QuaternaryExpression {
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "v_sparse_dot"
+  override def checkInputDataTypes(): TypeCheckResult = andThen(
+    check(isIndexVec(first.dataType) && isIndexVec(third.dataType),
+      "v_sparse_dot indices must be array<int>/array<bigint>"),
+    checkVecs(Seq(second, fourth), "v_sparse_dot"))
+
+  @transient private lazy val flags = (isLongVec(first.dataType), isFloatVec(second.dataType),
+    isLongVec(third.dataType), isFloatVec(fourth.dataType))
+
+  protected override def nullSafeEval(i1: Any, v1: Any, i2: Any, v2: Any): Any =
+    VecKernel.sparseDot(i1.asInstanceOf[ArrayData], flags._1, v1.asInstanceOf[ArrayData],
+      flags._2, i2.asInstanceOf[ArrayData], flags._3, v2.asInstanceOf[ArrayData], flags._4)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (i1, v1, i2, v2) => s"${ev.value} = graft.functions.VecKernel" +
+      s".sparseDot($i1, ${flags._1}, $v1, ${flags._2}, $i2, ${flags._3}, $v2, ${flags._4});")
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression, q: Expression): SparseDotProduct =
+    copy(first = f, second = s, third = t, fourth = q)
+}
+
+/** ColBERT-style late-interaction MaxSim between two multi-vectors:
+  * sum over query vectors of (max over doc vectors of dot(q_i, d_j)).
+  * Mirrors the MaxSim comparator of /root/reference/tests/e2e.rs:142-147 and
+  * the V_COLBERT spec at /root/reference/tests/bin/tests.sql:156-168.
+  * `left` = document multi-vector, `right` = query multi-vector; both
+  * array<array<float|double>>. Empty doc or query -> 0.0; NULL inner
+  * vectors are skipped (see [[VecKernel.maxSim]]).
+  */
+case class MaxSim(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "v_maxsim"
+  override def checkInputDataTypes(): TypeCheckResult =
+    expect(isMultiVec(left.dataType) && isMultiVec(right.dataType), "v_maxsim",
+      "array<array<float|double>>", left, right)
+
+  @transient private lazy val dF = isFloatVec(elementOf(left.dataType))
+  @transient private lazy val qF = isFloatVec(elementOf(right.dataType))
+
+  protected override def nullSafeEval(l: Any, r: Any): Any =
+    VecKernel.maxSim(l.asInstanceOf[ArrayData], dF, r.asInstanceOf[ArrayData], qF)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (d, q) =>
+      s"${ev.value} = graft.functions.VecKernel.maxSim($d, $dF, $q, $qF);")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): MaxSim =
+    copy(left = l, right = r)
+}
+
+/** 64-bit SimHash over an array of 64-bit token hashes: bit j of the result
+  * is 1 iff sum over tokens of (+1 if token bit j set else -1) > 0.
+  * Input: array<bigint> (e.g. murmur3-64 of tokens via xxhash64). -> bigint.
+  */
+case class SimHash64(child: Expression) extends LongsInput {
+  override def dataType: DataType = LongType
+  override def prettyName: String = "simhash64"
+  protected override def nullSafeEval(input: Any): Any =
+    HashKernel.simHash64(input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.HashKernel.simHash64($a);")
   override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
 }
 
@@ -422,70 +440,18 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "sorted_intersect_count"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"sorted_intersect_count expects two array<string> or two array<bigint>, got " +
-          s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult = expect(
+    Seq(StringType, LongType).exists(t =>
+      isArrayOf(left.dataType, t) && isArrayOf(right.dataType, t)),
+    prettyName, "two array<string> or two array<bigint>", left, right)
 
-  private def isLong: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == LongType
+  @transient private lazy val isLong = isLongVec(left.dataType)
 
-  protected override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-    val na = a.numElements(); val nb = b.numElements()
-    var i = 0; var j = 0; var n = 0
-    if (isLong) {
-      while (i < na && j < nb) {
-        val x = a.getLong(i); val y = b.getLong(j)
-        if (x == y) { n += 1; i += 1; j += 1 }
-        else if (x < y) i += 1
-        else j += 1
-      }
-    } else {
-      while (i < na && j < nb) {
-        val c = a.getUTF8String(i).compareTo(b.getUTF8String(j))
-        if (c == 0) { n += 1; i += 1; j += 1 }
-        else if (c < 0) i += 1
-        else j += 1
-      }
-    }
-    n
-  }
-
+  protected override def nullSafeEval(l: Any, r: Any): Any =
+    HashKernel.sortedIntersectCount(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], isLong)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val n = ctx.freshName("n"); val c = ctx.freshName("c")
-      val body = if (isLong)
-        s"""
-           |  long $c = $a.getLong($i) < $b.getLong($j) ? -1L
-           |    : ($a.getLong($i) == $b.getLong($j) ? 0L : 1L);
-           |  if ($c == 0L) { $n++; $i++; $j++; }
-           |  else if ($c < 0L) { $i++; } else { $j++; }
-         """.stripMargin
-      else
-        s"""
-           |  int $c = $a.getUTF8String($i).compareTo($b.getUTF8String($j));
-           |  if ($c == 0) { $n++; $i++; $j++; }
-           |  else if ($c < 0) { $i++; } else { $j++; }
-         """.stripMargin
-      s"""
-         |int $na = $a.numElements(); int $nb = $b.numElements();
-         |int $i = 0; int $j = 0; int $n = 0;
-         |while ($i < $na && $j < $nb) {
-         |$body
-         |}
-         |${ev.value} = $n;
-       """.stripMargin
-    })
-
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.HashKernel.sortedIntersectCount($a, $b, $isLong);")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedIntersectCount =
     copy(left = l, right = r)
 }
@@ -497,9 +463,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   * hash to identical arrays; cross-set collisions are ~2^-64 per pair.
   */
 object TokenSetKernel {
-  def sortedTokenHashSet(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
-    val all = ShingleKernel.wordShingleHashes(s, 1).asInstanceOf[org.apache.spark.sql.catalyst.util.GenericArrayData]
-    val arr = all.toLongArray()
+  def sortedTokenHashSet(s: UTF8String): ArrayData = {
+    val arr = ShingleKernel.wordShingleHashes(s, 1).toLongArray()
     java.util.Arrays.sort(arr)
     // in-place dedup
     var n = 0
@@ -508,21 +473,15 @@ object TokenSetKernel {
       if (n == 0 || arr(i) != arr(n - 1)) { arr(n) = arr(i); n += 1 }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(arr, n))
+    new GenericArrayData(java.util.Arrays.copyOf(arr, n))
   }
 }
 
-case class SortedTokenHashSet(child: Expression) extends UnaryExpression {
+case class SortedTokenHashSet(child: Expression) extends StringInput {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "sorted_token_hash_set"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"sorted_token_hash_set expects string, got ${dt.catalogString}")
-  }
   protected override def nullSafeEval(input: Any): Any =
-    TokenSetKernel.sortedTokenHashSet(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    TokenSetKernel.sortedTokenHashSet(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s =>
       s"${ev.value} = graft.functions.TokenSetKernel.sortedTokenHashSet($s);")
@@ -535,7 +494,7 @@ case class SortedTokenHashSet(child: Expression) extends UnaryExpression {
   * shingle strings are ever materialized.
   */
 object ShingleKernel {
-  def wordShingleHashes(s: org.apache.spark.unsafe.types.UTF8String, w: Int): ArrayData = {
+  def wordShingleHashes(s: UTF8String, w: Int): ArrayData = {
     val bytes = s.getBytes
     // pass 1: token hashes
     var tokens = new Array[Long](16)
@@ -577,7 +536,7 @@ object ShingleKernel {
       out(j) = sh
       j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -587,29 +546,22 @@ object ShingleKernel {
   * lambda per element and materializes every shingle string; this is a
   * single tight loop, callable from whole-stage codegen.
   */
-case class WordShingleHashes(child: Expression, width: Int) extends UnaryExpression {
+case class WordShingleHashes(child: Expression, width: Int) extends StringInput {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "word_shingle_hashes"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"word_shingle_hashes expects string, got ${dt.catalogString}")
-  }
-
   protected override def nullSafeEval(input: Any): Any =
-    ShingleKernel.wordShingleHashes(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], width)
-
+    ShingleKernel.wordShingleHashes(input.asInstanceOf[UTF8String], width)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s =>
       s"${ev.value} = graft.functions.ShingleKernel.wordShingleHashes($s, $width);")
-
   override protected def withNewChildInternal(c: Expression): WordShingleHashes = copy(child = c)
 }
 
 /** MinHash signature: for an array<bigint> of element hashes, returns
   * array<bigint> of length `numHashes` where out[i] = min over elements of
   * h_i(x), with h_i(x) = mix(a_i * x + b_i) a universal-hash family whose
-  * coefficients derive deterministically from `seed`.
+  * coefficients derive deterministically from `seed`
+  * ([[HashKernel.coefficients]]).
   *
   * ONE pass over the input for all H hashes, fully codegen'd — versus the
   * naive H-fold `array_min(transform(...))` composition, which Spark
@@ -618,70 +570,23 @@ case class WordShingleHashes(child: Expression, width: Int) extends UnaryExpress
   */
 case class MinHashSignature(child: Expression, numHashes: Int, seed: Long)
     extends UnaryExpression {
+  // an empty signature would make every document collide
+  require(numHashes >= 1, s"minhash_signature needs numHashes >= 1, got $numHashes")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_signature"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"minhash expects array<bigint>, got ${dt.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    expect(isArrayOf(child.dataType, LongType), "minhash", "array<bigint>", child)
 
-  // odd multipliers + offsets from a seeded SplittableRandom: a_i*x + b_i
-  // followed by an avalanche mix (murmur3 finalizer) decorrelates the H
-  // hash functions.
-  @transient private lazy val (as, bs) = MinHashSignature.coefficients(numHashes, seed)
+  @transient private lazy val (as, bs) = HashKernel.coefficients(numHashes, seed)
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    var j = 0
-    while (j < n) {
-      val x = arr.getLong(j)
-      var i = 0
-      while (i < numHashes) {
-        var v = as(i) * x + bs(i)
-        v ^= (v >>> 33); v *= 0xff51afd7ed558ccdL; v ^= (v >>> 33)
-        if (v < mins(i)) mins(i) = v
-        i += 1
-      }
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
-  }
-
+  protected override def nullSafeEval(input: Any): Any =
+    HashKernel.minHash(input.asInstanceOf[ArrayData], as, bs)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", as, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j"); val n = ctx.freshName("n")
-      val x = ctx.freshName("x"); val v = ctx.freshName("v"); val mins = ctx.freshName("mins")
-      s"""
-         |int $n = $arr.numElements();
-         |long[] $mins = new long[$numHashes];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |for (int $j = 0; $j < $n; $j++) {
-         |  long $x = $arr.getLong($j);
-         |  for (int $i = 0; $i < $numHashes; $i++) {
-         |    long $v = $aRef[$i] * $x + $bRef[$i];
-         |    $v ^= ($v >>> 33); $v *= 0xff51afd7ed558ccdL; $v ^= ($v >>> 33);
-         |    if ($v < $mins[$i]) $mins[$i] = $v;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-       """.stripMargin
-    })
+    val a = ctx.addReferenceObj("minhashA", as, "long[]")
+    val b = ctx.addReferenceObj("minhashB", bs, "long[]")
+    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = graft.functions.HashKernel.minHash($x, $a, $b);")
   }
-
   override protected def withNewChildInternal(c: Expression): MinHashSignature = copy(child = c)
-}
-
-object MinHashSignature {
-  private[graft] def coefficients(numHashes: Int, seed: Long): (Array[Long], Array[Long]) = {
-    val rnd = new java.util.SplittableRandom(seed)
-    val as = Array.fill(numHashes)(rnd.nextLong() | 1L) // odd multipliers
-    val bs = Array.fill(numHashes)(rnd.nextLong())
-    (as, bs)
-  }
 }
 
 /** All `nbits` hyperplane sign bits of the [[graft.ops.Ann.lshPlanes]]
@@ -692,59 +597,24 @@ object MinHashSignature {
   * composition and to the DuckDB mirror's per-plane list_reduce.
   */
 case class HyperplaneSignature(child: Expression, dim: Int, nbits: Int,
-                               seed: Long) extends UnaryExpression {
+                               seed: Long) extends VecInput {
+  // bit nbits-1 must fit the 64-bit bucket: `1L << 64` wraps onto bit 0
+  require(nbits >= 1 && nbits <= 64, s"lsh_signature needs 1 <= nbits <= 64, got $nbits")
+  require(dim >= 1, s"lsh_signature needs dim >= 1, got $dim")
   override def dataType: DataType = LongType
   override def prettyName: String = "lsh_signature"
-  override def checkInputDataTypes(): TypeCheckResult =
-    checkVecs(Seq(child), "lsh_signature")
 
   // row-major [i * dim + j]: plane i, dimension j
   @transient private lazy val planes: Array[Double] =
     graft.ops.Ann.lshPlanes(dim, nbits, seed).flatten.toArray
 
-  @transient private lazy val get = getter(child.dataType)
-
-  protected override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), dim)
-    val acc = new Array[Double](nbits)
-    var j = 0
-    while (j < n) {
-      val x = get(a, j)
-      var i = 0
-      while (i < nbits) { acc(i) += x * planes(i * dim + j); i += 1 }
-      j += 1
-    }
-    var bucket = 0L
-    var i = 0
-    while (i < nbits) { if (acc(i) >= 0) bucket |= (1L << i); i += 1 }
-    bucket
-  }
-
+  protected override def nullSafeEval(input: Any): Any =
+    VecKernel.lshSignature(input.asInstanceOf[ArrayData], isFloat, planes, dim, nbits)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("lshPlanes", planes, "double[]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val n = ctx.freshName("n"); val x = ctx.freshName("x")
-      val acc = ctx.freshName("acc"); val bucket = ctx.freshName("bucket")
-      s"""
-         |int $n = java.lang.Math.min($arr.numElements(), $dim);
-         |double[] $acc = new double[$nbits];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  double $x = ${accessor(child.dataType, arr, j)};
-         |  for (int $i = 0; $i < $nbits; $i++) {
-         |    $acc[$i] += $x * $pRef[$i * $dim + $j];
-         |  }
-         |}
-         |long $bucket = 0L;
-         |for (int $i = 0; $i < $nbits; $i++) {
-         |  if ($acc[$i] >= 0) $bucket |= (1L << $i);
-         |}
-         |${ev.value} = $bucket;
-       """.stripMargin
-    })
+    val p = ctx.addReferenceObj("lshPlanes", planes, "double[]")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.VecKernel.lshSignature($a, $isFloat, $p, $dim, $nbits);")
   }
-
   override protected def withNewChildInternal(c: Expression): HyperplaneSignature =
     copy(child = c)
 }
@@ -752,44 +622,24 @@ case class HyperplaneSignature(child: Expression, dim: Int, nbits: Int,
 /** Deterministic 64-bit polynomial rolling hash (Rabin-Karp, base 31) over a
   * string's UTF-8 bytes -> bigint. Used for document fingerprinting.
   */
-case class RollingHash64(child: Expression) extends UnaryExpression {
+case class RollingHash64(child: Expression) extends StringInput {
   override def dataType: DataType = LongType
   override def prettyName: String = "fingerprint64"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"fingerprint64 expects string, got ${dt.catalogString}")
-  }
-
-  protected override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-    var h = 1125899906842597L
-    var i = 0
-    while (i < bytes.length) { h = 31L * h + bytes(i); i += 1 }
-    h
-  }
-
+  protected override def nullSafeEval(input: Any): Any =
+    HashKernel.rolling64(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val bytes = ctx.freshName("bytes"); val h = ctx.freshName("h"); val i = ctx.freshName("i")
-      s"""
-         |byte[] $bytes = $s.getBytes();
-         |long $h = 1125899906842597L;
-         |for (int $i = 0; $i < $bytes.length; $i++) { $h = 31L * $h + $bytes[$i]; }
-         |${ev.value} = $h;
-       """.stripMargin
-    })
-
+    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = graft.functions.HashKernel.rolling64($s);")
   override protected def withNewChildInternal(c: Expression): RollingHash64 = copy(child = c)
 }
 
 /** Static kernel for [[QuantizeI8]] — one pass for abs-max + codes. */
 object QuantKernel {
-  def quantizeI8(arr: ArrayData, isFloat: Boolean): org.apache.spark.sql.catalyst.InternalRow = {
+  def quantizeI8(arr: ArrayData, isFloat: Boolean): InternalRow = {
     val n = arr.numElements()
     var absMax = 0.0
     var i = 0
     while (i < n) {
-      val v = math.abs(if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i))
+      val v = math.abs(VecKernel.at(arr, i, isFloat))
       if (v > absMax) absMax = v
       i += 1
     }
@@ -801,14 +651,12 @@ object QuantKernel {
     if (scaleF > 0f) {
       i = 0
       while (i < n) {
-        val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-        val v = x / scaleF.toDouble
+        val v = VecKernel.at(arr, i, isFloat) / scaleF.toDouble
         codes(i) = (if (v >= 0) math.floor(v + 0.5) else math.ceil(v - 0.5)).toByte
         i += 1
       }
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(codes), scaleF))
+    new GenericInternalRow(Array[Any](UnsafeArrayData.fromPrimitiveArray(codes), scaleF))
   }
 }
 
@@ -818,23 +666,16 @@ object QuantKernel {
   * (array_max(transform(abs)) + transform(round)) interprets two lambda
   * chains per row — this is one tight loop inside whole-stage codegen.
   */
-case class QuantizeI8(child: Expression) extends UnaryExpression {
+case class QuantizeI8(child: Expression) extends VecInput {
   override def dataType: DataType = StructType(Seq(
     StructField("codes", ArrayType(ByteType, containsNull = false), nullable = false),
     StructField("scale", FloatType, nullable = false)))
   override def prettyName: String = "quantize_i8"
-  override def checkInputDataTypes(): TypeCheckResult = checkVecs(Seq(child), "quantize_i8")
-
-  @transient private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   protected override def nullSafeEval(input: Any): Any =
     QuantKernel.quantizeI8(input.asInstanceOf[ArrayData], isFloat)
-
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a =>
       s"${ev.value} = graft.functions.QuantKernel.quantizeI8($a, $isFloat);")
-
   override protected def withNewChildInternal(c: Expression): QuantizeI8 = copy(child = c)
 }
 
@@ -847,37 +688,13 @@ case class DotProductI8(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "v_dot_i8"
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(ByteType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"v_dot_i8 expects array<tinyint>, got ${left.dataType.catalogString}, ${right.dataType.catalogString}")
-  }
-
-  protected override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var i = 0; var s = 0L
-    while (i < n) { s += a.getByte(i).toLong * b.getByte(i).toLong; i += 1 }
-    s.toDouble
-  }
-
+  override def checkInputDataTypes(): TypeCheckResult = expect(
+    isArrayOf(left.dataType, ByteType) && isArrayOf(right.dataType, ByteType),
+    prettyName, "array<tinyint>", left, right)
+  protected override def nullSafeEval(l: Any, r: Any): Any =
+    VecKernel.dotI8(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += (long) $a.getByte($i) * (long) $b.getByte($i);
-         |}
-         |${ev.value} = (double) $s;
-       """.stripMargin
-    })
-
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.VecKernel.dotI8($a, $b);")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductI8 =
     copy(left = l, right = r)
 }
@@ -889,11 +706,10 @@ object SignBitsKernel {
     val words = new Array[Long]((n + 63) >> 6)
     var i = 0
     while (i < n) {
-      val v = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-      if (v > 0) words(i >> 6) |= (1L << (i & 63))
+      if (VecKernel.at(arr, i, isFloat) > 0) words(i >> 6) |= (1L << (i & 63))
       i += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(words)
+    UnsafeArrayData.fromPrimitiveArray(words)
   }
   def hamming(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
@@ -913,15 +729,14 @@ object SignProjectionKernel {
     val acc = new Array[Double](outDim)
     var i = 0
     while (i < n) {
-      val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+      val x = VecKernel.at(arr, i, isFloat)
       var j = 0
       while (j < outDim) { acc(j) += x * signs(j * inDim + i); j += 1 }
       i += 1
     }
     var j = 0
     while (j < outDim) { acc(j) = acc(j) * scale + 0.0; j += 1 }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(acc)
+    UnsafeArrayData.fromPrimitiveArray(acc)
   }
 }
 
@@ -940,15 +755,10 @@ object SignProjectionKernel {
   * the only users, never hit either path).
   */
 case class SignProjection(child: Expression, inDim: Int, outDim: Int,
-                          seed: Long) extends UnaryExpression {
+                          seed: Long) extends VecInput {
   require(inDim >= 1 && outDim >= 1, s"bad dims $inDim -> $outDim")
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "sign_projection"
-  override def checkInputDataTypes(): TypeCheckResult =
-    checkVecs(Seq(child), "sign_projection")
-
-  @transient private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   // row-major [j * inDim + i]: output j, input i (driver-side seeded)
   @transient private lazy val signs: Array[Double] = {
@@ -970,14 +780,12 @@ case class SignProjection(child: Expression, inDim: Int, outDim: Int,
   protected override def nullSafeEval(input: Any): Any =
     SignProjectionKernel.project(input.asInstanceOf[ArrayData], isFloat,
       signs, inDim, outDim, scale)
-
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val sRef = ctx.addReferenceObj("projSigns", signs, "double[]")
     nullSafeCodeGen(ctx, ev, a =>
       s"${ev.value} = graft.functions.SignProjectionKernel.project(" +
         s"$a, $isFloat, $sRef, $inDim, $outDim, $scale);")
   }
-
   override protected def withNewChildInternal(c: Expression): SignProjection =
     copy(child = c)
 }
@@ -989,21 +797,14 @@ case class SignProjection(child: Expression, inDim: Int, outDim: Int,
   * below the scalar int8 tier of /root/reference's host engine); at 100 TB
   * the packed column is what the candidate stage scans.
   */
-case class PackSignBits(child: Expression) extends UnaryExpression {
+case class PackSignBits(child: Expression) extends VecInput {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "pack_sign_bits"
-  override def checkInputDataTypes(): TypeCheckResult = checkVecs(Seq(child), "pack_sign_bits")
-
-  @transient private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   protected override def nullSafeEval(input: Any): Any =
     SignBitsKernel.pack(input.asInstanceOf[ArrayData], isFloat)
-
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a =>
       s"${ev.value} = graft.functions.SignBitsKernel.pack($a, $isFloat);")
-
   override protected def withNewChildInternal(c: Expression): PackSignBits = copy(child = c)
 }
 
@@ -1016,28 +817,19 @@ case class HammingDistance(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "v_hamming"
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"v_hamming expects array<bigint>, got ${left.dataType.catalogString}, ${right.dataType.catalogString}")
-  }
-
+  override def checkInputDataTypes(): TypeCheckResult = expect(
+    isArrayOf(left.dataType, LongType) && isArrayOf(right.dataType, LongType),
+    prettyName, "array<bigint>", left, right)
   protected override def nullSafeEval(l: Any, r: Any): Any =
     SignBitsKernel.hamming(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"${ev.value} = graft.functions.SignBitsKernel.hamming($a, $b);")
-
   override protected def withNewChildrenInternal(l: Expression, r: Expression): HammingDistance =
     copy(left = l, right = r)
 }
 
-/** Static kernel for [[TextStats]]: one pass over the UTF-8 bytes. */
+/** Static kernel for [[CharEntropy]]. */
 object CharEntropyKernel {
   /** Character-level Shannon entropy (natural log) of a string, computed
     * per CODE POINT in one pass: collect code points, sort ascending
@@ -1047,7 +839,7 @@ object CharEntropyKernel {
     * run-length reduce performs, so the result is bit-reproducible
     * cross-engine. Empty input returns 0.0 (callers NULL-guard).
     */
-  def entropy(s: org.apache.spark.unsafe.types.UTF8String): Double = {
+  def entropy(s: UTF8String): Double = {
     val cps = s.toString.codePoints().toArray
     if (cps.length == 0) return 0.0
     java.util.Arrays.sort(cps)
@@ -1073,17 +865,13 @@ object CharEntropyKernel {
   * formulation (per-char substr array + array_sort + fold) allocates a
   * string per character and measured ~30x slower at corpus doc sizes.
   */
-case class CharEntropy(child: Expression) extends UnaryExpression {
+case class CharEntropy(child: Expression) extends StringInput {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "char_entropy"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"char_entropy expects string, got ${dt.catalogString}")
-  }
 
   protected override def nullSafeEval(input: Any): Any =
     CharEntropyKernel.entropy(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+      input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s =>
@@ -1098,16 +886,12 @@ case class CharEntropy(child: Expression) extends UnaryExpression {
   * visually identical text identically. java.text.Normalizer under a
   * codegen call; DuckDB's nfc_normalize is the oracle twin.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+case class NfcNormalize(child: Expression) extends StringInput {
   override def dataType: DataType = StringType
   override def prettyName: String = "nfc_normalize"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"nfc_normalize expects string, got ${dt.catalogString}")
-  }
 
   protected override def nullSafeEval(input: Any): Any =
-    NfcKernel.nfc(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    NfcKernel.nfc(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s =>
@@ -1117,16 +901,16 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 }
 
 object NfcKernel {
-  def nfc(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
+  def nfc(s: UTF8String): UTF8String = {
     val str = s.toString
     // fast path: NFC-normalized already (true for ~all real text) — skip
     // the rebuild and return the input buffer untouched
     if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
-    else org.apache.spark.unsafe.types.UTF8String.fromString(
+    else UTF8String.fromString(
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
 
-  def stripAccents(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
+  def stripAccents(s: UTF8String): UTF8String = {
     // ASCII fast path: nothing to decompose, return the input untouched
     val bytes = s.getBytes
     var ascii = true
@@ -1143,7 +927,7 @@ object NfcKernel {
         sb.appendCodePoint(cp)
       j += Character.charCount(cp)
     }
-    org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString)
+    UTF8String.fromString(sb.toString)
   }
 }
 
@@ -1152,16 +936,12 @@ object NfcKernel {
   * non-spacing combining mark, so café/café/cafe collide. ASCII input
   * takes a zero-copy fast path.
   */
-case class StripAccents(child: Expression) extends UnaryExpression {
+case class StripAccents(child: Expression) extends StringInput {
   override def dataType: DataType = StringType
   override def prettyName: String = "strip_accents"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"strip_accents expects string, got ${dt.catalogString}")
-  }
 
   protected override def nullSafeEval(input: Any): Any =
-    NfcKernel.stripAccents(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    NfcKernel.stripAccents(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s =>
@@ -1184,8 +964,8 @@ object TextStatsKernel {
     h
   }
 
-  def stats(s: org.apache.spark.unsafe.types.UTF8String,
-            profiles: Array[Array[Long]]): org.apache.spark.sql.catalyst.InternalRow = {
+  def stats(s: UTF8String,
+            profiles: Array[Array[Long]]): InternalRow = {
     val bytes = s.getBytes
     val nP = profiles.length
     val occ = new Array[Int](nP)
@@ -1243,7 +1023,7 @@ object TextStatsKernel {
   * (split + filter(array_contains) per profile) with one tight loop.
   */
 case class TextStats(child: Expression, profiles: Seq[Seq[String]])
-    extends UnaryExpression {
+    extends StringInput {
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", IntegerType, nullable = false),
     StructField("n_chars", IntegerType, nullable = false),
@@ -1251,19 +1031,15 @@ case class TextStats(child: Expression, profiles: Seq[Seq[String]])
     StructField("occ", ArrayType(IntegerType, containsNull = false), nullable = false),
     StructField("dist", ArrayType(IntegerType, containsNull = false), nullable = false)))
   override def prettyName: String = "text_stats"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType =>
-      if (profiles.forall(_.length <= 64)) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure("text_stats profiles are limited to 64 words each")
-    case dt => TypeCheckResult.TypeCheckFailure(s"text_stats expects string, got ${dt.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = andThen(super.checkInputDataTypes(),
+    check(profiles.forall(_.length <= 64), "text_stats profiles are limited to 64 words each"))
 
   @transient private lazy val hashed: Array[Array[Long]] =
     profiles.map(_.map(TextStatsKernel.fnv).toArray).toArray
 
   protected override def nullSafeEval(input: Any): Any =
     TextStatsKernel.stats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], hashed)
+      input.asInstanceOf[UTF8String], hashed)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("textStatsProfiles", hashed, "long[][]")
@@ -1275,7 +1051,6 @@ case class TextStats(child: Expression, profiles: Seq[Seq[String]])
 }
 
 object PosOrderedKernel {
-  import org.apache.spark.unsafe.types.UTF8String
 
   /** Permutation of `arr`'s struct rows ascending by field 0 (the
     * position), encoded as (pos << 32 | index) longs so the sort is
@@ -1347,16 +1122,9 @@ object PosOrderedKernel {
 case class PosOrderedSum(child: Expression) extends UnaryExpression {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pos_ordered_sum"
-  private def posType: Option[DataType] = child.dataType match {
-    case ArrayType(st: StructType, _) if st.fields.length == 2 &&
-      (st.fields(0).dataType == IntegerType || st.fields(0).dataType == LongType) &&
-      st.fields(1).dataType == DoubleType => Some(st.fields(0).dataType)
-    case _ => None
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (posType.isDefined) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"pos_ordered_sum expects array<struct<int|long, double>>, got ${child.dataType.catalogString}")
+  private def posType = posTypeOf(child.dataType, _ == DoubleType)
+  override def checkInputDataTypes(): TypeCheckResult = expect(posType.isDefined,
+    prettyName, "array<struct<int|long, double>>", child)
   @transient private lazy val posLong = posType.contains(LongType)
 
   protected override def nullSafeEval(input: Any): Any =
@@ -1377,26 +1145,19 @@ case class PosOrderedSum(child: Expression) extends UnaryExpression {
 case class PosOrderedJoin(child: Expression, sep: String) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def prettyName: String = "pos_ordered_join"
-  private def posType: Option[DataType] = child.dataType match {
-    case ArrayType(st: StructType, _) if st.fields.length == 2 &&
-      (st.fields(0).dataType == IntegerType || st.fields(0).dataType == LongType) &&
-      st.fields(1).dataType == StringType => Some(st.fields(0).dataType)
-    case _ => None
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (posType.isDefined) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"pos_ordered_join expects array<struct<int|long, string>>, got ${child.dataType.catalogString}")
+  private def posType = posTypeOf(child.dataType, _ == StringType)
+  override def checkInputDataTypes(): TypeCheckResult = expect(posType.isDefined,
+    prettyName, "array<struct<int|long, string>>", child)
   @transient private lazy val posLong = posType.contains(LongType)
   @transient private lazy val sepU8 =
-    org.apache.spark.unsafe.types.UTF8String.fromString(sep)
+    UTF8String.fromString(sep)
 
   protected override def nullSafeEval(input: Any): Any =
     PosOrderedKernel.joinField(input.asInstanceOf[ArrayData], sepU8, posLong)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("posJoinSep", sepU8,
-      "org.apache.spark.unsafe.types.UTF8String")
+      "UTF8String")
     nullSafeCodeGen(ctx, ev, a =>
       s"${ev.value} = graft.functions.PosOrderedKernel.joinField($a, $ref, $posLong);")
   }
@@ -1405,10 +1166,6 @@ case class PosOrderedJoin(child: Expression, sep: String) extends UnaryExpressio
 }
 
 object SpanKernel {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.unsafe.types.UTF8String
 
   /** Gaps-and-islands merge of hit positions into maximal token spans —
     * the compiled twin of the two-window form (prevEnd = max(pos+w) over
@@ -1585,21 +1342,16 @@ object SpanKernel {
 
 /** Sliding token-window chunking in one compiled pass per document. */
 case class ChunkWindows(child: Expression, w: Int, s: Int)
-    extends UnaryExpression {
+    extends StringInput {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("chunk_idx", IntegerType, nullable = false),
     StructField("chunk", StringType, nullable = false),
     StructField("n_tokens", IntegerType, nullable = false))),
     containsNull = false)
   override def prettyName: String = "chunk_windows"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"chunk_windows expects string, got ${dt.catalogString}")
-  }
   protected override def nullSafeEval(input: Any): Any =
     SpanKernel.chunkWindows(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w, s)
+      input.asInstanceOf[UTF8String], w, s)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a =>
       s"${ev.value} = graft.functions.SpanKernel.chunkWindows($a, $w, $s);")
@@ -1608,16 +1360,11 @@ case class ChunkWindows(child: Expression, w: Int, s: Int)
 }
 
 /** Gaps-and-islands span merge over collected hit positions. */
-case class MergeIslands(child: Expression, w: Int) extends UnaryExpression {
+case class MergeIslands(child: Expression, w: Int) extends LongsInput {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("span_start", LongType, nullable = false),
     StructField("span_end", LongType, nullable = false))), containsNull = false)
   override def prettyName: String = "merge_islands"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"merge_islands expects array<bigint>, got ${dt.catalogString}")
-  }
   protected override def nullSafeEval(input: Any): Any =
     SpanKernel.mergeIslands(input.asInstanceOf[ArrayData], w.toLong)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -1636,16 +1383,15 @@ case class StripSpans(left: Expression, right: Expression)
     StructField("n_kept", LongType, nullable = false),
     StructField("kept", StringType, nullable = false)))
   override def prettyName: String = "strip_spans"
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (StringType, ArrayType(st: StructType, _))
-      if st.fields.length == 2 && st.fields.forall(_.dataType == LongType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"strip_spans expects (string, array<struct<bigint,bigint>>), got (${l.catalogString}, ${r.catalogString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = check(
+    left.dataType == StringType && (right.dataType match {
+      case ArrayType(st: StructType, _) => st.fields.length == 2 && st.fields.forall(_.dataType == LongType)
+      case _ => false
+    }), s"strip_spans expects (string, array<struct<bigint,bigint>>), " +
+      s"got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
   protected override def nullSafeEval(t: Any, sp: Any): Any =
     SpanKernel.stripSpans(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+      t.asInstanceOf[UTF8String],
       sp.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (t, sp) =>
@@ -1659,19 +1405,14 @@ case class StripSpans(left: Expression, right: Expression)
   * chain AND (distinct form) the per-doc array_distinct.
   */
 case class WordShingles(child: Expression, width: Int, distinct: Boolean)
-    extends UnaryExpression {
+    extends StringInput {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_shingles"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType =>
-      if (width >= 1) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"word_shingles width must be >= 1, got $width")
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"word_shingles expects string, got ${dt.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = andThen(super.checkInputDataTypes(),
+    check(width >= 1, s"word_shingles width must be >= 1, got $width"))
   protected override def nullSafeEval(input: Any): Any =
     SpanKernel.wordShingles(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], width, distinct)
+      input.asInstanceOf[UTF8String], width, distinct)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s =>
       s"${ev.value} = graft.functions.SpanKernel.wordShingles($s, $width, $distinct);")
@@ -1679,15 +1420,10 @@ case class WordShingles(child: Expression, width: Int, distinct: Boolean)
 }
 
 /** Elementwise pmod of a bigint array by a positive constant modulus. */
-case class PmodArray(child: Expression, m: Long) extends UnaryExpression {
+case class PmodArray(child: Expression, m: Long) extends LongsInput {
   require(m > 0, s"pmod_array modulus must be positive, got $m")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "pmod_array"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"pmod_array expects array<bigint>, got ${dt.catalogString}")
-  }
   protected override def nullSafeEval(input: Any): Any =
     SpanKernel.pmodArray(input.asInstanceOf[ArrayData], m)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -1700,14 +1436,9 @@ case class PmodArray(child: Expression, m: Long) extends UnaryExpression {
   * weight table (the DSIR scoring fold, compiled).
   */
 case class WeightedBucketSum(child: Expression, weights: Array[Double])
-    extends UnaryExpression {
+    extends LongsInput {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "weighted_bucket_sum"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"weighted_bucket_sum expects array<bigint>, got ${dt.catalogString}")
-  }
   protected override def nullSafeEval(input: Any): Any =
     SpanKernel.weightedBucketSum(input.asInstanceOf[ArrayData], weights)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -1719,8 +1450,6 @@ case class WeightedBucketSum(child: Expression, weights: Array[Double])
 }
 
 object ClassifyKernel {
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.sql.catalyst.util.ArrayData
 
   /** Elementwise class-weight sum in position order — the compiled twin
     * of aggregate(array_sort(collect_list(struct(pos, ws))), zeros,
@@ -1752,8 +1481,7 @@ object ClassifyKernel {
       while (j < k) { sums(j) += ws.getDouble(j); j += 1 }
       i += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(sums)
+    UnsafeArrayData.fromPrimitiveArray(sums)
   }
 
   /** Map-side NB scoring fold: per bucket id in array order, skip
@@ -1781,8 +1509,7 @@ object ClassifyKernel {
       i += 1
     }
     new GenericInternalRow(Array[Any](matched,
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(sums)))
+      UnsafeArrayData.fromPrimitiveArray(sums)))
   }
 }
 
@@ -1792,19 +1519,9 @@ object ClassifyKernel {
 case class PosOrderedVecSum(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "pos_ordered_vec_sum"
-  private def posType: Option[DataType] = child.dataType match {
-    case ArrayType(st: StructType, _) if st.fields.length == 2 &&
-      (st.fields(0).dataType == IntegerType || st.fields(0).dataType == LongType) &&
-      (st.fields(1).dataType match {
-        case ArrayType(DoubleType, _) => true
-        case _ => false
-      }) => Some(st.fields(0).dataType)
-    case _ => None
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (posType.isDefined) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"pos_ordered_vec_sum expects array<struct<int|long, array<double>>>, got ${child.dataType.catalogString}")
+  private def posType = posTypeOf(child.dataType, isArrayOf(_, DoubleType))
+  override def checkInputDataTypes(): TypeCheckResult = expect(posType.isDefined,
+    prettyName, "array<struct<int|long, array<double>>>", child)
   @transient private lazy val posLong = posType.contains(LongType)
   protected override def nullSafeEval(input: Any): Any =
     ClassifyKernel.posOrderedVecSum(input.asInstanceOf[ArrayData], posLong)
@@ -1818,16 +1535,11 @@ case class PosOrderedVecSum(child: Expression) extends UnaryExpression {
   * table: array<long> -> struct(n_matched, sums array<double>).
   */
 case class BucketVecSum(child: Expression, weights: Array[Array[Double]],
-                        nClasses: Int) extends UnaryExpression {
+                        nClasses: Int) extends LongsInput {
   override def dataType: DataType = StructType(Seq(
     StructField("n_matched", LongType, nullable = false),
     StructField("sums", ArrayType(DoubleType, containsNull = false), nullable = false)))
   override def prettyName: String = "bucket_vec_sum"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"bucket_vec_sum expects array<bigint>, got ${dt.catalogString}")
-  }
   protected override def nullSafeEval(input: Any): Any =
     ClassifyKernel.bucketVecSum(input.asInstanceOf[ArrayData], weights, nClasses)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -1866,11 +1578,8 @@ case class FirstBandPairs(child: Expression)
       }
     case _ => None
   }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (idTypeOpt.isDefined) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "first_band_pairs expects array<struct<id, array<bigint>>>, got " +
-        child.dataType.catalogString)
+  override def checkInputDataTypes(): TypeCheckResult = expect(idTypeOpt.isDefined,
+    prettyName, "array<struct<id, array<bigint>>>", child)
 
   override def elementSchema: StructType = {
     val (idt, nullable) = idTypeOpt.get
@@ -1879,8 +1588,8 @@ case class FirstBandPairs(child: Expression)
       StructField("b_id", idt, nullable)))
   }
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow)
-      : IterableOnce[org.apache.spark.sql.catalyst.InternalRow] = {
+  override def eval(input: InternalRow)
+      : IterableOnce[InternalRow] = {
     val data = child.eval(input).asInstanceOf[ArrayData]
     if (data == null || data.numElements() < 2) return Iterator.empty
     val n = data.numElements()
@@ -1892,15 +1601,15 @@ case class FirstBandPairs(child: Expression)
     var i = 0
     while (i < n) {
       val s = data.getStruct(i, 2)
-      ids(i) = org.apache.spark.sql.catalyst.InternalRow.copyValue(s.get(0, idt))
+      ids(i) = InternalRow.copyValue(s.get(0, idt))
       val p = s.getArray(1)
       prefs(i) = if (p == null) Array.emptyLongArray else p.toLongArray()
       i += 1
     }
-    new scala.collection.AbstractIterator[org.apache.spark.sql.catalyst.InternalRow] {
+    new scala.collection.AbstractIterator[InternalRow] {
       private var a = 0
       private var b = 1
-      private var pending: org.apache.spark.sql.catalyst.InternalRow = null
+      private var pending: InternalRow = null
       private def fetch(): Unit = {
         while (pending == null && a < n - 1) {
           if (b >= n) { a += 1; b = a + 1 }
@@ -1920,7 +1629,7 @@ case class FirstBandPairs(child: Expression)
         }
       }
       override def hasNext: Boolean = { fetch(); pending != null }
-      override def next(): org.apache.spark.sql.catalyst.InternalRow = {
+      override def next(): InternalRow = {
         fetch()
         if (pending == null) throw new NoSuchElementException("empty pair iterator")
         val r = pending; pending = null; r

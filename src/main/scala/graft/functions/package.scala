@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, JsonObjectKeys, Literal}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
@@ -14,24 +15,28 @@ import org.apache.spark.sql.types._
   * (/root/reference/src/udfs.rs:13-16, datafusion-functions-json).
   *
   * Dense/sparse/multi-vector kernels are native codegen Catalyst expressions
-  * (see VectorExpressions.scala); everything else composes built-in,
-  * codegen'd `org.apache.spark.sql.functions`.
+  * (see VectorExpressions.scala). Functions composed from Catalyst built-ins
+  * that SQL also exposes are built once, in [[SqlBuilders]], and wrapped
+  * here; the Column-only ones compose `org.apache.spark.sql.functions`.
   */
 package object functions {
+
+  private def ex(c: Column): Expression = Bridge.expression(c)
+  private def keyLits(keys: Seq[String]): Seq[Expression] = keys.map(Literal(_))
 
   // ---- dense vector kernels (native expressions) -------------------------
 
   /** Dot-product similarity of two float/double arrays. */
   def v_dot(a: Column, b: Column): Column =
-    Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.column(DotProduct(ex(a), ex(b)))
 
   /** Cosine similarity; NULL when either vector has zero norm. */
   def v_cosine(a: Column, b: Column): Column =
-    Bridge.column(CosineSimilarity(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.column(CosineSimilarity(ex(a), ex(b)))
 
   /** Euclidean (L2) distance. */
   def v_euclid(a: Column, b: Column): Column =
-    Bridge.column(EuclideanDistance(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.column(EuclideanDistance(ex(a), ex(b)))
 
   /** Manhattan (L1) distance — the backend `Distance` enum's fourth
     * variant (reference collections declare Cosine/Dot/Euclid in
@@ -39,7 +44,7 @@ package object functions {
     * public enum).
     */
   def v_manhattan(a: Column, b: Column): Column =
-    Bridge.column(ManhattanDistance(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.column(ManhattanDistance(ex(a), ex(b)))
 
   /** V_DISTANCE with an explicit metric name: cosine | dot | euclid.
     * For 'cosine' this returns the cosine DISTANCE (1 - similarity), matching
@@ -47,35 +52,24 @@ package object functions {
     * the negated dot product (a distance-like quantity).
     */
   def v_distance(a: Column, b: Column, metric: String): Column =
-    metric.toLowerCase match {
-      case "cosine" => F.lit(1.0) - v_cosine(a, b)
-      case "dot"    => -v_dot(a, b)
-      case "euclid" | "euclidean" | "l2" => v_euclid(a, b)
-      case "manhattan" | "l1" => v_manhattan(a, b)
-      case m => throw new IllegalArgumentException(s"unknown metric '$m'")
-    }
+    Bridge.column(SqlBuilders.distance(ex(a), ex(b), Literal(metric)))
 
   /** V_WITHIN radius predicate sugar: distance(a,b,metric) < r. */
   def v_within(a: Column, b: Column, r: Double, metric: String = "euclid"): Column =
-    v_distance(a, b, metric) < F.lit(r)
+    Bridge.column(SqlBuilders.within(ex(a), ex(b), Literal(r), Some(Literal(metric))))
 
   /** Sparse dot product over (indices, values) column pairs (ascending,
     * deduplicated indices — the reference's two-column sparse convention).
     */
   def v_sparse_dot(i1: Column, v1: Column, i2: Column, v2: Column): Column =
-    Bridge.column(SparseDotProduct(
-      Bridge.expression(i1), Bridge.expression(v1),
-      Bridge.expression(i2), Bridge.expression(v2)))
+    Bridge.column(SparseDotProduct(ex(i1), ex(v1), ex(i2), ex(v2)))
 
   /** ColBERT late-interaction MaxSim: sum over query vectors of the max dot
     * product against the document's vectors (V_COLBERT).
     */
   def v_maxsim(doc: Column, query: Column): Column =
-    Bridge.column(MaxSim(Bridge.expression(doc), Bridge.expression(query)))
+    Bridge.column(MaxSim(ex(doc), ex(query)))
 
-  /** Gaussian decay boost in (0, 1]: exp(-ln2 * (dist/scale)^2), = 0.5 at
-    * dist = scale (V_GAUSS_DECAY, tests.sql:294-300).
-    */
   /** L2-normalized copy of a dense vector (composed built-ins: the norm
     * runs through the sequential v_dot kernel, the division is
     * element-wise exact). A zero vector passes through unchanged rather
@@ -103,99 +97,95 @@ package object functions {
       .otherwise(F.transform(summed, x => x / F.size(m)))
   }
 
+  /** Gaussian decay boost in (0, 1]: exp(-ln2 * (dist/scale)^2), = 0.5 at
+    * dist = scale (V_GAUSS_DECAY, tests.sql:294-300).
+    */
   def v_gauss_decay(dist: Column, scale: Column): Column =
-    F.exp(F.lit(-math.log(2.0)) * F.pow(dist / scale, 2))
+    Bridge.column(SqlBuilders.gaussDecay(ex(dist), ex(scale)))
 
   /** Exponential decay exp(-ln2 * |x| / scale) — the backend formula
     * query's exp_decay kernel under the same midpoint-0.5 convention as
     * [[v_gauss_decay]]: decay(0) = 1, decay(scale) = 0.5.
     */
   def v_exp_decay(dist: Column, scale: Column): Column =
-    F.exp(F.lit(-math.log(2.0)) * F.abs(dist) / scale)
+    Bridge.column(SqlBuilders.expDecay(ex(dist), ex(scale)))
 
   /** Linear decay max(0, 1 - |x| / (2*scale)) — the backend formula
     * query's lin_decay kernel; midpoint-0.5 convention (decay(scale) =
     * 0.5), reaching exactly 0 at 2*scale.
     */
   def v_lin_decay(dist: Column, scale: Column): Column =
-    F.greatest(F.lit(0.0), F.lit(1.0) - F.abs(dist) / (F.lit(2.0) * scale))
+    Bridge.column(SqlBuilders.linDecay(ex(dist), ex(scale)))
 
   /** Haversine distance in meters between (lat1,lon1) and (lat2,lon2) in
     * degrees (V_GEO_DISTANCE, tests.sql:295-299). Pure column math — codegen'd.
     */
-  def v_geo_distance(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column = {
-    val r = 6371000.0
-    val toRad = math.Pi / 180.0
-    val dLat = (lat2 - lat1) * toRad
-    val dLon = (lon2 - lon1) * toRad
-    val h = F.pow(F.sin(dLat / 2), 2) +
-      F.cos(lat1 * toRad) * F.cos(lat2 * toRad) * F.pow(F.sin(dLon / 2), 2)
-    F.lit(2 * r) * F.asin(F.sqrt(h))
-  }
+  def v_geo_distance(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
+    Bridge.column(SqlBuilders.geoDistance(Seq(lat1, lon1, lat2, lon2).map(ex)))
 
   /** 64-bit SimHash of an array<bigint> of token hashes. */
   def simhash64(tokenHashes: Column): Column =
-    Bridge.column(SimHash64(Bridge.expression(tokenHashes)))
+    Bridge.column(SimHash64(ex(tokenHashes)))
 
   /** MinHash signature (array<bigint>, length numHashes) of an array<bigint>
     * of element hashes — one codegen'd pass for all hash functions.
     */
   def minhash_signature(elementHashes: Column, numHashes: Int, seed: Long = 42L): Column =
-    Bridge.column(MinHashSignature(Bridge.expression(elementHashes), numHashes, seed))
+    Bridge.column(MinHashSignature(ex(elementHashes), numHashes, seed))
 
   /** All nbits hyperplane sign bits in one codegen'd array pass:
     * vector -> 64-bit LSH bucket signature (the ingest-side signature
     * kernel of the Ann.lshBuckets / Dedup.embeddingNearDupLsh family).
     */
   def lsh_signature(vec: Column, dim: Int, nbits: Int, seed: Long = 42L): Column =
-    Bridge.column(HyperplaneSignature(Bridge.expression(vec), dim, nbits, seed))
+    Bridge.column(HyperplaneSignature(ex(vec), dim, nbits, seed))
 
   /** Word w-shingle hashes of a text in one native pass (no shingle
     * strings materialized): string -> array<bigint>.
     */
   def word_shingle_hashes(text: Column, width: Int): Column =
-    Bridge.column(WordShingleHashes(Bridge.expression(text), width))
+    Bridge.column(WordShingleHashes(ex(text), width))
 
   /** Deterministic 64-bit rolling-hash fingerprint of a string. */
   def fingerprint64(text: Column): Column =
-    Bridge.column(RollingHash64(Bridge.expression(text)))
+    Bridge.column(RollingHash64(ex(text)))
 
   /** One-pass per-code-point Shannon entropy (natural log). */
   def char_entropy(text: Column): Column =
-    Bridge.column(CharEntropy(Bridge.expression(text)))
+    Bridge.column(CharEntropy(ex(text)))
 
   /** Position-ordered left-fold sum over array<struct<pos, x double>> —
     * the deterministic per-document LM fold, compiled (identical IEEE op
     * order as array_sort + HOF aggregate, no interpreted lambda).
     */
   def pos_ordered_sum(arr: Column): Column =
-    Bridge.column(PosOrderedSum(Bridge.expression(arr)))
+    Bridge.column(PosOrderedSum(ex(arr)))
 
   /** Position-ordered join of struct field 1 over
     * array<struct<pos, s string>> — compiled document reassembly.
     */
   def pos_ordered_join(arr: Column, sep: String): Column =
-    Bridge.column(PosOrderedJoin(Bridge.expression(arr), sep))
+    Bridge.column(PosOrderedJoin(ex(arr), sep))
 
   /** Gaps-and-islands merge of collected hit positions (array<bigint>)
     * into maximal token spans: array<struct<span_start, span_end>>,
     * end exclusive, touching ranges merged — compiled.
     */
   def merge_islands(positions: Column, w: Int): Column =
-    Bridge.column(MergeIslands(Bridge.expression(positions), w))
+    Bridge.column(MergeIslands(ex(positions), w))
 
   /** Map-side span strip: (text, spans) -> struct(n_kept, kept) — the
     * tokenize + drop-ranges + single-space rejoin in one compiled pass.
     */
   def strip_spans(text: Column, spans: Column): Column =
-    Bridge.column(StripSpans(Bridge.expression(text), Bridge.expression(spans)))
+    Bridge.column(StripSpans(ex(text), ex(spans)))
 
   /** Sliding token-window chunks (case-preserving whitespace tokens):
     * array<struct<chunk_idx, chunk, n_tokens>> — one compiled pass per
     * document.
     */
   def chunk_windows(text: Column, window: Int, stride: Int): Column =
-    Bridge.column(ChunkWindows(Bridge.expression(text), window, stride))
+    Bridge.column(ChunkWindows(ex(text), window, stride))
 
   /** LSH bucket candidate-pair generator: emits (a_id, b_id) pairs from
     * one id-sorted bucket array<struct<id, pref array<bigint>>> whose
@@ -203,87 +193,87 @@ package object functions {
     * position equal) — use with `.as(Seq("a_id", "b_id"))`.
     */
   def first_band_pairs(xs: Column): Column =
-    Bridge.column(FirstBandPairs(Bridge.expression(xs)))
+    Bridge.column(FirstBandPairs(ex(xs)))
 
   /** Word w-shingle STRINGS in one compiled pass (tokens = lowercased
     * whitespace split, empties dropped); `distinct` dedupes per doc in
     * first-occurrence order.
     */
   def word_shingles(text: Column, width: Int, distinct: Boolean = false): Column =
-    Bridge.column(WordShingles(Bridge.expression(text), width, distinct))
+    Bridge.column(WordShingles(ex(text), width, distinct))
 
   /** Elementwise pmod of array<bigint> by a positive constant. */
   def pmod_array(arr: Column, m: Long): Column =
-    Bridge.column(PmodArray(Bridge.expression(arr), m))
+    Bridge.column(PmodArray(ex(arr), m))
 
   /** Compiled left fold acc += weights(b) over bucket ids in array order. */
   def weighted_bucket_sum(arr: Column, weights: Array[Double]): Column =
-    Bridge.column(WeightedBucketSum(Bridge.expression(arr), weights))
+    Bridge.column(WeightedBucketSum(ex(arr), weights))
 
   /** Position-ordered elementwise vector sum over
     * array<struct<pos, ws array<double>>> (the NB classify fold).
     */
   def pos_ordered_vec_sum(arr: Column): Column =
-    Bridge.column(PosOrderedVecSum(Bridge.expression(arr)))
+    Bridge.column(PosOrderedVecSum(ex(arr)))
 
   /** Map-side bucket fold against a dense class-weight table (null row =
     * unseen bucket, skipped): struct(n_matched, sums).
     */
   def bucket_vec_sum(arr: Column, weights: Array[Array[Double]],
                      nClasses: Int): Column =
-    Bridge.column(BucketVecSum(Bridge.expression(arr), weights, nClasses))
+    Bridge.column(BucketVecSum(ex(arr), weights, nClasses))
 
   /** Unicode NFC normalization (canonical compose). */
   def nfc_normalize(text: Column): Column =
-    Bridge.column(NfcNormalize(Bridge.expression(text)))
+    Bridge.column(NfcNormalize(ex(text)))
 
   /** Accent stripping: NFD decompose, drop combining marks. */
   def strip_accents(text: Column): Column =
-    Bridge.column(StripAccents(Bridge.expression(text)))
+    Bridge.column(StripAccents(ex(text)))
 
   /** Common-element count of two sorted, distinct string or bigint arrays
     * (one codegen'd merge pass; see SortedIntersectCount).
     */
   def sorted_intersect_count(a: Column, b: Column): Column =
-    Bridge.column(SortedIntersectCount(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.column(SortedIntersectCount(ex(a), ex(b)))
 
   /** Sorted deduplicated token-hash set of a text (one native pass):
     * string -> ascending array<bigint>.
     */
   def sorted_token_hash_set(text: Column): Column =
-    Bridge.column(SortedTokenHashSet(Bridge.expression(text)))
+    Bridge.column(SortedTokenHashSet(ex(text)))
 
   /** One-pass text statistics: string -> struct<n_tokens, n_chars,
     * n_punct, occ: array<int>, dist: array<int>> (see TextStats).
     */
   def text_stats(text: Column, profiles: Seq[Seq[String]]): Column =
-    Bridge.column(TextStats(Bridge.expression(text), profiles))
+    Bridge.column(TextStats(ex(text), profiles))
 
   /** One-pass int8 quantization: array<float|double> ->
     * struct<codes: array<tinyint>, scale: float>.
     */
   def quantize_i8(vec: Column): Column =
-    Bridge.column(QuantizeI8(Bridge.expression(vec)))
+    Bridge.column(QuantizeI8(ex(vec)))
 
   /** Exact int8 dot product (integer accumulation) -> double. */
   def v_dot_i8(a: Column, b: Column): Column =
-    Bridge.column(DotProductI8(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.column(DotProductI8(ex(a), ex(b)))
 
   /** Binary quantization: array<float|double> -> array<bigint> packed
     * sign bits (bit i set iff x_i > 0).
     */
   def pack_sign_bits(vec: Column): Column =
-    Bridge.column(PackSignBits(Bridge.expression(vec)))
+    Bridge.column(PackSignBits(ex(vec)))
 
   /** popcount(xor) over two packed sign-bit arrays -> int. */
   def v_hamming(a: Column, b: Column): Column =
-    Bridge.column(HammingDistance(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.column(HammingDistance(ex(a), ex(b)))
 
   /** Element-wise vector average aggregate (centroid): array column ->
     * array<double>. Partial-aggregates map-side; see VectorAvg scaladoc.
     */
   def v_avg(c: Column): Column =
-    Bridge.column(VectorAvg(Bridge.expression(c)).toAggregateExpression())
+    Bridge.column(VectorAvg(ex(c)).toAggregateExpression())
 
   /** Hamming distance between two 64-bit hashes. */
   def hamming64(a: Column, b: Column): Column = F.bit_count(a.bitwiseXOR(b))
@@ -337,24 +327,22 @@ package object functions {
 
   // ---- JSON payload surface (maps datafusion-functions-json, SURVEY §2.D) --
 
-  private def path(keys: Seq[String]): String = "$." + keys.mkString(".")
-
   /** json_as_text / ->> : extract as text (NULL if absent). */
   def json_get_str(json: Column, keys: String*): Column =
-    F.get_json_object(json, path(keys))
+    Bridge.column(SqlBuilders.jsonGet(ex(json), keyLits(keys), "json_get_str"))
 
   def json_get_int(json: Column, keys: String*): Column =
-    F.get_json_object(json, path(keys)).cast(LongType)
+    Bridge.column(SqlBuilders.jsonGetAs(ex(json), keyLits(keys), LongType, "json_get_int"))
 
   def json_get_float(json: Column, keys: String*): Column =
-    F.get_json_object(json, path(keys)).cast(DoubleType)
+    Bridge.column(SqlBuilders.jsonGetAs(ex(json), keyLits(keys), DoubleType, "json_get_float"))
 
   def json_get_bool(json: Column, keys: String*): Column =
-    F.get_json_object(json, path(keys)).cast(BooleanType)
+    Bridge.column(SqlBuilders.jsonGetAs(ex(json), keyLits(keys), BooleanType, "json_get_bool"))
 
   /** HAS_FIELD(payload, 'key'): key existence (tests.sql:203-207). */
   def has_field(json: Column, keys: String*): Column =
-    F.get_json_object(json, path(keys)).isNotNull
+    Bridge.column(SqlBuilders.hasField(ex(json), keyLits(keys)))
 
   /** The backend filter DSL's `min_should` combinator: at least `n` of
     * `conds` hold. A NULL condition counts as not-satisfied (three-valued
@@ -371,27 +359,18 @@ package object functions {
     * reference json pack's dual semantics, udfs.rs:13-16); NULL for
     * scalars/absent values under either form.
     */
-  def json_length(json: Column, keys: String*): Column = {
-    // no keys = whole document ("$." is not a valid JSONPath)
-    val j = if (keys.isEmpty) json else F.get_json_object(json, path(keys))
-    F.coalesce(F.json_array_length(j), F.size(F.json_object_keys(j)))
-  }
+  def json_length(json: Column, keys: String*): Column =
+    Bridge.column(SqlBuilders.jsonLength(ex(json), keyLits(keys)))
 
   /** Top-level object keys. */
-  def json_keys(json: Column): Column = F.json_object_keys(json)
+  def json_keys(json: Column): Column = Bridge.column(JsonObjectKeys(ex(json)))
 
   /** MATCH_TEXT relevance: fraction of query terms present in the text
     * (term-overlap scoring; tests.sql:210-214). Tokenization = lowercase
     * whitespace split.
     */
-  def match_text(text: Column, query: String): Column = {
-    val terms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.toIndexedSeq
-    require(terms.nonEmpty,
-      "match_text expects a query with at least one term, got an empty/whitespace-only string")
-    val toks = F.array_distinct(F.split(F.lower(text), "\\s+"))
-    val hits = F.size(F.array_intersect(toks, F.array(terms.map(F.lit): _*)))
-    hits.cast(DoubleType) / F.lit(terms.length.toDouble)
-  }
+  def match_text(text: Column, query: String): Column =
+    Bridge.column(SqlBuilders.matchText(ex(text), Literal(query)))
 
   /** MATCH_PHRASE: occurrences of the exact (whitespace-normalized,
     * case-folded) token sequence in the text — consecutive-token

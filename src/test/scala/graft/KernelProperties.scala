@@ -7,9 +7,10 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import graft.functions._
 
-/** Algebraic property checks of the kernel expressions' interpreted eval
-  * path (no Spark session needed; the codegen path is covered by the
-  * DataFrame-based specs and the DuckDB oracle).
+/** Algebraic property checks of the kernel expressions, run on the
+  * interpreted eval path (no Spark session needed). That eval path and
+  * both codegen paths are pinned bit-equal, kernel by kernel, in
+  * [[KernelParitySpec]].
   */
 object KernelProperties extends Properties("graft.kernels") {
 

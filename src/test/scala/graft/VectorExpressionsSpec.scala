@@ -280,4 +280,42 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(got.sorted.toSeq === ref.sorted)
     assert(got.forall { case (a, b) => a < b })
   }
+
+  test("v_maxsim skips NULL inner vectors through a codegen'd column") {
+    // doc [1,2], NULL, [0,1] vs query [1,0], NULL, [0,1]: max(1, 0) +
+    // max(2, 1) = 3 — the NULL query vector adds nothing, the NULL doc
+    // vector is no candidate; an all-NULL doc scores like an empty one
+    val doc = Seq(Some(Seq(1.0, 2.0)), None, Some(Seq(0.0, 1.0)))
+    val qry = Seq(Some(Seq(1.0, 0.0)), None, Some(Seq(0.0, 1.0)))
+    val df = Seq((doc, qry), (Seq(None), qry), (doc, Seq(None))).toDF("d", "q")
+      .repartition(1).select(v_maxsim(col("d"), col("q")))
+    assert(df.collect().map(_.getDouble(0)).toSeq === Seq(3.0, 0.0, 0.0))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains("v_maxsim")), plan)
+  }
+
+  test("v_maxsim skips NULL inner vectors in a constant-folded literal call") {
+    val df = spark.sql(
+      """SELECT v_maxsim(array(array(1D, 2D), NULL, array(0D, 1D)),
+        |                array(array(1D, 0D), NULL, array(0D, 1D))) AS s""".stripMargin)
+    assert(!df.queryExecution.optimizedPlan.toString.contains("v_maxsim"))
+    assert(df.head().getDouble(0) === 3.0)
+  }
+
+  test("lsh_signature rejects nbits outside [1, 64]") {
+    // bit 64 would wrap onto bit 0 and silently return a wrong bucket
+    intercept[IllegalArgumentException](lsh_signature(col("v"), 8, 65))
+    intercept[IllegalArgumentException](lsh_signature(col("v"), 8, 0))
+    lsh_signature(col("v"), 8, 64)
+  }
+
+  test("lsh_signature rejects dim < 1") {
+    intercept[IllegalArgumentException](lsh_signature(col("v"), 0, 16))
+  }
+
+  test("minhash_signature rejects numHashes < 1") {
+    // an empty signature would make every document collide
+    intercept[IllegalArgumentException](minhash_signature(col("h"), 0))
+    minhash_signature(col("h"), 1)
+  }
 }
