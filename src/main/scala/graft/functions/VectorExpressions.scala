@@ -167,7 +167,8 @@ object VecKernel {
   /** Sum over query vectors of the max dot against the document's
     * vectors. NULL vectors are skipped: a NULL query vector adds nothing,
     * a NULL document vector is no candidate for the max — so an empty or
-    * all-NULL side scores 0.0.
+    * all-NULL side scores 0.0. A NaN dot wins the max and keeps it, so
+    * NaN propagates as it does through `v_dot` and Spark's `max`.
     */
   def maxSim(doc: ArrayData, docF: Boolean, qry: ArrayData, qryF: Boolean): Double = {
     val nq = qry.numElements(); val nd = doc.numElements()
@@ -181,7 +182,7 @@ object VecKernel {
         while (di < nd) {
           if (!doc.isNullAt(di)) {
             val d = dot(qv, qryF, doc.getArray(di), docF)
-            if (d > best) best = d
+            if (java.lang.Double.isNaN(d) || d > best) best = d
             found = true
           }
           di += 1
@@ -286,18 +287,23 @@ object HashKernel {
   }
 
   /** Common elements of two sorted, distinct bigint (`isLong`) or string
-    * arrays, in one merge pass.
+    * arrays, in one merge pass. NULL elements are skipped in both modes:
+    * a NULL never matches.
     */
   def sortedIntersectCount(a: ArrayData, b: ArrayData, isLong: Boolean): Int = {
     val na = a.numElements(); val nb = b.numElements()
     var i = 0; var j = 0; var n = 0
     while (i < na && j < nb) {
-      val c =
-        if (isLong) java.lang.Long.compare(a.getLong(i), b.getLong(j))
-        else a.getUTF8String(i).compareTo(b.getUTF8String(j))
-      if (c == 0) { n += 1; i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
+      if (a.isNullAt(i)) i += 1
+      else if (b.isNullAt(j)) j += 1
+      else {
+        val c =
+          if (isLong) java.lang.Long.compare(a.getLong(i), b.getLong(j))
+          else a.getUTF8String(i).compareTo(b.getUTF8String(j))
+        if (c == 0) { n += 1; i += 1; j += 1 }
+        else if (c < 0) i += 1
+        else j += 1
+      }
     }
     n
   }
@@ -1454,11 +1460,12 @@ object ClassifyKernel {
   /** Elementwise class-weight sum in position order — the compiled twin
     * of aggregate(array_sort(collect_list(struct(pos, ws))), zeros,
     * zip_with(acc, x.ws, _ + _)): same left-assoc IEEE adds per class,
-    * positions unique per doc. Input array is non-empty (a groupBy
-    * group always has rows); all ws arrays share one length.
+    * positions unique per doc; all ws arrays share one length. An empty
+    * array sums to an empty array.
     */
   def posOrderedVecSum(arr: ArrayData, posLong: Boolean): ArrayData = {
     val n = arr.numElements()
+    if (n == 0) return UnsafeArrayData.fromPrimitiveArray(Array.emptyDoubleArray)
     val keys = new Array[Long](n)
     var i = 0
     while (i < n) {

@@ -1286,8 +1286,8 @@ private[graft] object HnswSegment {
     *  - levels recompute from the seeded level draw (deterministic per
     *    id), so no level metadata needs persisting;
     *  - the entry node is the max-level node (smallest id tiebreak) —
-    *    any top-level node navigates; [[search]] derives its own entry
-    *    the same way;
+    *    any top-level node navigates; [[Graph]] derives the walk's
+    *    entry the same way;
     *  - the insert loop may PRUNE an existing node's adjacency in
     *    memory, but stored base edges are immutable — only the new
     *    nodes' rows are appended. The served graph is therefore a
@@ -1331,7 +1331,8 @@ private[graft] object HnswSegment {
 
   /** Serve one segment: greedy descent from the segment's top node,
     * efSearch beam at level 0, top-k (id, raw cosine) back — the page
-    * the caller's merge consumes.
+    * the caller's merge consumes. The one-shot form: it builds a
+    * [[Resident]] and walks it once; a store keeps the Resident.
     *
     * `accept` is the FILTERED-HNSW acceptance predicate (the backend's
     * filtrable-HNSW rule, /root/reference/tests/bin/config.yaml:169-191
@@ -1347,127 +1348,154 @@ private[graft] object HnswSegment {
              query: Array[Double], k: Int, ef: Int,
              seed: Long,
              accept: String => Boolean = _ => true,
-             metric: String = "cosine"): Seq[(String, Double)] = {
-    if (pts.isEmpty) return Nil
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    val cosineMetric = metric != "dot" && metric != "euclid"
-    // zero-norm cosine agrees with SearchSpec.score's None: such points
-    // (and a zero query) cannot rank — both planner arms and the exact
-    // paths drop them, so filtered serves never disagree on degenerate
-    // corpora. They still NAVIGATE (pref scores them 0.0), keeping the
-    // graph connected.
-    if (cosineMetric && qn == 0.0) return Nil
-    val norms = pts.map(t => math.sqrt(t._2.map(x => x * x).sum))
-    // the walk runs on PREFERENCE (higher = closer under any metric);
-    // the returned score converts back to the metric convention
-    val ids = pts.map(_._1)
-    def qs(i: Int): Double = pref(metric, pts(i)._2, norms(i), query, qn)
-    val okId: Int => Boolean = i => accept(pts(i)._1) &&
-      (!cosineMetric || norms(i) != 0.0)
-    walkGraph(ids, edges, k, ef, okId, qs).map { case (j, s) =>
-      (pts(j)._1, if (metric == "euclid") -s else s)
+             metric: String = "cosine"): Seq[(String, Double)] =
+    new Resident(pts, edges).search(query, k, ef, accept, metric)
+
+  /** L2 norm of a vector — the cosine denominator, computed once per
+    * point when a segment loads.
+    */
+  private def norm(v: Array[Double]): Double = math.sqrt(v.map(x => x * x).sum)
+
+  /** One segment as a store keeps it resident: vectors, their norms and
+    * the walk-ready [[Graph]], all built once per load so a search
+    * only walks.
+    */
+  final class Resident(val pts: IndexedSeq[(String, Array[Double])],
+                       edges: IndexedSeq[(Int, String, String)]) {
+    val norms: Array[Double] = pts.iterator.map(t => norm(t._2)).toArray
+    val graph: Graph = Graph(pts.map(_._1), edges)
+
+    def search(query: Array[Double], k: Int, ef: Int,
+               accept: String => Boolean,
+               metric: String): Seq[(String, Double)] = {
+      if (pts.isEmpty) return Nil
+      val qn = norm(query)
+      val cosineMetric = metric != "dot" && metric != "euclid"
+      // zero-norm cosine agrees with SearchSpec.score's None: such points
+      // (and a zero query) cannot rank — both planner arms and the exact
+      // paths drop them, so filtered serves never disagree on degenerate
+      // corpora. They still NAVIGATE (pref scores them 0.0), keeping the
+      // graph connected.
+      if (cosineMetric && qn == 0.0) return Nil
+      // the walk runs on PREFERENCE (higher = closer under any metric);
+      // the returned score converts back to the metric convention
+      def qs(i: Int): Double = pref(metric, pts(i)._2, norms(i), query, qn)
+      val okId: Int => Boolean = i => accept(pts(i)._1) &&
+        (!cosineMetric || norms(i) != 0.0)
+      graph.walk(k, ef, okId, qs).map { case (j, s) =>
+        (pts(j)._1, if (metric == "euclid") -s else s)
+      }
     }
   }
 
-  /** The layered beam walk over (ids, edges) with an ARBITRARY node
-    * preference — the shared core of [[search]] (full-precision
-    * vectors) and the store's int8-code walk (the quantized serving
-    * tier, where `qs` scores codes and full precision never loads).
-    * Returns (node index, preference) pairs, best-first.
+  /** A segment's adjacency in walk-ready form, built once from its
+    * stored edge rows: the id index, every (level, node)'s neighbours in
+    * edge-row order, and the entry node. Immutable, so concurrent walks
+    * share one instance.
     */
-  private[graft] def walkGraph(ids: IndexedSeq[String],
-                               edges: IndexedSeq[(Int, String, String)],
-                               k: Int, ef: Int,
-                               okId: Int => Boolean,
-                               qs: Int => Double): Seq[(Int, Double)] = {
-    if (ids.isEmpty) return Nil
-    val idx = ids.iterator.zipWithIndex.toMap
-    // adjacency by (level, node), traversed UNDIRECTED: the build adds
-    // links in both directions but the mMax prune can drop one side —
-    // or, for an unlucky node, BOTH in-links — orphaning it from a
-    // directed walk. Every node keeps the out-links of its own
-    // insertion, so following edges both ways restores reachability
-    // (degree at most doubles; the beam's ef still bounds work).
-    val adj = scala.collection.mutable.HashMap
-      .empty[(Int, Int), scala.collection.mutable.ArrayBuffer[Int]]
-    var maxLevel = 0
-    edges.foreach { case (lvl, s, t) =>
-      (idx.get(s), idx.get(t)) match {
-        case (Some(si), Some(ti)) =>
-          adj.getOrElseUpdate((lvl, si),
-            scala.collection.mutable.ArrayBuffer.empty[Int]) += ti
-          adj.getOrElseUpdate((lvl, ti),
-            scala.collection.mutable.ArrayBuffer.empty[Int]) += si
-          if (lvl > maxLevel) maxLevel = lvl
-        case _ => // an edge of a dropped point — skip
-      }
-    }
-    // the entry node: highest level any edge reaches it at (the graph
-    // records the hierarchy), smallest id breaking ties — one pass over
-    // the adjacency keys, O(nodes + levels)
-    val topAt = Array.fill(ids.length)(0)
-    adj.keysIterator.foreach { case (lvl, i) =>
-      if (lvl > topAt(i)) topAt(i) = lvl
-    }
-    var entry = 0
-    var entryLevel = topAt(0)
-    var i = 1
-    while (i < ids.length) {
-      if (topAt(i) > entryLevel ||
-        (topAt(i) == entryLevel && ids(i) < ids(entry))) {
-        entry = i; entryLevel = topAt(i)
-      }
-      i += 1
-    }
-    // `ok` gates RESULT admission only — rejected nodes still navigate
-    // (enqueue as candidates when they would improve the beam), the
-    // published filtered-HNSW traversal rule: connectivity survives a
-    // sparse filter because the walk never prunes the graph itself
-    def searchLayer(eps: Seq[Int], lc: Int, limit: Int,
-                    ok: Int => Boolean): Seq[Int] = {
-      val visited = scala.collection.mutable.HashSet.empty[Int]
-      implicit val byBest: Ordering[(Double, Int)] =
-        Ordering.by(t => (t._1, ids(t._2)))
-      val cand = scala.collection.mutable.PriorityQueue.empty[(Double, Int)]
-      val res = scala.collection.mutable.PriorityQueue
-        .empty[(Double, Int)](byBest.reverse)
-      eps.foreach { e =>
-        if (visited.add(e)) {
-          val s = qs(e)
-          cand.enqueue((s, e))
-          if (ok(e)) {
-            res.enqueue((s, e))
-            if (res.size > limit) { res.dequeue(): Unit }
+  final class Graph private (val ids: IndexedSeq[String],
+                             adj: Array[Array[Array[Int]]],
+                             entry: Int, entryLevel: Int) {
+
+    /** The layered beam walk with an ARBITRARY node preference — the
+      * shared core of [[Resident.search]] (full-precision vectors) and
+      * the store's int8-code walk (the quantized serving tier, where
+      * `qs` scores codes and full precision never loads). Returns
+      * (node index, preference) pairs, best-first.
+      */
+    def walk(k: Int, ef: Int, okId: Int => Boolean,
+             qs: Int => Double): Seq[(Int, Double)] = {
+      if (ids.isEmpty) return Nil
+      // `ok` gates RESULT admission only — rejected nodes still navigate
+      // (enqueue as candidates when they would improve the beam), the
+      // published filtered-HNSW traversal rule: connectivity survives a
+      // sparse filter because the walk never prunes the graph itself
+      def searchLayer(eps: Seq[Int], lc: Int, limit: Int,
+                      ok: Int => Boolean): Seq[Int] = {
+        val visited = new scala.collection.mutable.BitSet(ids.length)
+        implicit val byBest: Ordering[(Double, Int)] =
+          Ordering.by(t => (t._1, ids(t._2)))
+        val cand = scala.collection.mutable.PriorityQueue.empty[(Double, Int)]
+        val res = scala.collection.mutable.PriorityQueue
+          .empty[(Double, Int)](byBest.reverse)
+        eps.foreach { e =>
+          if (visited.add(e)) {
+            val s = qs(e)
+            cand.enqueue((s, e))
+            if (ok(e)) {
+              res.enqueue((s, e))
+              if (res.size > limit) { res.dequeue(): Unit }
+            }
           }
         }
-      }
-      var done = false
-      while (!done && cand.nonEmpty) {
-        val (cs, c) = cand.dequeue()
-        if (res.size >= limit && cs < res.head._1) done = true
-        else {
-          adj.getOrElse((lc, c), Nil).foreach { nb =>
-            if (visited.add(nb)) {
-              val s = qs(nb)
-              if (res.size < limit || s > res.head._1) {
-                cand.enqueue((s, nb))
-                if (ok(nb)) {
-                  res.enqueue((s, nb))
-                  if (res.size > limit) { res.dequeue(): Unit }
+        var done = false
+        while (!done && cand.nonEmpty) {
+          val (cs, c) = cand.dequeue()
+          if (res.size >= limit && cs < res.head._1) done = true
+          else {
+            adj(lc)(c).foreach { nb =>
+              if (visited.add(nb)) {
+                val s = qs(nb)
+                if (res.size < limit || s > res.head._1) {
+                  cand.enqueue((s, nb))
+                  if (ok(nb)) {
+                    res.enqueue((s, nb))
+                    if (res.size > limit) { res.dequeue(): Unit }
+                  }
                 }
               }
             }
           }
         }
+        res.toSeq.sortBy(t => (-t._1, ids(t._2))).map(_._2)
       }
-      res.toSeq.sortBy(t => (-t._1, ids(t._2))).map(_._2)
+      val all: Int => Boolean = _ => true
+      var eps: Seq[Int] = Seq(entry)
+      var lc = entryLevel
+      // descent navigates unfiltered: upper layers route, level 0 answers
+      while (lc > 0) { eps = searchLayer(eps, lc, 1, all).take(1); lc -= 1 }
+      val w = searchLayer(eps, 0, math.max(ef, k), okId)
+      w.take(k).map(j => (j, qs(j)))
     }
-    val all: Int => Boolean = _ => true
-    var eps: Seq[Int] = Seq(entry)
-    var lc = entryLevel
-    // descent navigates unfiltered: upper layers route, level 0 answers
-    while (lc > 0) { eps = searchLayer(eps, lc, 1, all).take(1); lc -= 1 }
-    val w = searchLayer(eps, 0, math.max(ef, k), okId)
-    w.take(k).map(j => (j, qs(j)))
+  }
+
+  object Graph {
+    def apply(ids: IndexedSeq[String],
+              edges: IndexedSeq[(Int, String, String)]): Graph = {
+      val n = ids.length
+      val idx = ids.iterator.zipWithIndex.toMap
+      val resolved = edges.flatMap { case (lvl, s, t) =>
+        for (si <- idx.get(s); ti <- idx.get(t)) yield (lvl, si, ti)
+      } // an edge of a dropped point is skipped
+      val levels = resolved.iterator.map(_._1 + 1).maxOption.getOrElse(1)
+      // adjacency by (level, node), traversed UNDIRECTED: the build adds
+      // links in both directions but the mMax prune can drop one side —
+      // or, for an unlucky node, BOTH in-links — orphaning it from a
+      // directed walk. Every node keeps the out-links of its own
+      // insertion, so following edges both ways restores reachability
+      // (degree at most doubles; the beam's ef still bounds work).
+      val lists = Array.fill(levels)(
+        new Array[scala.collection.mutable.ArrayBuilder.ofInt](n))
+      def link(lvl: Int, a: Int, b: Int): Unit = {
+        if (lists(lvl)(a) == null)
+          lists(lvl)(a) = new scala.collection.mutable.ArrayBuilder.ofInt
+        lists(lvl)(a) += b
+      }
+      resolved.foreach { case (lvl, si, ti) => link(lvl, si, ti); link(lvl, ti, si) }
+      // the entry node: highest level any edge reaches it at (the graph
+      // records the hierarchy), smallest id breaking ties
+      val topAt = Array.tabulate(n)(i =>
+        (levels - 1 to 1 by -1).find(l => lists(l)(i) != null).getOrElse(0))
+      var entry = 0
+      var i = 1
+      while (i < n) {
+        if (topAt(i) > topAt(entry) ||
+          (topAt(i) == topAt(entry) && ids(i) < ids(entry))) entry = i
+        i += 1
+      }
+      new Graph(ids,
+        lists.map(_.map(b => if (b == null) Array.emptyIntArray else b.result())),
+        entry, if (n == 0) 0 else topAt(entry))
+    }
   }
 }

@@ -203,8 +203,9 @@ object SearchSpec {
   /** ColBERT MaxSim — bit-identical accumulation to the codegen
     * [[graft.functions.MaxSim]] kernel (sum over query vectors of the
     * max dot against the point's vectors; an empty point set
-    * contributes 0.0), so a pushed multi-vector search scores exactly
-    * like the above-the-scan `v_maxsim` form it replaces.
+    * contributes 0.0; a NaN dot wins the max), so a pushed multi-vector
+    * search scores exactly like the above-the-scan `v_maxsim` form it
+    * replaces.
     */
   def scoreMulti(doc: Array[Array[Float]], qm: Array[Array[Double]]): Double = {
     var total = 0.0
@@ -219,7 +220,7 @@ object SearchSpec {
         var k = 0
         var dot = 0.0
         while (k < n) { dot += qv(k) * dv(k).toDouble; k += 1 }
-        if (dot > best) best = dot
+        if (java.lang.Double.isNaN(dot) || dot > best) best = dot
         di += 1
       }
       if (doc.length > 0) total += best

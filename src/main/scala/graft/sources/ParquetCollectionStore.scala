@@ -3,12 +3,8 @@ package graft.sources
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
@@ -92,8 +88,6 @@ final class ParquetCollectionStore(
   /** Int8-codes files read by the quantized candidate stage. */
   @transient lazy val codesFilesOpened = new AtomicLong(0L)
 
-  private def conf = new Configuration()
-
   /** Dense field name -> stored column name (unnamed collections store
     * their single dense field as `vector`, schema.rs:74-77).
     */
@@ -116,8 +110,7 @@ final class ParquetCollectionStore(
       .sortBy(_.getName)
     var start = 0L
     files.toSeq.map { f =>
-      val in = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(f.getAbsolutePath), conf))
+      val in = ParquetLog.openReader(f.getAbsolutePath)
       try {
         val blocks = in.getRowGroups.asScala.toSeq.map { b =>
           val idStats = b.getColumns.asScala
@@ -224,8 +217,7 @@ final class ParquetCollectionStore(
                        vecCols: Seq[FieldCols],
                        idLower: Option[String],
                        idFilter: Option[Set[String]] = None): Iterator[Point] = {
-    val in = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(fm.path), conf))
+    val in = ParquetLog.openReader(fm.path)
     filesOpened.incrementAndGet()
     try {
       val fileSchema = in.getFooter.getFileMetaData.getSchema
@@ -416,9 +408,10 @@ final class ParquetCollectionStore(
     * store-side analog of the backend serving `QueryPoints` from its
     * per-segment HNSW (the reference backend's index,
     * /root/reference/tests/bin/config.yaml:169-191). Segments load
-    * lazily and stay MEMORY-RESIDENT per store instance (vectors +
-    * adjacency — exactly a real HNSW backend's serving model; size
-    * segments to the executor with the build's numSegments dial).
+    * lazily and stay MEMORY-RESIDENT per store instance (vectors, norms
+    * and the walk-ready graph, each built once per load — exactly a real
+    * HNSW backend's serving model; size segments to the executor with
+    * the build's numSegments dial).
     */
   /** `insertedAt`: the log position up to which the graphs are CURRENT
     * — advanced past `builtAt` by the incremental insert path (every
@@ -455,17 +448,18 @@ final class ParquetCollectionStore(
   }
 
   /** SERVE-memory model: every query fans over all segments, so a
-    * store serving HNSW lazily caches EVERY segment's vectors + edges
-    * in its JVM. `numSegments` bounds BUILD memory (one segment's graph
-    * per task), NOT serve memory per store — the serve-side lever is
-    * SHARDING: a store is one node's slice, and a corpus bigger than
-    * one node's RAM splits across [[ShardedCollectionStore]] members,
-    * each resident for its own slice (exactly a real HNSW backend's
-    * per-node serving model).
+    * store serving HNSW lazily caches EVERY segment's vectors, norms and
+    * walk graph in its JVM, loading each segment ONCE per store instance
+    * (a compute-once map: readers racing on a cold segment wait for the
+    * one load instead of repeating it). `numSegments` bounds BUILD
+    * memory (one segment's graph per task), NOT serve memory per store
+    * — the serve-side lever is SHARDING: a store is one node's slice,
+    * and a corpus bigger than one node's RAM splits across
+    * [[ShardedCollectionStore]] members, each resident for its own
+    * slice (exactly a real HNSW backend's per-node serving model).
     */
-  @transient private lazy val hnswSegCache = scala.collection.concurrent
-    .TrieMap.empty[Int, (IndexedSeq[(String, Array[Double])],
-      IndexedSeq[(Int, String, String)], ParquetCollectionStore)]
+  @transient private lazy val hnswSegCache = new java.util.concurrent
+    .ConcurrentHashMap[Int, graft.ops.HnswSegment.Resident]
 
   /** Quantized-walk serves (specs). */
   @transient lazy val hnswQuantServes = new AtomicLong(0L)
@@ -473,28 +467,27 @@ final class ParquetCollectionStore(
   /** Segments loaded into the QUANTIZED cache (specs). */
   @transient lazy val hnswQuantSegmentsLoaded = new AtomicLong(0L)
 
-  /** The quantized serve tier's resident state, per segment: node ids,
-    * int8 codes, per-vector scales, code L2 norms (cosine's
-    * scale-cancelled denominator), and the edges — ~8x fewer vector
+  /** The quantized serve tier's resident state, per segment: int8
+    * codes, per-vector scales, code L2 norms (cosine's scale-cancelled
+    * denominator), and the walk graph (with the node ids) — ~8x fewer vector
     * bytes than [[hnswSegCache]]'s doubles, which is the point of the
     * tier (the backend's quantized-in-RAM graph traversal,
     * /root/reference/tests/bin/config.yaml:217-219).
     */
-  @transient private lazy val hnswQuantSegCache = scala.collection.concurrent
-    .TrieMap.empty[Int, (IndexedSeq[String], Array[Array[Byte]],
-      Array[Float], Array[Double], IndexedSeq[(Int, String, String)])]
+  @transient private lazy val hnswQuantSegCache = new java.util.concurrent
+    .ConcurrentHashMap[Int, (Array[Array[Byte]], Array[Float], Array[Double],
+      graft.ops.HnswSegment.Graph)]
 
   private def hnswQuantSegmentFor(seg: Int):
-      Option[(IndexedSeq[String], Array[Array[Byte]], Array[Float],
-        Array[Double], IndexedSeq[(Int, String, String)])] = {
+      Option[(Array[Array[Byte]], Array[Float], Array[Double],
+        graft.ops.HnswSegment.Graph)] = {
     val sub = new java.io.File(s"$dir/_hnsw/codes/seg=$seg")
     if (!sub.isDirectory) None
-    else Some(hnswQuantSegCache.getOrElseUpdate(seg, {
+    else Some(hnswQuantSegCache.computeIfAbsent(seg, _ => {
       hnswQuantSegmentsLoaded.incrementAndGet(): Unit
       val rows = Option(sub.listFiles()).getOrElse(Array.empty).toIndexedSeq
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
         .flatMap(f => ParquetLog.readCodeRows(f.getAbsolutePath))
-      val ids = rows.map(_._1)
       val codes = rows.map(_._2).toArray
       val scales = rows.map(_._3).toArray
       val norms = codes.map { cd =>
@@ -503,25 +496,30 @@ final class ParquetCollectionStore(
         while (i < cd.length) { s += cd(i).toDouble * cd(i).toDouble; i += 1 }
         math.sqrt(s)
       }
-      val edir = new java.io.File(s"$dir/_hnsw/edges/seg=$seg")
-      val edges = Option(edir.listFiles()).getOrElse(Array.empty).toIndexedSeq
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .flatMap(f => ParquetLog.readEdgeRows(f.getAbsolutePath))
-      (ids, codes, scales, norms, edges)
+      (codes, scales, norms,
+        graft.ops.HnswSegment.Graph(rows.map(_._1), hnswEdgeRows(seg)))
     }))
+  }
+
+  /** One segment's stored edge rows, base and appended files alike. */
+  private def hnswEdgeRows(seg: Int): IndexedSeq[(Int, String, String)] = {
+    val edir = new java.io.File(s"$dir/_hnsw/edges/seg=$seg")
+    Option(edir.listFiles()).getOrElse(Array.empty).toIndexedSeq
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .flatMap(f => ParquetLog.readEdgeRows(f.getAbsolutePath))
   }
 
   /** Resident VECTOR bytes of the loaded HNSW serve caches (probe
     * surface): the full-precision tier pays 8 bytes/dim, the quantized
     * tier 1 byte/dim + 12 bytes/vector (scale + code norm). Ids and
-    * edges are identical in both tiers and excluded.
+    * graphs are identical in both tiers and excluded.
     */
   def hnswResidentBytes: Long = {
-    val full = hnswSegCache.values.iterator.map { case (pts, _, _) =>
-      pts.iterator.map(p => 8L * p._2.length).sum
+    val full = hnswSegCache.values.asScala.iterator.map { r =>
+      r.pts.iterator.map(p => 8L * p._2.length).sum
     }.sum
-    val quant = hnswQuantSegCache.values.iterator
-      .map { case (_, codes, _, _, _) =>
+    val quant = hnswQuantSegCache.values.asScala.iterator
+      .map { case (codes, _, _, _) =>
         codes.iterator.map(c => c.length.toLong + 12L).sum
       }.sum
     full + quant
@@ -542,22 +540,21 @@ final class ParquetCollectionStore(
     * instantiates once.
     */
   @transient private lazy val hnswSegStores =
-    scala.collection.concurrent.TrieMap.empty[Int, ParquetCollectionStore]
+    new java.util.concurrent.ConcurrentHashMap[Int, ParquetCollectionStore]
 
   private def hnswSegmentStore(seg: Int): Option[ParquetCollectionStore] = {
     val sub = new java.io.File(s"$dir/_hnsw/points/seg=$seg")
     if (!sub.isDirectory) None
-    else Some(hnswSegStores.getOrElseUpdate(seg,
+    else Some(hnswSegStores.computeIfAbsent(seg, _ =>
       new ParquetCollectionStore(sub.getAbsolutePath, collection,
         descriptor)))
   }
 
   private def hnswSegmentFor(sc: HnswSidecar, seg: Int):
-      Option[(IndexedSeq[(String, Array[Double])],
-        IndexedSeq[(Int, String, String)], ParquetCollectionStore)] = {
+      Option[graft.ops.HnswSegment.Resident] = {
     val sub = new java.io.File(s"$dir/_hnsw/points/seg=$seg")
     if (!sub.isDirectory) None
-    else Some(hnswSegCache.getOrElseUpdate(seg, {
+    else Some(hnswSegCache.computeIfAbsent(seg, _ => {
       hnswSegmentsLoaded.incrementAndGet(): Unit
       val st = hnswSegmentStore(seg).get
       val pts = st.queryPoints(collection, 0L, st.pointCount(collection),
@@ -565,11 +562,7 @@ final class ParquetCollectionStore(
         .flatMap(p => ParquetCollectionStore
           .pooledVector(sc.kind, sc.field, p).map((p.id, _)))
         .toIndexedSeq
-      val edir = new java.io.File(s"$dir/_hnsw/edges/seg=$seg")
-      val edges = Option(edir.listFiles()).getOrElse(Array.empty).toIndexedSeq
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .flatMap(f => ParquetLog.readEdgeRows(f.getAbsolutePath))
-      (pts, edges, st)
+      new graft.ops.HnswSegment.Resident(pts, hnswEdgeRows(seg))
     }))
   }
 
@@ -635,10 +628,8 @@ final class ParquetCollectionStore(
       val live: String => Boolean =
         if (hnswDeadIds.isEmpty) _ => true else id => !hnswDeadIds(id)
       val pages = (0 until sc.segments).flatMap { seg =>
-        hnswSegmentFor(sc, seg).toSeq.flatMap { case (pts, edges, _) =>
-          graft.ops.HnswSegment.search(pts, edges, spec.query, window,
-            ef, sc.seed, accept = live, metric = spec.metric)
-        }
+        hnswSegmentFor(sc, seg).toSeq.flatMap(_.search(spec.query, window,
+          ef, live, spec.metric))
       }
       val top = pages.filter { case (_, s) => spec.passes(s) }
         .sortWith { case ((ia, sa), (ib, sb)) =>
@@ -703,7 +694,7 @@ final class ParquetCollectionStore(
     if (cosine && qn == 0.0) return Set.empty // degenerate: tail only
     (0 until sc.segments).flatMap { seg =>
       hnswQuantSegmentFor(seg).toSeq.flatMap {
-        case (ids, codes, scales, norms, edges) =>
+        case (codes, scales, norms, graph) =>
           def intdot(i: Int): Long = {
             val cd = codes(i)
             val n = math.min(cd.length, qc.length)
@@ -719,10 +710,9 @@ final class ParquetCollectionStore(
             } else { i =>
               intdot(i).toDouble * scales(i).toDouble * qScale.toDouble
             }
-          val ok: Int => Boolean = i => admit(ids(i)) &&
+          val ok: Int => Boolean = i => admit(graph.ids(i)) &&
             (!cosine || norms(i) != 0.0)
-          graft.ops.HnswSegment.walkGraph(ids, edges, candK, ef, ok, qsF)
-            .map { case (j, _) => ids(j) }
+          graph.walk(candK, ef, ok, qsF).map { case (j, _) => graph.ids(j) }
       }
     }.toSet
   }
@@ -827,10 +817,8 @@ final class ParquetCollectionStore(
             val ef = widenedEf.toInt
             val desc = SearchSpec.descending(spec.metric)
             val top = (0 until sc.segments).flatMap { seg =>
-              hnswSegmentFor(sc, seg).toSeq.flatMap { case (pts, edges, _) =>
-                graft.ops.HnswSegment.search(pts, edges, spec.query, window,
-                  ef, sc.seed, accept = matched, metric = spec.metric)
-              }
+              hnswSegmentFor(sc, seg).toSeq.flatMap(_.search(spec.query,
+                window, ef, matched, spec.metric))
             }.filter { case (_, s) => spec.passes(s) }
               .sortWith { case ((ia, sa), (ib, sb)) =>
                 if (sa != sb) { if (desc) sa > sb else sa < sb }
@@ -981,10 +969,8 @@ final class ParquetCollectionStore(
       quantCandidates(sc, spec, candK, ef, admit)
     } else
       (0 until sc.segments).flatMap { seg =>
-        hnswSegmentFor(sc, seg).toSeq.flatMap { case (pts, edges, _) =>
-          graft.ops.HnswSegment.search(pts, edges, spec.query,
-            candK, ef, sc.seed, accept = admit, metric = "dot")
-        }
+        hnswSegmentFor(sc, seg).toSeq.flatMap(_.search(spec.query,
+          candK, ef, admit, "dot"))
       }.map(_._1).toSet
 
   /** Exact MaxSim rescore of ONLY the candidate margin, from the

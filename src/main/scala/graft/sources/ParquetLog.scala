@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -42,7 +43,35 @@ private[sources] object ParquetLog {
 
   final case class SegMeta(path: String, start: Long, end: Long)
 
-  private def conf = new Configuration()
+  /** The JVM's Hadoop configuration, parsed once. A fresh
+    * `Configuration` parses the default XML resources and searches
+    * every jar on the classpath for a site file on first use, which
+    * costs more than reading a small file; the copy constructor clones
+    * the parsed properties and reads no XML. Every open takes its own
+    * copy, so nothing parquet sets on a conf leaks between opens.
+    */
+  private lazy val loaded: Configuration = {
+    val c = new Configuration()
+    // this JVM-wide value must not keep the context loader of whichever
+    // (task) thread happened to touch it first
+    c.setClassLoader(getClass.getClassLoader)
+    c.size(): Unit // forces the one parse
+    c
+  }
+
+  private def conf: Configuration = new Configuration(loaded)
+
+  /** Open one parquet file for reading on a copy of the loaded
+    * configuration — the one reader-open path of the store and its
+    * sidecars. The read options are built per open and never shared:
+    * they carry a codec factory whose decompressors are reused, which
+    * concurrent readers of one instance would corrupt.
+    */
+  def openReader(path: String): ParquetFileReader = {
+    val c = conf
+    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), c),
+      HadoopReadOptions.builder(c).build())
+  }
 
   private val SegName = """seg-(\d{20})-(\d{20})\.parquet""".r
 
@@ -195,9 +224,10 @@ private[sources] object ParquetLog {
                   groups: Iterator[Group]): Unit = {
     val tmp = new File(dest.getParentFile,
       s".tmp-${java.util.UUID.randomUUID().toString.take(8)}-${dest.getName}")
+    val c = conf
     val w = ExampleParquetWriter.builder(
-        HadoopOutputFile.fromPath(new Path(tmp.getAbsolutePath), conf))
-      .withType(schema).build()
+        HadoopOutputFile.fromPath(new Path(tmp.getAbsolutePath), c))
+      .withConf(c).withType(schema).build()
     try groups.foreach(w.write) finally w.close()
     // stale checksum shadows of the tmp name and the destination
     new File(tmp.getParentFile, s".${tmp.getName}.crc").delete()
@@ -375,8 +405,7 @@ private[sources] object ParquetLog {
 
   /** Stream a whole parquet file's groups (row-group at a time). */
   private def readGroups(path: String)(f: (Group, MessageType) => Unit): Unit = {
-    val in = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(path), conf))
+    val in = openReader(path)
     try {
       val schema = in.getFooter.getFileMetaData.getSchema
       val colIO = new ColumnIOFactory().getColumnIO(schema)
@@ -606,8 +635,7 @@ private[sources] object ParquetLog {
     // the codec comes from the primary file's OWN schema (columns mirror
     // 1:1 — field name = column name for segment bytes; the store's
     // descriptor re-keys on read)
-    val in = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(primaryPath), conf))
+    val in = openReader(primaryPath)
     val codec = try RowCodec.fromMessageType(
       in.getFooter.getFileMetaData.getSchema) finally in.close()
     val schema = logSchema(codec)
@@ -633,8 +661,7 @@ private[sources] object ParquetLog {
       .sortBy(_.getName)
     var start = 0L
     files.toSeq.map { f =>
-      val in = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(f.getAbsolutePath), conf))
+      val in = openReader(f.getAbsolutePath)
       val rows = try in.getRowGroups.asScala.map(_.getRowCount.toLong).sum
                  finally in.close()
       val m = (f.getAbsolutePath, start, rows)

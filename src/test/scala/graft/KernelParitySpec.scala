@@ -25,7 +25,9 @@ import graft.sources.SearchSpec
   * `floatToIntBits`) or all six must throw the same exception class.
   * Inputs: seeded random values, a NULL input, arrays with NULL elements,
   * empty arrays, NaN/±0.0/∞ elements, empty and whitespace-only strings,
-  * non-ASCII text, and float, double and mixed element types.
+  * non-ASCII text, and float, double and mixed element types. Pinned rows
+  * also fix the value all six paths must return, for degenerate inputs
+  * where agreement alone is not enough.
   *
   * The store-side scorers (`SearchSpec.score`/`scoreSparse`/`scoreMulti`,
   * the wire-serving copies over `Array[Float]`) are pinned against the
@@ -315,6 +317,37 @@ class KernelParitySpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  private def maxSimRow(de: DataType, qe: DataType): Case =
+    Case(Seq(vecT(vecT(de)), vecT(vecT(qe))), es => MaxSim(es(0), es(1)), Nil)
+
+  /** Rows whose outcome is pinned, not only agreed on: (kernel row, input,
+    * the value every path must return).
+    */
+  private val pinned: Seq[(Case, Seq[Any], Any)] = Seq(
+    // a NaN dot propagates through the max instead of losing to its -∞ seed
+    (maxSimRow(FloatType, DoubleType), Seq(Seq(Seq(1f, 2f)), Seq(Seq(Double.NaN, 1.0))),
+      Double.NaN),
+    (maxSimRow(DoubleType, DoubleType), Seq(Seq(Seq(1.0, 2.0), Seq(3.0, 4.0)),
+      Seq(Seq(Double.NaN, 1.0), Seq(1.0, 0.0))), Double.NaN),
+    // an empty position array sums to an empty vector
+    (Case(Seq(posStruct(IntegerType, D)), es => PosOrderedVecSum(es(0)), Nil),
+      Seq(Seq.empty), Seq.empty[Double]),
+    // a NULL element never matches, in either mode
+    (Case(Seq(vecT(StringType), vecT(StringType)), es => SortedIntersectCount(es(0), es(1)), Nil),
+      Seq(Seq("a", null), Seq("a", "b")), 1),
+    (Case(Seq(L, L), es => SortedIntersectCount(es(0), es(1)), Nil),
+      Seq(Seq(null, 5L), Seq(0L, 5L)), 1))
+
+  test("pinned rows: NaN through v_maxsim, NULL elements in sorted_intersect_count, empty pos_ordered_vec_sum") {
+    pinned.foreach { case (c, in, want) =>
+      runAll(c.expr, c.types)(in).foreach { case (path, o) =>
+        assert(o == Right(canon(want)), s"${c.kernel} on $in: $path gave $o, want $want")
+      }
+    }
+    assert(java.lang.Double.isNaN(SearchSpec.scoreMulti(
+      Array(Array(1f, 2f)), Array(Array(Double.NaN, 1.0)))))
   }
 
   test("every case class in VectorExpressions.scala has a parity row") {
