@@ -68,9 +68,8 @@ import graft.collections.{CollectionDescriptor, DenseField}
   * (`compactLog` past the freshness point) disables the sidecar until
   * the offline rebuild reruns — never silently stale, by construction.
   *
-  * Rows of one row group are buffered during decode (bounded by row-group
-  * sizing, the standard parquet memory unit), never the file or the
-  * collection.
+  * A read buffers the kept rows of one file at a time (row-group skips
+  * bound what decodes), never the collection.
   */
 final class ParquetCollectionStore(
     val dir: String, collection: String,
@@ -98,7 +97,7 @@ final class ParquetCollectionStore(
                                maxId: Option[String])
   private case class FileMeta(path: String, start: Long, rows: Long,
                               minId: Option[String], maxId: Option[String],
-                              blocks: Seq[BlockMeta])
+                              blocks: Seq[BlockMeta], columns: Set[String])
 
   /** Footer metadata of the file sequence (row counts + id-column max
     * stats) — recomputed lazily per JVM; footers are a few KB per file.
@@ -130,7 +129,10 @@ final class ParquetCollectionStore(
           Some(blocks.flatMap(_.minId).minBy(identity)(Ordering.fromLessThan(
             (a: String, b: String) => SparkStringOrder.gt(b, a))))
         else None
-        val m = FileMeta(f.getAbsolutePath, start, rows, minId, maxId, blocks)
+        val columns = in.getFooter.getFileMetaData.getSchema.getFields
+          .asScala.map(_.getName).toSet
+        val m = FileMeta(f.getAbsolutePath, start, rows, minId, maxId, blocks,
+          columns)
         start += rows
         m
       } finally in.close()
@@ -148,6 +150,10 @@ final class ParquetCollectionStore(
     require(c == collection, s"store at $dir serves '$collection', not '$c'")
     fileMetas.map(_.rows).sum
   }
+
+  /** Top-level columns every file of the store holds (from the footers). */
+  private def storedColumns: Set[String] =
+    fileMetas.map(_.columns).reduceOption(_ intersect _).getOrElse(Set.empty)
 
   /** Everything at or below the keyset bound is filtered anyway — skip
     * the IO when footer stats prove it.
@@ -189,6 +195,12 @@ final class ParquetCollectionStore(
       case _ => DenseCol(f, columnOf(f))
     }
 
+  private def physicalCols(fc: FieldCols): Seq[String] = fc match {
+    case DenseCol(_, cn) => Seq(cn)
+    case SparseCols(_, ic, vc) => Seq(ic, vc)
+    case MultiCol(_, cn) => Seq(cn)
+  }
+
   override def queryPoints(c: String, from: Long, until: Long,
                            withPayload: Boolean, vectorFields: Seq[String],
                            limit: Option[Int],
@@ -209,8 +221,10 @@ final class ParquetCollectionStore(
   }
 
   /** Decode one file's row groups overlapping [from, until): requested-
-    * schema projection, row-group skip outside the window or below the
-    * keyset bound, rows buffered one row group at a time.
+    * schema projection, row-group skip outside the window, below the
+    * keyset bound or clear of the id filter. The file's kept rows are
+    * buffered whole before the iterator returns (the reader closes
+    * first).
     */
   private def readFile(fm: FileMeta, from: Long, until: Long,
                        withPayload: Boolean,
@@ -222,11 +236,7 @@ final class ParquetCollectionStore(
     try {
       val fileSchema = in.getFooter.getFileMetaData.getSchema
       val keep = Seq("id") ++ (if (withPayload) Seq("payload") else Nil) ++
-        vecCols.flatMap {
-          case DenseCol(_, cn) => Seq(cn)
-          case SparseCols(_, ic, vc) => Seq(ic, vc)
-          case MultiCol(_, cn) => Seq(cn)
-        }
+        vecCols.flatMap(physicalCols)
       val requested = new MessageType(fileSchema.getName,
         fileSchema.getFields.asScala.filter(t => keep.contains(t.getName)).asJava)
       in.setRequestedSchema(requested)
@@ -408,10 +418,12 @@ final class ParquetCollectionStore(
     * store-side analog of the backend serving `QueryPoints` from its
     * per-segment HNSW (the reference backend's index,
     * /root/reference/tests/bin/config.yaml:169-191). Segments load
-    * lazily and stay MEMORY-RESIDENT per store instance (vectors, norms
-    * and the walk-ready graph, each built once per load — exactly a real
-    * HNSW backend's serving model; size segments to the executor with
-    * the build's numSegments dial).
+    * lazily and stay MEMORY-RESIDENT per store instance (the rows —
+    * payload and vectors, id-indexed — plus vectors, norms and the
+    * walk-ready graph, each built once per load — exactly a real HNSW
+    * backend's serving model; size segments to the executor with the
+    * build's numSegments dial). A full-precision search opens no
+    * parquet once its segments are loaded.
     */
   /** `insertedAt`: the log position up to which the graphs are CURRENT
     * — advanced past `builtAt` by the incremental insert path (every
@@ -449,7 +461,8 @@ final class ParquetCollectionStore(
 
   /** SERVE-memory model: every query fans over all segments, so a
     * store serving HNSW lazily caches EVERY segment's vectors, norms and
-    * walk graph in its JVM, loading each segment ONCE per store instance
+    * walk graph (and, at full precision, its rows — [[hnswRowsCache]])
+    * in its JVM, loading each segment ONCE per store instance
     * (a compute-once map: readers racing on a cold segment wait for the
     * one load instead of repeating it). `numSegments` bounds BUILD
     * memory (one segment's graph per task), NOT serve memory per store
@@ -509,20 +522,23 @@ final class ParquetCollectionStore(
       .flatMap(f => ParquetLog.readEdgeRows(f.getAbsolutePath))
   }
 
-  /** Resident VECTOR bytes of the loaded HNSW serve caches (probe
-    * surface): the full-precision tier pays 8 bytes/dim, the quantized
-    * tier 1 byte/dim + 12 bytes/vector (scale + code norm). Ids and
-    * graphs are identical in both tiers and excluded.
+  /** Resident VECTOR and PAYLOAD bytes of the loaded HNSW serve caches
+    * (probe surface): the full-precision tier pays 8 bytes/dim for the
+    * walk's vectors plus its resident rows ([[SegmentRows.bytes]]); the
+    * quantized tier pays 1 byte/dim + 12 bytes/vector (scale + code
+    * norm) and holds no rows. Ids and graphs are identical in both
+    * tiers and excluded.
     */
   def hnswResidentBytes: Long = {
     val full = hnswSegCache.values.asScala.iterator.map { r =>
       r.pts.iterator.map(p => 8L * p._2.length).sum
     }.sum
+    val rows = hnswRowsCache.values.asScala.iterator.map(_.bytes).sum
     val quant = hnswQuantSegCache.values.asScala.iterator
       .map { case (codes, _, _, _) =>
         codes.iterator.map(c => c.length.toLong + 12L).sum
       }.sum
-    full + quant
+    full + rows + quant
   }
 
   /** Tombstoned graph nodes (the backend's deleted-flags model): a
@@ -535,9 +551,9 @@ final class ParquetCollectionStore(
     ParquetCollectionStore.readIdFlags(
       new java.io.File(s"$dir/_hnsw/dead.txt"))
 
-  /** The segment sub-store alone (winner fetches, the exact micro-path)
-    * — no graph load, shared with [[hnswSegmentFor]] so each segment
-    * instantiates once.
+  /** The segment sub-store alone (the rows load, and the codes tier's
+    * margin reads) — no graph load, shared by every segment reader so
+    * each segment instantiates once.
     */
   @transient private lazy val hnswSegStores =
     new java.util.concurrent.ConcurrentHashMap[Int, ParquetCollectionStore]
@@ -550,15 +566,135 @@ final class ParquetCollectionStore(
         descriptor)))
   }
 
+  /** Segment-partition files opened by this store's HNSW serve (specs). */
+  private[sources] def hnswSegmentFilesOpened: Long =
+    hnswSegStores.values.asScala.iterator.map(_.filesOpened.get).sum
+
+  /** The int8 codes tier serves this store: a rescore margin was asked
+    * for and `_hnsw/codes` exists. Such a store walks codes (for the
+    * inner-product metrics; euclid walks full precision) and reads full
+    * precision only for its margins, from parquet — its rows never
+    * become resident, which is the tier's RAM claim.
+    */
+  private def hnswCodesTier: Boolean =
+    hnswCandidateK > 0 && new java.io.File(s"$dir/_hnsw/codes").isDirectory
+
+  /** A full-precision segment's ROWS as the store keeps them resident:
+    * every point of the partition in decode order, with its payload and
+    * every vector field the partition stores (keyed by physical column,
+    * [[rowKey]]), plus an id -> slots index. Duplicate ids keep every
+    * slot, as a parquet read returns them.
+    */
+  private final class SegmentRows(rows: IndexedSeq[Point],
+                                  payload: Boolean, cols: Set[String]) {
+    private val slots: Map[String, Array[Int]] =
+      rows.indices.groupBy(i => rows(i).id).map { case (id, is) =>
+        id -> is.toArray }
+
+    /** Whether the rows hold everything a read of (`withPayload`,
+      * `fcs`) returns.
+      */
+    def covers(withPayload: Boolean, fcs: Seq[FieldCols]): Boolean =
+      (!withPayload || payload) && fcs.flatMap(physicalCols).forall(cols)
+
+    /** The rows of `ids` (every row for None) in slot order. */
+    def select(ids: Option[Set[String]]): Iterator[Point] = ids match {
+      case None => rows.iterator
+      case Some(want) if want.size >= rows.size =>
+        rows.iterator.filter(p => want(p.id))
+      case Some(want) =>
+        want.iterator.flatMap(id => slots.getOrElse(id, Array.emptyIntArray))
+          .toArray.sorted.iterator.map(rows)
+    }
+
+    /** 4 bytes per stored float or sparse index, plus payload UTF-8 bytes. */
+    def bytes: Long = rows.iterator.map { p =>
+      p.payload.fold(0L)(_.getBytes(
+        java.nio.charset.StandardCharsets.UTF_8).length.toLong) +
+        4L * (p.dense.valuesIterator.map(_.length).sum +
+          p.multi.valuesIterator.map(_.iterator.map(_.length).sum).sum +
+          p.sparse.valuesIterator.map(t => t._1.length + t._2.length).sum)
+    }.sum
+  }
+
+  /** The key a resident row stores a field under: dense and multi by
+    * physical column (an unnamed collection's one column answers to any
+    * requested name, as [[queryPoints]] does), sparse by field name.
+    */
+  private def rowKey(fc: FieldCols): String = fc match {
+    case DenseCol(_, cn) => cn
+    case MultiCol(_, cn) => cn
+    case SparseCols(f, _, _) => f
+  }
+
+  /** A resident row narrowed to what a parquet read of (`withPayload`,
+    * `fcs`) returns: requested keys, in request order.
+    */
+  private def narrowRow(p: Point, withPayload: Boolean,
+                        fcs: Seq[FieldCols]): Point =
+    Point(p.id, if (withPayload) p.payload else None,
+      dense = fcs.flatMap {
+        case fc @ DenseCol(f, _) => p.dense.get(rowKey(fc)).map(f -> _)
+        case _ => None
+      }.toMap,
+      multi = fcs.flatMap {
+        case fc @ MultiCol(f, _) => p.multi.get(rowKey(fc)).map(f -> _)
+        case _ => None
+      }.toMap,
+      sparse = fcs.flatMap {
+        case fc @ SparseCols(f, _, _) => p.sparse.get(rowKey(fc)).map(f -> _)
+        case _ => None
+      }.toMap)
+
+  /** Resident rows per segment ([[SegmentRows]]), filled once per store
+    * instance by a compute-once map — never on a codes-tier store.
+    */
+  @transient private lazy val hnswRowsCache = new java.util.concurrent
+    .ConcurrentHashMap[Int, SegmentRows]
+
+  /** Segments whose rows are resident (specs). */
+  private[sources] def hnswRowSegments: Int = hnswRowsCache.size
+
+  private def hnswRowsFor(sc: HnswSidecar, seg: Int): Option[SegmentRows] =
+    if (hnswCodesTier) None
+    else hnswSegmentStore(seg).map(st => hnswRowsCache.computeIfAbsent(seg,
+      _ => {
+        val stored = st.storedColumns
+        val fcs = (descriptor.fields.map(_.name) :+ sc.field).map(fieldCols)
+          .filter(fc => physicalCols(fc).forall(stored))
+        val payload = stored("payload")
+        new SegmentRows(st.queryPoints(collection, 0L,
+            st.pointCount(collection), payload, fcs.map(rowKey).distinct,
+            None).toIndexedSeq,
+          payload, fcs.flatMap(physicalCols).toSet)
+      }))
+
+  /** One segment's points for `ids` (every point for None) as a read of
+    * (`withPayload`, `fields`) returns them: from the resident rows when
+    * this store serves full precision and they hold those pieces, else
+    * decoded from the segment partition (the codes tier's path).
+    */
+  private def segmentPoints(sc: HnswSidecar, seg: Int, c: String,
+                            withPayload: Boolean, fields: Seq[String],
+                            ids: Option[Set[String]]): Iterator[Point] = {
+    require(c == collection, s"store at $dir serves '$collection', not '$c'")
+    val fcs = fields.distinct.map(fieldCols)
+    hnswRowsFor(sc, seg).filter(_.covers(withPayload, fcs)) match {
+      case Some(r) => r.select(ids).map(narrowRow(_, withPayload, fcs))
+      case None => hnswSegmentStore(seg).iterator.flatMap(st =>
+        st.queryPoints(c, 0L, st.pointCount(c), withPayload, fields, None,
+          idFilter = ids))
+    }
+  }
+
   private def hnswSegmentFor(sc: HnswSidecar, seg: Int):
       Option[graft.ops.HnswSegment.Resident] = {
     val sub = new java.io.File(s"$dir/_hnsw/points/seg=$seg")
     if (!sub.isDirectory) None
     else Some(hnswSegCache.computeIfAbsent(seg, _ => {
       hnswSegmentsLoaded.incrementAndGet(): Unit
-      val st = hnswSegmentStore(seg).get
-      val pts = st.queryPoints(collection, 0L, st.pointCount(collection),
-          withPayload = false, Seq(sc.field), None)
+      val pts = segmentPoints(sc, seg, collection, withPayload = false,
+          Seq(sc.field), None)
         .flatMap(p => ParquetCollectionStore
           .pooledVector(sc.kind, sc.field, p).map((p.id, _)))
         .toIndexedSeq
@@ -584,8 +720,8 @@ final class ParquetCollectionStore(
     * the backend's filtrable-HNSW planner:
     *   - tiny matched set (<= max(4·window,
     *     [[ParquetCollectionStore.hnswFilteredExactMax]])): score the
-    *     matched ids directly from the segment partitions — exact, the
-    *     graph never walks (qdrant's below-full-scan-threshold arm);
+    *     matched ids directly from the resident segment rows — exact,
+    *     the graph never walks (qdrant's below-full-scan-threshold arm);
     *   - otherwise: the accepting graph walk — every node navigates,
     *     only matching ids enter the result beam, `ef` widened by the
     *     inverse match fraction to hold recall as the filter thins the
@@ -617,8 +753,7 @@ final class ParquetCollectionStore(
       // codes (8x fewer resident bytes), exact-rescore only the margin.
       // int8 approximates the inner-product metrics; euclid serves
       // full-precision.
-      if (hnswCandidateK > 0 && spec.metric != "euclid" &&
-          new java.io.File(s"$dir/_hnsw/codes").isDirectory)
+      if (hnswCodesTier && spec.metric != "euclid")
         hnswQuantizedPage(sc, c, spec, withPayload, vectorFields, pfilter,
           tail, window)
       else {
@@ -728,9 +863,7 @@ final class ParquetCollectionStore(
     val keep = vectorFields.toSet
     val want = (vectorFields :+ spec.field).distinct
     val page = (0 until sc.segments).flatMap { seg =>
-      hnswSegmentStore(seg).toSeq.flatMap(st =>
-        st.queryPoints(c, 0L, st.pointCount(c), withPayload, want, None,
-          idFilter = Some(cands)))
+      segmentPoints(sc, seg, c, withPayload, want, Some(cands))
     }.flatMap { p =>
       p.dense.get(spec.field)
         .flatMap(v => SearchSpec.score(spec.metric, v, spec.query))
@@ -787,9 +920,7 @@ final class ParquetCollectionStore(
             val want = (vectorFields :+ spec.field).distinct
             val keep = vectorFields.toSet
             (0 until sc.segments).flatMap { seg =>
-              hnswSegmentStore(seg).toSeq.flatMap(st =>
-                st.queryPoints(c, 0L, st.pointCount(c), withPayload, want,
-                  None, idFilter = Some(matched)))
+              segmentPoints(sc, seg, c, withPayload, want, Some(matched))
             }.flatMap { p =>
               p.dense.get(spec.field)
                 .flatMap(v => SearchSpec.score(spec.metric, v, spec.query))
@@ -797,8 +928,7 @@ final class ParquetCollectionStore(
                 .map(s =>
                   (p.copy(dense = p.dense.view.filterKeys(keep).toMap), s))
             }
-          } else if (hnswCandidateK > 0 && spec.metric != "euclid" &&
-              new java.io.File(s"$dir/_hnsw/codes").isDirectory) {
+          } else if (hnswCodesTier && spec.metric != "euclid") {
             // the QUANTIZED walk under a filter: same accepting-walk
             // rule over the int8 codes (matched ids gate the beam,
             // everything navigates), exact rescore of the margin — the
@@ -963,8 +1093,7 @@ final class ParquetCollectionStore(
   private def multiCandidates(sc: HnswSidecar, spec: SearchSpec,
                               candK: Int, ef: Int,
                               admit: String => Boolean): Set[String] =
-    if (hnswCandidateK > 0 &&
-        new java.io.File(s"$dir/_hnsw/codes").isDirectory) {
+    if (hnswCodesTier) {
       hnswQuantServes.incrementAndGet(): Unit
       quantCandidates(sc, spec, candK, ef, admit)
     } else
@@ -974,9 +1103,9 @@ final class ParquetCollectionStore(
       }.map(_._1).toSet
 
   /** Exact MaxSim rescore of ONLY the candidate margin, from the
-    * segment partitions (they carry the full rows — the primary corpus
-    * files never open) — best-first with the id tiebreak; callers
-    * window and mask.
+    * resident segment rows (the segment partitions on a codes-tier
+    * store; the primary corpus files never open) — best-first with the
+    * id tiebreak; callers window and mask.
     */
   private def multiExactMaxSim(sc: HnswSidecar, c: String, spec: SearchSpec,
                                qm: Array[Array[Double]],
@@ -985,9 +1114,7 @@ final class ParquetCollectionStore(
                                cands: Set[String]): Seq[(Point, Double)] = {
     val want = (vectorFields :+ spec.field).distinct
     val page = (0 until sc.segments).flatMap { seg =>
-      hnswSegmentStore(seg).toSeq.flatMap(st =>
-        st.queryPoints(c, 0L, st.pointCount(c), withPayload, want,
-          None, idFilter = Some(cands)))
+      segmentPoints(sc, seg, c, withPayload, want, Some(cands))
     }.flatMap { p =>
       p.multi.get(spec.field)
         .map(dm => SearchSpec.scoreMulti(dm, qm))
@@ -1000,16 +1127,15 @@ final class ParquetCollectionStore(
     }
   }
 
-  /** Winners' requested pieces from the SEGMENT partitions — the
-    * primary corpus files never open.
+  /** Winners' requested pieces from the resident segment rows (the
+    * segment partitions on a codes-tier store) — the primary corpus
+    * files never open.
     */
   private def hnswFetch(sc: HnswSidecar, c: String, ids: Set[String],
                         withPayload: Boolean,
                         vectorFields: Seq[String]): Map[String, Point] =
     (0 until sc.segments).flatMap { seg =>
-      hnswSegmentStore(seg).toSeq.flatMap(st =>
-        st.queryPoints(c, 0L, st.pointCount(c), withPayload,
-          vectorFields, None, idFilter = Some(ids)))
+      segmentPoints(sc, seg, c, withPayload, vectorFields, Some(ids))
     }.map(p => p.id -> p).toMap
 
   /** Exact matched-id set of a fully index-servable filter (every
@@ -1026,16 +1152,22 @@ final class ParquetCollectionStore(
     */
   // keyed on the STRUCTURAL filter (case-class equality), not its
   // describe string — a filter value containing describe syntax must
-  // never collide with a structurally different filter
-  @transient private lazy val hnswIdCache = scala.collection.concurrent
-    .TrieMap.empty[(PayloadFilter, Long), Option[(Set[String], Long)]]
+  // never collide with a structurally different filter; a compute-once
+  // map, so readers racing on a fresh instance's first filtered search
+  // resolve each filter once
+  @transient private lazy val hnswIdCache = new java.util.concurrent
+    .ConcurrentHashMap[(PayloadFilter, Long), Option[(Set[String], Long)]]
+
+  /** Filter resolutions run by [[indexResolvedIds]] (specs). */
+  @transient lazy val hnswFilterResolutions = new AtomicLong(0L)
 
   private def indexResolvedIds(pfilter: PayloadFilter): Option[(Set[String], Long)] = {
     if (pfilter.must.isEmpty || pfilter.mustNot.nonEmpty ||
       pfilter.minShould.nonEmpty) return None
     val head = if (logEnabled) ParquetLog.head(logDir) else 0L
     if (hnswIdCache.size > 64) hnswIdCache.clear()
-    hnswIdCache.getOrElseUpdate((pfilter, head), {
+    hnswIdCache.computeIfAbsent((pfilter, head), _ => {
+      hnswFilterResolutions.incrementAndGet(): Unit
       val arms = indexArms(pfilter)
       if (!pfilter.must.forall(c => arms.exists(_.sc.servable(c)))) None
       else {

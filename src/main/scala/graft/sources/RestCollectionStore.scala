@@ -779,8 +779,11 @@ final class CollectionHttpServer(storeName: String, poolSize: Int = 8,
                                  apiKey: Option[String] = None) {
   import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-  private val server = HttpServer.create(
-    new InetSocketAddress(java.net.InetAddress.getLoopbackAddress, 0), 0)
+  private val server = {
+    CollectionHttpServer.noDelay: Unit
+    HttpServer.create(
+      new InetSocketAddress(java.net.InetAddress.getLoopbackAddress, 0), 0)
+  }
   // DAEMON worker threads: the server is infrastructure, not work — it
   // must never keep the JVM alive once main() returns (a non-daemon pool
   // deadlocks exit: the JVM waits on the pool, and the shutdown hook that
@@ -851,5 +854,22 @@ final class CollectionHttpServer(storeName: String, poolSize: Int = 8,
     ex.sendResponseHeaders(code, bytes.length.toLong)
     val os = ex.getResponseBody
     try os.write(bytes) finally os.close()
+  }
+}
+
+object CollectionHttpServer {
+  private val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  /** TCP_NODELAY on the JDK server's sockets. Left off, Nagle's
+    * algorithm holds part of each reply until the client's delayed ACK
+    * (~40 ms per request, measured on loopback). The
+    * property is the server's only switch and is read once per JVM, so
+    * it is set before the first server is created — unless it is
+    * already set, in which case the caller's value stands.
+    */
+  lazy val noDelay: Boolean = {
+    if (System.getProperty(NoDelayProperty) == null)
+      System.setProperty(NoDelayProperty, "true")
+    java.lang.Boolean.getBoolean(NoDelayProperty)
   }
 }

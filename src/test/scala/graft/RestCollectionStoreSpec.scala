@@ -848,4 +848,18 @@ class RestCollectionStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(inner.pointCount("c") === 20L)
     } finally srv.stop()
   }
+
+  test("REST searches do not wait on delayed ACKs: the server sends with TCP_NODELAY") {
+    val spec = SearchSpec("text_embedding", Array(1.0, 0.5), "cosine", 4)
+    (0 until 5).foreach(_ => client.searchPoints("c", spec, withPayload = true,
+      allFields))
+    val ms = (0 until 40).map { _ =>
+      val t0 = System.nanoTime()
+      client.searchPoints("c", spec, withPayload = true, allFields)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val p75 = ms(29)
+    assert(p75 < 20.0, f"p75 $p75%.1f ms over 40 searches: ${ms.mkString(", ")}")
+    assert(CollectionHttpServer.noDelay)
+  }
 }

@@ -13,7 +13,8 @@ import graft.collections._
   * on its own copy of the JVM's loaded configuration with its own read
   * options, so concurrent reads of the same snappy-compressed files
   * return exactly what one thread reads alone; and a cold HNSW segment
-  * loads once per store instance however many searches race on it.
+  * loads, and a payload filter resolves, once per store instance
+  * however many searches race on it.
   */
 class ConcurrentReadSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -28,7 +29,7 @@ class ConcurrentReadSpec extends AnyFunSuite {
   }
 
   /** 600 points over 4 primary files, with a 2-segment
-    * HNSW sidecar and its int8-codes tier.
+    * HNSW sidecar, its int8-codes tier and a `g` payload index.
     */
   private lazy val dir: String = {
     import spark.implicits._
@@ -40,6 +41,8 @@ class ConcurrentReadSpec extends AnyFunSuite {
     ParquetCollectionStore.writeHnswSidecar(df, d, field = "vector",
       m = 8, efConstruction = 32, numSegments = 2)
     ParquetCollectionStore.writeHnswQuantizedSidecar(df, d)
+    ParquetCollectionStore.writePayloadSidecar(df.select("id", "payload"), d,
+      key = "g", kind = "int")
     d
   }
 
@@ -108,6 +111,19 @@ class ConcurrentReadSpec extends AnyFunSuite {
       assert(together(2)(_ => page(quant)).distinct.size === 1)
       assert(quant.hnswQuantSegmentsLoaded.get() === 2L)
       assert(quant.hnswSegmentsLoaded.get() === 0L)
+    }
+  }
+
+  test("racing first filtered searches resolve the filter once per store instance") {
+    val q = vec(4242).map(_.toDouble)
+    val pf = PayloadFilter(Seq(PayloadCondition("g", "eq", "1")), Nil, None)
+    (0 until 3).foreach { _ =>
+      val st = new ParquetCollectionStore(dir, "c", desc, hnswEf = 64)
+      val pages = together(2)(_ =>
+        st.searchPointsFiltered("c", SearchSpec("vector", q, "cosine", 10),
+          withPayload = true, Nil, pf).map(p => (p._1.id, p._1.payload, p._2)))
+      assert(pages.distinct.size === 1 && pages.head.size === 10)
+      assert(st.hnswFilterResolutions.get() === 1L)
     }
   }
 }
