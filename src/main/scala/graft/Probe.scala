@@ -32,17 +32,24 @@ object Probe {
     // r19 SCALING PROBE (VERDICT item 7): 16x-replicated corpus, run at
     // SPARK_GRAFT_CPUS=32 then 8 — a c8/c32 ratio near 1 on 16x data
     // means the gate is still overhead-bound, not operator-bound.
+    // replica i shifts ids by i * (max id + 1), so replicas never
+    // collide at any scale
     val N = sys.env.getOrElse("SPARK_GRAFT_REPL", "16").toInt
+    def stride(df: DataFrame, id: String): Long =
+      Option(df.agg(max(col(id)).cast("long")).head().get(0))
+        .fold(0L)(_.asInstanceOf[Long]) + 1L
     val d0 = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
+    val dStride = stride(d0, "doc_id")
     val docsN = (0 until N).map(i => d0.select(
-      (col("doc_id") + lit(i * 10000000L)).as("doc_id"),
+      (col("doc_id") + lit(i * dStride)).as("doc_id"),
       col("text"), col("lang"), col("source"))).reduce(_ union _)
       .localCheckpoint()
     val e0 = Tables.load(spark, sfDir, "events")
       .select(col("event_id"), col("props"))
+    val eStride = stride(e0, "event_id")
     val eventsN = (0 until N).map(i => e0.select(
-      (col("event_id") + lit(i * 100000000L)).as("event_id"),
+      (col("event_id") + lit(i * eStride)).as("event_id"),
       col("props"))).reduce(_ union _).localCheckpoint()
     val variants: Seq[(String, () => DataFrame)] = Seq(
       "dup_ngram_top" -> (() => graft.ops.TextAnalysis

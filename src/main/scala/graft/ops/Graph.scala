@@ -166,15 +166,17 @@ object Graph {
     // and summed out-degree both <= the `graft.pagerank.driverMaxEdges`
     // session conf, default 4M — 64 MB of edge longs, the same order as
     // the broadcast arm's build side), the same recurrence over local
-    // arrays is bit-identical by construction. Larger graphs take the
-    // loop exactly as before.
+    // arrays is bit-identical by construction. The edge sum is a
+    // distributed aggregate, so a graph over the cap never collects its
+    // node-sized outdeg table. Larger graphs take the loop exactly as
+    // before.
     val driverMaxEdges =
       e.sparkSession.conf.get("graft.pagerank.driverMaxEdges", "4000000").toLong
     if (n <= driverMaxEdges) {
-      val od = outdeg.select(col("src"), col("outdeg")).collect()
-      var mEdges = 0L
-      od.foreach(r => mEdges += r.getLong(1))
+      val mEdges = Option(outdeg.agg(sum(col("outdeg"))).head().get(0))
+        .fold(0L)(_.asInstanceOf[Long])
       if (mEdges <= driverMaxEdges) {
+        val od = outdeg.select(col("src"), col("outdeg")).collect()
         // a NULL src is a node of its own in the loop (it counts in n and
         // ranks `base`: no edge joins into or out of a null key), so it
         // is kept out of the arrays and emitted as that row at the end

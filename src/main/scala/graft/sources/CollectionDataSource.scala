@@ -943,13 +943,7 @@ trait CollectionStore extends Serializable {
         .filter(pfilter.matches)
       val stripped =
         if (needVf.isEmpty) matching
-        else {
-          val keep = vectorFields.toSet
-          matching.map(p => p.copy(
-            dense = p.dense.filter { case (k, _) => keep(k) },
-            multi = p.multi.filter { case (k, _) => keep(k) },
-            sparse = p.sparse.filter { case (k, _) => keep(k) }))
-        }
+        else matching.map(FetchSpec.narrowed(_, vectorFields))
       val narrowed =
         if (withPayload) stripped else stripped.map(_.copy(payload = None))
       limit.fold(narrowed)(n => narrowed.take(n))
@@ -1051,12 +1045,10 @@ trait CollectionStore extends Serializable {
           }
         }
       }
-    val keep = vectorFields.toSet
     val drained: List[(Point, Double)] = heap.dequeueAll.toList
+    // drop the scored field if the fetch spec did not request it
     drained.reverse.drop(spec.offset).map { case (p, s) =>
-      // drop the scored field if the fetch spec did not request it
-      (p.copy(dense = p.dense.view.filterKeys(keep).toMap,
-        sparse = p.sparse.view.filterKeys(keep).toMap), s)
+      (FetchSpec.narrowed(p, vectorFields), s)
     }
   }
 
@@ -1717,7 +1709,6 @@ final class InMemoryCollectionStore(
                            limit: Option[Int],
                            idFilter: Option[Set[String]] = None,
                            idLower: Option[String] = None): Iterator[Point] = {
-    val fields = vectorFields.toSet
     val all = data(collection)
     val hi = math.min(until, all.size.toLong).toInt
     // Keyset bound `id > last`: a SEEK over the sealed id-sorted index
@@ -1737,14 +1728,9 @@ final class InMemoryCollectionStore(
       base.filter(p => SparkStringOrder.gt(p.id, last)))
     val filtered = idFilter.fold(paged)(ids => paged.filter(p => ids(p.id)))
     val limited = limit.fold(filtered)(n => filtered.take(n))
-    limited.map { p =>
-      // honor the narrowed fetch: drop what wasn't asked for
-      p.copy(
-        payload = if (withPayload) p.payload else None,
-        dense = p.dense.view.filterKeys(fields).toMap,
-        multi = p.multi.view.filterKeys(fields).toMap,
-        sparse = p.sparse.view.filterKeys(fields).toMap)
-    }
+    // honor the narrowed fetch: drop what wasn't asked for
+    limited.map(p => FetchSpec.narrowed(p, vectorFields)
+      .copy(payload = if (withPayload) p.payload else None))
   }
 }
 
@@ -1828,6 +1814,18 @@ object CdcSchema {
 final case class FetchSpec(withPayload: Boolean, vectorFields: Seq[String])
 
 object FetchSpec {
+  /** `p` narrowed to the requested vector fields: a field the fetch did
+    * not ask for — the scored one, an internally widened one — drops,
+    * whatever its kind.
+    */
+  private[sources] def narrowed(p: Point, vectorFields: Seq[String]): Point = {
+    def keep[V](m: Map[String, V]): Map[String, V] =
+      if (m.keysIterator.forall(vectorFields.contains)) m
+      else m.filter { case (k, _) => vectorFields.contains(k) }
+    p.copy(dense = keep(p.dense), multi = keep(p.multi),
+      sparse = keep(p.sparse))
+  }
+
   /** Map pruned physical columns back to logical vector fields via the
     * descriptor (NOT by name suffix — SURVEY.md §1.3 quirk, fixed).
     */

@@ -298,31 +298,23 @@ final class ParquetCollectionStore(
     */
   /** `insertedAt`: the log position up to which the cluster partitions
     * are CURRENT — advanced past `builtAt` by the incremental
-    * maintenance path (see [[ivfMaintain]]), reset by a rebuild.
+    * maintenance path (see [[ivfMaintainer]]), reset by a rebuild.
     */
-  private case class IvfSidecar(field: String, builtAt: Long,
+  private case class IvfSidecar(field: String,
                                 centroidStore: ParquetCollectionStore,
                                 insertedAt: Long)
 
-  @transient private lazy val ivfSidecar: Option[IvfSidecar] = {
-    val marker = new java.io.File(s"$dir/_ivf/field.txt")
-    if (ivfNprobe <= 0 || !marker.isFile) None
-    else {
-      val lines = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-      // line 2 = the log position the build sealed (its freshness point);
-      // a legacy single-line meta has none and serves as-is
-      val builtAt =
-        if (lines.length > 1 && lines(1).nonEmpty) lines(1).toLong else -1L
-      val ins = new java.io.File(s"$dir/_ivf/inserted.txt")
-      val insertedAt =
-        if (builtAt < 0) builtAt
-        else ParquetCollectionStore.readWatermark(ins)
-          .map(math.max(builtAt, _)).getOrElse(builtAt)
-      Some(IvfSidecar(lines(0), builtAt, new ParquetCollectionStore(
-        s"$dir/_ivf/centroids", collection, descriptor), insertedAt))
+  // line 2 = the log position the build sealed (its freshness point);
+  // a legacy single-line meta has none and serves as-is
+  @transient private lazy val ivfSidecar: Option[IvfSidecar] =
+    if (ivfNprobe <= 0) None
+    else ParquetCollectionStore.markerLines(
+        new java.io.File(s"$dir/_ivf/field.txt")).map { lines =>
+      IvfSidecar(lines(0), new ParquetCollectionStore(
+          s"$dir/_ivf/centroids", collection, descriptor),
+        ParquetCollectionStore.appliedAt(new java.io.File(s"$dir/_ivf"),
+          lines, 1))
     }
-  }
 
   /** Tombstoned cluster rows (the IVF analog of the HNSW ghost flags):
     * a DELETE absorbs as an O(batch) flag append; flagged ids never
@@ -438,26 +430,20 @@ final class ParquetCollectionStore(
     * — candidates come from the pooled walk, the exact MaxSim rescore
     * recovers the page.
     */
-  private case class HnswSidecar(field: String, builtAt: Long, m: Int,
+  private case class HnswSidecar(field: String, m: Int,
                                  segments: Int, seed: Long, metric: String,
                                  insertedAt: Long, kind: String)
 
-  @transient private lazy val hnswSidecar: Option[HnswSidecar] = {
-    val marker = new java.io.File(s"$dir/_hnsw/field.txt")
-    if (hnswEf <= 0 || !marker.isFile) None
-    else {
-      val l = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-      val builtAt = l(1).toLong
-      val ins = new java.io.File(s"$dir/_hnsw/inserted.txt")
-      val insertedAt = ParquetCollectionStore.readWatermark(ins)
-        .map(math.max(builtAt, _)).getOrElse(builtAt)
-      Some(HnswSidecar(l(0), builtAt, l(2).toInt, l(4).toInt,
+  @transient private lazy val hnswSidecar: Option[HnswSidecar] =
+    if (hnswEf <= 0) None
+    else ParquetCollectionStore.markerLines(
+        new java.io.File(s"$dir/_hnsw/field.txt")).map { l =>
+      HnswSidecar(l(0), l(2).toInt, l(4).toInt,
         l(5).toLong, if (l.length > 6 && l(6).nonEmpty) l(6) else "cosine",
-        insertedAt,
-        if (l.length > 7 && l(7).nonEmpty) l(7) else "dense"))
+        ParquetCollectionStore.appliedAt(new java.io.File(s"$dir/_hnsw"),
+          l, 1),
+        if (l.length > 7 && l(7).nonEmpty) l(7) else "dense")
     }
-  }
 
   /** SERVE-memory model: every query fans over all segments, so a
     * store serving HNSW lazily caches EVERY segment's vectors, norms and
@@ -860,7 +846,6 @@ final class ParquetCollectionStore(
                                 spec: SearchSpec, withPayload: Boolean,
                                 vectorFields: Seq[String],
                                 cands: Set[String]): Seq[(Point, Double)] = {
-    val keep = vectorFields.toSet
     val want = (vectorFields :+ spec.field).distinct
     val page = (0 until sc.segments).flatMap { seg =>
       segmentPoints(sc, seg, c, withPayload, want, Some(cands))
@@ -868,7 +853,7 @@ final class ParquetCollectionStore(
       p.dense.get(spec.field)
         .flatMap(v => SearchSpec.score(spec.metric, v, spec.query))
         .filter(spec.passes)
-        .map(s => (p.copy(dense = p.dense.view.filterKeys(keep).toMap), s))
+        .map(s => (FetchSpec.narrowed(p, vectorFields), s))
     }
     val desc = SearchSpec.descending(spec.metric)
     page.sortWith { case ((pa, sa), (pb, sb)) =>
@@ -918,15 +903,13 @@ final class ParquetCollectionStore(
           else if (matched.size <= exactMax) {
             hnswFilteredExactServes.incrementAndGet(): Unit
             val want = (vectorFields :+ spec.field).distinct
-            val keep = vectorFields.toSet
             (0 until sc.segments).flatMap { seg =>
               segmentPoints(sc, seg, c, withPayload, want, Some(matched))
             }.flatMap { p =>
               p.dense.get(spec.field)
                 .flatMap(v => SearchSpec.score(spec.metric, v, spec.query))
                 .filter(spec.passes)
-                .map(s =>
-                  (p.copy(dense = p.dense.view.filterKeys(keep).toMap), s))
+                .map(s => (FetchSpec.narrowed(p, vectorFields), s))
             }
           } else if (hnswCodesTier && spec.metric != "euclid") {
             // the QUANTIZED walk under a filter: same accepting-walk
@@ -1119,7 +1102,7 @@ final class ParquetCollectionStore(
       p.multi.get(spec.field)
         .map(dm => SearchSpec.scoreMulti(dm, qm))
         .filter(spec.passes)
-        .map(s => (p, s))
+        .map(s => (FetchSpec.narrowed(p, vectorFields), s))
     }
     page.sortWith { case ((pa, sa), (pb, sb)) =>
       if (sa != sb) sa > sb
@@ -1212,34 +1195,23 @@ final class ParquetCollectionStore(
     * heap's [[SearchSpec.scoreSparse]] — three layouts, one score.
     */
   private case class SparseSidecar(field: String, nBuckets: Int,
-                                   builtAt: Long, insertedAt: Long)
+                                   insertedAt: Long)
 
   /** Tombstoned sparse ids with their indexed DIMS (recorded at flag
     * time, so a resurrection knows which buckets to consolidate without
     * a scan). Churn-bounded; reclaimed by mass-consolidation/rebuild.
     */
   @transient private lazy val sparseDead: Map[String, Seq[Int]] =
-    ParquetCollectionStore.readSparseDead(
+    ParquetCollectionStore.readIntListFlags(
       new java.io.File(s"$dir/_sparse/dead.txt"))
 
-  @transient private lazy val sparseSidecar: Option[SparseSidecar] = {
-    val marker = new java.io.File(s"$dir/_sparse/meta.txt")
-    if (!marker.isFile) None
-    else {
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-      // line 3 = the build's log position (freshness point); legacy -1
-      val builtAt =
-        if (lines.length > 2 && lines(2).nonEmpty) lines(2).toLong else -1L
-      val ins = new java.io.File(s"$dir/_sparse/inserted.txt")
-      val insertedAt =
-        if (builtAt < 0) builtAt
-        else ParquetCollectionStore.readWatermark(ins)
-          .map(math.max(builtAt, _)).getOrElse(builtAt)
-      Some(SparseSidecar(lines(0), lines(1).toInt, builtAt, insertedAt))
+  // meta line 3 = the build's log position (freshness point)
+  @transient private lazy val sparseSidecar: Option[SparseSidecar] =
+    ParquetCollectionStore.markerLines(
+        new java.io.File(s"$dir/_sparse/meta.txt")).map { lines =>
+      SparseSidecar(lines(0), lines(1).toInt, ParquetCollectionStore
+        .appliedAt(new java.io.File(s"$dir/_sparse"), lines, 2))
     }
-  }
 
   private def sparseServe(c: String, spec: SearchSpec, withPayload: Boolean,
                           vectorFields: Seq[String],
@@ -1417,7 +1389,6 @@ final class ParquetCollectionStore(
     val cands = scored.sortWith { case ((_, ia, sa), (_, ib, sb)) =>
       if (sa != sb) sa > sb else SparkStringOrder.gt(ib, ia)
     }.take(ivfCandidateK)
-    val keep = vectorFields.toSet
     val fetchFields = (vectorFields :+ window.field).distinct
     cands.groupBy(_._1).toSeq.flatMap { case (v, rows) =>
       val ids = rows.map(_._2).toSet
@@ -1431,7 +1402,7 @@ final class ParquetCollectionStore(
             p.dense.get(window.field)
               .flatMap(vv => SearchSpec.score(window.metric, vv, window.query))
               .filter(window.passes)
-              .map(s => (p.copy(dense = p.dense.view.filterKeys(keep).toMap), s))
+              .map(s => (FetchSpec.narrowed(p, vectorFields), s))
           }
       }
     }
@@ -1481,26 +1452,12 @@ final class ParquetCollectionStore(
       new java.io.File(sidecarDir, "absorbed.txt")).getOrElse(0L)
     val vol = (absorbed + batch).toDouble
     if (vol < frac * math.max(pointCount(collection), 1L).toDouble) false
-    else org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession) match {
-      case Some(sp) =>
-        reseal(sp)
-        bulkReseals.incrementAndGet(): Unit
-        true
-      case None => false
+    else ParquetCollectionStore.liveSpark.exists { sp =>
+      reseal(sp)
+      bulkReseals.incrementAndGet(): Unit
+      true
     }
   }
-
-  /** Advance the absorbed-since-seal counter after an incremental
-    * absorb — the bulk arm's geometric-schedule state (reset by every
-    * seal: the sidecar writers delete the file).
-    */
-  private def bumpAbsorbed(sidecarDir: java.io.File, batch: Int): Unit =
-    if (batch > 0) {
-      val f = new java.io.File(sidecarDir, "absorbed.txt")
-      val n = ParquetCollectionStore.readWatermark(f).getOrElse(0L) + batch
-      ParquetCollectionStore.atomicWriteText(f.toPath, n.toString)
-    }
 
   // ----------------------------------------------------- index freshness --
 
@@ -1553,7 +1510,6 @@ final class ParquetCollectionStore(
                          withPayload: Boolean, vectorFields: Seq[String],
                          pfilter: PayloadFilter): Seq[(Point, Double)] = {
     if (tail.added.isEmpty) return Nil
-    val keep = vectorFields.toSet
     val scoreOf: Point => Option[Double] = spec.multiQuery match {
       case Some(qm) => p => p.multi.get(spec.field)
         .map(dm => SearchSpec.scoreMulti(dm, qm))
@@ -1567,10 +1523,8 @@ final class ParquetCollectionStore(
     }
     tail.added.filter(pfilter.matches).flatMap { p =>
       scoreOf(p).filter(spec.passes).map { s =>
-        (p.copy(payload = if (withPayload) p.payload else None,
-          dense = p.dense.view.filterKeys(keep).toMap,
-          sparse = p.sparse.view.filterKeys(keep).toMap,
-          multi = p.multi.view.filterKeys(keep).toMap), s)
+        (FetchSpec.narrowed(p, vectorFields)
+          .copy(payload = if (withPayload) p.payload else None), s)
       }
     }
   }
@@ -1597,7 +1551,7 @@ final class ParquetCollectionStore(
     */
   private case class PayloadSidecar(key: String, kind: String,
                                     covered: Set[String], base: String,
-                                    builtAt: Long, insertedAt: Long) {
+                                    insertedAt: Long) {
     private val root = s"$base/points"
 
     /** Tombstoned rows, value → ids (the ANN families' deleted-flags
@@ -1720,33 +1674,19 @@ final class ParquetCollectionStore(
     Set("eq", "gt", "gte", "lt", "lte", "match_any",
       "dt_gt", "dt_gte", "dt_lt", "dt_lte")
 
-  private def readSidecarMeta(base: String): Option[PayloadSidecar] = {
-    val marker = new java.io.File(s"$base/meta.txt")
-    if (!marker.isFile) None
-    else {
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-      // line 3 = the covered vector COLUMNS (may be empty: a count-only
-      // index); a legacy 2-line meta reads as non-covering — the
-      // pre-filter search arm skips it rather than serving short results
-      val covered =
-        if (lines.length > 2 && lines(2).nonEmpty) lines(2).split(",").toSet
-        else Set.empty[String]
-      // line 4 = the build's log position (freshness point); legacy -1
-      val builtAt =
-        if (lines.length > 3 && lines(3).nonEmpty) lines(3).toLong else -1L
-      // the online-maintenance watermark (see [[pidxMaintain]]); absent
-      // or legacy → the build position
-      val ins = new java.io.File(s"$base/inserted.txt")
-      val insertedAt =
-        if (builtAt < 0) builtAt
-        else ParquetCollectionStore.readWatermark(ins)
-          .map(math.max(builtAt, _)).getOrElse(builtAt)
-      Some(PayloadSidecar(lines(0), lines(1), covered, base, builtAt,
-        insertedAt))
-    }
-  }
+  private def readSidecarMeta(base: String): Option[PayloadSidecar] =
+    ParquetCollectionStore.markerLines(new java.io.File(s"$base/meta.txt"))
+      .map { lines =>
+        // line 3 = the covered vector COLUMNS (may be empty: a count-only
+        // index); a legacy 2-line meta reads as non-covering — the
+        // pre-filter search arm skips it rather than serving short
+        // results. Line 4 = the build's log position (freshness point).
+        val covered =
+          if (lines.length > 2 && lines(2).nonEmpty) lines(2).split(",").toSet
+          else Set.empty[String]
+        PayloadSidecar(lines(0), lines(1), covered, base,
+          ParquetCollectionStore.appliedAt(new java.io.File(base), lines, 3))
+      }
 
   /** ALL payload-index sidecars: qdrant maintains one payload index PER
     * indexed key, and so does the store — `_pidx/k_<key>/` per key
@@ -1961,12 +1901,12 @@ final class ParquetCollectionStore(
     * pruning is sound.
     */
   /** `insertedAt`: the log position the cell partitions are CURRENT to
-    * — advanced by [[gidxMaintain]], reset by a rebuild. `dead`:
+    * — advanced by [[geoMaintainer]], reset by a rebuild. `dead`:
     * tombstoned rows, cell -> ids (the pidx flag model on the cell
     * layout — flagged rows never serve or count).
     */
   private case class GeoSidecar(key: String, bits: Int,
-                                covered: Set[String], builtAt: Long,
+                                covered: Set[String],
                                 insertedAt: Long = -1L,
                                 dead: Map[Long, Set[String]] = Map.empty) {
     private val root = s"$dir/_gidx/points"
@@ -2005,30 +1945,19 @@ final class ParquetCollectionStore(
       .filter(_._2.filesOpened.get() > 0).map(_._1).sorted
   }
 
-  @transient private lazy val geoSidecar: Option[GeoSidecar] = {
-    val marker = new java.io.File(s"$dir/_gidx/meta.txt")
-    if (!marker.isFile) None
-    else {
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
+  @transient private lazy val geoSidecar: Option[GeoSidecar] =
+    ParquetCollectionStore.markerLines(
+        new java.io.File(s"$dir/_gidx/meta.txt")).map { lines =>
       val covered =
         if (lines.length > 2 && lines(2).nonEmpty) lines(2).split(",").toSet
         else Set.empty[String]
-      val builtAt =
-        if (lines.length > 3 && lines(3).nonEmpty) lines(3).toLong else -1L
-      val insertedAt =
-        if (builtAt < 0) builtAt
-        else ParquetCollectionStore.readWatermark(
-            new java.io.File(s"$dir/_gidx/inserted.txt"))
-          .map(math.max(builtAt, _)).getOrElse(builtAt)
       val dead = ParquetCollectionStore.readValueIdFlags(
           new java.io.File(s"$dir/_gidx/dead.txt"))
         .map { case (c, ids) => c.toLong -> ids }
-      Some(GeoSidecar(lines(0), lines(1).toInt, covered, builtAt,
-        insertedAt, dead))
+      GeoSidecar(lines(0), lines(1).toInt, covered,
+        ParquetCollectionStore.appliedAt(new java.io.File(s"$dir/_gidx"),
+          lines, 3), dead)
     }
-  }
 
   /** Geo cells whose DATA was read since JVM start, for specs/probes. */
   def geoCellsTouched: Seq[Long] =
@@ -2121,14 +2050,14 @@ final class ParquetCollectionStore(
     * them.
     */
   /** `insertedAt`: the log position the postings are CURRENT to —
-    * advanced by [[tidxMaintain]], reset by a rebuild. `dead`:
+    * advanced by [[textMaintainer]], reset by a rebuild. `dead`:
     * tombstoned ids (the ANN families' deleted-flags model — flagged
     * postings never surface; the flag records the doc's token BUCKETS
     * so a resurrection consolidates exactly those). `stats`: the LIVE
     * (nDocs, totalTokens) — the maintenance-adjusted override in
     * `_tidx/stats.txt` when present, else the build's meta line.
     */
-  private case class TextSidecar(key: String, nBuckets: Int, builtAt: Long,
+  private case class TextSidecar(key: String, nBuckets: Int,
                                  stats: Option[(Long, Long)] = None,
                                  insertedAt: Long = -1L,
                                  dead: Set[String] = Set.empty) {
@@ -2196,37 +2125,19 @@ final class ParquetCollectionStore(
     }
   }
 
-  @transient private lazy val textSidecar: Option[TextSidecar] = {
-    val marker = new java.io.File(s"$dir/_tidx/meta.txt")
-    if (!marker.isFile) None
-    else {
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-      val builtAt =
-        if (lines.length > 2 && lines(2).nonEmpty) lines(2).toLong else -1L
-      // line 3 "<nDocs> <totalTokens>" = the tf/dl posting layout with
-      // corpus stats — the RANKED serve's requirement (absent on legacy
-      // match-only sidecars, which then serve matches but not ranks).
-      // `_tidx/stats.txt` (maintenance-adjusted live stats) supersedes.
-      val metaStats =
-        if (lines.length > 3 && lines(3).nonEmpty) {
-          val parts = lines(3).split(" ")
-          Some((parts(0).toLong, parts(1).toLong))
-        } else None
-      val stats = ParquetCollectionStore.readTextStats(
-        new java.io.File(s"$dir/_tidx/stats.txt")).orElse(metaStats)
-      val ins = new java.io.File(s"$dir/_tidx/inserted.txt")
-      val insertedAt =
-        if (builtAt < 0) builtAt
-        else ParquetCollectionStore.readWatermark(ins)
-          .map(math.max(builtAt, _)).getOrElse(builtAt)
-      Some(TextSidecar(lines(0), lines(1).toInt, builtAt, stats,
-        insertedAt,
-        ParquetCollectionStore.readTextDead(
-          new java.io.File(s"$dir/_tidx/dead.txt")).keySet))
+  // meta line 4 "<nDocs> <totalTokens>" = the tf/dl posting layout
+  // with corpus stats — the RANKED serve's requirement (absent on legacy
+  // match-only sidecars, which then serve matches but not ranks)
+  @transient private lazy val textSidecar: Option[TextSidecar] =
+    ParquetCollectionStore.markerLines(
+        new java.io.File(s"$dir/_tidx/meta.txt")).map { lines =>
+      TextSidecar(lines(0), lines(1).toInt,
+        ParquetCollectionStore.textStats(dir, lines),
+        ParquetCollectionStore.appliedAt(new java.io.File(s"$dir/_tidx"),
+          lines, 2),
+        ParquetCollectionStore.readIntListFlags(
+          new java.io.File(s"$dir/_tidx/dead.txt")).keySet)
     }
-  }
 
   /** BM25 partials served from the text sidecar when it carries the
     * tf/dl posting layout, is keyed on `key`, and the since-build tail
@@ -2285,7 +2196,6 @@ final class ParquetCollectionStore(
           if (cands.size > ParquetCollectionStore.prefilterMaxFraction *
               pointCount(collection)) None
           else {
-            val keep = vectorFields.toSet
             val fetchFields = (vectorFields :+ spec.field).distinct
             val scored = queryPointsFiltered(c, 0L, pointCount(c),
                 withPayload = true, fetchFields, None,
@@ -2294,10 +2204,8 @@ final class ParquetCollectionStore(
                 p.dense.get(spec.field)
                   .flatMap(v => SearchSpec.score(spec.metric, v, spec.query))
                   .filter(spec.passes)
-                  .map(s => (p.copy(
-                    payload = if (withPayload) p.payload else None,
-                    dense = p.dense.view.filterKeys(keep).toMap,
-                    sparse = p.sparse.view.filterKeys(keep).toMap), s))
+                  .map(s => (FetchSpec.narrowed(p, vectorFields)
+                    .copy(payload = if (withPayload) p.payload else None), s))
               }.toSeq
             Some(mergeBest(spec, scored ++
               tailScored(tail, spec, withPayload, vectorFields, pfilter)))
@@ -2418,20 +2326,17 @@ final class ParquetCollectionStore(
     val metas = fileMetas
     val fields = descriptor.fields.map(_.name)
     val oldHead = ParquetLog.head(logDir)
-    // ONLINE index maintenance (HNSW + IVF + payload indexes) needs the
-    // OLD versions of updated ids (their index rows must drop before
-    // the re-insert, and the payload index needs the old VALUE) — read
-    // BEFORE the COW rewrite (footer-pruned point lookup, bounded by
-    // the batch's id ranges); skipped when no sidecar is current
+    // ONLINE index maintenance needs the OLD versions of updated ids
+    // (their index rows must drop before the re-insert, and the value
+    // families need the old VALUE) — read BEFORE the COW rewrite
+    // (footer-pruned point lookup, bounded by the batch's id ranges);
+    // skipped when no sidecar is current
+    val current = maintainers.filter(_.appliedAt == oldHead)
     val preExistingPts: IndexedSeq[Point] =
-      if (!hnswInsertTracking(oldHead) && !ivfInsertTracking(oldHead) &&
-          !pidxAnyTracking(oldHead) && !sparseInsertTracking(oldHead) &&
-          tidxInsertedAt != oldHead && gidxInsertedAt != oldHead)
-        IndexedSeq.empty
+      if (current.isEmpty) IndexedSeq.empty
       else queryPoints(c, 0L, pointCount(c), withPayload = true,
         descriptor.fields.map(_.name),
         None, idFilter = Some(deduped.map(_.id).toSet)).toIndexedSeq
-    val preExisting: Set[String] = preExistingPts.iterator.map(_.id).toSet
     if (metas.isEmpty) {
       ParquetLog.writePrimary(new java.io.File(dir, "part-00000.parquet"),
         deduped, rowCodec)
@@ -2450,534 +2355,385 @@ final class ParquetCollectionStore(
     }
     val newHead = ParquetLog.appendSegment(logDir, oldHead,
       deduped.map(LogEntry(LogOps.Upsert, _)), rowCodec)
-    hnswMaintain(deduped, Set.empty, oldHead, newHead, preExisting)
-    ivfMaintain(deduped, Set.empty, oldHead, newHead, preExisting)
-    tidxMaintain(deduped, IndexedSeq.empty, oldHead, newHead,
-      preExistingPts)
-    gidxMaintain(deduped, IndexedSeq.empty, oldHead, newHead,
-      preExistingPts)
-    pidxMaintain(deduped, IndexedSeq.empty, oldHead, newHead,
-      preExistingPts)
-    sparseMaintain(deduped, IndexedSeq.empty, oldHead, newHead,
-      preExistingPts)
+    val batch = MaintBatch(deduped, IndexedSeq.empty, preExistingPts,
+      oldHead, newHead)
+    current.foreach(maintain(_, batch))
     reopened
   }
 
-  // -------------------------------- incremental sparse maintenance --
+  // ------------------------------------- sidecar maintenance protocol --
 
-  private def sparseInsertedAt: Long = {
-    val marker = new java.io.File(s"$dir/_sparse/meta.txt")
-    if (!marker.isFile) -1L
-    else {
-      val lines = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-      if (lines.length < 3 || lines(2).isEmpty) -1L
-      else {
-        val builtAt = lines(2).toLong
-        val ins = new java.io.File(s"$dir/_sparse/inserted.txt")
-        ParquetCollectionStore.readWatermark(ins)
-          .map(math.max(builtAt, _)).getOrElse(builtAt)
-      }
-    }
+  /** One mutation batch as every sidecar maintainer sees it: the
+    * deduped upserts, the removed points (id, payload and sparse
+    * vectors — what names the partitions they lived in), the
+    * pre-rewrite copies of updated ids, and the log span it sealed. A
+    * batch either upserts or removes, so an id is never both an old
+    * copy of an update and a removed point.
+    */
+  private case class MaintBatch(upserts: IndexedSeq[Point],
+                                removed: IndexedSeq[Point],
+                                preExisting: IndexedSeq[Point],
+                                oldHead: Long, newHead: Long) {
+    val upIds: Set[String] = upserts.iterator.map(_.id).toSet
   }
 
-  private def sparseInsertTracking(oldHead: Long): Boolean =
-    sparseInsertedAt == oldHead
+  /** One maintained sidecar: its directory, the marker the serve opens
+    * (`meta.txt`; `field.txt` for the ANN families) with the build's log
+    * position on line `buildLine`, its bulk arm (`reseal`), and its own
+    * work (`absorb`: given the marker lines and the batch, the partition
+    * writes to run with the marker parked — or None to park, leaving
+    * the watermark where it is so the overlay serves the batch exactly).
+    */
+  private case class Maintainer(base: java.io.File, markerName: String,
+      buildLine: Int,
+      reseal: org.apache.spark.sql.SparkSession => Unit,
+      absorb: (Array[String], MaintBatch) => Option[() => Unit]) {
+    def marker: java.io.File = new java.io.File(base, markerName)
+    def lines: Option[Array[String]] =
+      ParquetCollectionStore.markerLines(marker)
+    def appliedAt: Long =
+      lines.fold(-1L)(ParquetCollectionStore.appliedAt(base, _, buildLine))
+  }
 
-  /** Absorb a mutation batch into the dim-bucketed postings — the
-    * online-maintenance discipline on the FOURTH sidecar family:
+  /** Every sidecar family of this dir, in absorb order. */
+  private def maintainers: Seq[Maintainer] =
+    Seq(hnswMaintainer, ivfMaintainer, textMaintainer, geoMaintainer) ++
+      pidxBases.map(payloadMaintainer) :+ sparseMaintainer
+
+  /** The ONE online-maintenance protocol, for every sidecar family:
     *
-    *  - NEW points explode into (id, dim, value) posting rows and
-    *    append per touched bucket (`inc-*` files, LSM level-0 cap) —
-    *    the bucket is the same floorMod the writer and the serve use;
-    *  - UPDATES consolidate the buckets their OLD dims lived in (the
-    *    pre-rewrite point names them) before re-appending;
-    *  - DELETES tombstone as `id → dims` flags (the serve drops flagged
-    *    ids before accumulation; a resurrection consolidates exactly
-    *    the flagged dims' buckets first); the
-    *    [[ParquetCollectionStore.deadFlagMaxDial]] cap routes mass
-    *    deletes to consolidation.
+    *  - a sidecar absorbs a batch only while it is current up to the
+    *    pre-batch head — one unabsorbed mutation (a legacy gap, a
+    *    parked absorb) parks it until the next reseal, and serving stays
+    *    exact throughout via the freshness overlay;
+    *  - a batch that rivals the corpus reseals instead
+    *    ([[maybeBulkReseal]]);
+    *  - the absorb's partition writes run with the marker PARKED: a
+    *    crash between a partition's wipe and its rewrite leaves the
+    *    sidecar invisible (exact fallback, never silently incomplete
+    *    partitions);
+    *  - the window closes by advancing the watermark (`inserted.txt`, so
+    *    the next serve overlays an EMPTY tail) and the absorbed-since-
+    *    seal counter (`absorbed.txt`, the bulk arm's geometric-schedule
+    *    state, deleted by every seal).
     */
-  private def sparseMaintain(upserts: IndexedSeq[Point],
-                             removedPts: IndexedSeq[Point],
-                             oldHead: Long, newHead: Long,
-                             preExistingPts: IndexedSeq[Point]): Unit = {
-    if (!sparseInsertTracking(oldHead)) return
-    if (maybeBulkReseal(new java.io.File(s"$dir/_sparse"), upserts.size)(
-        sp => ParquetCollectionStore.resealSparseSidecar(sp, dir))) return
-    val marker = new java.io.File(s"$dir/_sparse/meta.txt")
-    val lines = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-    val field = lines(0)
-    val nBuckets = lines(1).toInt
-    def bucketOf(dim: Int): Int = java.lang.Math.floorMod(dim, nBuckets)
-    val deadFile = new java.io.File(s"$dir/_sparse/dead.txt")
-    val dead0 = ParquetCollectionStore.readSparseDead(deadFile)
-    val upIds = upserts.iterator.map(_.id).toSet
-    val flagCount = dead0.size + removedPts.size
-    val tombstone = flagCount <= ParquetCollectionStore.deadFlagMaxDial
-    // (id, old dims) whose postings must leave their buckets NOW
-    val dropDims = scala.collection.mutable.HashMap.empty[String, Seq[Int]]
-    preExistingPts.foreach(p => p.sparse.get(field).foreach { case (di, _) =>
-      dropDims.update(p.id, di.toSeq)
+  private def maintain(mt: Maintainer, b: MaintBatch): Unit =
+    if (mt.appliedAt == b.oldHead &&
+        !maybeBulkReseal(mt.base, b.upserts.size)(mt.reseal))
+      mt.absorb(mt.lines.get, b).foreach { work =>
+        ParquetCollectionStore.withParkedMarker(mt.marker) {
+          work()
+          ParquetCollectionStore.atomicWriteText(
+            new java.io.File(mt.base, "inserted.txt").toPath,
+            b.newHead.toString)
+          if (b.upserts.nonEmpty) {
+            val f = new java.io.File(mt.base, "absorbed.txt")
+            ParquetCollectionStore.atomicWriteText(f.toPath,
+              (ParquetCollectionStore.readWatermark(f).getOrElse(0L) +
+                b.upserts.size).toString)
+          }
+        }
+      }
+
+  /** The tombstone LEDGER (`dead.txt`) of one sidecar over one batch,
+    * keyed by id (`F`: where the dead copy lives, when the family
+    * records it at flag time). A delete flags its dead copy in O(batch)
+    * while the flag set stays under
+    * [[ParquetCollectionStore.deadFlagMaxDial]]; past the cap (a mass
+    * delete, a truncate) every flag and every removed copy consolidates
+    * out of its partition instead, so the file stays model-sized by
+    * construction. A resurrected id's dead copy always leaves before
+    * the re-insert, and a partition that rewrites anyway reclaims the
+    * standing flags it holds ([[fold]]).
+    */
+  private final class Ledger[F](file: java.io.File,
+                                codec: ParquetCollectionStore.FlagCodec[F],
+                                b: MaintBatch,
+                                removedFlags: Seq[(String, F)]) {
+    val flags: Map[String, F] = codec.read(file)
+    val tombstone: Boolean =
+      flags.size + b.removed.size <= ParquetCollectionStore.deadFlagMaxDial
+    /** Flags that outlive the batch unless folded. */
+    val standing: Map[String, F] = flags.filterNot(f => b.upIds(f._1))
+    /** Dead copies that must leave their partitions NOW. */
+    val drops: Seq[(String, F)] =
+      if (tombstone) flags.filter(f => b.upIds(f._1)).toSeq
+      else flags.toSeq ++ removedFlags
+    private val folded = scala.collection.mutable.Set.empty[String]
+    def fold(ids: Iterable[String]): Unit = folded ++= ids
+
+    /** Write the batch's flags, or delete an emptied file. */
+    def commit(): Unit = {
+      val next =
+        if (!tombstone) Map.empty[String, F]
+        else (standing -- folded) ++ removedFlags
+      if (next != flags) {
+        if (next.isEmpty) java.nio.file.Files.deleteIfExists(file.toPath): Unit
+        else ParquetCollectionStore.atomicWriteText(file.toPath,
+          codec.lines(next).mkString("\n"))
+      }
+    }
+  }
+
+  /** Absorb a batch into a family whose partitions are a function of
+    * the point (`P`: sparse dim bucket, text token bucket, geo cell,
+    * payload value), under `base`. Per touched partition, NEW rows
+    * append (`inc-*`, the level-0 cap) and a partition holding a
+    * dropped copy — an update's old version, a resurrected tombstone,
+    * everything on a mass drop — consolidates.
+    *
+    * `rows` lays an upsert's new rows per partition; `flagOf` names
+    * where an old copy lives (recorded in its tombstone), `homes` maps
+    * that to partitions; `folds` = a rewritten partition reclaims the
+    * flags it holds (single-partition flags only: a multi-bucket flag
+    * outlives one bucket's rewrite); `read`/`write`/`idOf`/`order` are
+    * the partition's row codec and file order.
+    */
+  private def keyedAbsorb[P, R, F](base: java.io.File, b: MaintBatch)(
+      codec: ParquetCollectionStore.FlagCodec[F],
+      partDir: P => java.io.File,
+      rows: Point => Seq[(P, R)],
+      flagOf: Point => Option[F],
+      homes: F => Seq[P],
+      folds: Boolean,
+      read: java.io.File => IndexedSeq[R],
+      write: (java.io.File, Seq[R]) => Unit,
+      idOf: R => String,
+      order: Seq[R] => Seq[R]): Unit = {
+    val ledger = new Ledger(new java.io.File(base, "dead.txt"), codec, b,
+      b.removed.flatMap(p => flagOf(p).map(p.id -> _)))
+    def byHome(flags: Seq[(String, F)]): Map[P, Set[String]] =
+      flags.flatMap { case (id, f) => homes(f).map(_ -> id) }
+        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val drops = byHome(b.preExisting.flatMap(p =>
+      flagOf(p).map(p.id -> _)) ++ ledger.drops)
+    val held =
+      if (folds) byHome(ledger.standing.toSeq)
+      else Map.empty[P, Set[String]]
+    val ins = b.upserts.flatMap(rows).groupBy(_._1)
+    (ins.keySet ++ drops.keySet).foreach { p =>
+      val d = partDir(p)
+      val batch = order(ins.get(p).fold(Seq.empty[R])(_.map(_._2)))
+      val dropped = drops.getOrElse(p, Set.empty)
+      val consolidate =
+        dropped.nonEmpty || ParquetCollectionStore.incFull(d, batch)
+      val gone =
+        if (!consolidate) dropped
+        else {
+          val f = held.getOrElse(p, Set.empty)
+          ledger.fold(f)
+          dropped ++ f
+        }
+      ParquetCollectionStore.rewritePartition(d, b.newHead, consolidate,
+        batch)(order(read(d).filterNot(r => gone(idOf(r))) ++ batch))(
+        write)
+    }
+    ledger.commit()
+  }
+
+  /** The dim-bucketed sparse postings: (id, dim, value) rows in the
+    * writer's and the serve's floorMod bucket; a tombstone records the
+    * dead copy's dims.
+    */
+  private def sparseMaintainer: Maintainer = Maintainer(
+    new java.io.File(s"$dir/_sparse"), "meta.txt", 2,
+    sp => ParquetCollectionStore.resealSparseSidecar(sp, dir),
+    (l, b) => {
+      val (field, nBuckets) = (l(0), l(1).toInt)
+      def bucketOf(dim: Int): Int = java.lang.Math.floorMod(dim, nBuckets)
+      Some { () =>
+        keyedAbsorb[Int, (String, Int, Double), Seq[Int]](
+          new java.io.File(s"$dir/_sparse"), b)(
+            codec = ParquetCollectionStore.intListFlags,
+            partDir = bk => new java.io.File(s"$dir/_sparse/points/db=$bk"),
+            rows = p => p.sparse.get(field).toSeq.flatMap { case (di, dv) =>
+              di.indices.map(i =>
+                (bucketOf(di(i)), (p.id, di(i), dv(i).toDouble)))
+            },
+            flagOf = p => p.sparse.get(field).map(_._1.toSeq),
+            homes = _.map(bucketOf).distinct,
+            folds = false,
+            read = d => ParquetCollectionStore.parquetFiles(d)
+              .flatMap(f => ParquetLog.readPostingRows(f.getAbsolutePath)),
+            write = ParquetLog.writePostingRows,
+            idOf = _._1,
+            order = _.sortBy(r => (r._1, r._2)))
+        sparseIncInserts.addAndGet(
+          b.upserts.count(_.sparse.contains(field)).toLong): Unit
+      }
     })
-    upserts.foreach(p => dead0.get(p.id).foreach(ds =>
-      dropDims.update(p.id, ds))) // resurrected flags
-    if (!tombstone) {
-      removedPts.foreach(p => p.sparse.get(field).foreach { case (di, _) =>
-        dropDims.update(p.id, di.toSeq)
-      })
-      dead0.foreach { case (id, ds) =>
-        if (!upIds(id)) dropDims.update(id, ds)
-      }
-    }
-    val dropIds = dropDims.keySet.toSet
-    val newRows: Seq[(Int, (String, Int, Double))] = upserts.flatMap(p =>
-      p.sparse.get(field).toSeq.flatMap { case (di, dv) =>
-        di.indices.map(i =>
-          (bucketOf(di(i)), (p.id, di(i), dv(i).toDouble)))
-      })
-    val touched = dropDims.valuesIterator.flatten.map(bucketOf).toSet ++
-      newRows.map(_._1).toSet
-    def wipe(d: java.io.File): Unit =
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .foreach { f =>
-          new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-          f.delete(): Unit
-        }
-    // the whole mutation window runs with the meta PARKED: a crash
-    // between a bucket wipe and its rewrite leaves the sidecar
-    // invisible (brute serve, never silently incomplete postings)
-    ParquetCollectionStore.withParkedMarker(marker) {
-    touched.foreach { b =>
-      val bDir = new java.io.File(s"$dir/_sparse/points/db=$b")
-      val batch = newRows.collect { case (`b`, r) => r }
-        .sortBy(r => (r._1, r._2))
-      val mustDrop = dropDims.exists { case (_, ds) =>
-        ds.exists(bucketOf(_) == b)
-      }
-      val consolidate = mustDrop || (batch.nonEmpty &&
-        ParquetCollectionStore.parquetFileCount(bDir) >=
-          ParquetCollectionStore.incCompactThreshold)
-      if (consolidate) {
-        val kept =
-          Option(bDir.listFiles()).getOrElse(Array.empty).toIndexedSeq
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .flatMap(f => ParquetLog.readPostingRows(f.getAbsolutePath))
-            .filterNot(r => dropIds(r._1))
-        val finalRows = (kept ++ batch).sortBy(r => (r._1, r._2))
-        wipe(bDir)
-        if (finalRows.nonEmpty) {
-          bDir.mkdirs()
-          ParquetLog.writePostingRows(
-            new java.io.File(bDir, f"pts-$newHead%012d.parquet"),
-            finalRows)
-        }
-      } else if (batch.nonEmpty) {
-        bDir.mkdirs()
-        ParquetLog.writePostingRows(
-          new java.io.File(bDir, f"inc-$newHead%012d.parquet"), batch)
-      }
-    }
-    sparseIncInserts.addAndGet(
-      upserts.count(_.sparse.contains(field)).toLong): Unit
-    val dead1: Map[String, Seq[Int]] =
-      if (!tombstone) Map.empty
-      else (dead0 -- upIds) ++ removedPts.flatMap(p =>
-        p.sparse.get(field).map { case (di, _) => p.id -> di.toSeq })
-    if (dead1.isEmpty)
-      java.nio.file.Files.deleteIfExists(deadFile.toPath): Unit
-    else
-      ParquetCollectionStore.atomicWriteText(deadFile.toPath,
-        dead1.toSeq.sortBy(_._1)
-          .map { case (id, ds) =>
-            s"${ParquetCollectionStore.escapeFlag(id)}\t${ds.mkString(",")}"
-          }
-          .mkString("\n"))
-    ParquetCollectionStore.atomicWriteText(
-      java.nio.file.Paths.get(s"$dir/_sparse/inserted.txt"),
-      newHead.toString)
-    bumpAbsorbed(new java.io.File(s"$dir/_sparse"), upserts.size)
-    }
-  }
 
-  // ------------------------------ incremental geo-index maintenance --
-
-  /** Points absorbed into the cell partitions by the incremental
-    * maintenance path (specs).
+  /** The batch's payloads as a driver-local frame — tag "n" for the
+    * upserts, "o" for the old copies (pre-update and removed) — so a
+    * family partitions by the WRITER'S OWN extraction expression,
+    * engine-evaluated (the partition value cannot drift from a
+    * rebuild's); None for an empty batch.
     */
-  @transient lazy val gidxIncInserts = new AtomicLong(0L)
-
-  private def gidxInsertedAt: Long = {
-    val marker = new java.io.File(s"$dir/_gidx/meta.txt")
-    if (!marker.isFile) -1L
-    else {
-      val lines = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-      if (lines.length < 4 || lines(3).isEmpty) -1L
-      else {
-        val builtAt = lines(3).toLong
-        ParquetCollectionStore.readWatermark(
-            new java.io.File(s"$dir/_gidx/inserted.txt"))
-          .map(math.max(builtAt, _)).getOrElse(builtAt)
-      }
-    }
+  private def batchPayloads(spark: org.apache.spark.sql.SparkSession,
+                            b: MaintBatch): Option[DataFrame] = {
+    val rows = b.upserts.map(p => ("n", p.id, p.payload.orNull)) ++
+      (b.preExisting ++ b.removed).map(p => ("o", p.id, p.payload.orNull))
+    if (rows.isEmpty) None
+    else Some(spark.createDataFrame(rows).toDF("tag", "id", "payload"))
   }
-
-  /** Absorb a mutation batch into the geo-cell partitions — the SIXTH
-    * maintained sidecar family (the pidx discipline on the Morton-cell
-    * layout): NEW points land in their cell via the WRITER'S OWN
-    * extraction + cell expression evaluated on a driver-local frame
-    * ([[graft.ops.Geo.cellCol]] — the partition value cannot drift from
-    * a rebuild's); UPDATES consolidate the OLD cell (the pre-rewrite
-    * payload names it); DELETES tombstone as `(cell, id)` flags; the
-    * [[ParquetCollectionStore.deadFlagMaxDial]] cap routes mass deletes
-    * to consolidation. Rows without a castable lat AND lon drop — the
-    * writer's rule (they can never match a geo condition).
-    */
-  private def gidxMaintain(upserts: IndexedSeq[Point],
-                           removedPts: IndexedSeq[Point],
-                           oldHead: Long, newHead: Long,
-                           preExistingPts: IndexedSeq[Point]): Unit = {
-    if (gidxInsertedAt != oldHead) return
-    if (maybeBulkReseal(new java.io.File(s"$dir/_gidx"), upserts.size)(
-        sp => ParquetCollectionStore.resealGeoSidecar(sp, dir))) return
-    val marker = new java.io.File(s"$dir/_gidx/meta.txt")
-    val lines = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-    val key = lines(0)
-    val bits = lines(1).toInt
-    val covered: Set[String] =
-      if (lines.length > 2 && lines(2).nonEmpty) lines(2).split(",").toSet
-      else Set.empty
-    val coveredFields = descriptor.fields.map(_.name).filter { fn =>
-      fieldCols(fn) match {
-        case DenseCol(_, cn) => covered.contains(cn)
-        case SparseCols(_, ic, vc) =>
-          covered.contains(ic) && covered.contains(vc)
-        case MultiCol(_, cn) => covered.contains(cn)
-      }
-    }
-    val sparkOpt = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    if (sparkOpt.isEmpty) return
-    // the writer's own lat/lon extraction AND cell expression,
-    // engine-evaluated on a driver-local frame
-    val cells: Map[(String, String), Long] = {
-      import org.apache.spark.sql.functions.expr
-      val rows = upserts.map(p => ("n", p.id, p.payload.orNull)) ++
-        preExistingPts.map(p => ("o", p.id, p.payload.orNull)) ++
-        removedPts.map(p => ("d", p.id, p.payload.orNull))
-      if (rows.isEmpty) Map.empty
-      else sparkOpt.get.createDataFrame(rows).toDF("tag", "id", "payload")
-        .withColumn("__lat", expr(
-          s"cast(get_json_object(payload, '$$.$key.lat') as double)"))
-        .withColumn("__lon", expr(
-          s"cast(get_json_object(payload, '$$.$key.lon') as double)"))
-        .filter(col("__lat").isNotNull && col("__lon").isNotNull)
-        .withColumn("cell",
-          graft.ops.Geo.cellCol(col("__lat"), col("__lon"), bits))
-        .select("tag", "id", "cell")
-        .collect()
-        .map(r => ((r.getString(0), r.getString(1)), r.getLong(2)))
-        .toMap
-    }
-    val deadFile = new java.io.File(s"$dir/_gidx/dead.txt")
-    val dead0: Map[Long, Set[String]] =
-      ParquetCollectionStore.readValueIdFlags(deadFile)
-        .map { case (c, ids) => c.toLong -> ids }
-    val deadCell: Map[String, Long] =
-      dead0.iterator.flatMap { case (c, ids) => ids.map(_ -> c) }.toMap
-    val upIds = upserts.iterator.map(_.id).toSet
-    val tombstone = deadCell.size + removedPts.size <=
-      ParquetCollectionStore.deadFlagMaxDial
-    val dropPairs = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    preExistingPts.foreach(p =>
-      cells.get(("o", p.id)).foreach(c => dropPairs += ((c, p.id))))
-    upserts.foreach(p =>
-      deadCell.get(p.id).foreach(c => dropPairs += ((c, p.id))))
-    if (!tombstone) {
-      removedPts.foreach(p =>
-        cells.get(("d", p.id)).foreach(c => dropPairs += ((c, p.id))))
-      dead0.foreach { case (c, ids) =>
-        ids.filterNot(upIds).foreach(id => dropPairs += ((c, id)))
-      }
-    }
-    val insByCell = upserts
-      .flatMap(p => cells.get(("n", p.id)).map(c => (c, p)))
-      .groupBy(_._1)
-    val dropsByCell = dropPairs.toSeq.groupBy(_._1).view
-      .mapValues(_.map(_._2).toSet).toMap
-    val folded = scala.collection.mutable.Set.empty[String]
-    def wipe(d: java.io.File): Unit =
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .foreach { f =>
-          new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-          f.delete(): Unit
-        }
-    ParquetCollectionStore.withParkedMarker(marker) {
-    (insByCell.keySet ++ dropsByCell.keySet).foreach { c =>
-      val cDir = new java.io.File(s"$dir/_gidx/points/cell=$c")
-      val batch = insByCell.getOrElse(c, Seq.empty).map(_._2)
-        .sortWith((a, b) => SparkStringOrder.lt(a.id, b.id))
-      val segDrops0 = dropsByCell.getOrElse(c, Set.empty)
-      val consolidate = segDrops0.nonEmpty || (batch.nonEmpty &&
-        ParquetCollectionStore.parquetFileCount(cDir) >=
-          ParquetCollectionStore.incCompactThreshold)
-      if (consolidate) {
-        // a rewriting cell reclaims its flags free
-        val segDead = dead0.getOrElse(c, Set.empty).filterNot(upIds)
-        folded ++= segDead
-        val segDrops = segDrops0 ++ segDead
-        val rows =
-          if (!cDir.isDirectory) IndexedSeq.empty[Point]
-          else {
-            val st = new ParquetCollectionStore(cDir.getAbsolutePath,
-              collection, descriptor)
-            st.queryPoints(collection, 0L, st.pointCount(collection),
-              withPayload = true, coveredFields, None).toIndexedSeq
-          }
-        val finalRows = (rows.filterNot(p => segDrops(p.id)) ++ batch)
-          .sortWith((a, b) => SparkStringOrder.lt(a.id, b.id))
-        wipe(cDir)
-        if (finalRows.nonEmpty) {
-          cDir.mkdirs()
-          ParquetLog.writePrimary(
-            new java.io.File(cDir, f"pts-$newHead%012d.parquet"),
-            finalRows, rowCodec)
-        } else {
-          cDir.delete(): Unit // an emptied cell disappears
-        }
-      } else if (batch.nonEmpty) {
-        cDir.mkdirs()
-        ParquetLog.writePrimary(
-          new java.io.File(cDir, f"inc-$newHead%012d.parquet"),
-          batch, rowCodec)
-      }
-      gidxIncInserts.addAndGet(batch.size): Unit
-    }
-    val deadPairs1: Seq[(Long, String)] =
-      if (!tombstone) Seq.empty
-      else (dead0.iterator.flatMap { case (c, ids) =>
-        ids.filterNot(id => folded(id) || upIds(id)).map(c -> _)
-      } ++ removedPts.iterator.flatMap(p =>
-        cells.get(("d", p.id)).map(_ -> p.id))).toSeq
-    if (deadPairs1.isEmpty)
-      java.nio.file.Files.deleteIfExists(deadFile.toPath): Unit
-    else
-      ParquetCollectionStore.atomicWriteText(deadFile.toPath,
-        deadPairs1.sorted.map { case (c, id) =>
-          s"$c\t${ParquetCollectionStore.escapeFlag(id)}"
-        }.mkString("\n"))
-    ParquetCollectionStore.atomicWriteText(
-      java.nio.file.Paths.get(s"$dir/_gidx/inserted.txt"),
-      newHead.toString)
-    bumpAbsorbed(new java.io.File(s"$dir/_gidx"), upserts.size)
-    }
-  }
-
-  // ----------------------------- incremental text-index maintenance --
 
   /** Points absorbed into the token buckets by the incremental
     * maintenance path (specs).
     */
   @transient lazy val tidxIncInserts = new AtomicLong(0L)
 
-  private def tidxInsertedAt: Long = {
-    val marker = new java.io.File(s"$dir/_tidx/meta.txt")
-    if (!marker.isFile) -1L
-    else {
-      val lines = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-      if (lines.length < 3 || lines(2).isEmpty) -1L
-      else {
-        val builtAt = lines(2).toLong
-        ParquetCollectionStore.readWatermark(
-            new java.io.File(s"$dir/_tidx/inserted.txt"))
-          .map(math.max(builtAt, _)).getOrElse(builtAt)
-      }
-    }
-  }
-
-  /** Absorb a mutation batch into the token-bucket postings — the
-    * FIFTH maintained sidecar family, closing the freshness loop for
-    * match_text/phrase candidates AND the BM25 ranked serve (both
-    * previously fell back to the exact primaries pass on any mutation):
-    *
-    *  - NEW points tokenize with the WRITER'S OWN pipeline (the
-    *    `lower(get_json_object(...))` extraction runs on a driver-local
-    *    Spark frame so case-folding cannot drift; the `\s+` split and
-    *    tf/dl arithmetic mirror the builder exactly) and append per
-    *    touched token bucket (`inc-*` files, LSM level-0 cap);
-    *  - UPDATES consolidate the buckets their OLD tokens lived in (the
-    *    pre-rewrite payload names them) before re-appending;
-    *  - DELETES tombstone as `id -> buckets` flags (the serve drops
-    *    flagged ids in the posting reads; a resurrection consolidates
-    *    exactly the flagged buckets first; the
-    *    [[ParquetCollectionStore.deadFlagMaxDial]] cap routes mass
-    *    deletes to consolidation);
-    *  - the LIVE (nDocs, totalTokens) stats adjust per batch
-    *    (`_tidx/stats.txt` supersedes the meta's build-time line), so
-    *    BM25's N and avgdl track the corpus — a keyless point still
-    *    counts toward N with dl 0, the builder's rule.
-    *
-    * Requires a live SparkSession for the extraction (the pidx
-    * contract); with none the watermark parks and the exact fallback
-    * serves.
+  /** The token-bucket postings (match_text/phrase candidates AND the
+    * BM25 ranked serve): documents tokenize with the writer's own
+    * case-folded extraction (the `\s+` split and tf/dl arithmetic mirror
+    * the builder); a tombstone records the dead copy's token buckets.
+    * The LIVE (nDocs, totalTokens) stats adjust per batch
+    * (`_tidx/stats.txt` supersedes the meta's build-time line), so BM25's
+    * N and avgdl track the corpus — a keyless point counts toward N with
+    * dl 0, the builder's rule. Parks on a legacy match-only sidecar (no
+    * stats) and without a live SparkSession.
     */
-  private def tidxMaintain(upserts: IndexedSeq[Point],
-                           removedPts: IndexedSeq[Point],
-                           oldHead: Long, newHead: Long,
-                           preExistingPts: IndexedSeq[Point]): Unit = {
-    if (tidxInsertedAt != oldHead) return
-    if (maybeBulkReseal(new java.io.File(s"$dir/_tidx"), upserts.size)(
-        sp => ParquetCollectionStore.resealTextSidecar(sp, dir))) return
-    val marker = new java.io.File(s"$dir/_tidx/meta.txt")
-    val lines = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-    val key = lines(0)
-    val nBuckets = lines(1).toInt
-    val stats0 = ParquetCollectionStore.readTextStats(
-        new java.io.File(s"$dir/_tidx/stats.txt"))
-      .orElse {
-        if (lines.length > 3 && lines(3).nonEmpty) {
-          val p = lines(3).split(" ")
-          Some((p(0).toLong, p(1).toLong))
-        } else None
-      }.getOrElse(return) // legacy match-only sidecar: park (no stats)
-    val sparkOpt = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    if (sparkOpt.isEmpty) return
-    // the writer's own case-folded extraction, engine-evaluated
-    val texts: Map[(String, String), String] = {
-      val rows = upserts.map(p => ("n", p.id, p.payload.orNull)) ++
-        preExistingPts.map(p => ("o", p.id, p.payload.orNull)) ++
-        removedPts.map(p => ("d", p.id, p.payload.orNull))
-      if (rows.isEmpty) Map.empty
-      else sparkOpt.get.createDataFrame(rows).toDF("tag", "id", "payload")
-        .selectExpr("tag", "id",
-          s"lower(get_json_object(payload, '$$.$key')) AS t")
-        .collect()
-        .flatMap(r => Option(if (r.isNullAt(2)) null else r.getString(2))
-          .map(t => ((r.getString(0), r.getString(1)), t)))
-        .toMap
-    }
-    def toks(tag: String, id: String): Seq[String] =
-      texts.get((tag, id)).map(_.split("\\s+").toSeq.filter(_.nonEmpty))
-        .getOrElse(Nil)
-    def bucketsOf(ts: Seq[String]): Seq[Int] =
-      ts.distinct.map(ParquetCollectionStore.tokenBucket(_, nBuckets))
-        .distinct
-    val deadFile = new java.io.File(s"$dir/_tidx/dead.txt")
-    val dead0 = ParquetCollectionStore.readTextDead(deadFile)
-    val upIds = upserts.iterator.map(_.id).toSet
-    val tombstone =
-      dead0.size + removedPts.size <= ParquetCollectionStore.deadFlagMaxDial
-    // ids whose stored postings must leave their buckets NOW: updates'
-    // old copies + resurrected tombstones (+ everything on a mass drop)
-    val dropBuckets = scala.collection.mutable.HashMap.empty[String, Seq[Int]]
-    preExistingPts.foreach(p =>
-      dropBuckets.update(p.id, bucketsOf(toks("o", p.id))))
-    upserts.foreach(p => dead0.get(p.id).foreach(bs =>
-      dropBuckets.update(p.id, bs)))
-    if (!tombstone) {
-      removedPts.foreach(p =>
-        dropBuckets.update(p.id, bucketsOf(toks("d", p.id))))
-      dead0.foreach { case (id, bs) =>
-        if (!upIds(id)) dropBuckets.update(id, bs)
-      }
-    }
-    // new posting rows: (bucket, (id, token, tf, dl)) with the
-    // builder's arithmetic (tf per distinct token, dl = token count)
-    val newRows: Seq[(Int, (String, String, Long, Long))] =
-      upserts.flatMap { p =>
-        val ts = toks("n", p.id)
-        val dl = ts.length.toLong
-        ts.groupBy(identity).toSeq.map { case (tok, occ) =>
-          (ParquetCollectionStore.tokenBucket(tok, nBuckets),
-            (p.id, tok, occ.length.toLong, dl))
+  private def textMaintainer: Maintainer = Maintainer(
+    new java.io.File(s"$dir/_tidx"), "meta.txt", 2,
+    sp => ParquetCollectionStore.resealTextSidecar(sp, dir),
+    (l, b) => for {
+      stats0 <- ParquetCollectionStore.textStats(dir, l)
+      spark <- ParquetCollectionStore.liveSpark
+    } yield {
+      val (key, nBuckets) = (l(0), l(1).toInt)
+      val texts: Map[(String, String), String] =
+        batchPayloads(spark, b).fold(Map.empty[(String, String), String])(
+          _.selectExpr("tag", "id",
+              s"lower(get_json_object(payload, '$$.$key')) AS t")
+            .collect()
+            .flatMap(r => Option(r.getString(2))
+              .map(t => ((r.getString(0), r.getString(1)), t)))
+            .toMap)
+      def toks(tag: String, id: String): Seq[String] =
+        texts.get((tag, id)).map(_.split("\\s+").toSeq.filter(_.nonEmpty))
+          .getOrElse(Nil)
+      def bucketOf(t: String): Int =
+        ParquetCollectionStore.tokenBucket(t, nBuckets)
+      () => {
+        keyedAbsorb[Int, (String, String, Long, Long), Seq[Int]](
+          new java.io.File(s"$dir/_tidx"), b)(
+            codec = ParquetCollectionStore.intListFlags,
+            partDir = bk => new java.io.File(s"$dir/_tidx/points/tb=$bk"),
+            rows = p => {
+              val ts = toks("n", p.id)
+              ts.groupBy(identity).toSeq.map { case (tok, occ) =>
+                (bucketOf(tok), (p.id, tok, occ.length.toLong,
+                  ts.length.toLong))
+              }
+            },
+            flagOf = p =>
+              Some(toks("o", p.id).distinct.map(bucketOf).distinct),
+            homes = identity,
+            folds = false,
+            read = d => ParquetCollectionStore.parquetFiles(d)
+              .flatMap(f => ParquetLog.readTextPostingRows(f.getAbsolutePath)),
+            write = ParquetLog.writeTextPostingRows,
+            idOf = _._1,
+            order = _.sortBy(r => (r._1, r._2)))
+        tidxIncInserts.addAndGet(b.upserts.size.toLong): Unit
+        // inserts of NEW ids add (1, dl); updates move dl; deletes
+        // subtract (1, dl)
+        val preIds = b.preExisting.iterator.map(_.id).toSet
+        var dN = 0L
+        var dT = 0L
+        b.upserts.foreach { p =>
+          val dl = toks("n", p.id).length.toLong
+          if (preIds(p.id)) dT += dl - toks("o", p.id).length.toLong
+          else { dN += 1L; dT += dl }
         }
-      }
-    val dropByBucket: Map[Int, Set[String]] = dropBuckets.toSeq
-      .flatMap { case (id, bs) => bs.map(_ -> id) }
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val touched = dropByBucket.keySet ++ newRows.map(_._1).toSet
-    def wipe(d: java.io.File): Unit =
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .foreach { f =>
-          new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-          f.delete(): Unit
+        b.removed.foreach { p =>
+          dN -= 1L; dT -= toks("o", p.id).length.toLong
         }
-    ParquetCollectionStore.withParkedMarker(marker) {
-    touched.foreach { b =>
-      val bDir = new java.io.File(s"$dir/_tidx/points/tb=$b")
-      val batch = newRows.collect { case (`b`, r) => r }
-        .sortBy(r => (r._1, r._2))
-      val drops = dropByBucket.getOrElse(b, Set.empty)
-      val consolidate = drops.nonEmpty || (batch.nonEmpty &&
-        ParquetCollectionStore.parquetFileCount(bDir) >=
-          ParquetCollectionStore.incCompactThreshold)
-      if (consolidate) {
-        val kept =
-          Option(bDir.listFiles()).getOrElse(Array.empty).toIndexedSeq
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .flatMap(f => ParquetLog.readTextPostingRows(f.getAbsolutePath))
-            .filterNot(r => drops(r._1))
-        val finalRows = (kept ++ batch).sortBy(r => (r._1, r._2))
-        wipe(bDir)
-        if (finalRows.nonEmpty) {
-          bDir.mkdirs()
-          ParquetLog.writeTextPostingRows(
-            new java.io.File(bDir, f"pts-$newHead%012d.parquet"),
-            finalRows)
-        }
-      } else if (batch.nonEmpty) {
-        bDir.mkdirs()
-        ParquetLog.writeTextPostingRows(
-          new java.io.File(bDir, f"inc-$newHead%012d.parquet"), batch)
+        ParquetCollectionStore.atomicWriteText(
+          java.nio.file.Paths.get(s"$dir/_tidx/stats.txt"),
+          s"${stats0._1 + dN} ${stats0._2 + dT}")
       }
-    }
-    tidxIncInserts.addAndGet(upserts.size.toLong): Unit
-    // LIVE stats: inserts of NEW ids add (1, dl); updates move dl;
-    // deletes subtract (1, dl) — keyless points carry dl 0 like the
-    // builder's rule
-    val preIds = preExistingPts.iterator.map(_.id).toSet
-    var dN = 0L
-    var dT = 0L
-    upserts.foreach { p =>
-      val dl = toks("n", p.id).length.toLong
-      if (preIds(p.id)) dT += dl - toks("o", p.id).length.toLong
-      else { dN += 1L; dT += dl }
-    }
-    removedPts.foreach { p =>
-      dN -= 1L; dT -= toks("d", p.id).length.toLong
-    }
-    ParquetCollectionStore.atomicWriteText(
-      java.nio.file.Paths.get(s"$dir/_tidx/stats.txt"),
-      s"${stats0._1 + dN} ${stats0._2 + dT}")
-    val dead1: Map[String, Seq[Int]] =
-      if (!tombstone) Map.empty
-      else (dead0 -- upIds) ++ removedPts.map(p =>
-        p.id -> bucketsOf(toks("d", p.id)))
-    if (dead1.isEmpty)
-      java.nio.file.Files.deleteIfExists(deadFile.toPath): Unit
-    else
-      ParquetCollectionStore.atomicWriteText(deadFile.toPath,
-        dead1.toSeq.sortBy(_._1)
-          .map { case (id, bs) =>
-            s"${ParquetCollectionStore.escapeFlag(id)}\t${bs.mkString(",")}"
-          }.mkString("\n"))
-    ParquetCollectionStore.atomicWriteText(
-      java.nio.file.Paths.get(s"$dir/_tidx/inserted.txt"),
-      newHead.toString)
-    bumpAbsorbed(new java.io.File(s"$dir/_tidx"), upserts.size)
-    }
-  }
+    })
 
-  // --------------------------- incremental payload-index maintenance --
+  /** Points absorbed into the cell partitions by the incremental
+    * maintenance path (specs).
+    */
+  @transient lazy val gidxIncInserts = new AtomicLong(0L)
+
+  /** Points absorbed into value partitions by the incremental
+    * maintenance path, summed across keys (specs).
+    */
+  @transient lazy val pidxIncInserts = new AtomicLong(0L)
+
+  /** The VALUE-PARTITION families — geo cells and keyed payload
+    * indexes — as one maintainer: the covered point rows (meta line 3
+    * names the vector columns) partitioned by a value the engine
+    * extracts with the writer's own expression (`extract`, over the
+    * meta lines and [[batchPayloads]]), so filtered search arms, footer
+    * COUNTS and facet histograms stay index-served under churn. A
+    * tombstone records its `(value, id)` pair, so counts subtract
+    * per-partition dead counts without reading a row; rows without a
+    * value drop (the writer's rule: they can never match a servable
+    * condition). Parks without a live SparkSession.
+    */
+  private def valueMaintainer[V: Ordering](base: java.io.File,
+      reseal: org.apache.spark.sql.SparkSession => Unit,
+      parse: String => V, dirName: V => String, counter: AtomicLong)(
+      extract: (Array[String], DataFrame) => Map[(String, String), V]): Maintainer =
+    Maintainer(base, "meta.txt", 3, reseal, (l, b) =>
+      ParquetCollectionStore.liveSpark.map { spark =>
+        val covered: Set[String] =
+          if (l.length > 2 && l(2).nonEmpty) l(2).split(",").toSet
+          else Set.empty
+        val coveredFields = descriptor.fields.map(_.name)
+          .filter(fn => physicalCols(fieldCols(fn)).forall(covered))
+        val vals = batchPayloads(spark, b)
+          .fold(Map.empty[(String, String), V])(extract(l, _))
+        () => {
+          keyedAbsorb[V, Point, V](base, b)(
+            codec = ParquetCollectionStore.valueFlags(parse),
+            partDir = v => new java.io.File(base, s"points/${dirName(v)}"),
+            rows = p => vals.get(("n", p.id)).map(_ -> p).toSeq,
+            flagOf = p => vals.get(("o", p.id)),
+            homes = Seq(_),
+            folds = true,
+            read = d =>
+              if (!d.isDirectory) IndexedSeq.empty
+              else {
+                val st = new ParquetCollectionStore(d.getAbsolutePath,
+                  collection, descriptor)
+                st.queryPoints(collection, 0L, st.pointCount(collection),
+                  withPayload = true, coveredFields, None).toIndexedSeq
+              },
+            write = ParquetLog.writePrimary(_, _, rowCodec),
+            idOf = _.id,
+            order = ParquetCollectionStore.byId)
+          counter.addAndGet(
+            b.upserts.count(p => vals.contains(("n", p.id))).toLong): Unit
+        }
+      })
+
+  /** Geo cells: the writer's lat/lon extraction and Morton cell
+    * expression ([[graft.ops.Geo.cellCol]]); rows without a castable
+    * lat AND lon drop.
+    */
+  private def geoMaintainer: Maintainer = valueMaintainer[Long](
+    new java.io.File(s"$dir/_gidx"),
+    sp => ParquetCollectionStore.resealGeoSidecar(sp, dir),
+    _.toLong, c => s"cell=$c", gidxIncInserts) { (l, df) =>
+    import org.apache.spark.sql.functions.expr
+    val (key, bits) = (l(0), l(1).toInt)
+    df.withColumn("__lat", expr(
+        s"cast(get_json_object(payload, '$$.$key.lat') as double)"))
+      .withColumn("__lon", expr(
+        s"cast(get_json_object(payload, '$$.$key.lon') as double)"))
+      .filter(col("__lat").isNotNull && col("__lon").isNotNull)
+      .withColumn("cell",
+        graft.ops.Geo.cellCol(col("__lat"), col("__lon"), bits))
+      .select("tag", "id", "cell")
+      .collect()
+      .map(r => ((r.getString(0), r.getString(1)), r.getLong(2)))
+      .toMap
+  }
 
   /** Keyed payload-index sidecar bases carrying a meta (the legacy
     * root layout never maintains — optimize rebuilds it keyed).
@@ -2989,280 +2745,94 @@ final class ParquetCollectionStore(
         new java.io.File(f, "meta.txt").isFile)
       .sortBy(_.getName)
 
-  private def pidxInsertedAt(base: java.io.File): Long = {
-    val lines = new String(java.nio.file.Files.readAllBytes(
-        new java.io.File(base, "meta.txt").toPath),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-    val builtAt =
-      if (lines.length > 3 && lines(3).nonEmpty) lines(3).toLong else -1L
-    if (builtAt < 0) -1L
-    else {
-      val ins = new java.io.File(base, "inserted.txt")
-      ParquetCollectionStore.readWatermark(ins)
-        .map(math.max(builtAt, _)).getOrElse(builtAt)
+  /** One keyed payload index: the partition value is the key's RAW JSON
+    * scalar (the writer's type-tagged extraction; non-scalar and absent
+    * values drop), the dir name Spark's own `escapePathName` — online
+    * appends are indistinguishable from rebuilt partitions. Each key's
+    * index keeps its own watermark and decides its own bulk arm.
+    */
+  private def payloadMaintainer(base: java.io.File): Maintainer =
+    valueMaintainer[String](base,
+      sp => ParquetCollectionStore.resealPayloadSidecar(sp, dir,
+        base.getAbsolutePath),
+      identity, v => "value=" + org.apache.spark.sql.catalyst.catalog
+        .ExternalCatalogUtils.escapePathName(v),
+      pidxIncInserts) { (l, df) =>
+      df.selectExpr("tag", "id",
+          s"to_json(try_variant_get(try_parse_json(payload), '$$.${l(0)}')) AS raw")
+        .collect()
+        .flatMap { r =>
+          val raw = r.getString(2)
+          if (raw == null || raw == "null" || raw.startsWith("{") ||
+              raw.startsWith("[")) None
+          else Some(((r.getString(0), r.getString(1)), raw))
+        }.toMap
     }
-  }
 
-  private def pidxAnyTracking(oldHead: Long): Boolean =
-    pidxBases.exists(b => pidxInsertedAt(b) == oldHead)
-
-  /** Points absorbed into value partitions by the incremental
-    * maintenance path, summed across keys (specs).
+  /** The ANN families' consolidate decision for one partition: rows to
+    * drop, the level-0 file cap ([[ParquetCollectionStore.incFull]]), or
+    * the per-partition HOTSPOT dial — churn absorbed into THIS
+    * partition since its last consolidation plus the batch rivals its
+    * own `size` (the corpus-fraction bulk arm cannot see skewed churn;
+    * see [[ParquetCollectionStore.readPartCounters]]). Updates the
+    * partition's absorbed counter in `parts`.
     */
-  @transient lazy val pidxIncInserts = new AtomicLong(0L)
-
-  /** The indexed raw value of payload key `key` per (tag, id) — the
-    * WRITER'S OWN extraction expression evaluated on a driver-local
-    * frame, so the partition value an online insert lands in is
-    * byte-identical to what a rebuild would produce (no hand-rolled
-    * JSON rendering to drift). Non-scalar / absent values drop, exactly
-    * the writer's rule.
-    */
-  private def pidxExtractValues(spark: org.apache.spark.sql.SparkSession,
-                                key: String,
-                                rows: Seq[(String, String, String)]): Map[(String, String), String] = {
-    if (rows.isEmpty) return Map.empty
-    spark.createDataFrame(rows).toDF("tag", "id", "payload")
-      .selectExpr("tag", "id",
-        s"to_json(try_variant_get(try_parse_json(payload), '$$.$key')) AS raw")
-      .collect()
-      .flatMap { r =>
-        val raw = if (r.isNullAt(2)) null else r.getString(2)
-        if (raw == null || raw == "null" || raw.startsWith("{") ||
-            raw.startsWith("[")) None
-        else Some(((r.getString(0), r.getString(1)), raw))
-      }.toMap
-  }
-
-  /** Absorb a mutation batch into every CURRENT keyed payload index —
-    * the ANN families' maintenance discipline on the value-partition
-    * layout, so filtered search arms, footer COUNTS, and facet
-    * histograms stay index-served under churn:
-    *
-    *  - NEW points append into their value's partition (`inc-*` files,
-    *    LSM level-0 cap) — the partition value comes from the writer's
-    *    own Catalyst expression ([[pidxExtractValues]]) and the dir
-    *    name from Spark's own `escapePathName`, so online appends are
-    *    indistinguishable from rebuilt partitions;
-    *  - UPDATES consolidate the OLD value's partition (the old payload,
-    *    read before the COW rewrite, names it) and re-insert under the
-    *    new value;
-    *  - DELETES tombstone as `(value, id)` flags — value recorded at
-    *    flag time, so footer counts and facet histograms subtract
-    *    per-partition dead counts without reading a row; the
-    *    [[ParquetCollectionStore.deadFlagMaxDial]] cap routes mass
-    *    deletes to consolidation.
-    *
-    * Requires a live SparkSession for the extraction (gates/services
-    * always have one); with none, the key's watermark parks and the
-    * overlay keeps serving exactly — never wrong, only unabsorbed.
-    */
-  private def pidxMaintain(upserts: IndexedSeq[Point],
-                           removedPts: IndexedSeq[Point],
-                           oldHead: Long, newHead: Long,
-                           preExistingPts: IndexedSeq[Point]): Unit = {
-    val bases = pidxBases.filter(b => pidxInsertedAt(b) == oldHead)
-    if (bases.isEmpty) return
-    val sparkOpt = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    if (sparkOpt.isEmpty) return
-    val spark = sparkOpt.get
-    val upIds = upserts.iterator.map(_.id).toSet
-    // each key's index decides the bulk arm for itself (reseal resets
-    // its own absorbed counter; the others keep absorbing)
-    bases.filterNot { baseF =>
-      maybeBulkReseal(baseF, upserts.size)(sp =>
-        ParquetCollectionStore.resealPayloadSidecar(sp, dir,
-          baseF.getAbsolutePath))
-    }.foreach { baseF =>
-      val base = baseF.getAbsolutePath
-      val lines = new String(java.nio.file.Files.readAllBytes(
-          new java.io.File(baseF, "meta.txt").toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-      val key = lines(0)
-      val covered: Set[String] =
-        if (lines.length > 2 && lines(2).nonEmpty) lines(2).split(",").toSet
-        else Set.empty
-      val coveredFields = descriptor.fields.map(_.name).filter { fn =>
-        fieldCols(fn) match {
-          case DenseCol(_, cn) => covered.contains(cn)
-          case SparseCols(_, ic, vc) =>
-            covered.contains(ic) && covered.contains(vc)
-          case MultiCol(_, cn) => covered.contains(cn)
-        }
-      }
-      val vals = pidxExtractValues(spark, key,
-        upserts.map(p => ("n", p.id, p.payload.orNull)) ++
-          preExistingPts.map(p => ("o", p.id, p.payload.orNull)) ++
-          removedPts.map(p => ("d", p.id, p.payload.orNull)))
-      val deadFile = new java.io.File(baseF, "dead.txt")
-      val dead0: Map[String, Set[String]] =
-        ParquetCollectionStore.readValueIdFlags(deadFile)
-      val deadVal: Map[String, String] =
-        dead0.iterator.flatMap { case (v, ids) => ids.map(_ -> v) }.toMap
-      val flagCount = deadVal.size + removedPts.size
-      val tombstone = flagCount <= ParquetCollectionStore.deadFlagMaxDial
-      val dropPairs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      preExistingPts.foreach(p =>
-        vals.get(("o", p.id)).foreach(v => dropPairs += ((v, p.id))))
-      // a resurrected tombstone's dead copy must leave before re-insert
-      upserts.foreach(p =>
-        deadVal.get(p.id).foreach(v => dropPairs += ((v, p.id))))
-      if (!tombstone) {
-        removedPts.foreach(p =>
-          vals.get(("d", p.id)).foreach(v => dropPairs += ((v, p.id))))
-        dead0.foreach { case (v, ids) =>
-          ids.filterNot(upIds).foreach(id => dropPairs += ((v, id)))
-        }
-      }
-      val insByVal = upserts
-        .flatMap(p => vals.get(("n", p.id)).map(v => (v, p)))
-        .groupBy(_._1)
-      val dropsByVal = dropPairs.toSeq.groupBy(_._1).view
-        .mapValues(_.map(_._2).toSet).toMap
-      val folded = scala.collection.mutable.Set.empty[String]
-      def wipe(d: java.io.File): Unit =
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .foreach { f =>
-            new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-            f.delete(): Unit
-          }
-      // parked meta: a crash mid-partition-rewrite retires the key's
-      // index (filters fall through to the exact scan) instead of
-      // serving silently incomplete value partitions
-      ParquetCollectionStore.withParkedMarker(
-          new java.io.File(baseF, "meta.txt")) {
-      (insByVal.keySet ++ dropsByVal.keySet).foreach { v =>
-        val dirName = "value=" + org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.escapePathName(v)
-        val pDir = new java.io.File(s"$base/points/$dirName")
-        val batch = insByVal.getOrElse(v, Seq.empty).map(_._2)
-          .sortWith((a, b) => SparkStringOrder.lt(a.id, b.id))
-        val segDrops0 = dropsByVal.getOrElse(v, Set.empty)
-        val consolidate = segDrops0.nonEmpty || (batch.nonEmpty &&
-          ParquetCollectionStore.parquetFileCount(pDir) >=
-            ParquetCollectionStore.incCompactThreshold)
-        if (consolidate) {
-          // a partition that rewrites anyway reclaims its flags free
-          val segDead = dead0.getOrElse(v, Set.empty).filterNot(upIds)
-          folded ++= segDead
-          val segDrops = segDrops0 ++ segDead
-          val rows =
-            if (!pDir.isDirectory) IndexedSeq.empty[Point]
-            else {
-              val st = new ParquetCollectionStore(pDir.getAbsolutePath,
-                collection, descriptor)
-              st.queryPoints(collection, 0L, st.pointCount(collection),
-                withPayload = true, coveredFields, None).toIndexedSeq
-            }
-          val finalRows = (rows.filterNot(p => segDrops(p.id)) ++ batch)
-            .sortWith((a, b) => SparkStringOrder.lt(a.id, b.id))
-          wipe(pDir)
-          if (finalRows.nonEmpty) {
-            pDir.mkdirs()
-            ParquetLog.writePrimary(
-              new java.io.File(pDir, f"pts-$newHead%012d.parquet"),
-              finalRows, rowCodec)
-          } else {
-            pDir.delete(): Unit // an emptied value partition disappears
-          }
-        } else if (batch.nonEmpty) {
-          pDir.mkdirs()
-          ParquetLog.writePrimary(
-            new java.io.File(pDir, f"inc-$newHead%012d.parquet"),
-            batch, rowCodec)
-        }
-        pidxIncInserts.addAndGet(batch.size): Unit
-      }
-      val deadPairs1: Seq[(String, String)] =
-        if (!tombstone) Seq.empty
-        else (dead0.iterator.flatMap { case (v, ids) =>
-          ids.filterNot(id => folded(id) || upIds(id)).map(v -> _)
-        } ++ removedPts.iterator.flatMap(p =>
-          vals.get(("d", p.id)).map(_ -> p.id))).toSeq
-      if (deadPairs1.isEmpty)
-        java.nio.file.Files.deleteIfExists(deadFile.toPath): Unit
-      else
-        ParquetCollectionStore.atomicWriteText(deadFile.toPath,
-          deadPairs1.sorted.map { case (v, id) =>
-            s"${ParquetCollectionStore.escapeFlag(v)}\t" +
-              ParquetCollectionStore.escapeFlag(id)
-          }.mkString("\n"))
-      ParquetCollectionStore.atomicWriteText(
-        new java.io.File(baseF, "inserted.txt").toPath,
-        newHead.toString)
-      bumpAbsorbed(baseF, upserts.size)
-      }
+  private def annConsolidate(parts: scala.collection.mutable.Map[String, Long],
+                             key: String, d: java.io.File, batch: Seq[Point],
+                             dropping: Boolean, size: => Long): Boolean = {
+    val full = ParquetCollectionStore.incFull(d, batch)
+    val frac = ParquetCollectionStore.bulkMaintainFractionDial
+    val absorbed = parts.getOrElse(key, 0L)
+    val hot = frac > 0 && batch.nonEmpty && {
+      val n = size
+      n > 0L && (absorbed + batch.size).toDouble >= frac * n
     }
+    val consolidate = dropping || full || hot
+    if (hot && !dropping && !full) hotspotConsolidations.incrementAndGet(): Unit
+    parts(key) = if (consolidate) 0L else absorbed + batch.size
+    consolidate
   }
 
-  // ----------------------------------- incremental IVF maintenance --
-
-  /** Where the IVF cluster partitions are current up to, independent of
-    * the serve dials (maintenance runs on any instance of a dir
-    * carrying the sidecar). -1 = no sidecar / legacy meta.
-    */
-  private def ivfInsertedAt: Long = {
-    val marker = new java.io.File(s"$dir/_ivf/field.txt")
-    if (!marker.isFile) -1L
-    else {
-      val lines = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-      if (lines.length < 2 || lines(1).isEmpty) -1L
-      else {
-        val builtAt = lines(1).toLong
-        val ins = new java.io.File(s"$dir/_ivf/inserted.txt")
-        ParquetCollectionStore.readWatermark(ins)
-          .map(math.max(builtAt, _)).getOrElse(builtAt)
-      }
-    }
-  }
-
-  private def ivfInsertTracking(oldHead: Long): Boolean =
-    ivfInsertedAt == oldHead
-
-  /** Absorb a mutation batch into the IVF cluster partitions — the
-    * [[hnswMaintain]] discipline applied to the IVF family so BOTH ANN
-    * sidecars stay index-served under churn:
+  /** The IVF cluster partitions (so BOTH ANN sidecars stay
+    * index-served under churn):
     *
-    *  - NEW points assign to their nearest centroid (the SAME rule the
-    *    probe uses: euclid over the centroid store, smallest-cluster
-    *    tiebreak) and append as an `inc-*` file in that cluster's
-    *    partition — plus an int8 codes row when the quantized tier
-    *    exists (the engine kernel's exact arithmetic);
+    *  - NEW points assign to their nearest centroid (the probe's own
+    *    rule: euclid over the centroid store, smallest-cluster tiebreak)
+    *    and append in that cluster — plus an int8 codes row when the
+    *    quantized tier exists (the engine kernel's exact arithmetic);
     *  - UPDATES and resurrected tombstones consolidate the cluster(s)
     *    holding their old copies (found by footer-pruned id lookup
     *    across the partitions), then re-insert by fresh assignment;
-    *  - DELETES tombstone in O(batch) (`_ivf/dead.txt`) — flagged rows
-    *    never score, never erode the quantized candidate margin, and
-    *    consolidations/rebuilds reclaim them.
+    *  - DELETES tombstone (`_ivf/dead.txt`) — flagged rows never score,
+    *    never erode the quantized candidate margin.
     *
-    * The `_ivf/inserted.txt` watermark then advances, so the serve
-    * overlays an EMPTY tail. Centroids do NOT move online — exactly the
-    * backend's model (assignment drifts as the distribution does; the
-    * drift statistic and the offline refit are the repair, the round-11
-    * dial sheet's trigger).
+    * Centroids do NOT move online — exactly the backend's model
+    * (assignment drifts as the distribution does; the drift statistic
+    * and the offline refit are the repair).
     */
-  private def ivfMaintain(upserts: IndexedSeq[Point], deletes: Set[String],
-                          oldHead: Long, newHead: Long,
-                          preExisting: Set[String]): Unit = {
-    if (!ivfInsertTracking(oldHead)) return
-    if (maybeBulkReseal(new java.io.File(s"$dir/_ivf"), upserts.size)(
-        sp => ParquetCollectionStore.resealIvfSidecar(sp, dir))) return
-    val marker = java.nio.file.Paths.get(s"$dir/_ivf/field.txt")
-    val field = new String(java.nio.file.Files.readAllBytes(marker),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n")(0).trim
-    val centDir = new java.io.File(s"$dir/_ivf/centroids")
-    if (!centDir.isDirectory) return
-    val centStore = new ParquetCollectionStore(centDir.getAbsolutePath,
-      collection, descriptor)
-    val centroids = centStore.queryPoints(collection, 0L,
-        centStore.pointCount(collection), withPayload = false, Seq(field),
-        None)
-      .flatMap(p => p.dense.get(field).map(v => (p.id, v)))
-      .toIndexedSeq
-    if (centroids.isEmpty) return
+  private def ivfMaintainer: Maintainer = Maintainer(
+    new java.io.File(s"$dir/_ivf"), "field.txt", 1,
+    sp => ParquetCollectionStore.resealIvfSidecar(sp, dir),
+    (l, b) => {
+      val field = l(0)
+      val centDir = new java.io.File(s"$dir/_ivf/centroids")
+      val centroids =
+        if (!centDir.isDirectory) IndexedSeq.empty
+        else {
+          val cs = new ParquetCollectionStore(centDir.getAbsolutePath,
+            collection, descriptor)
+          cs.queryPoints(collection, 0L, cs.pointCount(collection),
+              withPayload = false, Seq(field), None)
+            .flatMap(p => p.dense.get(field).map(v => (p.id, v)))
+            .toIndexedSeq
+        }
+      if (centroids.isEmpty) None
+      else Some(() => ivfAbsorb(field, centroids, b))
+    })
+
+  private def ivfAbsorb(field: String,
+                        centroids: IndexedSeq[(String, Array[Float])],
+                        b: MaintBatch): Unit = {
     // nearest centroid under the probe's own rule: ascending euclid,
     // centroid-id ascending tiebreak (ids are zero-padded, so the
     // string order IS the numeric order)
@@ -3276,230 +2846,98 @@ final class ParquetCollectionStore(
       }
       java.lang.Long.parseLong(best).toString
     }
-    val deadFile = new java.io.File(s"$dir/_ivf/dead.txt")
-    val dead0: Set[String] = ParquetCollectionStore.readIdFlags(deadFile)
-    val upIds = upserts.iterator.map(_.id).toSet
-    val allFields = descriptor.fields.map(_.name)
-    val codesTier = new java.io.File(s"$dir/_ivf/codes").isDirectory
-    // old copies that must leave their clusters NOW (updates +
-    // resurrected tombstones); locate them by footer-pruned id lookup.
-    // Mass deletes past the flag cap consolidate instead of tombstone
-    // (the [[hnswMaintain]] rule — dead.txt stays model-sized).
-    val tombstone =
-      dead0.size + deletes.size <= ParquetCollectionStore.deadFlagMaxDial
-    val drops = preExisting ++ (upIds intersect dead0) ++
-      (if (tombstone) Set.empty else deletes ++ (dead0 -- upIds))
-    val foldedDead = scala.collection.mutable.Set.empty[String]
-    val clustersToConsolidate: Map[String, Set[String]] =
+    val ledger = new Ledger(new java.io.File(s"$dir/_ivf/dead.txt"),
+      ParquetCollectionStore.idFlags, b, b.removed.map(_.id -> (())))
+    val drops = (b.preExisting.map(_.id) ++ ledger.drops.map(_._1)).toSet
+    val dropsByCluster: Map[String, Set[String]] =
       if (drops.isEmpty) Map.empty
       else Option(new java.io.File(s"$dir/_ivf/points").listFiles())
         .getOrElse(Array.empty).toSeq
         .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
         .flatMap { d =>
-          val v = d.getName.substring("cluster=".length)
           val st = new ParquetCollectionStore(d.getAbsolutePath,
             collection, descriptor)
           val found = st.queryPoints(collection, 0L,
               st.pointCount(collection), withPayload = false, Nil, None,
               idFilter = Some(drops)).map(_.id).toSet
-          if (found.isEmpty) None else Some(v -> found)
+          if (found.isEmpty) None
+          else Some(d.getName.substring("cluster=".length) -> found)
         }.toMap
-    val upsByCluster = upserts.filter(_.dense.contains(field))
+    val upsByCluster = b.upserts.filter(_.dense.contains(field))
       .groupBy(p => assign(p.dense(field)))
-    def codesOf(v: Array[Float]): (Array[Byte], Float) =
-      ParquetCollectionStore.int8Codes(v)
-    def wipe(d: java.io.File): Unit =
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .foreach { f =>
-          new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-          f.delete(): Unit
-        }
-    // parked meta: a crash mid-cluster-rewrite retires the sidecar
-    // (exact brute serve) instead of serving a half-rewritten cluster
-    ParquetCollectionStore.withParkedMarker(
-        new java.io.File(s"$dir/_ivf/field.txt")) {
+    val codesTier = new java.io.File(s"$dir/_ivf/codes").isDirectory
     val partsFile = new java.io.File(s"$dir/_ivf/absorbed_parts.txt")
-    val parts0 = ParquetCollectionStore.readPartCounters(partsFile)
-    val parts1 = scala.collection.mutable.Map.empty[String, Long] ++= parts0
-    (upsByCluster.keySet ++ clustersToConsolidate.keySet).foreach { v =>
+    val parts = scala.collection.mutable.Map.empty[String, Long] ++=
+      ParquetCollectionStore.readPartCounters(partsFile)
+    (upsByCluster.keySet ++ dropsByCluster.keySet).foreach { v =>
       val cDir = new java.io.File(s"$dir/_ivf/points/cluster=$v")
-      val codesDir = new java.io.File(s"$dir/_ivf/codes/cluster=$v")
       val batch = upsByCluster.getOrElse(v, IndexedSeq.empty)
-      val segDrops0 = clustersToConsolidate.getOrElse(v, Set.empty)
-      // LSM discipline: merge the cluster's accumulated inc files once
-      // they would dominate per-query open cost (see [[hnswMaintain]]);
-      // plus the per-partition HOTSPOT dial — churn concentrated in
-      // THIS cluster consolidates it before the corpus dial could trip
-      val incFull = batch.nonEmpty &&
-        ParquetCollectionStore.parquetFileCount(cDir) >=
-          ParquetCollectionStore.incCompactThreshold
-      val frac = ParquetCollectionStore.bulkMaintainFractionDial
-      val cCount =
-        if (!cDir.isDirectory) 0L
-        else new ParquetCollectionStore(cDir.getAbsolutePath, collection,
-          descriptor).pointCount(collection)
-      val absorbedC = parts1.getOrElse(v, 0L)
-      val hotspot = frac > 0 && batch.nonEmpty && cCount > 0L &&
-        (absorbedC + batch.size).toDouble >= frac * cCount
-      val consolidate = segDrops0.nonEmpty || incFull || hotspot
-      if (hotspot && segDrops0.isEmpty && !incFull)
-        hotspotConsolidations.incrementAndGet(): Unit
-      parts1(v) = if (consolidate) 0L else absorbedC + batch.size
-      if (consolidate) {
-        // a consolidating cluster reclaims its tombstoned ghosts free
-        val st = new ParquetCollectionStore(cDir.getAbsolutePath,
-          collection, descriptor)
-        val rows = st.queryPoints(collection, 0L,
-          st.pointCount(collection), withPayload = true, allFields,
-          None).toIndexedSeq
-        val rowIds = rows.iterator.map(_.id).toSet
-        val segDead = dead0.filter(id => !upIds(id) && rowIds(id))
-        foldedDead ++= segDead
-        val segDrops = segDrops0 ++ segDead
-        val finalRows = (rows.filterNot(p => segDrops(p.id)) ++ batch)
-          .sortWith((a, b) => SparkStringOrder.lt(a.id, b.id))
-        wipe(cDir)
-        if (finalRows.nonEmpty) {
-          cDir.mkdirs()
-          ParquetLog.writePrimary(
-            new java.io.File(cDir, f"pts-$newHead%012d.parquet"),
-            finalRows, rowCodec)
+      val segDrops0 = dropsByCluster.getOrElse(v, Set.empty)
+      def clusterStore = new ParquetCollectionStore(cDir.getAbsolutePath,
+        collection, descriptor)
+      val consolidate = annConsolidate(parts, v, cDir, batch,
+        segDrops0.nonEmpty,
+        if (!cDir.isDirectory) 0L else clusterStore.pointCount(collection))
+      val rows =
+        if (!consolidate) IndexedSeq.empty[Point]
+        else {
+          val st = clusterStore
+          st.queryPoints(collection, 0L, st.pointCount(collection),
+            withPayload = true, descriptor.fields.map(_.name), None)
+            .toIndexedSeq
         }
-        if (codesTier && codesDir.isDirectory) {
-          val keptCodes = Option(codesDir.listFiles())
-            .getOrElse(Array.empty).toIndexedSeq
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .flatMap(f => ParquetLog.readCodeRows(f.getAbsolutePath))
-            .filterNot { case (id, _, _) => segDrops(id) }
-          val addCodes = batch.map { p =>
-            val (c, s) = codesOf(p.dense(field)); (p.id, c, s)
-          }
-          wipe(codesDir)
-          val finalCodes = keptCodes ++ addCodes
-          if (finalCodes.nonEmpty) {
-            codesDir.mkdirs()
-            ParquetLog.writeCodeRows(
-              new java.io.File(codesDir, f"codes-$newHead%012d.parquet"),
-              finalCodes)
-          }
-        }
-      } else if (batch.nonEmpty) {
-        cDir.mkdirs()
-        ParquetLog.writePrimary(
-          new java.io.File(cDir, f"inc-$newHead%012d.parquet"),
-          batch.sortWith((a, b) => SparkStringOrder.lt(a.id, b.id)),
-          rowCodec)
-        if (codesTier) {
-          codesDir.mkdirs()
-          ParquetLog.writeCodeRows(
-            new java.io.File(codesDir, f"inc-$newHead%012d.parquet"),
-            batch.map { p =>
-              val (c, s) = codesOf(p.dense(field)); (p.id, c, s)
-            })
-        }
-      }
+      // a consolidating cluster reclaims its tombstoned ghosts free
+      val segDead = rows.iterator.map(_.id).filter(ledger.standing.contains)
+        .toSet
+      ledger.fold(segDead)
+      val gone = segDrops0 ++ segDead
+      ParquetCollectionStore.rewritePartition(cDir, b.newHead, consolidate,
+        ParquetCollectionStore.byId(batch))(ParquetCollectionStore.byId(
+          rows.filterNot(p => gone(p.id)) ++ batch))(
+        ParquetLog.writePrimary(_, _, rowCodec))
+      if (codesTier)
+        ParquetCollectionStore.rewriteCodes(
+          new java.io.File(s"$dir/_ivf/codes/cluster=$v"), b.newHead,
+          consolidate, gone, batch.map { p =>
+            val (c, s) = ParquetCollectionStore.int8Codes(p.dense(field))
+            (p.id, c, s)
+          })
       ivfIncInserts.addAndGet(batch.size): Unit
     }
-    val dead1 =
-      if (!tombstone) Set.empty[String]
-      else (dead0 -- foldedDead -- upIds) ++ deletes
-    if (dead1 != dead0) {
-      if (dead1.isEmpty)
-        java.nio.file.Files.deleteIfExists(deadFile.toPath): Unit
-      else
-        ParquetCollectionStore.atomicWriteText(deadFile.toPath,
-          dead1.toSeq.sorted
-            .map(ParquetCollectionStore.escapeFlag).mkString("\n"))
-    }
+    ledger.commit()
     ParquetCollectionStore.writePartCounters(partsFile,
-      parts1.toMap.filter(_._2 > 0L))
-    ParquetCollectionStore.atomicWriteText(
-      java.nio.file.Paths.get(s"$dir/_ivf/inserted.txt"),
-      newHead.toString)
-    bumpAbsorbed(new java.io.File(s"$dir/_ivf"), upserts.size)
-    }
+      parts.toMap.filter(_._2 > 0L))
   }
 
-  // ---------------------------------------- incremental HNSW insert --
-
-  /** Where the graphs are current up to, independent of `hnswEf` (the
-    * MAINTENANCE path runs on any instance of a dir carrying the
-    * sidecar; serving is what the ef dial gates). -1 = no sidecar or a
-    * legacy meta without a build position (nothing to maintain).
-    */
-  private def hnswInsertedAt: Long = {
-    val marker = new java.io.File(s"$dir/_hnsw/field.txt")
-    if (!marker.isFile) -1L
-    else {
-      val l = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
-      if (l.length < 2 || l(1).isEmpty) -1L
-      else {
-        val builtAt = l(1).toLong
-        val ins = new java.io.File(s"$dir/_hnsw/inserted.txt")
-        ParquetCollectionStore.readWatermark(ins)
-          .map(math.max(builtAt, _)).getOrElse(builtAt)
-      }
-    }
-  }
-
-  /** The graphs can absorb a batch only while they are current up to
-    * the pre-batch log head — one unabsorbed mutation (an update, a
-    * delete, a legacy gap) parks maintenance until the next offline
-    * rebuild reseals; serving stays exact throughout via the overlay.
-    */
-  private def hnswInsertTracking(oldHead: Long): Boolean =
-    hnswInsertedAt == oldHead
-
-  /** Absorb a mutation batch into the per-segment graphs — the
-    * backend's online HNSW maintenance (its config's indexing
-    * thresholds, /root/reference/tests/bin/config.yaml:169-191, exist
-    * precisely for this): route each id by the seeded segment hash and,
-    * per touched segment,
+  /** The per-segment HNSW graphs — the backend's online HNSW maintenance
+    * (the indexing thresholds in the reference's test config,
+    * `tests/bin/config.yaml:169-191`, exist precisely for this): each id
+    * routes by the seeded segment hash and, per touched segment,
     *
     *  - NEW points run the SAME sequential insert loop the build ran
-    *    ([[graft.ops.HnswSegment.insertInto]]) and append as an
-    *    `inc-*` points file + the new nodes' edge rows — pure-insert
-    *    batches never rewrite a byte of existing state;
-    *  - DELETES and UPDATES consolidate the segment: the dropped ids
-    *    leave the point files, edges touching them leave the edge
-    *    files (so a stale neighborhood never routes a fresh vector),
-    *    and updated points re-insert with clean neighborhoods — the
-    *    whole segment rewrites as one file pair, O(segment);
+    *    ([[graft.ops.HnswSegment.insertInto]]) and append as an `inc-*`
+    *    points file + the new nodes' edge rows — pure-insert batches
+    *    never rewrite a byte of existing state;
+    *  - UPDATES and resurrected tombstones consolidate the segment: the
+    *    dropped ids leave the point files, edges touching them leave
+    *    the edge files (a stale neighborhood never routes a fresh
+    *    vector), and updated points re-insert with clean neighborhoods;
+    *  - plain DELETES tombstone: ghosts keep navigating, never enter a
+    *    result beam, and the next consolidation reclaims them.
     *
-    * then `_hnsw/inserted.txt` advances to the batch's log end — the
-    * next serve overlays an EMPTY tail instead of brute-rescoring it,
-    * so the collection stays GRAPH-SERVED under arbitrary churn
-    * between optimizes (node removal can orphan a distant node in
-    * theory; the offline rebuild is the repair, exactly the backend's
-    * vacuum role).
-    *
-    * Points without the indexed dense field are dropped-not-inserted:
-    * they can never score on this field (SearchSpec.score has no
-    * vector to read), so their absence from the segment partitions is
-    * exactly the exact path's behavior.
-    *
-    * Eligibility: the graphs must be current up to the pre-batch head
-    * (a legacy gap or compacted-away tail parks maintenance until the
-    * next offline rebuild reseals; serving stays exact throughout via
-    * the overlay).
-    *
-    * Cost: one segment-state load per TOUCHED segment per batch
-    * (pure inserts load (id, vector)+edges; consolidations load full
-    * rows) — chunky ingest batches amortize it. Bulk loads and resyncs
-    * should seal offline ([[ParquetCollectionStore.writeHnswSidecar]] /
-    * optimize) rather than trickle through this path.
+    * Node removal can orphan a distant node in theory; the offline
+    * rebuild is the repair, exactly the backend's vacuum role. Points
+    * without the indexed field are dropped-not-inserted: they can never
+    * score on it, so their absence is the exact path's behavior. Cost:
+    * one segment-state load per TOUCHED segment per batch (pure inserts
+    * load (id, vector) + edges; consolidations load full rows).
     */
-  private def hnswMaintain(upserts: IndexedSeq[Point], deletes: Set[String],
-                           oldHead: Long, newHead: Long,
-                           preExisting: Set[String]): Unit = {
-    if (!hnswInsertTracking(oldHead)) return
-    if (maybeBulkReseal(new java.io.File(s"$dir/_hnsw"), upserts.size)(
-        sp => ParquetCollectionStore.resealHnswSidecar(sp, dir))) return
-    val l = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/_hnsw/field.txt")),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
+  private def hnswMaintainer: Maintainer = Maintainer(
+    new java.io.File(s"$dir/_hnsw"), "field.txt", 1,
+    sp => ParquetCollectionStore.resealHnswSidecar(sp, dir),
+    (l, b) => Some(() => hnswAbsorb(l, b)))
+
+  private def hnswAbsorb(l: Array[String], b: MaintBatch): Unit = {
     val (field, m, efC, nseg, seed) =
       (l(0), l(2).toInt, l(3).toInt, l(4).toInt, l(5).toLong)
     val metric = if (l.length > 6 && l(6).nonEmpty) l(6) else "cosine"
@@ -3508,37 +2946,17 @@ final class ParquetCollectionStore(
     // mean-pooled vector set (multi graphs) — the serve loader's rule
     def pooledOf(p: Point): Option[Array[Double]] =
       ParquetCollectionStore.pooledVector(kind, field, p)
-    val allFields = descriptor.fields.map(_.name)
     def segOf(id: String): Int = graft.ops.HnswSegment.segOf(id, nseg, seed)
-    val deadFile = new java.io.File(s"$dir/_hnsw/dead.txt")
-    val dead0: Set[String] = ParquetCollectionStore.readIdFlags(deadFile)
-    val upIds = upserts.iterator.map(_.id).toSet
-    // ids whose stored copies must leave their segment files NOW:
-    // UPDATES (the old node must not shadow the re-insert) and
-    // RESURRECTED tombstones (a dead copy under the same id would
-    // collide with the fresh node). Plain DELETES tombstone instead —
-    // O(batch), the backend's deleted-flags model; ghosts keep
-    // navigating, never enter a result beam, and the next
-    // consolidation or offline rebuild reclaims them — UNLESS the flag
-    // set would outgrow its cap (a mass delete / truncate): then the
-    // deletes AND the accumulated flags consolidate out of their
-    // segments instead, so `dead.txt` stays model-sized by
-    // construction, never corpus-sized.
-    val tombstone =
-      dead0.size + deletes.size <= ParquetCollectionStore.deadFlagMaxDial
-    val drops = preExisting ++ (upIds intersect dead0) ++
-      (if (tombstone) Set.empty else deletes ++ (dead0 -- upIds))
-    val upsBySeg = upserts.groupBy(p => segOf(p.id))
-    val dropsBySeg = drops.groupBy(segOf)
-    val foldedDead = scala.collection.mutable.Set.empty[String]
-    // parked meta: a crash mid-segment-rewrite (points written, edges
-    // not — a one-node reachable graph) retires the sidecar instead
-    ParquetCollectionStore.withParkedMarker(
-        new java.io.File(s"$dir/_hnsw/field.txt")) {
+    val ledger = new Ledger(new java.io.File(s"$dir/_hnsw/dead.txt"),
+      ParquetCollectionStore.idFlags, b, b.removed.map(_.id -> (())))
+    // an update's old node must not shadow the re-insert; a resurrected
+    // id's dead copy would collide with the fresh node
+    val dropsBySeg = (b.preExisting.map(_.id) ++ ledger.drops.map(_._1))
+      .toSet.groupBy(segOf)
+    val upsBySeg = b.upserts.groupBy(p => segOf(p.id))
     val codesTier = new java.io.File(s"$dir/_hnsw/codes").isDirectory
     // the codes row of a point: int8 of the float-narrowed NODE KEY —
-    // the field vector for dense graphs, the mean-pooled set for multi
-    // — the same bytes the offline writers lay (QuantKernel arithmetic,
+    // the same bytes the offline writers lay (QuantKernel arithmetic,
     // double pooling narrowed to float before quantizing)
     def codesOf(p: Point): Option[(String, Array[Byte], Float)] =
       (if (kind == "multi") pooledOf(p).map(_.map(_.toFloat))
@@ -3547,12 +2965,10 @@ final class ParquetCollectionStore(
         (p.id, cd, s)
       }
     val partsFile = new java.io.File(s"$dir/_hnsw/absorbed_parts.txt")
-    val parts0 = ParquetCollectionStore.readPartCounters(partsFile)
-    val parts1 = scala.collection.mutable.Map.empty[String, Long] ++= parts0
+    val parts = scala.collection.mutable.Map.empty[String, Long] ++=
+      ParquetCollectionStore.readPartCounters(partsFile)
     (upsBySeg.keySet ++ dropsBySeg.keySet).foreach { seg =>
       val segDir = new java.io.File(s"$dir/_hnsw/points/seg=$seg")
-      val edgeDir = new java.io.File(s"$dir/_hnsw/edges/seg=$seg")
-      val codesDir = new java.io.File(s"$dir/_hnsw/codes/seg=$seg")
       val segDrops0 = dropsBySeg.getOrElse(seg, Set.empty)
       val batch = upsBySeg.getOrElse(seg, IndexedSeq.empty)
         .filter(p => pooledOf(p).isDefined)
@@ -3560,155 +2976,62 @@ final class ParquetCollectionStore(
         if (!segDir.isDirectory) None
         else Some(new ParquetCollectionStore(segDir.getAbsolutePath,
           collection, descriptor))
-      // LSM discipline: consolidate when rows must drop, AND when the
-      // append path has accumulated enough inc files that per-query
-      // open overhead starts to matter — frequent tiny batches stay
-      // O(batch) most of the time and pay one merge every
-      // `incCompactThreshold` appends, keeping file counts bounded
-      // without waiting for the offline optimizer
-      val incFull = batch.nonEmpty &&
-        ParquetCollectionStore.parquetFileCount(segDir) >=
-          ParquetCollectionStore.incCompactThreshold
-      // the per-partition HOTSPOT dial: churn concentrated in THIS
-      // segment (absorbed since its last consolidation + this batch
-      // rivals its own size) consolidates it now — the corpus-fraction
-      // bulk arm cannot see skewed churn (see readPartCounters docs)
-      val frac = ParquetCollectionStore.bulkMaintainFractionDial
-      val segCount = segStore.map(_.pointCount(collection)).getOrElse(0L)
-      val absorbedSeg = parts1.getOrElse(seg.toString, 0L)
-      val hotspot = frac > 0 && batch.nonEmpty && segCount > 0L &&
-        (absorbedSeg + batch.size).toDouble >= frac * segCount
-      val consolidate = segDrops0.nonEmpty || incFull || hotspot
-      if (hotspot && segDrops0.isEmpty && !incFull)
-        hotspotConsolidations.incrementAndGet(): Unit
-      parts1(seg.toString) =
-        if (consolidate) 0L else absorbedSeg + batch.size
+      val consolidate = annConsolidate(parts, seg.toString, segDir, batch,
+        segDrops0.nonEmpty, segStore.fold(0L)(_.pointCount(collection)))
       // a segment that rewrites anyway reclaims its tombstoned ghosts
-      // for free — fold them into the drop set and clear their flags
       val segDead =
         if (!consolidate) Set.empty[String]
-        else dead0.filter(id => !upIds(id) && segOf(id) == seg)
-      foldedDead ++= segDead
+        else ledger.standing.keySet.filter(segOf(_) == seg)
+      ledger.fold(segDead)
       val segDrops = segDrops0 ++ segDead
       // full rows only when consolidating (the rewrite needs them);
       // the pure-insert path reads just (id, indexed vector)
-      val rows: IndexedSeq[Point] = segStore match {
-        case None => IndexedSeq.empty
-        case Some(st) =>
-          st.queryPoints(collection, 0L, st.pointCount(collection),
-            withPayload = consolidate,
-            if (consolidate) allFields else Seq(field), None).toIndexedSeq
+      val rows: IndexedSeq[Point] = segStore.fold(IndexedSeq.empty[Point]) {
+        st => st.queryPoints(collection, 0L, st.pointCount(collection),
+          withPayload = consolidate,
+          if (consolidate) descriptor.fields.map(_.name) else Seq(field),
+          None).toIndexedSeq
       }
       val kept = rows.filterNot(p => segDrops(p.id))
       val keptIds = kept.iterator.map(_.id).toSet
-      val edges: IndexedSeq[(Int, String, String)] =
-        Option(edgeDir.listFiles()).getOrElse(Array.empty).toIndexedSeq
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .flatMap(f => ParquetLog.readEdgeRows(f.getAbsolutePath))
+      val edges = hnswEdgeRows(seg)
       val keptEdges =
         if (!consolidate) edges
         else edges.filter(e => keptIds(e._2) && keptIds(e._3))
       val graphPts = kept.flatMap(p => pooledOf(p).map((p.id, _)))
       val newPts = batch.flatMap(p => pooledOf(p).map((p.id, _)))
-        .toIndexedSeq
       // a MASS drop fragments an edge-filtered graph (removing a node
       // removes the routes THROUGH it; at >10% removal whole regions
       // orphan — measured on the circle fixture at 45%): the
       // consolidation already pays O(segment), so rebuild the segment's
-      // graph outright and keep exactness at exhaustive ef. Small drops
-      // (the update case) keep the cheap edge filter.
+      // graph outright. Small drops (the update case) keep the cheap
+      // edge filter.
       val massDrop = consolidate &&
         segDrops.size.toLong * 10L > math.max(rows.size.toLong, 1L)
       val newEdges =
         if (massDrop) Seq.empty
         else graft.ops.HnswSegment.insertInto(graphPts, keptEdges,
           newPts, m, efC, seed, metric).toSeq
-      def wipe(d: java.io.File): Unit =
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .foreach { f =>
-            new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-            f.delete(): Unit
-          }
-      if (consolidate) {
-        val finalRows = (kept ++ batch)
-          .sortWith((a, b) => SparkStringOrder.lt(a.id, b.id))
-        wipe(segDir)
-        if (finalRows.nonEmpty) {
-          segDir.mkdirs()
-          ParquetLog.writePrimary(
-            new java.io.File(segDir, f"pts-$newHead%012d.parquet"),
-            finalRows, rowCodec)
-        }
-        wipe(edgeDir)
-        val finalEdges =
-          if (massDrop)
-            graft.ops.HnswSegment.build(graphPts ++ newPts, m, efC, seed,
-              metric).toSeq
-          else keptEdges ++ newEdges
-        if (finalEdges.nonEmpty) {
-          edgeDir.mkdirs()
-          ParquetLog.writeEdgeRows(
-            new java.io.File(edgeDir, f"edges-$newHead%012d.parquet"),
-            finalEdges)
-        }
-        // the quantized walk tier consolidates in lockstep (the engine
-        // kernel's exact int8 arithmetic, same drops, same batch)
-        if (codesTier && codesDir.isDirectory) {
-          val keptCodes = Option(codesDir.listFiles())
-            .getOrElse(Array.empty).toIndexedSeq
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .flatMap(f => ParquetLog.readCodeRows(f.getAbsolutePath))
-            .filterNot { case (id, _, _) => segDrops(id) }
-          val addCodes = batch.flatMap(codesOf)
-          wipe(codesDir)
-          val finalCodes = keptCodes ++ addCodes
-          if (finalCodes.nonEmpty) {
-            codesDir.mkdirs()
-            ParquetLog.writeCodeRows(
-              new java.io.File(codesDir, f"codes-$newHead%012d.parquet"),
-              finalCodes)
-          }
-        }
-      } else if (batch.nonEmpty) {
-        segDir.mkdirs()
-        ParquetLog.writePrimary(
-          new java.io.File(segDir, f"inc-$newHead%012d.parquet"),
-          batch.sortWith((a, b) => SparkStringOrder.lt(a.id, b.id)),
-          rowCodec)
-        if (newEdges.nonEmpty) {
-          edgeDir.mkdirs()
-          ParquetLog.writeEdgeRows(
-            new java.io.File(edgeDir, f"inc-$newHead%012d.parquet"),
-            newEdges)
-        }
-        if (codesTier) {
-          codesDir.mkdirs()
-          ParquetLog.writeCodeRows(
-            new java.io.File(codesDir, f"inc-$newHead%012d.parquet"),
-            batch.flatMap(codesOf))
-        }
-      }
+      ParquetCollectionStore.rewritePartition(segDir, b.newHead, consolidate,
+        ParquetCollectionStore.byId(batch))(
+        ParquetCollectionStore.byId(kept ++ batch))(
+        ParquetLog.writePrimary(_, _, rowCodec))
+      ParquetCollectionStore.rewritePartition(
+        new java.io.File(s"$dir/_hnsw/edges/seg=$seg"), b.newHead,
+        consolidate, newEdges, "edges")(
+        if (massDrop)
+          graft.ops.HnswSegment.build(graphPts ++ newPts, m, efC, seed,
+            metric).toSeq
+        else keptEdges ++ newEdges)(ParquetLog.writeEdgeRows)
+      if (codesTier)
+        ParquetCollectionStore.rewriteCodes(
+          new java.io.File(s"$dir/_hnsw/codes/seg=$seg"), b.newHead,
+          consolidate, segDrops, batch.flatMap(codesOf))
       hnswIncInserts.addAndGet(batch.size): Unit
     }
-    val dead1 =
-      if (!tombstone) Set.empty[String]
-      else (dead0 -- foldedDead -- upIds) ++ deletes
-    if (dead1 != dead0) {
-      if (dead1.isEmpty)
-        java.nio.file.Files.deleteIfExists(deadFile.toPath): Unit
-      else
-        ParquetCollectionStore.atomicWriteText(deadFile.toPath,
-          dead1.toSeq.sorted
-            .map(ParquetCollectionStore.escapeFlag).mkString("\n"))
-    }
+    ledger.commit()
     ParquetCollectionStore.writePartCounters(partsFile,
-      parts1.toMap.filter(_._2 > 0L))
-    ParquetCollectionStore.atomicWriteText(
-      java.nio.file.Paths.get(s"$dir/_hnsw/inserted.txt"),
-      newHead.toString)
-    bumpAbsorbed(new java.io.File(s"$dir/_hnsw"), upserts.size)
-    }
+      parts.toMap.filter(_._2 > 0L))
   }
 
   /** DELETE by id set: rewrite only the primary files whose range can
@@ -3738,10 +3061,8 @@ final class ParquetCollectionStore(
           droppedPts ++= dropped.map(p =>
             Point(p.id, p.payload, sparse = p.sparse))
           val f = new java.io.File(fm.path)
-          if (kept.isEmpty) {
-            new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-            f.delete(): Unit
-          } else ParquetLog.writePrimary(f, kept, rowCodec)
+          if (kept.isEmpty) ParquetCollectionStore.dropParquet(f)
+          else ParquetLog.writePrimary(f, kept, rowCodec)
         }
       }
     }
@@ -3752,19 +3073,9 @@ final class ParquetCollectionStore(
       val newHead = ParquetLog.appendSegment(logDir, oldHead,
         hit.map(id => LogEntry(LogOps.Delete, Point(id, None))),
         rowCodec)
-      hnswMaintain(IndexedSeq.empty, hit.toSet, oldHead, newHead,
-        Set.empty)
-      ivfMaintain(IndexedSeq.empty, hit.toSet, oldHead, newHead,
-        Set.empty)
-      val droppedSeq = droppedPts.result().toIndexedSeq
-      tidxMaintain(IndexedSeq.empty, droppedSeq, oldHead, newHead,
-        IndexedSeq.empty)
-      gidxMaintain(IndexedSeq.empty, droppedSeq, oldHead, newHead,
-        IndexedSeq.empty)
-      pidxMaintain(IndexedSeq.empty, droppedSeq, oldHead, newHead,
-        IndexedSeq.empty)
-      sparseMaintain(IndexedSeq.empty, droppedSeq, oldHead, newHead,
-        IndexedSeq.empty)
+      val batch = MaintBatch(IndexedSeq.empty,
+        droppedPts.result().toIndexedSeq, IndexedSeq.empty, oldHead, newHead)
+      maintainers.foreach(maintain(_, batch))
       reopened
     }
   }
@@ -3799,17 +3110,13 @@ final class ParquetCollectionStore(
       s"cannot compact '$collection' past its log head ($headPos), got $upTo")
     val codec = rowCodec
     ParquetLog.segments(logDir).foreach { m =>
-      if (m.end <= upTo) {
-        val f = new java.io.File(m.path)
-        new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-        f.delete(): Unit
-      } else if (m.start < upTo) {
+      if (m.end <= upTo)
+        ParquetCollectionStore.dropParquet(new java.io.File(m.path))
+      else if (m.start < upTo) {
         // straddling segment: rewrite the retained suffix at its
         // ORIGINAL positions, then drop the old file
         val retained = ParquetLog.readSegment(m.path, upTo, m.end, codec)
-        val f = new java.io.File(m.path)
-        new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-        f.delete(): Unit
+        ParquetCollectionStore.dropParquet(new java.io.File(m.path))
         ParquetLog.appendSegment(logDir, upTo, retained, codec): Unit
       }
     }
@@ -4068,10 +3375,7 @@ object ParquetCollectionStore {
                                            dir: String,
                                            primaries: Option[DataFrame] = None): Unit = {
     val sparseMeta = new java.io.File(s"$dir/_sparse/meta.txt")
-    if (sparseMeta.isFile) {
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(sparseMeta.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
+    markerLines(sparseMeta).foreach { lines =>
       val df = primaries.getOrElse(spark.read.parquet(dir))
       parkedReseal(sparseMeta) {
         writeSparseSidecar(df, dir, field = lines(0),
@@ -4084,10 +3388,7 @@ object ParquetCollectionStore {
                                         dir: String,
                                         primaries: Option[DataFrame] = None): Unit = {
     val geoMeta = new java.io.File(s"$dir/_gidx/meta.txt")
-    if (geoMeta.isFile) {
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(geoMeta.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
+    markerLines(geoMeta).foreach { lines =>
       val df = primaries.getOrElse(spark.read.parquet(dir))
       parkedReseal(geoMeta) {
         writeGeoSidecar(df, dir, key = lines(0), bits = lines(1).toInt)
@@ -4099,10 +3400,7 @@ object ParquetCollectionStore {
                                          dir: String,
                                          primaries: Option[DataFrame] = None): Unit = {
     val textMeta = new java.io.File(s"$dir/_tidx/meta.txt")
-    if (textMeta.isFile) {
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(textMeta.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
+    markerLines(textMeta).foreach { lines =>
       val df = primaries.getOrElse(spark.read.parquet(dir))
       parkedReseal(textMeta) {
         writeTextSidecar(df, dir, key = lines(0),
@@ -4115,10 +3413,7 @@ object ParquetCollectionStore {
                                          dir: String,
                                          primaries: Option[DataFrame] = None): Unit = {
     val hnswMeta = new java.io.File(s"$dir/_hnsw/field.txt")
-    if (hnswMeta.isFile) {
-      val l = new String(
-        java.nio.file.Files.readAllBytes(hnswMeta.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
+    markerLines(hnswMeta).foreach { l =>
       val df = primaries.getOrElse(spark.read.parquet(dir))
       val vecCol = if (df.columns.contains(l(0))) l(0) else "vector"
       val kind = if (l.length > 7 && l(7).nonEmpty) l(7) else "dense"
@@ -4151,10 +3446,8 @@ object ParquetCollectionStore {
                                         primaries: Option[DataFrame] = None): Unit = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val ivfMeta = new java.io.File(s"$dir/_ivf/field.txt")
-    if (ivfMeta.isFile) {
-      val field = new String(
-        java.nio.file.Files.readAllBytes(ivfMeta.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n")(0).trim
+    markerLines(ivfMeta).foreach { lines =>
+      val field = lines(0)
       val df = primaries.getOrElse(spark.read.parquet(dir))
       val vecCol = if (df.columns.contains(field)) field else "vector"
       val nlist = spark.read.parquet(s"$dir/_ivf/centroids").count().toInt
@@ -4181,16 +3474,13 @@ object ParquetCollectionStore {
 
   /** Reseal ONE keyed payload index (`base` = `_pidx/k_<key>` dir) from
     * the COW-current primaries — the pidx slice of [[optimize]], shared
-    * with [[ParquetCollectionStore.pidxMaintain]]'s bulk arm.
+    * with [[ParquetCollectionStore.payloadMaintainer]]'s bulk arm.
     */
   private[sources] def resealPayloadSidecar(spark: org.apache.spark.sql.SparkSession,
                                             dir: String, base: String,
                                             primaries: Option[DataFrame] = None): Unit = {
     val meta = new java.io.File(s"$base/meta.txt")
-    if (meta.isFile) {
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(meta.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
+    markerLines(meta).foreach { lines =>
       val covered =
         if (lines.length > 2 && lines(2).nonEmpty) lines(2).split(",").toSeq
         else Nil
@@ -4475,9 +3765,7 @@ object ParquetCollectionStore {
   def writeHnswQuantizedSidecar(df: DataFrame, dir: String,
                                 vectorColumn: String = "vector"): Unit = {
     import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val l = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/_hnsw/field.txt")),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
+    val l = markerLines(new java.io.File(s"$dir/_hnsw/field.txt")).get
     val (numSegments, seed) = (l(4).toInt, l(5).toLong)
     graft.ops.Quant.quantizeColumn(
         df.withColumn(vectorColumn,
@@ -4581,9 +3869,7 @@ object ParquetCollectionStore {
                                      multiColumn: String = "multi"): Unit = {
     import org.apache.spark.sql.functions.expr
     import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val l = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/_hnsw/field.txt")),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim)
+    val l = markerLines(new java.io.File(s"$dir/_hnsw/field.txt")).get
     val (numSegments, seed) = (l(4).toInt, l(5).toLong)
     val narrowed = df
       .withColumn(multiColumn,
@@ -4826,14 +4112,6 @@ object ParquetCollectionStore {
           unescapeFlag(l.substring(i + 1))))
       }.toSeq.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
 
-  /** Text-index tombstone file: one `id<TAB>b,b,...` line per flag —
-    * the id [[escapeFlag]]-escaped, the buckets its tokens lived in
-    * recorded at flag time (so a resurrection consolidates exactly
-    * those, never a scan). Tab-less lines read as (id, no buckets).
-    */
-  private[sources] def readTextDead(f: java.io.File): Map[String, Seq[Int]] =
-    readSparseDead(f) // same format: escaped id TAB comma-joined ints
-
   /** Live (nDocs, totalTokens) override written by the text-index
     * maintenance — absent/torn reads as None (fall back to the meta).
     */
@@ -4946,17 +4224,142 @@ object ParquetCollectionStore {
     (codes, scaleF)
   }
 
-  private[sources] def parquetFileCount(d: java.io.File): Int =
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .count(f => f.isFile && f.getName.endsWith(".parquet"))
-
-  /** Sparse tombstone file: one `id<TAB>dim,dim,...` line per flag. The
-    * id is [[escapeFlag]]-escaped (ids are user data and may contain the
-    * delimiters); a line with NO tab — a zero-dim flag whose trailing
-    * tab `.trim` stripped, or a legacy file — reads as (id, no dims)
-    * instead of crashing every subsequent open.
+  /** A sidecar marker's trimmed lines; None when it is absent (never
+    * built, or parked by a crashed rewrite).
     */
-  private[sources] def readSparseDead(f: java.io.File): Map[String, Seq[Int]] =
+  private[sources] def markerLines(marker: java.io.File): Option[Array[String]] =
+    if (!marker.isFile) None
+    else Some(new String(java.nio.file.Files.readAllBytes(marker.toPath),
+      java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.trim))
+
+  /** The log position a sidecar under `base` is CURRENT up to: the
+    * build's position (marker line `buildLine`) advanced by the
+    * maintenance watermark (`inserted.txt`, reset by every rebuild).
+    * -1 = a legacy marker without a build position: it serves as-is and
+    * never maintains.
+    */
+  private[sources] def appliedAt(base: java.io.File, lines: Array[String],
+                                 buildLine: Int): Long = {
+    val builtAt =
+      if (lines.length > buildLine && lines(buildLine).nonEmpty)
+        lines(buildLine).toLong
+      else -1L
+    if (builtAt < 0) builtAt
+    else readWatermark(new java.io.File(base, "inserted.txt"))
+      .map(math.max(builtAt, _)).getOrElse(builtAt)
+  }
+
+  /** The text index's LIVE (nDocs, totalTokens): the maintenance
+    * override (`_tidx/stats.txt`) when present, else the build's meta
+    * line 4; None on a legacy match-only sidecar.
+    */
+  private[sources] def textStats(dir: String,
+                                 lines: Array[String]): Option[(Long, Long)] =
+    readTextStats(new java.io.File(s"$dir/_tidx/stats.txt")).orElse {
+      if (lines.length > 3 && lines(3).nonEmpty) {
+        val p = lines(3).split(" ")
+        Some((p(0).toLong, p(1).toLong))
+      } else None
+    }
+
+  private[sources] def liveSpark: Option[org.apache.spark.sql.SparkSession] =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+
+  /** A tombstone file's codec: its flags keyed by id (`F` = where the
+    * dead copy lives, when the family records it) and their lines in
+    * file order.
+    */
+  private[sources] final case class FlagCodec[F](
+      read: java.io.File => Map[String, F],
+      lines: Map[String, F] => Seq[String])
+
+  /** HNSW/IVF flags: one id per line. */
+  private[sources] val idFlags: FlagCodec[Unit] = FlagCodec(
+    readIdFlags(_).iterator.map(_ -> (())).toMap,
+    _.keys.toSeq.sorted.map(escapeFlag))
+
+  /** Sparse/text flags: `id<TAB>n,n,...` (the dead copy's dims or token
+    * buckets), by id.
+    */
+  private[sources] val intListFlags: FlagCodec[Seq[Int]] = FlagCodec(
+    readIntListFlags,
+    _.toSeq.sortBy(_._1).map { case (id, ns) =>
+      s"${escapeFlag(id)}\t${ns.mkString(",")}"
+    })
+
+  /** Geo/payload flags: `value<TAB>id`, by (value, id). */
+  private[sources] def valueFlags[V: Ordering](parse: String => V): FlagCodec[V] =
+    FlagCodec(
+      readValueIdFlags(_).iterator.flatMap { case (v, ids) =>
+        val pv = parse(v)
+        ids.iterator.map(_ -> pv)
+      }.toMap,
+      _.toSeq.map(_.swap).sorted.map { case (v, id) =>
+        s"${escapeFlag(v.toString)}\t${escapeFlag(id)}"
+      })
+
+  private[sources] def parquetFiles(d: java.io.File): IndexedSeq[java.io.File] =
+    Option(d.listFiles()).getOrElse(Array.empty).toIndexedSeq
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+
+  /** Delete one parquet file with its Hadoop `.crc` sibling. */
+  private[sources] def dropParquet(f: java.io.File): Unit = {
+    new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+    f.delete(): Unit
+  }
+
+  /** The LSM level-0 cap: a sidecar partition holding
+    * [[incCompactThreshold]] files merges on its next absorbed batch
+    * instead of appending another.
+    */
+  private[sources] def incFull(d: java.io.File, batch: Seq[_]): Boolean =
+    batch.nonEmpty && parquetFiles(d).size >= incCompactThreshold
+
+  /** One sidecar partition's write for a batch. CONSOLIDATE: `merged`
+    * (the surviving rows plus the batch, read before anything is
+    * deleted) replaces every parquet file as one `<seal>-<newHead>`
+    * file, and an emptied partition disappears. Otherwise APPEND the
+    * batch as one `inc-<newHead>` file.
+    */
+  private[sources] def rewritePartition[R](d: java.io.File, newHead: Long,
+      consolidate: Boolean, batch: Seq[R], seal: String = "pts")(
+      merged: => Seq[R])(write: (java.io.File, Seq[R]) => Unit): Unit =
+    if (consolidate) {
+      val rows = merged
+      parquetFiles(d).foreach(dropParquet)
+      if (rows.nonEmpty) {
+        d.mkdirs()
+        write(new java.io.File(d, f"$seal-$newHead%012d.parquet"), rows)
+      } else d.delete(): Unit
+    } else if (batch.nonEmpty) {
+      d.mkdirs()
+      write(new java.io.File(d, f"inc-$newHead%012d.parquet"), batch)
+    }
+
+  /** An ANN partition's int8 codes rewrite in lockstep with its points:
+    * the same drops, the batch's codes added.
+    */
+  private[sources] def rewriteCodes(d: java.io.File, newHead: Long,
+      consolidate: Boolean, gone: Set[String],
+      add: Seq[(String, Array[Byte], Float)]): Unit =
+    rewritePartition(d, newHead, consolidate, add, "codes")(
+      parquetFiles(d).flatMap(f => ParquetLog.readCodeRows(f.getAbsolutePath))
+        .filterNot(r => gone(r._1)) ++ add)(ParquetLog.writeCodeRows)
+
+  /** Points in stored id order. */
+  private[sources] def byId(pts: Seq[Point]): Seq[Point] =
+    pts.sortWith((a, b) => SparkStringOrder.lt(a.id, b.id))
+
+  /** Sparse and text tombstone file: one `id<TAB>n,n,...` line per flag
+    * — the dead copy's dims (sparse) or token buckets (text), recorded
+    * at flag time so a resurrection consolidates exactly those, never a
+    * scan. The id is [[escapeFlag]]-escaped (ids are user data and may
+    * contain the delimiters); a line with NO tab — a zero-dim flag whose
+    * trailing tab `.trim` stripped, or a legacy file — reads as (id, no
+    * dims) instead of crashing every subsequent open.
+    */
+  private[sources] def readIntListFlags(f: java.io.File): Map[String, Seq[Int]] =
     if (!f.isFile) Map.empty
     else new String(java.nio.file.Files.readAllBytes(f.toPath),
       java.nio.charset.StandardCharsets.UTF_8)

@@ -75,6 +75,26 @@ class GraphSpec extends AnyFunSuite {
     assert(viaDriver.map(_._1) === Seq(None, Some(1L), Some(2L), Some(3L)))
   }
 
+  test("a graph under the node cap but over it in edges takes the loop, with the driver arm's ranks") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    def joins(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
+    def ranks(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(x => (x.getLong(0), x.getLong(1))).sortBy(_._1).toSeq
+    val m = Graph.materialize(edges)
+    // 5 nodes, 14 directed edges: a cap of 10 admits the nodes only
+    assert(m.n === 5L)
+    assert(m.outdeg.agg(sum(col("outdeg"))).head().getLong(0) === 14L)
+    val viaDriver = Graph.pageRank(m, iterations = 5)
+    assert(joins(viaDriver) === 0)
+    spark.conf.set("graft.pagerank.driverMaxEdges", "10")
+    try {
+      val capped = Graph.pageRank(m, iterations = 5)
+      assert(joins(capped) > 0, "the driver arm served past its edge cap")
+      assert(ranks(capped) === ranks(viaDriver))
+    } finally spark.conf.unset("graft.pagerank.driverMaxEdges")
+  }
+
   test("shuffle-join arm (above the broadcast cap) is bit-identical to the broadcast arm") {
     val m = Graph.materialize(edges)
     withLoopArm {

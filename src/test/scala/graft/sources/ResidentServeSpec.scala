@@ -152,6 +152,8 @@ class ResidentServeSpec extends AnyFunSuite {
     val st = new ParquetCollectionStore(d, "m", mdesc, hnswEf = 4096,
       hnswCandidateK = 300)
     val brute = new ParquetCollectionStore(d, "m", mdesc)
+    val mem = InMemoryCollectionStore.single("m", mdesc, (0 until 300).map(i =>
+      Point(f"$i%04d", Some(s"""{"g":${i % 10}}"""), multi = Map("mv" -> vecs(i)))))
     st.searchPoints("m", spec, withPayload = true, Seq("mv"))
     val opened = st.hnswSegmentFilesOpened
     val filter = PayloadFilter(Seq(PayloadCondition("g", "eq", "3")), Nil, None)
@@ -160,9 +162,14 @@ class ResidentServeSpec extends AnyFunSuite {
       withPayload <- Seq(true, false)
       fields <- Seq(Nil, Seq("mv"))
     } {
+      val what = s"${pf.describe} withPayload=$withPayload $fields"
+      val want = rows(brute.searchPointsFiltered("m", spec, withPayload, fields, pf))
       assert(rows(st.searchPointsFiltered("m", spec, withPayload, fields, pf)) ===
-        rows(brute.searchPointsFiltered("m", spec, withPayload, fields, pf)),
-        s"${pf.describe} withPayload=$withPayload $fields")
+        want, what)
+      assert(rows(mem.searchPointsFiltered("m", spec, withPayload, fields, pf)) ===
+        want, what)
+      // the scored multi-vector field returns only when requested
+      assert(want.forall(_._5.nonEmpty === fields.nonEmpty), what)
     }
     assert(st.hnswFilteredExactServes.get() === 4L)
     assert(st.hnswRowSegments === 2)
