@@ -7,9 +7,14 @@ Reads every <outDir>/<name> parquet written by graft.Verify, runs the
 matching oracle SQL from <outDir>/oracle_sql.json in DuckDB over the
 <sfDir> parquet tables, sorts columns by name, and compares values
 exactly (with a tiny-float-diff report to distinguish rounding issues
-from real bugs).
+from real bugs). A gate of oracle_sql.json with no output directory
+fails as MISSING.
+
+Also writes <outDir>/result_hashes.json: per gate, a sha256 of its
+output (columns sorted by name, rows sorted), so two runs compare with
+`diff`.
 """
-import json, math, os, sys
+import hashlib, json, math, os, sys
 import duckdb
 import numpy as np
 
@@ -42,6 +47,10 @@ def norm(v):
     if hasattr(v, "isoformat"): return v.isoformat()
     return v
 
+def row_key(row):
+    """The gate's row order: rows are sorted before hashing."""
+    return tuple(str(x) for x in row)
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -50,36 +59,41 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     results = {}
-    names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(os.path.join(out_dir, d)))
+    found = {d for d in os.listdir(out_dir)
+             if os.path.isdir(os.path.join(out_dir, d))}
+    names = sorted(found | set(oracle))
+    hashes = {}
     for name in names:
+        if name not in found:
+            results[name] = "MISSING no output (the gate failed or never ran)"
+            continue
         got_rel = con.sql(f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
+        gcols = sorted(got_rel.columns)
+        # go through pandas like the correctness gate does — dtype coercions
+        # (e.g. HUGEINT -> float64) must be visible to the mimic
+        got = [tuple(norm(v) for v in row)
+               for row in got_rel.df()[gcols].itertuples(index=False, name=None)]
+        hashes[name] = hashlib.sha256(repr(
+            (gcols, sorted(got, key=row_key))
+        ).encode()).hexdigest()
         if name not in oracle:
-            results[name] = f"NO-ORACLE rows={len(got_rel.fetchall())}"
+            results[name] = f"NO-ORACLE rows={len(got)}"
             continue
         try:
             exp_rel = con.sql(oracle[name])
         except Exception as e:
             results[name] = f"ORACLE-SQL-ERROR {e}"
             continue
-        gcols = sorted(got_rel.columns)
         ecols = sorted(exp_rel.columns)
         if gcols != ecols:
             results[name] = f"SCHEMA-MISMATCH got={gcols} exp={ecols}"
             continue
-        # go through pandas like the driver does — dtype coercions
-        # (e.g. HUGEINT -> float64) must be visible to the mimic
-        gdf, edf = got_rel.df(), exp_rel.df()
-        got = [tuple(norm(v) for v in row)
-               for row in gdf[gcols].itertuples(index=False, name=None)]
         exp = [tuple(norm(v) for v in row)
-               for row in edf[ecols].itertuples(index=False, name=None)]
+               for row in exp_rel.df()[ecols].itertuples(index=False, name=None)]
         if len(got) != len(exp):
             results[name] = f"ROWCOUNT got={len(got)} exp={len(exp)}"
             continue
-        # driver sorts before hashing; emulate by sorting row tuples
-        key = lambda row: tuple(str(x) for x in row)
-        got_s, exp_s = sorted(got, key=key), sorted(exp, key=key)
+        got_s, exp_s = sorted(got, key=row_key), sorted(exp, key=row_key)
         if got_s == exp_s:
             results[name] = f"OK rows={len(got)}"
             continue
@@ -90,6 +104,8 @@ def main(sf_dir, out_dir):
                 diag = f"VALUE-MISMATCH row{i} got={g} exp={e}"
                 break
         results[name] = diag
+    with open(os.path.join(out_dir, "result_hashes.json"), "w") as f:
+        json.dump(hashes, f, indent=1, sort_keys=True)
     bad = 0
     for name in names:
         r = results[name]

@@ -1,11 +1,31 @@
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Scratch scaling probe (not part of the driver contract): replicate the
   * sf0.1 corpus Nx with shifted ids and time the dedup family, to measure
   * the scaling exponent of LSH-bounded vs blocked-quadratic verification.
+  * The `probe` section is the targeted A/B harness of the optimization
+  * rounds: edit its variants to the pipeline stages under study.
   */
 object ScaleProbe {
+  /** `df` replicated `n` times: replica i shifts `idCol` by
+    * i * (max(idCol) + 1), so replicas never collide at any scale (a
+    * string id column stays a string). `replicaCol`, when given, carries
+    * the replica index i.
+    */
+  def replicate(df: DataFrame, idCol: String, n: Int,
+                replicaCol: Option[String] = None): DataFrame = {
+    val stride = Option(df.agg(max(col(idCol).cast("long"))).head().get(0))
+      .fold(0L)(_.asInstanceOf[Long]) + 1L
+    val asString = df.schema(idCol).dataType == StringType
+    (0 until n).map { i =>
+      val shifted = col(idCol).cast("long") + lit(i * stride)
+      val r = df.withColumn(idCol, if (asString) shifted.cast("string") else shifted)
+      replicaCol.fold(r)(r.withColumn(_, lit(i)))
+    }.reduce(_ union _)
+  }
+
   /** Every section name `main` dispatches on — kept adjacent to the
     * `section(...)` calls below; `main` rejects an arg matching none of
     * these (a typo like `recal` would otherwise run NOTHING and exit
@@ -17,25 +37,18 @@ object ScaleProbe {
       "drift", "cdc", "sparse", "rest", "semantic", "classify", "curation",
       "ordering", "storeivf", "pqlog", "fresh", "wire", "storetext",
       "sharded", "recallc", "recallc2", "storehnsw", "topology",
-      "maintain", "quanthnsw", "snaprestore", "quantmulti")
+      "maintain", "quanthnsw", "snaprestore", "quantmulti", "probe")
 
   def main(args: Array[String]): Unit = {
     args.headOption.foreach { s =>
       require(sectionNames.contains(s),
         s"unknown probe section '$s'; valid sections: ${sectionNames.mkString(", ")}")
     }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.HarnessSession(Some("graft-scale-probe"), defaultCpus = "32")
     spark.sparkContext.setLogLevel("ERROR")
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
-    def corpus(n: Int): DataFrame =
-      (0 until n).map(i => base.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"),
-        col("text"), col("lang"), col("source"))).reduce(_ union _)
+    def corpus(n: Int): DataFrame = replicate(base, "doc_id", n)
     def time(tag: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f
@@ -63,10 +76,7 @@ object ScaleProbe {
         .select(col("vec_id").cast("string").as("id"),
           to_json(struct(col("label"))).as("payload"),
           col("embedding").as("vector"))
-      def embN(n: Int): DataFrame = (0 until n).map(i =>
-        emb.select(
-          (col("id").cast("long") + lit(i * 10000000L)).cast("string").as("id"),
-          col("payload"), col("vector"))).reduce(_ union _)
+      def embN(n: Int): DataFrame = replicate(emb, "id", n)
       val q = emb.filter(col("id") === "7")
         .select(col("vector").cast("array<double>"))
         .head().getSeq[Double](0).toArray
@@ -133,10 +143,7 @@ object ScaleProbe {
         .select(col("vec_id").cast("string").as("id"),
           to_json(struct(col("label"))).as("payload"),
           col("embedding").as("vector"))
-      val c = (0 until 4).map(i =>
-        emb.select(
-          (col("id").cast("long") + lit(i * 10000000L)).cast("string").as("id"),
-          col("payload"), col("vector"))).reduce(_ union _)
+      val c = replicate(emb, "id", 4)
       val total = c.count()
       val q = emb.filter(col("id") === "7")
         .select(col("vector").cast("array<double>"))
@@ -504,9 +511,7 @@ object ScaleProbe {
       val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
         .select(col("vec_id").cast("long").as("vid"),
           col("label"), col("embedding"))
-      def corpusN(n: Int) = (0 until n).map(i =>
-        emb.select((col("vid") + lit(i * 10000000L)).as("vid"),
-          col("label"), col("embedding"))).reduce(_ union _)
+      def corpusN(n: Int) = replicate(emb, "vid", n)
         .select(col("vid").cast("string").as("id"),
           to_json(struct(concat(
             lit("alpha w"), col("label"),
@@ -744,10 +749,9 @@ object ScaleProbe {
     }
     // events-based probe: watermark-dedup bounded form over replicated events
     val ev = spark.read.parquet("/root/testdata/sf0.1/events.parquet")
-    def events(n: Int): DataFrame =
-      (0 until n).map(i => ev.select(col("event_id"),
-        col("ts"), (col("user_id") + lit(i * 10000000L)).as("user_id"),
-        col("event_type"), col("value"), col("props"))).reduce(_ union _)
+    def events(n: Int): DataFrame = replicate(ev.select(col("event_id"),
+      col("ts"), col("user_id"), col("event_type"), col("value"),
+      col("props")), "user_id", n)
     section("stream") { for (n <- Seq(1, 2, 4)) {
       val e = events(n).persist(); e.count()
       time(s"stream_dedup x$n") {
@@ -1153,10 +1157,7 @@ object ScaleProbe {
         .select(col("vec_id").cast("string").as("id"),
           to_json(struct(col("label"))).as("payload"),
           col("embedding").as("vector"))
-      def embN(n: Int): DataFrame = (0 until n).map(i =>
-        emb.select(
-          (col("id").cast("long") + lit(i * 10000000L)).cast("string").as("id"),
-          col("payload"), col("vector"))).reduce(_ union _)
+      def embN(n: Int): DataFrame = replicate(emb, "id", n)
       val q = emb.filter(col("id") === "7")
         .select(col("vector").cast("array<double>"))
         .head().getSeq[Double](0).toArray
@@ -2173,10 +2174,8 @@ object ScaleProbe {
           col("user_id").cast("double").as("lat"),
           (col("event_id") % 180).cast("double").as("lon"))
       for (n <- Seq(1, 2, 4)) {
-        val pts = (0 until n).map(i => evBase.select(
-          (col("event_id") + lit(i * 100000000L)).as("event_id"),
-          (col("lat") + lit(if (i == 0) 0.0 else 1000.0 * i)).as("lat"),
-          col("lon"))).reduce(_ union _)
+        val pts = replicate(evBase, "event_id", n, replicaCol = Some("__r"))
+          .withColumn("lat", col("lat") + col("__r") * 1000.0).drop("__r")
         val dir = java.nio.file.Files.createTempDirectory(s"graft-geo-$n").toString
         Geo.writeCellLayout(pts, "lat", "lon", bits = 4, dir)
         val layout = Geo.readCellLayout(spark, dir)
@@ -2310,9 +2309,7 @@ object ScaleProbe {
       val e = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       for (n <- Seq(1, 2, 4, 8)) {
-        val c = (0 until n).map(i => e.select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"), col("v")))
-          .reduce(_ union _)
+        val c = replicate(e, "vec_id", n)
         for ((tag, nlist) <- Seq("fixed" -> 16, "scaled" -> 16 * n)) {
           val idx = graft.ops.Ann.buildIvf(c, "vec_id", "v", nlist, maxIter = 2)
           time(s"semantic $tag x$n nlist=$nlist") {
@@ -2321,6 +2318,52 @@ object ScaleProbe {
           }
           idx.clustered.unpersist()
         }
+      }
+    }
+    // Targeted A/B rows: the variants below are whatever the last
+    // investigation probed — a 16x-replicated corpus run at
+    // SPARK_GRAFT_CPUS=32 then 8 (a c8/c32 ratio near 1 on 16x data
+    // means the stage is still overhead-bound, not operator-bound).
+    // SPARK_GRAFT_SF_DIR picks the corpus (default: the sweep's),
+    // SPARK_GRAFT_REPL the replica count, SPARK_GRAFT_REPEAT the runs
+    // per variant (median reported).
+    section("probe") {
+      val sfDir = sys.env.get("SPARK_GRAFT_SF_DIR")
+      val n = sys.env.getOrElse("SPARK_GRAFT_REPL", "16").toInt
+      val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "5").toInt
+      val d0 = sfDir.fold(base)(graft.Tables.load(spark, _, "documents")
+        .select(col("doc_id"), col("text"), col("lang"), col("source")))
+      val e0 = sfDir.fold(ev)(graft.Tables.load(spark, _, "events"))
+      val docsN = replicate(d0, "doc_id", n).localCheckpoint()
+      val eventsN = replicate(e0.select(col("event_id"), col("props")),
+        "event_id", n).localCheckpoint()
+      val variants: Seq[(String, () => DataFrame)] = Seq(
+        "dup_ngram_top" -> (() => graft.ops.TextAnalysis
+          .topDuplicatedNgrams(docsN, "text", n = 5, k = 20)),
+        "span_stats" -> (() => graft.ops.Dedup
+          .spanStats(docsN, "doc_id", "text")),
+        "tfidf_topk" -> (() => graft.ops.TextAnalysis
+          .tfidfTopTerms(docsN, "doc_id", "text", perDoc = 3)),
+        "unigram_logprob" -> (() => graft.ops.TextAnalysis
+          .unigramLogProb(docsN, "doc_id", "text")),
+        "cc_minhash" -> (() => graft.ops.Dedup
+          .dedupClustersMinhash(docsN, "doc_id", "text", threshold = 0.8)),
+        "json_surface" -> (() => eventsN
+          .select(col("event_id"),
+            from_json(col("props"), org.apache.spark.sql.types.MapType(
+              StringType, StringType)).as("__m"))
+          .select(col("event_id"),
+            array_join(map_keys(col("__m")), ",").as("ks"),
+            size(map_keys(col("__m"))).as("n_keys")))
+      )
+      variants.foreach { case (name, fn) =>
+        val times = (1 to repeat).map { _ =>
+          val t0 = System.nanoTime()
+          fn().write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }.sorted
+        val med = times(times.length / 2)
+        println(f"[probe] $name%-14s med=$med%.3f all=${times.map(t => f"$t%.3f").mkString(",")}")
       }
     }
     spark.stop()

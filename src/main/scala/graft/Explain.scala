@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-capture tooling for the optimization rounds: writes
@@ -9,8 +8,8 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: runMain graft.Explain <outDir> <suffix> [q1,q2,...]
   * Writes <outDir>/<query>_<suffix>.txt per query (all queries if no list).
-  * Session config mirrors Bench (same AQE/shuffle-partitions/extensions),
-  * so the captured initial plans match what the bench executes.
+  * The session is Bench's ([[HarnessSession]]), so the captured initial
+  * plans match what the bench executes.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -19,18 +18,7 @@ object Explain {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession(Some("graft-explain"), defaultCpus = "32")
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

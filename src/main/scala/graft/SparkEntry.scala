@@ -1,22 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.collections.Collections
-import graft.functions._
-import graft.multimodal.Multimodal
-import graft.ops.{Ann, Dedup, Search, TextAnalysis}
-import graft.streaming.EventsStream
+import graft.gates._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The correctness and bench contract — see SURVEY.md §7.
   *
-  * Every entry in `queries` is one operator from SURVEY.md §2 re-expressed
-  * Spark-first; `oracleSql` holds the DuckDB-equivalent SQL the driver runs
-  * on the same parquet for the hash-match correctness gate. Keys without an
-  * oracle entry (hash-based / ML / sampling operators DuckDB cannot
-  * reproduce) get the driver's rows-only check and are covered by ScalaTest
-  * specs instead.
+  * Every [[graft.gates.Gate]] is one operator from SURVEY.md §2
+  * re-expressed Spark-first, declared once in its family file under
+  * `graft/gates/` together with the DuckDB SQL the correctness gate runs on the
+  * same parquet for the hash-match correctness gate. Every gate carries
+  * an oracle; `queries` and `oracleSql` are views of the one `gates` list.
   *
   * Determinism rules used throughout (SURVEY.md §7.3):
   *  - the kernels widen float->double per ELEMENT, which is bit-identical
@@ -33,2420 +28,21 @@ import graft.streaming.EventsStream
   */
 object SparkEntry {
 
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ops.Ann.IvfIndex]
+  val gates: Seq[Gate] =
+    ScanAndJson.gates ++ DenseSearch.gates ++ CompositeSearch.gates ++
+      Relational.gates ++ PipelineOps.gates ++ AnalyticsOps.gates
 
-  private val quantCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  require(gates.map(_.name).distinct.size == gates.size,
+    "duplicate gate names: " +
+      gates.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }.mkString(", "))
 
-  /** Cluster-partitioned IVF store: the `#probe` index's clustered corpus
-    * written `partitionBy("cluster")` to parquet ONCE per dir (the
-    * production index layout; an offline batch job like the build itself),
-    * plus its centroid table AND the int8-quantized variant of the same
-    * layout — (id, codes, scale) partitioned by cluster, so a pruned query
-    * reads nprobe/nlist of the files at ~4x less bytes per file. Serving
-    * gates read these back (Ann.searchIvfStored /
-    * Ann.searchIvfStoredQuantized).
-    */
-  private val ivfStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame, DataFrame)]
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.build).toMap
 
-  private def ivfStored(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
-    ivfStoreCache.getOrElseUpdate(dir, {
-      val idx = ivfCache.getOrElseUpdate(s"$dir#probe",
-        graft.ops.Ann.buildIvf(homD(s, dir), "id", "vector", nlist = 8, maxIter = 0))
-      val path = java.nio.file.Files.createTempDirectory("graft-ivf-store").toString
-      idx.clustered.write.mode("overwrite").partitionBy("cluster").parquet(path)
-      val qpath = java.nio.file.Files.createTempDirectory("graft-ivf-codes").toString
-      graft.ops.Quant.quantizeColumn(idx.clustered, "vector", "v8")
-        .select("id", "v8_codes", "v8_scale", "cluster")
-        .write.mode("overwrite").partitionBy("cluster").parquet(qpath)
-      (idx.centroids, s.read.parquet(path), s.read.parquet(qpath))
-    })
+  def oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracle).toMap
 
-  /** Payload (keyword) index over the homogeneous collection's `label`
-    * field: value-partitioned postings + model-sized per-value counts —
-    * the artifact [[graft.ops.Planner]]'s cardinality-based filtered
-    * search plans against. COVERING (carries the vector), so a selective
-    * filter serves from its own value partitions without touching the
-    * corpus. Built once per dir (an ingest-time batch job, like the IVF
-    * store).
-    */
-  private val payloadIdxCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ops.Planner.PayloadIndex]
-
-  private def payloadIndex(s: SparkSession, dir: String): graft.ops.Planner.PayloadIndex =
-    payloadIdxCache.getOrElseUpdate(dir,
-      graft.ops.Planner.buildPayloadIndex(homD(s, dir), "id",
-        graft.functions.json_get_int(col("payload"), "label"),
-        covering = Seq("vector")))
-
-  /** A SECOND payload index over a different key (id mod 7) — the
-    * multi-index fixture: qdrant keeps one index per indexed payload
-    * field and intersects their candidate sets (ann_filtered_multi).
-    */
-  private def payloadIndexMod7(s: SparkSession, dir: String): graft.ops.Planner.PayloadIndex =
-    payloadIdxCache.getOrElseUpdate(s"$dir#mod7",
-      graft.ops.Planner.buildPayloadIndex(homD(s, dir), "id",
-        pmod(col("id").cast(LongType), lit(7L)),
-        covering = Seq("vector")))
-
-  /** Fitted corpus bigram LM (heads/bigram counts as parquet-backed
-    * model frames, vocab scalar): TRAINED ONCE per dir like the NB/IVF
-    * artifacts — the serving gates (`bigram_logprob`,
-    * `perplexity_filter`) measure the SCORING pass, not the fit.
-    * `lm_holdout` deliberately keeps its own split fit (its measured
-    * point is train+eval).
-    */
-  private val bigramLmCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ops.TextAnalysis.BigramLm]
-
-  private def bigramLm(s: SparkSession, dir: String): graft.ops.TextAnalysis.BigramLm =
-    bigramLmCache.getOrElseUpdate(dir, {
-      val lm = TextAnalysis.fitBigramLm(docs(s, dir), "text", alpha = 0.5)
-      val hp = java.nio.file.Files.createTempDirectory("graft-lm-heads").toString
-      val bp = java.nio.file.Files.createTempDirectory("graft-lm-bigrams").toString
-      lm.heads.write.mode("overwrite").parquet(hp)
-      lm.bigrams.write.mode("overwrite").parquet(bp)
-      lm.copy(heads = s.read.parquet(hp), bigrams = s.read.parquet(bp))
-    })
-
-  /** DATETIME payload index over events: the backend's
-    * `field_schema: "datetime"` stores timestamps as integers and serves
-    * range conditions from the index — here the same integer postings
-    * keyed on epoch-day (`datediff(ts, 1970-01-01)`), partition-pruned
-    * by BETWEEN exactly like the label index. Built once per dir.
-    */
-  private val eventsDayIdxCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ops.Planner.PayloadIndex]
-
-  private def eventsDayIndex(s: SparkSession, dir: String): graft.ops.Planner.PayloadIndex =
-    eventsDayIdxCache.getOrElseUpdate(dir,
-      graft.ops.Planner.buildPayloadIndex(
-        Tables.load(s, dir, "events"), "event_id",
-        datediff(col("ts").cast(DateType), lit("1970-01-01").cast(DateType))))
-
-  /** KEYWORD payload index over the derived string field
-    * `'L' || label` — the string-valued sibling of [[payloadIndex]]
-    * (the backend's `field_schema: "keyword"`), covering the vector
-    * column; built once per dir like every stored artifact.
-    */
-  private val keywordIdxCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ops.Planner.KeywordIndex]
-
-  private def keywordIndex(s: SparkSession, dir: String): graft.ops.Planner.KeywordIndex =
-    keywordIdxCache.getOrElseUpdate(dir,
-      graft.ops.Planner.buildKeywordIndex(homD(s, dir), "id",
-        concat(lit("L"), graft.functions.json_get_str(col("payload"), "label")),
-        covering = Seq("vector")))
-
-  /** The payload index's incremental-maintenance cycle CLOSED
-    * (append -> compact): half the corpus written as the base index, the
-    * other half appended as a delta batch (small files land in the
-    * touched value partitions), then [[graft.ops.Planner.compactPayloadIndex]]
-    * rewrites every multi-file partition back to ONE file. Built once
-    * per dir like the other stored artifacts; the helper asserts the
-    * post-compaction file bound so the gate fails loudly if compaction
-    * ever regresses, and the gate's search result proves contents
-    * survive the rewrite bit-for-bit.
-    */
-  private def compactedPayloadIndex(s: SparkSession, dir: String): graft.ops.Planner.PayloadIndex =
-    payloadIdxCache.getOrElseUpdate(s"$dir#compact", {
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("graft-pidx-compact").toFile
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(idxDir)
-      }))
-      val corpus = homD(s, dir)
-      val valueOf = graft.functions.json_get_int(col("payload"), "label")
-      val cut = corpus.count() / 2
-      graft.ops.Planner.writePayloadIndex(
-        corpus.filter(col("id").cast(LongType) < cut), "id", valueOf,
-        Seq("vector"), idxDir.toString)
-      graft.ops.Planner.writePayloadIndex(
-        corpus.filter(col("id").cast(LongType) >= cut), "id", valueOf,
-        Seq("vector"), idxDir.toString, mode = "append")
-      graft.ops.Planner.compactPayloadIndex(s, idxDir.toString)
-      Option(idxDir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("value="))
-        .foreach { p =>
-          val n = Option(p.listFiles()).getOrElse(Array.empty)
-            .count(f => f.isFile && f.getName.endsWith(".parquet"))
-          require(n == 1, s"compaction left $n files in ${p.getName}")
-        }
-      graft.ops.Planner.readPayloadIndex(s, idxDir.toString, Seq("vector"))
-    })
-
-  /** The cold parquet-backed [[graft.sources.ParquetCollectionStore]] of
-    * `dir`'s homogeneous collection — sealed once per dir (ranged by id
-    * into 4 files, the ingest-time batch job), registered for deletion
-    * on exit like the other temp fixtures.
-    */
-  private val parquetStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetBackedStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetStoreCache.getOrElseUpdate(dir, {
-      val pqDir = java.nio.file.Files
-        .createTempDirectory("graft-pq-collection").toFile
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(pqDir)
-      }))
-      graft.sources.ParquetCollectionStore.write(
-        hom(s, dir).select("id", "payload", "vector"), pqDir.toString)
-      new graft.sources.ParquetCollectionStore(pqDir.toString, "embeddings",
-        Collections.homogeneousDescriptor)
-    })
-
-  private val parquetIvfStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-  private val parquetIvfDirCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The parquet-backed store WITH its IVF sidecar: same primary layout
-    * as [[parquetBackedStore]], plus the cluster-partitioned replica +
-    * centroid store [[graft.sources.ParquetCollectionStore.writeIvfSidecar]]
-    * lays down — opened at nprobe=2, so pushed top-k serves probe-pruned
-    * without touching the primary files. Reuses the deterministic
-    * maxIter=0 IVF fit (the `#probe` cache key ann_ivf_probe/_bucketed
-    * share), so the DuckDB chain mirrors every stage.
-    */
-  private def parquetIvfStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetIvfStoreCache.getOrElseUpdate(dir, {
-      val idx = ivfCache.getOrElseUpdate(s"$dir#probe",
-        graft.ops.Ann.buildIvf(homD(s, dir), "id", "vector", nlist = 8, maxIter = 0))
-      val pqDir = java.nio.file.Files
-        .createTempDirectory("graft-pq-ivf-collection").toFile
-      parquetIvfDirCache.put(dir, pqDir.toString): Unit
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(pqDir)
-      }))
-      graft.sources.ParquetCollectionStore.write(
-        hom(s, dir).select("id", "payload", "vector"), pqDir.toString)
-      graft.sources.ParquetCollectionStore.writeIvfSidecar(
-        idx.clustered.select("id", "payload", "vector", "cluster"),
-        idx.centroids, pqDir.toString, field = "vector")
-      // the payload index on `label` (covering — carries the vector), so
-      // a selective filtered search serves from its value partitions
-      graft.sources.ParquetCollectionStore.writePayloadSidecar(
-        hom(s, dir).select("id", "payload", "vector"), pqDir.toString,
-        key = "label", kind = "int")
-      // the int8 candidate tier beside the cluster replica (inert for
-      // stores opened without a candidate margin)
-      graft.sources.ParquetCollectionStore.writeIvfQuantizedSidecar(
-        idx.clustered.select("id", "vector", "cluster"), pqDir.toString)
-      new graft.sources.ParquetCollectionStore(pqDir.toString, "embeddings",
-        Collections.homogeneousDescriptor, ivfNprobe = 2)
-    })
-
-  /** The same IVF-sidecar'd directory opened WITH the quantized
-    * candidate margin: pushed dot top-k serves int8-candidates +
-    * exact-rerank, both stages cluster-pruned.
-    */
-  private def parquetIvfQuantizedStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore = {
-    parquetIvfStore(s, dir) // ensure the directory + sidecars exist
-    val pqDir = parquetIvfDirCache(dir)
-    new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-      Collections.homogeneousDescriptor, ivfNprobe = 2, ivfCandidateK = 100)
-  }
-
-  /** IVF + codes sidecars WITHOUT a payload index, opened with a FULL
-    * candidate margin: a filtered pushed top-k lands on the quantized
-    * arm (no payload sidecar to pre-filter from), candidates cut
-    * pre-filter at candidateK = everything in the probed clusters, and
-    * the rerank fetch evaluates the conditions — WHERE-before-ORDER
-    * exact, the composition gate's fixture.
-    */
-  private def parquetIvfQuantizedFilteredStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetIvfStoreCache.getOrElseUpdate(s"$dir#qf", {
-      val idx = ivfCache.getOrElseUpdate(s"$dir#probe",
-        graft.ops.Ann.buildIvf(homD(s, dir), "id", "vector", nlist = 8, maxIter = 0))
-      val pqDir = tempStoreDir("graft-pq-ivfqf")
-      graft.sources.ParquetCollectionStore.write(
-        hom(s, dir).select("id", "payload", "vector"), pqDir)
-      graft.sources.ParquetCollectionStore.writeIvfSidecar(
-        idx.clustered.select("id", "payload", "vector", "cluster"),
-        idx.centroids, pqDir, field = "vector")
-      graft.sources.ParquetCollectionStore.writeIvfQuantizedSidecar(
-        idx.clustered.select("id", "vector", "cluster"), pqDir)
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        Collections.homogeneousDescriptor, ivfNprobe = 2,
-        ivfCandidateK = 1000000)
-    })
-
-  /** The DOCUMENTS corpus as a vector-less lakehouse collection (id =
-    * zero-padded doc_id so string order is numeric order; payload
-    * carries the text under `body`), sealed with the tf/dl text sidecar
-    * — the RANKED full-text serving fixture: BM25 top-k reads only the
-    * query terms' token buckets.
-    */
-  private val parquetTextRankCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetTextRankStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetTextRankCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-textrank")
-      val df = docs(s, dir).select(
-        lpad(col("doc_id").cast(StringType), 10, "0").as("id"),
-        to_json(struct(col("text").as("body"))).as("payload"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writeTextSidecar(
-        df, pqDir, key = "body", nBuckets = 16)
-      new graft.sources.ParquetCollectionStore(pqDir, "documents",
-        graft.collections.CollectionDescriptor("documents", Seq.empty))
-    })
-
-  /** The documents corpus rendezvous-SHARDED over 3 parquet members,
-    * EACH with its own tf/dl text sidecar over its slice — the
-    * distributed-BM25 fixture: partials merge (stats/dfs sum, candidate
-    * rows union), the global rank is exact.
-    */
-  private def shardedTextRankStore(s: SparkSession, dir: String): graft.sources.ShardedCollectionStore =
-    shardedTextRankCache.getOrElseUpdate(dir, {
-      val df = docs(s, dir).select(
-        lpad(col("doc_id").cast(StringType), 10, "0").as("id"),
-        to_json(struct(col("text").as("body"))).as("payload"))
-      val members = (0 until 3).map { i =>
-        val own = df.filter(shardOf3(col("id")) === i)
-        val d = tempStoreDir(s"graft-pq-shtr$i")
-        graft.sources.ParquetCollectionStore.write(own, d)
-        graft.sources.ParquetCollectionStore.writeTextSidecar(
-          own, d, key = "body", nBuckets = 16)
-        new graft.sources.ParquetCollectionStore(d, "documents",
-          graft.collections.CollectionDescriptor("documents", Seq.empty))
-      }
-      new graft.sources.ShardedCollectionStore(members)
-    })
-
-  private val shardedTextRankCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ShardedCollectionStore]
-
-  /** The parquet store with TWO payload indexes — qdrant's
-    * one-index-per-indexed-field model: an int index on `label` and a
-    * keyword index on `parity` (vec_id % 2, independent of label), both
-    * covering. A filter touching both keys is planned ACROSS them by
-    * footer-estimated cardinality; the losing key's conditions apply
-    * residually inside the winning arm's partitions.
-    */
-  private val parquetMultiIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetMultiIndexStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetMultiIndexCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-multiidx")
-      val df = Tables.load(s, dir, "embeddings").select(
-        col("vec_id").cast(StringType).as("id"),
-        to_json(struct(col("label"),
-          when(col("vec_id") % 2 === 1, lit("odd")).otherwise(lit("even"))
-            .as("parity"))).as("payload"),
-        col("embedding").as("vector"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writePayloadSidecar(
-        df, pqDir, key = "label", kind = "int")
-      graft.sources.ParquetCollectionStore.writePayloadSidecar(
-        df, pqDir, key = "parity", kind = "keyword")
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        Collections.homogeneousDescriptor)
-    })
-
-  /** The parquet store MUTATED AFTER its payload index was built — the
-    * freshness fixture: the label index seals at ingest head, then a
-    * batch of new points (ids 100000+vec_id for vec_id < 5, label
-    * forced 3) is upserted and the label-3 points with vec_id % 7 == 0
-    * are deleted, with NO index rebuild. Sidecar-served reads must
-    * overlay the log tail to stay exact.
-    */
-  private val parquetFreshStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  /** The parquet store with a DATETIME payload index: payload carries a
-    * derived date string (`2024-01-01 + label*13 days`, 10 distinct
-    * values), the sidecar is count-only (id + payload), and datetime
-    * range bounds prune its value partitions by PARSED instant — the
-    * backend's `datetime` payload index kind served at the store seam.
-    */
-  private val parquetDtStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetDtStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetDtStoreCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-dt")
-      val df = Tables.load(s, dir, "embeddings").select(
-        col("vec_id").cast(StringType).as("id"),
-        to_json(struct(date_format(
-          date_add(lit(java.sql.Date.valueOf("2024-01-01")),
-            (col("label") * 13).cast("int")),
-          "yyyy-MM-dd").as("ts"))).as("payload"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writePayloadSidecar(
-        df, pqDir, key = "ts", kind = "datetime")
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        graft.collections.CollectionDescriptor("embeddings", Seq()))
-    })
-
-  /** The parquet store with a GEO payload index: payload carries a
-    * derived `{loc: {lat, lon}}` object (lattice from vec_id), the
-    * sidecar partitions by Morton cell (bits=6, covering), and a geo
-    * condition prunes the read to the query region's cover cells —
-    * qdrant's `geo` payload index kind at the store seam.
-    */
-  private val parquetGeoStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetGeoStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetGeoStoreCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-geo")
-      val la = (col("vec_id") % 120).cast("double") - 60.0 + 0.25
-      val lo = ((col("vec_id") * 7) % 320).cast("double") - 160.0 + 0.25
-      val df = Tables.load(s, dir, "embeddings").select(
-        col("vec_id").cast(StringType).as("id"),
-        to_json(struct(struct(la.as("lat"), lo.as("lon")).as("loc")))
-          .as("payload"),
-        col("embedding").as("vector"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      // bits sizes cells to the data density: at bits=6 this lattice
-      // spreads ~8 rows/cell and a box query opens ~88 tiny files
-      // (measured 0.8 s/query); bits=4 packs ~6 cover cells per query —
-      // the standard partition-sizing trade, chosen by measurement
-      graft.sources.ParquetCollectionStore.writeGeoSidecar(
-        df, pqDir, key = "loc", bits = 4)
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        Collections.homogeneousDescriptor)
-    })
-
-  /** The parquet store with a FLOAT payload index: payload carries a
-    * derived double (`label + vec_id % 10 / 16.0` — /16 is exact in
-    * binary, so both engines hold identical doubles), and range bounds
-    * prune the type-tagged value partitions — the float leg of qdrant's
-    * numeric index kinds.
-    */
-  private val parquetFloatStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetFloatStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetFloatStoreCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-float")
-      val score = col("label").cast("double") +
-        (col("vec_id") % 10).cast("double") / 16.0
-      val df = Tables.load(s, dir, "embeddings").select(
-        col("vec_id").cast(StringType).as("id"),
-        to_json(struct(score.as("score"))).as("payload"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writePayloadSidecar(
-        df, pqDir, key = "score", kind = "float")
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        graft.collections.CollectionDescriptor("embeddings", Seq()))
-    })
-
-  /** The parquet store with a FULL-TEXT payload index: payload carries a
-    * derived body (`"alpha w<label> tag<vec_id%4>"`), the `_tidx`
-    * sidecar holds (id, token) postings bucketed by token hash, and a
-    * match_text condition's candidates come from the token-posting
-    * intersection with an id-stats-pruned primary fetch — qdrant's
-    * `text` payload index kind at the store seam.
-    */
-  private val parquetTextStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetTextStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetTextStoreCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-text")
-      val body = concat(lit("alpha w"), col("label"),
-        lit(" tag"), col("vec_id") % 4)
-      val df = Tables.load(s, dir, "embeddings").select(
-        col("vec_id").cast(StringType).as("id"),
-        to_json(struct(body.as("body"))).as("payload"),
-        col("embedding").as("vector"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writeTextSidecar(
-        df, pqDir, key = "body")
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        Collections.homogeneousDescriptor)
-    })
-
-  /** The INCREMENTAL-TEXT fixture (the FIFTH maintained family): the
-    * text-indexed corpus with a changelog, then churn — inserts
-    * tokenize with the writer's own pipeline and land in their buckets,
-    * the update's old tokens consolidate out, the delete tombstones,
-    * and the LIVE BM25 stats adjust throughout; the fixture REQUIRES
-    * the watermark reached the log head, so the gate's match_text
-    * candidates resolve from the maintained postings with an EMPTY
-    * overlay tail.
-    */
-  private val parquetTextFreshCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetTextFreshStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetTextFreshCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-textfresh")
-      val body = concat(lit("alpha w"), col("label"),
-        lit(" tag"), col("vec_id") % 4)
-      val df = Tables.load(s, dir, "embeddings").select(
-        col("vec_id").cast(StringType).as("id"),
-        to_json(struct(body.as("body"))).as("payload"),
-        col("embedding").as("vector"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      graft.sources.ParquetCollectionStore.writeTextSidecar(
-        df, pqDir, key = "body")
-      val sealedStore = new graft.sources.ParquetCollectionStore(pqDir,
-        "embeddings", Collections.homogeneousDescriptor)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"body":"alpha w3 tagx"}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      val m1 = sealedStore.appended("embeddings", adds.toIndexedSeq)
-      require(sealedStore.tidxIncInserts.get() == adds.length.toLong,
-        "the fresh batch must be absorbed into the token buckets")
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      val m2 = m1.appended("embeddings", IndexedSeq(
-        graft.sources.Point("7", Some("""{"body":"alpha w3 tag7"}"""),
-          dense = Map("vector" -> newVec))))
-      val m3 = m2.removed("embeddings", Set("13"))
-      val watermark = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$pqDir/_tidx/inserted.txt")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      require(watermark == m3.logSize("embeddings"),
-        "every mutation must be absorbed — the postings serve with an " +
-          "empty overlay tail")
-      m3
-    })
-
-  /** The INCREMENTAL-GEO fixture (the SIXTH maintained family): the
-    * cell-partitioned corpus with a changelog, then churn — inserts
-    * land in their Morton cell via the writer's own cell expression,
-    * the update's old cell consolidates, the delete tombstones as a
-    * (cell, id) flag — so the gate's box query serves cell-pruned over
-    * the FINAL state with an EMPTY overlay tail (fixture-required).
-    */
-  private val parquetGeoFreshCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetGeoFreshStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetGeoFreshCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-geofresh")
-      val la = (col("vec_id") % 120).cast("double") - 60.0 + 0.25
-      val lo = ((col("vec_id") * 7) % 320).cast("double") - 160.0 + 0.25
-      val df = Tables.load(s, dir, "embeddings").select(
-        col("vec_id").cast(StringType).as("id"),
-        to_json(struct(struct(la.as("lat"), lo.as("lon")).as("loc")))
-          .as("payload"),
-        col("embedding").as("vector"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      graft.sources.ParquetCollectionStore.writeGeoSidecar(
-        df, pqDir, key = "loc", bits = 4)
-      val sealedStore = new graft.sources.ParquetCollectionStore(pqDir,
-        "embeddings", Collections.homogeneousDescriptor)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"loc":{"lat":5.25,"lon":-15.25}}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      val m1 = sealedStore.appended("embeddings", adds.toIndexedSeq)
-      require(sealedStore.gidxIncInserts.get() == adds.length.toLong,
-        "the fresh batch must be absorbed into the cell partitions")
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      val m2 = m1.appended("embeddings", IndexedSeq(
-        graft.sources.Point("7",
-          Some("""{"loc":{"lat":0.25,"lon":-10.25}}"""),
-          dense = Map("vector" -> newVec))))
-      // 64 sits INSIDE the gate's box (la 4.25, lo -31.75): the delete
-      // must leave the box's serve, not just the corpus
-      val m3 = m2.removed("embeddings", Set("64"))
-      val watermark = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$pqDir/_gidx/inserted.txt")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      require(watermark == m3.logSize("embeddings"),
-        "every mutation must be absorbed — the cells serve with an " +
-          "empty overlay tail")
-      m3
-    })
-
-  /** Build one mutated-after-index dir (the shared recipe of the
-    * freshness and optimizer fixtures) and return the final store.
-    */
-  private def buildMutatedStore(s: SparkSession, dir: String,
-                                prefix: String): graft.sources.ParquetCollectionStore = {
-    val pqDir = tempStoreDir(prefix)
-    val df = hom(s, dir).select("id", "payload", "vector")
-    graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-    graft.sources.ParquetCollectionStore.writePayloadSidecar(
-      df, pqDir, key = "label", kind = "int")
-    val sealedStore = new graft.sources.ParquetCollectionStore(
-      pqDir, "embeddings", Collections.homogeneousDescriptor)
-    val adds = Tables.load(s, dir, "embeddings")
-      .filter(col("vec_id") < 5)
-      .select((col("vec_id") + 100000).cast(StringType).as("id"),
-        col("embedding").cast(ArrayType(FloatType)).as("v"))
-      .collect()
-      .map(r => graft.sources.Point(r.getString(0),
-        Some("""{"label":3}"""),
-        dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-    val delIds = Tables.load(s, dir, "embeddings")
-      .filter(col("label") === 3 && col("vec_id") % 7 === 0)
-      .select(col("vec_id").cast(StringType))
-      .collect().map(_.getString(0)).toSet
-    sealedStore.appended("embeddings", adds.toIndexedSeq)
-      .removed("embeddings", delIds)
-  }
-
-  private def parquetFreshStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetFreshStoreCache.getOrElseUpdate(dir,
-      buildMutatedStore(s, dir, "graft-pq-fresh"))
-
-  /** The same mutated dir taken through the OPTIMIZER
-    * ([[graft.sources.ParquetCollectionStore.optimize]]): the tail is
-    * re-absorbed into a rebuilt label index sealed at the current head,
-    * and the reopened store serves index-pruned again with an empty
-    * overlay — the full qdrant lifecycle (index, mutate, optimize).
-    */
-  private val parquetOptimizedCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetOptimizedStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetOptimizedCache.getOrElseUpdate(dir, {
-      val mutated = buildMutatedStore(s, dir, "graft-pq-opt")
-      val pqDir = mutated.dir
-      graft.sources.ParquetCollectionStore.optimize(s, pqDir)
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        Collections.homogeneousDescriptor)
-    })
-
-  /** The store-served insertion-order HNSW fixture: the homogeneous
-    * corpus (minus the gate's query point) sealed to parquet with the
-    * per-segment HNSW sidecar — pushed cosine top-k serves graph-walked
-    * from the resident segment graphs, primaries closed.
-    */
-  private val parquetHnswCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetHnswStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetHnswCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-hnsw")
-      val df = hom(s, dir).select("id", "payload", "vector")
-        .filter(col("id") =!= "11")
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writeHnswSidecar(
-        df, pqDir, field = "vector", m = 8, efConstruction = 64,
-        numSegments = 4)
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        Collections.homogeneousDescriptor, hnswEf = 128)
-    })
-
-  /** The QUANTIZED-HNSW fixture: the graph sidecar PLUS its int8 codes
-    * tier, opened with a rescore margin — the walk touches only the
-    * codes cache (8x fewer resident bytes), the exact rescore of the
-    * candidate margin recovers the full-precision page, so the same
-    * brute oracle pins it (the ivf_quantized argument on the graph
-    * family). `hnswEf` past the segment size + candidateK=100 margin
-    * over k=10 make the page exact at both SFs.
-    */
-  private val parquetHnswQuantCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetHnswQuantStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetHnswQuantCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-hnswq")
-      val df = hom(s, dir).select("id", "payload", "vector")
-        .filter(col("id") =!= "17")
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writeHnswSidecar(
-        df, pqDir, field = "vector", m = 8, efConstruction = 64,
-        numSegments = 4)
-      graft.sources.ParquetCollectionStore.writeHnswQuantizedSidecar(
-        df, pqDir)
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        Collections.homogeneousDescriptor, hnswEf = 4096,
-        hnswCandidateK = 100)
-    })
-
-  /** The INDEXED MULTI-VECTOR fixture: the hetero rows carrying the
-    * ragged multi field (vec_id % 3 = 0; the query id 0 excluded),
-    * sealed as a parquet store with the POOLED-key graph sidecar AND
-    * its int8 codes tier — candidates walk the pooled per-segment
-    * graphs over the QUANTIZED keys (1 byte/dim resident, the dense
-    * tier's memory win on the corpora that are fattest per point), the
-    * exact MaxSim kernel rescores only the margin from the segment
-    * partitions. `hnswEf` past the segment size + candidateK=128 over
-    * k=10 make the page exact at both SFs vs the brute MaxSim oracle.
-    */
-  private val parquetMultiVecIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetMultiVecIndexStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetMultiVecIndexCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-multivec")
-      val df = Collections.heterogeneous(s, dir)
-        .filter(col("multi_embeddings").isNotNull && col("id") =!= "0")
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writeMultiHnswSidecar(
-        df, pqDir, field = "multi_embeddings",
-        multiColumn = "multi_embeddings", m = 8, efConstruction = 64,
-        numSegments = 4)
-      graft.sources.ParquetCollectionStore.writeMultiHnswQuantizedSidecar(
-        df, pqDir, multiColumn = "multi_embeddings")
-      new graft.sources.ParquetCollectionStore(pqDir, "hetero",
-        Collections.heterogeneousDescriptor, hnswEf = 4096,
-        hnswCandidateK = 128)
-    })
-
-  /** The FILTERED indexed multi-vector fixture: the same pooled-graph +
-    * codes-tier store PLUS a label payload index, opened with a small
-    * walk width and an exhaustive rescore margin (candidateK past any
-    * segment — every matched node becomes a candidate, so BOTH planner
-    * arms are exact). At gate scale the matched set sits under the
-    * micro-path dial (its 1024 floor) at both SFs, so the gate rides
-    * the exact arm; MultiIndexedSpec counter-asserts the accepting-WALK
-    * arm (and its quantized variant) at past-the-dial corpus size.
-    */
-  private val parquetMultiVecFilteredCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetMultiVecFilteredStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetMultiVecFilteredCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-multivecf")
-      val df = Collections.heterogeneous(s, dir)
-        .filter(col("multi_embeddings").isNotNull && col("id") =!= "0")
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writeMultiHnswSidecar(
-        df, pqDir, field = "multi_embeddings",
-        multiColumn = "multi_embeddings", m = 8, efConstruction = 64,
-        numSegments = 4)
-      graft.sources.ParquetCollectionStore.writeMultiHnswQuantizedSidecar(
-        df, pqDir, multiColumn = "multi_embeddings")
-      graft.sources.ParquetCollectionStore.writePayloadSidecar(
-        df.select("id", "payload"), pqDir, key = "label", kind = "int")
-      new graft.sources.ParquetCollectionStore(pqDir, "hetero",
-        Collections.heterogeneousDescriptor, hnswEf = 16,
-        hnswCandidateK = 4096)
-    })
-
-  /** The FILTERED-HNSW fixture: the same graph sidecar plus a
-    * COUNT-ONLY label index (id+payload only, so the pre-filter arm
-    * cannot serve it — `covered` is empty) — filtered searches must go
-    * through the graph serve's own planner (exact micro-path or
-    * accepting walk). `hnswEf` is sized past the largest segment so the
-    * walk is exhaustive over its reachable component and the exact
-    * oracle holds at both SFs; ScaleProbe grades recall at honest dials.
-    */
-  private val parquetHnswFilteredCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetHnswFilteredStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetHnswFilteredCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-hnswf")
-      val df = hom(s, dir).select("id", "payload", "vector")
-        .filter(col("id") =!= "11")
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writeHnswSidecar(
-        df, pqDir, field = "vector", m = 8, efConstruction = 64,
-        numSegments = 4)
-      graft.sources.ParquetCollectionStore.writePayloadSidecar(
-        df.select("id", "payload"), pqDir, key = "label", kind = "int")
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        Collections.homogeneousDescriptor, hnswEf = 2048)
-    })
-
-  /** The INCREMENTAL-INSERT HNSW fixture: seal the corpus with the
-    * graph sidecar and a changelog, then upsert NEW points — the store
-    * absorbs the batch into the per-segment graphs via the sequential
-    * insert path (counter-proved: every point graph-inserted, so the
-    * freshness overlay is EMPTY and post-upsert serves walk the graphs,
-    * never brute-rescore a tail) — the backend's online HNSW insert
-    * between optimizes.
-    */
-  private val parquetHnswFreshCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetHnswFreshStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetHnswFreshCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-hnswfresh")
-      val df = hom(s, dir).select("id", "payload", "vector")
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      graft.sources.ParquetCollectionStore.writeHnswSidecar(
-        df, pqDir, field = "vector", m = 8, efConstruction = 64,
-        numSegments = 4)
-      val sealedStore = new graft.sources.ParquetCollectionStore(pqDir,
-        "embeddings", Collections.homogeneousDescriptor, hnswEf = 2048)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"label":3}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      val m1 = sealedStore.appended("embeddings", adds.toIndexedSeq)
-      require(sealedStore.hnswIncInserts.get() == adds.length.toLong,
-        "the fresh batch must be absorbed into the graphs, not parked " +
-          "on the overlay tail")
-      // CHURN absorbs too: an UPDATE (id 7 takes vec_id 42's vector —
-      // the old node consolidates out, the new vector re-inserts) and a
-      // DELETE (id 13 leaves the graph itself)
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      val m2 = m1.appended("embeddings", IndexedSeq(
-        graft.sources.Point("7", Some("""{"label":3}"""),
-          dense = Map("vector" -> newVec))))
-      require(m1.hnswIncInserts.get() == 1L,
-        "the update must re-insert into the graph")
-      val m3 = m2.removed("embeddings", Set("13"))
-      val watermark = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$pqDir/_hnsw/inserted.txt")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      require(watermark == m3.logSize("embeddings"),
-        "every mutation must be absorbed — the graphs serve with an " +
-          "empty overlay tail")
-      m3
-    })
-
-  /** The INCREMENTAL-IVF fixture: seal the corpus with the IVF sidecar
-    * and a changelog, then churn (inserts + an update + a delete) — the
-    * store absorbs every mutation into the cluster partitions (inserts
-    * assign by the probe's own nearest-centroid rule, the update
-    * consolidates its old cluster, the delete tombstones), so
-    * post-churn serves stay cluster-pruned with an EMPTY overlay tail.
-    * Opened at nprobe = nlist so the probed serve is EXACT and the
-    * plain brute oracle over the final state pins it.
-    */
-  private val parquetIvfFreshCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetIvfFreshStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetIvfFreshCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-ivffresh")
-      val df = hom(s, dir).select("id", "payload", "vector")
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      val idx = graft.ops.Ann.buildIvf(
-        df.withColumn("vector",
-          col("vector").cast(ArrayType(DoubleType))),
-        "id", "vector", nlist = 8, maxIter = 0)
-      graft.sources.ParquetCollectionStore.writeIvfSidecar(
-        idx.clustered.select("id", "payload", "vector", "cluster"),
-        idx.centroids, pqDir, field = "vector")
-      idx.clustered.unpersist(): Unit
-      val sealedStore = new graft.sources.ParquetCollectionStore(pqDir,
-        "embeddings", Collections.homogeneousDescriptor, ivfNprobe = 8)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"label":3}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      val m1 = sealedStore.appended("embeddings", adds.toIndexedSeq)
-      require(sealedStore.ivfIncInserts.get() == adds.length.toLong,
-        "the fresh batch must be absorbed into the cluster partitions")
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      val m2 = m1.appended("embeddings", IndexedSeq(
-        graft.sources.Point("7", Some("""{"label":3}"""),
-          dense = Map("vector" -> newVec))))
-      require(m1.ivfIncInserts.get() == 1L,
-        "the update must re-assign into the cluster partitions")
-      val m3 = m2.removed("embeddings", Set("13"))
-      val watermark = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$pqDir/_ivf/inserted.txt")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      require(watermark == m3.logSize("embeddings"),
-        "every mutation must be absorbed — the clusters serve with an " +
-          "empty overlay tail")
-      m3
-    })
-
-  /** The INCREMENTAL-PAYLOAD-INDEX fixture: seal the corpus with a
-    * COVERING label index and a changelog, then churn — inserts land in
-    * their value partition via the writer's own extraction expression,
-    * the update moves value partitions (old consolidates out, new
-    * appends), the delete tombstones as a (value, id) flag — so the
-    * post-churn filtered search serves from the value partitions with
-    * an EMPTY overlay tail (the fixture REQUIRES full absorption).
-    */
-  private val parquetPidxFreshCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetPidxFreshStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetPidxFreshCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-pidxfresh")
-      val df = hom(s, dir).select("id", "payload", "vector")
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      graft.sources.ParquetCollectionStore.writePayloadSidecar(
-        df, pqDir, key = "label", kind = "int")
-      val sealedStore = new graft.sources.ParquetCollectionStore(pqDir,
-        "embeddings", Collections.homogeneousDescriptor)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"label":3}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      val m1 = sealedStore.appended("embeddings", adds.toIndexedSeq)
-      require(sealedStore.pidxIncInserts.get() == adds.length.toLong,
-        "the fresh batch must land in its value partition")
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      val m2 = m1.appended("embeddings", IndexedSeq(
-        graft.sources.Point("7", Some("""{"label":3}"""),
-          dense = Map("vector" -> newVec))))
-      val m3 = m2.removed("embeddings", Set("13"))
-      val watermark = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$pqDir/_pidx/k_label/inserted.txt")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      require(watermark == m3.logSize("embeddings"),
-        "every mutation must be absorbed — the value partitions serve " +
-          "with an empty overlay tail")
-      m3
-    })
-
-  /** The EUCLID-metric HNSW fixture: the graph is built under euclid
-    * (negated-distance preference drives the same walk), the meta
-    * records the metric, and the store serves euclid queries from it —
-    * the graph family is metric-complete like the IVF family.
-    */
-  private val parquetHnswEuclidCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetHnswEuclidStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetHnswEuclidCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-hnswe")
-      val df = hom(s, dir).select("id", "payload", "vector")
-        .filter(col("id") =!= "11")
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writeHnswSidecar(
-        df, pqDir, field = "vector", m = 8, efConstruction = 64,
-        numSegments = 4, metric = "euclid")
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        Collections.homogeneousDescriptor, hnswEf = 2048)
-    })
-
-  /** FILTERED HNSW across the PRODUCTION TOPOLOGY: two rendezvous
-    * shards, each a lakehouse member with its OWN per-segment HNSW
-    * graphs and count-only label index — one local, one behind a keyed
-    * gRPC wire. A filtered search fans out, each member resolves ITS
-    * acceptance set from ITS payload index and serves graph-side (the
-    * wire member entirely service-side), and the scatter-gather merges
-    * the ≤ k pages — qdrant's per-shard filtrable-HNSW shape end to end.
-    */
-  private val shardedHnswCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ShardedCollectionStore]
-
-  private def shardedHnswStore(s: SparkSession, dir: String): graft.sources.ShardedCollectionStore =
-    shardedHnswCache.getOrElseUpdate(dir, {
-      val df = hom(s, dir).select("id", "payload", "vector")
-        .filter(col("id") =!= "11")
-      val members = (0 until 2).map { i =>
-        val own = df.filter(shardOf2(col("id")) === i)
-        val d = tempStoreDir(s"graft-pq-shhnsw$i")
-        graft.sources.ParquetCollectionStore.write(own, d)
-        graft.sources.ParquetCollectionStore.writeHnswSidecar(
-          own, d, field = "vector", m = 8, efConstruction = 64,
-          numSegments = 2)
-        graft.sources.ParquetCollectionStore.writePayloadSidecar(
-          own.select("id", "payload"), d, key = "label", kind = "int")
-        new graft.sources.ParquetCollectionStore(d, "embeddings",
-          Collections.homogeneousDescriptor, hnswEf = 2048)
-      }
-      val memName = s"grpc_shhnsw_member_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(memName, members(1))
-      val msrv = new graft.sources.CollectionGrpcServer(memName,
-        apiKey = Some(ShardedWireKey)).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => msrv.stop()))
-      new graft.sources.ShardedCollectionStore(IndexedSeq(members(0),
-        new graft.sources.GrpcCollectionStore(msrv.host, msrv.port,
-          apiKey = Some(ShardedWireKey))))
-    })
-
-  /** The sharded LIFECYCLE fixture: the homogeneous corpus rendezvous-
-    * sharded over TWO log-enabled parquet members, each with its own
-    * label index sealed at ingest; then the freshness mutations (same
-    * recipe as [[buildMutatedStore]]) routed THROUGH the wrapper; then
-    * one [[graft.sources.ShardedCollectionStore.optimizeMembers]] call
-    * re-absorbing every member's tail — the full qdrant lifecycle
-    * (index, mutate, optimize) closed cluster-wide in one call.
-    */
-  private val shardedOptimizedCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ShardedCollectionStore]
-
-  private def shardedOptimizedStore(s: SparkSession, dir: String): graft.sources.ShardedCollectionStore =
-    shardedOptimizedCache.getOrElseUpdate(dir, {
-      val df = hom(s, dir).select("id", "payload", "vector")
-      val members = (0 until 2).map { i =>
-        val own = df.filter(shardOf2(col("id")) === i)
-        val d = tempStoreDir(s"graft-pq-shopt$i")
-        graft.sources.ParquetCollectionStore.write(own, d, withLog = true)
-        graft.sources.ParquetCollectionStore.writePayloadSidecar(
-          own, d, key = "label", kind = "int")
-        new graft.sources.ParquetCollectionStore(d, "embeddings",
-          Collections.homogeneousDescriptor)
-      }
-      val sh = new graft.sources.ShardedCollectionStore(members)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"label":3}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      val delIds = Tables.load(s, dir, "embeddings")
-        .filter(col("label") === 3 && col("vec_id") % 7 === 0)
-        .select(col("vec_id").cast(StringType))
-        .collect().map(_.getString(0)).toSet
-      sh.upsertPoints("embeddings", adds.toIndexedSeq)
-      sh.deletePoints("embeddings", delIds)
-      sh.optimizeMembers(s)
-      sh
-    })
-
-  /** The SHARDED storage-snapshot fixture: two rendezvous shards, each
-    * a log-enabled lakehouse member with its OWN per-segment HNSW
-    * graphs, then the freshness churn (5 inserts, update id 7 to
-    * vec_id 42's vector, delete id 13) routed THROUGH the wrapper so
-    * every member absorbs its slice online. The gate snapshots this
-    * member-by-member ([[graft.collections.Snapshot.createStorage]]'s
-    * sharded arm — the backend's per-shard snapshot semantics,
-    * /root/reference/tests/bin/config.yaml:24-37,198), restores the
-    * re-wrapped topology, and the FIRST search must be graph-served
-    * over the churned state (SnapshotTopologySpec counter-asserts
-    * primaries-closed on every restored member).
-    */
-  private val shardedSnapCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ShardedCollectionStore]
-
-  private def shardedSnapStore(s: SparkSession, dir: String): graft.sources.ShardedCollectionStore =
-    shardedSnapCache.getOrElseUpdate(dir, {
-      val df = hom(s, dir).select("id", "payload", "vector")
-      val members = (0 until 2).map { i =>
-        val own = df.filter(shardOf2(col("id")) === i)
-        val d = tempStoreDir(s"graft-pq-shsnap$i")
-        graft.sources.ParquetCollectionStore.write(own, d, withLog = true)
-        graft.sources.ParquetCollectionStore.writeHnswSidecar(
-          own, d, field = "vector", m = 8, efConstruction = 64,
-          numSegments = 2)
-        new graft.sources.ParquetCollectionStore(d, "embeddings",
-          Collections.homogeneousDescriptor, hnswEf = 2048)
-      }
-      val sh = new graft.sources.ShardedCollectionStore(members)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"label":3}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      sh.upsertPoints("embeddings", adds.toIndexedSeq :+
-        graft.sources.Point("7", Some("""{"label":3}"""),
-          dense = Map("vector" -> newVec)))
-      sh.deletePoints("embeddings", Set("13"))
-      sh
-    })
-
-  /** The SHARDED-OF-WIRE cluster-snapshot fixture: two rendezvous
-    * shards, each a REST service fronting a lakehouse member with its
-    * own per-segment HNSW graphs + changelog, the freshness churn
-    * routed through the wrapper (every member absorbs its slice
-    * SERVICE-side). The gate then fans the per-node storage-snapshot
-    * and recover verbs ([[graft.collections.Snapshot
-    * .createStorageCluster]]/[[graft.collections.Snapshot
-    * .recoverStorageCluster]]) — archives stay node-side, every member
-    * service swaps to its recovered store, the wrapper keeps serving
-    * through the same clients: the backend's member-by-member cluster
-    * recovery end to end.
-    */
-  private val shardedWireSnapCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ShardedCollectionStore]
-
-  /** The REPLICATED-of-wire cluster-snapshot fixture: an HA pair of
-    * full-corpus members behind MIXED transports (replica 0 JSON wire,
-    * replica 1 binary wire), churned through the wrapper's write-all —
-    * the topology the one-archive reseed rule snapshots (replicas are
-    * interchangeable copies, so ONE member archives node-side and that
-    * archive reseeds every member service at recover).
-    */
-  private val replicatedWireSnapCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ReplicatedCollectionStore]
-
-  private def replicatedWireSnapStore(s: SparkSession, dir: String): graft.sources.ReplicatedCollectionStore =
-    replicatedWireSnapCache.getOrElseUpdate(dir, {
-      val df = hom(s, dir).select("id", "payload", "vector")
-      val clients = (0 until 2).map { i =>
-        val d = tempStoreDir(s"graft-pq-repwire$i")
-        graft.sources.ParquetCollectionStore.write(df, d, withLog = true)
-        graft.sources.ParquetCollectionStore.writeHnswSidecar(
-          df, d, field = "vector", m = 8, efConstruction = 64,
-          numSegments = 2)
-        val backend =
-          s"rest_repwire${i}_${Integer.toHexString(dir.hashCode)}"
-        graft.sources.CollectionStores.register(backend,
-          new graft.sources.ParquetCollectionStore(d, "embeddings",
-            Collections.homogeneousDescriptor, hnswEf = 2048))
-        if (i == 0) {
-          val srv = new graft.sources.CollectionHttpServer(backend).start()
-          Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-          new graft.sources.RestCollectionStore(srv.baseUrl):
-            graft.sources.CollectionStore
-        } else {
-          val srv = new graft.sources.CollectionGrpcServer(backend).start()
-          Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-          new graft.sources.GrpcCollectionStore(srv.host, srv.port):
-            graft.sources.CollectionStore
-        }
-      }
-      val rep = new graft.sources.ReplicatedCollectionStore(
-        clients.toIndexedSeq)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"label":3}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      rep.upsertPoints("embeddings", adds.toIndexedSeq :+
-        graft.sources.Point("7", Some("""{"label":3}"""),
-          dense = Map("vector" -> newVec)))
-      rep.deletePoints("embeddings", Set("13"))
-      rep
-    })
-
-  private def shardedWireSnapStore(s: SparkSession, dir: String): graft.sources.ShardedCollectionStore =
-    shardedWireSnapCache.getOrElseUpdate(dir, {
-      val df = hom(s, dir).select("id", "payload", "vector")
-      // a MIXED cluster: shard 0 behind the JSON wire, shard 1 behind
-      // the binary wire — the verbs must fan across BOTH transports
-      val clients = (0 until 2).map { i =>
-        val own = df.filter(shardOf2(col("id")) === i)
-        val d = tempStoreDir(s"graft-pq-shwire$i")
-        graft.sources.ParquetCollectionStore.write(own, d, withLog = true)
-        graft.sources.ParquetCollectionStore.writeHnswSidecar(
-          own, d, field = "vector", m = 8, efConstruction = 64,
-          numSegments = 2)
-        val backend =
-          s"rest_shwire${i}_${Integer.toHexString(dir.hashCode)}"
-        graft.sources.CollectionStores.register(backend,
-          new graft.sources.ParquetCollectionStore(d, "embeddings",
-            Collections.homogeneousDescriptor, hnswEf = 2048))
-        if (i == 0) {
-          val srv = new graft.sources.CollectionHttpServer(backend).start()
-          Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-          new graft.sources.RestCollectionStore(srv.baseUrl):
-            graft.sources.CollectionStore
-        } else {
-          val srv = new graft.sources.CollectionGrpcServer(backend).start()
-          Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-          new graft.sources.GrpcCollectionStore(srv.host, srv.port):
-            graft.sources.CollectionStore
-        }
-      }
-      val sh = new graft.sources.ShardedCollectionStore(
-        clients.toIndexedSeq)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"label":3}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      sh.upsertPoints("embeddings", adds.toIndexedSeq :+
-        graft.sources.Point("7", Some("""{"label":3}"""),
-          dense = Map("vector" -> newVec)))
-      sh.deletePoints("embeddings", Set("13"))
-      sh
-    })
-
-  /** A log-enabled parquet store of `dir`'s homogeneous collection:
-    * primaries + the [[graft.sources.ParquetLog]] changelog sidecar
-    * sealing the ingest. The CACHED form backs read-only gates
-    * (streaming read, pipeline source); mutation gates take a FRESH dir
-    * per invocation via [[freshParquetLogStore]] so re-runs replay the
-    * same history.
-    */
-  private val parquetLogStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def tempStoreDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(d)
-    }))
-    d.toString
-  }
-
-  private def freshParquetLogStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore = {
-    val pqDir = tempStoreDir("graft-pq-log")
-    graft.sources.ParquetCollectionStore.write(
-      hom(s, dir).select("id", "payload", "vector"), pqDir, withLog = true)
-    new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-      Collections.homogeneousDescriptor)
-  }
-
-  private def parquetLogStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetLogStoreCache.getOrElseUpdate(dir, freshParquetLogStore(s, dir))
-
-  /** The HETEROGENEOUS collection sealed to the lakehouse layout (all
-    * three vector kinds + disjoint-subset NULLs), built once per dir.
-    */
-  private val parquetHeteroStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetHeteroStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetHeteroStoreCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-hetero")
-      graft.sources.ParquetCollectionStore.write(
-        Collections.heterogeneous(s, dir), pqDir)
-      new graft.sources.ParquetCollectionStore(pqDir, "hetero",
-        Collections.heterogeneousDescriptor)
-    })
-
-  /** The heterogeneous store with an IVF sidecar on the NAMED
-    * `text_embedding` field: the fit runs over the rows that HAVE the
-    * field (vec_id % 3 in {0, 1} — named collections populate fields on
-    * subsets by design), the cluster partitions carry exactly those
-    * rows, and a pushed top-k on the field serves probe-pruned. Rows
-    * without the field can never match that search, so the subset index
-    * is complete.
-    */
-  private def parquetHeteroIvfStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetHeteroStoreCache.getOrElseUpdate(s"$dir#hivf", {
-      val pqDir = tempStoreDir("graft-pq-hetero-ivf")
-      val het = Collections.heterogeneous(s, dir)
-      graft.sources.ParquetCollectionStore.write(het, pqDir)
-      val sub = het.filter(col("text_embedding").isNotNull)
-        .select(col("id"), col("payload"),
-          dvec(col("text_embedding")).as("text_embedding"))
-      val idx = ivfCache.getOrElseUpdate(s"$dir#hetero",
-        graft.ops.Ann.buildIvf(sub, "id", "text_embedding",
-          nlist = 8, maxIter = 0))
-      graft.sources.ParquetCollectionStore.writeIvfSidecar(
-        idx.clustered.select("id", "payload", "text_embedding", "cluster"),
-        idx.centroids, pqDir, field = "text_embedding",
-        vectorColumn = "text_embedding")
-      new graft.sources.ParquetCollectionStore(pqDir, "hetero",
-        Collections.heterogeneousDescriptor, ivfNprobe = 2)
-    })
-
-  /** The heterogeneous collection minus the query point, sealed cold —
-    * the pushed NAMED-FIELD search fixture (the oracle excludes vec 0
-    * before ranking, so the fixture does too).
-    */
-  private def parquetHeteroSearchStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetHeteroStoreCache.getOrElseUpdate(s"$dir#hs", {
-      val pqDir = tempStoreDir("graft-pq-hetero-hs")
-      graft.sources.ParquetCollectionStore.write(
-        Collections.heterogeneous(s, dir).filter(col("id") =!= "0"), pqDir)
-      new graft.sources.ParquetCollectionStore(pqDir, "hetero",
-        Collections.heterogeneousDescriptor)
-    })
-
-  /** The SPARSE lakehouse collection of `dir`: the embeddings corpus
-    * (minus the query point, the oracle's exclusion) re-expressed as the
-    * two-column sparse layout (`kw_indices`/`kw_values` from the
-    * positive embedding components), sealed to parquet WITH the
-    * dim-bucketed postings sidecar — pushed sparse top-k serves from
-    * pruned buckets, the primaries only feed the winners' fetch.
-    */
-  private val parquetSparseStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetSparseStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetSparseStoreCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-sparse")
-      val (ki, kv) = sparseOf(col("embedding"))
-      val df = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") =!= 0)
-        .select(col("vec_id").cast(StringType).as("id"),
-          lit(null).cast(StringType).as("payload"),
-          ki.as("kw_indices"),
-          kv.cast(ArrayType(FloatType)).as("kw_values"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir)
-      graft.sources.ParquetCollectionStore.writeSparseSidecar(
-        df, pqDir, "kw", nBuckets = 16)
-      new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-        graft.collections.CollectionDescriptor("embeddings",
-          Seq(graft.collections.SparseField("kw"))))
-    })
-
-  /** The INCREMENTAL-SPARSE fixture: the kw postings sidecar sealed
-    * with a changelog, then churned — inserts land in their dim
-    * buckets, the update consolidates its old dims' buckets, the delete
-    * tombstones `id → dims` — so the post-churn sparse search serves
-    * bucket-pruned with an EMPTY overlay tail (REQUIRED absorbed).
-    */
-  private val parquetSparseFreshCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.ParquetCollectionStore]
-
-  private def parquetSparseFreshStore(s: SparkSession, dir: String): graft.sources.ParquetCollectionStore =
-    parquetSparseFreshCache.getOrElseUpdate(dir, {
-      val pqDir = tempStoreDir("graft-pq-spfreshinc")
-      val (ki, kv) = sparseOf(col("embedding"))
-      val src = Tables.load(s, dir, "embeddings")
-        .select(col("vec_id").cast(StringType).as("id"),
-          lit(null).cast(StringType).as("payload"),
-          ki.as("kw_indices"),
-          kv.cast(ArrayType(FloatType)).as("kw_values"))
-      val df = src.filter(col("id") =!= "0")
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      graft.sources.ParquetCollectionStore.writeSparseSidecar(
-        df, pqDir, "kw", nBuckets = 16)
-      val desc = graft.collections.CollectionDescriptor("embeddings",
-        Seq(graft.collections.SparseField("kw")))
-      val sealedStore = new graft.sources.ParquetCollectionStore(pqDir,
-        "embeddings", desc)
-      def sparsePt(rowId: String, asId: String): graft.sources.Point = {
-        val r = src.filter(col("id") === rowId)
-          .select(col("kw_indices"), col("kw_values")).head()
-        graft.sources.Point(asId, None, sparse = Map("kw" ->
-          ((r.getSeq[Int](0).toArray, r.getSeq[Float](1).toArray))))
-      }
-      val adds = (1 to 4).map(i => sparsePt(i.toString, s"${i + 100000}"))
-      val m1 = sealedStore.appended("embeddings", adds.toIndexedSeq)
-      require(sealedStore.sparseIncInserts.get() == adds.length.toLong,
-        "the fresh batch must land in its dim buckets")
-      val m2 = m1.appended("embeddings",
-        IndexedSeq(sparsePt("42", "7"))) // update: 7 takes 42's postings
-      val m3 = m2.removed("embeddings", Set("13"))
-      val watermark = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$pqDir/_sparse/inserted.txt")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      require(watermark == m3.logSize("embeddings"),
-        "every mutation must be absorbed — the buckets serve with an " +
-          "empty overlay tail")
-      m3
-    })
-
-  /** The wire-protocol fixture of `dir`: an in-process
-    * [[graft.sources.CollectionHttpServer]] fronting the homogeneous
-    * collection, started once per dir (the offline stand-in for a live
-    * backend node — what a production deployment keeps is the CLIENT,
-    * [[graft.sources.RestCollectionStore]], which carries only this URL).
-    */
-  private val restFixtureCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def restBackedUrl(s: SparkSession, dir: String): String =
-    restFixtureCache.getOrElseUpdate(dir, {
-      val backend = s"rest_backend_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        graft.sources.InMemoryCollectionStore.fromRows(
-          hom(s, dir).select("id", "payload", "vector"),
-          "embeddings", Collections.homogeneousDescriptor))
-      val srv = new graft.sources.CollectionHttpServer(backend).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      srv.baseUrl
-    })
-
-  /** The WIRE-SERVED ONLINE-MAINTENANCE fixture: the hnsw_fresh churn
-    * driven ENTIRELY through the REST client against a service fronting
-    * a lakehouse store with the graph sidecar + changelog — every
-    * remote upsert/delete commits through the store's own
-    * appended()/removed() (the service owns the RMW), so the mutations
-    * absorb into the SERVICE-SIDE per-segment graphs exactly like the
-    * in-process fixture's; the fixture REQUIRES the watermark reached
-    * the log head before the gate serves. Proves the four maintained
-    * families' discipline holds through the wire seam, not just
-    * in-process.
-    */
-  private def restHnswFreshUrl(s: SparkSession, dir: String): String =
-    restFixtureCache.getOrElseUpdate(s"$dir#hnswfresh", {
-      val pqDir = tempStoreDir("graft-rest-hnswfresh")
-      val df = hom(s, dir).select("id", "payload", "vector")
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      graft.sources.ParquetCollectionStore.writeHnswSidecar(
-        df, pqDir, field = "vector", m = 8, efConstruction = 64,
-        numSegments = 4)
-      val backend = s"rest_hnswfresh_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-          Collections.homogeneousDescriptor, hnswEf = 2048))
-      val srv = new graft.sources.CollectionHttpServer(backend).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      val client = new graft.sources.RestCollectionStore(srv.baseUrl)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"label":3}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      client.upsertPoints("embeddings", adds.toSeq.sortBy(_.id))
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      client.upsertPoints("embeddings", Seq(
-        graft.sources.Point("7", Some("""{"label":3}"""),
-          dense = Map("vector" -> newVec))))
-      client.deletePoints("embeddings", Set("13"))
-      val watermark = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$pqDir/_hnsw/inserted.txt")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      require(watermark == client.logSize("embeddings"),
-        "remote mutations must absorb into the service-side graphs — " +
-          "the wire seam broke the maintenance discipline")
-      srv.baseUrl
-    })
-
-  /** [[restHnswFreshUrl]]'s TEXT sibling: the text_fresh churn driven
-    * entirely through the REST client — remote upserts tokenize
-    * service-side and land in their buckets, the update's old tokens
-    * consolidate out, the delete tombstones, and the LIVE BM25 stats
-    * (`_tidx/stats.txt`) track the churn — both REQUIREd before the
-    * gate serves, so remote mutation provably cannot leave the text
-    * sidecar stale.
-    */
-  private def restTextFreshUrl(s: SparkSession, dir: String): String =
-    restFixtureCache.getOrElseUpdate(s"$dir#textfresh", {
-      val pqDir = tempStoreDir("graft-rest-textfresh")
-      val body = concat(lit("alpha w"), col("label"),
-        lit(" tag"), col("vec_id") % 4)
-      val df = Tables.load(s, dir, "embeddings").select(
-        col("vec_id").cast(StringType).as("id"),
-        to_json(struct(body.as("body"))).as("payload"),
-        col("embedding").as("vector"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      graft.sources.ParquetCollectionStore.writeTextSidecar(
-        df, pqDir, key = "body")
-      val backend = s"rest_textfresh_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-          Collections.homogeneousDescriptor))
-      val srv = new graft.sources.CollectionHttpServer(backend).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      val client = new graft.sources.RestCollectionStore(srv.baseUrl)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"body":"alpha w3 tagx"}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      client.upsertPoints("embeddings", adds.toSeq.sortBy(_.id))
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      client.upsertPoints("embeddings", Seq(
-        graft.sources.Point("7", Some("""{"body":"alpha w3 tag7"}"""),
-          dense = Map("vector" -> newVec))))
-      client.deletePoints("embeddings", Set("13"))
-      val watermark = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$pqDir/_tidx/inserted.txt")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      require(watermark == client.logSize("embeddings"),
-        "remote mutations must absorb into the service-side postings — " +
-          "the wire seam broke the text maintenance discipline")
-      val stats = graft.sources.ParquetCollectionStore.readTextStats(
-        new java.io.File(s"$pqDir/_tidx/stats.txt"))
-      require(stats.exists(_._1 == client.pointCount("embeddings")),
-        s"live BM25 stats must track remote churn service-side, got " +
-          s"$stats vs n=${client.pointCount("embeddings")}")
-      srv.baseUrl
-    })
-
-  /** [[restHnswFreshUrl]]'s GEO sibling: the geo_fresh churn driven
-    * entirely through the REST client — remote inserts land in their
-    * Morton cells via the writer's own cell expression service-side,
-    * the update's old cell consolidates, the delete tombstones with its
-    * cell recorded; the watermark must reach the log head before the
-    * gate serves.
-    */
-  private def restGeoFreshUrl(s: SparkSession, dir: String): String =
-    restFixtureCache.getOrElseUpdate(s"$dir#geofresh", {
-      val pqDir = tempStoreDir("graft-rest-geofresh")
-      val la = (col("vec_id") % 120).cast("double") - 60.0 + 0.25
-      val lo = ((col("vec_id") * 7) % 320).cast("double") - 160.0 + 0.25
-      val df = Tables.load(s, dir, "embeddings").select(
-        col("vec_id").cast(StringType).as("id"),
-        to_json(struct(struct(la.as("lat"), lo.as("lon")).as("loc")))
-          .as("payload"),
-        col("embedding").as("vector"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      graft.sources.ParquetCollectionStore.writeGeoSidecar(
-        df, pqDir, key = "loc", bits = 4)
-      val backend = s"rest_geofresh_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-          Collections.homogeneousDescriptor))
-      val srv = new graft.sources.CollectionHttpServer(backend).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      val client = new graft.sources.RestCollectionStore(srv.baseUrl)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"loc":{"lat":5.25,"lon":-15.25}}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      client.upsertPoints("embeddings", adds.toSeq.sortBy(_.id))
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      client.upsertPoints("embeddings", Seq(
-        graft.sources.Point("7",
-          Some("""{"loc":{"lat":0.25,"lon":-10.25}}"""),
-          dense = Map("vector" -> newVec))))
-      // 64 sits INSIDE the gate's box: the delete must leave the
-      // box's serve, not just the corpus
-      client.deletePoints("embeddings", Set("64"))
-      val watermark = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$pqDir/_gidx/inserted.txt")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      require(watermark == client.logSize("embeddings"),
-        "remote mutations must absorb into the service-side cells — " +
-          "the wire seam broke the geo maintenance discipline")
-      srv.baseUrl
-    })
-
-  /** The WIRE STORAGE-SNAPSHOT fixture: the hnsw_fresh churn driven
-    * through the REST client, then the client triggers a SERVICE-side
-    * storage snapshot (whole store tree, index included — the archive
-    * never crosses the wire, the backend's per-node snapshot form) and
-    * a RECOVER that restores the archive under a fresh service dir and
-    * swaps the service's backing store. The gate then searches through
-    * the same client: the RECOVERED store must serve graph-walked over
-    * the churned state — snapshot, recover, and the wire seam all
-    * invisible at once.
-    */
-  private def restStorageSnapUrl(s: SparkSession, dir: String): String =
-    restFixtureCache.getOrElseUpdate(s"$dir#storagesnap", {
-      val pqDir = tempStoreDir("graft-rest-snapsrc")
-      val df = hom(s, dir).select("id", "payload", "vector")
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      graft.sources.ParquetCollectionStore.writeHnswSidecar(
-        df, pqDir, field = "vector", m = 8, efConstruction = 64,
-        numSegments = 4)
-      val backend = s"rest_snapstore_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-          Collections.homogeneousDescriptor, hnswEf = 2048))
-      val srv = new graft.sources.CollectionHttpServer(backend).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      val client = new graft.sources.RestCollectionStore(srv.baseUrl)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"label":3}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      client.upsertPoints("embeddings", adds.toSeq.sortBy(_.id))
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      client.upsertPoints("embeddings", Seq(
-        graft.sources.Point("7", Some("""{"label":3}"""),
-          dense = Map("vector" -> newVec))))
-      client.deletePoints("embeddings", Set("13"))
-      // snapshot + recover, both verbs over the wire; the archive and
-      // the recovered dir are service-side paths
-      val arch = tempStoreDir("graft-rest-snaparch")
-      client.snapshotStorage("embeddings", arch)
-      client.recoverStorageSnapshot("embeddings", arch,
-        tempStoreDir("graft-rest-snapdst"), hnswEf = 2048)
-      srv.baseUrl
-    })
-
-  /** Shared secret of the KEYED wire fixtures — the auth scheme the
-    * reference's client uses against its backend (api-key,
-    * /root/reference/src/test_utils.rs:31,119-128).
-    */
-  private[graft] val WireApiKey = "graft-test-api-key"
-
-  /** [[restBackedUrl]]'s keyed twin: the same collection behind a server
-    * that REFUSES unkeyed requests (401) — the gate reads through a
-    * keyed client; the reject path is pinned in RestCollectionStoreSpec.
-    */
-  private def restAuthUrl(s: SparkSession, dir: String): String =
-    restFixtureCache.getOrElseUpdate(s"$dir#auth", {
-      val backend = s"rest_auth_backend_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        graft.sources.InMemoryCollectionStore.fromRows(
-          hom(s, dir).select("id", "payload", "vector"),
-          "embeddings", Collections.homogeneousDescriptor))
-      val srv = new graft.sources.CollectionHttpServer(backend,
-        apiKey = Some(WireApiKey)).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      srv.baseUrl
-    })
-
-  /** The BINARY-transport fixture of `dir`: a framed-protobuf
-    * [[graft.sources.CollectionGrpcServer]] fronting the homogeneous
-    * collection — the transport twin of [[restBackedUrl]], matching the
-    * transport the reference's client actually speaks (gRPC via
-    * qdrant-client, /root/reference/src/table.rs:133). What a production
-    * deployment keeps is the CLIENT, [[graft.sources.GrpcCollectionStore]],
-    * which carries only (host, port).
-    */
-  private val grpcFixtureCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Int)]
-
-  private def grpcBackedAddr(s: SparkSession, dir: String): (String, Int) =
-    grpcFixtureCache.getOrElseUpdate(dir, {
-      val backend = s"grpc_backend_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        graft.sources.InMemoryCollectionStore.fromRows(
-          hom(s, dir).select("id", "payload", "vector"),
-          "embeddings", Collections.homogeneousDescriptor))
-      val srv = new graft.sources.CollectionGrpcServer(backend).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      (srv.host, srv.port)
-    })
-
-  /** [[restTextFreshUrl]]'s BINARY-wire twin: the text_fresh churn
-    * driven through the gRPC client — remote upserts tokenize
-    * service-side, the delete tombstones, the live BM25 stats track;
-    * both REQUIREd before the gate serves. With the REST twin this
-    * closes maintenance parity on BOTH transports.
-    */
-  private def grpcTextFreshAddr(s: SparkSession, dir: String): (String, Int) =
-    grpcFixtureCache.getOrElseUpdate(s"$dir#textfresh", {
-      val pqDir = tempStoreDir("graft-grpc-textfresh")
-      val body = concat(lit("alpha w"), col("label"),
-        lit(" tag"), col("vec_id") % 4)
-      val df = Tables.load(s, dir, "embeddings").select(
-        col("vec_id").cast(StringType).as("id"),
-        to_json(struct(body.as("body"))).as("payload"),
-        col("embedding").as("vector"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      graft.sources.ParquetCollectionStore.writeTextSidecar(
-        df, pqDir, key = "body")
-      val backend = s"grpc_textfresh_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-          Collections.homogeneousDescriptor))
-      val srv = new graft.sources.CollectionGrpcServer(backend).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      val client = new graft.sources.GrpcCollectionStore(srv.host, srv.port)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"body":"alpha w3 tagx"}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      client.upsertPoints("embeddings", adds.toSeq.sortBy(_.id))
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      client.upsertPoints("embeddings", Seq(
-        graft.sources.Point("7", Some("""{"body":"alpha w3 tag7"}"""),
-          dense = Map("vector" -> newVec))))
-      client.deletePoints("embeddings", Set("13"))
-      val watermark = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$pqDir/_tidx/inserted.txt")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      require(watermark == client.logSize("embeddings"),
-        "remote mutations must absorb into the service-side postings — " +
-          "the binary wire broke the text maintenance discipline")
-      val stats = graft.sources.ParquetCollectionStore.readTextStats(
-        new java.io.File(s"$pqDir/_tidx/stats.txt"))
-      require(stats.exists(_._1 == client.pointCount("embeddings")),
-        s"live BM25 stats must track remote churn service-side, got " +
-          s"$stats vs n=${client.pointCount("embeddings")}")
-      (srv.host, srv.port)
-    })
-
-  /** [[restGeoFreshUrl]]'s BINARY-wire twin: the geo_fresh churn driven
-    * through the gRPC client — remote inserts land in their Morton
-    * cells service-side, the update's old cell consolidates, the
-    * in-box delete tombstones with its cell recorded; the watermark
-    * must reach the log head before the gate serves. With the REST twin
-    * this closes GEO maintenance parity on BOTH transports (text
-    * already holds on both — all six families now maintain through
-    * every wire seam).
-    */
-  private def grpcGeoFreshAddr(s: SparkSession, dir: String): (String, Int) =
-    grpcFixtureCache.getOrElseUpdate(s"$dir#geofresh", {
-      val pqDir = tempStoreDir("graft-grpc-geofresh")
-      val la = (col("vec_id") % 120).cast("double") - 60.0 + 0.25
-      val lo = ((col("vec_id") * 7) % 320).cast("double") - 160.0 + 0.25
-      val df = Tables.load(s, dir, "embeddings").select(
-        col("vec_id").cast(StringType).as("id"),
-        to_json(struct(struct(la.as("lat"), lo.as("lon")).as("loc")))
-          .as("payload"),
-        col("embedding").as("vector"))
-      graft.sources.ParquetCollectionStore.write(df, pqDir, withLog = true)
-      graft.sources.ParquetCollectionStore.writeGeoSidecar(
-        df, pqDir, key = "loc", bits = 4)
-      val backend = s"grpc_geofresh_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        new graft.sources.ParquetCollectionStore(pqDir, "embeddings",
-          Collections.homogeneousDescriptor))
-      val srv = new graft.sources.CollectionGrpcServer(backend).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      val client = new graft.sources.GrpcCollectionStore(srv.host, srv.port)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"loc":{"lat":5.25,"lon":-15.25}}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      client.upsertPoints("embeddings", adds.toSeq.sortBy(_.id))
-      val newVec = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") === 42)
-        .select(col("embedding").cast(ArrayType(FloatType)))
-        .head().getSeq[Float](0).toArray
-      client.upsertPoints("embeddings", Seq(
-        graft.sources.Point("7",
-          Some("""{"loc":{"lat":0.25,"lon":-10.25}}"""),
-          dense = Map("vector" -> newVec))))
-      // 64 sits INSIDE the gate's box: the delete must leave the
-      // box's serve, not just the corpus
-      client.deletePoints("embeddings", Set("64"))
-      val watermark = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$pqDir/_gidx/inserted.txt")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      require(watermark == client.logSize("embeddings"),
-        "remote mutations must absorb into the service-side cells — " +
-          "the binary wire broke the geo maintenance discipline")
-      (srv.host, srv.port)
-    })
-
-  /** The shared secret of the KEYED sharded wire topology (fixture
-    * constant — a deployment injects its own).
-    */
-  private[graft] val ShardedWireKey = "graft-sharded-wire-key"
-
-  /** KEYED binary server fronting a SHARDED store whose members are
-    * themselves KEYED wire clients dialing keyed member servers — the
-    * full production topology, authenticated at BOTH seams: connector
-    * -> keyed wire -> scatter-gather -> keyed wires -> member nodes,
-    * behind one address. Every hop carries the api-key frame and every
-    * server verifies it constant-time before routing.
-    */
-  private def grpcShardedAddr(s: SparkSession, dir: String): (String, Int) =
-    grpcFixtureCache.getOrElseUpdate(s"$dir#sharded", {
-      val hex = Integer.toHexString(dir.hashCode)
-      val frame = hom(s, dir).select("id", "payload", "vector")
-      val memberClients = (0 until 3).map { i =>
-        val memName = s"grpc_sh_member${i}_$hex"
-        graft.sources.CollectionStores.register(memName,
-          graft.sources.InMemoryCollectionStore.fromRows(
-            frame.filter(shardOf3(col("id")) === i),
-            "embeddings", Collections.homogeneousDescriptor))
-        val msrv = new graft.sources.CollectionGrpcServer(memName,
-          apiKey = Some(ShardedWireKey)).start()
-        Runtime.getRuntime.addShutdownHook(new Thread(() => msrv.stop()))
-        new graft.sources.GrpcCollectionStore(msrv.host, msrv.port,
-          apiKey = Some(ShardedWireKey))
-      }
-      val backend = s"grpc_sh_backend_$hex"
-      graft.sources.CollectionStores.register(backend,
-        new graft.sources.ShardedCollectionStore(memberClients))
-      val srv = new graft.sources.CollectionGrpcServer(backend,
-        apiKey = Some(ShardedWireKey)).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      (srv.host, srv.port)
-    })
-
-  /** Binary server fronting the TEXT-SIDECAR'd documents store: the
-    * ranked full-text serve behind the wire — postings read service-side,
-    * only the k hits cross.
-    */
-  private def grpcTextRankAddr(s: SparkSession, dir: String): (String, Int) =
-    grpcFixtureCache.getOrElseUpdate(s"$dir#textrank", {
-      val backend = s"grpc_tr_backend_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        parquetTextRankStore(s, dir))
-      val srv = new graft.sources.CollectionGrpcServer(backend).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      (srv.host, srv.port)
-    })
-
-  /** Binary server fronting the MUTATED lakehouse dir, then the
-    * OPTIMIZE VERB sent over the wire: the service reseals its sidecars
-    * at its own log head (zero data crosses — one verb frame), and the
-    * fixture serves index-pruned afterwards exactly like the local
-    * optimizer gate — the freshness loop closed REMOTELY.
-    */
-  private def grpcOptimizedAddr(s: SparkSession, dir: String): (String, Int) =
-    grpcFixtureCache.getOrElseUpdate(s"$dir#opt", {
-      val backend = s"grpc_opt_backend_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        buildMutatedStore(s, dir, "graft-pq-grpcopt"))
-      val srv = new graft.sources.CollectionGrpcServer(backend).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      new graft.sources.GrpcCollectionStore(srv.host, srv.port).optimize()
-      (srv.host, srv.port)
-    })
-
-  /** The sharded lifecycle fixture WITH A WIRE MEMBER: member 0 is a
-    * local parquet store, member 1 the same layout BEHIND a binary
-    * server — mutations route through the wrapper (the wire member's
-    * service owns its COW batches), and ONE optimizeMembers() call
-    * reseals member 0 locally and ships the optimize verb to member 1's
-    * service — the cluster-wide freshness loop with a remote node in
-    * the mix, the full production topology's lifecycle.
-    */
-  private def shardedOptimizedWireStore(s: SparkSession, dir: String): graft.sources.ShardedCollectionStore =
-    shardedOptimizedCache.getOrElseUpdate(s"$dir#wire", {
-      val df = hom(s, dir).select("id", "payload", "vector")
-      val members: IndexedSeq[graft.sources.CollectionStore] =
-        (0 until 2).map { i =>
-          val own = df.filter(shardOf2(col("id")) === i)
-          val d = tempStoreDir(s"graft-pq-shoptw$i")
-          graft.sources.ParquetCollectionStore.write(own, d, withLog = true)
-          graft.sources.ParquetCollectionStore.writePayloadSidecar(
-            own, d, key = "label", kind = "int")
-          val pq = new graft.sources.ParquetCollectionStore(d, "embeddings",
-            Collections.homogeneousDescriptor)
-          if (i == 0) pq
-          else {
-            val memName =
-              s"grpc_shoptw_member_${Integer.toHexString(dir.hashCode)}"
-            graft.sources.CollectionStores.register(memName, pq)
-            val msrv = new graft.sources.CollectionGrpcServer(memName).start()
-            Runtime.getRuntime.addShutdownHook(new Thread(() => msrv.stop()))
-            new graft.sources.GrpcCollectionStore(msrv.host, msrv.port)
-          }
-        }
-      val sh = new graft.sources.ShardedCollectionStore(members)
-      val adds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select((col("vec_id") + 100000).cast(StringType).as("id"),
-          col("embedding").cast(ArrayType(FloatType)).as("v"))
-        .collect()
-        .map(r => graft.sources.Point(r.getString(0),
-          Some("""{"label":3}"""),
-          dense = Map("vector" -> r.getSeq[Float](1).toArray)))
-      val delIds = Tables.load(s, dir, "embeddings")
-        .filter(col("label") === 3 && col("vec_id") % 7 === 0)
-        .select(col("vec_id").cast(StringType))
-        .collect().map(_.getString(0)).toSet
-      sh.upsertPoints("embeddings", adds.toIndexedSeq)
-      sh.deletePoints("embeddings", delIds)
-      sh.optimizeMembers(s)
-      sh
-    })
-
-  /** The reshard gate's remote grow node: ONE cached binary server
-    * fronting registry name `sharded_reshard_node` — each gate
-    * invocation re-registers an EMPTY store there (the server resolves
-    * by name per request), so re-runs reshard onto a fresh node.
-    */
-  private lazy val reshardNodeServer: graft.sources.CollectionGrpcServer = {
-    val srv = new graft.sources.CollectionGrpcServer("sharded_reshard_node").start()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-    srv
-  }
-
-  private def reshardNodeAddr(): (String, Int) =
-    (reshardNodeServer.host, reshardNodeServer.port)
-
-  /** JSON server fronting the lakehouse collection for the SERVICE-SIDE
-    * snapshot verb — the backend's create-snapshot API over the wire.
-    */
-  private def restSnapshotUrl(s: SparkSession, dir: String): String =
-    restFixtureCache.getOrElseUpdate(s"$dir#snap", {
-      val backend = s"rest_snap_backend_${Integer.toHexString(dir.hashCode)}"
-      graft.sources.CollectionStores.register(backend,
-        parquetBackedStore(s, dir))
-      val srv = new graft.sources.CollectionHttpServer(backend).start()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-      srv.baseUrl
-    })
-
-  /** One JSON-transport server fronting the LAKEHOUSE backend (registry
-    * name `rest_lake_backend`) — the transport twin of
-    * [[grpcLakeServer]].
-    */
-  private lazy val restLakeUrl: String = {
-    val srv = new graft.sources.CollectionHttpServer("rest_lake_backend").start()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-    srv.baseUrl
-  }
-
-  /** One binary-transport server fronting the LAKEHOUSE backend
-    * (registry name `grpc_lake_backend` — gates register the parquet
-    * store there before dialing): remote node over cold storage, the
-    * production deployment shape.
-    */
-  private lazy val grpcLakeServer: graft.sources.CollectionGrpcServer = {
-    val srv = new graft.sources.CollectionGrpcServer("grpc_lake_backend").start()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-    srv
-  }
-
-  /** One binary-transport server fronting the WRITABLE lakehouse backend
-    * (registry name `grpc_lakew_backend`): gates register a fresh empty
-    * log-enabled parquet store there per invocation.
-    */
-  private lazy val grpcLakeWriteServer: graft.sources.CollectionGrpcServer = {
-    val srv = new graft.sources.CollectionGrpcServer("grpc_lakew_backend").start()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-    srv
-  }
-
-  /** One binary-transport server fronting the writable remote collection
-    * (registry name `grpc_write_backend`): gates reset the backend per
-    * invocation, the server resolves the store by name per request.
-    */
-  private lazy val grpcWriteAddr: (String, Int) = {
-    val srv = new graft.sources.CollectionGrpcServer("grpc_write_backend").start()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-    (srv.host, srv.port)
-  }
-
-  /** One registered store holding BOTH generations of the homogeneous
-    * collection (`embeddings` and the reindexed `embeddings_v2`) — the
-    * alias-swap fixture: built once per dir, the gate only flips the
-    * alias (the zero-downtime production move the alias API exists for).
-    */
-  private val aliasStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def aliasStoreOf(s: SparkSession, dir: String): String =
-    aliasStoreCache.getOrElseUpdate(dir, {
-      import graft.sources._
-      val d1 = Collections.homogeneousDescriptor.copy(name = "embeddings")
-      val d2 = Collections.homogeneousDescriptor.copy(name = "embeddings_v2")
-      val v2 = hom(s, dir).select(col("id"),
-        concat(lit("""{"v":2,"orig":"""), col("payload"), lit("}")).as("payload"),
-        col("vector"))
-      def pts(df: DataFrame, coll: String,
-              d: graft.collections.CollectionDescriptor) = {
-        val st = InMemoryCollectionStore.fromRows(df, coll, d)
-        st.queryPoints(coll, 0L, st.pointCount(coll),
-          withPayload = true, Seq("vector"), None).toIndexedSeq
-      }
-      val name = s"alias_store_${Integer.toHexString(dir.hashCode)}"
-      CollectionStores.register(name, new InMemoryCollectionStore(
-        Map("embeddings" -> d1, "embeddings_v2" -> d2),
-        Map("embeddings" -> pts(hom(s, dir).select("id", "payload", "vector"),
-            "embeddings", d1),
-          "embeddings_v2" -> pts(v2, "embeddings_v2", d2))))
-      name
-    })
-
-  /** One server fronting the WRITABLE remote collection (registry name
-    * `rest_write_backend`): gates reset the backend to an empty
-    * collection per invocation — the server resolves the store by name
-    * per request, so the swap is immediately visible.
-    */
-  private lazy val restWriteUrl: String = {
-    val srv = new graft.sources.CollectionHttpServer("rest_write_backend").start()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-    srv.baseUrl
-  }
-
-  /** One server fronting the remote-DDL backend (registry name
-    * `rest_ddl_backend`): gates reset the backend per invocation so
-    * CREATE TABLE is re-runnable.
-    */
-  private lazy val restDdlUrl: String = {
-    val srv = new graft.sources.CollectionHttpServer("rest_ddl_backend").start()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop()))
-    srv.baseUrl
-  }
-
-  /** Trained BPE model of `dir`'s documents (8 merges): training is the
-    * offline batch job, built once per dir; both bpe gates consume the
-    * one artifact (the merge table is the MODEL a tokenizer ships).
-    */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[graft.ops.Bpe.Merge], DataFrame)]
-
-  private def bpeModel(s: SparkSession, dir: String): (Seq[graft.ops.Bpe.Merge], DataFrame) =
-    bpeCache.getOrElseUpdate(dir,
-      graft.ops.Bpe.trainMerges(docs(s, dir), "text", numMerges = 8))
-
-  /** Trained NB classifier of `dir`'s lang-labeled documents — fitting
-    * is the offline batch job (one corpus pass; counts localCheckpoint
-    * as model state), classification is the serving path the gate
-    * measures.
-    */
-  private val nbCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ops.Classify.NbModel]
-
-  private def nbModel(s: SparkSession, dir: String): graft.ops.Classify.NbModel =
-    nbCache.getOrElseUpdate(dir,
-      graft.ops.Classify.train(docs(s, dir), "text", "lang", buckets = 512))
-
-  /** Stored geo-cell layout of the events-derived (lat, lon) points —
-    * the geo payload index ([[graft.ops.Geo.writeCellLayout]], bits=4):
-    * box queries partition-prune to their cover cells. Written once per
-    * dir at ingest, like every stored index here.
-    */
-  private val geoStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private def geoStore(s: SparkSession, dir: String): DataFrame =
-    geoStoreCache.getOrElseUpdate(dir, {
-      val pts = Tables.load(s, dir, "events").select(col("event_id"),
-        col("user_id").cast(DoubleType).as("lat"),
-        (col("event_id") % 180).cast(DoubleType).as("lon"))
-      val path = java.nio.file.Files.createTempDirectory("graft-geo-cells").toString
-      graft.ops.Geo.writeCellLayout(pts, "lat", "lon", bits = 4, path)
-      graft.ops.Geo.readCellLayout(s, path)
-    })
-
-  /** Corpus-calibrated (quantile-clipped) int8 artifacts of `dir`: the
-    * two-double calibration + stored (codes, csum) — the backend's
-    * scalar quantization with `quantile: 0.99`, quantized once at
-    * ingest like [[storedCodes]].
-    */
-  private val calibCache =
-    scala.collection.concurrent.TrieMap.empty[String, (graft.ops.Quant.I8Calibration, DataFrame)]
-
-  private def calibratedStore(s: SparkSession, dir: String): (graft.ops.Quant.I8Calibration, DataFrame) =
-    calibCache.getOrElseUpdate(dir, {
-      val cal = graft.ops.Quant.calibrate(homD(s, dir), "vector", quantile = 0.99)
-      val codes = graft.ops.Quant.quantizeColumnCalibrated(
-          homD(s, dir).select("id", "vector"), "vector", "cal", cal)
-        .select("id", "cal_codes", "cal_csum")
-        .localCheckpoint()
-      (cal, codes)
-    })
-
-  /** Stored int8 codes for the FULL homogeneous corpus of `dir`,
-    * quantized ONCE (the ingest step of the quantize-at-ingest pipeline;
-    * in production this frame is the parquet codes table). localCheckpoint
-    * materializes it so the serving path reads codes, not the
-    * full-precision column. Like ivfCache, the checkpointed blocks belong
-    * to the session that built them — caches are per-process artifacts
-    * (Verify/Bench run one session per JVM).
-    */
-  /** Materialized supplier<->part edge model of `dir` (checkpointed
-    * adjacency, node set, degrees) — built once per dir like the stored
-    * IVF layouts; the graph gates share it the way production graph
-    * queries share a stored adjacency table.
-    */
-  private val edgeModelCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ops.Graph.EdgeModel]
-
-  private def edgeModel(s: SparkSession, dir: String): graft.ops.Graph.EdgeModel =
-    edgeModelCache.getOrElseUpdate(dir,
-      graft.ops.Graph.materialize(graft.ops.Graph.undirectedEdges(
-        Tables.load(s, dir, "lineitem"), "l_suppkey", "l_partkey", 1000000L)))
-
-  private def storedCodes(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(dir,
-      graft.ops.Quant.quantizeColumn(
-          hom(s, dir).select("id", "vector"), "vector", "v8")
-        .select("id", "v8_codes", "v8_scale")
-        .localCheckpoint())
-
-  /** Stored binary-quantization bits (the 1-bit tier below [[storedCodes]]):
-    * (id, v1_bits) with sign bits packed ONCE at ingest — the candidate
-    * stage of [[graft.ops.Quant.searchStoredBits]] scans only this frame.
-    */
-  private def storedBits(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(s"$dir#bq",
-      graft.ops.Quant.packSignColumn(
-          hom(s, dir).select("id", "vector"), "vector", "v1")
-        .select("id", "v1_bits")
-        .localCheckpoint())
-
-  /** IVF-partitioned sign bits: the `#probe` index's clusters carrying
-    * 1-bit rows, written partitionBy(cluster) — a query reads
-    * nprobe/nlist of the files AND each row is 1/32 width.
-    */
-  private def ivfBqBits(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(s"$dir#ivfbq", {
-      val (_, stored, _) = ivfStored(s, dir)
-      val path = java.nio.file.Files.createTempDirectory("graft-ivfbq-bits").toString
-      graft.ops.Quant.packSignColumn(stored, "vector", "v1")
-        .select("id", "v1_bits", "cluster")
-        .write.mode("overwrite").partitionBy("cluster").parquet(path)
-      s.read.parquet(path)
-    })
-
-  /** Stored Matryoshka prefix (first 16 dims) for the corpus of `dir` —
-    * the MRL serving artifact: the candidate stage reads 1/4 of the
-    * vector bytes.
-    */
-  private def storedPrefix(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(s"$dir#mrl",
-      hom(s, dir).select(col("id"),
-        slice(col("vector"), 1, 16).as("v16"))
-        .localCheckpoint())
-
-  /** Multitenant layout for the corpus of `dir`: the collection written
-    * `partitionBy(tenant)` ONCE (tenant = "t" + payload label — prefixed
-    * so partition-value inference keeps the column a string), read back
-    * so tenant predicates prune statically ([[graft.ops.Tenant]]).
-    */
-  private def tenantStore(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(s"$dir#tenant", {
-      val path = java.nio.file.Files.createTempDirectory("graft-tenant").toString
-      graft.ops.Tenant.writeLayout(
-        hom(s, dir).select(col("id"), col("vector"),
-          concat(lit("t"), json_get_int(col("payload"), "label")).as("tenant")),
-        "tenant", path)
-      graft.ops.Tenant.readLayout(s, path)
-    })
-
-  /** Stored LSH signatures for the corpus of `dir`: (id, vector, bucket)
-    * with the 16-bit hyperplane signature computed ONCE at ingest — the
-    * LSH analog of [[storedCodes]] (in production this is a signature
-    * column in the corpus table, bucketed by band key). The serving path
-    * ([[graft.ops.Ann.searchLshStored]]) then never evaluates a
-    * hyperplane dot product over the corpus.
-    */
-  private def storedLshSignatures(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(s"$dir#lsh", {
-      val corpus = hom(s, dir).select(col("id"), col("vector"))
-      val dim = corpus.select(size(col("vector"))).head().getInt(0)
-      graft.ops.Ann.lshBuckets(corpus, "vector", dim, nbits = 16)
-        .localCheckpoint()
-    })
-
-  /** Stored k-NN graph adjacency of `dir`'s collection (top-8 LSH-proposed
-    * neighbors per node by exact cosine) — the graph-ANN serving artifact,
-    * built once per dir like the IVF layouts.
-    */
-  private val knnGraphCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private def knnGraph(s: SparkSession, dir: String): DataFrame =
-    knnGraphCache.getOrElseUpdate(dir,
-      graft.ops.Ann.buildKnnGraph(
-        storedLshSignatures(s, dir).select("id", "vector"), "id", "vector",
-        dim = 64, m = 8).localCheckpoint())
-
-  /** The NN-DESCENT-refined adjacency (one neighbors-of-neighbors round
-    * over [[knnGraph]]'s LSH seed): recovers edges band collisions never
-    * proposed, lifting the graph arm's recall ceiling at the same serve
-    * cost. Built once per dir like the seed.
-    */
-  private def knnDescentGraph(s: SparkSession, dir: String): DataFrame =
-    knnGraphCache.getOrElseUpdate(s"$dir#descent",
-      graft.ops.Ann.nnDescent(knnGraph(s, dir),
-        storedLshSignatures(s, dir).select("id", "vector"), "id", "vector",
-        m = 8, rounds = 1).localCheckpoint())
-
-  /** The insertion-order per-segment HNSW edge table of `dir`'s
-    * collection minus the gate's query point — built once per dir
-    * (offline, like IVF/NB models; the gate measures the serve).
-    */
-  private def hnswInsertEdges(s: SparkSession, dir: String): DataFrame =
-    knnGraphCache.getOrElseUpdate(s"$dir#hnswinsert",
-      graft.ops.Ann.buildHnsw(
-        homD(s, dir).select("id", "vector").filter(col("id") =!= "7"),
-        "id", "vector", m = 8, efConstruction = 64,
-        numSegments = 4).localCheckpoint())
-
-  /** The HNSW-style sampled upper layer of `dir`'s collection (256 seeded
-    * ids) and its exact top-4 adjacency (model-sized layer: all-pairs is
-    * the right build there — a corpus-layer uses the banded builder) — the greedy-entry artifacts,
-    * built once per dir like the base graph.
-    */
-  private def hnswSample(s: SparkSession, dir: String): DataFrame =
-    knnGraphCache.getOrElseUpdate(s"$dir#hnswsample",
-      graft.ops.Ann.entryLayer(hom(s, dir).select(col("id"), col("vector")),
-        "id", "vector", sampleN = 256).localCheckpoint())
-
-  private def hnswUpperAdj(s: SparkSession, dir: String): DataFrame =
-    knnGraphCache.getOrElseUpdate(s"$dir#hnswupper",
-      graft.ops.Ann.exactKnnGraph(hnswSample(s, dir), "id", "v", m = 4)
-        .localCheckpoint())
-
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[String, (graft.ops.Pq.PqModel, DataFrame)]
-
-  /** IVF-PQ codes store: the [[pqStore]] codes tagged with the `#probe`
-    * index's coarse cluster and written `partitionBy("cluster")` — the
-    * production IVF-PQ layout where a query reads nprobe/nlist of the
-    * files AND each file holds m-byte codes instead of vectors.
-    */
-  private def ivfPqStore(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(s"$dir#ivfpq", {
-      val (model, _) = pqStore(s, dir)
-      val idx = ivfCache.getOrElseUpdate(s"$dir#probe",
-        graft.ops.Ann.buildIvf(homD(s, dir), "id", "vector", nlist = 8, maxIter = 0))
-      val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-codes").toString
-      graft.ops.Pq.encode(idx.clustered, "vector", model)
-        .select("id", "pcode", "cluster")
-        .write.mode("overwrite").partitionBy("cluster").parquet(path)
-      s.read.parquet(path)
-    })
-
-  /** Residual IVF-PQ store: codebooks fit on (vector - coarse centroid)
-    * residuals — the textbook IVF-PQ form — codes written
-    * `partitionBy("cluster")` like [[ivfPqStore]]. Same pruned cost
-    * shape, less quantization error per code byte (BASELINE.md recall).
-    */
-  private def ivfPqResidualStore(s: SparkSession, dir: String): (graft.ops.Pq.PqModel, DataFrame) =
-    pqCache.getOrElseUpdate(s"$dir#res", {
-      val idx = ivfCache.getOrElseUpdate(s"$dir#probe",
-        graft.ops.Ann.buildIvf(homD(s, dir), "id", "vector", nlist = 8, maxIter = 0))
-      val res = graft.ops.Pq.residuals(idx.clustered, idx.centroids, "vector")
-        .select(col("id"), col("cluster"), col("__res"))
-      val dim = res.select(size(col("__res"))).head().getInt(0)
-      val model = graft.ops.Pq.fit(res, "id", "__res", dim,
-        m = 4, ksub = 16, maxIter = 1, seed = 42L)
-      val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-res").toString
-      graft.ops.Pq.encode(res, "__res", model)
-        .select("id", "pcode", "cluster")
-        .write.mode("overwrite").partitionBy("cluster").parquet(path)
-      (model, s.read.parquet(path))
-    })
-
-  private val textIdxCache =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, Long, Double)]
-
-  /** Stored inverted index over the documents corpus of `dir`: postings
-    * written `partitionBy("tb")` ONCE (term-bucket hash partitions — the
-    * production retrieval layout) plus the two corpus stats captured at
-    * ingest. Queries partition-prune to their terms' buckets
-    * ([[graft.ops.TextIndex.searchPostings]]).
-    */
-  private def textIndexStore(s: SparkSession, dir: String): (DataFrame, Long, Double) =
-    textIdxCache.getOrElseUpdate(dir, {
-      val d = docs(s, dir)
-      val path = java.nio.file.Files.createTempDirectory("graft-text-index").toString
-      graft.ops.TextIndex.buildPostings(d, "doc_id", "text", nBuckets = 32)
-        .write.mode("overwrite").partitionBy("tb").parquet(path)
-      val (n, avglen) = graft.ops.TextIndex.corpusStats(d, "doc_id", "text")
-      (s.read.parquet(path), n, avglen)
-    })
-
-  /** The configured-tokenizer index of the documents corpus: same layout
-    * as [[textIndexStore]] but built under an explicit
-    * [[graft.ops.TextIndex.TokenizerConfig]] (the backend's
-    * `TextIndexParams` — tokenizer type, lowercase, token length bounds,
-    * stopwords). The config only changes the map-side token lambda;
-    * every downstream shape (partitionBy(tb), pruning, BM25 serving) is
-    * shared with the default index.
-    */
-  private[graft] val textCfg = graft.ops.TextIndex.TokenizerConfig(
-    tokenizer = "word", lowercase = true,
-    minTokenLen = 4, maxTokenLen = 6,
-    stopwords = Seq("table", "value"))
-
-  private[graft] def textIndexCfgStore(s: SparkSession, dir: String): (DataFrame, Long, Double) =
-    textIdxCache.getOrElseUpdate(s"$dir#cfg", {
-      val d = docs(s, dir)
-      val path = java.nio.file.Files.createTempDirectory("graft-text-index-cfg").toString
-      graft.ops.TextIndex.buildPostings(d, "doc_id", "text", nBuckets = 32, cfg = textCfg)
-        .write.mode("overwrite").partitionBy("tb").parquet(path)
-      val (n, avglen) = graft.ops.TextIndex.corpusStats(d, "doc_id", "text", cfg = textCfg)
-      (s.read.parquet(path), n, avglen)
-    })
-
-  /** The PREFIX index of the documents corpus: word tokens expanded to
-    * their length-3..5 prefixes at ingest, so a prefix query is an EXACT
-    * term lookup — partition-pruned by term bucket like every other
-    * index read; no LIKE scan exists at query time.
-    */
-  private[graft] val prefixCfg = graft.ops.TextIndex.TokenizerConfig(
-    tokenizer = "prefix", lowercase = true,
-    minTokenLen = 3, maxTokenLen = 5)
-
-  private[graft] def textPrefixStore(s: SparkSession, dir: String): DataFrame =
-    textIdxCache.getOrElseUpdate(s"$dir#prefix", {
-      val d = docs(s, dir)
-      val path = java.nio.file.Files.createTempDirectory("graft-text-index-prefix").toString
-      graft.ops.TextIndex.buildPostings(d, "doc_id", "text", nBuckets = 32, cfg = prefixCfg)
-        .write.mode("overwrite").partitionBy("tb").parquet(path)
-      (s.read.parquet(path), 0L, 0.0)
-    })._1
-
-  /** Inverted SPARSE index of the embeddings corpus of `dir`: dimension
-    * postings ([[graft.ops.SparseIndex.buildPostings]]) written
-    * `partitionBy("db")` once at ingest — the Qdrant sparse-index analog
-    * of [[textIndexStore]]. Serving prunes to the query's dim buckets.
-    */
-  private def sparseIndexStore(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(s"$dir#sparseidx", {
-      val e = Tables.load(s, dir, "embeddings")
-      val (ki, kv) = sparseOf(col("embedding"))
-      val base = e.select(col("vec_id").cast(StringType).as("id"),
-        ki.as("ki"), kv.as("kv"))
-      val path = java.nio.file.Files.createTempDirectory("graft-sparse-idx").toString
-      graft.ops.SparseIndex.buildPostings(base, "id", "ki", "kv", nBuckets = 16)
-        .write.mode("overwrite").partitionBy("db").parquet(path)
-      s.read.parquet(path)
-    })
-
-  /** The recall-eval query sample of `dir` (deterministic: every 50th
-    * vec_id at remainder 5), and its EXACT top-10 ground truth
-    * materialized once offline — [[graft.ops.Ann.recallTruth]] is the
-    * one inherently O(|queries| x |corpus|) stage of the eval, so it
-    * lives beside the IVF/BPE/LM artifacts, not inside the gate.
-    */
-  private val recallTruthCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private[graft] def recallQueries(s: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
-    Tables.load(s, dir, "embeddings")
-      .filter(col("vec_id") % 50 === 5)
-      .select(col("vec_id"), dvec(col("embedding"))).collect()
-      .map(r => r.getAs[Number](0).intValue() -> r.getSeq[Double](1)).toSeq
-      .sortBy(_._1)
-
-  private[graft] def recallTruthStore(s: SparkSession, dir: String): DataFrame =
-    recallTruthCache.getOrElseUpdate(dir,
-      graft.ops.Ann.recallTruth(homD(s, dir), "id", "vector",
-        recallQueries(s, dir), k = 10).localCheckpoint())
-
-  /** Stored PQ model + codes table for the corpus of `dir`: 4 subspaces
-    * x 16-centroid codebooks trained by the shared seeded Lloyd's, codes
-    * (id, pcode) materialized ONCE at ingest — at dim=64 the codes table
-    * is 4 bytes of quantized payload per row vs 256 for the float vector.
-    * The PQ analog of [[storedCodes]]; [[graft.ops.Pq.searchPqStored]]
-    * serves from it without touching the full-precision column until the
-    * rerank.
-    */
-  private def pqStore(s: SparkSession, dir: String): (graft.ops.Pq.PqModel, DataFrame) =
-    pqCache.getOrElseUpdate(dir, {
-      val corpus = homD(s, dir).select("id", "vector")
-      val dim = corpus.select(size(col("vector"))).head().getInt(0)
-      val model = graft.ops.Pq.fit(corpus, "id", "vector", dim,
-        m = 4, ksub = 16, maxIter = 1, seed = 42L)
-      val codes = graft.ops.Pq.encode(corpus, "vector", model)
-        .select("id", "pcode").localCheckpoint()
-      (model, codes)
-    })
-
-  /** Per-band LSH index of the corpus of `dir`: the [[graft.ops.Ann
-    * .lshBandIndex]] layout written `partitionBy("band", "bandkey")` to
-    * parquet ONCE (the production multi-hash-table serving layout; an
-    * offline ingest artifact like the clustered IVF store). Queries
-    * partition-prune to their own `bands` keys.
-    */
-  private def lshBandStore(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(s"$dir#lshband", {
-      val path = java.nio.file.Files.createTempDirectory("graft-lsh-band").toString
-      graft.ops.Ann.lshBandIndex(
-          storedLshSignatures(s, dir).select("id", "bucket"), "id", nbits = 16)
-        .write.mode("overwrite").partitionBy("band", "bandkey").parquet(path)
-      s.read.parquet(path)
-    })
-
-  /** Verified near-dup pair frame at PRODUCTION band sizing (nbits=64 /
-    * bands=4, the Dedup.scala sizing contract). Pair MINING is an offline
-    * batch stage of the dedup pipeline — it runs once per ingest, and its
-    * consumers (contrastive pair-gen, cluster labeling) read its output —
-    * so this is cached like the IVF/PQ/quantization artifacts and the
-    * gates measure the consuming path, not a per-query re-mine.
-    */
-  /** Near-dup CLUSTER labels at gate sizing, cached: cluster labeling is
-    * an offline batch stage of the dedup pipeline (its cost is the
-    * measured point of the dedup_clusters gate); consumers — leakage-safe
-    * split assignment here — read its output, like contrastive pair-gen
-    * reads [[lshPairStore]].
-    */
-  private def clusterStore(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(s"$dir#clusters",
-      Dedup.dedupClusters(docsWithNearDups(s, dir), "doc_id", "text",
-          Seq("lang", "source"), threshold = 0.8)
-        .select(col("id").as("doc_id"), col("component")).localCheckpoint())
-
-  /** The SCALE-TRUE cluster labels (MinHash-LSH pairs -> CC), cached like
-    * [[clusterStore]]; the raw labeling cost stays measured by the
-    * dedup_clusters_minhash gate — every other consumer (survivor
-    * selection here) reads the artifact, the production shape.
-    */
-  private def minhashClusterStore(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(s"$dir#mclusters",
-      Dedup.dedupClustersMinhash(docsWithNearDups(s, dir), "doc_id", "text",
-          threshold = 0.8).localCheckpoint())
-
-  private def lshPairStore(s: SparkSession, dir: String): DataFrame =
-    quantCache.getOrElseUpdate(s"$dir#lshpairs64",
-      Dedup.embeddingNearDupLsh(embWithNearDups(s, dir), "vec_id", "v",
-        threshold = 0.999, nbits = 64, bands = 4).localCheckpoint())
-
-  /** Pre-build offline artifacts (the IVF index, the stored int8 codes)
-    * for `dir`. Index construction and ingest-time quantization are
-    * offline batch jobs in production — the reference's backend likewise
-    * builds its HNSW index out-of-band — so Bench warmup calls this and
-    * the ann_ivf / quantized_search numbers measure the serving path.
-    */
-  def warmOffline(s: SparkSession, dir: String): Unit = {
-    ivfCache.getOrElseUpdate(dir,
-      graft.ops.Ann.buildIvf(homD(s, dir), "id", "vector", nlist = 8, maxIter = 5))
-    ivfCache.getOrElseUpdate(s"$dir#probe",
-      graft.ops.Ann.buildIvf(homD(s, dir), "id", "vector", nlist = 8, maxIter = 0))
-    storedCodes(s, dir)
-    storedLshSignatures(s, dir)
-    hnswInsertEdges(s, dir)
-    ivfStored(s, dir)
-    lshBandStore(s, dir)
-    pqStore(s, dir)
-    ivfPqStore(s, dir)
-    ivfPqResidualStore(s, dir)
-    textIndexStore(s, dir)
-    textIndexCfgStore(s, dir)
-    textPrefixStore(s, dir)
-    payloadIndex(s, dir)
-    geoStore(s, dir)
-    calibratedStore(s, dir)
-    lshPairStore(s, dir)
-    sparseIndexStore(s, dir)
-    nbModel(s, dir)
-    clusterStore(s, dir)
-    minhashClusterStore(s, dir)
-    bigramLm(s, dir)
-    recallTruthStore(s, dir)
-    ()
-  }
+  /** Pre-build the offline artifacts of `dir` (see [[Fixtures.warmOffline]]). */
+  def warmOffline(s: SparkSession, dir: String): Unit = Fixtures.warmOffline(s, dir)
 
   /** Flagship query on /root/testdata/sf0.001 (the reference's README
     * headline shape, /root/reference/README.md:67-72): scan the collection,
@@ -2456,9727 +52,4 @@ object SparkEntry {
     Collections.homogeneous(spark, "/root/testdata/sf0.001")
       .select(col("id"), col("payload"), col("vector"))
       .limit(10)
-
-  // -- helpers --------------------------------------------------------------
-
-  private def hom(s: SparkSession, dir: String): DataFrame =
-    Collections.homogeneous(s, dir)
-
-  /** READ-ONLY event-payload fixtures of `dir` (datetime + the two geo
-    * shapes), built once per dir and shared by their gates: the gates
-    * measure the pushed filter SERVE — rebuilding a corpus-sized
-    * in-memory store per invocation would charge the fixture, not the
-    * filter, to the bench.
-    */
-  private val eventsFixtureCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.sources.InMemoryCollectionStore]
-
-  private def eventsPayloadStore(s: SparkSession, dir: String, kind: String,
-                                 payload: => Column): graft.sources.InMemoryCollectionStore =
-    eventsFixtureCache.getOrElseUpdate(s"$dir#$kind", {
-      val dsc = graft.collections.CollectionDescriptor("events", Seq())
-      val src = events(s, dir).select(
-        col("event_id").cast(StringType).as("id"), payload.as("payload"))
-      graft.sources.InMemoryCollectionStore.fromRows(src, "events", dsc)
-    })
-
-  private def eventsDtStore(s: SparkSession, dir: String): graft.sources.InMemoryCollectionStore =
-    eventsPayloadStore(s, dir, "dt", to_json(struct(
-      date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("created"),
-      col("event_type"))))
-
-  private def eventsGeoStore(s: SparkSession, dir: String): graft.sources.InMemoryCollectionStore =
-    eventsPayloadStore(s, dir, "geo", to_json(struct(
-      struct(
-        (col("user_id") % 90).cast(DoubleType).as("lat"),
-        (col("event_id") % 180).cast(DoubleType).as("lon")).as("loc"),
-      col("event_type"))))
-
-  private def eventsPolyStore(s: SparkSession, dir: String): graft.sources.InMemoryCollectionStore =
-    eventsPayloadStore(s, dir, "poly", to_json(struct(
-      struct(
-        col("user_id").cast(DoubleType).as("lat"),
-        (col("event_id") % 180).cast(DoubleType).as("lon")).as("loc"),
-      col("event_type"))))
-
-  private def dvec(c: Column): Column = c.cast(ArrayType(DoubleType))
-
-  /** Rendezvous shard for n=3 as a Column — the seeding-side twin of
-    * [[graft.sources.ShardedCollectionStore.assignShard]] (md5 argmax,
-    * earlier index wins ties; pinned bit-identical to the scalar form
-    * via Pipeline.rendezvousAssign in ShardedCollectionStoreSpec).
-    */
-  private def shardOf3(id: Column): Column = {
-    val hs = (0 to 2).map(i => md5(concat(id.cast("string"), lit(s"#$i"))))
-    when(hs(0) >= hs(1) && hs(0) >= hs(2), 0)
-      .when(hs(1) >= hs(2), 1).otherwise(2)
-  }
-
-  /** Rendezvous shard for n=2 as a Column (same md5-argmax law). */
-  private def shardOf2(id: Column): Column = {
-    val h0 = md5(concat(id.cast("string"), lit("#0")))
-    val h1 = md5(concat(id.cast("string"), lit("#1")))
-    when(h0 >= h1, 0).otherwise(1)
-  }
-
-  /** homogeneous collection with vector pre-cast to array<double>. */
-  private def homD(s: SparkSession, dir: String): DataFrame =
-    hom(s, dir).withColumn("vector", dvec(col("vector")))
-
-  private def events(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "events")
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 4))
-
-  /** Shared base+reagg execution of the OLAP grouping gates (rollup /
-    * cube / grouping-sets over (l_returnflag, l_linestatus)): aggregate
-    * the corpus ONCE at the finest grouping, then derive each requested
-    * super-aggregate from the group-count-sized base — decimal sums of
-    * decimal sums and long sums of counts are exact, so the rows are
-    * value-identical to the Expand plan that pushes every raw row
-    * through the partial aggregate once per grouping set. `gids` picks
-    * the grouping sets by their grouping_id (flag = high bit).
-    */
-  private def olapReagg(li: DataFrame, gids: Seq[Long]): DataFrame = {
-    // The base is materialized ONCE (eager localCheckpoint of the
-    // group-count-sized aggregate) so the one-corpus-scan guarantee
-    // holds structurally: the union's branches each re-plan the base
-    // subtree, and without the checkpoint the single scan depends
-    // entirely on AQE runtime exchange reuse (r18's after-plan showed 4
-    // scan+partial-agg subtrees and no ReusedExchange — the corpus
-    // could be scanned per branch, worse than Expand at scale). The
-    // checkpointed frame is a handful of rows at ANY corpus size.
-    val base = li.groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(sum(dec(col("l_quantity"))).as("__s"), count(lit(1)).as("__n"))
-      .localCheckpoint()
-    val nullStr = lit(null).cast(StringType)
-    def branch(gid: Long): DataFrame = gid match {
-      case 0L => base.select(col("l_returnflag"), col("l_linestatus"),
-        col("__s").cast(DoubleType).as("sum_qty"), col("__n").as("n"),
-        lit(0L).as("gid"))
-      case 1L => base.groupBy(col("l_returnflag"))
-        .agg(sum(col("__s")).cast(DoubleType).as("sum_qty"),
-          sum(col("__n")).as("n"))
-        .select(col("l_returnflag"), nullStr.as("l_linestatus"),
-          col("sum_qty"), col("n"), lit(1L).as("gid"))
-      case 2L => base.groupBy(col("l_linestatus"))
-        .agg(sum(col("__s")).cast(DoubleType).as("sum_qty"),
-          sum(col("__n")).as("n"))
-        .select(nullStr.as("l_returnflag"), col("l_linestatus"),
-          col("sum_qty"), col("n"), lit(2L).as("gid"))
-      case _ => base
-        .agg(sum(col("__s")).cast(DoubleType).as("sum_qty"),
-          // empty-input edge: COUNT over the () set is 0, never NULL
-          coalesce(sum(col("__n")), lit(0L)).as("n"))
-        .select(nullStr.as("l_returnflag"), nullStr.as("l_linestatus"),
-          col("sum_qty"), col("n"), lit(3L).as("gid"))
-    }
-    gids.map(branch).reduce(_ union _)
-  }
-
-  /** Shared polygon of the geo_polygon gate: (lat, lon) vertices, chosen
-    * off the integer data grid so no point sits on an edge. ONE list
-    * feeds both the engine predicate and the generated oracle SQL.
-    */
-  private val GeoPoly: Seq[(Double, Double)] = Seq(
-    (10.5, 20.5), (80.5, 10.5), (140.5, 60.5), (90.5, 170.5), (20.5, 120.5))
-
-  /** Vector rendered as a comma-joined string of round(x*1e6) integers.
-    * The driver's compare hashes scalar cells (array cells break its sort),
-    * so queries that OUTPUT a vector serialize it; `floor(x*1e6 + 0.5)` is
-    * pure IEEE arithmetic — bit-identical in Spark and DuckDB, unlike
-    * engine-native float→string formatting. NULL array -> NULL string.
-    */
-  private def vq6(c: Column): Column =
-    array_join(transform(dvec(c),
-      x => floor(x * lit(1e6) + lit(0.5)).cast(StringType)), ",")
-
-  /** Same stringification for an integral array. */
-  private def iarr(c: Column): Column =
-    array_join(transform(c, _.cast(StringType)), ",")
-
-  /** 1-row broadcastable query-vector frame (array<double>) for `queryId`. */
-  private def qvecOf(df: DataFrame, queryId: String, as: String = "__qvec"): DataFrame =
-    df.filter(col("id") === lit(queryId)).select(col("vector").as(as))
-
-  /** Literal example vectors for the V_RECOMMEND vector-literal gate
-    * (tests.sql:97-105): deterministic 64-dim doubles shared by the Spark
-    * query and the oracle (embedded as shortest-round-trip literals, which
-    * DuckDB parses back to identical IEEE values — the lshSql technique).
-    */
-  private val recLitPos: Seq[IndexedSeq[Double]] = Seq(
-    IndexedSeq.tabulate(64)(i => math.sin(i + 1.0)),
-    IndexedSeq.tabulate(64)(i => math.cos(i + 1.0) * 0.5))
-  private val recLitNeg: Seq[IndexedSeq[Double]] = Seq(
-    IndexedSeq.tabulate(64)(i => math.sin(2.0 * i + 1.0) * 0.25))
-
-  private def duckVecLit(v: Seq[Double]): String =
-    v.map(x => java.lang.Double.toString(x).replace("E", "e"))
-      .mkString("[", ", ", "]") + "::DOUBLE[]"
-
-  /** Documents corpus with planted exact duplicates (doc_id % 10 == 0
-    * re-appears as doc_id + 1000000) — both engines build it identically.
-    */
-  private def docsWithExactDups(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"))
-    d.union(d.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-  }
-
-  /** Documents corpus with planted NEAR duplicates (doc_id % 7 == 0
-    * re-appears as doc_id + 1000000 with ' zzz' appended).
-    */
-  private def docsWithNearDups(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"), col("lang"), col("source"))
-    d.union(d.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 1000000).as("doc_id"),
-        concat(col("text"), lit(" zzz")).as("text"), col("lang"), col("source")))
-  }
-
-  /** The boilerplate line planted for the line-dedup gate (appended to
-    * doc_id % 4 == 0 in BOTH engines).
-    */
-  private val BoilerLine = "subscribe to our newsletter for daily updates"
-
-  /** The 9-token phrase planted for the span-dedup gates (appended to
-    * doc_id % 4 == 0 of the exact-dup corpus in BOTH engines): gives the
-    * substring-level dedup a cross-document duplicated REGION that is not
-    * a whole-document duplicate.
-    */
-  private val SharedPhrase = "the quick brown fox jumps over the lazy dog"
-
-  /** Exact-dup corpus with [[SharedPhrase]] appended to doc_id % 4 == 0 —
-    * the span-dedup test shape: full-document duplicate spans (from the
-    * planted exact dups) plus a short shared tail phrase across unrelated
-    * docs. 1000000 % 4 == 0, so a planted duplicate carries the phrase iff
-    * its original does — in both engines.
-    */
-  private def docsWithSharedPhrase(s: SparkSession, dir: String): DataFrame =
-    docsWithExactDups(s, dir).select(col("doc_id"),
-      when(col("doc_id") % 4 === 0, concat(col("text"), lit(" " + SharedPhrase)))
-        .otherwise(col("text")).as("text"))
-
-  /** Documents corpus with planted TYPO variants (doc_id % 7 == 0
-    * re-appears as doc_id + 2000000 with the 11th character replaced by
-    * '~') — edit distance 1 from the original, same lang/source/prefix
-    * block; built identically in both engines.
-    */
-  private def docsWithTypos(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"), col("lang"), col("source"))
-    d.union(d.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 2000000).as("doc_id"),
-        concat(substring(col("text"), 1, 10), lit("~"),
-          expr("substring(text, 12)")).as("text"),
-        col("lang"), col("source")))
-  }
-
-  /** Target mixture for the mix_sources gate — 8 of the 20 sources with
-    * deliberately skewed weights (the rest drop out).
-    */
-  private val MixTargets: Seq[(String, Double)] = Seq(
-    "src0" -> 0.30, "src1" -> 0.25, "src2" -> 0.15, "src3" -> 0.10,
-    "src4" -> 0.10, "src5" -> 0.05, "src6" -> 0.03, "src7" -> 0.02)
-
-  /** Documents re-rendered with a deterministic LINE structure (8-token
-    * lines joined by newline; same arithmetic in the DuckDB mirror) over
-    * the exact-dup corpus, plus [[BoilerLine]] appended to doc_id % 4 == 0
-    * — the line-level-dedup test shape: whole-doc duplicates AND a
-    * boilerplate line repeated across unrelated docs.
-    */
-  private def lineStructuredDocs(s: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(col("text"), " "), t => length(t) > 0)
-    val nLines = greatest(ceil(size(toks) / lit(8.0)).cast(IntegerType), lit(1))
-    val lines = transform(sequence(lit(0), nLines - 1),
-      g => array_join(slice(toks, g * lit(8) + lit(1), lit(8)), " "))
-    docsWithExactDups(s, dir)
-      .select(col("doc_id"), array_join(lines, "\n").as("__t"))
-      .select(col("doc_id"),
-        when(col("doc_id") % 4 === 0,
-          concat(col("__t"), lit("\n" + BoilerLine))).otherwise(col("__t")).as("text"))
-  }
-
-  /** [[lineStructuredDocs]] DECORATED for the line-rules gates: '- '
-    * bullets on even lines of doc_id % 5 == 0, '...' endings on every 4th
-    * line of doc_id % 3 == 0, and the (decorated) first line re-appended
-    * for doc_id % 6 == 0 — a planted within-doc duplicate. Same
-    * arithmetic in the DuckDB mirror (DuckMirror.decoratedLineCtes).
-    */
-  private def decoratedLineDocs(s: SparkSession, dir: String): DataFrame = {
-    val dec = transform(split(col("text"), "\n"), (l, i) => concat(
-      when(col("doc_id") % 5 === 0 && i % 2 === 0,
-        concat(lit("- "), l)).otherwise(l),
-      when(col("doc_id") % 3 === 0 && i % 4 === 0,
-        lit("...")).otherwise(lit(""))))
-    lineStructuredDocs(s, dir)
-      .select(col("doc_id"), array_join(dec, "\n").as("__t"))
-      .select(col("doc_id"),
-        when(col("doc_id") % 6 === 0,
-          concat(col("__t"), lit("\n"), element_at(split(col("__t"), "\n"), 1)))
-          .otherwise(col("__t")).as("text"))
-  }
-
-  /** Embeddings corpus (double vectors) with planted near-duplicate vectors
-    * (vec_id % 5 == 0 re-appears as vec_id + 100000, scaled by 0.99).
-    */
-  private def embWithNearDups(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), col("label"), dvec(col("embedding")).as("v"))
-    e.union(e.filter(col("vec_id") % 5 === 0)
-      .select((col("vec_id") + 100000).as("vec_id"), col("label"),
-        transform(col("v"), x => x * lit(0.99)).as("v")))
-  }
-
-  /** (indices, values) sparse representation of the strictly-positive
-    * positions of an array<float> embedding (0-based ascending indices).
-    */
-  private def sparseOf(emb: Column): (Column, Column) = {
-    val s = filter(transform(emb, (x, i) => struct(i.as("i"), x.as("x"))),
-      e => e("x") > lit(0f))
-    (transform(s, e => e("i").cast(IntegerType)),
-      transform(s, e => e("x").cast(DoubleType)))
-  }
-
-  // -- the operator surface -------------------------------------------------
-
-  /** §2.A scan/projection/limit + §1.2 schema semantics + §2.D JSON. */
-  private val scanAndJson: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "scan_select_star" -> ((s, dir) =>
-      hom(s, dir).select(col("id"), col("payload"),
-        vq6(col("vector")).as("vector_q6"))),
-
-    "scan_projection" -> ((s, dir) =>
-      hom(s, dir).select(col("id"), col("payload"))),
-
-    // A12 sink (todo!() in the reference): write the collection out, read
-    // it back, project — the oracle (plain scan SQL over the SOURCE) only
-    // matches if the round trip preserved every row and type
-    "sink_roundtrip" -> ((s, dir) => {
-      val path = s"/tmp/graft_sink_${new java.io.File(dir).getName}"
-      Collections.writeCollection(hom(s, dir), path)
-      Collections.readCollection(s, path).select(col("id"), col("payload"))
-    }),
-
-    "scan_limit" -> ((s, dir) =>
-      hom(s, dir).select(col("id"), vq6(col("vector")).as("vector_q6"))
-        .orderBy(col("id").cast(LongType)).limit(5)),
-
-    "hetero_nulls" -> ((s, dir) =>
-      Collections.heterogeneous(s, dir).select(
-        col("id"),
-        col("payload"),
-        vq6(col("text_embedding")).as("text_embedding_q6"),
-        vq6(col("audio_embedding")).as("audio_embedding_q6"),
-        iarr(col("keywords_indices")).as("keywords_indices_s"),
-        vq6(col("keywords_values")).as("keywords_values_q6"))),
-
-    // one json_tuple parse feeds both typed extractions (json_get_* remain
-    // the generic per-path API); no output sort — the gate sorts rows
-    // A7 multi-vector normalization (reference deserialize.rs:41-58): a
-    // flat embedding splits into `count` equal sub-vectors; serialized per
-    // sub-vector for the scalar-cell gate
-    "multi_vector" -> ((s, dir) =>
-      hom(s, dir)
-        .select(col("id"),
-          multi_vector_from_flat(dvec(col("vector")), lit(4)).as("__mv"))
-        .select(col("id"),
-          size(col("__mv")).as("n_sub"),
-          array_join(transform(col("__mv"),
-            sv => array_join(transform(sv,
-              x => floor(x * lit(1e6) + lit(0.5)).cast(StringType)), ",")), ";")
-            .as("mv_q6"))),
-
-    "json_get" -> ((s, dir) =>
-      events(s, dir).select(col("event_id"), json_tuple(col("props"), "k").as("__k"))
-        .select(
-          col("event_id"),
-          col("__k").as("k_str"),
-          col("__k").cast(LongType).as("k_int"))),
-
-    "json_filter_agg" -> ((s, dir) =>
-      events(s, dir)
-        .filter(json_get_int(col("props"), "k") > 50)
-        .groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(dec(col("value"))).cast(StringType).as("sum_value"))),
-
-    "has_field" -> ((s, dir) =>
-      events(s, dir)
-        .select(col("event_id"),
-          json_tuple(col("props"), "k", "missing").as(Seq("__k", "__m")))
-        .select(
-          col("event_id"),
-          col("__k").isNotNull.as("has_k"),
-          col("__m").isNotNull.as("has_missing"))),
-
-    // the backend filter DSL's full boolean surface in one predicate:
-    // must (AND) + min_should (at least 2 of 4 conditions) + must_not
-    // (AND NOT) — min_should compiles to a codegen'd integer sum, so the
-    // whole filter stays one map-side predicate over the scan
-    "min_should_filter" -> ((s, dir) =>
-      docs(s, dir)
-        .filter(col("n_chars") < lit(900) &&
-          graft.functions.min_should(2,
-            col("lang") === "en",
-            col("source").isin("src0", "src1"),
-            col("n_chars") > 200,
-            col("text").contains("vector")) &&
-          !(col("source") === "src5"))
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))),
-
-    // GROUP BY a JSON-extracted value with COUNT/MAX/AVG (tests.sql:233-242)
-    "json_group_agg" -> ((s, dir) =>
-      events(s, dir)
-        .withColumn("bucket", json_get_int(col("props"), "k") % 10)
-        .groupBy(col("bucket"))
-        .agg(
-          count(lit(1)).as("n"),
-          max(col("value")).as("max_value"),
-          round(sum(dec(col("value"))).cast(DoubleType) / count(lit(1)), 6).as("avg_value"))),
-
-    // json_object_keys + json_array_length surface (§2.D). ONE Jackson
-    // parse per row (from_json to map<string,string>) serves the key
-    // list, the object length, and the '$.k' value — the previous form
-    // parsed props 4x per row (json_object_keys + json_tuple + the
-    // json_length pair), r19 guide §expressions. Non-object props (none
-    // in the events data, but the declared semantics keep the dual
-    // json_length form) fall through to json_array_length.
-    "json_surface" -> ((s, dir) =>
-      events(s, dir)
-        .select(col("event_id"), col("props"),
-          from_json(col("props"),
-            MapType(StringType, StringType)).as("__m"))
-        .select(
-          col("event_id"),
-          array_join(map_keys(col("__m")), ",").as("ks"),
-          org.apache.spark.sql.functions.json_array_length(
-            concat(lit("["), col("__m").getItem("k"), lit(","),
-              col("__m").getItem("k"), lit("]"))).as("arr_len"),
-          // json_length's OBJECT form (reference json pack counts keys
-          // as well as array elements, udfs.rs:13-16)
-          when(col("__m").isNotNull, size(map_keys(col("__m"))))
-            .otherwise(org.apache.spark.sql.functions
-              .json_array_length(col("props"))).as("obj_len"))),
-
-    // the DSv2 connector end-to-end: ingest the embeddings collection into
-    // the (demo in-memory) collection store executor-side (fromRows — no
-    // driver collect of the frame), scan it back through the connector
-    // with a pruned projection, match the parquet oracle.
-    "dsv2_scan" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("entry_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "entry_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // the STREAMING write path end-to-end: the same corpus ingested as a
-    // bounded run (AvailableNow) of the continuous pipeline — file-stream
-    // source -> per-epoch atomic upsert commits into the store -> read
-    // back through the connector; must equal the batch-write oracle
-    "dsv2_stream_write" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("stream_store", InMemoryCollectionStore.single(
-        "embeddings", Collections.homogeneousDescriptor, IndexedSeq.empty))
-      val src = hom(s, dir).select("id", "payload", "vector")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-src").toString
-      src.write.mode("overwrite").parquet(tmp)
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-ckpt").toString
-      val q = s.readStream.schema(src.schema).parquet(tmp)
-        .writeStream.format("graft.sources.CollectionDataSource")
-        .option("store", "stream_store").option("collection", "embeddings")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "stream_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // vector search END-TO-END through the connector: the query scans the
-    // store (projection narrowed to id+vector by the FetchSpec), decodes
-    // float vectors executor-side, and ranks by the codegen cosine kernel
-    // — the only gate that value-checks vector DECODE through DSv2, not
-    // just id/payload round-trips
-    "dsv2_vector_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("vs_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 4)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "vs_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .filter(col("id") =!= "4")
-        .select(col("id"),
-          round(v_cosine(dvec(col("vector")), vec(q)), 6).as("score"))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    // TOP-K PUSHDOWN through the connector: the scan itself is the scored
-    // query (`search.*` read options -> CollectionSearchScan -> store
-    // .searchPoints) — the reference's architecture, where the ANN search
-    // executes inside the backend and the table returns scored points
-    // (/root/reference/src/table.rs:279-305). No full-collection decode
-    // happens above the scan; PlanSpec asserts the plan carries the query.
-    // the SECOND CollectionStore implementation behind the same
-    // connector: a cold parquet-backed collection (the store handle is a
-    // path + footers; executors read shared storage directly, nothing
-    // ships through the driver). Same oracle as dsv2_scan — swapping the
-    // backend under the seam must change nothing above it
-    "dsv2_parquet_store" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_store",
-        SparkEntry.parquetBackedStore(s, dir))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // pushed top-k THROUGH the parquet-backed store: the scan is a scored
-    // query served by the store's streaming-heap search over its own
-    // files (id + vector columns only — the requested schema never
-    // decodes payload bytes). Same oracle as dsv2_topk_pushdown
-    "dsv2_parquet_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_search_store",
-        SparkEntry.parquetBackedStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_search_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "12")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // IVF serving INSIDE the store: the scan pushes the top-k query
-    // through the CollectionStore seam and the parquet BACKEND answers it
-    // from its sidecar index — centroid probe (a model-sized store read)
-    // then a cluster-partition-pruned corpus read; the primary files are
-    // never opened (spec-asserted via the filesOpened counters). This is
-    // the reference's architecture end-to-end (scan = QueryPoints served
-    // from the backend's own index, /root/reference/src/table.rs:279-302)
-    // with the index ON SHARED STORAGE: at 100 TB a query reads
-    // nprobe/nlist of the corpus instead of all of it. Deterministic
-    // maxIter=0 chain, so the oracle value-checks the probed result.
-    "dsv2_parquet_ivf_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_ivf_store",
-        SparkEntry.parquetIvfStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_ivf_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the payload index as the ACCESS PATH, store-side: a filtered
-    // search whose must condition hits the indexed key (label, ~10% <
-    // the 20% full_scan_threshold dial) serves from the index's value
-    // partitions — exact top-k of the matching subset, NEITHER the
-    // primary corpus files NOR the IVF clusters touched (spec-asserted).
-    // The store now carries qdrant's two index families (vector +
-    // payload) and dispatches between pre-filter / probed / full-scan
-    // arms by the same cardinality rule as the engine-side Planner.
-    "dsv2_parquet_prefilter_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_ivf_store2",
-        SparkEntry.parquetIvfStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 11)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_ivf_store2").option("collection", "embeddings")
-        .option("filter", "label:eq:3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // MULTIPLE payload indexes planned against each other, store-side:
-    // qdrant keeps one payload index PER indexed field, so a filter
-    // touching two indexed keys is a planning choice. The store carries
-    // an int index on `label` and a keyword index on `parity`; the
-    // filter hits both; the cheaper arm by footer-estimated cardinality
-    // (label=3, ~9% of rows, under the 20% dial — parity=odd is 50%)
-    // becomes the access path and the parity condition re-evaluates
-    // residually inside its partitions. Exact filtered top-k, primary
-    // files untouched (spec-asserted) — the engine Planner's
-    // cardinality rule (ann_filtered_multi) now at the store seam.
-    "dsv2_parquet_multi_index" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_midx_store",
-        SparkEntry.parquetMultiIndexStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 13)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_midx_store").option("collection", "embeddings")
-        .option("filter", "label:eq:3;parity:eq:odd")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // INDEX FRESHNESS under COW mutations: the store was upserted (5 new
-    // label-3 points) and deleted from (label-3 ids with vec_id % 7 == 0)
-    // AFTER the payload index was built, with no rebuild. The pre-filter
-    // arm overlays the log tail recorded past the index's freshness
-    // point: deleted ids masked out of the value partitions (window
-    // widened so the post-mask page stays exact), the upserted points
-    // scored from the in-memory tail and merged — qdrant's
-    // unindexed-segment model over the lakehouse backend. The oracle is
-    // the plain post-mutation WHERE: freshness must be invisible.
-    "dsv2_parquet_fresh_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_fresh_store",
-        SparkEntry.parquetFreshStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 13)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_fresh_store").option("collection", "embeddings")
-        .option("filter", "label:eq:3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the OPTIMIZER closing the freshness loop: same mutations as
-    // dsv2_parquet_fresh_search in a twin dir, then
-    // ParquetCollectionStore.optimize rebuilds the label index from the
-    // COW-current primaries and re-seals it at the current log head —
-    // the reopened store serves the filtered search index-pruned again
-    // with an EMPTY overlay tail (spec-asserted: footer-only counts
-    // return, the upserted points now live in value partitions). Same
-    // oracle as the fresh gate: index, mutate, optimize — results
-    // identical at every stage of the lifecycle
-    "dsv2_parquet_optimized" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_opt_store",
-        SparkEntry.parquetOptimizedStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 13)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_opt_store").option("collection", "embeddings")
-        .option("filter", "label:eq:3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the OPTIMIZE VERB over the wire: the same mutated lakehouse dir
-    // behind a binary server, the client triggers the rebuild remotely
-    // (zero data crosses — the service reseals its own sidecars at its
-    // log head), then the filtered search serves index-pruned through
-    // the wire. Same oracle as dsv2_parquet_optimized: the lifecycle
-    // stage AND the transport must both be invisible
-    "dsv2_grpc_optimized" -> ((s, dir) => {
-      import graft.sources._
-      val (h, p) = SparkEntry.grpcOptimizedAddr(s, dir)
-      CollectionStores.register("grpc_opt_store",
-        new GrpcCollectionStore(h, p))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 13)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_opt_store").option("collection", "embeddings")
-        .option("filter", "label:eq:3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the INSERTION-ORDER HNSW served AT THE STORE SEAM: pushed cosine
-    // top-k walks each segment's resident graph (greedy descent +
-    // efSearch beam touch ~ef·m·levels vectors, never the corpus) and
-    // the per-segment pages merge — the reference backend's per-shard
-    // HNSW serving model on the lakehouse store. At the fixture's
-    // generous efSearch every segment recovers its true top-k, so the
-    // exact brute-force SQL oracles it (build fully seeded — stable)
-    "dsv2_parquet_hnsw_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_hnsw_store",
-        SparkEntry.parquetHnswStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 11)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_hnsw_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // FILTERED HNSW, the backend's filtrable-HNSW planner at the store
-    // seam (/root/reference/tests/bin/config.yaml:169-191 fronts exactly
-    // this index): the label condition resolves to an exact id set from
-    // the payload index's value partitions (id columns only), and the
-    // serve plans by COST — the ACCEPTING WALK (every node navigates,
-    // only matching ids enter the beam, ef widened by the inverse match
-    // fraction) only when the matched set exceeds the widened beam it
-    // would visit, the exact micro-path otherwise (at this fixture's
-    // generous ef the broad ~80% filter itself sits under the widened
-    // beam at sf0.01 and rides the walk at sf0.1 — both arms hold the
-    // same exact oracle). The count-only label index can't feed the
-    // pre-filter arm, so the graph serve owns the filter.
-    "dsv2_parquet_hnsw_filtered" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_hnswf_store",
-        SparkEntry.parquetHnswFilteredStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 11)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_hnswf_store").option("collection", "embeddings")
-        .option("filter", "label:lte:7")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // EUCLID served from the graph: the sidecar records its build
-    // metric, the serve matches queries to it, and the walk runs on
-    // negated-distance preference — the graph family is metric-complete
-    // like the IVF family. Ascending merge, exact at this ef
-    "dsv2_parquet_hnsw_euclid" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_hnswe_store",
-        SparkEntry.parquetHnswEuclidStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 5)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_hnswe_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "euclid").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the NARROW leg of the same planner: label=3 (~10%) is under the
-    // micro-path dial, so the matched ids score exactly from the
-    // segment partitions — the graph never walks (spec-asserted by
-    // counter) — qdrant's below-full-scan-threshold arm inside the
-    // HNSW serve
-    "dsv2_parquet_hnsw_filtered_narrow" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_hnswf_store",
-        SparkEntry.parquetHnswFilteredStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 13)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_hnswf_store").option("collection", "embeddings")
-        .option("filter", "label:eq:3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the QUANTIZED serving tier on the GRAPH family: the walk runs
-    // over the per-segment int8 codes (8x fewer resident bytes — the
-    // backend's quantized-in-RAM HNSW memory configuration), then an
-    // exact rescore of only the candidate margin recovers the
-    // full-precision page, so the plain brute oracle pins it.
-    // Spec asserts the full-precision vector cache never loads and the
-    // resident bytes shrink ~8x at equal results.
-    "dsv2_parquet_hnsw_quantized" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_hnswq_store",
-        SparkEntry.parquetHnswQuantStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 17)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_hnswq_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // INCREMENTAL HNSW MAINTENANCE: inserts, an update, and a delete
-    // applied AFTER the graph build all absorb into the per-segment
-    // graphs (inserts run the build's own insert loop; churn
-    // consolidates the touched segment — the backend's online HNSW
-    // maintenance; the fixture REQUIRES the watermark reached the log
-    // head), so this search runs post-churn with an EMPTY overlay
-    // tail: pure graph walk, no tail brute-rescore, ranking exactly
-    // where the brute oracle over the FINAL state puts it
-    "dsv2_parquet_hnsw_fresh" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_hnswfr_store",
-        SparkEntry.parquetHnswFreshStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 19)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_hnswfr_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // WIRE-SERVED ONLINE MAINTENANCE: the hnsw_fresh churn driven
-    // entirely through the REST client — remote upserts/deletes absorb
-    // into the SERVICE-side per-segment graphs (the fixture REQUIRES
-    // the watermark reached the log head), and this remote search
-    // serves graph-walked over the final state. The four maintained
-    // sidecar families hold through the wire seam, not just in-process.
-    "dsv2_rest_hnsw_fresh" -> ((s, dir) => {
-      import graft.sources._
-      val client = new RestCollectionStore(
-        SparkEntry.restHnswFreshUrl(s, dir))
-      CollectionStores.register("rest_hnswfresh_client", client)
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 19)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_hnswfresh_client")
-        .option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // INCREMENTAL IVF MAINTENANCE — the hnsw_fresh discipline on the
-    // OTHER ANN family: churn (inserts by nearest-centroid assignment,
-    // an update consolidating its old cluster, a tombstoned delete)
-    // absorbs into the cluster partitions (fixture REQUIRES the
-    // watermark reached the log head), and the post-churn probed serve
-    // at nprobe = nlist is exact over the final state
-    "dsv2_parquet_ivf_fresh" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_ivffr_store",
-        SparkEntry.parquetIvfFreshStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 29)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_ivffr_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // INCREMENTAL SPARSE MAINTENANCE: churn (inserts into their dim
-    // buckets, an update consolidating its old dims' buckets, a
-    // tombstoned delete) absorbs into the postings sidecar (fixture
-    // REQUIRES the watermark reached the log head), so this pushed
-    // sparse top-k serves bucket-pruned with an EMPTY overlay tail —
-    // exact vs the brute sparse-dot oracle over the FINAL state
-    "dsv2_parquet_sparse_fresh" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_spfr_store",
-        SparkEntry.parquetSparseFreshStore(s, dir))
-      val (ki, kv) = sparseOf(col("embedding"))
-      val qRow = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(ki.as("qi"), kv.as("qv")).head()
-      val qi = qRow.getSeq[Int](0)
-      val qv = qRow.getSeq[Double](1)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_spfr_store").option("collection", "embeddings")
-        .option("search.field", "kw")
-        .option("search.sparseIndices", qi.mkString(","))
-        .option("search.vector",
-          qv.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // INCREMENTAL PAYLOAD-INDEX MAINTENANCE: churn (inserts into their
-    // value partition, an update MOVING value partitions, a tombstoned
-    // delete) absorbs into the covering label index (fixture REQUIRES
-    // the watermark reached the log head), so this filtered search
-    // serves from the value partitions with an EMPTY overlay tail —
-    // pre-filter-as-access-path under churn, exact vs the brute
-    // filtered oracle over the FINAL state
-    "dsv2_parquet_pidx_fresh" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_pidxfr_store",
-        SparkEntry.parquetPidxFreshStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 31)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_pidxfr_store").option("collection", "embeddings")
-        .option("filter", "label:eq:3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // SPARSE top-k pushed THROUGH the connector to the lakehouse store:
-    // the scan ships qdrant's {indices, values} query form, the store
-    // answers from its dim-bucketed postings sidecar (the scan IS the
-    // index query, the sparse leg of /root/reference/src/table.rs:279-302)
-    // — only the query dims' buckets are read, the primary files feed
-    // just the winners' fetch. Scores are the same ascending-dim fold as
-    // the v_sparse_dot kernel, so the brute oracle reproduces them
-    "dsv2_parquet_sparse_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_sparse_store",
-        SparkEntry.parquetSparseStore(s, dir))
-      val (ki, kv) = sparseOf(col("embedding"))
-      val qRow = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(ki.as("qi"), kv.as("qv")).head()
-      val qi = qRow.getSeq[Int](0)
-      val qv = qRow.getSeq[Double](1)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_sparse_store").option("collection", "embeddings")
-        .option("search.field", "kw")
-        .option("search.sparseIndices", qi.mkString(","))
-        .option("search.vector",
-          qv.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the QUANTIZED serving tier inside the store: pushed dot top-k runs
-    // int8 candidates over the codes sidecar of the probed clusters
-    // (~4x fewer bytes than the full-precision replica) then an exact
-    // rerank of only the winners — with candidateK=100 margin the result
-    // equals the exact top-10 of the probed clusters, so the same
-    // deterministic maxIter=0 mirror oracles it (the ann_ivf_quantized
-    // argument, now store-served). Spec asserts both stages are
-    // cluster-pruned and the candidate read is the codes files.
-    "dsv2_parquet_ivf_quantized" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_ivfq_store",
-        SparkEntry.parquetIvfQuantizedStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 9)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_ivfq_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "dot").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the quantized tier x payload filter COMPOSITION: int8 candidates
-    // from the probed clusters' codes files (cut pre-filter at a full
-    // candidate margin), conditions evaluated at the exact-rerank fetch
-    // — WHERE-before-ORDER over the probed subset; primaries stay closed
-    // (spec-asserted). candidateK is the recall dial exactly as in the
-    // unfiltered tier
-    "dsv2_parquet_ivf_quantized_filtered" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_ivfqf_store",
-        SparkEntry.parquetIvfQuantizedFilteredStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 9)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_ivfqf_store").option("collection", "embeddings")
-        .option("filter", "label:gte:4")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "dot").option("search.k", "8")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // BM25-RANKED full-text serving at the store seam (`textrank.*` read
-    // options): the scan IS the ranked query — the store reads ONLY the
-    // query terms' token buckets of its tf/dl text sidecar (df = posting
-    // length, N/Σdl from the meta), scores with the searchPostings
-    // arithmetic, and returns the k best (id, _score). Shares
-    // inverted_search's oracle: the engine-side postings path and the
-    // store-seam serve must agree bit for bit
-    "dsv2_parquet_text_rank" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_textrank_store",
-        SparkEntry.parquetTextRankStore(s, dir))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_textrank_store").option("collection", "documents")
-        .option("textrank.key", "body")
-        .option("textrank.terms", "window,batch,scan")
-        .option("textrank.k", "15")
-        .load()
-        .select(col("id").cast(LongType).as("doc_id"),
-          col("_score").as("bm25"))
-    }),
-
-    // DISTRIBUTED BM25, TWO-PHASE: the documents corpus sharded over 3
-    // parquet members, EACH with its own postings sidecar over its
-    // slice. Phase 1 exchanges GLOBAL stats (N, Σdl, per-term dfs — a
-    // few dozen bytes, summed across shards); phase 2 has each shard
-    // rank ITS candidates with the global stats and return only its
-    // top-k, so the merge sees at most shards·k rows however common the
-    // terms. Per-shard reads stay the query terms' token buckets of
-    // that shard only; the global rank is provably the unsharded one,
-    // so the oracle is shared a fourth time
-    "dsv2_sharded_text_rank" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("sharded_tr_store",
-        SparkEntry.shardedTextRankStore(s, dir))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "sharded_tr_store").option("collection", "documents")
-        .option("textrank.key", "body")
-        .option("textrank.terms", "window,batch,scan")
-        .option("textrank.k", "15")
-        .load()
-        .select(col("id").cast(LongType).as("doc_id"),
-          col("_score").as("bm25"))
-    }),
-
-    // the same ranked query THROUGH the binary wire: one framed round
-    // trip, the service reads its text-sidecar postings, only the k
-    // scored hits cross — same oracle again (transport invisible)
-    "dsv2_grpc_text_rank" -> ((s, dir) => {
-      import graft.sources._
-      val (h, p) = SparkEntry.grpcTextRankAddr(s, dir)
-      CollectionStores.register("grpc_textrank_store",
-        new GrpcCollectionStore(h, p))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_textrank_store")
-        .option("collection", "documents")
-        .option("textrank.key", "body")
-        .option("textrank.terms", "window,batch,scan")
-        .option("textrank.k", "15")
-        .load()
-        .select(col("id").cast(LongType).as("doc_id"),
-          col("_score").as("bm25"))
-    }),
-
-    // FILTERED facets (qdrant's facet-with-filter form) ACROSS SHARDS:
-    // the payload filter rides every page call and targeted pass of the
-    // threshold merge — the distribution and the filter compose
-    // invisibly over the plain filtered GROUP BY
-    "dsv2_facet_filtered" -> ((s, dir) => {
-      import graft.sources._
-      import s.implicits._
-      val frame = hom(s, dir).select("id", "payload", "vector")
-      val members = (0 until 3).map { i =>
-        InMemoryCollectionStore.fromRows(
-          frame.filter(shardOf3(col("id")) === i),
-          "embeddings", Collections.homogeneousDescriptor)
-      }
-      new ShardedCollectionStore(members)
-        .facetCounts("embeddings", "label", limit = 5,
-          PayloadFilter(Seq(PayloadCondition("label", "gte", "3")),
-            Nil, None))
-        .toDF("value", "n")
-    }),
-
-    // FACETS from the payload index: the histogram is the keyword
-    // index's value-partition FOOTER row counts under the shared facet
-    // rendering — zero corpus bytes decode (spec-asserted), the
-    // backend's /points/facet served from its payload index
-    "dsv2_parquet_facet" -> ((s, dir) => {
-      import s.implicits._
-      SparkEntry.parquetMultiIndexStore(s, dir)
-        .facetCounts("embeddings", "parity", limit = 3)
-        .toDF("value", "n")
-    }),
-
-    // filtered COUNT(*) pushdown landing on the payload index: the
-    // aggregate collapses to CollectionFilteredCountScan, the store
-    // answers from the index's value partitions (footer row counts +
-    // residual-free condition — no corpus bytes decoded), one row
-    // crosses the scan
-    "dsv2_parquet_indexed_count" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_ivf_store3",
-        SparkEntry.parquetIvfStore(s, dir))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_ivf_store3").option("collection", "embeddings")
-        .option("filter", "label:gte:7")
-        .load()
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // GEO payload index at the store seam: a geo_box filter prunes the
-    // read to the cells whose grid rectangle intersects the box (the
-    // coverCells property), the exact predicate re-evaluates inside the
-    // pruned partitions, and the covering sidecar serves the filtered
-    // top-k with the primary files closed (spec-asserted) — qdrant's
-    // `geo` payload index kind over the lakehouse backend
-    "dsv2_parquet_geo_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_geo_store",
-        SparkEntry.parquetGeoStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 21)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_geo_store").option("collection", "embeddings")
-        .option("filter", "loc:geo_box:10,-40,-10,20")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // INCREMENTAL TEXT-INDEX MAINTENANCE (the FIFTH maintained family):
-    // churn (inserts with new tokens, a token-moving update, a
-    // tombstoned delete) absorbs into the token buckets with LIVE BM25
-    // stats (fixture REQUIRES the watermark reached the log head), so
-    // this match_text-filtered search resolves candidates from the
-    // maintained postings with an EMPTY overlay tail — exact vs the
-    // brute filtered oracle over the FINAL state
-    "dsv2_parquet_text_fresh" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_textfr_store",
-        SparkEntry.parquetTextFreshStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 37)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_textfr_store").option("collection", "embeddings")
-        .option("filter", "body:match_text:alpha w3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // INCREMENTAL GEO-INDEX MAINTENANCE (the SIXTH maintained family):
-    // churn (inserts inside the box, a cell-moving update INTO the box,
-    // a tombstoned delete of an in-box point) absorbs into the Morton
-    // cells (fixture REQUIRES the watermark reached the log head), so
-    // this box-filtered search serves cell-pruned over the FINAL state
-    "dsv2_parquet_geo_fresh" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_geofr_store",
-        SparkEntry.parquetGeoFreshStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 27)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_geofr_store").option("collection", "embeddings")
-        .option("filter", "loc:geo_box:10,-40,-10,20")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // WIRE STORAGE SNAPSHOT + RECOVER: the churned store archives and
-    // recovers entirely SERVICE-side (two wire verbs — the backend's
-    // per-node snapshot/recover API; the artifact never crosses the
-    // wire), the service swaps to the recovered store, and this remote
-    // search is graph-served over the churned state — snapshot,
-    // recover, and the wire seam all invisible vs the brute oracle
-    "dsv2_rest_storage_snapshot" -> ((s, dir) => {
-      import graft.sources._
-      val client = new RestCollectionStore(
-        SparkEntry.restStorageSnapUrl(s, dir))
-      CollectionStores.register("rest_snapstore_client", client)
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 31)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_snapstore_client")
-        .option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // WIRE-SERVED TEXT MAINTENANCE PARITY: the text_fresh churn driven
-    // entirely through the REST client — remote upserts tokenize
-    // service-side, the LIVE BM25 stats track (fixture-REQUIREd), and
-    // this remote match_text-filtered search resolves from the
-    // maintained postings. Same brute oracle as dsv2_parquet_text_fresh
-    // — the wire seam must be invisible for the fifth family too.
-    "dsv2_rest_text_fresh" -> ((s, dir) => {
-      import graft.sources._
-      val client = new RestCollectionStore(
-        SparkEntry.restTextFreshUrl(s, dir))
-      CollectionStores.register("rest_textfresh_client", client)
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 37)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_textfresh_client")
-        .option("collection", "embeddings")
-        .option("filter", "body:match_text:alpha w3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // BINARY-WIRE TEXT MAINTENANCE PARITY: the same churn through the
-    // gRPC client — with dsv2_rest_text_fresh this closes maintenance
-    // parity on BOTH transports; same brute oracle
-    "dsv2_grpc_text_fresh" -> ((s, dir) => {
-      import graft.sources._
-      val (h, p) = SparkEntry.grpcTextFreshAddr(s, dir)
-      CollectionStores.register("grpc_textfresh_client",
-        new GrpcCollectionStore(h, p))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 37)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_textfresh_client")
-        .option("collection", "embeddings")
-        .option("filter", "body:match_text:alpha w3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // WIRE-SERVED GEO MAINTENANCE PARITY: the geo_fresh churn driven
-    // entirely through the REST client — remote inserts land in their
-    // Morton cells service-side (fixture-REQUIREd watermark at head),
-    // and this remote box-filtered search serves cell-pruned over the
-    // FINAL state. Same brute oracle as dsv2_parquet_geo_fresh — the
-    // sixth family holds through the wire seam too.
-    "dsv2_rest_geo_fresh" -> ((s, dir) => {
-      import graft.sources._
-      val client = new RestCollectionStore(
-        SparkEntry.restGeoFreshUrl(s, dir))
-      CollectionStores.register("rest_geofresh_client", client)
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 27)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_geofresh_client")
-        .option("collection", "embeddings")
-        .option("filter", "loc:geo_box:10,-40,-10,20")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // BINARY-WIRE GEO MAINTENANCE PARITY: the geo_fresh churn through
-    // the gRPC client — with dsv2_rest_geo_fresh this closes geo
-    // maintenance parity on BOTH transports; same brute oracle
-    "dsv2_grpc_geo_fresh" -> ((s, dir) => {
-      import graft.sources._
-      val (h, p) = SparkEntry.grpcGeoFreshAddr(s, dir)
-      CollectionStores.register("grpc_geofresh_client",
-        new GrpcCollectionStore(h, p))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 27)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_geofresh_client")
-        .option("collection", "embeddings")
-        .option("filter", "loc:geo_box:10,-40,-10,20")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // FLOAT payload index at the store seam: range bounds over a double
-    // payload value prune the type-tagged partitions and the pushed
-    // COUNT is footer-only — the float leg of qdrant's numeric index
-    // kinds (the int leg is dsv2_parquet_indexed_count)
-    "dsv2_parquet_float_count" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_float_store",
-        SparkEntry.parquetFloatStore(s, dir))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_float_store").option("collection", "embeddings")
-        .option("filter", "score:gte:3.25;score:lt:7.5")
-        .load()
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // FULL-TEXT payload index at the store seam: the match_text filter's
-    // candidates are the intersection of its tokens' posting lists
-    // (read from only those tokens' hash buckets), fetched from the
-    // primaries with id-statistics pruning — qdrant's `text` index kind
-    // over the lakehouse backend; the token bag rule makes the
-    // intersection EXACT for match_text, so the plain WHERE oracles it
-    "dsv2_parquet_text_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_text_store",
-        SparkEntry.parquetTextStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 17)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_text_store").option("collection", "embeddings")
-        .option("filter", "body:match_text:w3 tag1")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // datetime payload index at the store seam: the filter's dt-range
-    // bounds prune the index's value partitions by PARSED instant and
-    // the pushed COUNT answers from footers alone — qdrant's `datetime`
-    // index kind over the lakehouse backend (the engine-side epoch-day
-    // index, datetime_index_range, has the same dichotomy)
-    "dsv2_parquet_datetime_count" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_dt_store",
-        SparkEntry.parquetDtStore(s, dir))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_dt_store").option("collection", "embeddings")
-        .option("filter", "ts:dt_gte:2024-02-01;ts:dt_lt:2024-04-01")
-        .load()
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // the STREAMING read path over the LAKEHOUSE backend: the parquet
-    // store's _log sidecar replays through the connector's micro-batch
-    // CDC source exactly like the in-memory log (same oracle as
-    // dsv2_stream_read) — segment files position themselves by name, so
-    // the bounded run opens only the segments it replays
-    "dsv2_parquet_stream_read" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pql_stream",
-        SparkEntry.parquetLogStore(s, dir))
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-pql-gate").toString
-      val sink = s"pql_out_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = s.readStream.format("graft.sources.CollectionDataSource")
-        .option("store", "pql_stream").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-        .writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(sink)
-    }),
-
-    // LOG COMPACTION on the lakehouse backend: COW deletes append
-    // tombstone segments, compaction truncates the ingest prefix
-    // (the PRIMARY files are the checkpoint — no separate snapshot) and
-    // the retained tail replays at its ORIGINAL global positions — same
-    // oracle as the in-memory dsv2_cdc_compacted
-    "dsv2_parquet_cdc_compacted" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pql_cdcc",
-        SparkEntry.freshParquetLogStore(s, dir))
-      val ingested = CollectionStores.get("pql_cdcc").logSize("embeddings")
-      CollectionStores.update("pql_cdcc") {
-        case pq: ParquetCollectionStore =>
-          pq.removed("embeddings", Set("3", "13", "23"))
-            .compacted("embeddings", ingested)
-        case other => other
-      }
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pql_cdcc").option("collection", "embeddings")
-        .option("cdc", "true").option("partitions", "4").load()
-        .select(col("_op"), col("_seq"), col("id"))
-    }),
-
-    // collection-to-collection ETL with BOTH ends on the lakehouse
-    // backend: stream the parquet log out, transform, stream INTO an
-    // empty parquet collection — each epoch commits as one COW batch +
-    // log segment, so the sink is itself CDC-replayable. Same oracle as
-    // dsv2_stream_pipeline
-    "dsv2_parquet_stream_pipeline" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pql_etl_src",
-        SparkEntry.parquetLogStore(s, dir))
-      val dstDir = SparkEntry.tempStoreDir("graft-pq-etl-dst")
-      ParquetCollectionStore.initEmpty(dstDir)
-      CollectionStores.register("pql_etl_dst", new ParquetCollectionStore(
-        dstDir, "embeddings", Collections.homogeneousDescriptor))
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-pql-etl-ckpt").toString
-      val q = s.readStream.format("graft.sources.CollectionDataSource")
-        .option("store", "pql_etl_src").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .filter(json_get_int(col("payload"), "label") % 2 === 0)
-        .select(col("id"),
-          concat(lit("""{"etl":1,"orig":"""), col("payload"), lit("}")).as("payload"),
-          col("vector"))
-        .writeStream.format("graft.sources.CollectionDataSource")
-        .option("store", "pql_etl_dst").option("collection", "embeddings")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pql_etl_dst").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // the THIRD CollectionStore implementation — the WIRE protocol: an
-    // HTTP/JSON client (RestCollectionStore) dialing an in-process server
-    // fronting the same collection, the reference's defining deployment
-    // shape (its client is dialed from a URL, /root/reference/src/
-    // table.rs:48). Same oracle as dsv2_scan: the network hop must be
-    // invisible above the CollectionStore seam
-    "dsv2_rest_store" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("rest_store",
-        new RestCollectionStore(SparkEntry.restBackedUrl(s, dir)))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // AUTHENTICATED wire serving: the server refuses requests without
-    // the shared-secret api-key header (the reference client's auth
-    // scheme, test_utils.rs:119-128); a KEYED client reads the same
-    // collection — same oracle as dsv2_rest_store, auth must be
-    // invisible to an authorized caller. The 401 reject path (both
-    // transports) is pinned in the wire specs.
-    "dsv2_rest_auth" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("rest_auth_store",
-        new RestCollectionStore(SparkEntry.restAuthUrl(s, dir),
-          apiKey = Some(SparkEntry.WireApiKey)))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_auth_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // pushed top-k THROUGH the wire: the scan ships the scored query to
-    // the remote service (`points/query`), scored points come back — the
-    // reference's architecture end-to-end, network included. Same oracle
-    // as dsv2_topk_pushdown
-    "dsv2_rest_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("rest_search_store",
-        new RestCollectionStore(SparkEntry.restBackedUrl(s, dir)))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_search_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "12")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // FILTERED search OVER THE WIRE: query + `must` filter ship together
-    // (`points/query` with a filter object), the SERVICE filters before
-    // ranking, and only the k matching scored points cross the network.
-    // Same oracle as dsv2_filtered_search — the network hop must be
-    // invisible
-    "dsv2_rest_filtered_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("rest_fs_store",
-        new RestCollectionStore(SparkEntry.restBackedUrl(s, dir)))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_fs_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "12")
-        .option("filter", "label:gte:2")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // SQL DDL against a REMOTE backend: CREATE TABLE ships the vectors
-    // config over the wire (the service owns the atomic existence
-    // check), INSERT commits via the wire upsert, the read-back
-    // round-trips — the full SQL table lifecycle against a remote node
-    "dsv2_rest_ddl" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("rest_ddl_backend",
-        InMemoryCollectionStore.single("seed",
-          Collections.homogeneousDescriptor.copy(name = "seed"),
-          IndexedSeq.empty))
-      CollectionStores.register("rest_ddl_store",
-        new RestCollectionStore(SparkEntry.restDdlUrl))
-      s.conf.set("spark.sql.catalog.rddl_cat", "graft.sources.CollectionCatalog")
-      s.conf.set("spark.sql.catalog.rddl_cat.store", "rest_ddl_store")
-      s.sql("DROP TABLE IF EXISTS rddl_cat.remote_docs")
-      s.sql("CREATE TABLE rddl_cat.remote_docs " +
-        "(id STRING, payload STRING, vector ARRAY<FLOAT>)")
-      hom(s, dir).select("id", "payload", "vector")
-        .createOrReplaceTempView("__rddl_src")
-      s.sql("INSERT INTO rddl_cat.remote_docs " +
-        "SELECT id, payload, vector FROM __rddl_src WHERE CAST(id AS BIGINT) % 5 = 0")
-      s.sql("SELECT id, payload FROM rddl_cat.remote_docs ORDER BY id")
-    }),
-
-    // collection ALIASES (the backend's zero-downtime swap API): readers
-    // address the alias `live`; the reindexed generation goes live with
-    // ONE atomic alias update — the gate reads through the alias AFTER
-    // the swap and must see only the new generation (both generations
-    // pre-built offline; the gate measures the flip + the aliased read)
-    "dsv2_alias_swap" -> ((s, dir) => {
-      import graft.sources._
-      import graft.sources.AliasedCollectionStore._
-      val store = SparkEntry.aliasStoreOf(s, dir)
-      updateAliases(store, Seq(CreateAlias("live", "embeddings")))
-      updateAliases(store, Seq(
-        DeleteAlias("live"), CreateAlias("live", "embeddings_v2")))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", store).option("collection", "live")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // the FULL heterogeneous shape from the LAKEHOUSE backend: all three
-    // vector kinds (dense named fields, the ragged multi field, the
-    // two-column sparse pair) plus disjoint-subset NULLs decode from the
-    // cold parquet layout — the store now carries the complete
-    // collection data model, not just dense. Same oracle as dsv2_hetero:
-    // the backend swap must be invisible
-    "dsv2_parquet_hetero" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_hetero_store",
-        SparkEntry.parquetHeteroStore(s, dir))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_hetero_store").option("collection", "hetero")
-        .option("partitions", "4").load()
-        .select(
-          col("id"), col("payload"),
-          vq6(col("text_embedding")).as("text_embedding_q6"),
-          vq6(col("image_embedding")).as("image_embedding_q6"),
-          vq6(col("audio_embedding")).as("audio_embedding_q6"),
-          array_join(transform(col("multi_embeddings"), sv => vq6(sv)), ";")
-            .as("multi_q6"),
-          iarr(col("keywords_indices")).as("keywords_indices_s"),
-          vq6(col("keywords_values")).as("keywords_values_q6"))
-    }),
-
-    // NAMED-FIELD pushed search over the LAKEHOUSE backend: the top-k
-    // query ships to the parquet store (no IVF sidecar on this field, so
-    // the store's streaming heap serves it), the fetch narrows to the ONE
-    // named dense field, rows lacking it never score — the reference's
-    // named-collection search leg with the cold store doing the ranking.
-    // Same oracle as dsv2_hetero_search: the backend swap is invisible
-    "dsv2_parquet_named_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_named_store",
-        SparkEntry.parquetHeteroSearchStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_named_store").option("collection", "hetero")
-        .option("search.field", "text_embedding")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // SNAPSHOT + RESTORE + ALIAS over the LAKEHOUSE backend: snapshot a
-    // parquet-backed collection (connector read -> portable parquet +
-    // manifest), restore it as a NEW parquet store (points re-seal into
-    // the ranged layout), then read it through an ALIAS on that store —
-    // the full operational surface (backup, restore, zero-downtime
-    // alias) composed over the backend you'd run at 100 TB. Contents
-    // must survive both hops bit-for-bit (q6-quantized vector proof)
-    "dsv2_parquet_snapshot" -> ((s, dir) => {
-      import graft.sources._
-      import graft.sources.AliasedCollectionStore._
-      CollectionStores.register("pq_snap_src",
-        SparkEntry.parquetBackedStore(s, dir))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-pq-snap").toString
-      graft.collections.Snapshot.create(s, "pq_snap_src", "embeddings", path)
-      graft.collections.Snapshot.restoreParquet(s, path, "pq_snap_restore",
-        "embeddings_restored", SparkEntry.tempStoreDir("graft-pq-snap-dst"))
-      updateAliases("pq_snap_restore",
-        Seq(CreateAlias("live", "embeddings_restored")))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_snap_restore").option("collection", "live")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"), vq6(col("vector")).as("vector_q6"))
-    }),
-
-    // the SNAPSHOT VERB over the wire: the client asks the SERVICE to
-    // export the collection (the backend's create-snapshot API — the
-    // artifact lands service-side as a portable parquet dataset +
-    // manifest, never crossing the wire), then a local restore of that
-    // artifact must reproduce the collection exactly, vectors included.
-    // Same oracle as dsv2_parquet_snapshot
-    "dsv2_wire_snapshot" -> ((s, dir) => {
-      import graft.sources._
-      val client = new RestCollectionStore(SparkEntry.restSnapshotUrl(s, dir))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-wire-snap").toString
-      client.snapshot("embeddings", path)
-      graft.collections.Snapshot.restoreParquet(s, path, "wire_snap_restore",
-        "embeddings_restored", SparkEntry.tempStoreDir("graft-wire-snap-dst"))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "wire_snap_restore")
-        .option("collection", "embeddings_restored")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"), vq6(col("vector")).as("vector_q6"))
-    }),
-
-    // SNAPSHOT CARRIES THE INDEX: the storage-level snapshot archives
-    // the whole store directory — per-segment graphs, watermarks,
-    // tombstones, changelog — so the restored collection's FIRST search
-    // is GRAPH-served over the churned state with an empty overlay tail
-    // (no rebuild, no brute scan; CollectionsSpec counter-asserts the
-    // serve path). The backend's storage-level snapshot semantics
-    // (/root/reference/tests/bin/config.yaml:24-37,198). Source = the
-    // churned hnsw_fresh fixture (inserts/update/delete absorbed
-    // online); the restored search must rank exactly where the brute
-    // oracle over the FINAL state does.
-    "dsv2_snapshot_indexed" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("snap_idx_src",
-        SparkEntry.parquetHnswFreshStore(s, dir))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-snap-idx").toString
-      graft.collections.Snapshot.createStorage("snap_idx_src",
-        "embeddings", path)
-      graft.collections.Snapshot.restoreStorage(s, path, "snap_idx_rst",
-        "embeddings", SparkEntry.tempStoreDir("graft-snap-idx-dst"),
-        hnswEf = 2048)
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 23)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "snap_idx_rst").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // STORAGE snapshot of a SHARDED topology: the churned 2-member
-    // store archives member-by-member (the backend snapshots per shard
-    // precisely so a cluster restores member by member —
-    // /root/reference/tests/bin/config.yaml:24-37,198), the restore
-    // re-wraps the topology under fresh dirs, and the FIRST search is
-    // graph-served on every restored member over the churned state —
-    // the brute oracle over the FINAL state must match exactly.
-    // SnapshotTopologySpec counter-asserts primaries-closed serves.
-    "dsv2_sharded_snapshot" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("sh_snap_src",
-        SparkEntry.shardedSnapStore(s, dir))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-snap-sh").toString
-      graft.collections.Snapshot.createStorage("sh_snap_src",
-        "embeddings", path)
-      graft.collections.Snapshot.restoreStorage(s, path, "sh_snap_rst",
-        "embeddings", SparkEntry.tempStoreDir("graft-snap-sh-dst"),
-        hnswEf = 2048)
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 29)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "sh_snap_rst").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // CLUSTER snapshot of a SHARDED-OF-WIRE topology: the per-node
-    // storage-snapshot and recover verbs fan to every member service
-    // (archives stay node-side — nothing but control-plane verbs cross
-    // the wire), each service swaps to its recovered store, and the
-    // wrapper keeps serving through the same clients — the backend's
-    // member-by-member cluster recovery; this search must be
-    // graph-served on every recovered member over the churned state
-    "dsv2_sharded_wire_snapshot" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("sh_wiresnap_store",
-        SparkEntry.shardedWireSnapStore(s, dir))
-      val paths = (0 until 2).map(_ =>
-        SparkEntry.tempStoreDir("graft-shwire-arch"))
-      graft.collections.Snapshot.createStorageCluster("sh_wiresnap_store",
-        "embeddings", paths)
-      val dirs = (0 until 2).map(_ =>
-        SparkEntry.tempStoreDir("graft-shwire-dst"))
-      graft.collections.Snapshot.recoverStorageCluster("sh_wiresnap_store",
-        "embeddings", paths, dirs, hnswEf = 2048)
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 33)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "sh_wiresnap_store")
-        .option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // REPLICATED-of-wire cluster snapshot: the HA pair's ONE node-side
-    // archive (written by replica 0's service) reseeds EVERY member
-    // service at recover — the backend's snapshot-transfer reseed over
-    // the wire; the wrapper serves the churned state unchanged after
-    // both swaps. Same churned-state brute oracle family.
-    "dsv2_replicated_wire_snapshot" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("rep_wiresnap_store",
-        SparkEntry.replicatedWireSnapStore(s, dir))
-      val path = SparkEntry.tempStoreDir("graft-repwire-arch")
-      graft.collections.Snapshot.createStorageCluster("rep_wiresnap_store",
-        "embeddings", Seq(path))
-      require(graft.collections.Snapshot.verifyStorageCluster(
-        "rep_wiresnap_store", "embeddings", Seq(path)).isEmpty,
-        "the fresh HA archive must drill clean before the reseed")
-      val dirs = (0 until 2).map(_ =>
-        SparkEntry.tempStoreDir("graft-repwire-dst"))
-      graft.collections.Snapshot.recoverStorageCluster("rep_wiresnap_store",
-        "embeddings", Seq(path), dirs, hnswEf = 2048)
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 33)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rep_wiresnap_store")
-        .option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // ARCHIVE VERIFICATION (the DR drill): a freshly created
-    // member-by-member archive of the churned sharded store must verify
-    // CLEAN without being restored — metadata-only checks (manifest,
-    // primaries present, no parked markers, watermarks parse); the
-    // corruption arms are pinned in SnapshotTopologySpec
-    "dsv2_snapshot_verify" -> ((s, dir) => {
-      import graft.sources._
-      import s.implicits._
-      CollectionStores.register("sh_snapv_src",
-        SparkEntry.shardedSnapStore(s, dir))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-snapv").toString
-      graft.collections.Snapshot.createStorage("sh_snapv_src",
-        "embeddings", path)
-      Seq(graft.collections.Snapshot.verifyStorage(path).length.toLong)
-        .toDF("n_findings")
-    }),
-
-    // the DR drill OVER THE WIRE: fresh node-side archives of the mixed
-    // (REST + gRPC) cluster drill CLEAN through verifyStorageCluster —
-    // each service verifies ITS archive, only findings cross back; the
-    // corruption arms (parked marker through the wire, member prefixes)
-    // are pinned in SnapshotTopologySpec
-    "dsv2_cluster_snapshot_verify" -> ((s, dir) => {
-      import graft.sources._
-      import s.implicits._
-      CollectionStores.register("sh_wiresnapv_store",
-        SparkEntry.shardedWireSnapStore(s, dir))
-      val paths = (0 until 2).map(_ =>
-        SparkEntry.tempStoreDir("graft-shwire-varch"))
-      graft.collections.Snapshot.createStorageCluster("sh_wiresnapv_store",
-        "embeddings", paths)
-      Seq(graft.collections.Snapshot.verifyStorageCluster(
-        "sh_wiresnapv_store", "embeddings", paths).length.toLong)
-        .toDF("n_findings")
-    }),
-
-    // FACET over the wire (the backend's points/facet API): the remote
-    // service owns the payload pass, only the (value, count) hit list
-    // crosses back — the admin/faceted-navigation call every catalog UI
-    // issues, servable from a payload index without touching the corpus
-    "dsv2_rest_facet" -> ((s, dir) => {
-      import graft.sources._
-      import s.implicits._
-      val client = new RestCollectionStore(SparkEntry.restBackedUrl(s, dir))
-      client.facetCounts("embeddings", "label", limit = 5)
-        .toDF("value", "n")
-    }),
-
-    // the facet API over the binary wire — same oracle, different frames
-    "dsv2_grpc_facet" -> ((s, dir) => {
-      import graft.sources._
-      import s.implicits._
-      val (h, p) = SparkEntry.grpcBackedAddr(s, dir)
-      val client = new GrpcCollectionStore(h, p)
-      client.facetCounts("embeddings", "label", limit = 5)
-        .toDF("value", "n")
-    }),
-
-    // WRITES over the wire: the connector's batch write commits through
-    // the REST client (PUT points — Qdrant's upsert surface), the remote
-    // service owns the RMW, and the read-back round-trips through the
-    // same wire. Same oracle as dsv2_write: remote ingest must be
-    // indistinguishable from local ingest above the seam
-    // PARTIAL payload update (the backend's set_payload): merge a patch
-    // into selected points' payloads — unmentioned fields survive, other
-    // points untouched, rewritten points logged as CDC upserts; the
-    // read-back projects the patched VALUES through the json surface
-    "dsv2_set_payload" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("patch_store", InMemoryCollectionStore.fromRows(
-        Collections.homogeneous(s, dir), "embeddings",
-        Collections.homogeneousDescriptor))
-      CollectionStores.update("patch_store") {
-        case mem: InMemoryCollectionStore => mem.payloadPatched("embeddings",
-          Set("0", "10", "20", "30", "40"),
-          """{"label":99,"reviewed":true}""")
-        case other => other
-      }
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "patch_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"),
-          json_get_int(col("payload"), "label").as("label"),
-          json_get_bool(col("payload"), "reviewed").as("reviewed"))
-    }),
-
-    // PARTIAL vector mutations: update_vectors replaces only the carried
-    // fields (payload and other fields survive — unlike upsert);
-    // delete_vectors drops named fields, which decode as NULL on read
-    "dsv2_update_vectors" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("vup_store", InMemoryCollectionStore.fromRows(
-        Collections.homogeneous(s, dir), "embeddings",
-        Collections.homogeneousDescriptor))
-      val ups = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id").isin(0, 10, 20))
-        .select(col("vec_id").cast(StringType).as("id"),
-          reverse(col("embedding")).as("v"))
-        .collect().map(r => Point(r.getString(0), None,
-          dense = Map("vector" -> r.getSeq[Float](1).toArray))).toSeq
-      CollectionStores.update("vup_store") {
-        case mem: InMemoryCollectionStore =>
-          mem.vectorsUpdated("embeddings", ups)
-            .vectorsDeleted("embeddings", Set("30", "40"), Set("vector"))
-        case other => other
-      }
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "vup_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"), vq6(col("vector")).as("vector_q6"))
-    }),
-
-    // the other two payload mutations: delete_payload drops named fields
-    // (point keeps an — possibly empty — payload object), clear_payload
-    // removes the payload entirely (reads back NULL); same CDC contract
-    "dsv2_delete_payload" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pdel_store", InMemoryCollectionStore.fromRows(
-        Collections.homogeneous(s, dir), "embeddings",
-        Collections.homogeneousDescriptor))
-      CollectionStores.update("pdel_store") {
-        case mem: InMemoryCollectionStore =>
-          mem.payloadKeysDeleted("embeddings", Set("0", "10", "20"), Set("label"))
-            .payloadCleared("embeddings", Set("30", "40"))
-        case other => other
-      }
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pdel_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"),
-          json_get_int(col("payload"), "label").as("label"),
-          col("payload").isNull.as("cleared"))
-    }),
-
-    // the same set_payload shipped OVER THE WIRE: only the patch and the
-    // id list cross; the service owns the read-modify-write
-    "dsv2_rest_set_payload" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("rest_write_backend",
-        InMemoryCollectionStore.fromRows(
-          Collections.homogeneous(s, dir), "embeddings",
-          Collections.homogeneousDescriptor))
-      val client = new RestCollectionStore(SparkEntry.restWriteUrl)
-      client.setPayload("embeddings", Set("0", "10", "20", "30", "40"),
-        """{"label":99,"reviewed":true}""")
-      CollectionStores.register("rest_patch_store", client)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_patch_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"),
-          json_get_int(col("payload"), "label").as("label"),
-          json_get_bool(col("payload"), "reviewed").as("reviewed"))
-    }),
-
-    "dsv2_rest_write" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("rest_write_backend",
-        InMemoryCollectionStore.single(
-          "embeddings", Collections.homogeneousDescriptor, IndexedSeq.empty))
-      CollectionStores.register("rest_write_store",
-        new RestCollectionStore(SparkEntry.restWriteUrl))
-      hom(s, dir).select("id", "payload", "vector")
-        .write.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_write_store").option("collection", "embeddings")
-        .mode("append").save()
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_write_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // the PROTOBUF transport twin of dsv2_rest_store: the same connector
-    // scan over a GrpcCollectionStore client — hand-sealed protobuf
-    // messages, length-delimited frames, a plain socket (the transport
-    // the reference's qdrant-client speaks, table.rs:133; gRPC's message
-    // framing without the HTTP/2 envelope). Same oracle: the transport
-    // swap must be invisible above the CollectionStore seam
-    "dsv2_grpc_store" -> ((s, dir) => {
-      import graft.sources._
-      val (h, p) = SparkEntry.grpcBackedAddr(s, dir)
-      CollectionStores.register("grpc_store", new GrpcCollectionStore(h, p))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // pushed top-k through the BINARY wire: the scored query ships as a
-    // protobuf SearchPoints frame, scored points come back — same oracle
-    // as the JSON transport and the local store (dsv2_rest_search)
-    "dsv2_grpc_search" -> ((s, dir) => {
-      import graft.sources._
-      val (h, p) = SparkEntry.grpcBackedAddr(s, dir)
-      CollectionStores.register("grpc_search_store",
-        new GrpcCollectionStore(h, p))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_search_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "12")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the FULL STACK in one line: connector scan -> protobuf wire ->
-    // service -> PARQUET store serving from its IVF sidecar. The pushed
-    // top-k crosses the wire as a protobuf frame, the lakehouse backend
-    // answers probe-pruned (primary files closed), k scored rows come
-    // back — a remote node over cold storage, which is exactly the
-    // production deployment shape. Same oracle as the local parquet
-    // serve: two seams (transport, storage) and zero result drift
-    "dsv2_grpc_lakehouse_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("grpc_lake_backend",
-        SparkEntry.parquetIvfStore(s, dir))
-      val srv = SparkEntry.grpcLakeServer
-      CollectionStores.register("grpc_lake_store",
-        new GrpcCollectionStore(srv.host, srv.port))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_lake_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // NAMED-FIELD IVF serving: the sidecar indexes text_embedding over
-    // the rows that HAVE it (vec_id % 3 in {0,1}), a pushed top-k on
-    // the named field probes centroids and reads only the probed
-    // clusters — the subset-fit mirror reproduces every stage, so the
-    // named-collection path gets the same deterministic oracle as the
-    // homogeneous one
-    "dsv2_parquet_named_ivf" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_hivf_store",
-        SparkEntry.parquetHeteroIvfStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 6)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_hivf_store").option("collection", "hetero")
-        .option("search.field", "text_embedding")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // transport symmetry: the SAME lakehouse serve behind the JSON wire
-    // (rest server fronting the parquet store) — three backends, two
-    // transports, one oracle
-    "dsv2_rest_lakehouse_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("rest_lake_backend",
-        SparkEntry.parquetIvfStore(s, dir))
-      CollectionStores.register("rest_lake_store",
-        new RestCollectionStore(SparkEntry.restLakeUrl))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_lake_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the same stack with the payload index as the access path: the
-    // filter ships in the protobuf frame, the service's parquet store
-    // serves from the label index's value partitions — qdrant's
-    // pre-filter arm behind two seams, same oracle as the local form
-    "dsv2_grpc_lakehouse_prefilter" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("grpc_lake_backend",
-        SparkEntry.parquetIvfStore(s, dir))
-      val srv = SparkEntry.grpcLakeServer
-      CollectionStores.register("grpc_lake_store2",
-        new GrpcCollectionStore(srv.host, srv.port))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 11)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_lake_store2").option("collection", "embeddings")
-        .option("filter", "label:eq:3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // remote LAKEHOUSE writes: the connector's batches cross the
-    // protobuf wire and the SERVICE applies each as a COW batch + log
-    // segment on its parquet store — a writable cold-storage node. The
-    // read-back pages through the same client; fresh empty dir per
-    // invocation so re-runs replay the identical ingest
-    "dsv2_grpc_lakehouse_write" -> ((s, dir) => {
-      import graft.sources._
-      val pqDir = SparkEntry.tempStoreDir("graft-pq-grpcw")
-      ParquetCollectionStore.initEmpty(pqDir)
-      CollectionStores.register("grpc_lakew_backend",
-        new ParquetCollectionStore(pqDir, "embeddings",
-          Collections.homogeneousDescriptor))
-      val srv = SparkEntry.grpcLakeWriteServer
-      CollectionStores.register("grpc_lakew_store",
-        new GrpcCollectionStore(srv.host, srv.port))
-      hom(s, dir).select("id", "payload", "vector")
-        .write.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_lakew_store").option("collection", "embeddings")
-        .mode("append").save()
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_lakew_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // the connector's WRITE path over the binary wire: upsert batches
-    // ship as protobuf frames, the service owns commit atomicity, the
-    // read-back proves the round trip — the RemoteCollectionClient seam
-    // makes the two transports interchangeable in the write dispatch
-    "dsv2_grpc_write" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("grpc_write_backend",
-        InMemoryCollectionStore.single(
-          "embeddings", Collections.homogeneousDescriptor, IndexedSeq.empty))
-      val (h, p) = SparkEntry.grpcWriteAddr
-      CollectionStores.register("grpc_write_store",
-        new GrpcCollectionStore(h, p))
-      hom(s, dir).select("id", "payload", "vector")
-        .write.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_write_store").option("collection", "embeddings")
-        .mode("append").save()
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_write_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // batched queries over the BINARY wire: 3 protobuf spec frames, ONE
-    // round trip, per-spec top-k — same oracle as the JSON batch
-    "dsv2_grpc_batch" -> ((s, dir) => {
-      import graft.sources._
-      import s.implicits._
-      val (h, p) = SparkEntry.grpcBackedAddr(s, dir)
-      val client = new GrpcCollectionStore(h, p)
-      val qs = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id"), dvec(col("embedding")))
-        .collect().sortBy(_.getLong(0))
-        .map(r => (r.getLong(0).toString, r.getSeq[Double](1).toArray))
-      val specs = qs.map { case (_, v) => SearchSpec("vector", v, "cosine", 5) }
-      val res = client.searchPointsBatch("embeddings", specs.toIndexedSeq,
-        withPayload = false, Seq.empty)
-      qs.zip(res).flatMap { case ((qid, _), hits) =>
-        hits.map { case (p2, score) => (qid, p2.id, score) }
-      }.toIndexedSeq.toDF("query_id", "id", "score")
-        .withColumn("score", round(col("score"), 6))
-    }),
-
-    // BATCHED queries over the wire (the backend's points/query/batch):
-    // 3 query specs, ONE round trip, per-spec top-k ranked server-side
-    // with the same raw-score/id contract as the single-query path
-    "dsv2_rest_batch" -> ((s, dir) => {
-      import graft.sources._
-      import s.implicits._
-      val client = new RestCollectionStore(SparkEntry.restBackedUrl(s, dir))
-      val qs = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id"), dvec(col("embedding")))
-        .collect().sortBy(_.getLong(0))
-        .map(r => (r.getLong(0).toString, r.getSeq[Double](1).toArray))
-      val specs = qs.map { case (_, v) => SearchSpec("vector", v, "cosine", 5) }
-      val res = client.searchPointsBatch("embeddings", specs.toIndexedSeq,
-        withPayload = false, Seq.empty)
-      qs.zip(res).flatMap { case ((qid, _), hits) =>
-        hits.map { case (p, score) => (qid, p.id, score) }
-      }.toIndexedSeq.toDF("query_id", "id", "score")
-        .withColumn("score", round(col("score"), 6))
-    }),
-
-    "dsv2_topk_pushdown" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("topk_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "topk_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "12")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // SCATTER-GATHER serving: the same pushed top-k against a 3-shard
-    // store (members placed by the rendezvous hash — the backend's
-    // sharded-cluster architecture the single-node reference crate
-    // delegates to, /root/reference/src/table.rs:82-86). Each shard
-    // answers its local page; the wrapper merge-sorts and cuts to k —
-    // provably the unsharded result, so the oracle is dsv2_topk_pushdown's
-    "dsv2_sharded_search" -> ((s, dir) => {
-      import graft.sources._
-      val frame = hom(s, dir).select("id", "payload", "vector")
-      val members = (0 until 3).map { i =>
-        InMemoryCollectionStore.fromRows(
-          frame.filter(shardOf3(col("id")) === i),
-          "embeddings", Collections.homogeneousDescriptor)
-      }
-      CollectionStores.register("sharded_store",
-        new ShardedCollectionStore(members))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "sharded_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "12")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // REPLICA SET with a DOWN node: qdrant's replication_factor at the
-    // store seam — replica 0 is a wire client whose service does not
-    // exist (connection refused on first contact), replica 1 holds the
-    // corpus. The read fails over ONCE, the preference sticks, and the
-    // page is exact — availability is a wrapper property, invisible to
-    // the query. Writes are write-all with dead-marking + resync
-    // (spec-pinned in ReplicatedCollectionStoreSpec)
-    "dsv2_replicated_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("replicated_store", {
-        val sock = new java.net.ServerSocket(0)
-        val deadPort = sock.getLocalPort
-        sock.close()
-        new ReplicatedCollectionStore(IndexedSeq(
-          new GrpcCollectionStore("127.0.0.1", deadPort),
-          InMemoryCollectionStore.fromRows(
-            hom(s, dir).select("id", "payload", "vector"),
-            "embeddings", Collections.homogeneousDescriptor)))
-      })
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 23)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "replicated_store")
-        .option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // READ_CONSISTENCY QUORUM: three alive replicas, one STALE (it is
-    // missing the best-ranked point — the divergence a failed resync or
-    // an operator mistake leaves behind). Every read gathers all three
-    // answers and returns the majority, so the stale minority is
-    // OUTVOTED instead of served on its rotation turn — the backend's
-    // read_consistency dial. The exact oracle must hold whichever
-    // replica the rotation lands on first
-    "dsv2_replicated_quorum" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("replicated_quorum_store", {
-        val frame = hom(s, dir).select("id", "payload", "vector")
-        def full() = InMemoryCollectionStore.fromRows(frame,
-          "embeddings", Collections.homogeneousDescriptor)
-        val stale = InMemoryCollectionStore.fromRows(
-          frame.filter(col("id") =!= "23"),
-          "embeddings", Collections.homogeneousDescriptor)
-        new ReplicatedCollectionStore(IndexedSeq(stale, full(), full()),
-          readConsistency = 3)
-      })
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 23)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "replicated_quorum_store")
-        .option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // CDC THROUGH A REPLICA SET: the micro-batch source's log_size/
-    // log_entries calls bind to ONE replica's journal lineage (in-sync
-    // replicas carry identical journals; a resynced one is a rewrite —
-    // the epoch guard makes following it an error, spec-pinned). Same
-    // oracle as dsv2_stream_read: replication invisible to the replay
-    "dsv2_replicated_stream_read" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("repl_cdc_store", {
-        val frame = hom(s, dir).select("id", "payload", "vector")
-        def replica() = InMemoryCollectionStore.fromRows(frame,
-          "embeddings", Collections.homogeneousDescriptor)
-        new ReplicatedCollectionStore(IndexedSeq(replica(), replica()))
-      })
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-repl-cdc").toString
-      val sink = s"repl_cdc_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = s.readStream.format("graft.sources.CollectionDataSource")
-        .option("store", "repl_cdc_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-        .writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(sink)
-    }),
-
-    // PLACEMENT x REPLICATION through the connector: two rendezvous
-    // shards, each a replica SET — shard 0's first replica is a wire
-    // client to a dead port. The scatter-gather fans to the shards,
-    // each set serves read-one with failover, and the exact top-k
-    // oracle holds — the full production topology, one bad node,
-    // zero visible effect
-    "dsv2_sharded_replicated_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("sh_repl_store", {
-        val frame = hom(s, dir).select("id", "payload", "vector")
-        val sock = new java.net.ServerSocket(0)
-        val deadPort = sock.getLocalPort
-        sock.close()
-        val shards = (0 until 2).map { i =>
-          val own = frame.filter(shardOf2(col("id")) === i)
-          def replica() = InMemoryCollectionStore.fromRows(own,
-            "embeddings", Collections.homogeneousDescriptor)
-          new ReplicatedCollectionStore(
-            if (i == 0) IndexedSeq(
-              new GrpcCollectionStore("127.0.0.1", deadPort), replica())
-            else IndexedSeq(replica(), replica()))
-        }
-        new ShardedCollectionStore(shards)
-      })
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 29)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "sh_repl_store")
-        .option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // FILTERED HNSW through the SHARDED topology with a WIRE member:
-    // each shard owns per-segment graphs + a count-only label index;
-    // the filtered search fans out, every member resolves ITS
-    // acceptance set and serves graph-side (the wire member entirely
-    // service-side — only its ≤ k page crosses), the scatter-gather
-    // merges. Same exact filtered oracle as the single-store gate:
-    // sharding, transport, index resolution, and walk all invisible
-    "dsv2_sharded_hnsw_filtered" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("sharded_hnsw_store",
-        SparkEntry.shardedHnswStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "sharded_hnsw_store")
-        .option("collection", "embeddings")
-        .option("filter", "label:lte:7")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // CDC streaming over the SHARDED store: the corpus writes through
-    // the connector (per-id routing; the wrapper journals each routed
-    // batch), then the micro-batch source replays the GLOBAL journal —
-    // positions immutable, per-id order shard-local. Same oracle as the
-    // unsharded stream read
-    "dsv2_sharded_stream_read" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("sharded_cdc_store",
-        new ShardedCollectionStore((0 until 3).map { _ =>
-          InMemoryCollectionStore.single(
-            "embeddings", Collections.homogeneousDescriptor, IndexedSeq.empty)
-        }))
-      hom(s, dir).select("id", "payload", "vector")
-        .write.format("graft.sources.CollectionDataSource")
-        .option("store", "sharded_cdc_store")
-        .option("collection", "embeddings")
-        .mode("append").save()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-shcdc").toString
-      val sink = s"shcdc_out_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = s.readStream.format("graft.sources.CollectionDataSource")
-        .option("store", "sharded_cdc_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-        .writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(sink)
-    }),
-
-    // exact facets across shards: per-member FULL histograms merge by
-    // value, then the global cut — a per-shard top-limit could miss a
-    // value placing in every shard but topping none. Same oracle as the
-    // wire facet gates
-    "dsv2_sharded_facet" -> ((s, dir) => {
-      import graft.sources._
-      import s.implicits._
-      val frame = hom(s, dir).select("id", "payload", "vector")
-      val members = (0 until 3).map { i =>
-        InMemoryCollectionStore.fromRows(
-          frame.filter(shardOf3(col("id")) === i),
-          "embeddings", Collections.homogeneousDescriptor)
-      }
-      new ShardedCollectionStore(members)
-        .facetCounts("embeddings", "label", limit = 5)
-        .toDF("value", "n")
-    }),
-
-    // the full production TOPOLOGY in one gate: connector -> KEYED
-    // binary wire -> scatter-gather -> keyed wires -> 3 rendezvous
-    // member nodes. The pushed top-k crosses the outer wire once; the
-    // service fans out over authenticated member seams and merges shard
-    // pages. Same oracle yet again — neither the transport, the
-    // distribution, nor the auth may be observable above the seam
-    "dsv2_grpc_sharded_search" -> ((s, dir) => {
-      import graft.sources._
-      val (h, p) = SparkEntry.grpcShardedAddr(s, dir)
-      CollectionStores.register("grpc_sharded_store",
-        new GrpcCollectionStore(h, p,
-          apiKey = Some(SparkEntry.ShardedWireKey)))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_sharded_store")
-        .option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "12")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the WRITE path against the sharded store: the connector commit
-    // routes each point to its rendezvous shard (writes never fan out),
-    // the read-back window-maps each scan partition onto shard slices —
-    // same oracle as dsv2_write: distribution must be invisible above
-    // the store seam
-    "dsv2_sharded_write" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("sharded_write_store",
-        new ShardedCollectionStore((0 until 3).map { _ =>
-          InMemoryCollectionStore.single(
-            "embeddings", Collections.homogeneousDescriptor, IndexedSeq.empty)
-        }))
-      hom(s, dir).select("id", "payload", "vector")
-        .write.format("graft.sources.CollectionDataSource")
-        .option("store", "sharded_write_store")
-        .option("collection", "embeddings")
-        .mode("append").save()
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "sharded_write_store")
-        .option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // LIVE RESHARD through the sharded store: the corpus writes through
-    // the connector onto 3 rendezvous shards, the cluster GROWS to 4
-    // (reshard migrates exactly the displaced ~1/4 of ids as a
-    // journaled delete+upsert run — rendezvous moves nothing between
-    // surviving shards), and the read-back must be the same table —
-    // same oracle as dsv2_sharded_write: growing the cluster is
-    // invisible above the store seam
-    // live reshard N->N+1 where the ADDED member is a WIRE client — the
-    // production grow path: provision an empty collection on the remote
-    // node, reshard onto its client; migration upserts route through
-    // the RemoteCollectionClient seam in bounded paged requests
-    "dsv2_sharded_reshard" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("sharded_reshard_node",
-        InMemoryCollectionStore.single(
-          "embeddings", Collections.homogeneousDescriptor, IndexedSeq.empty))
-      val (nh, np) = SparkEntry.reshardNodeAddr()
-      CollectionStores.register("sharded_reshard_store",
-        new ShardedCollectionStore((0 until 3).map { _ =>
-          InMemoryCollectionStore.single(
-            "embeddings", Collections.homogeneousDescriptor, IndexedSeq.empty)
-        }))
-      hom(s, dir).select("id", "payload", "vector")
-        .write.format("graft.sources.CollectionDataSource")
-        .option("store", "sharded_reshard_store")
-        .option("collection", "embeddings")
-        .mode("append").save()
-      CollectionStores.get("sharded_reshard_store")
-        .asInstanceOf[ShardedCollectionStore]
-        .reshard(Seq(new GrpcCollectionStore(nh, np)))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "sharded_reshard_store")
-        .option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // the sharded LIFECYCLE: two label-indexed parquet members, the
-    // freshness mutations routed through the wrapper, then ONE
-    // optimizeMembers() call rebuilding every member's sidecars at its
-    // own log head — the filtered search serves index-pruned again with
-    // empty overlay tails. Same oracle as dsv2_parquet_optimized:
-    // index, mutate, optimize — results identical at every lifecycle
-    // stage, now cluster-wide
-    "dsv2_sharded_optimized" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("sharded_opt_store",
-        SparkEntry.shardedOptimizedStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 13)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "sharded_opt_store").option("collection", "embeddings")
-        .option("filter", "label:eq:3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the sharded lifecycle WITH A WIRE MEMBER: one local parquet member
-    // and one behind a binary server; mutations route through the
-    // wrapper, then ONE optimizeMembers() call reseals the local member
-    // and ships the optimize verb to the remote one — the cluster-wide
-    // freshness loop closed through the wire, same oracle as the
-    // all-local sharded lifecycle gate
-    "dsv2_sharded_optimized_wire" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("sharded_optw_store",
-        SparkEntry.shardedOptimizedWireStore(s, dir))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 13)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "sharded_optw_store").option("collection", "embeddings")
-        .option("filter", "label:eq:3")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the backend's payload filter DSL (`must` match/range conditions)
-    // evaluated BY THE STORE: the `filter` read option narrows the scan
-    // at the seam — non-matching points never surface (and over the
-    // wire, never leave the service)
-    "dsv2_payload_filter" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pf_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pf_store").option("collection", "embeddings")
-        .option("partitions", "4")
-        .option("filter", "label:gte:2;label:lt:5")
-        .load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // the FULL filter object: must + must_not + min_should conjoin into
-    // one store-side predicate (the backend's complete boolean filter
-    // vocabulary) — labels {0,1,6,7,8}: lt 9, not 3, and at least one of
-    // (lte 1, gte 6)
-    "dsv2_filter_boolean" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("bf_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "bf_store").option("collection", "embeddings")
-        .option("partitions", "4")
-        .option("filter", "label:lt:9")
-        .option("filter.not", "label:eq:3")
-        .option("filter.minShould", "1|label:lte:1;label:gte:6")
-        .load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // the same boolean filter SERIALIZED over the wire (must / must_not /
-    // min_should objects in the scroll filter), evaluated by the service.
-    // Same oracle as dsv2_filter_boolean
-    "dsv2_rest_filter_boolean" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("rest_bf_store",
-        new RestCollectionStore(SparkEntry.restBackedUrl(s, dir)))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "rest_bf_store").option("collection", "embeddings")
-        .option("partitions", "4")
-        .option("filter", "label:lt:9")
-        .option("filter.not", "label:eq:3")
-        .option("filter.minShould", "1|label:lte:1;label:gte:6")
-        .load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // IsEmpty through the filter DSL: points whose payload field is
-    // MISSING (no payload at all, absent key, null, or []) — the
-    // backend's is_empty condition; label-0 points get NULL payloads in
-    // this fixture
-    "dsv2_filter_empty" -> ((s, dir) => {
-      import graft.sources._
-      val src = hom(s, dir).select(col("id"),
-        when(json_get_int(col("payload"), "label") === 0, lit(null))
-          .otherwise(col("payload")).as("payload"),
-        col("vector"))
-      CollectionStores.register("fe_store", InMemoryCollectionStore.fromRows(
-        src, "embeddings", Collections.homogeneousDescriptor))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "fe_store").option("collection", "embeddings")
-        .option("partitions", "4")
-        .option("filter", "label:empty:")
-        .load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // MatchAny (keyword IN) through the filter DSL: label in {2, 5, 7},
-    // one store-side condition — the backend's match-any form
-    "dsv2_filter_match_any" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("fa_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "fa_store").option("collection", "embeddings")
-        .option("partitions", "4")
-        .option("filter", "label:match_any:2|5|7")
-        .load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // MatchText through the filter DSL over a PAYLOAD-ONLY collection
-    // (documents as points): full-text token match on a payload field,
-    // evaluated store-side — the backend's text condition on a
-    // text-indexed field
-    "dsv2_filter_text" -> ((s, dir) => {
-      import graft.sources._
-      val dsc = graft.collections.CollectionDescriptor("docs", Seq())
-      val src = docs(s, dir).select(
-        col("doc_id").cast(StringType).as("id"),
-        to_json(struct(col("lang"), col("source"), col("text"))).as("payload"))
-      CollectionStores.register("ft_store",
-        InMemoryCollectionStore.fromRows(src, "docs", dsc))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "ft_store").option("collection", "docs")
-        .option("partitions", "4")
-        .option("filter", "text:match_text:vector batch")
-        .load()
-        .select(col("id"), json_get_str(col("payload"), "source").as("source"))
-    }),
-
-    // ValuesCount condition: the number of values under a payload key
-    // (array length, 1 for a scalar) against a bound — the backend's
-    // values_count range form. `tags` carries doc_id % 4 values (an
-    // EMPTY array when 0, so the zero-count row is represented, not
-    // absent); the filter keeps counts >= 2.
-    "dsv2_filter_values_count" -> ((s, dir) => {
-      import graft.sources._
-      val dsc = graft.collections.CollectionDescriptor("docs", Seq())
-      val src = docs(s, dir).select(
-        col("doc_id").cast(StringType).as("id"),
-        to_json(struct(
-          when(col("doc_id") % 4 === 0, array().cast(ArrayType(LongType)))
-            .otherwise(sequence(lit(1L), col("doc_id") % 4)).as("tags"),
-          col("source"))).as("payload"))
-      CollectionStores.register("vc_store",
-        InMemoryCollectionStore.fromRows(src, "docs", dsc))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "vc_store").option("collection", "docs")
-        .option("partitions", "4")
-        .option("filter", "tags:values_count:gte:2")
-        .load()
-        .select(col("id"), json_get_str(col("payload"), "source").as("source"))
-    }),
-
-    // HasVector condition: filter on the PRESENCE of a named vector
-    // field — the backend's has_vector, meaningful exactly for
-    // heterogeneous collections where points carry disjoint field
-    // subsets (image_embedding exists where vec_id % 3 IN (1, 2))
-    "dsv2_filter_has_vector" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("hv_store", InMemoryCollectionStore.fromRows(
-        Collections.heterogeneous(s, dir),
-        "hetero", Collections.heterogeneousDescriptor))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "hv_store").option("collection", "hetero")
-        .option("partitions", "4")
-        .option("filter", "image_embedding:has_vector:")
-        .load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // DatetimeRange condition: RFC 3339 bounds over a datetime payload
-    // string — the backend's datetime_range. Half-open [Jan 10, Jan 20)
-    // window over the events timeline; the store parses the payload's
-    // microsecond-precision strings, the oracle compares native
-    // timestamps — equality of the two decisions is the test.
-    "dsv2_filter_datetime" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("dtf_store",
-        SparkEntry.eventsDtStore(s, dir))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "dtf_store").option("collection", "events")
-        .option("partitions", "4")
-        .option("filter",
-          "created:dt_gte:2024-01-10T00:00:00;created:dt_lt:2024-01-20T00:00:00")
-        .load()
-        .select(col("id"),
-          json_get_str(col("payload"), "event_type").as("event_type"))
-    }),
-
-    // MatchPhrase condition: query tokens CONSECUTIVE in the field's
-    // token sequence (match_text's unordered bag is not phrase
-    // semantics) — the backend's phrase match on a text-indexed field
-    "dsv2_filter_phrase" -> ((s, dir) => {
-      import graft.sources._
-      val dsc = graft.collections.CollectionDescriptor("docs", Seq())
-      val src = docs(s, dir).select(
-        col("doc_id").cast(StringType).as("id"),
-        to_json(struct(col("source"), col("text"))).as("payload"))
-      CollectionStores.register("ph_store",
-        InMemoryCollectionStore.fromRows(src, "docs", dsc))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "ph_store").option("collection", "docs")
-        .option("partitions", "4")
-        .option("filter", "text:phrase:the data")
-        .load()
-        .select(col("id"), json_get_str(col("payload"), "source").as("source"))
-    }),
-
-    // GeoRadius condition: haversine distance from a center against a
-    // `{lat, lon}` payload object — the backend's geo_radius filter,
-    // evaluated store-side with term-for-term the same IEEE ops as
-    // `v_geo_distance` (the oracle mirrors the formula literally)
-    "dsv2_filter_geo_radius" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("gr_store",
-        SparkEntry.eventsGeoStore(s, dir))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "gr_store").option("collection", "events")
-        .option("partitions", "4")
-        .option("filter", "loc:geo_radius:48.8566,2.3522,2000000")
-        .load()
-        .select(col("id"),
-          json_get_str(col("payload"), "event_type").as("event_type"))
-    }),
-
-    // GeoBoundingBox condition with the ANTIMERIDIAN wrap (left lon >
-    // right lon — the backend's convention): longitude membership is the
-    // OR of the two arcs, latitude a plain BETWEEN
-    "dsv2_filter_geo_box" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("gb_store",
-        SparkEntry.eventsGeoStore(s, dir))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "gb_store").option("collection", "events")
-        .option("partitions", "4")
-        .option("filter", "loc:geo_box:70,170,10,20")
-        .load()
-        .select(col("id"),
-          json_get_str(col("payload"), "event_type").as("event_type"))
-    }),
-
-    // GeoPolygon condition in the wire DSL (`key:geo_polygon:vertices`):
-    // the same ray cast the engine op runs (Geo.pointInPolygon's
-    // per-edge arithmetic), evaluated store-side over the {lat, lon}
-    // payload object — closing the vocabulary gap where the engine had
-    // polygons but the store/wire stopped at radius/box. Oracle SQL is
-    // GENERATED from the same vertex list (Geo.polygonSql)
-    "dsv2_filter_geo_polygon" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("gp_store",
-        SparkEntry.eventsPolyStore(s, dir))
-      val verts = SparkEntry.GeoPoly
-        .flatMap { case (la, lo) => Seq(la, lo) }.mkString(",")
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "gp_store").option("collection", "events")
-        .option("partitions", "4")
-        .option("filter", s"loc:geo_polygon:$verts")
-        .load()
-        .select(col("id"),
-          json_get_str(col("payload"), "event_type").as("event_type"))
-    }),
-
-    // Nested condition: ONE array element satisfies ALL sub-conditions
-    // (per-element scoping — the backend's nested filter). Each doc's
-    // `items` carries a decoy element (tag=meta, n=n_chars, large) and
-    // the probed element (tag=alt, n=doc_id%100): evaluating the
-    // sub-conditions independently across elements would match nearly
-    // every row; the correct same-element form keeps exactly n>=50.
-    "dsv2_filter_nested" -> ((s, dir) => {
-      import graft.sources._
-      val dsc = graft.collections.CollectionDescriptor("docs", Seq())
-      val src = docs(s, dir).select(
-        col("doc_id").cast(StringType).as("id"),
-        to_json(struct(
-          array(
-            struct(lit("meta").as("tag"), col("n_chars").as("n")),
-            struct(lit("alt").as("tag"), (col("doc_id") % 100).as("n")))
-            .as("items"),
-          col("source"))).as("payload"))
-      CollectionStores.register("nf_store",
-        InMemoryCollectionStore.fromRows(src, "docs", dsc))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "nf_store").option("collection", "docs")
-        .option("partitions", "4")
-        .option("filter", "items:nested:tag|eq|alt&n|gte|50")
-        .load()
-        .select(col("id"), json_get_str(col("payload"), "source").as("source"))
-    }),
-
-    // COUNT(*) + payload filter = the backend count API's full-filter
-    // exact form: the pushed CountStar composes with the `must`
-    // conditions into CollectionFilteredCountScan — ONE row crosses the
-    // scan boundary, no payload ever decodes above it
-    "dsv2_payload_count" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pfc_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pfc_store").option("collection", "embeddings")
-        .option("filter", "label:gte:2;label:lt:5")
-        .load()
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // FILTERED vector search — the backend's defining query form
-    // (`query_points` with query AND filter): the store restricts
-    // candidates BEFORE ranking, so the result is the true top-k of the
-    // matching subset (k full rows), not a post-filtered short page of
-    // the global top-k
-    "dsv2_filtered_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("fs_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "fs_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "12")
-        .option("filter", "label:gte:2")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // search PAGINATION + SCORE CUT through the connector — the
-    // backend's offset / score_threshold query params: the store serves
-    // page 2 (offset=4, k=6) of the >=0.25 slice in ONE scored fetch
-    // (offset deepens the heap, threshold filters before insertion);
-    // nothing above the scan re-sorts or re-filters
-    "dsv2_search_page" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("page_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 5)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "page_store").option("collection", "embeddings")
-        .option("search.field", "vector")
-        .option("search.vector",
-          q.map(x => java.lang.Double.toString(x)).mkString(","))
-        .option("search.metric", "cosine").option("search.k", "6")
-        .option("search.offset", "4")
-        .option("search.scoreThreshold", "0.25")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // COUNT(*) through the connector resolves as a store metadata hit
-    // (CollectionCountScan, asserted in CollectionDataSourceSpec) — the
-    // cardinality call every catalog issues, without scanning a point
-    "dsv2_count" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("count_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "count_store").option("collection", "embeddings")
-        .load()
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // the count API's FILTERED form (exact=true): COUNT(*) over a keyset
-    // slice composes the pushed id predicate with the pushed CountStar —
-    // the store walks the narrowed id range with payload/vectors off and
-    // ships ONE row (CollectionFilteredCountScan, plan-asserted)
-    "dsv2_count_filtered" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("countf_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "countf_store").option("collection", "embeddings")
-        .load()
-        .filter(col("id") > "55")
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // the STREAMING read path: a bounded (AvailableNow) replay of the
-    // store's upsert log through the connector's micro-batch CDC source —
-    // one clean ingest replays as exactly the collection contents
-    "dsv2_stream_read" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("cdc_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-cdc-gate").toString
-      val sink = s"cdc_out_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = s.readStream.format("graft.sources.CollectionDataSource")
-        .option("store", "cdc_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-        .writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(sink)
-    }),
-
-    // CDC streaming over the BINARY wire: the micro-batch source's
-    // log_size/log_entries calls cross the protobuf transport — the
-    // upsert log replays through a remote client exactly as it does
-    // locally (same oracle as dsv2_stream_read; transport invisible)
-    "dsv2_grpc_stream_read" -> ((s, dir) => {
-      import graft.sources._
-      val (h, p) = SparkEntry.grpcBackedAddr(s, dir)
-      CollectionStores.register("grpc_cdc_store", new GrpcCollectionStore(h, p))
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-gcdc").toString
-      val sink = s"gcdc_out_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = s.readStream.format("graft.sources.CollectionDataSource")
-        .option("store", "grpc_cdc_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-        .writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(sink)
-    }),
-
-    // continuous collection-to-collection ETL: stream the upsert log OUT
-    // of one collection, transform, stream INTO another — both ends are
-    // the connector's own streaming surfaces; the bounded run must land
-    // exactly the filtered/re-labeled contents in the sink collection
-    "dsv2_stream_pipeline" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("etl_src", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      CollectionStores.register("etl_dst", InMemoryCollectionStore.single(
-        "embeddings", Collections.homogeneousDescriptor, IndexedSeq.empty))
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-etl-ckpt").toString
-      val q = s.readStream.format("graft.sources.CollectionDataSource")
-        .option("store", "etl_src").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        // keep even-labeled points, stamp the payload with a pipeline tag
-        .filter(json_get_int(col("payload"), "label") % 2 === 0)
-        .select(col("id"),
-          concat(lit("""{"etl":1,"orig":"""), col("payload"), lit("}")).as("payload"),
-          col("vector"))
-        .writeStream.format("graft.sources.CollectionDataSource")
-        .option("store", "etl_dst").option("collection", "embeddings")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "etl_dst").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // keyset scroll THROUGH the connector: the `id > last` predicate pushes
-    // to the store scan (SupportsPushDownFilters), which skips the sealed
-    // id-sorted prefix instead of sorting past a deep offset — the scale
-    // form of scroll served by the source itself, not a post-scan filter
-    // (pushdown asserted in CollectionDataSourceSpec)
-    "dsv2_scroll_keyset" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("scroll_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "scroll_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .filter(col("id") > "29")
-        .select(col("id"), col("payload"))
-        .orderBy(col("id"))
-        .limit(10)
-    }),
-
-    // the DSv2 WRITE path end-to-end (A12, todo!() in the reference): seed
-    // an empty collection, append the corpus through df.write (points
-    // buffer executor-side, the commit seals them), read it back through
-    // the connector, match the same parquet oracle
-    "dsv2_write" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("write_store", InMemoryCollectionStore.single(
-        "embeddings", Collections.homogeneousDescriptor, IndexedSeq.empty))
-      hom(s, dir).select("id", "payload", "vector")
-        .write.format("graft.sources.CollectionDataSource")
-        .option("store", "write_store").option("collection", "embeddings")
-        .mode("append").save()
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "write_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // the heterogeneous NAMED collection END-TO-END through the connector —
-    // the reference's flagship e2e shape (/root/reference/tests/e2e.rs:
-    // 111-332): named dense fields on disjoint point subsets, a
-    // multi-vector field, a sparse field, NULL for absent fields. Rows
-    // encode to wire Points executor-side through the DSv2 WRITE (dense +
-    // multi + sparse branches of CollectionDataWriter), seal id-sorted,
-    // and decode back through PointDecoder on read — every field kind
-    // value-checked against the parquet oracle, not just id/payload.
-    "dsv2_hetero" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("hetero_store", InMemoryCollectionStore.fromRows(
-        Collections.heterogeneous(s, dir),
-        "hetero", Collections.heterogeneousDescriptor))
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "hetero_store").option("collection", "hetero")
-        .option("partitions", "4").load()
-        .select(
-          col("id"), col("payload"),
-          vq6(col("text_embedding")).as("text_embedding_q6"),
-          vq6(col("image_embedding")).as("image_embedding_q6"),
-          vq6(col("audio_embedding")).as("audio_embedding_q6"),
-          array_join(transform(col("multi_embeddings"), sv => vq6(sv)), ";")
-            .as("multi_q6"),
-          iarr(col("keywords_indices")).as("keywords_indices_s"),
-          vq6(col("keywords_values")).as("keywords_values_q6"))
-    }),
-
-    // NAMED-field vector search through the connector: the projection
-    // narrows the store fetch to id + text_embedding (FetchSpec), rows
-    // lacking the field decode as NULL and are excluded, and the codegen
-    // cosine kernel ranks the store-decoded vectors — the heterogeneous
-    // analog of dsv2_vector_search (reference e2e.rs:214-238 searches a
-    // named field of the same collection shape)
-    // the flagship hybrid shape THROUGH the connector: dense (named
-    // field) + sparse branches from the same store round-trip, fused by
-    // RRF — reference e2e hybrid query re-expressed
-    "dsv2_hybrid" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("hy_store", InMemoryCollectionStore.fromRows(
-        Collections.heterogeneous(s, dir),
-        "hetero", Collections.heterogeneousDescriptor))
-      val base = s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "hy_store").option("collection", "hetero")
-        .option("partitions", "4").load()
-      val qd = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val dense = base
-        .filter(col("id") =!= "0" && col("text_embedding").isNotNull)
-        .select(col("id"),
-          round(v_cosine(dvec(col("text_embedding")), vec(qd)), 6).as("score"))
-        .orderBy(col("score").desc, col("id").asc).limit(50)
-      val sp = base
-        .select(col("id"), col("keywords_indices").as("ki"),
-          col("keywords_values").cast(ArrayType(DoubleType)).as("kv"))
-        .filter(col("ki").isNotNull)
-      val qs = sp.filter(col("id") === "0")
-        .select(col("ki").as("qi"), col("kv").as("qv"))
-      val sparse = sp.filter(col("id") =!= "0").crossJoin(broadcast(qs))
-        .withColumn("score",
-          round(v_sparse_dot(col("ki"), col("kv"), col("qi"), col("qv")), 6))
-        .select(col("id"), col("score"))
-        .orderBy(col("score").desc, col("id").asc).limit(50)
-      Search.fuseRRF(Seq(dense, sparse), k = 20)
-    }),
-
-    "dsv2_hetero_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("hs_store", InMemoryCollectionStore.fromRows(
-        Collections.heterogeneous(s, dir),
-        "hetero", Collections.heterogeneousDescriptor))
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "hs_store").option("collection", "hetero")
-        .option("partitions", "4").load()
-        .filter(col("id") =!= "0" && col("text_embedding").isNotNull)
-        .select(col("id"),
-          round(v_cosine(dvec(col("text_embedding")), vec(q)), 6).as("score"))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    // SPARSE search through the connector: the keywords field decodes
-    // from the store as the (indices, values) pair, the fetch narrows to
-    // that ONE logical field (both physical columns), rows lacking it are
-    // NULL and excluded, and the sorted-merge sparse-dot kernel ranks —
-    // the sparse leg of the reference's named-collection e2e
-    "dsv2_sparse_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("ss_store", InMemoryCollectionStore.fromRows(
-        Collections.heterogeneous(s, dir),
-        "hetero", Collections.heterogeneousDescriptor))
-      val base = s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "ss_store").option("collection", "hetero")
-        .option("partitions", "4").load()
-        .select(col("id"), col("keywords_indices").as("ki"),
-          col("keywords_values").cast(ArrayType(DoubleType)).as("kv"))
-        .filter(col("ki").isNotNull)
-      val q = base.filter(col("id") === "0")
-        .select(col("ki").as("qi"), col("kv").as("qv"))
-      base.filter(col("id") =!= "0").crossJoin(broadcast(q))
-        .withColumn("score",
-          round(v_sparse_dot(col("ki"), col("kv"), col("qi"), col("qv")), 6))
-        .select(col("id"), col("score"))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    // MULTI-VECTOR (MaxSim) search through the connector: the ragged
-    // multi_embeddings field decodes from the store, NULL rows (points
-    // without the field) are excluded, and the MaxSim kernel ranks — the
-    // third vector-kind leg of the named-collection e2e, so all of
-    // dense / sparse / multi now search end-to-end over store decode
-    "dsv2_multi_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("ms_store", InMemoryCollectionStore.fromRows(
-        Collections.heterogeneous(s, dir),
-        "hetero", Collections.heterogeneousDescriptor))
-      val base = s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "ms_store").option("collection", "hetero")
-        .option("partitions", "4").load()
-        .select(col("id"), col("multi_embeddings").as("multi"))
-        .filter(col("multi").isNotNull)
-      val q = base.filter(col("id") === "0").select(col("multi").as("__qmulti"))
-      base.filter(col("id") =!= "0").crossJoin(broadcast(q))
-        .withColumn("score", round(v_maxsim(col("multi"), col("__qmulti")), 6))
-        .select(col("id"), col("score"))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    // INDEXED MULTI-VECTOR (MaxSim) search: the pushed multi query
-    // serves from the POOLED-key graph sidecar — candidates walk the
-    // per-segment graphs over mean-pooled keys, the exact MaxSim kernel
-    // rescores only the candidate margin from the segment partitions
-    // (the backend's multivector HNSW + MaxSim comparator,
-    // /root/reference/tests/e2e.rs:142-147). Same brute oracle as
-    // dsv2_multi_search: the index must be invisible in the page.
-    // Candidate-stage pruning is spec-asserted (primaries never open).
-    "dsv2_multi_indexed_search" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_multiidx_store",
-        SparkEntry.parquetMultiVecIndexStore(s, dir))
-      val qm = Collections.heterogeneous(s, dir)
-        .filter(col("id") === "0")
-        .select(col("multi_embeddings")).head()
-        .getSeq[scala.collection.Seq[Float]](0)
-      val mv = qm.map(_.map(x => java.lang.Double.toString(x.toDouble))
-        .mkString(",")).mkString(";")
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_multiidx_store").option("collection", "hetero")
-        .option("search.field", "multi_embeddings")
-        .option("search.multiVector", mv)
-        .option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // FILTERED indexed multi-vector search: payload filter + ColBERT
-    // MaxSim served from the pooled-key graph — the dense filtered-HNSW
-    // planner (index-resolved matched ids, cost-based exact-micro vs
-    // accepting-walk arms) composed with the exact MaxSim rescore of
-    // the margin. The backend filters every query form uniformly (its
-    // ColBERT section sits beside the filtered sections,
-    // /root/reference/tests/bin/tests.sql:156-168); late-interaction +
-    // payload filter is the routine hybrid-retrieval shape. Exact at
-    // both SFs vs the brute filtered MaxSim oracle (gate scale rides
-    // the micro arm; MultiIndexedSpec pins BOTH arms by counter at
-    // past-the-dial corpus size).
-    "dsv2_multi_indexed_filtered" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("pq_multiidxf_store",
-        SparkEntry.parquetMultiVecFilteredStore(s, dir))
-      val qm = Collections.heterogeneous(s, dir)
-        .filter(col("id") === "0")
-        .select(col("multi_embeddings")).head()
-        .getSeq[scala.collection.Seq[Float]](0)
-      val mv = qm.map(_.map(x => java.lang.Double.toString(x.toDouble))
-        .mkString(",")).mkString(";")
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "pq_multiidxf_store").option("collection", "hetero")
-        .option("filter", "label:lte:5")
-        .option("search.field", "multi_embeddings")
-        .option("search.multiVector", mv)
-        .option("search.k", "10")
-        .load()
-        .select(col("id"), round(col("_score"), 6).as("score"))
-    }),
-
-    // the CATALOG surface: collections addressed as <catalog>.<name> in
-    // plain SQL — configure the catalog once (conf), and reads resolve
-    // through CollectionCatalog.loadTable to the same CollectionTable the
-    // path API uses (identical pushdown/statistics). The Spark-native
-    // form of the reference's per-table SessionContext registration (A1)
-    "dsv2_catalog_sql" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("catalog_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.CollectionCatalog")
-      s.conf.set("spark.sql.catalog.graft_cat.store", "catalog_store")
-      s.sql(
-        """SELECT id, payload FROM graft_cat.embeddings
-          |WHERE id > '29' ORDER BY id LIMIT 10""".stripMargin)
-    }),
-
-    // CREATE TABLE AS SELECT through the catalog: the ingest DDL a
-    // SQL-first user reaches for before df.write — Spark's non-atomic
-    // CTAS (create, then write through the table's own WriteBuilder,
-    // dropping on failure) against CollectionCatalog.createTable, with
-    // the descriptor derived from the SELECT's schema
-    // plain INSERT INTO ... SELECT through the catalog — completes the
-    // SQL DML matrix (INSERT / UPDATE / DELETE / MERGE / CTAS / ALTER /
-    // TRUNCATE all gated)
-    "dsv2_insert_sql" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("ins_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.conf.set("spark.sql.catalog.ins_cat", "graft.sources.CollectionCatalog")
-      s.conf.set("spark.sql.catalog.ins_cat.store", "ins_store")
-      s.sql("DROP TABLE IF EXISTS ins_cat.picked")
-      s.sql("CREATE TABLE ins_cat.picked (id STRING, payload STRING, vector ARRAY<FLOAT>)")
-      s.sql(
-        """INSERT INTO ins_cat.picked
-          |SELECT id, payload, vector FROM ins_cat.embeddings
-          |WHERE id LIKE '%7'""".stripMargin)
-      s.sql("SELECT id, payload FROM ins_cat.picked")
-    }),
-
-    "dsv2_ctas" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("ctas_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.conf.set("spark.sql.catalog.ctas_cat", "graft.sources.CollectionCatalog")
-      s.conf.set("spark.sql.catalog.ctas_cat.store", "ctas_store")
-      s.sql("DROP TABLE IF EXISTS ctas_cat.evens")
-      s.sql(
-        """CREATE TABLE ctas_cat.evens AS
-          |SELECT id, payload, vector FROM ctas_cat.embeddings
-          |WHERE CAST(get_json_object(payload, '$.label') AS INT) % 2 = 0""".stripMargin)
-      s.sql("SELECT id, payload FROM ctas_cat.evens")
-    }),
-
-    // schema evolution through the catalog: ALTER TABLE ADD COLUMNS
-    // appends a NEW vector field as a descriptor-only change (no data
-    // rewrite at any scale — the heterogeneity rule already decodes the
-    // field as NULL on pre-alter points); post-alter inserts carry it
-    "dsv2_alter" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("alter_store",
-        new InMemoryCollectionStore(Map.empty, Map.empty))
-      s.conf.set("spark.sql.catalog.alter_cat", "graft.sources.CollectionCatalog")
-      s.conf.set("spark.sql.catalog.alter_cat.store", "alter_store")
-      s.sql("DROP TABLE IF EXISTS alter_cat.prof")
-      s.sql("CREATE TABLE alter_cat.prof (id STRING, payload STRING, emb ARRAY<FLOAT>)")
-      s.sql("INSERT INTO alter_cat.prof VALUES " +
-        "('a', NULL, array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))), " +
-        "('b', '{\"k\":1}', array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))")
-      s.sql("ALTER TABLE alter_cat.prof ADD COLUMNS (emb2 ARRAY<FLOAT>)")
-      s.sql("INSERT INTO alter_cat.prof VALUES " +
-        "('c', NULL, array(CAST(5.0 AS FLOAT), CAST(6.0 AS FLOAT)), " +
-        "array(CAST(7.0 AS FLOAT), CAST(8.0 AS FLOAT)))")
-      s.sql("SELECT * FROM alter_cat.prof")
-        .select(col("id"), col("payload"),
-          vq6(col("emb")).as("emb_q6"), vq6(col("emb2")).as("emb2_q6"))
-    }),
-
-    // SQL DELETE through the catalog (SupportsDeleteV2): the reference
-    // client's delete-points call as Spark DDL — deletes resolve by id
-    // through the store's TOMBSTONE path (the sealed index shrinks AND
-    // the change log records the deletes), then the survivors read back
-    "dsv2_delete_sql" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("delsql_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.conf.set("spark.sql.catalog.del_cat", "graft.sources.CollectionCatalog")
-      s.conf.set("spark.sql.catalog.del_cat.store", "delsql_store")
-      s.sql("DELETE FROM del_cat.embeddings WHERE id IN ('3', '13', '23')")
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "delsql_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // SQL UPDATE through the catalog (SupportsRowLevelOperations): a
-    // group-based copy-on-write rewrite — read the collection, apply the
-    // SET to matching rows, commit the replacement atomically (CDC diff
-    // logged). The DML surface a SQL-first user expects beside DELETE.
-    "dsv2_update_sql" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("upd_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.conf.set("spark.sql.catalog.upd_cat", "graft.sources.CollectionCatalog")
-      s.conf.set("spark.sql.catalog.upd_cat.store", "upd_store")
-      s.sql(
-        """UPDATE upd_cat.embeddings
-          |SET payload = concat('{"boosted":', payload, '}')
-          |WHERE CAST(get_json_object(payload, '$.label') AS INT) % 5 = 0""".stripMargin)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "upd_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // SQL MERGE INTO through the catalog: upsert-by-query — matched rows
-    // update, unmatched source rows insert, one atomic rewrite commit
-    "dsv2_merge_sql" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("mrg_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      s.conf.set("spark.sql.catalog.mrg_cat", "graft.sources.CollectionCatalog")
-      s.conf.set("spark.sql.catalog.mrg_cat.store", "mrg_store")
-      // source: rows 0..19 re-keyed to 490..509 — 490..499 match (update),
-      // 500..509 don't (insert)
-      s.sql(
-        """MERGE INTO mrg_cat.embeddings t
-          |USING (SELECT CAST(CAST(id AS BIGINT) + 490 AS STRING) AS id,
-          |              payload, vector
-          |       FROM mrg_cat.embeddings WHERE CAST(id AS BIGINT) < 20) s
-          |ON t.id = s.id
-          |WHEN MATCHED THEN UPDATE SET payload = concat('{"merged":', s.payload, '}')
-          |WHEN NOT MATCHED THEN INSERT (id, payload, vector)
-          |  VALUES (s.id, s.payload, s.vector)""".stripMargin)
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "mrg_store").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // the CHANGE LOG as a table (cdc=true batch read): after an ingest
-    // and a delete, the log replays as upserts of every id (in seal
-    // order, positions 0..n-1) followed by delete TOMBSTONES (id only,
-    // payload NULL) — the op-history audit face of the collection
-    "dsv2_cdc_log" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("cdclog_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      CollectionStores.update("cdclog_store") {
-        case mem: InMemoryCollectionStore =>
-          mem.removed("embeddings", Set("3", "13", "23"))
-        case other => other
-      }
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "cdclog_store").option("collection", "embeddings")
-        .option("cdc", "true").option("partitions", "4").load()
-        .select(col("_op"), col("_seq"), col("id"), col("payload"))
-    }),
-
-    // NET CHANGE SET between two versions, served FROM the change log
-    // (the change-data-feed shape): slice the log past the base version,
-    // last op per id wins — no snapshot join, cost scales with the log
-    // slice, not the collection
-    "dsv2_version_diff" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("vdiff_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      val base = CollectionStores.get("vdiff_store").logSize("embeddings")
-      CollectionStores.update("vdiff_store") {
-        case mem: InMemoryCollectionStore =>
-          mem.removed("embeddings", Set("3", "13"))
-            .payloadPatched("embeddings", Set("7", "17"), """{"reviewed":true}""")
-            .appended("embeddings", IndexedSeq(Point("zz_new",
-              Some("""{"label":-1}"""),
-              dense = Map("vector" -> Array.fill(64)(0.5f)))))
-        case other => other
-      }
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "vdiff_store").option("collection", "embeddings")
-        .option("cdc", "true").option("partitions", "4").load()
-        .filter(col("_seq") >= base)
-        .groupBy(col("id"))
-        .agg(max_by(col("_op"), col("_seq")).as("final_op"),
-          count(lit(1)).as("n_entries"))
-    }),
-
-    // the dsv2_stream_pipeline shape expressed PURELY in table names:
-    // readStream.table -> transform -> writeStream.toTable, both ends
-    // resolving through the TableCatalog to the same CollectionTable the
-    // path API uses — continuous collection-to-collection ETL as plain
-    // SQL-addressable identifiers, no format()/option() plumbing
-    "dsv2_stream_table" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("st_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      CollectionStores.update("st_store") {
-        case mem: InMemoryCollectionStore => mem.withCollection("replica",
-          Collections.homogeneousDescriptor.copy(name = "replica"))
-        case other => other
-      }
-      s.conf.set("spark.sql.catalog.st_cat", "graft.sources.CollectionCatalog")
-      s.conf.set("spark.sql.catalog.st_cat.store", "st_store")
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-st-ckpt").toString
-      val q = s.readStream.table("st_cat.embeddings")
-        .filter(json_get_int(col("payload"), "label") % 2 === 0)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append")
-        .toTable("st_cat.replica")
-      q.processAllAvailable()
-      q.stop()
-      s.sql("SELECT id, payload FROM st_cat.replica")
-    }),
-
-    // LOG COMPACTION: truncate the ingest prefix (replaced by a state
-    // snapshot), keep the delete tail at its ORIGINAL global positions —
-    // the batch CDC read serves exactly the retained tail, seq numbers
-    // undisturbed, so checkpointed readers past the compaction point
-    // continue unaffected
-    "dsv2_cdc_compacted" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("cdcc_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      val ingested = CollectionStores.get("cdcc_store").logSize("embeddings")
-      CollectionStores.update("cdcc_store") {
-        case mem: InMemoryCollectionStore =>
-          mem.removed("embeddings", Set("3", "13", "23"))
-            .compacted("embeddings", ingested)
-        case other => other
-      }
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "cdcc_store").option("collection", "embeddings")
-        .option("cdc", "true").option("partitions", "4").load()
-        .select(col("_op"), col("_seq"), col("id"))
-    }),
-
-    // TIME TRAVEL: after deletes, read the collection AS OF the
-    // change-log position before them (asOfSeq) — the deleted rows are
-    // back, exactly the original ingest. Point-in-time audit reads served
-    // from the same log the CDC stream replays.
-    "dsv2_time_travel" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("tt_store", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      val preDelete = CollectionStores.get("tt_store").logSize("embeddings")
-      CollectionStores.update("tt_store") {
-        case mem: InMemoryCollectionStore =>
-          mem.removed("embeddings", Set("3", "13", "23"))
-        case other => other
-      }
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "tt_store").option("collection", "embeddings")
-        .option("asOfSeq", preDelete.toString)
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    }),
-
-    // CDC REPLICATION end-to-end: stream the full change log (upserts +
-    // delete tombstones, each with its log position) out of one
-    // collection and into another through the cdc write face — `_seq`
-    // makes the sink apply entries in exact log order, so the replica
-    // converges to the source's surviving set, deletes included
-    "dsv2_stream_delete" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("sd_src", InMemoryCollectionStore.fromRows(
-        hom(s, dir).select("id", "payload", "vector"),
-        "embeddings", Collections.homogeneousDescriptor))
-      CollectionStores.update("sd_src") {
-        case mem: InMemoryCollectionStore =>
-          mem.removed("embeddings", Set("3", "13", "23"))
-        case other => other
-      }
-      CollectionStores.register("sd_dst", InMemoryCollectionStore.single(
-        "embeddings", Collections.homogeneousDescriptor, IndexedSeq.empty))
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-sd-ckpt").toString
-      val q = s.readStream.format("graft.sources.CollectionDataSource")
-        .option("store", "sd_src").option("collection", "embeddings")
-        .option("cdc", "true").option("partitions", "4").load()
-        .writeStream.format("graft.sources.CollectionDataSource")
-        .option("store", "sd_dst").option("collection", "embeddings")
-        .option("cdc", "true")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      s.read.format("graft.sources.CollectionDataSource")
-        .option("store", "sd_dst").option("collection", "embeddings")
-        .option("partitions", "4").load()
-        .select(col("id"), col("payload"))
-    })
-  )
-
-  /** §2.C dense vector search surface. */
-  private val denseSearch: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "cosine_topk" -> ((s, dir) =>
-      Search.topKById(hom(s, dir).select("id", "vector"), "vector", "0", 10)
-        .select("id", "score")),
-
-    "dot_topk" -> ((s, dir) =>
-      Search.topKById(hom(s, dir).select("id", "vector"), "vector", "1", 10,
-        metric = "dot").select("id", "score")),
-
-    "euclid_topk" -> ((s, dir) =>
-      Search.topKById(hom(s, dir).select("id", "vector"), "vector", "2", 10,
-        metric = "euclid").select("id", "score")),
-
-    // the backend Distance enum's fourth metric (Cosine/Dot/Euclid are
-    // declared in the reference's collections, e2e.rs:66,135,139;
-    // Manhattan completes the public enum) — same codegen kernel family
-    "manhattan_topk" -> ((s, dir) =>
-      Search.topKById(hom(s, dir).select("id", "vector"), "vector", "3", 10,
-        metric = "manhattan").select("id", "score")),
-
-    "within_radius_agg" -> ((s, dir) => {
-      val df = hom(s, dir)
-      val q = qvecOf(df, "0")
-      df.filter(col("id") =!= "0").crossJoin(broadcast(q))
-        .withColumn("label", json_get_int(col("payload"), "label"))
-        .filter(v_euclid(col("vector"), col("__qvec")) < lit(3.0))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    "score_blend" -> ((s, dir) => {
-      val df = hom(s, dir)
-      val q0 = qvecOf(df, "0", "__q0"); val q1 = qvecOf(df, "1", "__q1")
-      df.filter(!col("id").isin("0", "1"))
-        .crossJoin(broadcast(q0)).crossJoin(broadcast(q1))
-        .withColumn("score", round(
-          lit(0.7) * v_cosine(col("vector"), col("__q0")) +
-            lit(0.3) * v_cosine(col("vector"), col("__q1")), 6))
-        .select(col("id"), col("score"))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(15)
-    }),
-
-    "gauss_decay" -> ((s, dir) => {
-      val df = hom(s, dir)
-      val q = qvecOf(df, "0")
-      df.filter(col("id") =!= "0").crossJoin(broadcast(q))
-        .withColumn("decay",
-          round(v_gauss_decay(v_euclid(col("vector"), col("__qvec")), lit(3.0)), 6))
-        .select(col("id"), col("decay"))
-        .orderBy(col("decay").desc, col("id").asc)
-        .limit(20)
-    }),
-
-    // the other two decay kernels of the backend's formula family
-    // (exp_decay / lin_decay; gauss_decay above) blended in one codegen
-    // projection — same midpoint-0.5 convention, decay(scale) = 0.5
-    "decay_rescore" -> ((s, dir) => {
-      val df = hom(s, dir)
-      val q = qvecOf(df, "0")
-      df.filter(col("id") =!= "0").crossJoin(broadcast(q))
-        .withColumn("decay", round(
-          lit(0.5) * v_exp_decay(v_euclid(col("vector"), col("__qvec")), lit(3.0)) +
-            lit(0.5) * v_lin_decay(v_euclid(col("vector"), col("__qvec")), lit(3.0)), 6))
-        .select(col("id"), col("decay"))
-        .orderBy(col("decay").desc, col("id").asc)
-        .limit(20)
-    }),
-
-    // the backend's FORMULA query (score-boosting rescore: arbitrary
-    // arithmetic over similarity, decay functions, and payload fields) —
-    // re-expressed Spark-first: the Column algebra IS the formula
-    // language, every term codegen'd in one projection. Weighted cosine
-    // + gauss decay + payload-condition boost, ranked on the rounded
-    // blend like the reference's rescore stage
-    "formula_rescore" -> ((s, dir) => {
-      val df = hom(s, dir)
-      val q = qvecOf(df, "0")
-      df.filter(col("id") =!= "0").crossJoin(broadcast(q))
-        .withColumn("score", round(
-          lit(0.6) * v_cosine(col("vector"), col("__qvec")) +
-            lit(0.3) * v_gauss_decay(
-              v_euclid(col("vector"), col("__qvec")), lit(3.0)) +
-            lit(0.1) * when(json_get_int(col("payload"), "label") <= 4,
-              lit(1.0)).otherwise(lit(0.0)), 6))
-        .select(col("id"), col("score"))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(15)
-    }),
-
-    "random_sample" -> ((s, dir) =>
-      Search.randomSample(hom(s, dir), 20, seed = 42L).select("id")),
-
-    // ~25% of every language stratum via a data-derived md5 permutation —
-    // a pure map-side filter (no shuffle, no per-group state), exactly
-    // reproducible in any engine (df.stat.sampleBy is per-partition RNG)
-    "stratified_sample" -> ((s, dir) =>
-      Search.stratifiedSample(docs(s, dir), "doc_id", "lang",
-          fraction = 0.25, seed = 42L)
-        .select(col("doc_id"), col("lang"))),
-
-    // balanced training set: EXACTLY 40 docs per language by the same
-    // engine-stable md5 draw (fractions keep skew; quotas equalize it)
-    "quota_sample" -> ((s, dir) =>
-      Search.quotaSample(docs(s, dir), "doc_id", "lang", n = 40, seed = 42L)
-        .select(col("doc_id"), col("lang"))),
-
-    // target-mixture rebalancing: per-source acceptance rates derived
-    // from target weight / natural proportion (scaled so the
-    // most-upweighted source keeps everything), accept decision via the
-    // engine-stable md5 permutation — the data-mixing step of a training
-    // pipeline, exactly reproducible at any layout
-    "mix_sources" -> ((s, dir) =>
-      Search.mixSources(docs(s, dir), "doc_id", "source",
-          MixTargets, seed = 42L)
-        .select(col("doc_id"), col("source"))),
-
-    // deterministic 80/10/10 split assignment: split = f(doc_id, seed),
-    // stable under any partitioning/engine/rerun (dataset governance)
-    "split_assign" -> ((s, dir) =>
-      Search.assignSplit(docs(s, dir), "doc_id",
-          Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)), seed = 42L)
-        .select(col("doc_id"), col("split"))),
-
-    // concat-then-chunk sequence packing: per-lang token stream sliced
-    // into 1024-token training windows; docs carry the window their
-    // first token lands in
-    "seq_pack" -> ((s, dir) =>
-      TextAnalysis.packSequences(docs(s, dir), "doc_id", "text",
-          "lang", budgetTokens = 1024L)),
-
-    // the END-TO-END ordering pipeline in one gate: Gopher quality
-    // filter -> deterministic md5 training order -> token-budget packing
-    // (the filter is map-side, the order+pack is ONE distributed range
-    // sort + the partition-offset running sum — no global window)
-    "mix_pack" -> ((s, dir) => {
-      val kept = TextAnalysis.gopherFilter(docs(s, dir), "doc_id", "text")
-        .filter(col("keep")).select(col("doc_id"), col("n_tokens"))
-      val hashed = kept.withColumn("__h",
-        md5(concat(lit("mp:"), col("doc_id").cast(StringType))))
-      graft.ops.Ranks.withRunningSum(hashed, "cum", col("n_tokens"),
-          col("__h").asc, col("doc_id").asc)
-        .withColumn("seq_id", expr("(cum - n_tokens) DIV 1024"))
-        .select(col("doc_id"), col("cum"), col("seq_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // packing-efficiency report over the seq_pack layout: per packed
-    // sequence, doc count / token load / fill ratio vs the 1024 budget
-    // (first-fit-by-offset packs may overflow where a doc straddles the
-    // boundary — the fill column is the metric that says whether the
-    // budget or the doc-length distribution needs tuning). One extra
-    // partial-agg shuffle over the pack frame
-    "pack_stats" -> ((s, dir) =>
-      TextAnalysis.packSequences(docs(s, dir), "doc_id", "text",
-          "lang", budgetTokens = 1024L)
-        .groupBy(col("lang"), col("seq_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("tokens"))
-        .withColumn("fill", round(col("tokens") / lit(1024.0), 6))
-        .orderBy(col("lang"), col("seq_id"))),
-
-    // context-window chunking: 16-token windows every 8 tokens (50%
-    // overlap) — one map-side generate+explode, no shuffle
-    "chunk_docs" -> ((s, dir) =>
-      TextAnalysis.chunkDocs(docs(s, dir), "doc_id", "text",
-          window = 16, stride = 8)),
-
-    // corpus vocabulary: top-50 tokens by occurrence with doc frequency;
-    // two-level exact aggregation (map-side combine on (token, doc))
-    "vocab_topk" -> ((s, dir) =>
-      TextAnalysis.vocabulary(docs(s, dir), "doc_id", "text", k = 50)),
-
-    // per-doc top-3 TF-IDF terms; integer micro-idf so the rank boundary
-    // is exact cross-engine (corpus size folds into the job as a
-    // broadcast one-row aggregate — no separate driver count pass)
-    "tfidf_topk" -> ((s, dir) =>
-      TextAnalysis.tfidfTopTerms(docs(s, dir), "doc_id", "text", perDoc = 3)),
-
-    // V_SEARCH named-field form on the heterogeneous collection: score a
-    // named vector column, NULL rows (points without that field) drop out
-    "named_field_search" -> ((s, dir) => {
-      val h = Collections.heterogeneous(s, dir)
-      val q = h.filter(col("id") === "0").select(col("text_embedding").as("__qvec"))
-      h.filter(col("id") =!= "0" && col("text_embedding").isNotNull)
-        .crossJoin(broadcast(q))
-        .withColumn("score", round(v_cosine(col("text_embedding"), col("__qvec")), 6))
-        .select(col("id"), col("score"))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    // payload filter + vector search combo (tests.sql:56-59 shape)
-    "filtered_search" -> ((s, dir) => {
-      val df = hom(s, dir)
-      val q = qvecOf(df, "0")
-      df.filter(col("id") =!= "0" &&
-          json_get_int(col("payload"), "label").isin(1, 2, 3))
-        .crossJoin(broadcast(q))
-        .withColumn("score", round(v_cosine(col("vector"), col("__qvec")), 6))
-        .select(col("id"), col("score"))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    // the SQL path end-to-end: registered vector functions + scalar
-    // subquery, transliterating the corpus's V_SEARCH call shape
-    "sql_vector_search" -> ((s, dir) => {
-      graft.functions.registerAll(s)
-      hom(s, dir).createOrReplaceTempView("c")
-      s.sql(
-        """SELECT id, ROUND(v_cosine(vector,
-          |         (SELECT vector FROM c WHERE id = '5')), 6) AS score
-          |FROM c WHERE id <> '5'
-          |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin)
-    }),
-
-    // the corpus's ->/->> JSON OPERATORS as real SQL syntax (tests.sql:
-    // 56-58,219-224) via the injected GraftSqlParser: tight-form arrows
-    // rewrite to json_get/json_as_text pre-delegation, chains nest —
-    // requires the session built with spark.sql.extensions (Verify/Bench
-    // are; ArrowSql + ExtensionsSpec pin the grammar rules)
-    "sql_arrow_ops" -> ((s, dir) => {
-      hom(s, dir).select(col("id"),
-        to_json(struct(struct(
-          json_get_int(col("payload"), "label").as("label")).as("meta")))
-          .as("payload"))
-        .createOrReplaceTempView("arrow_corpus")
-      s.sql(
-        """SELECT id, payload->'meta'->'label' AS label_json,
-          |       payload->>'meta' AS meta_text
-          |FROM arrow_corpus
-          |WHERE payload->'meta'->>'label' = '7'
-          |ORDER BY id""".stripMargin)
-    })
-  )
-
-  /** §2.C sparse / multi-vector / composite pipelines. */
-  private val compositeSearch: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "sparse_search" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "embeddings")
-      val (ki, kv) = sparseOf(col("embedding"))
-      val base = e.select(col("vec_id").cast(StringType).as("id"),
-        ki.as("ki"), kv.as("kv"))
-      val q = base.filter(col("id") === "0")
-        .select(col("ki").as("qi"), col("kv").as("qv"))
-      base.filter(col("id") =!= "0").crossJoin(broadcast(q))
-        .withColumn("score",
-          round(v_sparse_dot(col("ki"), col("kv"), col("qi"), col("qv")), 6))
-        .select(col("id"), col("score"))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    // the SAME query served from the stored inverted dimension index
-    // (SparseIndex): partition-pruned to the query dims' buckets, exact
-    // ascending-dim fold — scores bit-identical to the kernel scan above,
-    // so this gate shares sparse_search's brute-force oracle shape
-    "sparse_inverted_search" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "embeddings")
-      val (ki, kv) = sparseOf(col("embedding"))
-      val qRow = e.filter(col("vec_id") === 0)
-        .select(ki.as("ki"), kv.as("kv")).head()
-      graft.ops.SparseIndex.searchPostings(sparseIndexStore(s, dir),
-        qRow.getSeq[Int](0), qRow.getSeq[Double](1), k = 10, nBuckets = 16,
-        excludeId = Some("0"))
-    }),
-
-    // sparse search under the IDF modifier (the backend's Modifier::Idf):
-    // query values scaled by BM25-idf of each term's stored document
-    // frequency, then the SAME sparse dot kernel — rare terms dominate.
-    // The idf factors quantize at 1e-6 on both sides (vq6 recipe), so the
-    // oracle re-derives them bit-identically from its own df counts
-    "sparse_idf_search" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "embeddings")
-      val (ki, kv) = sparseOf(col("embedding"))
-      val base = e.select(col("vec_id").cast(StringType).as("id"),
-        ki.as("ki"), kv.as("kv"))
-      val qRow = base.filter(col("id") === "0")
-        .select(col("ki"), col("kv")).head()
-      Search.sparseIdfSearch(base, "id", "ki", "kv",
-        qRow.getSeq[Int](0), qRow.getSeq[Double](1), k = 10)
-    }),
-
-    "colbert_maxsim" -> ((s, dir) => {
-      val e = hom(s, dir)
-        .withColumn("multi", array(col("vector"), reverse(col("vector"))))
-      val q = e.filter(col("id") === "0").select(col("multi").as("__qmulti"))
-      e.filter(col("id") =!= "0").crossJoin(broadcast(q))
-        .withColumn("score", round(v_maxsim(col("multi"), col("__qmulti")), 6))
-        .select(col("id"), col("score"))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    "recommend" -> ((s, dir) =>
-      Search.recommend(hom(s, dir), "vector",
-        posIds = Seq("0", "1", "2"), negIds = Seq("3"), k = 10)
-        .select("id", "score")),
-
-    // vector-literal recommend (tests.sql:97-105): no id lookup at all —
-    // the composite query is computed driver-side from the literal examples
-    "recommend_literal" -> ((s, dir) =>
-      Search.recommendVectors(hom(s, dir), "vector",
-        posVecs = recLitPos, negVecs = recLitNeg, k = 10)
-        .select("id", "score")),
-
-    // recommend with lookup_from: positive examples resolved from ANOTHER
-    // collection's named vector field (the hetero collection's
-    // text_embedding), scored over THIS collection — example resolution
-    // is a bounded by-id fetch (2 rows), cross-collection like the
-    // backend's lookup_from, so no example exclusion applies here
-    "recommend_lookup_from" -> ((s, dir) => {
-      val het = Collections.heterogeneous(s, dir)
-      val pos = Seq("0", "3").map(id => het.filter(col("id") === id)
-        .select(dvec(col("text_embedding"))).head().getSeq[Double](0).toSeq)
-      Search.recommendVectors(hom(s, dir), "vector",
-        posVecs = pos, negVecs = Nil, k = 10)
-        .select("id", "score")
-    }),
-
-    // named-field recommend (tests.sql:107-114): same composition against a
-    // heterogeneous named vector field (NULL on rows lacking the field)
-    // with that field's declared metric (image_embedding -> dot)
-    "recommend_named" -> ((s, dir) => {
-      val h = Collections.heterogeneous(s, dir)
-        .filter(col("image_embedding").isNotNull)
-      Search.recommend(h, "image_embedding", posIds = Seq("1", "2"),
-        negIds = Seq("4"), k = 10, metric = "dot").select("id", "score")
-    }),
-
-    "discover" -> ((s, dir) =>
-      Search.discover(hom(s, dir), "vector", targetId = "0",
-        context = Seq(("1", 0.5), ("2", -0.25)), k = 10)),
-
-    // the target-less context form of the discovery API: pairwise
-    // hinge score, 0 = inside every positive half-space
-    "context_search" -> ((s, dir) =>
-      Search.contextSearch(hom(s, dir), "vector",
-        pairs = Seq(("1", "2"), ("3", "4")), k = 10)),
-
-    // MMR diversified top-k: engine kernels score the page + sim matrix,
-    // the driver runs only the O(candidateK * k) greedy over that
-    // model-state; the oracle re-derives the selection as unrolled CTEs
-    "mmr_select" -> ((s, dir) =>
-      Search.mmrSelect(homD(s, dir).filter(col("id") =!= "37"),
-        "id", "vector",
-        Tables.load(s, dir, "embeddings").filter(col("vec_id") === 37)
-          .select(dvec(col("embedding"))).head().getSeq[Double](0),
-        k = 5, candidateK = 20, lambda = 0.7)),
-
-    // per-label element-wise centroid as a DISTRIBUTED frame (nothing
-    // collected): the Lloyd's-update DECIMAL arithmetic applied to
-    // arbitrary groups — the oracle mirrors the quantize/sum/divide chain
-    "label_centroids" -> ((s, dir) =>
-      Ann.groupCentroids(
-        Tables.load(s, dir, "embeddings")
-          .select(col("label"), dvec(col("embedding")).as("v")),
-        "label", "v")),
-
-    // distribution drift between snapshots (even vs odd vec_ids standing
-    // in for ingest v0/v1): per-label centroid cosine from exact integer
-    // sums — vectors never shuffle, only (label, dim) partials
-    "centroid_drift" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"), dvec(col("embedding")).as("v"))
-      Ann.centroidDrift(
-        e.filter(col("vec_id") % 2 === 0),
-        e.filter(col("vec_id") % 2 === 1), "label", "v")
-    }),
-
-    // rolling 3-event sum/count per user (ROWS frame): DECIMAL
-    // accumulation makes the running sums engine-portable
-    // daily volume anomaly: per event_type, each day's count as a
-    // z-score vs that type's own daily distribution — variance from
-    // EXACT integer moments, so the float score is engine-identical
-    "events_zscore" -> ((s, dir) =>
-      graft.ops.TimeSeries.dailyZScore(events(s, dir), "event_type", "ts")),
-
-    // the backend's datetime_range payload condition (gte/lt bounds on a
-    // timestamp field): a plain codegen'd range predicate the parquet
-    // reader receives as min/max-prunable PushedFilters — at 100 TB a
-    // time-partitioned layout turns this into partition pruning for free
-    "datetime_range_agg" -> ((s, dir) =>
-      events(s, dir)
-        .filter(col("ts") >= to_timestamp(lit("2024-01-10 00:00:00")) &&
-          col("ts") < to_timestamp(lit("2024-01-20 00:00:00")))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(avg(col("value")), 6).as("avg_value"))
-        .orderBy(col("event_type"))),
-
-    // the datetime INDEX: Qdrant's `field_schema: "datetime"` stores the
-    // field as an integer timestamp and serves range conditions from the
-    // index — here the integer payload index keyed on epoch-DAY, so the
-    // range scan reads ONLY the matching value partitions (partition
-    // pruning asserted in PlannerSpec); counts come straight from the
-    // postings, the base table is never touched
-    "datetime_index_range" -> ((s, dir) =>
-      eventsDayIndex(s, dir).postings
-        .filter(col("value").between(19732L, 19741L))
-        .groupBy(col("value"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("value").as("day"), col("n"))
-        .orderBy(col("day"))),
-
-    // salted pseudonymization: map-side, joinability-preserving (same
-    // salt → same pseudonym across tables), nothing reversible stored
-    "anonymize_ids" -> ((s, dir) =>
-      events(s, dir).select(col("event_id"),
-        graft.ops.Privacy.pseudonym(col("user_id"), "s1").as("uid"))),
-
-    // k-anonymity release gate: rows whose (event_type, day) combo has
-    // fewer than 60 peers are suppressed before export
-    "k_anon_filter" -> ((s, dir) =>
-      graft.ops.Privacy.kAnonSuppress(
-          events(s, dir).select(col("event_id"), col("event_type"),
-            to_date(col("ts")).as("day")),
-          Seq("event_type", "day"), k = 60)
-        .select(col("event_id"), col("event_type"), col("day"))),
-
-    // median/MAD robust twin of events_zscore: a real incident can't
-    // poison the baseline; exact medians are safe (groups = day counts)
-    "mad_outliers" -> ((s, dir) =>
-      graft.ops.TimeSeries.dailyRobustZScore(events(s, dir), "event_type", "ts")),
-
-    "rolling_avg" -> ((s, dir) =>
-      graft.ops.TimeSeries.rollingSum(
-        events(s, dir), "user_id", "ts", "event_id", "value", window = 3)),
-
-    // corpus-LM quality proxy: average unigram log-probability per doc,
-    // position-ordered fold so the float sum is layout-deterministic
-    "unigram_logprob" -> ((s, dir) =>
-      TextAnalysis.unigramLogProb(docs(s, dir), "doc_id", "text")),
-
-    // add-alpha smoothed bigram LM fluency score (the rung above the
-    // unigram proxy): heads/bigram counts are Zipf-small model frames
-    // FIT OFFLINE (warmOffline, like NB/IVF) — the gate measures the
-    // scoring pass; the per-doc sum folds in position order
-    "bigram_logprob" -> ((s, dir) =>
-      TextAnalysis.scoreBigramLm(bigramLm(s, dir), docs(s, dir),
-        "doc_id", "text")),
-
-    // HELD-OUT LM eval: the model fits on the train split (doc_id%5!=0),
-    // the held-out fifth is scored against it — unseen heads/bigrams hit
-    // the add-alpha floor via left joins, so eval scores degrade
-    // continuously instead of dropping rows
-    "lm_holdout" -> ((s, dir) => {
-      val d = docs(s, dir)
-      TextAnalysis.bigramLogProbAgainst(
-        d.filter(col("doc_id") % 5 =!= 0), d.filter(col("doc_id") % 5 === 0),
-        "doc_id", "text")
-    }),
-
-    // the LM score USED as a curation filter (the CCNet/KenLM recipe:
-    // drop disfluent docs below a perplexity cut) — thresholding on the
-    // ROUNDED score both engines compute identically, source joined back
-    // for the downstream mixture ops
-    "perplexity_filter" -> ((s, dir) => {
-      val d = docs(s, dir)
-      TextAnalysis.scoreBigramLm(bigramLm(s, dir), d, "doc_id", "text")
-        .filter(col("avg_logprob") >= -3.39)
-        .join(d.select(col("doc_id"), col("source")), "doc_id")
-        .select(col("doc_id"), col("source"), col("avg_logprob"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // DSIR data selection (Xie et al. 2023): score every raw doc by the
-    // hashed-ngram log importance weight against a target subset
-    // (doc_id % 7 == 0 as the "high-quality" stand-in). Models are
-    // bucket-count aggregates (model state), scoring is one broadcast
-    // join + per-doc ordered fold — the oracle re-derives hash, models,
-    // and fold
-    "dsir_weights" -> ((s, dir) => {
-      val d = docs(s, dir)
-      graft.ops.Dsir.importanceWeights(
-        d.filter(col("doc_id") % 7 =!= 0),
-        d.filter(col("doc_id") % 7 === 0),
-        "doc_id", "text", buckets = 4096)
-    }),
-
-    // trained document classifier (the DCLM/FineWeb-style curation
-    // stage): multinomial NB over hashed n-gram buckets, trained on the
-    // lang-labeled corpus (OFFLINE — warmOffline fits the model once,
-    // like the IVF/PQ/BPE artifacts) and classifying the same corpus —
-    // the gate measures the SERVING path: one feature pass, one
-    // broadcast join against the (bucket -> class-weight array) model,
-    // map-side argmax
-    "nb_classify" -> ((s, dir) =>
-      graft.ops.Classify.classify(docs(s, dir), nbModel(s, dir),
-        "doc_id", "text")),
-
-    // the SAME classifier as one codegen projection: the weight table
-    // collects (model state) and re-enters as a map literal — no join,
-    // no shuffle, runs unchanged on an unbounded stream (StreamingSpec);
-    // same oracle as nb_classify: the two serving forms are bit-equal
-    "nb_classify_map" -> ((s, dir) =>
-      graft.ops.Classify.classifyMapSide(docs(s, dir), nbModel(s, dir),
-        "doc_id", "text")),
-
-    // geo_bounding_box filter over the synthetic (lat, lon) derivation
-    // the haversine gate established — a pure map-side predicate
-    "geo_box" -> ((s, dir) =>
-      events(s, dir)
-        .select(col("event_id"),
-          col("user_id").cast(DoubleType).as("lat"),
-          (col("event_id") % 180).cast(DoubleType).as("lon"))
-        .filter(graft.ops.Geo.inBoundingBox(col("lat"), col("lon"),
-          south = 10, north = 40, west = 20, east = 60))),
-
-    // the ANTIMERIDIAN form (west > east wraps — the backend's
-    // geo_bounding_box convention when left lon > right lon): the
-    // longitude condition becomes the OR of the two arcs
-    "geo_box_wrap" -> ((s, dir) =>
-      events(s, dir)
-        .select(col("event_id"),
-          col("user_id").cast(DoubleType).as("lat"),
-          ((col("event_id") % 360) - 180).cast(DoubleType).as("lon"))
-        .filter(graft.ops.Geo.inBoundingBox(col("lat"), col("lon"),
-          south = 0, north = 90, west = 150, east = -150))),
-
-    // the SAME box served from the stored geo-cell index: cover cells
-    // partition-prune the scan (the geo payload index of the backend),
-    // exact predicate inside — identical answer, index-shaped cost
-    "geo_cell_search" -> ((s, dir) =>
-      graft.ops.Geo.searchBox(SparkEntry.geoStore(s, dir), "lat", "lon",
-          south = 10, north = 40, west = 20, east = 60, bits = 4)
-        .select(col("event_id"), col("lat"), col("lon"))),
-
-    // geo_polygon filter: ray-cast containment, the SQL mirror GENERATED
-    // from the same vertex list (Geo.polygonSql) so both engines run the
-    // identical per-edge doubles
-    "geo_polygon" -> ((s, dir) =>
-      events(s, dir)
-        .select(col("event_id"),
-          col("user_id").cast(DoubleType).as("lat"),
-          (col("event_id") % 180).cast(DoubleType).as("lon"))
-        .filter(graft.ops.Geo.pointInPolygon(col("lat"), col("lon"),
-          SparkEntry.GeoPoly))),
-
-    "rrf_fusion" -> ((s, dir) => {
-      val df = hom(s, dir).select("id", "vector")
-      val b1 = Search.topKById(df, "vector", "0", 50, "cosine").select("id", "score")
-      val b2 = Search.topKById(df, "vector", "1", 50, "dot").select("id", "score")
-      Search.fuseRRF(Seq(b1, b2), k = 20)
-    }),
-
-    // the distribution-based alternative to RRF over the same branches:
-    // per-branch 3-sigma normalization from EXACT micro-integer moments
-    "dbsf_fusion" -> ((s, dir) => {
-      val df = hom(s, dir).select("id", "vector")
-      val b1 = Search.topKById(df, "vector", "0", 50, "cosine").select("id", "score")
-      val b2 = Search.topKById(df, "vector", "1", 50, "dot").select("id", "score")
-      Search.fuseDBSF(Seq(b1, b2), k = 20)
-    }),
-
-    // Johnson–Lindenstrauss sign projection 64 -> 16: the projection
-    // matrix is seeded ±1 literals (model state inlined — no broadcast,
-    // no shuffle, fuses into the scan's codegen pass); oracle replays the
-    // identical left-to-right fold bit-for-bit
-    "rand_projection" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "embeddings")
-      graft.ops.Quant.projectColumn(e, "embedding", "__p", inDim = 64, outDim = 16)
-        .select(col("vec_id") +:
-          (0 until 16).map(j => element_at(col("__p"), j + 1).as(s"p$j")): _*)
-    }),
-
-    // Matryoshka serving: 16-dim stored-prefix candidates (1/4 of the
-    // bytes), full 64-dim exact rerank; oracle mirrors BOTH stages
-    "matryoshka_search" -> ((s, dir) => {
-      val corpus = hom(s, dir).select("id", "vector").filter(col("id") =!= "29")
-      val qvec = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 29)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      Search.matryoshkaSearch(
-          SparkEntry.storedPrefix(s, dir).filter(col("id") =!= "29"), corpus,
-          "id", "vector", "v16", qvec, prefixDim = 16, k = 50, candidateK = 50)
-        .withColumn("score", round(col("score"), 6))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    "prefetch_rerank" -> ((s, dir) => {
-      val df = hom(s, dir)
-      val q = qvecOf(df, "0")
-      val scored = df.filter(col("id") =!= "0").crossJoin(broadcast(q))
-      val prefetch = scored
-        .withColumn("ps", round(v_cosine(col("vector"), col("__qvec")), 6))
-        .orderBy(col("ps").desc, col("id").asc).limit(100)
-      prefetch
-        .withColumn("score", round(v_dot(col("vector"), col("__qvec")), 6))
-        .select(col("id"), col("score"))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    "batch_search" -> ((s, dir) => {
-      val corpus = hom(s, dir).select("id", "vector")
-      val queries = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").cast(StringType).as("query_id"),
-          col("embedding").as("qvec"))
-      Search.batchTopK(corpus, col("vector"), queries, "query_id", "qvec", k = 5)
-    }),
-
-    "cte_semi" -> ((s, dir) => {
-      val df = hom(s, dir)
-      val cand = Search.topKById(df.select("id", "vector"), "vector", "0", 100)
-        .select("id")
-      df.join(cand, Seq("id"), "left_semi")
-        .withColumn("label", json_get_int(col("payload"), "label"))
-        .groupBy(col("label")).agg(count(lit(1)).as("n"))
-    })
-  )
-
-  /** §2.B relational surface + geo + text matching. */
-  private val relational: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q1_agg" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-      li.filter(col("l_shipdate") <= to_timestamp(lit("1998-09-02 00:00:00")))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          // exact decimal sums compared as STRINGS: the final decimal->double
-          // cast differs by 1 ulp between engines at sf0.1 magnitudes
-          sum(dec(col("l_quantity"))).cast(StringType).as("sum_qty"),
-          sum(dec(col("l_extendedprice"))).cast(StringType).as("sum_base_price"),
-          sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 4)) - dec(col("l_discount"))))
-            .cast(StringType).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    "join3_agg" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-      val c = Tables.load(s, dir, "customer")
-      val n = Tables.load(s, dir, "nation")
-      o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          sum(dec(col("o_totalprice"))).cast(StringType).as("revenue"))
-    }),
-
-    "having_agg" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec(col("value"))).cast(StringType).as("total"))
-        .filter(col("n") >= 3)),
-
-    "window_topk" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val o = Tables.load(s, dir, "orders")
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      o.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2).drop("rn")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    "values_inline" -> ((s, dir) => {
-      Tables.load(s, dir, "region").createOrReplaceTempView("region")
-      s.sql(
-        """SELECT r_name, CAST(w AS DOUBLE) AS w
-          |FROM region JOIN (VALUES (0, 1.5), (1, 2.5), (3, 0.5)) AS t(rk, w)
-          |  ON r_regionkey = rk
-          |ORDER BY r_name""".stripMargin)
-    }),
-
-    "case_boost" -> ((s, dir) =>
-      docs(s, dir).withColumn("score", round(
-        col("n_chars").cast(DoubleType) / lit(100.0) +
-          when(col("source").isin("src0", "src1"), lit(0.5))
-            .when(col("lang") === "en", lit(0.25))
-            .otherwise(lit(0.0)), 6))
-        .select(col("doc_id"), col("score"))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(25)),
-
-    "geo_distance" -> ((s, dir) =>
-      events(s, dir).withColumn("km", round(
-        v_geo_distance(
-          col("user_id").cast(DoubleType),
-          (col("event_id") % 180).cast(DoubleType),
-          lit(48.8566), lit(2.3522)) / lit(1000.0), 2))
-        .select(col("event_id"), col("km"))
-        .orderBy(col("km").asc, col("event_id").asc)
-        .limit(50)),
-
-    "match_text" -> ((s, dir) =>
-      docs(s, dir)
-        .withColumn("relevance", round(match_text(col("text"), "spark join merge"), 6))
-        .filter(col("relevance") > 0.0)
-        .select(col("doc_id"), col("relevance"))
-        .orderBy(col("relevance").desc, col("doc_id").asc)
-        .limit(20)),
-
-    // consecutive-token phrase occurrences (MATCH_PHRASE) — the pattern
-    // string is generated ONCE (phraseRegex) for both engines
-    "phrase_match" -> ((s, dir) =>
-      docs(s, dir)
-        .withColumn("n_hits", match_phrase(col("text"), "the data"))
-        .filter(col("n_hits") > 0)
-        .select(col("doc_id"), col("n_hits"))),
-
-    // the INDEXED phrase path: token-position adjacency joins over
-    // term-pruned postings (token semantics, vs the regex scan above)
-    "phrase_index" -> ((s, dir) =>
-      graft.ops.TextIndex.phraseMatch(
-        docs(s, dir), "doc_id", "text", Seq("the", "data"))),
-
-    "window_agg_events" -> ((s, dir) =>
-      EventsStream.windowedAggBatch(s, dir)),
-
-    // bounded form of the mapGroupsWithState running user stats: the
-    // final state after a full pass is exactly the per-user aggregate
-    // (StreamingSpec proves stream==batch on the same data); DECIMAL sum
-    // so the total is order-independent
-    "user_stats_final" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec(col("value"))).cast(StringType).as("total"))),
-
-    // bounded form of the streaming watermark dedup (dedupedEvents):
-    // (user_id, props) bursts within the 2h horizon keep only the first
-    // event — session_window, the operator that runs incrementally under
-    // a watermark in streaming (StreamingSpec covers the unbounded form)
-    "stream_dedup" -> ((s, dir) =>
-      EventsStream.dedupWithinHorizonFromDir(s, dir)),
-
-    // stream-stream interval join (event-time purchase attribution): the
-    // bounded gate form of EventsStream.attributedPairs — the SAME join
-    // runs unbounded with watermark-evicted state (StreamingSpec); one
-    // co-partitioned shuffle of both streams on user_id
-    "stream_join" -> ((s, dir) =>
-      EventsStream.attributedPurchasesBatch(
-        s.read.parquet(s"$dir/events.parquet"))),
-
-    // sessionization: Spark's native session_window (map-side state merge,
-    // one shuffle on the key; the same expression runs incrementally under
-    // Structured Streaming) vs the oracle's gaps-and-islands SQL
-    "session_agg" -> ((s, dir) =>
-      graft.ops.TimeSeries.sessionAgg(events(s, dir), "user_id", "ts", "24 hours")
-        .select(col("user_id"),
-          unix_micros(col("session_start")).as("session_start_us"),
-          col("n_events"), col("span_us"))),
-
-    // as-of join: latest purchase at-or-before each click per user; no
-    // native Spark operator — union + one per-key ranking window carries
-    // the last right-side payload forward (no row explosion)
-    "asof_join" -> ((s, dir) => {
-      val e = events(s, dir)
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_event_id"), col("user_id"), col("ts"))
-      graft.ops.TimeSeries.asofJoin(clicks, purchases, "user_id", "ts",
-          Seq("p_event_id", "ts"), tiebreakCol = Some("p_event_id"))
-        .select(col("event_id"), col("asof_p_event_id").as("p_event_id"),
-          (unix_micros(col("ts")) - unix_micros(col("asof_ts"))).as("lag_us"))
-    }),
-
-    // keyless point-in-interval join: errors landing inside 2h incident
-    // windows opened by big purchases — NO equi key, the shape Spark
-    // plans as an O(N·M) BroadcastNestedLoopJoin; intervalJoin's
-    // time-chunk rewrite runs it as a hash equi-join on the chunk id
-    "interval_join" -> ((s, dir) => {
-      val e = events(s, dir)
-      val incidents = e.filter(col("event_type") === "purchase" && col("value") > 300)
-        .select(col("event_id").as("incident_id"), col("ts").as("start_ts"),
-          (col("ts") + expr("INTERVAL 2 HOURS")).as("end_ts"))
-      val errors = e.filter(col("event_type") === "error")
-        .select(col("event_id"), col("ts"))
-      graft.ops.TimeSeries.intervalJoin(errors, "ts", incidents,
-          "start_ts", "end_ts", Seq("incident_id"), bucket = "1 hour")
-        .groupBy(col("iv_incident_id").as("incident_id"))
-        .agg(count(lit(1)).as("n_errors"), min(col("event_id")).as("first_error"))
-    }),
-
-    // wide-format per-language source counts (groupBy + pivot with an
-    // explicit value list — map-side partial aggregation, one shuffle)
-    "pivot_stats" -> ((s, dir) =>
-      docs(s, dir).groupBy(col("lang"))
-        .pivot("source", Seq("src0", "src1", "src2", "src3"))
-        .agg(count(lit(1)))
-        .select(col("lang"),
-          coalesce(col("src0"), lit(0L)).as("src0_n"),
-          coalesce(col("src1"), lit(0L)).as("src1_n"),
-          coalesce(col("src2"), lit(0L)).as("src2_n"),
-          coalesce(col("src3"), lit(0L)).as("src3_n"))),
-
-    // literal CROSS JOIN LATERAL correlated-top-k (tests.sql:340-344 shape)
-    "lateral_topk" -> ((s, dir) => {
-      Tables.load(s, dir, "region").createOrReplaceTempView("region")
-      Tables.load(s, dir, "nation").createOrReplaceTempView("nation")
-      s.sql(
-        """SELECT r.r_name, t.n_name FROM region r,
-          |LATERAL (SELECT n_name FROM nation n
-          |         WHERE n.n_regionkey = r.r_regionkey
-          |         ORDER BY n_name LIMIT 2) t
-          |ORDER BY r_name, n_name""".stripMargin)
-    }),
-
-    // JSON array containment: payload->'tags' @> '["..."]' (tests.sql:224)
-    "json_containment" -> ((s, dir) =>
-      docs(s, dir)
-        .withColumn("payload", to_json(struct(array(col("lang"), col("source")).as("tags"))))
-        .select(col("doc_id"),
-          json_contains_value(col("payload"), "tags", "en").as("has_en"),
-          json_contains_value(col("payload"), "tags", "src3").as("has_src3"))),
-
-    // the backend's NESTED filter: conditions binding to ONE element of
-    // an array-of-objects payload (key = 'src7' AND even, inside the
-    // same element). The payload JSON derives deterministically from
-    // documents; the oracle re-states the nested semantics from base
-    // columns — flat per-condition matching would admit extra rows
-    // (JsonSpec pins the distinction)
-    "nested_filter" -> ((s, dir) => {
-      val elem = StructType(Seq(
-        StructField("key", StringType), StructField("even", BooleanType)))
-      docs(s, dir)
-        .withColumn("payload", to_json(array(
-          struct(col("lang").as("key"), (col("n_chars") % 2 === 0).as("even")),
-          struct(col("source").as("key"), (col("n_chars") % 3 === 0).as("even")))))
-        .filter(graft.ops.Json.nestedExists(col("payload"), elem,
-          x => x.getField("key") === "src7" && x.getField("even")))
-        .select(col("doc_id"))
-    })
-  )
-
-  /** Deterministically messy raw URLs derived from the documents table —
-    * planted aliasing (host case, www. prefixes, :443 ports, trailing
-    * slashes, utm params, query order) shared by the dedup_url and
-    * url_host_filter gates; the oracles re-derive the same strings.
-    */
-  private def rawUrl: Column = concat(
-    lit("https://"),
-    when(col("doc_id") % 3 === 0, lit("WWW.")).otherwise(lit("")),
-    when(col("doc_id") % 2 === 0, upper(col("source"))).otherwise(col("source")),
-    lit(".Example.COM"),
-    when(col("doc_id") % 7 === 0, lit(":443")).otherwise(lit("")),
-    lit("/docs/"), (col("doc_id") % 40).cast(StringType),
-    when(col("doc_id") % 5 === 0, lit("/")).otherwise(lit("")),
-    when(col("doc_id") % 4 === 0, lit("?utm_source=feed&b=2&a=1"))
-      .when(col("doc_id") % 4 === 1, lit("?b=2&a=1"))
-      .when(col("doc_id") % 4 === 2, lit("?a=1&b=2"))
-      .otherwise(lit("")))
-
-  /** Training-data pipeline operators: dedup, text analysis, ANN, media. */
-  private val pipelineOps: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "dedup_exact" -> ((s, dir) =>
-      Dedup.exactDedup(docsWithExactDups(s, dir), "doc_id", "text")
-        .select(col("keeper"), col("n_copies"))),
-
-    // priority canonical selection: crawl copies (source 'zsrc_crawl')
-    // lose to the original even at lower ids; curated re-ingests
-    // ('a_curated') WIN despite higher ids — source rank, then id
-    "dedup_priority" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("text"), col("source"))
-      val crawl = d.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"), col("text"),
-          lit("zsrc_crawl").as("source"))
-      val curated = d.filter(col("doc_id") % 10 === 5)
-        .select((col("doc_id") + 2000000).as("doc_id"), col("text"),
-          lit("a_curated").as("source"))
-      Dedup.exactDedupByPriority(d.union(crawl).union(curated),
-        "doc_id", "text", "source")
-    }),
-
-    // URL-level dedup (the CCNet/RefinedWeb FIRST pass): raw URLs
-    // derived deterministically with planted aliasing — host case,
-    // www. prefixes, :443 ports, trailing slashes, utm params, query
-    // param order — so syntactically distinct raw strings collapse to
-    // one canonical key; one codegen projection + one partial-agg
-    // groupBy
-    "dedup_url" -> ((s, dir) =>
-      graft.ops.Url.dedupByUrl(
-        docs(s, dir).withColumn("url", rawUrl), "doc_id", "url")),
-
-    // domain balancing: at most k docs per canonical host (the cap that
-    // keeps boilerplate-heavy megasites from drowning the mixture) —
-    // ONE keyed window over the host, survivors by the seeded md5 draw
-    "url_host_cap" -> ((s, dir) =>
-      graft.ops.Url.capPerHost(
-          docs(s, dir).withColumn("url", rawUrl), "doc_id", "url",
-          k = 15, seed = 42L)
-        .select(col("doc_id"), graft.ops.Url.hostOf(col("url")).as("host"))),
-
-    // domain-blocklist filtering (the OTHER half of the URL stage:
-    // RefinedWeb/FineWeb drop curated domains before any content work):
-    // the blocklist is model state inlined as one codegen predicate —
-    // no join, no shuffle, a free rider on the first corpus scan
-    "url_host_filter" -> ((s, dir) =>
-      graft.ops.Url.filterBlockedHosts(
-        docs(s, dir).withColumn("url", rawUrl), "url",
-        Seq("src3.example.com", "src7.example.com", "blocked.example.net"))
-        .select(col("doc_id"), graft.ops.Url.hostOf(col("url")).as("host"))),
-
-    "dedup_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(docsWithNearDups(s, dir), "doc_id", "text",
-        Seq("lang", "source"), threshold = 0.8)),
-
-    // blocked-quadratic COMPARISON BASELINE (the LSH paths below are the
-    // scale-true forms): gated on a bounded 2-label block subset so the
-    // within-block self-join stays model-sized — the operator semantics
-    // are fully exercised (2 blocks, planted dups in both) without paying
-    // a corpus-quadratic in the benchmark record
-    "dedup_embedding" -> ((s, dir) =>
-      Dedup.embeddingNearDup(embWithNearDups(s, dir).filter(col("label") <= 1),
-        "vec_id", "v", Seq("label"), threshold = 0.999)),
-
-    // scale-true embedding near-dup: hyperplane-LSH bucketed candidates,
-    // NO blocking key — the embedding analog of dedup_minhash (the
-    // blocked quadratic above does not survive an unblocked corpus)
-    "dedup_embedding_lsh" -> ((s, dir) =>
-      Dedup.embeddingNearDupLsh(embWithNearDups(s, dir), "vec_id", "v",
-        threshold = 0.999)),
-
-    // contrastive training pairs: the dedup pipeline's verified near-dup
-    // pairs become POSITIVES; each anchor draws a deterministic NEGATIVE
-    // from a broadcast md5-ordered sample (in-batch-negatives pattern) —
-    // layout/engine/rerun-stable, map-side after one model-sized collect.
-    // Consumes the CACHED production-sized (nbits=64) pair-mining artifact
-    // — pair mining is offline (warmOffline), pair-gen is the serving path
-    "contrastive_pairs" -> ((s, dir) => {
-      val pairs = lshPairStore(s, dir).select(col("a_id"), col("b_id"))
-      Search.contrastivePairs(pairs,
-        embWithNearDups(s, dir).select(col("vec_id")), "vec_id",
-        sampleSize = 64, seed = 42L)
-    }),
-
-    // the SAME pipeline at PRODUCTION band sizing (nbits=64 / bands=4 —
-    // 16-bit band keys, 65536 buckets per band): the Dedup.scala sizing
-    // contract as measured evidence — random-pair collision volume drops
-    // from ~23% (16/4) to ~2^-14, while true near-dups (sign bits
-    // identical) still collide in every band and the planted pairs
-    // survive; hits bit 63 of the signature, so this also pins the
-    // unsigned band arithmetic on both engine and oracle
-    "dedup_embedding_lsh64" -> ((s, dir) => lshPairStore(s, dir)),
-
-    // hard negatives for contrastive training: band-collided candidate
-    // pairs that FAILED the Jaccard cut — "looks similar to the sketch,
-    // isn't" — mined for free as the verification join's rejects
-    // asymmetric containment |src∩dst|/|src| over the banded candidates:
-    // the quote/excerpt relation — the ' zzz' near-dup corpus pins the
-    // asymmetry (original fully inside its variant at 1.0, the variant
-    // a token short of the reverse)
-    "doc_containment" -> ((s, dir) =>
-      Dedup.containmentPairs(docsWithNearDups(s, dir), "doc_id", "text",
-        threshold = 0.99, bands = 8)),
-
-    // bands=8 (r=2) deliberately widens the LSH net so dissimilar pairs
-    // collide often enough to mine from — the point of negative mining
-    "hard_negatives" -> ((s, dir) =>
-      Dedup.minhashHardNegatives(docsWithNearDups(s, dir), "doc_id", "text",
-        threshold = 0.8, bands = 8)),
-
-    // SOFT dedup: every copy kept, downweighted by multiplicity (1/n) —
-    // the sampling-weight alternative to dropping; composes with
-    // weighted sampling for the selection step
-    "dedup_weights" -> ((s, dir) =>
-      Dedup.softDedupWeights(docsWithExactDups(s, dir), "doc_id", "text")),
-
-    // character entropy: the compressibility proxy of the public
-    // quality-signal suites — map-side, engine-pinned float-sum order
-    "char_entropy" -> ((s, dir) =>
-      graft.ops.TextAnalysis.charEntropy(docs(s, dir), "doc_id", "text")),
-
-    // n-gram novelty: fraction of a doc's distinct shingles unseen in
-    // any other doc — the inverse boilerplate signal; (hash, id) longs
-    // shuffle, the text never does
-    "novelty_score" -> ((s, dir) =>
-      graft.ops.TextAnalysis.noveltyScore(docs(s, dir), "doc_id", "text")),
-
-    // cross-corpus MinHash decontamination: the fuzzy-text member of the
-    // decontam family — near-verbatim rewrites (the planted ' zzz'
-    // variants) that break exact shingles but keep Jaccard high flag
-    // against the broadcast benchmark
-    "decontam_minhash" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("text"))
-      Dedup.minhashContaminated(d, "doc_id", "text",
-        d.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 1000000).as("doc_id"),
-            concat(col("text"), lit(" zzz")).as("text")),
-        "doc_id", "text", threshold = 0.8)
-    }),
-
-    // cross-corpus embedding DECONTAMINATION: the embedding analog of
-    // decontam — eval-set paraphrases sharing no n-grams still scrub.
-    // Corpus = the embeddings table; benchmark = the planted scaled
-    // copies (cosine 1.0 with their originals). Benchmark broadcasts;
-    // verify is map-side; only verified hits shuffle
-    "decontam_embedding" -> ((s, dir) => {
-      val all = embWithNearDups(s, dir)
-      Dedup.embeddingContaminated(
-        all.filter(col("vec_id") < 100000), "vec_id", "v",
-        all.filter(col("vec_id") >= 100000), "vec_id", "v",
-        threshold = 0.999, nbits = 64, bands = 4)
-    }),
-
-    // SemDeDup (Abbas et al. 2023): semantic dedup via k-means cluster
-    // blocking — the SAME coarse quantizer that serves IVF search doubles
-    // as the dedup blocker (one offline fit, two consumers). Pairs meet
-    // only within a cluster: one shuffle on the cluster key, quadratic
-    // bounded by cluster size (k scales with the corpus). The oracle
-    // re-derives the full k-means chain in SQL, so clustering AND pair
-    // selection are value-checked end-to-end
-    // cluster-balanced (diversity) sampling: cap each embedding-space
-    // region's contribution — k per coarse cluster, SAME quantizer the
-    // IVF/SemDeDup artifacts use (one offline fit, three consumers)
-    "cluster_sample" -> ((s, dir) => {
-      val idx = SparkEntry.ivfCache.getOrElseUpdate(s"$dir#sem",
-        Ann.buildIvf(embWithNearDups(s, dir), "vec_id", "v",
-          nlist = 8, maxIter = 2))
-      Search.clusterBalancedSample(idx.clustered, "vec_id", "cluster",
-        k = 5, seed = 42L)
-        .select(col("vec_id"), col("cluster").cast(IntegerType).as("cluster"))
-    }),
-
-    "dedup_semantic" -> ((s, dir) => {
-      val idx = SparkEntry.ivfCache.getOrElseUpdate(s"$dir#sem",
-        Ann.buildIvf(embWithNearDups(s, dir), "vec_id", "v",
-          nlist = 8, maxIter = 2))
-      Dedup.semanticDedupPairs(idx.clustered, "vec_id", "v", threshold = 0.999)
-    }),
-
-    // the paper's survivor policy: of each dup pair KEEP the member less
-    // similar to its cluster centroid (keep-outliers, SemDeDup §4),
-    // deterministic via rounded csim + id tiebreak
-    "dedup_semantic_keep" -> ((s, dir) => {
-      val idx = SparkEntry.ivfCache.getOrElseUpdate(s"$dir#sem",
-        Ann.buildIvf(embWithNearDups(s, dir), "vec_id", "v",
-          nlist = 8, maxIter = 2))
-      Dedup.semanticDedup(idx.clustered, idx.centroids, "vec_id", "v",
-        threshold = 0.999)
-    }),
-
-    "dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashDedup(docsWithNearDups(s, dir), "doc_id", "text",
-        threshold = 0.8)),
-
-    // near-dup clusters: pairwise edges -> connected components, every doc
-    // labeled with the min reachable doc_id (its cluster representative)
-    // consumes the warmed cluster store (offline labeling artifact); the
-    // RAW pair-gen + CC cost stays measured by dedup_clusters_minhash,
-    // the scale-true composition
-    "dedup_clusters" -> ((s, dir) =>
-      clusterStore(s, dir).select(col("doc_id"), col("component"))),
-
-    // duplication-structure observability: the cluster-size histogram
-    // (how many near-dup clusters of each size — the first diagnostic a
-    // pipeline operator reads after a dedup pass). Two partial-agg
-    // shuffles over (component) then (sz) longs; the texts never move
-    "dedup_cluster_sizes" -> ((s, dir) =>
-      clusterStore(s, dir)
-        .groupBy(col("component")).agg(count(lit(1)).as("sz"))
-        .groupBy(col("sz")).agg(count(lit(1)).as("n_clusters"))),
-
-    // scale-true clusters: MinHash-LSH verified pairs (banded buckets, no
-    // all-pairs join) -> connected components — the composition that holds
-    // at 100 TB, where blocking-key quadratics don't
-    "dedup_clusters_minhash" -> ((s, dir) =>
-      Dedup.dedupClustersMinhash(docsWithNearDups(s, dir), "doc_id", "text",
-        threshold = 0.8)
-        .select(col("id").as("doc_id"), col("component"))),
-
-    // leakage-safe splits: split keyed on the near-dup CLUSTER label, so
-    // no cluster straddles train/test (the reason dedup runs before
-    // splitting — near-dups across the boundary leak eval content);
-    // consumes the CACHED cluster store (warmOffline — labeling cost is
-    // dedup_clusters' measured point), split is map-side on the key
-    "split_by_cluster" -> ((s, dir) =>
-      Search.assignSplitByGroup(clusterStore(s, dir), "component",
-          Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)), seed = 7L)
-        .select(col("doc_id"), col("component"), col("split"))),
-
-    // cluster-based survivor selection: one representative (min id) per
-    // transitive near-dup chain — the Pipeline form a 100 TB clean uses
-    // the END-TO-END pipeline composition (Pipeline.cleanCorpus):
-    // exact dedup -> minhash near-dedup ON the exact survivors ->
-    // annotate -> raw-quality gate — every stage's mirror composed into
-    // ONE oracle (restricting the pair set to exact survivors is sound
-    // because band buckets are per-document: removing docs only removes
-    // pairs)
-    // dataset-versioning diff between two corpus snapshots: old lacks
-    // %7==3 (-> added), has %7==5 docs new dropped (-> removed), and
-    // carries altered text for %7==1 (-> changed); two map-side
-    // fingerprint passes + ONE full-outer id join of longs
-    "corpus_diff" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val old = d.filter(col("doc_id") % 7 =!= 3)
-        .select(col("doc_id"),
-          when(col("doc_id") % 7 === 1, concat(col("text"), lit(" OLD")))
-            .otherwise(col("text")).as("text"))
-      val nw = d.filter(col("doc_id") % 7 =!= 5).select("doc_id", "text")
-      graft.ops.Pipeline.corpusDiff(old, nw, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    "clean_corpus" -> ((s, dir) =>
-      graft.ops.Pipeline.cleanCorpus(docsWithNearDups(s, dir), "doc_id", "text",
-          nearDupThreshold = 0.8, minQuality = 0.1)
-        .select(col("doc_id"), col("n_tokens").cast(LongType).as("n_tokens"))),
-
-    // survivor selection from the warmed scale-true cluster store — the
-    // production shape: labeling runs once per ingest (its cost is
-    // dedup_clusters_minhash's measured point), consumers read its output
-    "dedup_survivors" -> ((s, dir) =>
-      graft.ops.Pipeline.survivorsFromClusters(
-          docsWithNearDups(s, dir), "doc_id", minhashClusterStore(s, dir))
-        .select(col("doc_id"))),
-
-    "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashDedup(docsWithNearDups(s, dir), "doc_id", "text", maxDist = 3)),
-
-    "token_count" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast(LongType).as("n_tokens"))),
-
-    // sliding token-window CHUNKING (RAG / pretraining splitter): one
-    // row per 64-token window every 48 tokens, last chunk to the doc
-    // end, short docs = one chunk — pure map-side HOFs, row growth is
-    // the only cost
-    "chunk_windows" -> ((s, dir) =>
-      TextAnalysis.chunkDocuments(docs(s, dir), "doc_id", "text",
-          window = 64, stride = 48)
-        .select(col("doc_id"), col("chunk_idx"), col("chunk"),
-          col("n_tokens"))),
-
-    // BM25 relevance: per-term tf from one TextStats pass (each term its
-    // own profile), corpus stats as a broadcast one-row aggregate
-    "bm25_rank" -> ((s, dir) =>
-      TextAnalysis.bm25(docs(s, dir), "doc_id", "text",
-          Seq("spark", "join", "merge"))
-        .orderBy(col("bm25").desc, col("doc_id").asc)
-        .limit(20)),
-
-    // line-level dedup (the C4/CCNet rule): duplicate lines survive only
-    // at their first (doc, pos) occurrence corpus-wide; docs reassemble
-    // from kept lines in order. Catches cross-doc boilerplate that
-    // whole-document dedup never sees; fully oracled via the rolling-hash
-    // mirror (planted: whole-doc dups + a banner line on doc_id % 4 == 0)
-    "line_dedup" -> ((s, dir) =>
-      Dedup.dedupLines(lineStructuredDocs(s, dir), "doc_id", "text")),
-
-    // inverted-index retrieval — the SERVING path of bm25_rank: postings
-    // built once at ingest and stored partitionBy(tb), the query's literal
-    // term buckets partition-prune the read (BucketingSpec), dfs aggregate
-    // from the pruned postings themselves, scores match the full-scan
-    // formula bit for bit
-    "inverted_search" -> ((s, dir) => {
-      val (postings, n, avglen) = SparkEntry.textIndexStore(s, dir)
-      graft.ops.TextIndex.searchPostings(postings, n, avglen,
-        Seq("window", "batch", "scan"), k = 15, nBuckets = 32)
-    }),
-
-    // BM25 over the CONFIGURED index (word tokenizer, lowercase,
-    // token length in [4, 6], stopwords {table, value} — the backend's
-    // TextIndexParams): dl/df/n all shift under the config, the serving
-    // path and plan are byte-identical to inverted_search
-    "text_index_config" -> ((s, dir) => {
-      val (postings, n, avglen) = SparkEntry.textIndexCfgStore(s, dir)
-      graft.ops.TextIndex.searchPostings(postings, n, avglen,
-        graft.ops.TextIndex.normalizeTerms(Seq("Window", "batch", "scan"),
-          SparkEntry.textCfg), k = 15, nBuckets = 32)
-    }),
-
-    // prefix query served as an EXACT term lookup on the prefix-expanded
-    // index (tokenizer=prefix, prefixes of length 3..5 indexed at
-    // ingest): tf counts the tokens extending the prefix; the read is
-    // partition-pruned to the query term's bucket — no LIKE scan
-    "text_prefix_search" -> ((s, dir) => {
-      val postings = SparkEntry.textPrefixStore(s, dir)
-      val term = graft.ops.TextIndex.normalizeTerms(Seq("val"),
-        SparkEntry.prefixCfg).head
-      postings
-        .filter(col("tb") === graft.ops.TextIndex.termBucket(lit(term), 32) &&
-          col("term") === term)
-        .select(col("doc_id"), col("tf"))
-        .orderBy(col("tf").desc, col("doc_id").asc)
-        .limit(12)
-    }),
-
-    "top_bigrams" -> ((s, dir) =>
-      TextAnalysis.topBigrams(docs(s, dir), "text", k = 20)),
-
-    // duplicated-span census (which 5-grams repeat across docs, and how
-    // widely): per-doc distinct grams map-side, ONE (doc, gram) shuffle,
-    // document frequency >= 2, TakeOrdered top-k
-    "dup_ngram_top" -> ((s, dir) =>
-      TextAnalysis.topDuplicatedNgrams(docs(s, dir), "text", n = 5, k = 20)),
-
-    // boilerplate normalization over a corpus with planted URLs/HTML
-    // (doc_id % 3 == 0): strip counts + fingerprint of the normalized
-    // bytes, both value-checked
-    "normalize_text" -> ((s, dir) => {
-      val planted = docs(s, dir).select(col("doc_id"),
-        when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" visit https://example.com/x?id="),
-            col("doc_id").cast(StringType),
-            lit(" <b>read more</b> <br/>")))
-          .otherwise(col("text")).as("text"))
-      TextAnalysis.normalizeText(planted, "text")
-        .select(col("doc_id"), col("n_urls"), col("n_tags"),
-          TextAnalysis.fingerprint(col("normalized")).as("norm_fp"))
-    }),
-
-    // Gopher-style composite quality filter: token bounds + mean word
-    // length + repetition bound -> auditable keep verdict, map-side
-    "quality_filter" -> ((s, dir) =>
-      TextAnalysis.gopherFilter(docs(s, dir), "doc_id", "text")),
-
-    // Gopher-style repetition signal: duplicate word-3-gram fraction per
-    // doc — ONE ShingleKernel pass, zero shuffle
-    "doc_repetition" -> ((s, dir) =>
-      TextAnalysis.repetitionRatio(docs(s, dir), "doc_id", "text")),
-
-    // Unicode NFC normalization: decomposed sequences (e + combining
-    // acute) fold to precomposed forms so hashing/dedup treats visually
-    // identical text identically — the first transform of a cleaning
-    // pipeline; kernel fast-path skips already-normalized text (planted:
-    // combining-mark suffixes on doc_id % 9 == 0)
-    "nfc_normalize" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          when(col("doc_id") % 9 === 0,
-            concat(col("text"), lit(" café ångström")))
-            .otherwise(col("text")).as("text"))
-        .withColumn("nfc", graft.functions.nfc_normalize(col("text")))
-        .select(col("doc_id"), col("nfc"),
-          (col("nfc") =!= col("text")).as("changed"))),
-
-    // accent stripping: NFD + drop combining marks, so café/café/cafe
-    // collide — the aggressive key-normalization for match/dedup keys;
-    // planted suffix mixes PRECOMPOSED (å, ö, ü) and DECOMPOSED (e+mark)
-    "strip_accents" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          when(col("doc_id") % 11 === 0,
-            concat(col("text"), lit(" cafe\u0301 ångström mühle")))
-            .otherwise(col("text")).as("text"))
-        .withColumn("stripped", graft.functions.strip_accents(col("text")))
-        .select(col("doc_id"), col("stripped"),
-          (col("stripped") =!= col("text")).as("changed"))),
-
-    // embedding-column hygiene: per-label counts of wrong-dimension, NaN,
-    // and all-zero vectors + exact-quantized mean norm — the pre-index
-    // check of an embedding batch (planted: truncated / zeroed / NaN'd
-    // cohorts); one projection + one partial-agg shuffle
-    "embedding_hygiene" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"), dvec(col("embedding")).as("v"))
-      val planted = e.withColumn("v",
-        when(col("vec_id") % 101 === 0, slice(col("v"), 1, 32))
-          .when(col("vec_id") % 103 === 0, transform(col("v"), _ => lit(0.0)))
-          .when(col("vec_id") % 107 === 0,
-            concat(array(lit(Double.NaN)), slice(col("v"), 2, 63)))
-          .otherwise(col("v")))
-      graft.ops.Profile.embeddingHygiene(planted, "label", "v",
-        expectedDim = 64)
-    }),
-
-    // per-source quality percentile rank: the fair cross-source
-    // thresholding form (an absolute cut over-prunes weak sources); a
-    // keyed window over (source), rank on the ROUNDED score + id tiebreak
-    "quality_pct_by_source" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      docs(s, dir).select(col("doc_id"), col("source"),
-          TextAnalysis.qualityScore(col("text")).as("q"))
-        .withColumn("pct", round(percent_rank().over(
-          Window.partitionBy(col("source"))
-            .orderBy(col("q"), col("doc_id"))), 6))
-    }),
-
-    // flagged-wordlist filter: blocklist-vocabulary density vs threshold
-    // (the list is policy — a benign demo list here); rides the ONE
-    // TextStats kernel pass as a profile, map-side, streams unbounded
-    "flagged_terms" -> ((s, dir) =>
-      TextAnalysis.flaggedTermFilter(docs(s, dir), "doc_id", "text",
-        flagged = Seq("slow", "broken", "spill"), maxRatio = 0.03)),
-
-    // Gopher's LINE-level rules (duplicate/bullet/ellipsis line fractions
-    // vs published thresholds) over the decorated line corpus — map-side
-    "line_rules" -> ((s, dir) =>
-      TextAnalysis.gopherLineRules(decoratedLineDocs(s, dir), "doc_id", "text")),
-
-    // within-doc repetition removal: a doc's own repeated lines dropped,
-    // first occurrence kept in order — map-side fold, no shuffle (the
-    // cross-corpus first-occurrence rule is line_dedup)
-    "line_dedup_doc" -> ((s, dir) =>
-      TextAnalysis.dedupLinesWithinDoc(decoratedLineDocs(s, dir), "doc_id", "text")),
-
-    // benchmark decontamination: docs sharing any word 3-gram with the
-    // (deterministic doc_id % 97 == 0) benchmark subset — explode to
-    // 64-bit shingle hashes, broadcast semi-join, distinct ids
-    "decontam" -> ((s, dir) => {
-      val d = docs(s, dir)
-      TextAnalysis.contaminatedDocs(
-          d.filter(col("doc_id") % 97 =!= 0), "doc_id", "text",
-          d.filter(col("doc_id") % 97 === 0), "text")
-    }),
-
-    // ONLINE near-dup check at ingest: incoming docs (the planted
-    // variants) probe the banded MinHash index of the already-ingested
-    // corpus — map-side signature on the probe side, (band, bandkey)
-    // equi-join, exact-Jaccard verify over stored token sets; the same
-    // plan runs stream-static (StreamingSpec proves pair parity)
-    "neardup_ingest" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val incoming = d.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" zzz")).as("text"))
-      Dedup.nearDupsAgainstIndex(incoming, "doc_id", "text",
-        Dedup.minhashBandIndex(d, "doc_id", "text"), threshold = 0.8)
-    }),
-
-    // ingest-time decontamination verdicts: benchmark shingles as a
-    // bounded array literal, one map-side arrays_overlap per doc — no
-    // join/agg/state, so the same expression runs on an unbounded ingest
-    // stream (StreamingSpec proves stream == batch verdict parity)
-    "decontam_verdicts" -> ((s, dir) => {
-      val d = docs(s, dir)
-      TextAnalysis.decontamVerdicts(d.filter(col("doc_id") % 97 =!= 0),
-        "doc_id", "text", d.filter(col("doc_id") % 97 === 0), "text")
-    }),
-
-    // SPAN-level decontamination: instead of dropping whole contaminated
-    // docs, localize the benchmark-overlapping token ranges (3-gram hit
-    // positions merged gaps-and-islands) — the surgical protocol; bench
-    // shingle set broadcast, zero corpus shuffle before the island window
-    "decontam_spans" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.contaminatedSpans(d.filter(col("doc_id") % 97 =!= 0),
-        "doc_id", "text", d.filter(col("doc_id") % 97 === 0), "text", w = 3)
-    }),
-
-    // the actionable form: corpus docs rebuilt with contaminated spans
-    // stripped; clean docs pass through whole — output value-checks the
-    // reconstruction via kept-token count + rolling-hash fingerprint
-    "decontam_span_strip" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.stripContaminatedSpans(d.filter(col("doc_id") % 97 =!= 0),
-        "doc_id", "text", d.filter(col("doc_id") % 97 === 0), "text", w = 3)
-    }),
-
-    // the same decontamination BLOOM-prefiltered (the shape for benchmark
-    // sets too big to broadcast as a hash set): a 64 Kbit bloom literal
-    // thins the corpus shingles map-side, the exact semi-join removes the
-    // false positives — result identical, so the oracle IS decontam's
-    "decontam_bloom" -> ((s, dir) => {
-      val d = docs(s, dir)
-      TextAnalysis.contaminatedDocsBloom(
-          d.filter(col("doc_id") % 97 =!= 0), "doc_id", "text",
-          d.filter(col("doc_id") % 97 === 0), "text")
-    }),
-
-    "subword_count" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        TextAnalysis.subwordCount(col("text")).cast(LongType).as("n_subwords"))),
-
-    // BPE vocabulary TRAINING (Sennrich et al. 2016): 8 merges trained
-    // distributed over the word-frequency table — per step one weighted
-    // pair-count groupBy + a one-row argmax collect (model state) + a
-    // map-side greedy merge. The oracle UNROLLS the full loop (pair
-    // counts, deterministic argmax, run-window greedy merge), so the
-    // trained MODEL is value-checked step by step
-    "bpe_merges" -> ((s, dir) => {
-      import s.implicits._
-      SparkEntry.bpeModel(s, dir)._1
-        .map(m => (m.step, m.left, m.right, m.count))
-        .toDF("step", "merge_left", "merge_right", "pair_count")
-    }),
-
-    // corpus ENCODE under the trained model: per-doc token count via the
-    // vocab join (each distinct word segmented ONCE at train time, then a
-    // broadcast model join — Zipf makes the per-occurrence fold redundant
-    // work) — the sequence-length statistic packing/budgeting consumes
-    "bpe_encode" -> ((s, dir) => {
-      val syms = bpeModel(s, dir)._2
-      graft.ops.Bpe.encodeTokenCounts(
-        docs(s, dir).select(col("doc_id"), col("text")),
-        "doc_id", "text", syms)
-    }),
-
-    // the trained segmentation itself: top-30 words by frequency with
-    // their final subword split — the vocab a tokenizer would export
-    "bpe_vocab" -> ((s, dir) => {
-      val (_, syms) = SparkEntry.bpeModel(s, dir)
-      syms.select(col("word"), col("cnt"),
-          array_join(col("s"), " ").as("segmented"))
-        .orderBy(col("cnt").desc, col("word").asc).limit(30)
-    }),
-
-    // per-language corpus statistics: exact interpolated percentiles of the
-    // token-count distribution (one partial-agg shuffle; the percentile
-    // state is a per-group sketch of ints, not the rows)
-    "corpus_stats" -> ((s, dir) =>
-      docs(s, dir).withColumn("__st", TextAnalysis.stats(col("text")))
-        .select(col("lang"),
-          TextAnalysis.tokenCountOf(col("__st")).as("n_tokens"),
-          col("__st").getField("n_chars").as("n_chars"))
-        .groupBy(col("lang"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          round(expr("percentile(n_tokens, 0.5)"), 6).as("median_tokens"),
-          round(expr("percentile(n_tokens, 0.9)"), 6).as("p90_tokens"),
-          round(avg(col("n_chars")), 6).as("avg_chars"))),
-
-    // curriculum stratification: quartile boundaries of the token-count
-    // distribution from ONE exact-percentile agg (model state, inlined as
-    // literals), bin assignment pure map-side CASE — no global sort, no
-    // window; at scale the boundary step swaps to percentile_approx
-    "quality_bins" -> ((s, dir) =>
-      TextAnalysis.percentileBins(
-        docs(s, dir).withColumn("__st", TextAnalysis.stats(col("text")))
-          .select(col("doc_id"),
-            TextAnalysis.tokenCountOf(col("__st")).as("n_tokens")),
-        "n_tokens", Seq(0.25, 0.5, 0.75))),
-
-    // explicit salting for a known-hot join key: fact rows spread over 8
-    // deterministic salt buckets, dim replicated per salt — result equals
-    // the unsalted join (the oracle IS the unsalted join)
-    "skew_join" -> ((s, dir) => {
-      val weights = s.createDataFrame(Seq(
-        ("click", 1L), ("view", 2L), ("purchase", 10L),
-        ("signup", 5L), ("error", 0L)))
-        .toDF("event_type", "weight")
-      // shuffle_hash hint: a 5-row dim would broadcast and the salt would
-      // never exercise the shuffle path this operator exists for
-      graft.ops.Skew.saltedJoin(events(s, dir), weights.hint("shuffle_hash"),
-          "event_type", saltFactor = 8)
-        .groupBy(col("event_type"), col("weight"))
-        .agg(
-          count(lit(1)).as("n"),
-          // integer-domain sum: order-independent, exact
-          sum(floor(col("value")).cast(LongType) * col("weight")).as("weighted"))
-    }),
-
-    "quality_score" -> ((s, dir) =>
-      // one TextStats kernel pass; both metrics derive from the struct
-      docs(s, dir).withColumn("__st", TextAnalysis.stats(col("text")))
-        .select(col("doc_id"),
-          round(TextAnalysis.stopwordRatioOf(col("__st")), 6).as("stopword_ratio"),
-          TextAnalysis.qualityScoreOf(col("__st")).as("quality"))),
-
-    "lang_id" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        TextAnalysis.langId(col("text")).as("lang_pred"))),
-
-    // per-language Pareto frontier on (token cost, stopword-quality):
-    // the efficient set a budget-constrained selector picks from; one
-    // numeric-RANGE window instead of the quadratic dominance self-join
-    "pareto_front" -> ((s, dir) =>
-      graft.ops.Pipeline.paretoFront(
-        docs(s, dir).withColumn("__st", TextAnalysis.stats(col("text")))
-          .select(col("doc_id"), col("lang"),
-            TextAnalysis.tokenCount(col("text")).cast(LongType).as("cost"),
-            round(TextAnalysis.stopwordRatioOf(col("__st")), 6).as("value")),
-        Seq("lang"), "cost", "value")),
-
-    // classifier eval: predicted-vs-labeled confusion matrix in ONE
-    // corpus pass (prediction inline, no self-join), one partial-agg
-    // shuffle over the tiny (lang, pred) grid
-    "lang_confusion" -> ((s, dir) =>
-      docs(s, dir).select(col("lang"),
-          TextAnalysis.langId(col("text")).as("lang_pred"))
-        .groupBy(col("lang"), col("lang_pred"))
-        .agg(count(lit(1)).as("n"))),
-
-    "fingerprint" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fingerprint"))),
-
-    // PII scrubbing over a corpus with deterministically planted
-    // email/IP/phone strings (doc_id % 5 == 0): match counts per category
-    // plus a fingerprint of the redacted text — the oracle re-runs the
-    // same RE2-safe patterns and the rolling-hash mirror, so the exact
-    // redacted BYTES are value-checked, not just the counts
-    "pii_scrub" -> ((s, dir) => {
-      val planted = docs(s, dir).select(col("doc_id"),
-        when(col("doc_id") % 5 === 0,
-          concat(col("text"), lit(" contact user"),
-            col("doc_id").cast(StringType),
-            lit("@example.com from 10.0.0."),
-            (col("doc_id") % 256).cast(StringType),
-            lit(" call 5551234567")))
-          .otherwise(col("text")).as("text"))
-      TextAnalysis.scrubPii(planted, "text")
-        .select(col("doc_id"), col("n_emails"), col("n_ips"), col("n_phones"),
-          TextAnalysis.fingerprint(col("scrubbed")).as("scrub_fp"))
-    }),
-
-    "ann_ivf" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(dvec(col("embedding")).as("q")).head().getSeq[Double](0)
-      // index build is an offline batch job in production; memoize per
-      // sfDir so repeated queries measure the PROBE path
-      val idx = SparkEntry.ivfCache.getOrElseUpdate(dir,
-        Ann.buildIvf(homD(s, dir), "id", "vector", nlist = 8, maxIter = 5))
-      idx.search(vec(q), k = 10, nprobe = 2).select("id", "score")
-    }),
-
-    // V_RECOMMEND best_score strategy: max positive sim minus max negative
-    // sim (the reference backend's alternative to the average_vector
-    // strategy used by `recommend`)
-    "recommend_best" -> ((s, dir) =>
-      Search.recommendBestScore(hom(s, dir), "vector",
-        posIds = Seq("1", "2"), negIds = Seq("3"), k = 10)),
-
-    // the backend's third recommend strategy: every example pulls —
-    // sum of positive sims minus sum of negative sims, map-side literals
-    "recommend_sum" -> ((s, dir) =>
-      Search.recommendSumScores(hom(s, dir), "vector",
-        posIds = Seq("1", "2"), negIds = Seq("3"), k = 10)),
-
-    // the same IVF probe machinery with deterministic seed-point centroids
-    // (maxIter=0): every stage — init permutation, cluster assignment,
-    // probe selection, rerank — is reproduced by the DuckDB oracle, so the
-    // serving path is value-checked end-to-end (Lloyd's-refined ann_ivf
-    // stays rows-only: float centroid averaging is order-dependent)
-    "ann_ivf_probe" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 5)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val idx = SparkEntry.ivfCache.getOrElseUpdate(s"$dir#probe",
-        Ann.buildIvf(homD(s, dir), "id", "vector", nlist = 8, maxIter = 0))
-      idx.search(vec(q), k = 10, nprobe = 2).select("id", "score")
-    }),
-
-    // IVF serving from the MATERIALIZED cluster-partitioned store: probe
-    // selection is a bounded centroid-table scan, the corpus read is
-    // statically partition-pruned to the probed clusters (the layout every
-    // repeated-query workload should serve from at 100 TB). Same
-    // deterministic maxIter=0 pipeline as ann_ivf_probe, so the oracle
-    // value-checks the pruned path end-to-end.
-    "ann_ivf_bucketed" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val (cents, stored, _) = SparkEntry.ivfStored(s, dir)
-      Ann.searchIvfStored(stored, cents, "id", "vector", vec(q),
-        k = 10, nprobe = 2).select("id", "score")
-    }),
-
-    // cardinality-planned filtered search (the backend's query planner,
-    // qdrant full_scan_threshold): ONE label (~10% < the 20% dial) goes
-    // PRE-filter — value-pruned postings resolve the id set, broadcast
-    // into the exact rerank; result is the exact filtered top-k
-    "ann_filtered_pre" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 3)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val (cents, stored, _) = SparkEntry.ivfStored(s, dir)
-      graft.ops.Planner.searchFilteredPlanned(stored, cents,
-        SparkEntry.payloadIndex(s, dir), "id", "vector", Seq(7L),
-        json_get_int(col("payload"), "label") === 7L,
-        vec(q), k = 10, nprobe = 8)
-    }),
-
-    // MULTI-INDEX intersection: a must of TWO servable conditions on TWO
-    // indexed keys (label, id mod 7). The planner estimates both
-    // cardinalities, the cheaper index DRIVES (scans its value-pruned
-    // partitions), the other resolves to a broadcast id set that
-    // semi-joins it — both posting reads pruned, corpus untouched
-    // (covering driver). Exact over the intersection, so the oracle is
-    // the plain two-clause WHERE
-    "ann_filtered_multi" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 5)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val (cents, stored, _) = SparkEntry.ivfStored(s, dir)
-      graft.ops.Planner.searchFilteredMulti(stored, cents,
-        SparkEntry.payloadIndex(s, dir), Seq(7L),
-        json_get_int(col("payload"), "label") === 7L,
-        SparkEntry.payloadIndexMod7(s, dir), Seq(2L),
-        pmod(col("id").cast(LongType), lit(7L)) === 2L,
-        "id", "vector", vec(q), k = 10, nprobe = 8)
-    }),
-
-    // the KEYWORD index (string-valued — the backend's most common
-    // payload index type): same planner, same covering pre-filter arm,
-    // over value partitions keyed by the derived string 'L'||label. The
-    // oracle rebuilds the same derived keyword in SQL
-    "ann_filtered_keyword" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 11)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val (cents, stored, _) = SparkEntry.ivfStored(s, dir)
-      graft.ops.Planner.searchFilteredKeyword(stored, cents,
-        SparkEntry.keywordIndex(s, dir), "id", "vector", Seq("L3"),
-        concat(lit("L"), graft.functions.json_get_str(col("payload"), "label")) === "L3",
-        vec(q), k = 10, nprobe = 8)
-    }),
-
-    // the SAME planner, loose filter (5 labels ~50% > dial) goes
-    // POST-filter: statically pruned IVF scan, predicate inside the probed
-    // clusters; nprobe = nlist makes the ANN path exact, so the oracle
-    // value-checks the post-filter plan end-to-end too
-    "ann_filtered_post" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 9)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val (cents, stored, _) = SparkEntry.ivfStored(s, dir)
-      graft.ops.Planner.searchFilteredPlanned(stored, cents,
-        SparkEntry.payloadIndex(s, dir), "id", "vector",
-        Seq(0L, 1L, 2L, 3L, 4L),
-        json_get_int(col("payload"), "label").isin(0L, 1L, 2L, 3L, 4L),
-        vec(q), k = 10, nprobe = 8)
-    }),
-
-    // the payload index's own contents: per-value counts read back from
-    // the value-partitioned postings — the stats the planner estimates
-    // from, value-checked against the corpus
-    "payload_index_stats" -> ((s, dir) => {
-      val pidx = SparkEntry.payloadIndex(s, dir)
-      pidx.postings.groupBy(col("value")).agg(count(lit(1)).as("n"))
-    }),
-
-    // the maintenance cycle closed: base write + appended delta batch +
-    // per-partition COMPACTION (file count back to 1, asserted in the
-    // cached helper), then the covering pre-filter search served straight
-    // from the compacted partitions — same oracle as ann_filtered_pre,
-    // because compaction must change the files and NOTHING else
-    "payload_index_compact" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 3)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val (cents, stored, _) = SparkEntry.ivfStored(s, dir)
-      graft.ops.Planner.searchFilteredPlanned(stored, cents,
-        SparkEntry.compactedPayloadIndex(s, dir), "id", "vector", Seq(7L),
-        json_get_int(col("payload"), "label") === 7L,
-        vec(q), k = 10, nprobe = 8)
-    }),
-
-    // the integer index's RANGE condition through the same planner:
-    // label BETWEEN 8 AND 9 (~20% < a 0.25 dial) -> pre-filter, the range
-    // predicate prunes the postings partitions exactly like the IN
-    "ann_filtered_range" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 5)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val (cents, stored, _) = SparkEntry.ivfStored(s, dir)
-      graft.ops.Planner.searchFilteredRange(stored, cents,
-        SparkEntry.payloadIndex(s, dir), "id", "vector", lo = 8L, hi = 9L,
-        json_get_int(col("payload"), "label").between(8L, 9L),
-        vec(q), k = 10, nprobe = 8, fullScanThreshold = 0.25)
-    }),
-
-    // BATCHED serving over the same pruned store: 3 query vectors, ONE
-    // statically pruned scan of the union of their probed clusters, each
-    // row scored only against the queries that probed its cluster, ranked
-    // per query — must return per query exactly what the single-query
-    // pruned path returns (per-query mirror union)
-    "ann_ivf_batch" -> ((s, dir) => {
-      val qids = Seq(5, 7, 11)
-      val qvecs = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id").isin(qids: _*))
-        .select(col("vec_id"), dvec(col("embedding"))).collect()
-        .map(r => r.getAs[Number](0).intValue() -> r.getSeq[Double](1)).toMap
-      val (cents, stored, _) = ivfStored(s, dir)
-      Ann.searchIvfStoredBatch(stored, cents, "id", "vector",
-        qids.map(q => q -> qvecs(q)), k = 10, nprobe = 2)
-    }),
-
-    // ANN recall@10 eval: the IVF probe path (as served) scored against
-    // exact brute force per query, on a deterministic query sample —
-    // "is nprobe=2 enough?" answered with a measured number
-    // ground truth is WARMED offline (recallTruthStore — the brute-force
-    // |queries| x |corpus| pass runs once beside the IVF/LM artifacts),
-    // so the recurring gate prices the probe path + join, not the truth
-    "ann_recall_eval" -> ((s, dir) => {
-      val queries = SparkEntry.recallQueries(s, dir)
-      val (cents, stored, _) = ivfStored(s, dir)
-      Ann.recallAtKWithTruth(SparkEntry.recallTruthStore(s, dir),
-        stored, cents, "id", "vector", queries, k = 10, nprobe = 2)
-    }),
-
-    // the full production serving stack composed: partition-pruned read of
-    // the int8 cluster store (nprobe/nlist of the files, ~4x fewer bytes
-    // per file), approximate-dot candidates, exact-dot rerank of the 100
-    // winners — with that margin the result is exactly the top-10 of the
-    // probed clusters, which the deterministic maxIter=0 mirror reproduces
-    "ann_ivf_quantized" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 9)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val (cents, stored, codes) = SparkEntry.ivfStored(s, dir)
-      Ann.searchIvfStoredQuantized(codes, cents, stored,
-        "id", "vector", "v8_codes", "v8_scale", q,
-        k = 10, nprobe = 2, candidateK = 100)
-    }),
-
-    // product quantization serving: the candidate stage scans ONLY the
-    // stored (id, pcode) codes table — 4 bytes of quantized payload per
-    // row vs 256 for the vector column — and scores each row as 4 array
-    // lookups into the broadcast ADC table (pure codegen, no per-row
-    // vector math); the exact-dot rerank of the candidateK survivors then
-    // reads just those ids from full precision. Fully oracled: the
-    // per-subspace Lloyd's codebooks are the same DECIMAL-quantized
-    // deterministic fit the IVF mirror re-derives
-    "ann_pq" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 11)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val (model, codes) = SparkEntry.pqStore(s, dir)
-      graft.ops.Pq.searchPqStored(codes, homD(s, dir).select("id", "vector"),
-        "id", "vector", model, q, k = 10, candidateK = 100)
-    }),
-
-    // IVF-PQ — the standard production ANN stack composed: the candidate
-    // scan partition-prunes to the nprobe coarse clusters AND reads
-    // m-byte PQ codes (the two cost levers multiply); ADC ranks inside
-    // the probed clusters, exact-dot rerank reads the equally-pruned
-    // full-precision store for just the candidate ids
-    "ann_ivfpq" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 13)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val (model, _) = SparkEntry.pqStore(s, dir)
-      val (cents, stored, _) = SparkEntry.ivfStored(s, dir)
-      graft.ops.Pq.searchIvfPqStored(SparkEntry.ivfPqStore(s, dir), cents,
-        stored, "id", "vector", model, q, k = 10, nprobe = 2, candidateK = 50)
-    }),
-
-    // residual IVF-PQ — the textbook form: codebooks quantize
-    // (vector - coarse centroid) residuals, and the approximate score is
-    // dot(q, centroid[cluster]) (a per-probed-cluster literal) plus the
-    // standard ADC sum over RAW query slices (the dot decomposes
-    // exactly); same pruned file cost, less error per code byte
-    "ann_ivfpq_residual" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 19)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      val (model, codes) = SparkEntry.ivfPqResidualStore(s, dir)
-      val (cents, stored, _) = SparkEntry.ivfStored(s, dir)
-      graft.ops.Pq.searchIvfPqResidual(codes, cents, stored, "id", "vector",
-        model, q, k = 10, nprobe = 2, candidateK = 50)
-    }),
-
-    // grouped search (reference search-groups surface): top-2 per payload
-    // label by cosine — score map-side against the broadcast query vector,
-    // rank inside a PARTITIONED window (shuffles scored (label,id,score)
-    // rows only, never vectors)
-    "group_search" -> ((s, dir) => {
-      val df = hom(s, dir)
-      val q = qvecOf(df, "0")
-      val scored = df.filter(col("id") =!= "0").crossJoin(broadcast(q))
-        .select(col("id"),
-          get_json_object(col("payload"), "$.label").as("label"),
-          round(v_cosine(col("vector"), col("__qvec")), 6).as("score"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("label")).orderBy(col("score").desc, col("id").asc)
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2)
-        .select(col("label"), col("id"), col("score"))
-    }),
-
-    // grouped search WITH LOOKUP (the reference backend's with_lookup):
-    // each group's key is a point id in a lookup collection whose payload
-    // rides along with the group. The grouped result (groups x group_size
-    // rows — bounded) BROADCASTS into the lookup scan, never the reverse:
-    // at 100 TB the lookup collection is corpus-sized, the group table is
-    // model-sized
-    "group_search_lookup" -> ((s, dir) => {
-      val df = hom(s, dir)
-      val q = qvecOf(df, "0")
-      val scored = df.filter(col("id") =!= "0").crossJoin(broadcast(q))
-        .select(col("id"),
-          get_json_object(col("payload"), "$.label").as("label"),
-          round(v_cosine(col("vector"), col("__qvec")), 6).as("score"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("label")).orderBy(col("score").desc, col("id").asc)
-      val groups = scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2)
-        .select(col("label"), col("id"), col("score"))
-      df.select(col("id").as("label"), col("payload").as("lookup_payload"))
-        .join(broadcast(groups), Seq("label"))
-        .select(col("label"), col("id"), col("score"), col("lookup_payload"))
-    }),
-
-    // ingest-time L2 normalization: the stored-unit-vector step every
-    // cosine-serving pipeline wants (then dot == cosine at query time);
-    // map-side composed built-ins over the sequential v_dot kernel
-    "vector_normalize" -> ((s, dir) =>
-      hom(s, dir).select(col("id"),
-        vq6(v_normalize(col("vector"))).as("unit_q6"))),
-
-    // ColBERT-to-dense bridge: mean-pool the multi-vector into one
-    // embedding (pool at ingest, serve cheap dense search, keep the multi
-    // column for MaxSim rerank); left-fold sum both engines share
-    "multi_pool" -> ((s, dir) =>
-      Tables.load(s, dir, "embeddings").select(col("vec_id"),
-        vq6(v_mean_pool(
-          multi_vector_from_flat(col("embedding"), lit(4)))).as("pooled_q6"))),
-
-    // scroll pagination (reference scroll surface): stable id order,
-    // limit+offset — the PARITY form (mirrors Qdrant scroll semantics)
-    "scroll_page" -> ((s, dir) =>
-      hom(s, dir).select(col("id"), col("payload"))
-        .orderBy(col("id").cast(LongType))
-        .offset(20).limit(10)),
-
-    // keyset pagination — the SCALE form of scroll: the client passes the
-    // last key of the previous page and the engine filters `key > last`
-    // instead of sorting rows past a deep OFFSET; page cost stays flat
-    // however deep the scroll goes. Paged over a STORED native key so the
-    // predicate reaches the parquet scan (PlanSpec asserts PushedFilters)
-    // — a production collection stores its id column, which is exactly
-    // this shape; the view's computed string id would hide the filter
-    // behind a cast. scroll_page keeps the reference's offset form.
-    "scroll_keyset" -> ((s, dir) =>
-      docs(s, dir)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .filter(col("doc_id") > 29)
-        .orderBy(col("doc_id"))
-        .limit(10)),
-
-    // hyperplane-LSH ANN over INGEST-MATERIALIZED signatures: the serving
-    // path reads the stored (id, vector, bucket) frame, band-matches the
-    // driver-computed query signature as a pure long-compare scan filter
-    // (no join, no shuffle, no per-row hyperplane dot), exact-cosine
-    // reranks the survivors — fully oracled since the plane family is
-    // deterministic arithmetic both engines share. The query point's
-    // exclusion is THIS query's predicate on the stored frame, not baked
-    // into the shared ingest artifact.
-    "ann_lsh" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 3)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      Ann.searchLshStored(
-        SparkEntry.storedLshSignatures(s, dir).filter(col("id") =!= "3"),
-        "id", "vector", q, k = 10)
-    }),
-
-    // graph-based ANN (the HNSW-family topology, relationally): LSH band
-    // match picks 3 exact-scored entry points, TWO hops through the stored
-    // top-8 adjacency widen the beam (the stored edges reach candidates
-    // outside the query's own band buckets — measured past the full-bucket
-    // rerank at hops=3, ScaleProbe recall), union reranks exactly — the
-    // whole pipeline (edge proposal, per-node truncation, frontier
-    // expansion, rerank) is deterministic and mirrored stage for stage
-    "ann_knn_graph" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 3)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      Ann.searchKnnGraph(knnGraph(s, dir),
-        storedLshSignatures(s, dir).filter(col("id") =!= "3"),
-        "id", "vector", q, k = 10, entryK = 3, hops = 2)
-    }),
-
-    // NN-DESCENT: one neighbors-of-neighbors round refines the
-    // LSH-seeded adjacency (candidates = 2-step neighbors through the
-    // undirected edge view ∪ standing edges, top-m per node by exact
-    // cosine — a bounded self-join, never all-pairs). The graph arm's
-    // recall ceiling is set by what LSH buckets propose; descent
-    // recovers the missing edges at build time, serve cost unchanged.
-    // Same serve as ann_knn_graph over the refined adjacency; the oracle
-    // unrolls the round stage for stage
-    "ann_knn_descent" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 3)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      Ann.searchKnnGraph(SparkEntry.knnDescentGraph(s, dir),
-        storedLshSignatures(s, dir).filter(col("id") =!= "3"),
-        "id", "vector", q, k = 10, entryK = 3, hops = 2)
-    }),
-
-    // DEEP graph serving (hops=3) under per-hop BEAM pruning: each hop
-    // keeps the top-8 unvisited neighbors by max(frontier_score * stored
-    // sim) — no vector touched during expansion, visited grows by <=beam
-    // per hop instead of *m per hop, so deep walks stay model-sized
-    // (the unpruned frontier would be entryK * m^3 = 1536 wide here)
-    "ann_knn_graph_hops" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 3)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      Ann.searchKnnGraph(knnGraph(s, dir),
-        storedLshSignatures(s, dir).filter(col("id") =!= "3"),
-        "id", "vector", q, k = 10, entryK = 3, hops = 3, beam = 8)
-    }),
-
-    // HNSW-style LAYERED entry points over the descent graph: a seeded
-    // 256-node model-sized upper layer scored in full (one coarse scan,
-    // like IVF's centroid probe) lands the best entry + its upper
-    // neighbors (ef-seeding); the beam serve expands from them over the
-    // refined base graph. Entry QUALITY replaces entry QUANTITY — the
-    // recall probe compares this against LSH entries at equal visited
-    // budget; the gate pins the whole serve against its DuckDB mirror
-    "ann_hnsw_entry" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 3)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      Ann.searchKnnGraphLayered(SparkEntry.knnDescentGraph(s, dir),
-        SparkEntry.hnswUpperAdj(s, dir), SparkEntry.hnswSample(s, dir),
-        storedLshSignatures(s, dir).filter(col("id") =!= "3"),
-        "id", "vector", q, k = 10, entryE = 3, hops = 3, beam = 8)
-    }),
-
-    // TRUE insertion-order HNSW, built PER SEGMENT (the per-shard model
-    // of the reference's backend: one sequential graph per segment with
-    // the full log-N hierarchy — geometric level draw, greedy descent,
-    // efConstruction beam, bidirectional mMax pruning — built OFFLINE
-    // like IVF/NB); queries fan out to every segment's graph and the
-    // per-segment pages merge. At a generous efSearch each segment's
-    // beam recovers its true top-k on this fixture, so the merged page
-    // equals brute force and the plain exact top-k SQL oracles it — the
-    // build is fully seeded/deterministic, so the equality is stable
-    "ann_hnsw_insert" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      Ann.searchHnsw(
-        homD(s, dir).select("id", "vector").filter(col("id") =!= "7"),
-        SparkEntry.hnswInsertEdges(s, dir), "id", "vector", q, k = 10,
-        efSearch = 128, numSegments = 4)
-    }),
-
-    // incremental IVF maintenance: assign points against the EXISTING
-    // centroid table (no rebuild) — the path by which streamed-in points
-    // join a served index; pure map-side argmin over broadcast centroid
-    // literals, so the same expression runs unbounded (StreamingSpec)
-    "ann_ivf_assign" -> ((s, dir) => {
-      val idx = SparkEntry.ivfCache.getOrElseUpdate(s"$dir#probe",
-        Ann.buildIvf(homD(s, dir), "id", "vector", nlist = 8, maxIter = 0))
-      Ann.assignToCentroids(homD(s, dir).select("id", "vector"),
-          "vector", idx.centroids)
-        .select(col("id"), col("cluster"))
-    }),
-
-    // the maintenance loop CLOSED: assignToCentroids covers points
-    // streaming into an existing index; when drift warrants, the index
-    // REFITS — here a drifted cohort (every third vector re-embedded,
-    // shifted +1.5/dim under a fresh id) joins the corpus, centroids
-    // refit from scratch (same md5 init + one DECIMAL-quantized Lloyd's
-    // round, order-independent in both engines), and EVERY point
-    // reassigns — the mirror re-derives the whole composition
-    "ann_ivf_refit" -> ((s, dir) => {
-      val base = homD(s, dir).select("id", "vector")
-      val drifted = base.filter(col("id").cast(LongType) % 3 === 0)
-        .select(concat(lit("d"), col("id")).as("id"),
-          transform(col("vector"), x => x + lit(1.5)).as("vector"))
-      val idx = Ann.buildIvf(base.union(drifted), "id", "vector",
-        nlist = 8, maxIter = 1)
-      idx.clustered.select(col("id"), col("cluster"))
-    }),
-
-    // same LSH search served from the PER-BAND index layout (one hash
-    // table per band, partitionBy(band, bandkey)): the query's literal
-    // band keys partition-prune the index read — bands point lookups,
-    // no full-signature scan (pruning asserted in BucketingSpec) — and
-    // the candidate ids broadcast into the exact-cosine rerank. Same
-    // oracle as ann_lsh: the candidate set (OR of band matches) and the
-    // rerank arithmetic are identical, only the cost shape differs
-    "ann_lsh_bucketed" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 3)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      Ann.searchLshStoredPartitioned(
-        SparkEntry.lshBandStore(s, dir),
-        SparkEntry.storedLshSignatures(s, dir).filter(col("id") =!= "3"),
-        "id", "vector", q, k = 10)
-    }),
-
-    // 1-bit multiprobe over the SAME per-band index: each band probes its
-    // own key plus every single-bit flip — bands*(1+r) point lookups,
-    // still zero signature scans, wider candidates, same exact-cosine
-    // rerank. The recall dial of a served LSH index (probe more buckets
-    // instead of storing more tables); recall curve in BASELINE.md
-    "ann_lsh_multiprobe" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 17)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      Ann.searchLshStoredMultiprobe(
-        SparkEntry.lshBandStore(s, dir),
-        SparkEntry.storedLshSignatures(s, dir).filter(col("id") =!= "17"),
-        "id", "vector", q, k = 10)
-    }),
-
-    // int8-quantized candidate search + full-precision rerank; with a
-    // candidate margin the exact top-k is recovered, so the dot_topk-style
-    // oracle applies (scores are the EXACT rerank scores)
-    "quantized_search" -> ((s, dir) => {
-      val corpus = hom(s, dir).select("id", "vector").filter(col("id") =!= "7")
-      val qvec = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      // serving path over codes quantized once at ingest (storedCodes):
-      // candidate stage in the int8 domain (margin 100) never touches the
-      // full-precision column; exact rerank fetches the 100 winners'
-      // vectors by id, with the rounded-before-rank rule so the oracle's
-      // top-10 boundary agrees. The query point's exclusion is THIS
-      // query's predicate, applied on the stored frame — not baked into
-      // the shared ingest artifact
-      graft.ops.Quant.searchStoredCodes(
-          SparkEntry.storedCodes(s, dir).filter(col("id") =!= "7"), corpus,
-          "id", "vector", "v8_codes", "v8_scale", qvec, k = 100, candidateK = 100)
-        .withColumn("score", round(col("score"), 6))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    // corpus-calibrated (quantile-clipped 0.99) scalar quantization — the
-    // backend's `quantile` dial: ONE affine mapping for the collection,
-    // candidate stage on stored (codes, csum), exact rerank. The oracle
-    // re-derives the calibration from its own percentiles, re-encodes
-    // every vector, and reproduces the affine approximate dot with the
-    // same parenthesization — the full quantizer arithmetic is pinned
-    "quantized_calibrated" -> ((s, dir) => {
-      val (cal, codes) = SparkEntry.calibratedStore(s, dir)
-      val qvec = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 13)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      graft.ops.Quant.searchCalibrated(codes, homD(s, dir), "id", "vector",
-          "cal_codes", "cal_csum", cal, dim = 64, qvec, k = 100, candidateK = 100)
-        .withColumn("score", round(col("score"), 6))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    // binary-quantized (1 bit/dim) candidate search + full-precision
-    // rerank over bits packed once at ingest. Unlike quantized_search the
-    // oracle mirrors the CANDIDATE stage too (Hamming = per-dim
-    // sign-mismatch count, ties by id), so the gate is deterministic at
-    // any recall level — no margin assumption
-    "bq_search" -> ((s, dir) => {
-      val corpus = hom(s, dir).select("id", "vector").filter(col("id") =!= "7")
-      val qvec = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 7)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      graft.ops.Quant.searchStoredBits(
-          SparkEntry.storedBits(s, dir).filter(col("id") =!= "7"), corpus,
-          "id", "vector", "v1_bits", qvec, k = 100, candidateK = 100)
-        .withColumn("score", round(col("score"), 6))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    // snapshot/restore round-trip: the hetero collection exported
-    // (parquet points + descriptor manifest), restored under a NEW name
-    // into a NEW store, and the full 5-field value check of dsv2_hetero
-    // re-run THROUGH the restored connector — same oracle
-    "dsv2_snapshot" -> ((s, dir) => {
-      import graft.sources._
-      CollectionStores.register("snap_src_store", InMemoryCollectionStore.fromRows(
-        Collections.heterogeneous(s, dir),
-        "hetero", Collections.heterogeneousDescriptor))
-      val path = java.nio.file.Files.createTempDirectory("graft-snap").toString
-      graft.collections.Snapshot.create(s, "snap_src_store", "hetero", path)
-      graft.collections.Snapshot
-        .restore(s, path, "snap_restore_store", "hetero_restored")
-        .select(
-          col("id"), col("payload"),
-          vq6(col("text_embedding")).as("text_embedding_q6"),
-          vq6(col("image_embedding")).as("image_embedding_q6"),
-          vq6(col("audio_embedding")).as("audio_embedding_q6"),
-          array_join(transform(col("multi_embeddings"), sv => vq6(sv)), ";")
-            .as("multi_q6"),
-          iarr(col("keywords_indices")).as("keywords_indices_s"),
-          vq6(col("keywords_values")).as("keywords_values_q6"))
-    }),
-
-    // multitenant serving: the tenant predicate is a STATIC partition
-    // filter over the partitionBy(tenant) layout — the scan reads one
-    // tenant's files (pruning asserted in BucketingSpec); the query
-    // point's exclusion is this query's predicate
-    "tenant_search" -> ((s, dir) => {
-      val q = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 21)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      graft.ops.Tenant.searchTenant(
-        SparkEntry.tenantStore(s, dir).filter(col("id") =!= "21"),
-        "tenant", "t2", "id", "vector", vec(q), k = 10)
-    }),
-
-    // the admin view of the tenant layout: per-tenant point counts
-    "tenant_stats" -> ((s, dir) =>
-      graft.ops.Tenant.tenantStats(SparkEntry.tenantStore(s, dir), "tenant")),
-
-    // IVF + BQ: coarse quantizer prunes to nprobe/nlist of the
-    // partitioned 1-bit files, Hamming page, exact rerank — the cheapest
-    // tier that still partition-prunes; every stage oracle-mirrored
-    "ann_ivfbq" -> ((s, dir) => {
-      val (cent, stored, _) = SparkEntry.ivfStored(s, dir)
-      val qvec = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 31)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      Ann.searchIvfBqStored(SparkEntry.ivfBqBits(s, dir), cent, stored,
-        "id", "vector", "v1_bits", qvec, k = 10, nprobe = 2, candidateK = 100)
-    }),
-
-    // three-tier cascade: 1-bit Hamming page (200) -> int8 approx cut
-    // (50) -> exact top-10. The oracle mirrors ALL THREE stages including
-    // the int8 scale/round arithmetic — the first value-pin of the
-    // quantizer itself (quantized_search pins only the margin contract)
-    "cascade_rerank" -> ((s, dir) => {
-      val corpus = hom(s, dir).select("id", "vector").filter(col("id") =!= "23")
-      val qvec = Tables.load(s, dir, "embeddings").filter(col("vec_id") === 23)
-        .select(dvec(col("embedding"))).head().getSeq[Double](0)
-      graft.ops.Quant.cascadeSearch(
-          SparkEntry.storedBits(s, dir).filter(col("id") =!= "23"),
-          SparkEntry.storedCodes(s, dir).filter(col("id") =!= "23"),
-          corpus, "id", "vector", "v1_bits", "v8_codes", "v8_scale", qvec,
-          k = 50, midK = 50, candidateK = 200)
-        .withColumn("score", round(col("score"), 6))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(10)
-    }),
-
-    // facet API: top-N payload values by count under a filter
-    "facet_counts" -> ((s, dir) =>
-      Search.facet(
-        hom(s, dir).filter(col("id").cast(LongType) % 3 =!= 0),
-        col("payload"), "label", topN = 5)),
-
-    // search-matrix API: pairwise top-5 neighbours within a 20-point
-    // deterministic sample
-    "distance_matrix" -> ((s, dir) =>
-      Search.distanceMatrix(homD(s, dir), "id", "vector",
-        sampleN = 20, perPoint = 5, seed = 42, metric = "dot")),
-
-    // the matrix API's second wire format: pair ends as POSITIONS in the
-    // sampled-ids list (dense-matrix-ready offsets), same sample + pairs
-    "distance_matrix_offsets" -> ((s, dir) =>
-      Search.distanceMatrixOffsets(homD(s, dir), "id", "vector",
-        sampleN = 20, perPoint = 5, seed = 42, metric = "dot")),
-
-    // order_by scroll: one page ordered by (payload field, id) starting
-    // strictly after a (value, id) keyset
-    "scroll_order_by" -> ((s, dir) =>
-      hom(s, dir)
-        .withColumn("label", json_get_int(col("payload"), "label"))
-        .transform(d => Search.scrollByField(
-          d.select(col("id"), col("label")),
-          col("label"), col("id"), lit(1), lit("17"), n = 10))),
-
-    // order_by scroll, direction=desc: the keyset walks DOWN the value
-    // order from (8, '21'); same TakeOrdered page shape as the asc form
-    "scroll_order_by_desc" -> ((s, dir) =>
-      hom(s, dir)
-        .withColumn("label", json_get_int(col("payload"), "label"))
-        .transform(d => Search.scrollByField(
-          d.select(col("id"), col("label")),
-          col("label"), col("id"), lit(8), lit("21"), n = 10,
-          descending = true))),
-
-    // budget-bounded selection ("fill the token budget with the best
-    // docs"): ONE distributed prefix sum — range sort, per-partition
-    // totals as model state, partition-keyed window (state bounded per
-    // partition, never a single-partition global window) — then a
-    // map-side cumulative cut
-    "budget_select" -> ((s, dir) =>
-      graft.ops.Ranks.selectWithinBudget(
-        docs(s, dir).select(col("doc_id"), col("n_chars")),
-        tokens = col("n_chars"), budget = 60000L,
-        (col("n_chars") % 91).desc, col("doc_id").asc)
-        .select(col("doc_id"), col("cum_tokens"))),
-
-    // per-source token caps ("no domain contributes more than B"): the
-    // keyed form — a plain partitioned window, one shuffle on source
-    "budget_select_by_source" -> ((s, dir) =>
-      graft.ops.Ranks.selectWithinBudgetBy(
-        docs(s, dir).select(col("doc_id"), col("source"), col("n_chars")),
-        groupCol = col("source"), tokens = col("n_chars"),
-        budgetPerGroup = 4000L,
-        (col("n_chars") % 91).desc, col("doc_id").asc)
-        .select(col("doc_id"), col("source"), col("cum_tokens"))),
-
-    // deterministic per-epoch training order: md5(salt:epoch:id)
-    // permutation + distributed global rank — rerun-stable positions,
-    // one range-sort per epoch, no single-partition window
-    "epoch_shuffle" -> ((s, dir) =>
-      graft.ops.Layout.epochShuffle(
-        docs(s, dir).select("doc_id"), "doc_id", epochs = 2, salt = "ep")
-        .orderBy(col("epoch"), col("pos"))),
-
-    // fair source interleaving (anti-clumping order): round r serves
-    // every source's r-th doc; within-source ranks from ONE global sort
-    // minus model-sized per-source offsets, never a per-source window
-    "interleave_sources" -> ((s, dir) =>
-      graft.ops.Layout.interleaveBySource(
-        docs(s, dir).select("doc_id", "source"), "doc_id", "source",
-        salt = "il")
-        .orderBy(col("pos"))),
-
-    // rendezvous (HRW) resharding: argmax-of-hash assignment, so growing
-    // 8 -> 9 shards moves only the rows the NEW shard wins (~1/9) —
-    // resharding as incremental copy, not full reshuffle
-    "rendezvous_reshard" -> ((s, dir) => {
-      val base = docs(s, dir).select("doc_id")
-      val a8 = graft.ops.Pipeline.rendezvousAssign(base, "doc_id", 8, "s8")
-      val a9 = graft.ops.Pipeline.rendezvousAssign(base, "doc_id", 9, "s9")
-      a8.join(a9, "doc_id").withColumn("moved", col("s8") =!= col("s9"))
-    }),
-
-    // importance sampling: keep probability proportional to doc length
-    // (the max-length doc at rate 0.8), md5-permutation decided — a
-    // map-side filter after one broadcast max
-    "weighted_sample" -> ((s, dir) =>
-      Search.weightedSample(docs(s, dir).select("doc_id", "n_chars"),
-        "doc_id", col("n_chars"), maxRate = 0.8, seed = 11L)),
-
-    // deterministic training-shard manifest: md5-permutation shard
-    // assignment (engine-independent, layout-independent) + per-shard
-    // stats — the export step that turns a cleaned corpus into N
-    // equal-ish shards a trainer can stream
-    "shard_export" -> ((s, dir) => {
-      val shard = (conv(substring(md5(concat(col("doc_id").cast(StringType),
-        lit("#7"))), 1, 15), 16, 10).cast(LongType) % 8).as("shard")
-      docs(s, dir)
-        .select(shard, col("doc_id"), col("n_chars"))
-        .groupBy(col("shard"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("n_chars"),
-          min(col("doc_id")).as("min_doc"),
-          max(col("doc_id")).as("max_doc"))
-        .orderBy(col("shard"))
-    }),
-
-    "multimodal_features" -> ((s, dir) =>
-      Multimodal.featuresOf(s, dir)
-        .select(col("id"), col("format"), col("nBytes"))),
-
-    // frame sampling over the synthetic media table: the 1-to-N iterator
-    // explode of a video decoder (sampling arithmetic + batch shape real,
-    // frame extractor stubbed as deterministic byte slices — oracled on
-    // frame count, timestamps, and per-frame byte length)
-    // cross-media frame dedup: byte-identical sampled frames collapse —
-    // the multimodal analog of exact text dedup (re-encoded copies share
-    // frames); planted duplicate media rows collide on every frame
-    "multimodal_frame_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val media = docsWithExactDups(s, dir).select(
-        col("doc_id").cast(StringType).as("id"),
-        encode(col("text"), "UTF-8").as("media"),
-        lit("fake").as("format"), lit(0).as("width"), lit(0).as("height"),
-        (length(col("text")).cast(LongType) * 10L).as("durationMs"))
-      Multimodal.dedupFrames(
-        Multimodal.sampleFrames(media.as[Multimodal.MediaRow]))
-    }),
-
-    "multimodal_frames" -> ((s, dir) => {
-      import s.implicits._
-      Multimodal.sampleFrames(
-          Multimodal.syntheticMediaTable(s, dir).as[Multimodal.MediaRow])
-        .toDF()
-        .select(col("id"), col("frame_idx"), col("ts_ms"),
-          length(col("frame")).as("n_bytes"))
-    })
-  )
-
-  /** Corpus-analytics and layout operators beyond the per-document
-    * pipeline: substring-span dedup, fuzzy dedup, link-graph scoring,
-    * OLAP grouping forms, multi-dimensional layout, temperature mixing.
-    */
-  private val analyticsOps: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // substring-level dedup (Lee et al.): token 3-shingles occurring in
-    // >= 2 docs mark duplicated ranges; touching ranges merge into maximal
-    // spans per doc. Planted: whole-doc dups (full-doc spans) + the shared
-    // tail phrase (tail spans) — output is token-index intervals
-    "dedup_spans" -> ((s, dir) =>
-      Dedup.duplicatedSpans(docsWithSharedPhrase(s, dir), "doc_id", "text",
-        w = 3)),
-
-    // the corpus-health roll-up of dedup_spans: how much of each affected
-    // document is duplicated text (span count, duplicated tokens, ratio)
-    "span_stats" -> ((s, dir) =>
-      Dedup.spanStats(docsWithSharedPhrase(s, dir), "doc_id", "text", w = 3)),
-
-    // the actionable substring dedup: duplicated spans REMOVED, one copy
-    // (the min-doc owner's) kept corpus-wide; output value-checks the
-    // reconstruction via kept-token count + rolling-hash fingerprint —
-    // planted whole-doc copies lose every token and drop out
-    "span_strip" -> ((s, dir) =>
-      Dedup.stripDuplicatedSpans(docsWithSharedPhrase(s, dir), "doc_id",
-        "text", w = 3)),
-
-    // fuzzy (edit-distance) dedup: Levenshtein <= 2 on 60-char prefixes
-    // within (lang, source, 8-char-prefix) blocks — catches the planted
-    // single-character typo variants exact/minhash dedup both miss
-    "dedup_fuzzy" -> ((s, dir) =>
-      Dedup.fuzzyPairs(docsWithTypos(s, dir), "doc_id", "text",
-        Seq("lang", "source"), prefixLen = 8, capLen = 60, maxDist = 2)),
-
-    // link-graph quality scoring: integer-scaled PageRank (5 iterations,
-    // d=0.85) over the undirected supplier<->part co-purchase graph; ranks
-    // are scaled longs updated with pure integer arithmetic, so the result
-    // is layout/order/engine independent. The materialized edge model
-    // (checkpointed adjacency + degrees) is the per-dir stored artifact
-    // all graph gates share — the ivfStored pattern.
-    "pagerank_topk" -> ((s, dir) =>
-      graft.ops.Graph.pageRank(edgeModel(s, dir), iterations = 5)
-        .orderBy(col("rank_scaled").desc, col("id").asc)
-        .limit(10)),
-
-    // OLAP grouping forms over lineitem — DECIMAL-accumulated quantity so
-    // the super-aggregate rows are order-independent; gid disambiguates
-    // NULL group cells from NULL data. Execution shape: the corpus is
-    // aggregated ONCE at the finest grouping (flag, status); every
-    // super-aggregate re-aggregates that tiny base (exact: decimal sums
-    // of decimal sums, long sums of counts — the same values CUBE/ROLLUP
-    // compute through Expand). Expand would push 3-4 copies of EVERY raw
-    // row through the partial aggregate (and cast each to decimal); the
-    // base+reagg form does the per-row work once — one corpus exchange,
-    // then group-count-sized re-aggs (the branches reuse the base
-    // exchange). gid reconstructed per branch (kept=0 bit, aggregated=1;
-    // flag is the high bit), matching grouping_id().
-    "rollup_agg" -> ((s, dir) =>
-      olapReagg(Tables.load(s, dir, "lineitem"), Seq(0L, 1L, 3L))),
-
-    "cube_agg" -> ((s, dir) =>
-      olapReagg(Tables.load(s, dir, "lineitem"), Seq(0L, 1L, 2L, 3L))),
-
-    "grouping_sets_agg" -> ((s, dir) =>
-      // GROUPING SETS ((flag), (status), ()) == the gid 1/2/3 branches,
-      // no gid column in the declared output
-      olapReagg(Tables.load(s, dir, "lineitem"), Seq(1L, 2L, 3L))
-        .drop("gid")),
-
-    // z-order (Morton) clustering evidence: rows keyed by the interleaved
-    // 10+10-bit key of (l_partkey, l_suppkey) mod 1024; per 64-key bucket,
-    // the bounding box of BOTH dimensions stays small — the file-skipping
-    // property ZORDER BY layouts buy (the key expression is emitted by the
-    // same Scala loop as the oracle's SQL)
-    "zorder_key" -> ((s, dir) => {
-      val x = (col("l_partkey") % 1024).cast(LongType)
-      val y = (col("l_suppkey") % 1024).cast(LongType)
-      Tables.load(s, dir, "lineitem")
-        .select(graft.ops.Layout.zorderKey(x, y, 10).as("zkey"),
-          x.as("x"), y.as("y"))
-        .groupBy(shiftright(col("zkey"), 14).as("zbucket"))
-        .agg(count(lit(1)).as("n"),
-          min(col("x")).as("min_x"), max(col("x")).as("max_x"),
-          min(col("y")).as("min_y"), max(col("y")).as("max_y"))
-    }),
-
-    // temperature-scaled source mixing (T=2): per-source quota
-    // proportional to sqrt(count) — the multilingual-rebalancing rule —
-    // with exact integer quotas and the md5 permutation picking rows
-    "temperature_sample" -> ((s, dir) =>
-      Search.temperatureSample(docs(s, dir).select("doc_id", "source"),
-        "doc_id", "source", k = 200, seed = 11L)
-        .select("doc_id", "source")),
-
-    // domain histogram over planted URLs — the crawl-side provenance
-    // aggregate (dedup-by-domain, robots audits, domain mixing all start
-    // here); regexp capture-group extraction is identical in both engines
-    "domain_counts" -> ((s, dir) =>
-      docs(s, dir)
-        .select(col("doc_id"),
-          when(col("doc_id") % 3 === 0,
-            concat(col("text"), lit(" see https://site"),
-              (col("doc_id") % 5).cast(StringType), lit(".example.org/page")))
-            .otherwise(col("text")).as("text"))
-        .select(regexp_extract(col("text"),
-          "https://([a-z0-9.]+)/", 1).as("domain"))
-        .filter(col("domain") =!= "")
-        .groupBy(col("domain")).agg(count(lit(1)).as("n"))),
-
-    // per-user inter-event gap profile: lag() deltas in exact integer
-    // MICROSECONDS (unix_micros — second-granularity epoch would have to
-    // round the sub-second part, which engines do differently), aggregated
-    // per user — the sessionization diagnostic; (ts, event_id) ordering
-    // makes ties deterministic
-    "lead_lag" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      events(s, dir)
-        .withColumn("gap",
-          unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
-        .filter(col("gap").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_gaps"), sum(col("gap")).as("sum_gap_us"),
-          max(col("gap")).as("max_gap_us"))
-    }),
-
-    // conversion funnel view -> click -> purchase: each step's timestamp
-    // must strictly follow the user's previous step (exact integer
-    // microseconds); per-step reached-user counts — the product-analytics
-    // shape over the events table. Per-user aggregates + user-keyed joins
-    // (co-partitioned, no skew: one row per user per step).
-    "funnel_steps" -> ((s, dir) => {
-      val e = events(s, dir).select(col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("t"))
-      val v = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("t")).as("t1"))
-      val c = e.filter(col("event_type") === "click")
-        .join(v, "user_id").filter(col("t") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("t")).as("t2"))
-      val p = e.filter(col("event_type") === "purchase")
-        .join(c, "user_id").filter(col("t") > col("t2"))
-        .groupBy(col("user_id")).agg(min(col("t")).as("t3"))
-      v.agg(count(lit(1)).as("users")).select(lit("1_view").as("step"), col("users"))
-        .unionByName(c.agg(count(lit(1)).as("users"))
-          .select(lit("2_click").as("step"), col("users")))
-        .unionByName(p.agg(count(lit(1)).as("users"))
-          .select(lit("3_purchase").as("step"), col("users")))
-    }),
-
-    // retention cohorts: users bucketed by first-seen day, activity
-    // counted per (cohort day, day offset) — all integer date arithmetic
-    "retention_cohorts" -> ((s, dir) => {
-      val e = events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("d"))
-      val cohorts = e.groupBy(col("user_id")).agg(min(col("d")).as("c0"))
-      e.join(cohorts, "user_id")
-        .groupBy(col("c0").cast(StringType).as("cohort"),
-          datediff(col("d"), col("c0")).cast(LongType).as("day_offset"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-    }),
-
-    // degree distribution of the supplier<->part graph — the structural
-    // sanity report run before any graph algorithm at scale (reads the
-    // shared edge model's degree table)
-    "graph_degrees" -> ((s, dir) =>
-      edgeModel(s, dir).outdeg
-        .select(col("outdeg").as("degree"))
-        .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))),
-
-    // ANALYZE-style column profile: one aggregation pass computes every
-    // column's (rows, nulls, exact distinct, min, max), then unpivots —
-    // the planner/ownership statistics report
-    "table_profile" -> ((s, dir) =>
-      graft.ops.Profile.tableProfile(docs(s, dir),
-        Seq("doc_id", "lang", "source", "n_chars"))),
-
-    // vocabulary folding through the shared-rule light stemmer (ONE rule
-    // list drives the engine column and the oracle SQL)
-    "stemmed_vocab" -> ((s, dir) =>
-      TextAnalysis.stemmedVocab(docs(s, dir), "text", k = 25)),
-
-    // robust per-group mean: drop the bottom and top deciles by
-    // (n_chars, doc_id) rank, average the integer middle — outlier-proof
-    // corpus reporting with exact arithmetic
-    "trimmed_mean" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(col("n_chars"), col("doc_id"))
-      docs(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .withColumn("cnt", count(lit(1)).over(Window.partitionBy(col("lang"))))
-        .filter(col("rn") > expr("cnt div 10") &&
-          col("rn") <= col("cnt") - expr("cnt div 10"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"),
-          round(sum(col("n_chars")).cast(DoubleType) /
-            count(lit(1)).cast(DoubleType), 6).as("trimmed_avg_chars"))
-    }),
-
-    // grouped continuous percentiles of document length — the corpus
-    // length-profile report; interpolation is one IEEE multiply-add on
-    // exact integers, identical in both engines
-    "doc_quantiles" -> ((s, dir) => {
-      docs(s, dir).createOrReplaceTempView("docs_q")
-      s.sql(
-        """SELECT lang,
-          |       percentile_cont(0.25) WITHIN GROUP (ORDER BY n_chars) AS p25,
-          |       percentile_cont(0.5)  WITHIN GROUP (ORDER BY n_chars) AS p50,
-          |       percentile_cont(0.75) WITHIN GROUP (ORDER BY n_chars) AS p75
-          |FROM docs_q GROUP BY lang""".stripMargin)
-    }),
-
-    // Pearson correlation per group WITHOUT the order-dependent built-in:
-    // centi-integer moments (2-dp money grid) summed exactly, combined in
-    // one fixed double expression — the engine's stddev recipe extended to
-    // covariance; bit-equal on any layout or engine
-    "corr_stats" -> ((s, dir) => {
-      val x = floor(col("l_quantity") * 100 + lit(0.5)).cast(LongType)
-      val y = floor(col("l_extendedprice") * 100 + lit(0.5)).cast(LongType)
-      Tables.load(s, dir, "lineitem")
-        .select(col("l_returnflag"), x.as("x"), y.as("y"))
-        .groupBy(col("l_returnflag"))
-        // per-row products fit a long; the SUMS go through exact DECIMAL
-        // (sum of cents-squared passes 2^63 at sf >= 0.1)
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-          sum(col("y")).as("sy"),
-          sum((col("x") * col("y")).cast(DecimalType(38, 0))).as("sxy"),
-          sum((col("x") * col("x")).cast(DecimalType(38, 0))).as("sx2"),
-          sum((col("y") * col("y")).cast(DecimalType(38, 0))).as("sy2"))
-        .select(col("l_returnflag"),
-          round((col("n").cast(DoubleType) * col("sxy").cast(DoubleType) -
-            col("sx").cast(DoubleType) * col("sy").cast(DoubleType)) /
-            (sqrt(col("n").cast(DoubleType) * col("sx2").cast(DoubleType) -
-              col("sx").cast(DoubleType) * col("sx").cast(DoubleType)) *
-             sqrt(col("n").cast(DoubleType) * col("sy2").cast(DoubleType) -
-               col("sy").cast(DoubleType) * col("sy").cast(DoubleType))), 6)
-            .as("corr_qty_price"))
-    })
-  )
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    scanAndJson ++ denseSearch ++ compositeSearch ++ relational ++
-      pipelineOps ++ analyticsOps
-
-  // ---- DuckDB oracle SQL --------------------------------------------------
-
-  /** DuckDB mirror of [[vq6]]: comma-joined round(x*1e6) integers. */
-  private def duckVq6(expr: String): String =
-    s"array_to_string(list_transform(CAST($expr AS DOUBLE[]), " +
-      "x -> CAST(CAST(floor(x * 1000000 + 0.5) AS BIGINT) AS VARCHAR)), ',')"
-
-  /** Shared oracle of the two set_payload gates: expected VALUES after
-    * the patch ({"label":99,"reviewed":true} on vec_id 0,10,20,30,40),
-    * read through the json surface so payload serialization order never
-    * enters the compare.
-    */
-  private val SetPayloadOracle: String =
-    """SELECT CAST(vec_id AS VARCHAR) AS id,
-      |       CAST(CASE WHEN vec_id IN (0, 10, 20, 30, 40) THEN 99
-      |                 ELSE label END AS INTEGER) AS label,
-      |       CASE WHEN vec_id IN (0, 10, 20, 30, 40) THEN true END AS reviewed
-      |FROM embeddings ORDER BY id""".stripMargin
-
-  private val oracleScanAndJson: Map[String, String] = Map(
-    "scan_select_star" ->
-      s"""SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload,
-        |       ${duckVq6("embedding")} AS vector_q6
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "sink_roundtrip" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "scan_projection" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "scan_limit" ->
-      s"""SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       ${duckVq6("embedding")} AS vector_q6
-        |FROM embeddings ORDER BY vec_id LIMIT 5""".stripMargin,
-
-    "hetero_nulls" ->
-      s"""SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload,
-        |       CASE WHEN vec_id % 3 IN (0, 1) THEN ${duckVq6("embedding")} END AS text_embedding_q6,
-        |       CASE WHEN vec_id % 3 = 2 THEN ${duckVq6("embedding")} END AS audio_embedding_q6,
-        |       CASE WHEN vec_id % 3 <> 1 THEN
-        |         array_to_string(list_transform(list_filter(range(1, len(embedding) + 1), i -> embedding[i] > 0), i -> CAST(i - 1 AS VARCHAR)), ',')
-        |       END AS keywords_indices_s,
-        |       CASE WHEN vec_id % 3 <> 1 THEN ${duckVq6("list_filter(embedding, x -> x > 0)")} END AS keywords_values_q6
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "multi_vector" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       CAST(4 AS INTEGER) AS n_sub,
-        |       CASE WHEN len(embedding) % 4 = 0 THEN
-        |         array_to_string(list_transform(range(0, 4), i ->
-        |           array_to_string(list_transform(
-        |             CAST(embedding AS DOUBLE[])[i * (len(embedding) // 4) + 1 : (i + 1) * (len(embedding) // 4)],
-        |             x -> CAST(CAST(floor(x * 1000000 + 0.5) AS BIGINT) AS VARCHAR)), ',')), ';')
-        |       END AS mv_q6
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "json_get" ->
-      """SELECT event_id,
-        |       json_extract_string(props, '$.k') AS k_str,
-        |       CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_int
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "json_filter_agg" ->
-      """SELECT event_type,
-        |       COUNT(*) AS n,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS VARCHAR) AS sum_value
-        |FROM events
-        |WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) > 50
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "has_field" ->
-      """SELECT event_id,
-        |       json_extract_string(props, '$.k') IS NOT NULL AS has_k,
-        |       json_extract_string(props, '$.missing') IS NOT NULL AS has_missing
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "min_should_filter" ->
-      """SELECT doc_id, lang, source, n_chars FROM documents
-        |WHERE n_chars < 900
-        |  AND (CASE WHEN lang = 'en' THEN 1 ELSE 0 END +
-        |       CASE WHEN source IN ('src0', 'src1') THEN 1 ELSE 0 END +
-        |       CASE WHEN n_chars > 200 THEN 1 ELSE 0 END +
-        |       CASE WHEN contains(text, 'vector') THEN 1 ELSE 0 END) >= 2
-        |  AND NOT (source = 'src5')
-        |ORDER BY doc_id""".stripMargin,
-
-    "dsv2_scan" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_write" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    // both set_payload forms (in-process and over-the-wire) share one
-    // oracle: patched ids carry the new values, unmentioned fields and
-    // unselected points survive
-    "dsv2_set_payload" -> SetPayloadOracle,
-    "dsv2_rest_set_payload" -> SetPayloadOracle,
-
-    // the change set is fully determined by the gate's scripted edits
-    "dsv2_version_diff" ->
-      """SELECT * FROM (VALUES
-        |  ('3', 'delete', CAST(1 AS BIGINT)),
-        |  ('13', 'delete', CAST(1 AS BIGINT)),
-        |  ('7', 'upsert', CAST(1 AS BIGINT)),
-        |  ('17', 'upsert', CAST(1 AS BIGINT)),
-        |  ('zz_new', 'upsert', CAST(1 AS BIGINT)))
-        |  AS t(id, final_op, n_entries)
-        |ORDER BY id""".stripMargin,
-
-    "dsv2_delete_payload" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       CAST(CASE WHEN vec_id IN (0, 10, 20, 30, 40) THEN NULL
-        |                 ELSE label END AS INTEGER) AS label,
-        |       vec_id IN (30, 40) AS cleared
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_update_vectors" ->
-      s"""SELECT CAST(vec_id AS VARCHAR) AS id,
-         |       to_json({'label': label}) AS payload,
-         |       CASE WHEN vec_id IN (30, 40) THEN NULL
-         |            WHEN vec_id IN (0, 10, 20)
-         |              THEN ${duckVq6("list_reverse(embedding)")}
-         |            ELSE ${duckVq6("embedding")} END AS vector_q6
-         |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_stream_write" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_stream_read" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    // CDC replay through the protobuf transport: same stream, same rows
-    "dsv2_grpc_stream_read" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    // lakehouse backend swap is invisible above the seam: the parquet
-    // log's replay/compaction/pipeline share the in-memory forms' oracles
-    "dsv2_parquet_stream_read" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_parquet_cdc_compacted" ->
-      """WITH n AS (SELECT COUNT(*) AS c FROM embeddings)
-        |SELECT 'delete' AS _op,
-        |       CAST(n.c + row_number() OVER (ORDER BY d.id) - 1 AS BIGINT) AS _seq,
-        |       d.id
-        |FROM (SELECT CAST(vec_id AS VARCHAR) AS id FROM embeddings
-        |      WHERE vec_id IN (3, 13, 23)) d, n
-        |ORDER BY _seq""".stripMargin,
-
-    "dsv2_parquet_stream_pipeline" ->
-      """SELECT id, '{"etl":1,"orig":' || payload || '}' AS payload FROM (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         to_json({'label': label}) AS payload,
-        |         label
-        |  FROM embeddings)
-        |WHERE label % 2 = 0 ORDER BY id""".stripMargin,
-
-    "dsv2_count" -> "SELECT COUNT(*) AS n FROM embeddings",
-
-    "dsv2_count_filtered" ->
-      """SELECT COUNT(*) AS n FROM embeddings
-        |WHERE CAST(vec_id AS VARCHAR) > '55'""".stripMargin,
-
-    "dsv2_vector_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 4)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 4
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // rank on RAW similarity (the store ranks unrounded, id tiebreak) and
-    // round only for output — mirrors the pushed scan's contract exactly
-    // cold store swap is invisible above the seam: same oracles as the
-    // in-memory-backed dsv2_scan / dsv2_topk_pushdown
-    "dsv2_parquet_store" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_parquet_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 7),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q
-        |  ORDER BY s DESC, id ASC LIMIT 12)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // the probed chain (same deterministic stages as ann_ivf_bucketed)
-    // under the dsv2 search convention: RAW-score ranking, round-for-
-    // display — the store heap's ordering
-    "dsv2_parquet_ivf_search" -> DuckMirror.ivfSql(
-      queryVecId = 7, k = 10, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 0, seed = 42L, rawOrder = true),
-
-    // the same serve behind the protobuf transport: identical mirrors
-    "dsv2_grpc_lakehouse_search" -> DuckMirror.ivfSql(
-      queryVecId = 7, k = 10, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 0, seed = 42L, rawOrder = true),
-
-    "dsv2_rest_lakehouse_search" -> DuckMirror.ivfSql(
-      queryVecId = 7, k = 10, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 0, seed = 42L, rawOrder = true),
-
-    // the SUBSET-fit mirror: the corpus is the rows carrying the named
-    // field (hetero populates text_embedding on vec_id % 3 in {0, 1})
-    "dsv2_parquet_named_ivf" -> DuckMirror.ivfSql(
-      queryVecId = 6, k = 10, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 0, seed = 42L, rawOrder = true,
-      corpusSql =
-        """  SELECT vec_id, CAST(vec_id AS VARCHAR) AS id, CAST(embedding AS DOUBLE[]) AS v
-          |  FROM embeddings WHERE vec_id % 3 IN (0, 1)""".stripMargin),
-
-    "dsv2_grpc_lakehouse_prefilter" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 11),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q WHERE e.label = 3
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // sparse_inverted_search's brute mirror in the dsv2 raw-rank form
-    // (the store ranks unrounded, rounds for display); the 0.0 CASE arms
-    // keep list_sum's ascending fold identical to the sorted-merge
-    // kernel, and s > 0 is exactly "shares a nonzero dim"
-    "dsv2_parquet_sparse_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-        |top AS (
-        |  SELECT * FROM (
-        |    SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |           list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |                 i -> CASE WHEN e.embedding[i] > 0 AND q.qv[i] > 0
-        |                      THEN CAST(e.embedding[i] AS DOUBLE) * q.qv[i] ELSE 0.0 END)) AS s
-        |    FROM embeddings e, q WHERE e.vec_id <> 0)
-        |  WHERE s > 0 ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // the quantized tier's candidate margin must contain the exact dot
-    // top-10 of the probed clusters — same mirror as ann_ivf_quantized,
-    // raw-rank form (the store serves raw scores, rounds for display)
-    "dsv2_parquet_ivf_quantized" -> DuckMirror.ivfSql(
-      queryVecId = 9, k = 10, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 0, seed = 42L, metric = "dot", rawOrder = true),
-
-    // quantized tier x payload filter: the probed-IVF mirror with the
-    // condition applied BEFORE the rank (full candidate margin => exact)
-    "dsv2_parquet_ivf_quantized_filtered" -> DuckMirror.ivfSql(
-      queryVecId = 9, k = 8, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 0, seed = 42L, metric = "dot", rawOrder = true,
-      whereSql = "fe.label >= 4"),
-
-    // the pre-filter arm is EXACT over the matching subset, so the
-    // oracle is a plain WHERE before the raw-rank top-k
-    "dsv2_parquet_prefilter_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 11),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q WHERE e.label = 3
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    "dsv2_parquet_indexed_count" ->
-      "SELECT count(*) AS n FROM embeddings WHERE label >= 7",
-
-    // the derived lattice re-expressed in DuckDB arithmetic; the box
-    // bounds are the filter's (top=10, left=-40, bottom=-10, right=20)
-    "dsv2_parquet_geo_search" ->
-      """WITH pts AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v,
-        |         (vec_id % 120) - 60 + 0.25 AS la,
-        |         ((vec_id * 7) % 320) - 160 + 0.25 AS lo
-        |  FROM embeddings),
-        |q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |      FROM embeddings WHERE vec_id = 21),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s
-        |  FROM pts, q
-        |  WHERE la >= -10 AND la <= 10 AND lo >= -40 AND lo <= 20
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // incremental text maintenance: the post-churn match_text-filtered
-    // top-k must rank exactly where the brute filtered oracle over the
-    // FINAL state does (w3 tokens = label 3 originals + the updated '7'
-    // + the five inserts; 13 deleted)
-    "dsv2_parquet_text_fresh" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 37),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v, label
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(e.embedding AS DOUBLE[]), 3
-        |  FROM embeddings e WHERE e.vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[]), 3
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  WHERE label = 3
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // incremental geo maintenance: the post-churn box-filtered top-k
-    // must rank exactly where the brute oracle over the FINAL state
-    // does (7 moved INTO the box, 64 — inside the box — deleted, five
-    // inserts at (5.25, -15.25))
-    "dsv2_parquet_geo_fresh" ->
-      """WITH pts AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v,
-        |         (vec_id % 120) - 60 + 0.25 AS la,
-        |         ((vec_id * 7) % 320) - 160 + 0.25 AS lo
-        |  FROM embeddings WHERE vec_id NOT IN (7, 64)
-        |  UNION ALL
-        |  SELECT '7', CAST(e.embedding AS DOUBLE[]), 0.25, -10.25
-        |  FROM embeddings e WHERE e.vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[]), 5.25, -15.25
-        |  FROM embeddings WHERE vec_id < 5),
-        |q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |      FROM embeddings WHERE vec_id = 27),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s
-        |  FROM pts, q
-        |  WHERE la >= -10 AND la <= 10 AND lo >= -40 AND lo <= 20
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // the DR drill on a fresh archive finds nothing
-    "dsv2_snapshot_verify" ->
-      "SELECT CAST(0 AS BIGINT) AS n_findings",
-
-    // the wire drill on fresh node-side cluster archives finds nothing
-    "dsv2_cluster_snapshot_verify" ->
-      "SELECT CAST(0 AS BIGINT) AS n_findings",
-
-    // replicated-of-wire reseed: the one-archive recover is invisible —
-    // same churned-state brute oracle as the sharded wire snapshot
-    "dsv2_replicated_wire_snapshot" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 33),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // wire storage snapshot/recover: the service-side archive + store
-    // swap must be invisible — same churned-state brute oracle family
-    "dsv2_rest_storage_snapshot" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 31),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // wire text maintenance parity: same churned-state brute oracle as
-    // dsv2_parquet_text_fresh — the wire seam must be invisible
-    "dsv2_rest_text_fresh" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 37),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v, label
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(e.embedding AS DOUBLE[]), 3
-        |  FROM embeddings e WHERE e.vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[]), 3
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  WHERE label = 3
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // binary-wire text maintenance parity: same oracle as the REST twin
-    "dsv2_grpc_text_fresh" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 37),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v, label
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(e.embedding AS DOUBLE[]), 3
-        |  FROM embeddings e WHERE e.vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[]), 3
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  WHERE label = 3
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // wire geo maintenance parity: same churned-state brute oracle as
-    // dsv2_parquet_geo_fresh — the wire seam must be invisible
-    "dsv2_rest_geo_fresh" ->
-      """WITH pts AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v,
-        |         (vec_id % 120) - 60 + 0.25 AS la,
-        |         ((vec_id * 7) % 320) - 160 + 0.25 AS lo
-        |  FROM embeddings WHERE vec_id NOT IN (7, 64)
-        |  UNION ALL
-        |  SELECT '7', CAST(e.embedding AS DOUBLE[]), 0.25, -10.25
-        |  FROM embeddings e WHERE e.vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[]), 5.25, -15.25
-        |  FROM embeddings WHERE vec_id < 5),
-        |q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |      FROM embeddings WHERE vec_id = 27),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s
-        |  FROM pts, q
-        |  WHERE la >= -10 AND la <= 10 AND lo >= -40 AND lo <= 20
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // binary-wire geo maintenance parity: same oracle as the REST twin
-    "dsv2_grpc_geo_fresh" ->
-      """WITH pts AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v,
-        |         (vec_id % 120) - 60 + 0.25 AS la,
-        |         ((vec_id * 7) % 320) - 160 + 0.25 AS lo
-        |  FROM embeddings WHERE vec_id NOT IN (7, 64)
-        |  UNION ALL
-        |  SELECT '7', CAST(e.embedding AS DOUBLE[]), 0.25, -10.25
-        |  FROM embeddings e WHERE e.vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[]), 5.25, -15.25
-        |  FROM embeddings WHERE vec_id < 5),
-        |q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |      FROM embeddings WHERE vec_id = 27),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s
-        |  FROM pts, q
-        |  WHERE la >= -10 AND la <= 10 AND lo >= -40 AND lo <= 20
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // the derived double re-expressed in DuckDB arithmetic (exact: /16
-    // is a binary fraction)
-    "dsv2_parquet_float_count" ->
-      """SELECT count(*) AS n FROM embeddings
-        |WHERE label + (vec_id % 10) / 16.0 >= 3.25
-        |  AND label + (vec_id % 10) / 16.0 < 7.5""".stripMargin,
-
-    // token membership re-expressed as the derivation's plain WHERE
-    "dsv2_parquet_text_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 17),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q
-        |  WHERE e.label = 3 AND e.vec_id % 4 = 1
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // the derived date re-expressed in DuckDB date arithmetic
-    "dsv2_parquet_datetime_count" ->
-      """SELECT count(*) AS n FROM embeddings
-        |WHERE DATE '2024-01-01' + CAST(label * 13 AS INTEGER) >= DATE '2024-02-01'
-        |  AND DATE '2024-01-01' + CAST(label * 13 AS INTEGER) < DATE '2024-04-01'""".stripMargin,
-
-    // post-mutation state expressed as plain SQL: original label-3 rows
-    // minus the deleted (vec_id % 7 == 0) plus the 5 upserts (ids
-    // 100000+vec_id, label forced 3) — the stale-index overlay must
-    // reproduce exactly this
-    "dsv2_parquet_fresh_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 13),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE label = 3 AND vec_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // after the optimizer, the same post-mutation WHERE — the lifecycle
-    // stage (stale-index overlay vs rebuilt index) must be invisible
-    "dsv2_parquet_optimized" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 13),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE label = 3 AND vec_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // the store-served per-segment HNSW walk recovers the exact top-k
-    // at the fixture's efSearch — plain brute-force SQL is the oracle
-    "dsv2_parquet_hnsw_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 11)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 11
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // filtered HNSW: the oracle is the plain exact filtered top-k —
-    // the index resolution, planner arm, and walk must be invisible
-    "dsv2_parquet_hnsw_filtered" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 11)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 11 AND e.label <= 7
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "dsv2_parquet_hnsw_filtered_narrow" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 13)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 11 AND e.label = 3
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // quantized HNSW serve: the int8 walk + exact margin rescore must
-    // recover exactly the full-precision page — plain brute oracle
-    "dsv2_parquet_hnsw_quantized" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 17)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 17
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // incremental HNSW maintenance: the post-churn graph serve (5 new
-    // points absorbed, id 7 updated to vec_id 42's vector, id 13
-    // deleted) must rank exactly where brute force over the FINAL
-    // state does
-    "dsv2_parquet_hnsw_fresh" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 19),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // storage-level snapshot of the churned hnsw_fresh store: the
-    // restored, index-served search must rank exactly where brute force
-    // over the FINAL churned state does (same base as hnsw_fresh, the
-    // snapshot/restore hop must be invisible)
-    "dsv2_snapshot_indexed" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 23),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // sharded storage snapshot: the member-by-member archive/restore
-    // hop must be invisible — same churned-state brute oracle family
-    "dsv2_sharded_snapshot" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 29),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // sharded-of-wire cluster snapshot/recover: per-node archives +
-    // service swaps must be invisible — churned-state brute oracle
-    "dsv2_sharded_wire_snapshot" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 33),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // wire-served maintenance parity: same churned-state brute oracle
-    // as dsv2_parquet_hnsw_fresh — the wire seam must be invisible
-    "dsv2_rest_hnsw_fresh" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 19),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // incremental IVF maintenance: post-churn probed serve at
-    // nprobe = nlist must rank exactly where brute force over the
-    // FINAL state does
-    "dsv2_parquet_ivf_fresh" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 29),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // incremental sparse maintenance: the post-churn bucket-pruned
-    // sparse dot must rank exactly where brute force over the FINAL
-    // state does (ids 1..4 re-inserted as 100001..100004, id 7 takes
-    // vec_id 42's positives, id 13 deleted; id 0 is the query and was
-    // never in the corpus)
-    "dsv2_parquet_sparse_fresh" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id, embedding AS emb
-        |  FROM embeddings WHERE vec_id NOT IN (0, 7, 13)
-        |  UNION ALL
-        |  SELECT '7', e.embedding FROM embeddings e WHERE e.vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR), embedding
-        |  FROM embeddings WHERE vec_id BETWEEN 1 AND 4),
-        |top AS (
-        |  SELECT * FROM (
-        |    SELECT id,
-        |           list_sum(list_transform(range(1, len(emb) + 1),
-        |                 i -> CASE WHEN emb[i] > 0 AND q.qv[i] > 0
-        |                      THEN CAST(emb[i] AS DOUBLE) * q.qv[i] ELSE 0.0 END)) AS s
-        |    FROM base, q)
-        |  WHERE s > 0 ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // incremental payload-index maintenance: the post-churn filtered
-    // top-k must rank exactly where the brute filtered oracle over the
-    // FINAL state does (id 7 updated INTO label 3 with vec_id 42's
-    // vector, id 13 — label 3 at sf0.01 — deleted, 5 label-3 inserts)
-    "dsv2_parquet_pidx_fresh" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 31),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v, label
-        |  FROM embeddings WHERE vec_id NOT IN (7, 13)
-        |  UNION ALL
-        |  SELECT '7', CAST(e.embedding AS DOUBLE[]), 3
-        |  FROM embeddings e WHERE e.vec_id = 42
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[]), 3
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  WHERE label = 3
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // euclid HNSW: ascending exact oracle (distance metric)
-    "dsv2_parquet_hnsw_euclid" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 5)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_distance(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 11
-        |ORDER BY score ASC, id ASC LIMIT 10""".stripMargin,
-
-    // replica set with a down node: failover invisible — the plain
-    // exact top-k oracle
-    "dsv2_replicated_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 23)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // quorum over one stale replica: the majority answer IS the exact
-    // answer — divergence masked by the read_consistency dial
-    "dsv2_replicated_quorum" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 23)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // CDC replay bound to one replica's journal: replication invisible
-    "dsv2_replicated_stream_read" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    // placement x replication with a down node: the plain exact oracle
-    "dsv2_sharded_replicated_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 29)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // filtered HNSW sharded over a wire member: same exact filtered
-    // oracle — topology and transport invisible
-    "dsv2_sharded_hnsw_filtered" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 7)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 11 AND e.label <= 7
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // the optimize VERB shipped over the wire before the same serve —
-    // transport and lifecycle stage both invisible
-    "dsv2_grpc_optimized" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 13),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE label = 3 AND vec_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // two payload indexes, cheapest-arm planning: the result is the
-    // plain conjunctive WHERE — access-path choice must be invisible
-    "dsv2_parquet_multi_index" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 13),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q WHERE e.label = 3 AND e.vec_id % 2 = 1
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // wire-protocol swap is equally invisible: same oracles again
-    "dsv2_rest_write" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_rest_store" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    // authorized read through the keyed server: auth is invisible above
-    // the seam, so the oracle is dsv2_rest_store's
-    "dsv2_rest_auth" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_rest_facet" ->
-      """SELECT CAST(label AS VARCHAR) AS value, count(*) AS n
-        |FROM embeddings
-        |GROUP BY 1 ORDER BY n DESC, value ASC LIMIT 5""".stripMargin,
-
-    "dsv2_grpc_facet" ->
-      """SELECT CAST(label AS VARCHAR) AS value, count(*) AS n
-        |FROM embeddings
-        |GROUP BY 1 ORDER BY n DESC, value ASC LIMIT 5""".stripMargin,
-
-    // sharded facets (threshold two-phase merge): same oracle
-    "dsv2_sharded_facet" ->
-      """SELECT CAST(label AS VARCHAR) AS value, count(*) AS n
-        |FROM embeddings
-        |GROUP BY 1 ORDER BY n DESC, value ASC LIMIT 5""".stripMargin,
-
-    // index-served facets: footer counts must equal the plain GROUP BY
-    "dsv2_parquet_facet" ->
-      """SELECT CASE WHEN vec_id % 2 = 1 THEN 'odd' ELSE 'even' END AS value,
-        |       count(*) AS n
-        |FROM embeddings
-        |GROUP BY 1 ORDER BY n DESC, value ASC LIMIT 3""".stripMargin,
-
-    // filtered facets across shards: the filtered GROUP BY
-    "dsv2_facet_filtered" ->
-      """SELECT CAST(label AS VARCHAR) AS value, count(*) AS n
-        |FROM embeddings WHERE label >= 3
-        |GROUP BY 1 ORDER BY n DESC, value ASC LIMIT 5""".stripMargin,
-
-    // the journaled global CDC log replays the routed corpus: same
-    // oracle as the unsharded stream read
-    "dsv2_sharded_stream_read" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_alias_swap" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       '{"v":2,"orig":' || to_json({'label': label}) || '}' AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_rest_ddl" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings WHERE vec_id % 5 = 0 ORDER BY id""".stripMargin,
-
-    // snapshot -> parquet restore -> alias read must reproduce the
-    // collection exactly, vectors included (q6 form)
-    "dsv2_parquet_snapshot" ->
-      s"""SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload,
-        |       ${duckVq6("embedding")} AS vector_q6
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    // the snapshot VERB over the wire (service-side export) + local
-    // restore must reproduce the collection exactly too
-    "dsv2_wire_snapshot" ->
-      s"""SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload,
-        |       ${duckVq6("embedding")} AS vector_q6
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    // per-spec rank on RAW similarity (the server ranks unrounded, id
-    // tiebreak), round only for output — same contract as the single
-    // pushed query
-    "dsv2_grpc_batch" ->
-      """WITH scored AS (
-        |  SELECT CAST(q.vec_id AS VARCHAR) AS query_id,
-        |         CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                CAST(q.embedding AS DOUBLE[])) AS s
-        |  FROM embeddings e, (SELECT * FROM embeddings WHERE vec_id IN (0, 1, 2)) q),
-        |top AS (
-        |  SELECT query_id, id, s,
-        |         row_number() OVER (PARTITION BY query_id ORDER BY s DESC, id ASC) AS rn
-        |  FROM scored)
-        |SELECT query_id, id, ROUND(s, 6) AS score FROM top WHERE rn <= 5
-        |ORDER BY query_id, score DESC, id""".stripMargin,
-
-    "dsv2_rest_batch" ->
-      """WITH scored AS (
-        |  SELECT CAST(q.vec_id AS VARCHAR) AS query_id,
-        |         CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                CAST(q.embedding AS DOUBLE[])) AS s
-        |  FROM embeddings e, (SELECT * FROM embeddings WHERE vec_id IN (0, 1, 2)) q),
-        |top AS (
-        |  SELECT query_id, id, s,
-        |         row_number() OVER (PARTITION BY query_id ORDER BY s DESC, id ASC) AS rn
-        |  FROM scored)
-        |SELECT query_id, id, ROUND(s, 6) AS score FROM top WHERE rn <= 5
-        |ORDER BY query_id, score DESC, id""".stripMargin,
-
-    "dsv2_rest_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 7),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q
-        |  ORDER BY s DESC, id ASC LIMIT 12)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // the protobuf transport must reproduce the JSON transport's results
-    // byte-for-byte: same oracles, different wire
-    "dsv2_grpc_store" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_grpc_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 7),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q
-        |  ORDER BY s DESC, id ASC LIMIT 12)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    "dsv2_grpc_write" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_grpc_lakehouse_write" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_topk_pushdown" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 7),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q
-        |  ORDER BY s DESC, id ASC LIMIT 12)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // sharded serving shares the UNSHARDED oracles: distribution must be
-    // invisible — the merged shard pages ARE the global top-k, the
-    // routed write reads back as the whole corpus
-    "dsv2_sharded_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 7),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q
-        |  ORDER BY s DESC, id ASC LIMIT 12)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    "dsv2_sharded_write" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    // growing the cluster N->N+1 is invisible above the store seam:
-    // same oracle as the sharded write-and-read-back
-    "dsv2_sharded_reshard" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    // the sharded lifecycle (mutate through the wrapper, optimize every
-    // member in one call) serves the same post-mutation filtered top-k
-    // as the single-store optimizer gate
-    "dsv2_sharded_optimized" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 13),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE label = 3 AND vec_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    // the same cluster-wide lifecycle with a WIRE member in the mix —
-    // the remote rebuild must be invisible too
-    "dsv2_sharded_optimized_wire" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id = 13),
-        |base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE label = 3 AND vec_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT CAST(vec_id + 100000 AS VARCHAR),
-        |         CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id < 5),
-        |top AS (
-        |  SELECT id, list_cosine_similarity(v, q.qv) AS s FROM base, q
-        |  ORDER BY s DESC, id ASC LIMIT 10)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    "dsv2_grpc_sharded_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 7),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q
-        |  ORDER BY s DESC, id ASC LIMIT 12)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    "dsv2_payload_filter" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings WHERE label >= 2 AND label < 5 ORDER BY id""".stripMargin,
-
-    "dsv2_payload_count" ->
-      "SELECT COUNT(*) AS n FROM embeddings WHERE label >= 2 AND label < 5",
-
-    "dsv2_filter_empty" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id, CAST(NULL AS VARCHAR) AS payload
-        |FROM embeddings WHERE label = 0 ORDER BY id""".stripMargin,
-
-    "dsv2_filter_match_any" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings WHERE label IN (2, 5, 7) ORDER BY id""".stripMargin,
-
-    "dsv2_filter_text" ->
-      """WITH t AS (SELECT doc_id, source,
-        |                  list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-        |           FROM documents)
-        |SELECT CAST(doc_id AS VARCHAR) AS id, source FROM t
-        |WHERE len(list_filter(toks, x -> x = 'vector')) > 0
-        |  AND len(list_filter(toks, x -> x = 'batch')) > 0
-        |ORDER BY id""".stripMargin,
-
-    "dsv2_filter_values_count" ->
-      """SELECT CAST(doc_id AS VARCHAR) AS id, source
-        |FROM documents WHERE doc_id % 4 >= 2 ORDER BY id""".stripMargin,
-
-    // image_embedding populated where vec_id % 3 IN (1, 2) — the hetero
-    // collection's field assignment (see dsv2_hetero)
-    "dsv2_filter_has_vector" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings WHERE vec_id % 3 IN (1, 2) ORDER BY id""".stripMargin,
-
-    "dsv2_filter_datetime" ->
-      """SELECT CAST(event_id AS VARCHAR) AS id, event_type
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
-        |  AND ts < TIMESTAMP '2024-01-20 00:00:00'
-        |ORDER BY id""".stripMargin,
-
-    // tokens CONSECUTIVE <=> whitespace-bounded 'the' then \s+ then
-    // whitespace-bounded 'data' (tokens are maximal non-space runs)
-    "dsv2_filter_phrase" ->
-      """SELECT CAST(doc_id AS VARCHAR) AS id, source
-        |FROM documents
-        |WHERE regexp_matches(lower(text), '(^|\s)the\s+data(\s|$)')
-        |ORDER BY id""".stripMargin,
-
-    // the haversine mirrored term-for-term from the store-side kernel
-    // (PayloadCondition.haversineMeters): dLat/dLon halved inside sin,
-    // (cos * cos) * sin^2 association, 12742000.0 = 2 * 6371000.0
-    "dsv2_filter_geo_radius" ->
-      """SELECT CAST(event_id AS VARCHAR) AS id, event_type
-        |FROM events
-        |WHERE 12742000.0 * asin(sqrt(
-        |        pow(sin(((CAST(user_id % 90 AS DOUBLE) - 48.8566) * 0.017453292519943295) / 2), 2) +
-        |        cos(48.8566 * 0.017453292519943295) *
-        |        cos(CAST(user_id % 90 AS DOUBLE) * 0.017453292519943295) *
-        |        pow(sin(((CAST(event_id % 180 AS DOUBLE) - 2.3522) * 0.017453292519943295) / 2), 2)
-        |      )) <= 2000000.0
-        |ORDER BY id""".stripMargin,
-
-    // wrap box (left 170 > right 20): lon in [170, 180] OR [-180, 20]
-    "dsv2_filter_geo_box" ->
-      """SELECT CAST(event_id AS VARCHAR) AS id, event_type
-        |FROM events
-        |WHERE (user_id % 90) BETWEEN 10 AND 70
-        |  AND ((event_id % 180) >= 170 OR (event_id % 180) <= 20)
-        |ORDER BY id""".stripMargin,
-
-    // the identical per-edge ray cast, generated from the same vertices
-    "dsv2_filter_geo_polygon" ->
-      s"""SELECT CAST(event_id AS VARCHAR) AS id, event_type
-         |FROM events
-         |WHERE ${graft.ops.Geo.polygonSql("CAST(user_id AS DOUBLE)",
-                   "CAST(event_id % 180 AS DOUBLE)", GeoPoly)}
-         |ORDER BY id""".stripMargin,
-
-    // same-element scoping: only the tag='alt' element's n counts
-    "dsv2_filter_nested" ->
-      """SELECT CAST(doc_id AS VARCHAR) AS id, source
-        |FROM documents WHERE doc_id % 100 >= 50 ORDER BY id""".stripMargin,
-
-    "dsv2_filter_boolean" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings
-        |WHERE label < 9 AND NOT (label = 3)
-        |  AND (CASE WHEN label <= 1 THEN 1 ELSE 0 END +
-        |       CASE WHEN label >= 6 THEN 1 ELSE 0 END) >= 1
-        |ORDER BY id""".stripMargin,
-
-    "dsv2_rest_filter_boolean" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings
-        |WHERE label < 9 AND NOT (label = 3)
-        |  AND (CASE WHEN label <= 1 THEN 1 ELSE 0 END +
-        |       CASE WHEN label >= 6 THEN 1 ELSE 0 END) >= 1
-        |ORDER BY id""".stripMargin,
-
-    // the filter applies BEFORE ranking: top-12 OF THE MATCHING SUBSET
-    "dsv2_filtered_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 7),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q
-        |  WHERE e.label >= 2
-        |  ORDER BY s DESC, id ASC LIMIT 12)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    "dsv2_rest_filtered_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 7),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q
-        |  WHERE e.label >= 2
-        |  ORDER BY s DESC, id ASC LIMIT 12)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    "dsv2_search_page" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 5),
-        |top AS (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS s
-        |  FROM embeddings e, q
-        |  WHERE list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) >= 0.25
-        |  ORDER BY s DESC, id ASC LIMIT 6 OFFSET 4)
-        |SELECT id, ROUND(s, 6) AS score FROM top ORDER BY score DESC, id""".stripMargin,
-
-    "dsv2_stream_pipeline" ->
-      """SELECT id, '{"etl":1,"orig":' || payload || '}' AS payload FROM (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         to_json({'label': label}) AS payload,
-        |         label
-        |  FROM embeddings)
-        |WHERE label % 2 = 0 ORDER BY id""".stripMargin,
-
-    // the store round-trip must reproduce the same frame the hetero_nulls
-    // view computes directly from parquet — same CASE structure, plus the
-    // image (dense) and multi fields the view gate leaves unchecked
-    "dsv2_hetero" ->
-      s"""SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload,
-        |       CASE WHEN vec_id % 3 IN (0, 1) THEN ${duckVq6("embedding")} END AS text_embedding_q6,
-        |       CASE WHEN vec_id % 3 IN (1, 2) THEN ${duckVq6("embedding")} END AS image_embedding_q6,
-        |       CASE WHEN vec_id % 3 = 2 THEN ${duckVq6("embedding")} END AS audio_embedding_q6,
-        |       CASE WHEN vec_id % 3 = 0 THEN
-        |         ${duckVq6("embedding")} || ';' || ${duckVq6("list_reverse(embedding)")}
-        |       END AS multi_q6,
-        |       CASE WHEN vec_id % 3 <> 1 THEN
-        |         array_to_string(list_transform(list_filter(range(1, len(embedding) + 1), i -> embedding[i] > 0), i -> CAST(i - 1 AS VARCHAR)), ',')
-        |       END AS keywords_indices_s,
-        |       CASE WHEN vec_id % 3 <> 1 THEN ${duckVq6("list_filter(embedding, x -> x > 0)")} END AS keywords_values_q6
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    // lakehouse backend swap invisible for the FULL collection shape
-    "dsv2_parquet_hetero" ->
-      s"""SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload,
-        |       CASE WHEN vec_id % 3 IN (0, 1) THEN ${duckVq6("embedding")} END AS text_embedding_q6,
-        |       CASE WHEN vec_id % 3 IN (1, 2) THEN ${duckVq6("embedding")} END AS image_embedding_q6,
-        |       CASE WHEN vec_id % 3 = 2 THEN ${duckVq6("embedding")} END AS audio_embedding_q6,
-        |       CASE WHEN vec_id % 3 = 0 THEN
-        |         ${duckVq6("embedding")} || ';' || ${duckVq6("list_reverse(embedding)")}
-        |       END AS multi_q6,
-        |       CASE WHEN vec_id % 3 <> 1 THEN
-        |         array_to_string(list_transform(list_filter(range(1, len(embedding) + 1), i -> embedding[i] > 0), i -> CAST(i - 1 AS VARCHAR)), ',')
-        |       END AS keywords_indices_s,
-        |       CASE WHEN vec_id % 3 <> 1 THEN ${duckVq6("list_filter(embedding, x -> x > 0)")} END AS keywords_values_q6
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    // pushed named-field search served by the parquet store's streaming
-    // heap — same ranking contract as the in-memory form
-    "dsv2_parquet_named_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 0 AND e.vec_id % 3 IN (0, 1)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // named-field search over the store round-trip: text_embedding is
-    // populated where vec_id % 3 IN (0, 1); NULL rows cannot match
-    "dsv2_hetero_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 0 AND e.vec_id % 3 IN (0, 1)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // catalog-addressed SQL resolves to the same scan as the path API —
-    // same rows as the keyset page over the source parquet
-    "dsv2_catalog_sql" ->
-      """SELECT id, payload FROM (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         to_json({'label': label}) AS payload
-        |  FROM embeddings)
-        |WHERE id > '29' ORDER BY id LIMIT 10""".stripMargin,
-
-    "dsv2_alter" ->
-      """SELECT * FROM (VALUES
-        |  ('a', NULL, '1000000,2000000', NULL),
-        |  ('b', '{"k":1}', '3000000,4000000', NULL),
-        |  ('c', NULL, '5000000,6000000', '7000000,8000000'))
-        |t(id, payload, emb_q6, emb2_q6) ORDER BY id""".stripMargin,
-
-    "dsv2_delete_sql" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings WHERE vec_id NOT IN (3, 13, 23) ORDER BY id""".stripMargin,
-
-    "dsv2_update_sql" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       CASE WHEN label % 5 = 0
-        |            THEN '{"boosted":' || to_json({'label': label}) || '}'
-        |            ELSE to_json({'label': label}) END AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    "dsv2_merge_sql" ->
-      """WITH base AS (
-        |  SELECT vec_id, CAST(vec_id AS VARCHAR) AS id,
-        |         to_json({'label': label}) AS payload
-        |  FROM embeddings),
-        |src AS (
-        |  SELECT CAST(vec_id + 490 AS VARCHAR) AS id, payload
-        |  FROM base WHERE vec_id < 20)
-        |SELECT b.id,
-        |       CASE WHEN s.id IS NOT NULL
-        |            THEN '{"merged":' || s.payload || '}' ELSE b.payload END AS payload
-        |FROM base b LEFT JOIN src s USING (id)
-        |UNION ALL
-        |SELECT s.id, s.payload FROM src s
-        |WHERE s.id NOT IN (SELECT id FROM base)
-        |ORDER BY id""".stripMargin,
-
-    "dsv2_ctas" ->
-      """SELECT id, payload FROM (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         to_json({'label': label}) AS payload,
-        |         label
-        |  FROM embeddings)
-        |WHERE label % 2 = 0 ORDER BY id""".stripMargin,
-
-    "dsv2_insert_sql" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings
-        |WHERE CAST(vec_id AS VARCHAR) LIKE '%7'
-        |ORDER BY id""".stripMargin,
-
-    "dsv2_stream_table" ->
-      """SELECT id, payload FROM (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         to_json({'label': label}) AS payload,
-        |         label
-        |  FROM embeddings)
-        |WHERE label % 2 = 0 ORDER BY id""".stripMargin,
-
-    // ingest seals id-sorted (VARCHAR binary order — same as Spark's
-    // UTF8_BINARY for these ASCII ids), so upsert positions are the
-    // lexicographic id rank; tombstones follow at n.., again id-sorted
-    "dsv2_cdc_log" ->
-      """WITH base AS (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         to_json({'label': label}) AS payload
-        |  FROM embeddings),
-        |n AS (SELECT COUNT(*) AS c FROM base),
-        |ups AS (
-        |  SELECT 'upsert' AS _op,
-        |         CAST(row_number() OVER (ORDER BY id) - 1 AS BIGINT) AS _seq,
-        |         id, payload
-        |  FROM base),
-        |dels AS (
-        |  SELECT 'delete' AS _op,
-        |         CAST(n.c + row_number() OVER (ORDER BY d.id) - 1 AS BIGINT) AS _seq,
-        |         d.id, CAST(NULL AS VARCHAR) AS payload
-        |  FROM (SELECT id FROM base WHERE id IN ('3', '13', '23')) d, n)
-        |SELECT * FROM ups UNION ALL SELECT * FROM dels ORDER BY _seq""".stripMargin,
-
-    "dsv2_stream_delete" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings WHERE vec_id NOT IN (3, 13, 23) ORDER BY id""".stripMargin,
-
-    // the retained tail: the 3 tombstones at global positions n..n+2
-    // (n = ingest count), id-sorted like any removal batch
-    "dsv2_cdc_compacted" ->
-      """WITH n AS (SELECT COUNT(*) AS c FROM embeddings)
-        |SELECT 'delete' AS _op,
-        |       CAST(n.c + row_number() OVER (ORDER BY d.id) - 1 AS BIGINT) AS _seq,
-        |       d.id
-        |FROM (SELECT CAST(vec_id AS VARCHAR) AS id FROM embeddings
-        |      WHERE vec_id IN (3, 13, 23)) d, n
-        |ORDER BY _seq""".stripMargin,
-
-    // as of the pre-delete log position, every ingested row is present
-    "dsv2_time_travel" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY id""".stripMargin,
-
-    // sparse keywords field holds the strictly-positive embedding
-    // positions; present where vec_id % 3 <> 1 (query = vec_id 0's)
-    // dense branch = dsv2_hetero_search mirror, sparse branch =
-    // dsv2_sparse_search mirror, fused with the rrf_fusion formula
-    "dsv2_hybrid" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-        |b1 AS (SELECT id, row_number() OVER (ORDER BY score DESC, id ASC) AS rn FROM (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |  FROM embeddings e, q WHERE e.vec_id <> 0 AND e.vec_id % 3 IN (0, 1)
-        |  ORDER BY score DESC, id ASC LIMIT 50)),
-        |b2 AS (SELECT id, row_number() OVER (ORDER BY score DESC, id ASC) AS rn FROM (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |               i -> CASE WHEN e.embedding[i] > 0 AND q.qv[i] > 0
-        |                    THEN CAST(e.embedding[i] AS DOUBLE) * q.qv[i] ELSE 0.0 END)), 6) AS score
-        |  FROM embeddings e, q WHERE e.vec_id <> 0 AND e.vec_id % 3 <> 1
-        |  ORDER BY score DESC, id ASC LIMIT 50))
-        |SELECT COALESCE(b1.id, b2.id) AS id,
-        |       ROUND(COALESCE(1.0 / (60 + b1.rn), 0) + COALESCE(1.0 / (60 + b2.rn), 0), 6) AS fused_score
-        |FROM b1 FULL OUTER JOIN b2 ON b1.id = b2.id
-        |ORDER BY fused_score DESC, id ASC LIMIT 20""".stripMargin,
-
-    "dsv2_sparse_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |             i -> CASE WHEN e.embedding[i] > 0 AND q.qv[i] > 0
-        |                  THEN CAST(e.embedding[i] AS DOUBLE) * q.qv[i] ELSE 0.0 END)), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 0 AND e.vec_id % 3 <> 1
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // multi field is [embedding, reverse(embedding)], present where
-    // vec_id % 3 = 0 (the colbert_maxsim arithmetic over that subset)
-    "dsv2_multi_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS q1,
-        |                  CAST(list_reverse(embedding) AS DOUBLE[]) AS q2
-        |           FROM embeddings WHERE vec_id = 0)
-        |SELECT id, ROUND(m1 + m2, 6) AS score FROM (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         greatest(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.q1),
-        |                  list_inner_product(CAST(list_reverse(e.embedding) AS DOUBLE[]), q.q1)) AS m1,
-        |         greatest(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.q2),
-        |                  list_inner_product(CAST(list_reverse(e.embedding) AS DOUBLE[]), q.q2)) AS m2
-        |  FROM embeddings e, q WHERE e.vec_id <> 0 AND e.vec_id % 3 = 0)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // filtered indexed multi-vector: the planner arms (exact micro /
-    // accepting pooled walk) must be invisible — brute filtered MaxSim
-    "dsv2_multi_indexed_filtered" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS q1,
-        |                  CAST(list_reverse(embedding) AS DOUBLE[]) AS q2
-        |           FROM embeddings WHERE vec_id = 0)
-        |SELECT id, ROUND(m1 + m2, 6) AS score FROM (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         greatest(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.q1),
-        |                  list_inner_product(CAST(list_reverse(e.embedding) AS DOUBLE[]), q.q1)) AS m1,
-        |         greatest(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.q2),
-        |                  list_inner_product(CAST(list_reverse(e.embedding) AS DOUBLE[]), q.q2)) AS m2
-        |  FROM embeddings e, q
-        |  WHERE e.vec_id <> 0 AND e.vec_id % 3 = 0 AND e.label <= 5)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // the indexed multi-vector serve must be invisible: same brute
-    // MaxSim oracle as dsv2_multi_search (the pooled candidate stage +
-    // exact margin rescore recovers the exact page)
-    "dsv2_multi_indexed_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS q1,
-        |                  CAST(list_reverse(embedding) AS DOUBLE[]) AS q2
-        |           FROM embeddings WHERE vec_id = 0)
-        |SELECT id, ROUND(m1 + m2, 6) AS score FROM (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         greatest(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.q1),
-        |                  list_inner_product(CAST(list_reverse(e.embedding) AS DOUBLE[]), q.q1)) AS m1,
-        |         greatest(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.q2),
-        |                  list_inner_product(CAST(list_reverse(e.embedding) AS DOUBLE[]), q.q2)) AS m2
-        |  FROM embeddings e, q WHERE e.vec_id <> 0 AND e.vec_id % 3 = 0)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // keyset page: lexicographic id > '29' over the string-keyed
-    // collection (both engines compare strings bytewise)
-    "dsv2_scroll_keyset" ->
-      """SELECT id, payload FROM (
-        |  SELECT CAST(vec_id AS VARCHAR) AS id,
-        |         to_json({'label': label}) AS payload
-        |  FROM embeddings)
-        |WHERE id > '29' ORDER BY id LIMIT 10""".stripMargin,
-
-    "json_group_agg" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS bucket,
-        |       COUNT(*) AS n,
-        |       MAX(value) AS max_value,
-        |       ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*), 6) AS avg_value
-        |FROM events GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "json_surface" ->
-      """SELECT event_id,
-        |       array_to_string(json_keys(props), ',') AS ks,
-        |       CAST(json_array_length('[' || json_extract_string(props, '$.k') || ','
-        |            || json_extract_string(props, '$.k') || ']') AS INTEGER) AS arr_len,
-        |       CAST(len(json_keys(props)) AS INTEGER) AS obj_len
-        |FROM events ORDER BY event_id""".stripMargin
-  )
-
-  private val oracleDense: Map[String, String] = Map(
-    "cosine_topk" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 0
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // the per-segment insertion-order HNSW serve at a generous efSearch
-    // recovers each segment's exact top-k, so the merged page equals
-    // brute force — the plain top-k SQL is the oracle (deterministic:
-    // the whole build is seeded)
-    "ann_hnsw_insert" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 7)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 7
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "dot_topk" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 1)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 1
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "euclid_topk" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 2)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(-list_distance(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 2
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "manhattan_topk" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 3)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(-list_sum(list_transform(
-        |           list_zip(CAST(e.embedding AS DOUBLE[]), q.qv),
-        |           p -> ABS(p[1] - p[2]))), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 3
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "within_radius_agg" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT CAST(e.label AS BIGINT) AS label, COUNT(*) AS n
-        |FROM embeddings e, q
-        |WHERE e.vec_id <> 0 AND list_distance(CAST(e.embedding AS DOUBLE[]), q.qv) < 3.0
-        |GROUP BY e.label ORDER BY label""".stripMargin,
-
-    "score_blend" ->
-      """WITH q0 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 0),
-        |     q1 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 1)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(0.7 * list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q0.v)
-        |           + 0.3 * list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q1.v), 6) AS score
-        |FROM embeddings e, q0, q1 WHERE e.vec_id NOT IN (0, 1)
-        |ORDER BY score DESC, id ASC LIMIT 15""".stripMargin,
-
-    "gauss_decay" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(exp(-0.6931471805599453 *
-        |             pow(list_distance(CAST(e.embedding AS DOUBLE[]), q.qv) / 3.0, 2)), 6) AS decay
-        |FROM embeddings e, q WHERE e.vec_id <> 0
-        |ORDER BY decay DESC, id ASC LIMIT 20""".stripMargin,
-
-    "decay_rescore" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(0.5 * exp(-0.6931471805599453 *
-        |               ABS(list_distance(CAST(e.embedding AS DOUBLE[]), q.qv)) / 3.0)
-        |           + 0.5 * GREATEST(0.0, 1.0 -
-        |               ABS(list_distance(CAST(e.embedding AS DOUBLE[]), q.qv)) / (2.0 * 3.0)),
-        |             6) AS decay
-        |FROM embeddings e, q WHERE e.vec_id <> 0
-        |ORDER BY decay DESC, id ASC LIMIT 20""".stripMargin,
-
-    "formula_rescore" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(0.6 * list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv)
-        |             + 0.3 * exp(-0.6931471805599453 *
-        |                   pow(list_distance(CAST(e.embedding AS DOUBLE[]), q.qv) / 3.0, 2))
-        |             + 0.1 * (CASE WHEN e.label <= 4 THEN 1.0 ELSE 0.0 END), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 0
-        |ORDER BY score DESC, id ASC LIMIT 15""".stripMargin,
-
-    "named_field_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 0 AND e.vec_id % 3 IN (0, 1)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "filtered_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 0 AND e.label IN (1, 2, 3)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "sql_vector_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 5)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 5
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // arrow-operator semantics: ->'label' extracts the scalar as text,
-    // ->>'meta' the nested object's raw JSON text (to_json formatting
-    // matches Spark's, as the dsv2 payload oracles already rely on)
-    "sql_arrow_ops" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       CAST(label AS VARCHAR) AS label_json,
-        |       to_json({'label': label}) AS meta_text
-        |FROM embeddings WHERE label = 7 ORDER BY id""".stripMargin
-  )
-
-  private val oracleComposite: Map[String, String] = Map(
-    "sparse_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |             i -> CASE WHEN e.embedding[i] > 0 AND q.qv[i] > 0
-        |                  THEN CAST(e.embedding[i] AS DOUBLE) * q.qv[i] ELSE 0.0 END)), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 0
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // index-served sparse search is EXACT (ascending-dim fold = the
-    // kernel's merge order), so the oracle is the same brute-force scan
-    // as sparse_search — except docs with NO overlapping dim (dot = 0)
-    // never enter the index result, so the oracle keeps positives only
-    "sparse_inverted_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT * FROM (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |               i -> CASE WHEN e.embedding[i] > 0 AND q.qv[i] > 0
-        |                    THEN CAST(e.embedding[i] AS DOUBLE) * q.qv[i] ELSE 0.0 END)), 6) AS score
-        |  FROM embeddings e, q WHERE e.vec_id <> 0)
-        |WHERE score > 0
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // idf re-derived per dimension from the oracle's own document
-    // frequencies; FLOOR(x*1e6 + 0.5)/1e6 mirrors the engine's
-    // quantization, and the 0.0 CASE arms keep list_sum's ascending fold
-    // bit-identical to the sparse kernel's merge order
-    "sparse_idf_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-        |idf AS (
-        |  SELECT list(FLOOR(LN((t.n - t.nt + 0.5) / (t.nt + 0.5) + 1) * 1e6 + 0.5) / 1e6
-        |              ORDER BY t.i) AS f
-        |  FROM (SELECT r.i AS i,
-        |               (SELECT COUNT(*) FROM embeddings e2 WHERE e2.embedding[r.i] > 0) AS nt,
-        |               (SELECT COUNT(*) FROM embeddings) AS n
-        |        FROM range(1, 65) r(i)) t)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |             i -> CASE WHEN e.embedding[i] > 0 AND q.qv[i] > 0
-        |                  THEN CAST(e.embedding[i] AS DOUBLE) * (q.qv[i] * idf.f[i]) ELSE 0.0 END)), 6) AS score
-        |FROM embeddings e, q, idf
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "colbert_maxsim" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS q1,
-        |                  CAST(list_reverse(embedding) AS DOUBLE[]) AS q2
-        |           FROM embeddings WHERE vec_id = 0)
-        |SELECT id, ROUND(m1 + m2, 6) AS score FROM (
-        |  SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |         greatest(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.q1),
-        |                  list_inner_product(CAST(list_reverse(e.embedding) AS DOUBLE[]), q.q1)) AS m1,
-        |         greatest(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.q2),
-        |                  list_inner_product(CAST(list_reverse(e.embedding) AS DOUBLE[]), q.q2)) AS m2
-        |  FROM embeddings e, q WHERE e.vec_id <> 0)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // lookup_from mirror: the hetero text_embedding of ids 0/3 IS the
-    // embeddings row (vec_id % 3 = 0 subset), so the oracle averages the
-    // base vectors directly; no exclusion (cross-collection examples)
-    "recommend_lookup_from" ->
-      """WITH pc AS (SELECT list(x ORDER BY i) AS v FROM (
-        |       SELECT i, avg(CAST(embedding[i] AS DOUBLE)) AS x
-        |       FROM embeddings, range(1, 65) t(i) WHERE vec_id IN (0, 3) GROUP BY i))
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), pc.v), 6) AS score
-        |FROM embeddings e, pc
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "recommend" ->
-      """WITH pc AS (SELECT list(x ORDER BY i) AS v FROM (
-        |       SELECT i, avg(CAST(embedding[i] AS DOUBLE)) AS x
-        |       FROM embeddings, range(1, 65) t(i) WHERE vec_id IN (0, 1, 2) GROUP BY i)),
-        |     nc AS (SELECT list(x ORDER BY i) AS v FROM (
-        |       SELECT i, avg(CAST(embedding[i] AS DOUBLE)) AS x
-        |       FROM embeddings, range(1, 65) t(i) WHERE vec_id IN (3) GROUP BY i)),
-        |     q AS (SELECT list_transform(range(1, 65), i -> pc.v[i] - nc.v[i]) AS qv FROM pc, nc)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id NOT IN (0, 1, 2, 3)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "recommend_literal" ->
-      s"""WITH p1 AS (SELECT ${duckVecLit(recLitPos(0))} AS v),
-         |     p2 AS (SELECT ${duckVecLit(recLitPos(1))} AS v),
-         |     n1 AS (SELECT ${duckVecLit(recLitNeg(0))} AS v),
-         |     q AS (SELECT list_transform(range(1, 65),
-         |             i -> (p1.v[i] + p2.v[i]) / 2.0 - n1.v[i]) AS qv
-         |           FROM p1, p2, n1)
-         |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-         |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-         |FROM embeddings e, q
-         |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "recommend_named" ->
-      """WITH pc AS (SELECT list(x ORDER BY i) AS v FROM (
-        |       SELECT i, avg(CAST(embedding[i] AS DOUBLE)) AS x
-        |       FROM embeddings, range(1, 65) t(i) WHERE vec_id IN (1, 2) GROUP BY i)),
-        |     nc AS (SELECT list(x ORDER BY i) AS v FROM (
-        |       SELECT i, avg(CAST(embedding[i] AS DOUBLE)) AS x
-        |       FROM embeddings, range(1, 65) t(i) WHERE vec_id IN (4) GROUP BY i)),
-        |     q AS (SELECT list_transform(range(1, 65), i -> pc.v[i] - nc.v[i]) AS qv FROM pc, nc)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q
-        |WHERE e.vec_id % 3 IN (1, 2) AND e.vec_id NOT IN (1, 2, 4)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "discover" ->
-      """WITH t AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 0),
-        |     c1 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 1),
-        |     c2 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 2)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), t.v)
-        |           + 0.5 * list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c1.v)
-        |           + -0.25 * list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c2.v), 6) AS score
-        |FROM embeddings e, t, c1, c2 WHERE e.vec_id NOT IN (0, 1, 2)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // floor(x * 2^40) HUGEINT sums (order-independent), then the same
-    // (sum / n) / S division chain as the engine
-    // the label_centroids mean arithmetic per snapshot, lifted to exact
-    // 1e6-longs; dot/norms integer sums; one pinned float chain at the end
-    "centroid_drift" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |ca AS (SELECT label, i AS d,
-        |         CAST(floor(ROUND(CAST(SUM(CAST(floor(v[i + 1] * 1099511627776.0) AS HUGEINT)) AS DOUBLE)
-        |                          / count(*) / 1099511627776.0, 6) * 1000000.0 + 0.5) AS BIGINT) AS m
-        |       FROM (SELECT * FROM e WHERE vec_id % 2 = 0), range(0, 64) r(i)
-        |       GROUP BY label, i),
-        |cb AS (SELECT label, i AS d,
-        |         CAST(floor(ROUND(CAST(SUM(CAST(floor(v[i + 1] * 1099511627776.0) AS HUGEINT)) AS DOUBLE)
-        |                          / count(*) / 1099511627776.0, 6) * 1000000.0 + 0.5) AS BIGINT) AS m
-        |       FROM (SELECT * FROM e WHERE vec_id % 2 = 1), range(0, 64) r(i)
-        |       GROUP BY label, i)
-        |SELECT ca.label,
-        |       ROUND(CAST(SUM(ca.m * cb.m) AS DOUBLE)
-        |             / sqrt(CAST(SUM(ca.m * ca.m) AS DOUBLE))
-        |             / sqrt(CAST(SUM(cb.m * cb.m) AS DOUBLE)), 6) AS cos_sim
-        |FROM ca JOIN cb ON ca.label = cb.label AND ca.d = cb.d
-        |GROUP BY ca.label ORDER BY ca.label""".stripMargin,
-
-    "label_centroids" ->
-      """SELECT label, CAST(i AS INTEGER) AS d, count(*) AS n,
-        |       ROUND(CAST(SUM(CAST(floor(v[i + 1] * 1099511627776.0) AS HUGEINT)) AS DOUBLE)
-        |             / count(*) / 1099511627776.0, 6) AS mean
-        |FROM (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |     range(0, 64) r(i)
-        |GROUP BY label, i ORDER BY label, d""".stripMargin,
-
-    "datetime_range_agg" ->
-      """SELECT event_type, COUNT(*) AS n, ROUND(AVG(value), 6) AS avg_value
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
-        |  AND ts <  TIMESTAMP '2024-01-20 00:00:00'
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "datetime_index_range" ->
-      """SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |       COUNT(*) AS n
-        |FROM events
-        |WHERE CAST(ts AS DATE) - DATE '1970-01-01' BETWEEN 19732 AND 19741
-        |GROUP BY 1 ORDER BY day""".stripMargin,
-
-    // identical float op order: (x - s/n) / sqrt((s2 - s*s/n)/(n-1)),
-    // every input an exact integer sum
-    "events_zscore" ->
-      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-        |                  COUNT(*) AS n_events
-        |           FROM events GROUP BY event_type, CAST(ts AS DATE)),
-        |m AS (SELECT event_type, COUNT(*) AS mn,
-        |             SUM(n_events) AS s, SUM(n_events * n_events) AS s2
-        |      FROM d GROUP BY event_type)
-        |SELECT d.event_type, d.day, CAST(d.n_events AS BIGINT) AS n_events,
-        |       CASE WHEN m.mn > 1 AND
-        |                 (CAST(s2 AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(mn AS DOUBLE)) / (CAST(mn AS DOUBLE) - 1.0) > 0
-        |            THEN ROUND((CAST(d.n_events AS DOUBLE) - CAST(s AS DOUBLE) / CAST(mn AS DOUBLE)) /
-        |                       sqrt((CAST(s2 AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(mn AS DOUBLE)) / (CAST(mn AS DOUBLE) - 1.0)), 6)
-        |       END AS z
-        |FROM d JOIN m USING (event_type)
-        |ORDER BY event_type, day""".stripMargin,
-
-    "anonymize_ids" ->
-      """SELECT event_id,
-        |       substring(md5('s1' || '|' || CAST(user_id AS VARCHAR)), 1, 16) AS uid
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "k_anon_filter" ->
-      """WITH r AS (SELECT event_id, event_type, CAST(ts AS DATE) AS day,
-        |                  COUNT(*) OVER (PARTITION BY event_type, CAST(ts AS DATE)) AS n
-        |           FROM events)
-        |SELECT event_id, event_type, day FROM r WHERE n >= 60
-        |ORDER BY event_id""".stripMargin,
-
-    // medians over integer day-counts are k or k+.5 — exact doubles —
-    // so the single pinned float chain matches Spark bit-for-bit
-    "mad_outliers" ->
-      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-        |                  COUNT(*) AS n_events
-        |           FROM events GROUP BY event_type, CAST(ts AS DATE)),
-        |m AS (SELECT event_type, median(n_events) AS med FROM d GROUP BY event_type),
-        |a AS (SELECT d.event_type, d.day, d.n_events, m.med,
-        |             ABS(d.n_events - m.med) AS dev
-        |      FROM d JOIN m USING (event_type)),
-        |md AS (SELECT event_type, median(dev) AS mad FROM a GROUP BY event_type)
-        |SELECT a.event_type, a.day, CAST(a.n_events AS BIGINT) AS n_events,
-        |       CASE WHEN md.mad > 0
-        |            THEN ROUND((a.n_events - a.med) / (1.4826 * md.mad), 6)
-        |       END AS robust_z
-        |FROM a JOIN md USING (event_type)
-        |ORDER BY event_type, day""".stripMargin,
-
-    "rolling_avg" ->
-      """SELECT event_id, user_id,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,4)))
-        |              OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS VARCHAR) AS roll_sum,
-        |       COUNT(*) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS n
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // [0.0] || lp makes list_reduce the same 0.0-seeded left fold as the
-    // engine's aggregate(_, 0.0, +); ln(cnt/total) is the identical
-    // double on both engines (the bm25 idf precedent)
-    "dsir_weights" -> DuckMirror.dsirSql(buckets = 4096, alpha = 0.5, mod = 7),
-
-    "nb_classify" -> DuckMirror.nbSql(buckets = 512, alpha = 0.5),
-
-    "nb_classify_map" -> DuckMirror.nbSql(buckets = 512, alpha = 0.5),
-
-    "bigram_logprob" -> DuckMirror.bigramLmSql(alpha = 0.5),
-
-    "perplexity_filter" ->
-      DuckMirror.bigramLmFilterSql(alpha = 0.5, threshold = -3.39),
-
-    "lm_holdout" -> DuckMirror.bigramLmHoldoutSql(alpha = 0.5,
-      modelPred = "doc_id % 5 <> 0", scorePred = "doc_id % 5 = 0"),
-
-    "unigram_logprob" ->
-      """WITH tk AS (SELECT doc_id,
-        |                   list_filter(string_split_regex(lower(text), '\s+'),
-        |                               x -> x <> '') AS ls
-        |            FROM documents),
-        |t AS (SELECT doc_id, unnest(ls) AS tok, unnest(range(0, len(ls))) AS pos FROM tk),
-        |v AS (SELECT tok, count(*) AS cnt FROM t GROUP BY tok),
-        |n AS (SELECT count(*) AS total FROM t),
-        |j AS (SELECT t.doc_id, t.pos, ln(CAST(v.cnt AS DOUBLE) / total) AS logp
-        |      FROM t, v, n WHERE t.tok = v.tok),
-        |a AS (SELECT doc_id, list(logp ORDER BY pos) AS lp FROM j GROUP BY doc_id)
-        |SELECT doc_id, CAST(len(lp) AS INTEGER) AS n_toks,
-        |       ROUND(list_reduce([0.0] || lp, (x, y) -> x + y) / len(lp), 6) AS avg_logprob
-        |FROM a ORDER BY doc_id""".stripMargin,
-
-    "geo_box" ->
-      """SELECT event_id, CAST(user_id AS DOUBLE) AS lat,
-        |       CAST(event_id % 180 AS DOUBLE) AS lon
-        |FROM events
-        |WHERE CAST(user_id AS DOUBLE) >= 10 AND CAST(user_id AS DOUBLE) <= 40
-        |  AND CAST(event_id % 180 AS DOUBLE) >= 20 AND CAST(event_id % 180 AS DOUBLE) <= 60
-        |ORDER BY event_id""".stripMargin,
-
-    "geo_box_wrap" ->
-      """SELECT event_id, CAST(user_id AS DOUBLE) AS lat,
-        |       CAST(event_id % 360 - 180 AS DOUBLE) AS lon
-        |FROM events
-        |WHERE CAST(user_id AS DOUBLE) >= 0 AND CAST(user_id AS DOUBLE) <= 90
-        |  AND (CAST(event_id % 360 - 180 AS DOUBLE) >= 150
-        |       OR CAST(event_id % 360 - 180 AS DOUBLE) <= -150)
-        |ORDER BY event_id""".stripMargin,
-
-    // the pruned index path must return the plain filter's exact rows
-    "geo_cell_search" ->
-      """SELECT event_id, CAST(user_id AS DOUBLE) AS lat,
-        |       CAST(event_id % 180 AS DOUBLE) AS lon
-        |FROM events
-        |WHERE CAST(user_id AS DOUBLE) >= 10 AND CAST(user_id AS DOUBLE) <= 40
-        |  AND CAST(event_id % 180 AS DOUBLE) >= 20 AND CAST(event_id % 180 AS DOUBLE) <= 60
-        |ORDER BY event_id""".stripMargin,
-
-    "geo_polygon" ->
-      s"""SELECT event_id, CAST(user_id AS DOUBLE) AS lat,
-         |       CAST(event_id % 180 AS DOUBLE) AS lon
-         |FROM events
-         |WHERE ${graft.ops.Geo.polygonSql("CAST(user_id AS DOUBLE)",
-                   "CAST(event_id % 180 AS DOUBLE)", GeoPoly)}
-         |ORDER BY event_id""".stripMargin,
-
-    "mmr_select" -> DuckMirror.mmrSql(
-      queryVecId = 37, k = 5, candidateK = 20, lambda = 0.7),
-
-    // left-assoc 0.0 + least(...) chain mirrors the foldLeft(lit(0.0))
-    "context_search" ->
-      """WITH p1 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 1),
-        |     n1 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 2),
-        |     p2 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 3),
-        |     n2 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 4)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(0.0
-        |           + least(0.0, list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), p1.v)
-        |                      - list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), n1.v))
-        |           + least(0.0, list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), p2.v)
-        |                      - list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), n2.v)), 6) AS score
-        |FROM embeddings e, p1, n1, p2, n2 WHERE e.vec_id NOT IN (1, 2, 3, 4)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "rrf_fusion" ->
-      """WITH q0 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 0),
-        |     q1 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 1),
-        |     b1 AS (SELECT id, row_number() OVER (ORDER BY score DESC, id ASC) AS rn FROM (
-        |       SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |              ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q0.v), 6) AS score
-        |       FROM embeddings e, q0 WHERE e.vec_id <> 0
-        |       ORDER BY score DESC, id ASC LIMIT 50)),
-        |     b2 AS (SELECT id, row_number() OVER (ORDER BY score DESC, id ASC) AS rn FROM (
-        |       SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |              ROUND(list_inner_product(CAST(e.embedding AS DOUBLE[]), q1.v), 6) AS score
-        |       FROM embeddings e, q1 WHERE e.vec_id <> 1
-        |       ORDER BY score DESC, id ASC LIMIT 50))
-        |SELECT COALESCE(b1.id, b2.id) AS id,
-        |       ROUND(COALESCE(1.0 / (60 + b1.rn), 0) + COALESCE(1.0 / (60 + b2.rn), 0), 6) AS fused_score
-        |FROM b1 FULL OUTER JOIN b2 ON b1.id = b2.id
-        |ORDER BY fused_score DESC, id ASC LIMIT 20""".stripMargin,
-
-    // micro-integer moments (exact BIGINT sums) -> identical double
-    // normalization arithmetic on both engines
-    "dbsf_fusion" ->
-      """WITH q0 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 0),
-        |     q1 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 1),
-        |     b1 AS (SELECT id, CAST(floor(score * 1000000 + 0.5) AS BIGINT) AS si FROM (
-        |       SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |              ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q0.v), 6) AS score
-        |       FROM embeddings e, q0 WHERE e.vec_id <> 0
-        |       ORDER BY score DESC, id ASC LIMIT 50)),
-        |     b2 AS (SELECT id, CAST(floor(score * 1000000 + 0.5) AS BIGINT) AS si FROM (
-        |       SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |              ROUND(list_inner_product(CAST(e.embedding AS DOUBLE[]), q1.v), 6) AS score
-        |       FROM embeddings e, q1 WHERE e.vec_id <> 1
-        |       ORDER BY score DESC, id ASC LIMIT 50)),
-        |     s1 AS (SELECT CAST(SUM(si) AS DOUBLE) / COUNT(*) AS mean,
-        |                   CAST(SUM(si * si) AS DOUBLE) / COUNT(*) AS ex2 FROM b1),
-        |     s2 AS (SELECT CAST(SUM(si) AS DOUBLE) / COUNT(*) AS mean,
-        |                   CAST(SUM(si * si) AS DOUBLE) / COUNT(*) AS ex2 FROM b2),
-        |     z1 AS (SELECT id, (CAST(si AS DOUBLE) - mean + 3.0 * sqrt(ex2 - mean * mean))
-        |                       / (6.0 * sqrt(ex2 - mean * mean)) AS z FROM b1, s1),
-        |     z2 AS (SELECT id, (CAST(si AS DOUBLE) - mean + 3.0 * sqrt(ex2 - mean * mean))
-        |                       / (6.0 * sqrt(ex2 - mean * mean)) AS z FROM b2, s2)
-        |SELECT COALESCE(z1.id, z2.id) AS id,
-        |       ROUND(COALESCE(z1.z, 0.0) + COALESCE(z2.z, 0.0), 6) AS fused_score
-        |FROM z1 FULL OUTER JOIN z2 ON z1.id = z2.id
-        |ORDER BY fused_score DESC, id ASC LIMIT 20""".stripMargin,
-
-    "rand_projection" -> DuckMirror.randProjectionSql(inDim = 64, outDim = 16),
-
-    // both stages mirrored: 16-dim prefix dot candidates, full rerank
-    "matryoshka_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 29),
-        |c AS (SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |             CAST(e.embedding AS DOUBLE[]) AS v,
-        |             list_inner_product(CAST(e.embedding AS DOUBLE[])[1:16], q.qv[1:16]) AS ps
-        |      FROM embeddings e, q WHERE e.vec_id <> 29
-        |      ORDER BY ps DESC, id ASC LIMIT 50)
-        |SELECT c.id, ROUND(list_inner_product(c.v, q.qv), 6) AS score
-        |FROM c, q
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "prefetch_rerank" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-        |     p AS (SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |                  CAST(e.embedding AS DOUBLE[]) AS v,
-        |                  ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS ps
-        |           FROM embeddings e, q WHERE e.vec_id <> 0
-        |           ORDER BY ps DESC, id ASC LIMIT 100)
-        |SELECT p.id, ROUND(list_inner_product(p.v, q.qv), 6) AS score
-        |FROM p, q
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "batch_search" ->
-      """SELECT * FROM (
-        |  SELECT CAST(q.vec_id AS VARCHAR) AS query_id,
-        |         CAST(e.vec_id AS VARCHAR) AS id,
-        |         ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                      CAST(q.embedding AS DOUBLE[])), 6) AS score
-        |  FROM embeddings e, (SELECT * FROM embeddings WHERE vec_id IN (0, 1, 2)) q
-        |  QUALIFY row_number() OVER (PARTITION BY q.vec_id ORDER BY score DESC, id ASC) <= 5)
-        |ORDER BY query_id ASC, score DESC, id ASC""".stripMargin,
-
-    "cte_semi" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-        |     p AS (SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |                  ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |           FROM embeddings e, q WHERE e.vec_id <> 0
-        |           ORDER BY score DESC, id ASC LIMIT 100)
-        |SELECT CAST(label AS BIGINT) AS label, COUNT(*) AS n
-        |FROM embeddings WHERE CAST(vec_id AS VARCHAR) IN (SELECT id FROM p)
-        |GROUP BY label ORDER BY label""".stripMargin
-  )
-
-  private val oracleRelational: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS VARCHAR) AS sum_qty,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS VARCHAR) AS sum_base_price,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS VARCHAR) AS sum_disc_price,
-        |       COUNT(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "join3_agg" ->
-      """SELECT n_name,
-        |       COUNT(*) AS n_orders,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS VARCHAR) AS revenue
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    "having_agg" ->
-      """SELECT user_id, COUNT(*) AS n,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS VARCHAR) AS total
-        |FROM events
-        |GROUP BY user_id HAVING COUNT(*) >= 3
-        |ORDER BY user_id""".stripMargin,
-
-    "window_topk" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |         row_number() OVER (PARTITION BY o_custkey
-        |                            ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-        |  FROM orders) WHERE rn <= 2
-        |ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin,
-
-    "values_inline" ->
-      """SELECT r_name, CAST(w AS DOUBLE) AS w
-        |FROM region JOIN (VALUES (0, 1.5), (1, 2.5), (3, 0.5)) t(rk, w)
-        |  ON r_regionkey = rk
-        |ORDER BY r_name""".stripMargin,
-
-    "case_boost" ->
-      """SELECT doc_id,
-        |       ROUND(CAST(n_chars AS DOUBLE) / 100.0 +
-        |             CASE WHEN source IN ('src0', 'src1') THEN 0.5
-        |                  WHEN lang = 'en' THEN 0.25
-        |                  ELSE 0.0 END, 6) AS score
-        |FROM documents
-        |ORDER BY score DESC, doc_id ASC LIMIT 25""".stripMargin,
-
-    "geo_distance" ->
-      """SELECT event_id,
-        |       ROUND(12742000.0 * asin(sqrt(
-        |         pow(sin(((48.8566 - CAST(user_id AS DOUBLE)) * 0.017453292519943295) / 2), 2) +
-        |         cos(CAST(user_id AS DOUBLE) * 0.017453292519943295) *
-        |         cos(48.8566 * 0.017453292519943295) *
-        |         pow(sin(((2.3522 - CAST(event_id % 180 AS DOUBLE)) * 0.017453292519943295) / 2), 2)
-        |       )) / 1000.0, 2) AS km
-        |FROM events
-        |ORDER BY km ASC, event_id ASC LIMIT 50""".stripMargin,
-
-    "phrase_match" -> {
-      val pat = graft.functions.phraseRegex(Seq("the", "data"))
-      s"""SELECT doc_id,
-         |       CAST(len(regexp_extract_all(lower(text), '$pat')) AS INTEGER) AS n_hits
-         |FROM documents
-         |WHERE len(regexp_extract_all(lower(text), '$pat')) > 0
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    // positions over the UNFILTERED split (empties keep their slot, like
-    // posexplode), one (doc, pos) equi-join per adjacent term pair
-    "phrase_index" ->
-      """WITH t AS (SELECT doc_id, unnest(ls) AS tok, unnest(range(0, len(ls))) AS pos
-        |           FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS ls
-        |                 FROM documents)),
-        |a AS (SELECT doc_id, pos FROM t WHERE tok = 'the'),
-        |b AS (SELECT doc_id, pos - 1 AS pos FROM t WHERE tok = 'data')
-        |SELECT a.doc_id, count(*) AS n_hits
-        |FROM a JOIN b ON a.doc_id = b.doc_id AND a.pos = b.pos
-        |GROUP BY a.doc_id ORDER BY a.doc_id""".stripMargin,
-
-    "match_text" ->
-      """SELECT doc_id,
-        |       ROUND(CAST(len(list_intersect(list_distinct(string_split_regex(lower(text), '\s+')),
-        |                                     ['spark', 'join', 'merge'])) AS DOUBLE) / 3.0, 6) AS relevance
-        |FROM documents
-        |WHERE len(list_intersect(list_distinct(string_split_regex(lower(text), '\s+')),
-        |                         ['spark', 'join', 'merge'])) > 0
-        |ORDER BY relevance DESC, doc_id ASC LIMIT 20""".stripMargin,
-
-    "window_agg_events" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |       event_type, COUNT(*) AS n,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS VARCHAR) AS sum_value
-        |FROM events
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "recommend_best" ->
-      """WITH p1 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 1),
-        |     p2 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 2),
-        |     n3 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 3)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(greatest(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), p1.v),
-        |                      list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), p2.v))
-        |             - list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), n3.v), 6) AS score
-        |FROM embeddings e, p1, p2, n3
-        |WHERE e.vec_id NOT IN (1, 2, 3)
-        |ORDER BY score DESC, id LIMIT 10""".stripMargin,
-
-    "recommend_sum" ->
-      """WITH p1 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 1),
-        |     p2 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 2),
-        |     n3 AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 3)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), p1.v)
-        |              + list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), p2.v))
-        |             - list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), n3.v), 6) AS score
-        |FROM embeddings e, p1, p2, n3
-        |WHERE e.vec_id NOT IN (1, 2, 3)
-        |ORDER BY score DESC, id LIMIT 10""".stripMargin,
-
-    // IVF serving path end-to-end: seed-point centroids from the md5
-    // permutation, sequential-sum euclid assignment (first-min index),
-    // nprobe=2 cluster selection, cosine rerank — every stage value-equal
-    // full pipeline mirrors (DuckMirror.ivfSql): ann_ivf value-checks the
-    // Lloyd's-REFINED centroids (5 iterations of quantized-DECIMAL updates,
-    // order-independent in both engines), not just the serving path
-    "ann_ivf" -> DuckMirror.ivfSql(
-      queryVecId = 0, k = 10, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 5, seed = 42L),
-
-    "ann_ivf_probe" -> DuckMirror.ivfSql(
-      queryVecId = 5, k = 10, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 0, seed = 42L),
-
-    // the bucketed store serves the same maxIter=0 pipeline — the oracle
-    // is the identical mirror with a different query vector; the pruned
-    // read must not change a single value
-    "ann_ivf_bucketed" -> DuckMirror.ivfSql(
-      queryVecId = 7, k = 10, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 0, seed = 42L),
-
-    // planned filtered search: both dispatch arms are exact top-k over the
-    // filtered set (pre-filter by construction; post-filter because
-    // nprobe = nlist), so one SQL shape mirrors each
-    "ann_filtered_pre" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 3)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.label = 7
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "ann_filtered_multi" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 5)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.label = 7 AND e.vec_id % 7 = 2
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "ann_filtered_keyword" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 11)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE 'L' || CAST(e.label AS VARCHAR) = 'L3'
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "ann_filtered_post" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 9)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.label IN (0, 1, 2, 3, 4)
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "payload_index_stats" ->
-      """SELECT CAST(label AS BIGINT) AS value, COUNT(*) AS n
-        |FROM embeddings GROUP BY label ORDER BY value""".stripMargin,
-
-    // compaction is file-layout-only: the served result is identical to
-    // the uncompacted covering pre-filter, so the oracle is the same
-    // exact filtered top-k
-    "payload_index_compact" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 3)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.label = 7
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "ann_filtered_range" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 5)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.label BETWEEN 8 AND 9
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "ann_ivf_batch" -> DuckMirror.ivfBatchSql(
-      queryVecIds = Seq(5, 7, 11), k = 10, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 0, seed = 42L),
-
-    "ann_recall_eval" -> DuckMirror.recallEvalSql(
-      queryMod = 50, queryRem = 5, k = 10, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 0, seed = 42L),
-
-    // IVF + int8 composition: the int8 candidate stage with margin 100
-    // must contain the exact-dot top-10 of the probed clusters, so the
-    // oracle is the same deterministic probe mirror scored by exact dot
-    "ann_ivf_quantized" -> DuckMirror.ivfSql(
-      queryVecId = 9, k = 10, dim = 64, nlist = 8, nprobe = 2,
-      maxIter = 0, seed = 42L, metric = "dot"),
-
-    // product quantization: per-subspace Lloyd's codebooks, argmin codes,
-    // ADC candidate cut, exact-dot rerank — the whole pipeline re-derived
-    "ann_pq" -> DuckMirror.pqSql(
-      queryVecId = 11, k = 10, candidateK = 100, dim = 64, m = 4,
-      ksub = 16, maxIter = 1, seed = 42L),
-
-    // IVF-PQ: the pq mirror composed with the maxIter=0 coarse quantizer
-    // — ADC candidates restricted to the nprobe probed clusters
-    "ann_ivfpq" -> DuckMirror.ivfPqSql(
-      queryVecId = 13, k = 10, candidateK = 50, dim = 64, m = 4,
-      ksub = 16, pqMaxIter = 1, nlist = 8, nprobe = 2, seed = 42L),
-
-    // residual form: coarse chain -> residual CTE -> codebook chains,
-    // approx = per-cluster dot literal + ADC sum, composed in one mirror
-    "ann_ivfpq_residual" -> DuckMirror.ivfPqResidualSql(
-      queryVecId = 19, k = 10, candidateK = 50, dim = 64, m = 4,
-      ksub = 16, pqMaxIter = 1, nlist = 8, nprobe = 2, seed = 42L),
-
-    // IVF coarse chain + sign-mismatch Hamming page + exact rerank
-    "ann_ivfbq" -> DuckMirror.ivfBqSql(
-      queryVecId = 31, k = 10, candidateK = 100, dim = 64, nlist = 8,
-      nprobe = 2, seed = 42L),
-
-    // multiprobe: the lshSql candidate predicate widened to Hamming-1
-    // band keys — candidate set and rerank arithmetic mirror exactly
-    "ann_lsh_multiprobe" -> DuckMirror.lshMultiprobeSql(
-      queryVecId = 17, k = 10, dim = 64, nbits = 16, bands = 4,
-      seed = 42L),
-
-    "group_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-        |sc AS (SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |              CAST(e.label AS VARCHAR) AS label,
-        |              ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |       FROM embeddings e, q WHERE e.vec_id <> 0),
-        |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY label ORDER BY score DESC, id) AS rn
-        |      FROM sc)
-        |SELECT label, id, score FROM r WHERE rn <= 2 ORDER BY label, id""".stripMargin,
-
-    "group_search_lookup" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-        |sc AS (SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |              CAST(e.label AS VARCHAR) AS label,
-        |              ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |       FROM embeddings e, q WHERE e.vec_id <> 0),
-        |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY label ORDER BY score DESC, id) AS rn
-        |      FROM sc),
-        |g AS (SELECT label, id, score FROM r WHERE rn <= 2)
-        |SELECT g.label, g.id, g.score,
-        |       to_json({'label': l.label}) AS lookup_payload
-        |FROM g JOIN embeddings l ON CAST(l.vec_id AS VARCHAR) = g.label
-        |ORDER BY g.label, g.id""".stripMargin,
-
-    "scroll_page" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload
-        |FROM embeddings ORDER BY vec_id LIMIT 10 OFFSET 20""".stripMargin,
-
-    "vector_normalize" ->
-      s"""SELECT CAST(vec_id AS VARCHAR) AS id,
-         |       ${duckVq6("list_transform(CAST(embedding AS DOUBLE[]), x -> x / sqrt(list_reduce(list_transform(CAST(embedding AS DOUBLE[]), y -> y * y), (a, b) -> a + b)))")} AS unit_q6
-         |FROM embeddings ORDER BY id""".stripMargin,
-
-    // chunk -> left-fold zip-sum -> /count, the exact v_mean_pool order
-    // (the kernel's zero init + e1 is bit-equal to starting at e1)
-    "multi_pool" ->
-      s"""SELECT vec_id,
-         |       ${duckVq6("list_transform(list_reduce(list_transform(range(0, 4), g -> list_transform(range(1, 17), j -> v[g * 16 + j])), (a, b) -> list_transform(range(1, 17), j -> a[j] + b[j])), x -> x / 4)")} AS pooled_q6
-         |FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-         |ORDER BY vec_id""".stripMargin,
-
-    "scroll_keyset" ->
-      """SELECT doc_id, lang, source
-        |FROM documents WHERE doc_id > 29 ORDER BY doc_id LIMIT 10""".stripMargin,
-
-    "user_stats_final" ->
-      """SELECT user_id, COUNT(*) AS n,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS VARCHAR) AS total
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // gaps-and-islands per (user_id, props) at MICROsecond precision (the
-    // event-time attribution join at MICROSECOND precision on both sides
-    // (Spark's ts DIV 1000 == DuckDB's epoch_ns // 1000; the 30-minute
-    // horizon is the integer 1800000000 us — no interval-type ambiguity)
-    "stream_join" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-        |                  epoch_ns(ts) // 1000 AS tus FROM events)
-        |SELECT p.event_id AS purchase_id, p.user_id AS user_id,
-        |       COUNT(*) AS n_clicks, MIN(c.event_id) AS first_click
-        |FROM e p JOIN e c
-        |  ON c.user_id = p.user_id AND c.event_type = 'click'
-        | AND c.tus <= p.tus AND c.tus >= p.tus - 1800000000
-        |WHERE p.event_type = 'purchase'
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-
-    // Spark side truncates nanos to micros before session_window, so the
-    // oracle compares truncated values too); burst = first event kept
-    "stream_dedup" ->
-      """WITH g AS (
-        |  SELECT user_id, props, ts, epoch_ns(ts) // 1000 AS tus,
-        |         CASE WHEN epoch_ns(ts) // 1000
-        |                   - LAG(epoch_ns(ts) // 1000)
-        |                     OVER (PARTITION BY user_id, props ORDER BY ts)
-        |                   >= 7200000000
-        |              OR LAG(ts) OVER (PARTITION BY user_id, props ORDER BY ts) IS NULL
-        |              THEN 1 ELSE 0 END AS brk
-        |  FROM events),
-        |-- island sum ordered by the SAME full-resolution ts as the lag
-        |-- windows: ordering by truncated micros would tie-break
-        |-- arbitrarily on same-microsecond events
-        |i AS (SELECT user_id, props, tus,
-        |             SUM(brk) OVER (PARTITION BY user_id, props ORDER BY ts
-        |                            ROWS UNBOUNDED PRECEDING) AS sid
-        |      FROM g)
-        |SELECT user_id, props, MIN(tus) AS kept_ts_us, COUNT(*) AS n_dups
-        |FROM i GROUP BY user_id, props, sid
-        |ORDER BY user_id, props, kept_ts_us""".stripMargin,
-
-    // gaps-and-islands: a session breaks when the gap to the previous
-    // event is >= 24h (Spark merges while next < prev + gap)
-    "session_agg" ->
-      """WITH g AS (
-        |  SELECT user_id, ts,
-        |         CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |                   >= INTERVAL 24 HOURS
-        |              OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |              THEN 1 ELSE 0 END AS brk
-        |  FROM events),
-        |i AS (SELECT user_id, ts,
-        |             SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |                            ROWS UNBOUNDED PRECEDING) AS sid
-        |      FROM g)
-        |SELECT user_id,
-        |       epoch_ns(MIN(ts)) // 1000 AS session_start_us,
-        |       COUNT(*) AS n_events,
-        |       epoch_ns(MAX(ts)) // 1000 - epoch_ns(MIN(ts)) // 1000 AS span_us
-        |FROM i GROUP BY user_id, sid ORDER BY user_id, session_start_us""".stripMargin,
-
-    // naive inequality join — the semantics intervalJoin's chunked
-    // equi-join rewrite must reproduce exactly (half-open [start, end))
-    "interval_join" ->
-      """WITH i AS (SELECT event_id AS incident_id, ts AS s,
-        |                  ts + INTERVAL 2 HOURS AS e
-        |           FROM events WHERE event_type = 'purchase' AND value > 300),
-        |     p AS (SELECT event_id, ts FROM events WHERE event_type = 'error')
-        |SELECT i.incident_id, COUNT(*) AS n_errors, MIN(p.event_id) AS first_error
-        |FROM i JOIN p ON p.ts >= i.s AND p.ts < i.e
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "asof_join" ->
-      """WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |     p AS (SELECT event_id AS p_event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-        |SELECT c.event_id, p.p_event_id,
-        |       CASE WHEN p.p_event_id IS NOT NULL
-        |            THEN epoch_ns(c.ts) // 1000 - epoch_ns(p.ts) // 1000 END AS lag_us
-        |FROM c ASOF LEFT JOIN p
-        |  ON c.user_id = p.user_id AND c.ts >= p.ts
-        |ORDER BY c.event_id""".stripMargin,
-
-    "pivot_stats" ->
-      """SELECT lang,
-        |       CAST(COALESCE(SUM(CASE WHEN source = 'src0' THEN 1 END), 0) AS BIGINT) AS src0_n,
-        |       CAST(COALESCE(SUM(CASE WHEN source = 'src1' THEN 1 END), 0) AS BIGINT) AS src1_n,
-        |       CAST(COALESCE(SUM(CASE WHEN source = 'src2' THEN 1 END), 0) AS BIGINT) AS src2_n,
-        |       CAST(COALESCE(SUM(CASE WHEN source = 'src3' THEN 1 END), 0) AS BIGINT) AS src3_n
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "lateral_topk" ->
-      """SELECT r.r_name, t.n_name FROM region r,
-        |LATERAL (SELECT n_name FROM nation n
-        |         WHERE n.n_regionkey = r.r_regionkey
-        |         ORDER BY n_name LIMIT 2) t
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "json_containment" ->
-      """SELECT doc_id,
-        |       list_contains(CAST(json_extract(to_json({'tags': [lang, source]}), '$.tags') AS VARCHAR[]), 'en') AS has_en,
-        |       list_contains(CAST(json_extract(to_json({'tags': [lang, source]}), '$.tags') AS VARCHAR[]), 'src3') AS has_src3
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // nested semantics from first principles: the only element whose key
-    // can be 'src7' is the source element, whose `even` flag is
-    // n_chars % 3 = 0 — both conditions on the SAME element
-    "nested_filter" ->
-      """SELECT doc_id FROM documents
-        |WHERE source = 'src7' AND n_chars % 3 = 0
-        |ORDER BY doc_id""".stripMargin
-  )
-
-  /** Shared CTE chain of the dedup_clusters / split_by_cluster oracles:
-    * the planted-near-dup corpus, blocked n-gram Jaccard pairs at 0.8,
-    * symmetric edges, and the recursive min-label reachability — ONE text
-    * so the two gates provably close over the same cluster labels.
-    */
-  private val NearDupClustersCte: String =
-    """WITH RECURSIVE c AS (SELECT doc_id, text, lang, source FROM documents
-      |           UNION ALL
-      |           SELECT doc_id + 1000000, text || ' zzz', lang, source
-      |           FROM documents WHERE doc_id % 7 = 0),
-      |     t AS (SELECT doc_id, lang, source,
-      |                  list_distinct(string_split_regex(lower(text), '\s+')) AS toks
-      |           FROM c),
-      |     p AS (SELECT * FROM (
-      |       SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-      |              CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-      |              CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) AS j
-      |       FROM t a JOIN t b
-      |         ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id)
-      |       WHERE ROUND(j, 6) >= 0.8),
-      |     e AS (SELECT a_id AS s, b_id AS d FROM p
-      |           UNION ALL
-      |           SELECT b_id, a_id FROM p),
-      |     reach(id, comp) AS (
-      |       SELECT doc_id, doc_id FROM c
-      |       UNION
-      |       SELECT e.d, r.comp FROM reach r JOIN e ON e.s = r.id)""".stripMargin
-
-  private val oraclePipeline: Map[String, String] = Map(
-    "dedup_exact" ->
-      """WITH c AS (SELECT doc_id, text FROM documents
-        |           UNION ALL
-        |           SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0)
-        |SELECT min(doc_id) AS keeper, COUNT(*) AS n_copies
-        |FROM c GROUP BY text ORDER BY keeper""".stripMargin,
-
-    "dedup_priority" ->
-      """WITH c AS (SELECT doc_id, text, source FROM documents
-        |           UNION ALL
-        |           SELECT doc_id + 1000000, text, 'zsrc_crawl'
-        |           FROM documents WHERE doc_id % 10 = 0
-        |           UNION ALL
-        |           SELECT doc_id + 2000000, text, 'a_curated'
-        |           FROM documents WHERE doc_id % 10 = 5),
-        |r AS (SELECT doc_id, source,
-        |        ROW_NUMBER() OVER (PARTITION BY text ORDER BY source, doc_id) AS rk,
-        |        COUNT(*) OVER (PARTITION BY text) AS n_copies
-        |      FROM c)
-        |SELECT doc_id AS keeper, source AS keeper_priority, n_copies
-        |FROM r WHERE rk = 1 ORDER BY keeper""".stripMargin,
-
-    "dedup_url" ->
-      """WITH raw AS (
-        |  SELECT doc_id,
-        |    'https://' ||
-        |    CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END ||
-        |    CASE WHEN doc_id % 2 = 0 THEN upper(source) ELSE source END ||
-        |    '.Example.COM' ||
-        |    CASE WHEN doc_id % 7 = 0 THEN ':443' ELSE '' END ||
-        |    '/docs/' || CAST(doc_id % 40 AS VARCHAR) ||
-        |    CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END ||
-        |    CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed&b=2&a=1'
-        |         WHEN doc_id % 4 = 1 THEN '?b=2&a=1'
-        |         WHEN doc_id % 4 = 2 THEN '?a=1&b=2'
-        |         ELSE '' END AS url
-        |  FROM documents),
-        |c1 AS (SELECT doc_id, split_part(url, '#', 1) AS u FROM raw),
-        |c2 AS (SELECT doc_id, lower(split_part(u, '://', 1)) AS scheme,
-        |              split_part(u, '://', 2) AS rest FROM c1),
-        |c3 AS (SELECT doc_id, scheme, rest,
-        |              split_part(rest, '/', 1) AS host0 FROM c2),
-        |c4 AS (SELECT doc_id, scheme,
-        |        regexp_replace(regexp_replace(lower(host0), '^www\.', ''),
-        |                       ':(80|443)$', '') AS host,
-        |        substr(rest, len(host0) + 1) AS pathq FROM c3),
-        |c5 AS (SELECT doc_id, scheme, host,
-        |        regexp_replace(split_part(pathq, '?', 1), '/+$', '') AS path,
-        |        split_part(pathq, '?', 2) AS query FROM c4),
-        |c6 AS (SELECT doc_id, scheme || '://' || host || path ||
-        |        CASE WHEN q2 <> '' THEN '?' || q2 ELSE '' END AS url
-        |       FROM (SELECT doc_id, scheme, host, path,
-        |               array_to_string(list_sort(list_filter(
-        |                 string_split(query, '&'),
-        |                 p -> p <> '' AND p NOT LIKE 'utm\_%' ESCAPE '\')), '&') AS q2
-        |             FROM c5) q)
-        |SELECT url, COUNT(*) AS n, MIN(doc_id) AS keep_id
-        |FROM c6 GROUP BY url ORDER BY url""".stripMargin,
-
-    // the derivation's canonical host is lower(source) || '.example.com'
-    // by construction (the dedup_url oracle validates the full
-    // canonicalization chain; this one value-checks the FILTER)
-    "url_host_filter" ->
-      """SELECT doc_id, lower(source) || '.example.com' AS host
-        |FROM documents WHERE source NOT IN ('src3', 'src7')
-        |ORDER BY doc_id""".stripMargin,
-
-    // same host simplification as url_host_filter (the rawUrl convention
-    // canonicalizes to lower(source).example.com); survivors = the k
-    // smallest md5 draws per host, the engine's permutation
-    "url_host_cap" ->
-      """WITH h AS (SELECT doc_id, lower(source) || '.example.com' AS host
-        |           FROM documents),
-        |r AS (SELECT doc_id, host,
-        |             row_number() OVER (PARTITION BY host
-        |               ORDER BY md5(CAST(doc_id AS VARCHAR) || '42'), doc_id) AS rn
-        |      FROM h)
-        |SELECT doc_id, host FROM r WHERE rn <= 15 ORDER BY doc_id""".stripMargin,
-
-    "dedup_ngram_jaccard" ->
-      """WITH c AS (SELECT doc_id, text, lang, source FROM documents
-        |           UNION ALL
-        |           SELECT doc_id + 1000000, text || ' zzz', lang, source
-        |           FROM documents WHERE doc_id % 7 = 0),
-        |     t AS (SELECT doc_id, lang, source,
-        |                  list_distinct(string_split_regex(lower(text), '\s+')) AS toks
-        |           FROM c)
-        |SELECT * FROM (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |         ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-        |               CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE), 6) AS jaccard
-        |  FROM t a JOIN t b
-        |    ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id)
-        |WHERE jaccard >= 0.8
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    // exact transitive closure: min reachable doc_id per node over the
-    // same near-dup pair edges the Spark side propagates labels on
-    "dedup_clusters" ->
-      (NearDupClustersCte +
-        """
-          |SELECT id AS doc_id, min(comp) AS component
-          |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin),
-
-    // the SAME closure folded twice: per-component sizes, then the
-    // size histogram
-    "dedup_cluster_sizes" ->
-      (NearDupClustersCte +
-        """,
-          |     comp AS (SELECT id, min(comp) AS comp FROM reach GROUP BY id),
-          |     c2 AS (SELECT comp, COUNT(*) AS sz FROM comp GROUP BY comp)
-          |SELECT sz, COUNT(*) AS n_clusters
-          |FROM c2 GROUP BY sz ORDER BY sz""".stripMargin),
-
-    // the SAME transitive closure, then split = f(component, seed): every
-    // cluster member shares the component key, so no cluster straddles a
-    // split boundary (thresholds from the identical Scala arithmetic)
-    "split_by_cluster" -> {
-      val ts = graft.ops.Search.splitThresholds(
-        Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)))
-      NearDupClustersCte +
-        s""",
-           |     comp AS (SELECT id AS doc_id, min(comp) AS component
-           |              FROM reach GROUP BY id),
-           |     sb AS (SELECT doc_id, component,
-           |                   CAST(CAST(('0x' || substring(md5('split|' || CAST(component AS VARCHAR) || '7'), 1, 15)) AS UBIGINT) AS BIGINT) AS b
-           |            FROM comp)
-           |SELECT doc_id, component,
-           |       CASE WHEN b < ${ts(0)} THEN 'train'
-           |            WHEN b < ${ts(1)} THEN 'val'
-           |            ELSE 'test' END AS split
-           |FROM sb ORDER BY doc_id""".stripMargin
-    },
-
-    "dedup_embedding" ->
-      """WITH c AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |           WHERE label <= 1
-        |           UNION ALL
-        |           SELECT vec_id + 100000, label,
-        |                  list_transform(CAST(embedding AS DOUBLE[]), x -> x * 0.99)
-        |           FROM embeddings WHERE vec_id % 5 = 0 AND label <= 1)
-        |SELECT * FROM (
-        |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |         ROUND(list_cosine_similarity(a.v, b.v), 6) AS cosine
-        |  FROM c a JOIN c b ON a.label = b.label AND a.vec_id < b.vec_id)
-        |WHERE cosine >= 0.999
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "dedup_embedding_lsh" ->
-      DuckMirror.embeddingLshSql(threshold = 0.999, dim = 64),
-
-    "dedup_semantic" ->
-      DuckMirror.semanticSql(threshold = 0.999, dim = 64, nlist = 8,
-        maxIter = 2, seed = 42L),
-
-    "dedup_semantic_keep" ->
-      DuckMirror.semanticSql(threshold = 0.999, dim = 64, nlist = 8,
-        maxIter = 2, seed = 42L, survivors = true),
-
-    "dedup_embedding_lsh64" ->
-      DuckMirror.embeddingLshSql(threshold = 0.999, dim = 64,
-        nbits = 64, bands = 4),
-
-    "decontam_embedding" ->
-      DuckMirror.embeddingDecontamSql(threshold = 0.999, dim = 64,
-        nbits = 64, bands = 4),
-
-    "decontam_minhash" ->
-      DuckMirror.minhashDecontamSql(threshold = 0.8),
-
-    "cluster_sample" ->
-      DuckMirror.clusterSampleSql(dim = 64, nlist = 8, maxIter = 2,
-        seed = 42L, k = 5, sampleSeed = 42L),
-
-    "novelty_score" -> DuckMirror.noveltySql,
-
-    // run-length form on BOTH sides (sort, diff run-end positions):
-    // same terms in the same ascending-char order as the per-distinct
-    // formulation, O(n log n) instead of O(n * alphabet)
-    "char_entropy" ->
-      """WITH ch AS (
-        |  SELECT doc_id, length(text) AS n,
-        |         list_sort(list_transform(range(1, length(text) + 1),
-        |                                  i -> text[i])) AS s
-        |  FROM documents),
-        |e AS (
-        |  SELECT doc_id, n,
-        |         list_filter(range(1, len(s) + 1),
-        |                     i -> i = len(s) OR s[i + 1] <> s[i]) AS ends
-        |  FROM ch)
-        |SELECT doc_id, CAST(n AS INTEGER) AS n,
-        |       CASE WHEN n > 0 THEN 0.0 + ROUND(-list_reduce(
-        |         list_concat([0.0], list_transform(range(1, len(ends) + 1),
-        |           k -> (CAST(ends[k] - CASE WHEN k = 1 THEN 0
-        |                                     ELSE ends[k - 1] END AS DOUBLE) / n)
-        |                * ln(CAST(ends[k] - CASE WHEN k = 1 THEN 0
-        |                                         ELSE ends[k - 1] END AS DOUBLE) / n))),
-        |         (x, y) -> x + y), 6) END AS entropy
-        |FROM e ORDER BY doc_id""".stripMargin,
-
-    "dedup_weights" ->
-      """WITH c AS (SELECT doc_id, text FROM documents
-        |           UNION ALL
-        |           SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0),
-        |n AS (SELECT text, COUNT(*) AS n_copies FROM c GROUP BY text)
-        |SELECT c.doc_id AS id, n.n_copies,
-        |       ROUND(CAST(1.0 AS DOUBLE) / n.n_copies, 6) AS weight
-        |FROM c JOIN n USING (text) ORDER BY id""".stripMargin,
-
-    "contrastive_pairs" ->
-      DuckMirror.contrastiveSql(threshold = 0.999, dim = 64,
-        sampleSize = 64, seed = 42L, nbits = 64, bands = 4),
-
-    "token_count" ->
-      """SELECT doc_id,
-        |       CAST(len(list_filter(string_split_regex(lower(text), '\s+'), t -> len(t) > 0)) AS BIGINT) AS n_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "chunk_windows" ->
-      """WITH t AS (SELECT doc_id,
-        |                  list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
-        |           FROM documents),
-        |c AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-        |idx AS (SELECT doc_id, toks, n,
-        |               unnest(range(0, CASE WHEN n <= 0 THEN 0
-        |                                    WHEN n <= 64 THEN 1
-        |                                    ELSE CAST(ceil((n - 64) / 48.0) AS INTEGER) + 1 END)) AS i
-        |        FROM c)
-        |SELECT doc_id, CAST(i AS INTEGER) AS chunk_idx,
-        |       array_to_string(toks[i * 48 + 1 : i * 48 + 64], ' ') AS chunk,
-        |       CAST(LEAST(64, n - i * 48) AS INTEGER) AS n_tokens
-        |FROM idx ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "bm25_rank" ->
-      """WITH t AS (SELECT doc_id,
-        |                  list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-        |           FROM documents),
-        |m AS (SELECT doc_id, len(toks) AS len,
-        |             len(list_filter(toks, x -> x = 'spark')) AS tf0,
-        |             len(list_filter(toks, x -> x = 'join'))  AS tf1,
-        |             len(list_filter(toks, x -> x = 'merge')) AS tf2
-        |      FROM t),
-        |s AS (SELECT COUNT(*) AS n, AVG(len) AS avglen,
-        |             SUM(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-        |             SUM(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-        |             SUM(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-        |      FROM m)
-        |SELECT doc_id,
-        |       ROUND(
-        |         ln(1.0 + (CAST(n AS DOUBLE) - df0 + 0.5) / (df0 + 0.5)) * (CAST(tf0 AS DOUBLE) * 2.2) / (CAST(tf0 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(len AS DOUBLE) / avglen)) +
-        |         ln(1.0 + (CAST(n AS DOUBLE) - df1 + 0.5) / (df1 + 0.5)) * (CAST(tf1 AS DOUBLE) * 2.2) / (CAST(tf1 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(len AS DOUBLE) / avglen)) +
-        |         ln(1.0 + (CAST(n AS DOUBLE) - df2 + 0.5) / (df2 + 0.5)) * (CAST(tf2 AS DOUBLE) * 2.2) / (CAST(tf2 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(len AS DOUBLE) / avglen)),
-        |         4) AS bm25
-        |FROM m, s ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin,
-
-    "line_dedup" -> DuckMirror.lineDedupSql(BoilerLine),
-    "flagged_terms" ->
-      """WITH t AS (SELECT doc_id,
-        |             list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-        |           FROM documents),
-        |m AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |             CAST(len(list_filter(toks, x ->
-        |               list_contains(['slow', 'broken', 'spill'], x))) AS BIGINT) AS flagged_occ,
-        |             CAST(len(list_filter(['slow', 'broken', 'spill'], w ->
-        |               list_contains(toks, w))) AS BIGINT) AS flagged_distinct
-        |      FROM t),
-        |r AS (SELECT doc_id, n_tokens, flagged_occ, flagged_distinct,
-        |             CASE WHEN n_tokens > 0
-        |                  THEN ROUND(CAST(flagged_occ AS DOUBLE) / n_tokens, 6)
-        |                  ELSE 0.0 END AS flagged_ratio
-        |      FROM m)
-        |SELECT doc_id, n_tokens, flagged_occ, flagged_distinct, flagged_ratio,
-        |       flagged_ratio <= 0.03 AS keep
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "line_rules" -> DuckMirror.lineRulesSql(BoilerLine),
-    "line_dedup_doc" -> DuckMirror.lineDedupDocSql(BoilerLine),
-
-    // chr(229/246/252) = precomposed å/ö/ü, chr(769) = combining acute —
-    // the same mixed planted suffix as the engine side
-    "strip_accents" ->
-      """WITH c AS (SELECT doc_id,
-        |             CASE WHEN doc_id % 11 = 0
-        |                  THEN text || ' cafe' || chr(769) || ' ' || chr(229) ||
-        |                       'ngstr' || chr(246) || 'm m' || chr(252) || 'hle'
-        |                  ELSE text END AS text
-        |           FROM documents)
-        |SELECT doc_id, strip_accents(text) AS stripped,
-        |       strip_accents(text) <> text AS changed
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // the planted suffix is DECOMPOSED (combining marks, built from
-    // chr() so the SQL text stays ASCII): cafe+U+0301 a+U+030A ...
-    "nfc_normalize" ->
-      """WITH c AS (SELECT doc_id,
-        |             CASE WHEN doc_id % 9 = 0
-        |                  THEN text || ' cafe' || chr(769) || ' a' || chr(778) ||
-        |                       'ngstro' || chr(776) || 'm'
-        |                  ELSE text END AS text
-        |           FROM documents)
-        |SELECT doc_id, nfc_normalize(text) AS nfc,
-        |       nfc_normalize(text) <> text AS changed
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "embedding_hygiene" ->
-      """WITH c AS (SELECT vec_id, label,
-        |             CASE WHEN vec_id % 101 = 0 THEN (CAST(embedding AS DOUBLE[]))[1:32]
-        |                  WHEN vec_id % 103 = 0 THEN list_transform(CAST(embedding AS DOUBLE[]), x -> 0.0)
-        |                  WHEN vec_id % 107 = 0 THEN list_concat(['nan'::DOUBLE], (CAST(embedding AS DOUBLE[]))[2:64])
-        |                  ELSE CAST(embedding AS DOUBLE[]) END AS v
-        |           FROM embeddings),
-        |m AS (SELECT label, len(v) AS dim,
-        |             list_reduce(list_concat([0.0], list_transform(v, x -> x * x)),
-        |                         (a, b) -> a + b) AS n2
-        |      FROM c),
-        |g AS (SELECT label, COUNT(*) AS n,
-        |             CAST(SUM(CASE WHEN dim <> 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_bad_dim,
-        |             CAST(SUM(CASE WHEN isnan(n2) THEN 1 ELSE 0 END) AS BIGINT) AS n_nan,
-        |             CAST(SUM(CASE WHEN NOT isnan(n2) AND n2 = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-        |             SUM(CASE WHEN isnan(n2) THEN 0
-        |                      ELSE CAST(floor(sqrt(n2) * 1000000 + 0.5) AS BIGINT) END) AS nq
-        |      FROM m GROUP BY label)
-        |SELECT label, n, n_bad_dim, n_nan, n_zero,
-        |       ROUND(CAST(nq AS DOUBLE) / 1000000 / (n - n_nan), 6) AS avg_norm
-        |FROM g ORDER BY label""".stripMargin,
-
-    "quality_pct_by_source" ->
-      """WITH t AS (SELECT doc_id, source, text,
-        |             list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-        |           FROM documents),
-        |m AS (SELECT doc_id, source,
-        |             CAST(len(toks) AS DOUBLE) AS n,
-        |             CASE WHEN len(toks) > 0 THEN
-        |               CAST(len(list_filter(toks, x -> list_contains(
-        |                 ['the','a','of','and','to','in','is','it','that','for'], x))) AS DOUBLE)
-        |                 / CAST(len(toks) AS DOUBLE)
-        |             ELSE 0.0 END AS ratio,
-        |             CASE WHEN len(text) > 0 THEN
-        |               CAST(len(text) - len(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g')) AS DOUBLE)
-        |                 / CAST(len(text) AS DOUBLE)
-        |             ELSE 0.0 END AS punct
-        |      FROM t),
-        |q AS (SELECT doc_id, source,
-        |             ROUND(least(n / 50.0, 1.0) * (0.5 + 0.5 * least(ratio * 5.0, 1.0)) *
-        |                   greatest(1.0 - punct * 3.0, 0.0), 6) AS q
-        |      FROM m)
-        |SELECT doc_id, source, q,
-        |       ROUND(PERCENT_RANK() OVER (PARTITION BY source ORDER BY q, doc_id), 6) AS pct
-        |FROM q ORDER BY doc_id""".stripMargin,
-
-    // same formula as bm25_rank (terms window/batch/scan), restricted to
-    // docs matching >= 1 term — the candidate set the pruned index yields
-    "inverted_search" -> InvertedSearchOracle,
-
-    // the SAME ranked result served from the parquet store's text
-    // sidecar (tf/dl postings + meta stats): one oracle, two paths —
-    // engine-side partition-pruned postings scan and store-side
-    // token-bucket serve must agree bit for bit
-    "dsv2_parquet_text_rank" -> InvertedSearchOracle,
-
-    // ... and through the binary wire: transport invisible, same oracle
-    "dsv2_grpc_text_rank" -> InvertedSearchOracle,
-
-    // ... and sharded: partials merge exactly, same oracle once more
-    "dsv2_sharded_text_rank" -> InvertedSearchOracle,
-
-
-    // inverted_search's formula under the CONFIGURED tokenizer: word
-    // split on non-alphanumerics, len in [4,6], stopwords dropped —
-    // dl/df/n all re-derive from the filtered token lists
-    "text_index_config" ->
-      """WITH t AS (SELECT doc_id,
-        |                  list_filter(string_split_regex(lower(text), '[^\p{L}\p{N}]+'),
-        |                              x -> len(x) >= 4 AND len(x) <= 6
-        |                                   AND x NOT IN ('table', 'value')) AS toks
-        |           FROM documents),
-        |m AS (SELECT doc_id, len(toks) AS len,
-        |             len(list_filter(toks, x -> x = 'window')) AS tf0,
-        |             len(list_filter(toks, x -> x = 'batch')) AS tf1,
-        |             len(list_filter(toks, x -> x = 'scan'))  AS tf2
-        |      FROM t),
-        |s AS (SELECT COUNT(*) AS n, AVG(len) AS avglen,
-        |             SUM(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-        |             SUM(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-        |             SUM(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-        |      FROM m)
-        |SELECT doc_id,
-        |       ROUND(
-        |         ln(1.0 + (CAST(n AS DOUBLE) - df0 + 0.5) / (df0 + 0.5)) * (CAST(tf0 AS DOUBLE) * 2.2) / (CAST(tf0 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(len AS DOUBLE) / avglen)) +
-        |         ln(1.0 + (CAST(n AS DOUBLE) - df1 + 0.5) / (df1 + 0.5)) * (CAST(tf1 AS DOUBLE) * 2.2) / (CAST(tf1 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(len AS DOUBLE) / avglen)) +
-        |         ln(1.0 + (CAST(n AS DOUBLE) - df2 + 0.5) / (df2 + 0.5)) * (CAST(tf2 AS DOUBLE) * 2.2) / (CAST(tf2 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(len AS DOUBLE) / avglen)),
-        |         4) AS bm25
-        |FROM m, s
-        |WHERE tf0 + tf1 + tf2 > 0
-        |ORDER BY bm25 DESC, doc_id LIMIT 15""".stripMargin,
-
-    // the prefix index serves term='val' by exact equality; the oracle
-    // re-derives tf as the count of tokens EXTENDING the prefix (len>=3
-    // is the index's min prefix depth; LIKE 'val%' implies len>=3)
-    "text_prefix_search" ->
-      """WITH t AS (SELECT doc_id,
-        |                  list_filter(string_split_regex(lower(text), '[^\p{L}\p{N}]+'),
-        |                              x -> len(x) >= 3) AS toks
-        |           FROM documents),
-        |m AS (SELECT doc_id, len(list_filter(toks, x -> x LIKE 'val%')) AS tf FROM t)
-        |SELECT doc_id, tf FROM m WHERE tf > 0
-        |ORDER BY tf DESC, doc_id LIMIT 12""".stripMargin,
-
-    "top_bigrams" ->
-      """WITH t AS (SELECT list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-        |           FROM documents),
-        |g AS (SELECT unnest(CASE WHEN len(toks) >= 2
-        |                         THEN list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])
-        |                         ELSE [] END) AS gram
-        |      FROM t)
-        |SELECT gram, COUNT(*) AS n
-        |FROM g GROUP BY gram ORDER BY n DESC, gram LIMIT 20""".stripMargin,
-
-    "dup_ngram_top" ->
-      """WITH tk AS (SELECT doc_id,
-        |                   list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS ts
-        |            FROM documents),
-        |g AS (SELECT DISTINCT doc_id, array_to_string(ts[i:i+4], ' ') AS ngram
-        |      FROM tk, UNNEST(range(1, len(ts) - 5 + 2)) AS u(i)
-        |      WHERE len(ts) >= 5)
-        |SELECT ngram, COUNT(*) AS n_docs
-        |FROM g GROUP BY ngram HAVING COUNT(*) >= 2
-        |ORDER BY n_docs DESC, ngram ASC LIMIT 20""".stripMargin,
-
-    "bpe_merges" -> DuckMirror.bpeSql(numMerges = 8, trace = true),
-
-    "bpe_vocab" -> DuckMirror.bpeSql(numMerges = 8, trace = false),
-
-    "bpe_encode" -> DuckMirror.bpeEncodeSql(numMerges = 8),
-
-    "subword_count" ->
-      """SELECT doc_id,
-        |       CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) > 0)) +
-        |            len(list_filter(string_split_regex(text, '[a-z0-9\s]+'), t -> len(t) > 0)) AS BIGINT) AS n_subwords
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "corpus_stats" ->
-      """WITH t AS (SELECT lang,
-        |                  len(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS n_tokens,
-        |                  len(text) AS n_chars
-        |           FROM documents)
-        |SELECT lang,
-        |       COUNT(*) AS n_docs,
-        |       ROUND(quantile_cont(n_tokens, 0.5), 6) AS median_tokens,
-        |       ROUND(quantile_cont(n_tokens, 0.9), 6) AS p90_tokens,
-        |       ROUND(AVG(n_chars), 6) AS avg_chars
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // quantile_cont mirrors Spark's exact interpolated percentile (the
-    // corpus_stats-proven pairing), boundaries rounded before comparison
-    "quality_bins" ->
-      """WITH t AS (SELECT doc_id,
-        |                  len(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS n_tokens
-        |           FROM documents),
-        |b AS (SELECT ROUND(quantile_cont(n_tokens, 0.25), 6) AS b1,
-        |             ROUND(quantile_cont(n_tokens, 0.5), 6) AS b2,
-        |             ROUND(quantile_cont(n_tokens, 0.75), 6) AS b3
-        |      FROM t)
-        |SELECT doc_id, n_tokens,
-        |       CASE WHEN n_tokens <= b1 THEN 0
-        |            WHEN n_tokens <= b2 THEN 1
-        |            WHEN n_tokens <= b3 THEN 2
-        |            ELSE 3 END AS bin
-        |FROM t, b ORDER BY doc_id""".stripMargin,
-
-    "skew_join" ->
-      """WITH w(event_type, weight) AS (VALUES
-        |       ('click', 1), ('view', 2), ('purchase', 10),
-        |       ('signup', 5), ('error', 0))
-        |SELECT e.event_type, CAST(w.weight AS BIGINT) AS weight,
-        |       COUNT(*) AS n,
-        |       CAST(SUM(CAST(floor(e.value) AS BIGINT) * w.weight) AS BIGINT) AS weighted
-        |FROM events e JOIN w ON e.event_type = w.event_type
-        |GROUP BY e.event_type, w.weight ORDER BY e.event_type""".stripMargin,
-
-    "quality_score" ->
-      """WITH t AS (SELECT doc_id, text,
-        |                  list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks,
-        |                  CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS DOUBLE) AS n
-        |           FROM documents),
-        |     m AS (SELECT doc_id,
-        |                  CASE WHEN n > 0 THEN
-        |                    CAST(len(list_filter(toks, x -> list_contains(
-        |                      ['the','a','of','and','to','in','is','it','that','for'], x))) AS DOUBLE) / n
-        |                  ELSE 0.0 END AS ratio,
-        |                  n,
-        |                  CASE WHEN len(text) > 0 THEN
-        |                    CAST(len(text) - len(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g')) AS DOUBLE)
-        |                      / CAST(len(text) AS DOUBLE)
-        |                  ELSE 0.0 END AS punct
-        |           FROM t)
-        |SELECT doc_id,
-        |       ROUND(ratio, 6) AS stopword_ratio,
-        |       ROUND(least(n / 50.0, 1.0) * (0.5 + 0.5 * least(ratio * 5.0, 1.0)) *
-        |             greatest(1.0 - punct * 3.0, 0.0), 6) AS quality
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    // the quality_score ratio CTE + token cost, then the same
-    // strictly-lower-cost RANGE window dominance test
-    "pareto_front" ->
-      """WITH t AS (SELECT doc_id, lang,
-        |                  list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-        |           FROM documents),
-        |m AS (SELECT doc_id, lang,
-        |             CAST(len(toks) AS BIGINT) AS cost,
-        |             ROUND(CASE WHEN len(toks) > 0 THEN
-        |                     CAST(len(list_filter(toks, x -> list_contains(
-        |                       ['the','a','of','and','to','in','is','it','that','for'], x))) AS DOUBLE)
-        |                       / CAST(len(toks) AS DOUBLE)
-        |                   ELSE 0.0 END, 6) AS value
-        |      FROM t),
-        |s AS (SELECT doc_id, lang, cost, value,
-        |             MAX(value) OVER (PARTITION BY lang ORDER BY cost
-        |               RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mv
-        |      FROM m)
-        |SELECT doc_id, lang, cost, value FROM s
-        |WHERE mv IS NULL OR mv <= value ORDER BY doc_id""".stripMargin,
-
-    "random_sample" ->
-      """SELECT id FROM (SELECT CAST(vec_id AS VARCHAR) AS id FROM embeddings)
-        |ORDER BY md5(id || '42'), id LIMIT 20""".stripMargin,
-
-    "stratified_sample" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE CAST(CAST(('0x' || substring(md5(lang || '|' || CAST(doc_id AS VARCHAR) || '42'), 1, 15)) AS UBIGINT) AS BIGINT)
-        |      < 288230376151711744
-        |ORDER BY doc_id""".stripMargin,
-
-    "quota_sample" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang,
-        |         ROW_NUMBER() OVER (PARTITION BY lang
-        |           ORDER BY md5(CAST(doc_id AS VARCHAR) || '42'), doc_id) AS rk
-        |  FROM documents)
-        |WHERE rk <= 40 ORDER BY doc_id""".stripMargin,
-
-    // the mirror re-derives counts, ratios, and 60-bit thresholds with
-    // the operator's exact double arithmetic (floor == toLong truncation
-    // for positive rates), then applies the same md5-permutation accept
-    "mix_sources" -> {
-      val vals = MixTargets.map { case (s0, w) =>
-        s"('$s0', ${java.lang.Double.toString(w)}::DOUBLE)" }.mkString(", ")
-      s"""WITH counts AS (SELECT source, COUNT(*) AS c FROM documents GROUP BY source),
-         |tot AS (SELECT CAST(SUM(c) AS DOUBLE) AS total FROM counts),
-         |tw(source, w) AS (VALUES $vals),
-         |r AS (SELECT c.source, t.w / (c.c / tot.total) AS ratio
-         |      FROM counts c JOIN tw t ON t.source = c.source, tot),
-         |m AS (SELECT MAX(ratio) AS mr FROM r),
-         |thr AS (SELECT source, CAST(floor((ratio / mr) * 1152921504606846976) AS BIGINT) AS thr
-         |        FROM r, m)
-         |SELECT d.doc_id, d.source
-         |FROM documents d JOIN thr ON thr.source = d.source
-         |WHERE CAST(CAST(('0x' || substring(md5(d.source || '|mix|' || CAST(d.doc_id AS VARCHAR) || '42'), 1, 15)) AS UBIGINT) AS BIGINT) < thr.thr
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "split_assign" -> {
-      // thresholds computed by the SAME Scala arithmetic the operator uses
-      val ts = graft.ops.Search.splitThresholds(
-        Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)))
-      s"""SELECT doc_id,
-         |       CASE WHEN b < ${ts(0)} THEN 'train'
-         |            WHEN b < ${ts(1)} THEN 'val'
-         |            ELSE 'test' END AS split
-         |FROM (SELECT doc_id,
-         |             CAST(CAST(('0x' || substring(md5('split|' || CAST(doc_id AS VARCHAR) || '42'), 1, 15)) AS UBIGINT) AS BIGINT) AS b
-         |      FROM documents)
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "seq_pack" ->
-      """WITH t AS (SELECT lang, doc_id,
-        |                  CAST(len(list_filter(string_split_regex(lower(text), '\s+'), t -> len(t) > 0)) AS BIGINT) AS n_tokens
-        |           FROM documents),
-        |c AS (SELECT lang, doc_id, n_tokens,
-        |             SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-        |                                 ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM t)
-        |SELECT lang, doc_id, n_tokens,
-        |       CAST(cum - n_tokens AS BIGINT) AS token_offset,
-        |       CAST((cum - n_tokens) // 1024 AS BIGINT) AS seq_id
-        |FROM c ORDER BY lang, doc_id""".stripMargin,
-
-    "mix_pack" -> {
-      val g = DuckMirror.gopherSql(minTokens = 50L, maxTokens = 5000L,
-        minMeanLen = 3.0, maxMeanLen = 10.0, maxRep = 0.2)
-      s"""WITH g AS (SELECT doc_id, n_tokens FROM ($g) WHERE keep),
-         |c AS (SELECT doc_id, n_tokens,
-         |             SUM(n_tokens) OVER (
-         |               ORDER BY md5('mp:' || CAST(doc_id AS VARCHAR)), doc_id
-         |               ROWS UNBOUNDED PRECEDING) AS cum
-         |      FROM g)
-         |SELECT doc_id, CAST(cum AS BIGINT) AS cum,
-         |       CAST((cum - n_tokens) // 1024 AS BIGINT) AS seq_id
-         |FROM c ORDER BY doc_id""".stripMargin
-    },
-
-    "pack_stats" ->
-      """WITH t AS (SELECT lang, doc_id,
-        |                  CAST(len(list_filter(string_split_regex(lower(text), '\s+'), t -> len(t) > 0)) AS BIGINT) AS n_tokens
-        |           FROM documents),
-        |c AS (SELECT lang, doc_id, n_tokens,
-        |             SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-        |                                 ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM t),
-        |p AS (SELECT lang, CAST((cum - n_tokens) // 1024 AS BIGINT) AS seq_id,
-        |             n_tokens
-        |      FROM c)
-        |SELECT lang, seq_id, COUNT(*) AS n_docs,
-        |       CAST(SUM(n_tokens) AS BIGINT) AS tokens,
-        |       ROUND(CAST(SUM(n_tokens) AS DOUBLE) / 1024.0, 6) AS fill
-        |FROM p GROUP BY lang, seq_id ORDER BY lang, seq_id""".stripMargin,
-
-    "chunk_docs" ->
-      """WITH t AS (SELECT doc_id,
-        |                  list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-        |           FROM documents),
-        |c AS (SELECT doc_id, toks,
-        |             CAST(unnest(generate_series(0,
-        |               CASE WHEN len(toks) <= 16 THEN 0
-        |                    ELSE ((len(toks) - 16 + 7) // 8) * 8 END, 8)) AS INTEGER) AS start
-        |      FROM t WHERE len(toks) > 0)
-        |SELECT doc_id,
-        |       CAST(start // 8 AS INTEGER) AS chunk_id,
-        |       start,
-        |       CAST(len(toks[start + 1 : start + 16]) AS INTEGER) AS n_tokens,
-        |       array_to_string(toks[start + 1 : start + 16], ' ') AS chunk_text
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "vocab_topk" ->
-      """WITH t AS (SELECT doc_id,
-        |                  unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS token
-        |           FROM documents),
-        |g AS (SELECT token, doc_id, COUNT(*) AS n FROM t GROUP BY 1, 2)
-        |SELECT token, CAST(SUM(n) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS n_docs
-        |FROM g GROUP BY token
-        |ORDER BY n DESC, token LIMIT 50""".stripMargin,
-
-    "tfidf_topk" ->
-      """WITH t AS (SELECT doc_id,
-        |                  unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS token
-        |           FROM documents),
-        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM t GROUP BY 1, 2),
-        |dft AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT COUNT(*) AS n FROM documents),
-        |s AS (SELECT f.doc_id, f.token, f.tf,
-        |             f.tf * CAST(floor(ln(CAST(n.n AS DOUBLE) / d.df) * 1000000 + 0.5) AS BIGINT) AS score_micro
-        |      FROM tf f JOIN dft d USING (token), n),
-        |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-        |                  ORDER BY score_micro DESC, token) AS rank
-        |      FROM s)
-        |SELECT doc_id, token, CAST(tf AS BIGINT) AS tf,
-        |       CAST(score_micro AS BIGINT) AS score_micro, CAST(rank AS INTEGER) AS rank
-        |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    // mirrors RollingHash64 exactly: base-31 polynomial over UTF-8 bytes
-    // with 64-bit wraparound, done in HUGEINT mod 2^64 (test corpus is
-    // ASCII, so ascii(char) == utf-8 byte)
-    "fingerprint" ->
-      s"""SELECT doc_id, ${DuckMirror.signed64("h")} AS fingerprint
-         |FROM (
-         |  SELECT doc_id, ${DuckMirror.rollingHashUnsignedSql("text")} AS h
-         |  FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-
-    "corpus_diff" ->
-      s"""WITH ot AS (SELECT doc_id,
-         |                   CASE WHEN doc_id % 7 = 1 THEN text || ' OLD'
-         |                        ELSE text END AS t
-         |            FROM documents WHERE doc_id % 7 <> 3),
-         |o AS (SELECT doc_id, ${DuckMirror.rollingHashUnsignedSql("t")} AS fpo FROM ot),
-         |n AS (SELECT doc_id, ${DuckMirror.rollingHashUnsignedSql("text")} AS fpn
-         |      FROM documents WHERE doc_id % 7 <> 5)
-         |SELECT doc_id,
-         |       CASE WHEN fpo IS NULL THEN 'added'
-         |            WHEN fpn IS NULL THEN 'removed'
-         |            WHEN fpo <> fpn THEN 'changed'
-         |            ELSE 'unchanged' END AS status
-         |FROM o FULL JOIN n USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    // multimodal stub features: nBytes = UTF-8 byte length of the synthetic
-    // media payload (== len(text) on the ASCII corpus)
-    "multimodal_features" ->
-      """SELECT CAST(doc_id AS VARCHAR) AS id,
-        |       'fake/' || source AS format,
-        |       CAST(len(text) AS INTEGER) AS "nBytes"
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // frame sampling mirror: durationMs = n_chars*10, everyMs = 1000,
-    // maxFrames = 8 -> nf = min(8, max(1, n_chars // 100)) frames of
-    // octet_length(text) // nf bytes each at 1000ms steps
-    "multimodal_frame_dedup" -> {
-      val rh = DuckMirror.signed64(DuckMirror.rollingHashUnsignedSql("fb"))
-      s"""WITH c AS (SELECT doc_id, text FROM documents
-         |           UNION ALL
-         |           SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0),
-         |m AS (SELECT CAST(doc_id AS VARCHAR) AS id, text,
-         |             strlen(text) AS b,
-         |             LEAST(8, GREATEST(1, (strlen(text) * 10) // 1000)) AS nf
-         |      FROM c),
-         |fr AS (SELECT id,
-         |              substr(text, CAST(i * (b // nf) AS INTEGER) + 1,
-         |                     CAST(b // nf AS INTEGER)) AS fb
-         |       FROM m, range(0, 8) r(i) WHERE i < nf),
-         |fp AS (SELECT id, $rh AS frame_fp FROM fr)
-         |SELECT frame_fp, COUNT(*) AS n_frames, MIN(id) AS keeper
-         |FROM fp GROUP BY frame_fp ORDER BY frame_fp""".stripMargin
-    },
-
-    "multimodal_frames" ->
-      """WITH m AS (SELECT CAST(doc_id AS VARCHAR) AS id,
-        |                  strlen(text) AS b,
-        |                  LEAST(8, GREATEST(1, (n_chars * 10) // 1000)) AS nf
-        |           FROM documents)
-        |SELECT id, CAST(i AS INTEGER) AS frame_idx,
-        |       CAST(i * 1000 AS BIGINT) AS ts_ms,
-        |       CAST(b // nf AS INTEGER) AS n_bytes
-        |FROM m, range(0, 8) r(i)
-        |WHERE i < nf
-        |ORDER BY id, frame_idx""".stripMargin,
-
-    "quantized_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 7)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.vec_id <> 7
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // full calibrated-quantizer mirror: quantile bounds re-derived
-    // (q6-quantized like the engine), every vector re-encoded with the
-    // identical clip/floor affine, the approximate dot reproduced with
-    // the engine's parenthesization, then the same margin-100 rerank
-    "quantized_calibrated" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 13),
-        |cal AS (SELECT FLOOR(quantile_cont(x, 0.01) * 1e6 + 0.5) / 1e6 AS lo,
-        |               FLOOR(quantile_cont(x, 0.99) * 1e6 + 0.5) / 1e6 AS hi
-        |        FROM (SELECT UNNEST(CAST(embedding AS DOUBLE[])) AS x FROM embeddings)),
-        |p AS (SELECT lo, hi, (hi - lo) / 255.0 AS s FROM cal),
-        |pm AS (SELECT lo, hi, s, lo + 128.0 * s AS m FROM p),
-        |cs AS (SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |              CAST(e.embedding AS DOUBLE[]) AS v,
-        |              list_transform(CAST(e.embedding AS DOUBLE[]),
-        |                x -> FLOOR((LEAST(GREATEST(x, pm.lo), pm.hi) - pm.lo) / pm.s + 0.5) - 128) AS c
-        |       FROM embeddings e, pm),
-        |qs AS (SELECT list_transform(q.qv,
-        |                x -> FLOOR((LEAST(GREATEST(x, pm.lo), pm.hi) - pm.lo) / pm.s + 0.5) - 128) AS qc
-        |       FROM q, pm),
-        |cand AS (SELECT cs.id, cs.v,
-        |                list_inner_product(cs.c, qs.qc) * (pm.s * pm.s)
-        |                + (pm.s * pm.m) * (list_sum(cs.c) + list_sum(qs.qc))
-        |                + (64 * pm.m) * pm.m AS approx
-        |         FROM cs, qs, pm
-        |         ORDER BY approx DESC, id ASC LIMIT 100)
-        |SELECT cand.id, ROUND(list_inner_product(cand.v, q.qv), 6) AS score
-        |FROM cand, q
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // mirrors BOTH stages: Hamming distance re-derived as the per-dim
-    // sign-mismatch count (bit i set iff x_i > 0 on both engines), then
-    // exact-dot rerank over the candidate page
-    "bq_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 7),
-        |c AS (SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |             CAST(e.embedding AS DOUBLE[]) AS v,
-        |             len(list_filter(range(1, len(e.embedding) + 1),
-        |                 i -> (CAST(e.embedding AS DOUBLE[])[i] > 0) <> (q.qv[i] > 0))) AS ham
-        |      FROM embeddings e, q WHERE e.vec_id <> 7
-        |      ORDER BY ham ASC, id ASC LIMIT 100)
-        |SELECT c.id, ROUND(list_inner_product(c.v, q.qv), 6) AS score
-        |FROM c, q
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    // all three cascade stages mirrored: sign-mismatch Hamming page,
-    // int8 quantizer (scale = float32(absmax/127), HALF-AWAY rounding,
-    // (intsum * sA) * sB approx-dot — the exact kernel arithmetic), then
-    // exact-dot rerank. No margin assumption anywhere.
-    "cascade_rerank" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 23),
-        |qs AS (SELECT qv, CAST(CAST(list_max(list_transform(qv, x -> abs(x))) / 127.0 AS FLOAT) AS DOUBLE) AS s FROM q),
-        |qc AS (SELECT qv, s, list_transform(qv, x -> CASE WHEN x >= 0 THEN floor(x / s + 0.5) ELSE ceil(x / s - 0.5) END) AS c FROM qs),
-        |e AS (SELECT CAST(vec_id AS VARCHAR) AS id, CAST(embedding AS DOUBLE[]) AS v
-        |      FROM embeddings WHERE vec_id <> 23),
-        |s1 AS (SELECT e.id, e.v,
-        |              len(list_filter(range(1, len(e.v) + 1),
-        |                  i -> (e.v[i] > 0) <> (q.qv[i] > 0))) AS ham
-        |       FROM e, q ORDER BY ham ASC, id ASC LIMIT 200),
-        |es AS (SELECT id, v, CAST(CAST(list_max(list_transform(v, x -> abs(x))) / 127.0 AS FLOAT) AS DOUBLE) AS s FROM s1),
-        |ec AS (SELECT id, v, s, list_transform(v, x -> CASE WHEN x >= 0 THEN floor(x / s + 0.5) ELSE ceil(x / s - 0.5) END) AS c FROM es),
-        |s2 AS (SELECT ec.id, ec.v,
-        |              (list_reduce(list_transform(range(1, len(ec.c) + 1),
-        |                  i -> ec.c[i] * qc.c[i]), (a, b) -> a + b) * ec.s) * qc.s AS approx
-        |       FROM ec, qc ORDER BY approx DESC, id ASC LIMIT 50)
-        |SELECT s2.id, ROUND(list_inner_product(s2.v, q.qv), 6) AS score
-        |FROM s2, q ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "facet_counts" ->
-      """SELECT CAST(label AS VARCHAR) AS value, count(*) AS n
-        |FROM embeddings WHERE vec_id % 3 <> 0
-        |GROUP BY 1 ORDER BY n DESC, value ASC LIMIT 5""".stripMargin,
-
-    "dsv2_snapshot" ->
-      s"""SELECT CAST(vec_id AS VARCHAR) AS id,
-        |       to_json({'label': label}) AS payload,
-        |       CASE WHEN vec_id % 3 IN (0, 1) THEN ${duckVq6("embedding")} END AS text_embedding_q6,
-        |       CASE WHEN vec_id % 3 IN (1, 2) THEN ${duckVq6("embedding")} END AS image_embedding_q6,
-        |       CASE WHEN vec_id % 3 = 2 THEN ${duckVq6("embedding")} END AS audio_embedding_q6,
-        |       CASE WHEN vec_id % 3 = 0 THEN
-        |         ${duckVq6("embedding")} || ';' || ${duckVq6("list_reverse(embedding)")}
-        |       END AS multi_q6,
-        |       CASE WHEN vec_id % 3 <> 1 THEN
-        |         array_to_string(list_transform(list_filter(range(1, len(embedding) + 1), i -> embedding[i] > 0), i -> CAST(i - 1 AS VARCHAR)), ',')
-        |       END AS keywords_indices_s,
-        |       CASE WHEN vec_id % 3 <> 1 THEN ${duckVq6("list_filter(embedding, x -> x > 0)")} END AS keywords_values_q6
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "tenant_search" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 21)
-        |SELECT CAST(e.vec_id AS VARCHAR) AS id,
-        |       ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS score
-        |FROM embeddings e, q WHERE e.label = 2 AND e.vec_id <> 21
-        |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-
-    "tenant_stats" ->
-      """SELECT 't' || CAST(label AS VARCHAR) AS tenant, count(*) AS n_points
-        |FROM embeddings GROUP BY 1 ORDER BY tenant""".stripMargin,
-
-    // rank on the UNROUNDED inner product (the engine rounds after the
-    // window filter), round only in the projection
-    "distance_matrix" ->
-      """WITH s AS (SELECT CAST(vec_id AS VARCHAR) AS id,
-        |                  CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings
-        |           ORDER BY md5(CAST(vec_id AS VARCHAR) || '42'), id LIMIT 20)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |       ROUND(list_inner_product(a.v, b.v), 6) AS score
-        |FROM s a JOIN s b ON a.id <> b.id
-        |QUALIFY row_number() OVER (PARTITION BY a.id
-        |          ORDER BY list_inner_product(a.v, b.v) DESC, b.id ASC) <= 5""".stripMargin,
-
-    "distance_matrix_offsets" ->
-      """WITH s AS (SELECT CAST(vec_id AS VARCHAR) AS id,
-        |                  CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings
-        |           ORDER BY md5(CAST(vec_id AS VARCHAR) || '42'), id LIMIT 20),
-        |     r AS (SELECT id, v,
-        |                  row_number() OVER (ORDER BY md5(id || '42'), id) - 1 AS off
-        |           FROM s)
-        |SELECT a.off AS off_row, b.off AS off_col,
-        |       ROUND(list_inner_product(a.v, b.v), 6) AS score
-        |FROM r a JOIN r b ON a.id <> b.id
-        |QUALIFY row_number() OVER (PARTITION BY a.id
-        |          ORDER BY list_inner_product(a.v, b.v) DESC, b.id ASC) <= 5""".stripMargin,
-
-    "scroll_order_by" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id, CAST(label AS INTEGER) AS label
-        |FROM embeddings
-        |WHERE label > 1 OR (label = 1 AND CAST(vec_id AS VARCHAR) > '17')
-        |ORDER BY label ASC, id ASC LIMIT 10""".stripMargin,
-
-    "scroll_order_by_desc" ->
-      """SELECT CAST(vec_id AS VARCHAR) AS id, CAST(label AS INTEGER) AS label
-        |FROM embeddings
-        |WHERE label < 8 OR (label = 8 AND CAST(vec_id AS VARCHAR) > '21')
-        |ORDER BY label DESC, id ASC LIMIT 10""".stripMargin,
-
-    "budget_select" ->
-      """SELECT doc_id, cum_tokens FROM (
-        |  SELECT doc_id,
-        |         CAST(SUM(n_chars) OVER (
-        |           ORDER BY (n_chars % 91) DESC, doc_id ASC) AS BIGINT)
-        |           AS cum_tokens
-        |  FROM documents)
-        |WHERE cum_tokens <= 60000 ORDER BY doc_id""".stripMargin,
-
-    "epoch_shuffle" ->
-      """SELECT doc_id, 0 AS epoch,
-        |       row_number() OVER (
-        |         ORDER BY md5('ep' || ':' || '0' || ':' || CAST(doc_id AS VARCHAR)),
-        |                  doc_id) AS pos
-        |FROM documents
-        |UNION ALL
-        |SELECT doc_id, 1 AS epoch,
-        |       row_number() OVER (
-        |         ORDER BY md5('ep' || ':' || '1' || ':' || CAST(doc_id AS VARCHAR)),
-        |                  doc_id) AS pos
-        |FROM documents
-        |ORDER BY epoch, pos""".stripMargin,
-
-    "interleave_sources" ->
-      """WITH r AS (
-        |  SELECT doc_id, source,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY md5('il' || ':' || CAST(doc_id AS VARCHAR)),
-        |                    doc_id) AS rnd
-        |  FROM documents)
-        |SELECT doc_id, source, rnd,
-        |       row_number() OVER (ORDER BY rnd, source) AS pos
-        |FROM r ORDER BY pos""".stripMargin,
-
-    "budget_select_by_source" ->
-      """SELECT doc_id, source, cum_tokens FROM (
-        |  SELECT doc_id, source,
-        |         CAST(SUM(n_chars) OVER (PARTITION BY source
-        |           ORDER BY (n_chars % 91) DESC, doc_id ASC) AS BIGINT)
-        |           AS cum_tokens
-        |  FROM documents)
-        |WHERE cum_tokens <= 4000 ORDER BY doc_id""".stripMargin,
-
-    // same 60-bit md5 bucket; threshold re-derived with the identical
-    // double chain ((w / wmax * rate) * 2^60, floor -> BIGINT)
-    "weighted_sample" ->
-      """WITH m AS (SELECT CAST(max(n_chars) AS DOUBLE) AS wmax FROM documents)
-        |SELECT doc_id, n_chars FROM documents, m
-        |WHERE CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || '11'), 1, 15)) AS UBIGINT) AS BIGINT)
-        |      < CAST(floor(CAST(n_chars AS DOUBLE) / wmax * 0.8 * 1152921504606846976.0) AS BIGINT)
-        |ORDER BY doc_id""".stripMargin,
-
-    "rendezvous_reshard" ->
-      """WITH s AS (SELECT doc_id, i,
-        |                  md5(CAST(doc_id AS VARCHAR) || '#' || CAST(i AS VARCHAR)) AS h
-        |           FROM documents, range(0, 9) r(i)),
-        |a8 AS (SELECT doc_id, CAST(arg_max(i, h) AS INTEGER) AS s8
-        |       FROM s WHERE i < 8 GROUP BY doc_id),
-        |a9 AS (SELECT doc_id, CAST(arg_max(i, h) AS INTEGER) AS s9
-        |       FROM s GROUP BY doc_id)
-        |SELECT a8.doc_id, a8.s8, a9.s9, a8.s8 <> a9.s9 AS moved
-        |FROM a8 JOIN a9 ON a8.doc_id = a9.doc_id
-        |ORDER BY a8.doc_id""".stripMargin,
-
-    "shard_export" ->
-      """SELECT CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || '#7'), 1, 15)) AS UBIGINT) AS BIGINT) % 8 AS shard,
-        |       count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars,
-        |       min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM documents GROUP BY 1 ORDER BY shard""".stripMargin,
-
-    "lang_id" ->
-      s"""WITH $langIdPredCtes
-        |SELECT doc_id, lang_pred FROM pred ORDER BY doc_id""".stripMargin,
-
-    // classifier EVAL harness: the same prediction chain, cross-tabbed
-    // against the labeled lang — the confusion matrix a pipeline
-    // monitors before trusting the cheap heuristic at scale
-    "lang_confusion" ->
-      s"""WITH $langIdPredCtes
-        |SELECT d.lang, p.lang_pred, COUNT(*) AS n
-        |FROM documents d JOIN pred p USING (doc_id)
-        |GROUP BY d.lang, p.lang_pred
-        |ORDER BY d.lang, p.lang_pred""".stripMargin
-  )
-
-  /** Shared CTE chain of the lang_id / lang_confusion oracles: `pred`
-    * (doc_id, lang_pred) re-derives [[TextAnalysis.langId]].
-    */
-  private def langIdPredCtes: String =
-    """t AS (SELECT doc_id,
-      |                  list_distinct(string_split_regex(lower(text), '\s+')) AS toks
-      |           FROM documents),
-      |     sc AS (SELECT doc_id,
-      |                   len(list_intersect(toks, ['the','and','of','to','is','that','for','with'])) AS s_en,
-      |                   len(list_intersect(toks, ['der','die','das','und','ist','nicht','ein','mit'])) AS s_de,
-      |                   len(list_intersect(toks, ['el','la','que','de','los','es','una','para'])) AS s_es,
-      |                   len(list_intersect(toks, ['le','la','les','des','est','une','dans','pour'])) AS s_fr
-      |            FROM t),
-      |pred AS (SELECT doc_id,
-      |       CASE WHEN s_en = greatest(s_en, s_de, s_es, s_fr) AND s_en > 0 THEN 'en'
-      |            WHEN s_de = greatest(s_en, s_de, s_es, s_fr) AND s_de > 0 THEN 'de'
-      |            WHEN s_es = greatest(s_en, s_de, s_es, s_fr) AND s_es > 0 THEN 'es'
-      |            WHEN s_fr = greatest(s_en, s_de, s_es, s_fr) AND s_fr > 0 THEN 'fr'
-      |            ELSE 'und' END AS lang_pred
-      |FROM sc)""".stripMargin
-
-  private val oracleAnalytics: Map[String, String] = Map(
-    "dedup_spans" ->
-      s"""WITH ${DuckMirror.spanCtes(SharedPhrase)}
-         |SELECT doc_id, span_start, span_end, span_len
-         |FROM spans ORDER BY doc_id, span_start""".stripMargin,
-
-    "span_stats" ->
-      s"""WITH ${DuckMirror.spanCtes(SharedPhrase)},
-         |nt AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM t)
-         |SELECT sp.doc_id AS doc_id, COUNT(*) AS n_spans,
-         |       CAST(SUM(sp.span_len) AS BIGINT) AS dup_tokens,
-         |       nt.n_tokens AS n_tokens,
-         |       ROUND(CAST(SUM(sp.span_len) AS DOUBLE) /
-         |             CAST(nt.n_tokens AS DOUBLE), 6) AS dup_ratio
-         |FROM spans sp JOIN nt ON sp.doc_id = nt.doc_id
-         |GROUP BY sp.doc_id, nt.n_tokens ORDER BY doc_id""".stripMargin,
-
-    "span_strip" -> DuckMirror.spanStripSql(SharedPhrase),
-
-    "dedup_fuzzy" ->
-      """WITH c AS (SELECT doc_id, text, lang, source FROM documents
-        |           UNION ALL
-        |           SELECT doc_id + 2000000,
-        |                  substring(text, 1, 10) || '~' || substring(text, 12),
-        |                  lang, source
-        |           FROM documents WHERE doc_id % 7 = 0),
-        |b AS (SELECT doc_id, substring(text, 1, 60) AS t,
-        |             substring(text, 1, 8) AS blk, lang, source FROM c)
-        |SELECT a.doc_id AS a_id, b2.doc_id AS b_id,
-        |       CAST(levenshtein(a.t, b2.t) AS BIGINT) AS dist
-        |FROM b a JOIN b b2
-        |  ON a.lang = b2.lang AND a.source = b2.source AND a.blk = b2.blk
-        | AND a.doc_id < b2.doc_id
-        |WHERE levenshtein(a.t, b2.t) <= 2
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "pagerank_topk" -> DuckMirror.pageRankSql(iterations = 5),
-
-    "rollup_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-        |       COUNT(*) AS n,
-        |       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "cube_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-        |       COUNT(*) AS n,
-        |       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-
-    "grouping_sets_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-        |       COUNT(*) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin,
-
-    "zorder_key" -> {
-      val z = graft.ops.Layout.zorderSql("l_partkey % 1024", "l_suppkey % 1024", 10)
-      s"""WITH z AS (SELECT $z AS zkey,
-         |                  l_partkey % 1024 AS x, l_suppkey % 1024 AS y
-         |           FROM lineitem)
-         |SELECT zkey >> 14 AS zbucket, COUNT(*) AS n,
-         |       min(x) AS min_x, max(x) AS max_x,
-         |       min(y) AS min_y, max(y) AS max_y
-         |FROM z GROUP BY zbucket ORDER BY zbucket""".stripMargin
-    },
-
-    "domain_counts" ->
-      """WITH c AS (SELECT doc_id,
-        |                  CASE WHEN doc_id % 3 = 0
-        |                       THEN text || ' see https://site' ||
-        |                            CAST(doc_id % 5 AS VARCHAR) || '.example.org/page'
-        |                       ELSE text END AS text
-        |           FROM documents),
-        |d AS (SELECT regexp_extract(text, 'https://([a-z0-9.]+)/', 1) AS domain FROM c)
-        |SELECT domain, COUNT(*) AS n FROM d WHERE domain <> ''
-        |GROUP BY domain ORDER BY domain""".stripMargin,
-
-    "lead_lag" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |         epoch_us(ts) - lag(epoch_us(ts), 1) OVER (
-        |           PARTITION BY user_id ORDER BY ts, event_id) AS gap
-        |  FROM events)
-        |SELECT user_id, COUNT(*) AS n_gaps,
-        |       CAST(SUM(gap) AS BIGINT) AS sum_gap_us,
-        |       max(gap) AS max_gap_us
-        |FROM g WHERE gap IS NOT NULL
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "funnel_steps" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS t FROM events),
-        |v AS (SELECT user_id, min(t) AS t1 FROM e WHERE event_type = 'view'
-        |      GROUP BY user_id),
-        |c AS (SELECT e.user_id, min(t) AS t2 FROM e JOIN v USING (user_id)
-        |      WHERE event_type = 'click' AND t > t1 GROUP BY e.user_id),
-        |p AS (SELECT e.user_id, min(t) AS t3 FROM e JOIN c USING (user_id)
-        |      WHERE event_type = 'purchase' AND t > t2 GROUP BY e.user_id)
-        |SELECT '1_view' AS step, COUNT(*) AS users FROM v
-        |UNION ALL SELECT '2_click', COUNT(*) FROM c
-        |UNION ALL SELECT '3_purchase', COUNT(*) FROM p
-        |ORDER BY step""".stripMargin,
-
-    "retention_cohorts" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events),
-        |co AS (SELECT user_id, min(d) AS c0 FROM e GROUP BY user_id)
-        |SELECT CAST(c0 AS VARCHAR) AS cohort,
-        |       date_diff('day', c0, d) AS day_offset,
-        |       COUNT(DISTINCT user_id) AS n_users
-        |FROM e JOIN co USING (user_id)
-        |GROUP BY c0, date_diff('day', c0, d)
-        |ORDER BY cohort, day_offset""".stripMargin,
-
-    "graph_degrees" ->
-      """WITH pr AS (SELECT DISTINCT l_suppkey AS sk, l_partkey + 1000000 AS pk FROM lineitem),
-        |e AS (SELECT sk AS src, pk AS dst FROM pr UNION ALL SELECT pk, sk FROM pr),
-        |d AS (SELECT src, COUNT(*) AS degree FROM e GROUP BY src)
-        |SELECT degree, COUNT(*) AS n_nodes FROM d
-        |GROUP BY degree ORDER BY degree""".stripMargin,
-
-    "table_profile" -> {
-      val cols = Seq("doc_id", "lang", "source", "n_chars")
-      cols.map(c =>
-        s"""SELECT '$c' AS column_name, COUNT(*) AS n_rows,
-           |       COUNT(*) - COUNT($c) AS n_null,
-           |       COUNT(DISTINCT $c) AS n_distinct,
-           |       CAST(min($c) AS VARCHAR) AS min_value,
-           |       CAST(max($c) AS VARCHAR) AS max_value
-           |FROM documents""".stripMargin)
-        .mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
-    },
-
-    "stemmed_vocab" -> {
-      val stemmed = graft.ops.TextAnalysis.StemRules
-        .foldLeft("tok") { case (e, (pat, suffix)) =>
-          s"regexp_replace($e, '$pat', '\\1$suffix')"
-        }
-      s"""WITH tok AS (SELECT unnest(list_filter(
-         |               string_split_regex(lower(text), '\\s+'),
-         |               x -> len(x) > 0)) AS tok
-         |             FROM documents),
-         |st AS (SELECT $stemmed AS term FROM tok)
-         |SELECT term, COUNT(*) AS cnt FROM st GROUP BY term
-         |ORDER BY cnt DESC, term ASC LIMIT 25""".stripMargin
-    },
-
-    "trimmed_mean" ->
-      """WITH r AS (
-        |  SELECT lang, n_chars,
-        |         row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rn,
-        |         COUNT(*) OVER (PARTITION BY lang) AS cnt
-        |  FROM documents)
-        |SELECT lang, COUNT(*) AS n_kept,
-        |       ROUND(CAST(SUM(n_chars) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-        |         AS trimmed_avg_chars
-        |FROM r WHERE rn > cnt // 10 AND rn <= cnt - cnt // 10
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "doc_quantiles" ->
-      """SELECT lang,
-        |       percentile_cont(0.25) WITHIN GROUP (ORDER BY n_chars) AS p25,
-        |       percentile_cont(0.5)  WITHIN GROUP (ORDER BY n_chars) AS p50,
-        |       percentile_cont(0.75) WITHIN GROUP (ORDER BY n_chars) AS p75
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "corr_stats" ->
-      """WITH m AS (
-        |  SELECT l_returnflag,
-        |         CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS x,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y
-        |  FROM lineitem),
-        |a AS (
-        |  SELECT l_returnflag, COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-        |         SUM(x * y) AS sxy, SUM(x * x) AS sx2, SUM(y * y) AS sy2
-        |  FROM m GROUP BY l_returnflag)
-        |SELECT l_returnflag,
-        |       ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) -
-        |              CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-        |             (sqrt(CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) -
-        |                   CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
-        |              sqrt(CAST(n AS DOUBLE) * CAST(sy2 AS DOUBLE) -
-        |                   CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-        |         AS corr_qty_price
-        |FROM a ORDER BY l_returnflag""".stripMargin,
-
-    "temperature_sample" ->
-      """WITH cnt AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY source),
-        |w AS (SELECT source,
-        |             CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1e6) AS BIGINT) AS ssq
-        |      FROM cnt),
-        |t AS (SELECT CAST(SUM(ssq) AS BIGINT) AS tot FROM w),
-        |q AS (SELECT source, (200 * ssq) // tot AS quota FROM w, t),
-        |r AS (SELECT doc_id, source,
-        |             row_number() OVER (PARTITION BY source
-        |               ORDER BY md5('temp|' || CAST(doc_id AS VARCHAR) || '11'),
-        |                        doc_id) AS rn
-        |      FROM documents)
-        |SELECT r.doc_id, r.source FROM r JOIN q USING (source)
-        |WHERE rn <= quota ORDER BY doc_id""".stripMargin
-  )
-
-  /** BM25 over documents for terms (window, batch, scan), k=15 — shared
-    * by the engine-side postings gate (inverted_search) and its
-    * store-seam twin (dsv2_parquet_text_rank).
-    */
-  private lazy val InvertedSearchOracle: String =
-    """WITH t AS (SELECT doc_id,
-        |                  list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-        |           FROM documents),
-        |m AS (SELECT doc_id, len(toks) AS len,
-        |             len(list_filter(toks, x -> x = 'window')) AS tf0,
-        |             len(list_filter(toks, x -> x = 'batch')) AS tf1,
-        |             len(list_filter(toks, x -> x = 'scan'))  AS tf2
-        |      FROM t),
-        |s AS (SELECT COUNT(*) AS n, AVG(len) AS avglen,
-        |             SUM(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-        |             SUM(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-        |             SUM(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-        |      FROM m)
-        |SELECT doc_id,
-        |       ROUND(
-        |         ln(1.0 + (CAST(n AS DOUBLE) - df0 + 0.5) / (df0 + 0.5)) * (CAST(tf0 AS DOUBLE) * 2.2) / (CAST(tf0 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(len AS DOUBLE) / avglen)) +
-        |         ln(1.0 + (CAST(n AS DOUBLE) - df1 + 0.5) / (df1 + 0.5)) * (CAST(tf1 AS DOUBLE) * 2.2) / (CAST(tf1 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(len AS DOUBLE) / avglen)) +
-        |         ln(1.0 + (CAST(n AS DOUBLE) - df2 + 0.5) / (df2 + 0.5)) * (CAST(tf2 AS DOUBLE) * 2.2) / (CAST(tf2 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(len AS DOUBLE) / avglen)),
-        |         4) AS bm25
-        |FROM m, s
-        |WHERE tf0 + tf1 + tf2 > 0
-        |ORDER BY bm25 DESC, doc_id LIMIT 15""".stripMargin
-
-  def oracleSql: Map[String, String] =
-    oracleScanAndJson ++ oracleDense ++ oracleComposite ++
-      oracleRelational ++ oraclePipeline ++ oracleAnalytics ++ Map(
-        "dedup_simhash" -> DuckMirror.simhashSql(maxDist = 3),
-        "pii_scrub" -> {
-          import graft.ops.TextAnalysis.{EmailRe, Ipv4Re, PhoneRe}
-          s"""WITH c AS (
-             |  SELECT doc_id,
-             |         CASE WHEN doc_id % 5 = 0
-             |              THEN text || ' contact user' || CAST(doc_id AS VARCHAR)
-             |                   || '@example.com from 10.0.0.' || CAST(doc_id % 256 AS VARCHAR)
-             |                   || ' call 5551234567'
-             |              ELSE text END AS text
-             |  FROM documents),
-             |-- sequential counting like the Spark side: each category is
-             |-- counted on the text with earlier categories already
-             |-- redacted, so counts = tokens actually emitted
-             |t1 AS (SELECT doc_id, text,
-             |              regexp_replace(text, '$EmailRe', '<EMAIL>', 'g') AS s1
-             |       FROM c),
-             |t2 AS (SELECT doc_id, text, s1,
-             |              regexp_replace(s1, '$Ipv4Re', '<IP>', 'g') AS s2
-             |       FROM t1),
-             |s AS (
-             |  SELECT doc_id,
-             |         CAST(len(regexp_extract_all(text, '$EmailRe')) AS INTEGER) AS n_emails,
-             |         CAST(len(regexp_extract_all(s1, '$Ipv4Re')) AS INTEGER) AS n_ips,
-             |         CAST(len(regexp_extract_all(s2, '$PhoneRe')) AS INTEGER) AS n_phones,
-             |         regexp_replace(s2, '$PhoneRe', '<PHONE>', 'g') AS scrubbed
-             |  FROM t2),
-             |h AS (SELECT doc_id, n_emails, n_ips, n_phones,
-             |             ${DuckMirror.rollingHashUnsignedSql("scrubbed")} AS hu
-             |      FROM s)
-             |SELECT doc_id, n_emails, n_ips, n_phones,
-             |       ${DuckMirror.signed64("hu")} AS scrub_fp
-             |FROM h ORDER BY doc_id""".stripMargin
-        },
-        "dedup_minhash" -> DuckMirror.minhashSql(threshold = 0.8),
-        "hard_negatives" -> DuckMirror.minhashHardNegativesSql(threshold = 0.8,
-          bands = 8),
-        "doc_containment" -> DuckMirror.containmentSql(threshold = 0.99,
-          bands = 8),
-        "clean_corpus" -> DuckMirror.cleanCorpusSql(threshold = 0.8,
-          minQuality = 0.1),
-        "dedup_clusters_minhash" -> DuckMirror.minhashClustersSql(threshold = 0.8),
-        "dedup_survivors" ->
-          s"""WITH x AS (${DuckMirror.minhashClustersSql(threshold = 0.8)})
-             |SELECT doc_id FROM x WHERE doc_id = component
-             |ORDER BY doc_id""".stripMargin,
-        "doc_repetition" -> DuckMirror.repetitionSql,
-        "quality_filter" -> DuckMirror.gopherSql(
-          minTokens = 50L, maxTokens = 5000L,
-          minMeanLen = 3.0, maxMeanLen = 10.0, maxRep = 0.2),
-        "normalize_text" -> {
-          import graft.ops.TextAnalysis.{TagRe, UrlRe}
-          s"""WITH c AS (
-             |  SELECT doc_id,
-             |         CASE WHEN doc_id % 3 = 0
-             |              THEN text || ' visit https://example.com/x?id=' || CAST(doc_id AS VARCHAR)
-             |                   || ' <b>read more</b> <br/>'
-             |              ELSE text END AS text
-             |  FROM documents),
-             |t1 AS (SELECT doc_id,
-             |              CAST(len(regexp_extract_all(text, '$UrlRe')) AS INTEGER) AS n_urls,
-             |              regexp_replace(text, '$UrlRe', ' ', 'g') AS s1
-             |       FROM c),
-             |n AS (SELECT doc_id, n_urls,
-             |             CAST(len(regexp_extract_all(s1, '$TagRe')) AS INTEGER) AS n_tags,
-             |             trim(regexp_replace(regexp_replace(s1, '$TagRe', ' ', 'g'),
-             |                                 '[ \\t\\n]+', ' ', 'g')) AS normalized
-             |      FROM t1),
-             |h AS (SELECT doc_id, n_urls, n_tags,
-             |             ${DuckMirror.rollingHashUnsignedSql("normalized")} AS hu
-             |      FROM n)
-             |SELECT doc_id, n_urls, n_tags, ${DuckMirror.signed64("hu")} AS norm_fp
-             |FROM h ORDER BY doc_id""".stripMargin
-        },
-        "decontam" -> DuckMirror.decontamSql(mod = 97),
-        // bloom prefilter is result-invariant: identical oracle
-        "decontam_bloom" -> DuckMirror.decontamSql(mod = 97),
-        "decontam_verdicts" -> DuckMirror.decontamVerdictSql(mod = 97),
-        "neardup_ingest" -> DuckMirror.minhashProbePairsSql(threshold = 0.8),
-        "decontam_spans" ->
-          s"""WITH ${DuckMirror.decontamSpanCtes(mod = 97)}
-             |SELECT doc_id, span_start, span_end, span_len
-             |FROM spans ORDER BY doc_id, span_start""".stripMargin,
-        "decontam_span_strip" -> DuckMirror.decontamSpanStripSql(mod = 97),
-        "ann_lsh" -> DuckMirror.lshSql(queryVecId = 3, k = 10, dim = 64,
-          nbits = 16, bands = 4, seed = 42L),
-        "ann_knn_graph" -> DuckMirror.knnGraphSql(queryVecId = 3, k = 10,
-          entryK = 3, m = 8, dim = 64, nbits = 16, bands = 4, seed = 42L,
-          hops = 2),
-        "ann_knn_graph_hops" -> DuckMirror.knnGraphBeamSql(queryVecId = 3,
-          k = 10, entryK = 3, m = 8, dim = 64, nbits = 16, bands = 4,
-          seed = 42L, hops = 3, beam = 8),
-        "ann_knn_descent" -> DuckMirror.knnDescentSql(queryVecId = 3,
-          k = 10, entryK = 3, m = 8, dim = 64, nbits = 16, bands = 4,
-          seed = 42L, hops = 2, rounds = 1),
-        "ann_hnsw_entry" -> DuckMirror.hnswEntrySql(queryVecId = 3,
-          k = 10, m = 8, dim = 64, nbits = 16, bands = 4, seed = 42L,
-          rounds = 1, sampleN = 256, mUpper = 4, entryE = 3, hops = 3,
-          beam = 8),
-        "ann_lsh_bucketed" -> DuckMirror.lshSql(queryVecId = 3, k = 10,
-          dim = 64, nbits = 16, bands = 4, seed = 42L),
-        "ann_ivf_assign" -> DuckMirror.ivfAssignSql(dim = 64, nlist = 8,
-          seed = 42L),
-        "ann_ivf_refit" -> DuckMirror.ivfRefitSql(dim = 64, nlist = 8,
-          maxIter = 1, seed = 42L))
 }
