@@ -7,8 +7,8 @@ Reads every <outDir>/<name> parquet written by graft.Verify, runs the
 matching oracle SQL from <outDir>/oracle_sql.json in DuckDB over the
 <sfDir> parquet tables, sorts columns by name, and compares values
 exactly (with a tiny-float-diff report to distinguish rounding issues
-from real bugs). A gate of oracle_sql.json with no output directory
-fails as MISSING.
+from real bugs). A gate of oracle_sql.json with no output directory,
+or with one that holds no readable parquet, fails as MISSING.
 
 Also writes <outDir>/result_hashes.json: per gate, a sha256 of its
 output (columns sorted by name, rows sorted), so two runs compare with
@@ -67,12 +67,19 @@ def main(sf_dir, out_dir):
         if name not in found:
             results[name] = "MISSING no output (the gate failed or never ran)"
             continue
-        got_rel = con.sql(f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
-        gcols = sorted(got_rel.columns)
-        # go through pandas like the correctness gate does — dtype coercions
-        # (e.g. HUGEINT -> float64) must be visible to the mimic
+        try:
+            got_rel = con.sql(
+                f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
+            gcols = sorted(got_rel.columns)
+            # go through pandas like the correctness gate does — dtype
+            # coercions (e.g. HUGEINT -> float64) must be visible to the mimic
+            got_df = got_rel.df()[gcols]
+        except Exception as e:
+            # a write job that failed mid-way can leave an empty directory
+            results[name] = f"MISSING no readable parquet output ({e})"
+            continue
         got = [tuple(norm(v) for v in row)
-               for row in got_rel.df()[gcols].itertuples(index=False, name=None)]
+               for row in got_df.itertuples(index=False, name=None)]
         hashes[name] = hashlib.sha256(repr(
             (gcols, sorted(got, key=row_key))
         ).encode()).hexdigest()

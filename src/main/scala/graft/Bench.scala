@@ -6,12 +6,12 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = HarnessSession(Some("graft-bench"), defaultCpus = "32")
+    val spark = HarnessSession("graft-bench", defaultCpus = "32")
     // Warm the JVM + parquet footers once so per-query numbers measure the
     // operators, not first-touch class loading; pre-build offline artifacts
     // (IVF index) so ann_ivf measures the probe path, not the batch build.
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
-    SparkEntry.warmOffline(spark, sfDir)
+    Fixtures.warmOffline(spark, sfDir)
     // Per-query warm-up must be back-to-back with the timed run: the
     // whole-stage-codegen class cache holds ~100 entries and the 63-query
     // suite cycles far more codegen units than that, so a whole-suite warm

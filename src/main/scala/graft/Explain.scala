@@ -18,7 +18,7 @@ object Explain {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = HarnessSession(Some("graft-explain"), defaultCpus = "32")
+    val spark = HarnessSession("graft-explain", defaultCpus = "32")
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

@@ -41,9 +41,6 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracle).toMap
 
-  /** Pre-build the offline artifacts of `dir` (see [[Fixtures.warmOffline]]). */
-  def warmOffline(s: SparkSession, dir: String): Unit = Fixtures.warmOffline(s, dir)
-
   /** Flagship query on /root/testdata/sf0.001 (the reference's README
     * headline shape, /root/reference/README.md:67-72): scan the collection,
     * project id/payload/vector, limit. Driver smoke-checks rows>0.

@@ -556,7 +556,7 @@ object Ann {
     * This form recomputes the corpus signatures per query (nbits v_dot
     * kernels per row) — fine for a one-off, wrong for a serving path.
     * Repeated query workloads should materialize the signatures ONCE at
-    * ingest ([[lshBuckets]], see `SparkEntry.warmOffline`) and serve via
+    * ingest ([[lshBuckets]], see `Fixtures.warmOffline`) and serve via
     * [[searchLshStored]], where the query plan touches no hyperplane at
     * all: with the stored table bucketed/sorted by band key the filter
     * prunes at the source.
